@@ -79,6 +79,37 @@ def test_terms_size_with_nested_bucket_counts_parent_level(spark, sales):
     assert rows == {("us", "a"), ("us", "b")}
 
 
+def test_nested_terms_size_keeps_top_leaves_per_histogram_bucket(spark, sales):
+    """A nested terms ``size`` truncates PER PARENT bucket: the top-size
+    leaves by doc_count desc, then key asc."""
+    rows = {
+        (r["by_amt"], r["by_product"], r["doc_count"])
+        for r in es_request(sales, {"aggs": {"by_amt": {
+            "histogram": {"field": "amount", "interval": 10},
+            "aggs": {"by_product": {"terms": {"field": "product", "size": 1}}},
+        }}}).collect()
+    }
+    # bucket 0: a=2, b=2 (tie -> key asc); bucket 10: b=2, a=1; bucket 20: a=1
+    assert rows == {(0.0, "a", 2), (10.0, "b", 2), (20.0, "a", 1)}
+
+
+def test_nested_terms_size_under_date_histogram(spark):
+    from datetime import datetime
+
+    d1, d2 = datetime(2024, 1, 1, 9), datetime(2024, 1, 2, 9)
+    df = spark.createDataFrame(
+        [(1, d1, "en"), (2, d1, "en"), (3, d1, "fr"),
+         (4, d2, "fr"), (5, d2, "fr"), (6, d2, "en"), (7, d2, "de")],
+        "id long, ts timestamp, lang string",
+    )
+    out = es_request(df, {"aggs": {"by_day": {
+        "date_histogram": {"field": "ts", "calendar_interval": "day"},
+        "aggs": {"by_lang": {"terms": {"field": "lang", "size": 1}}},
+    }}})
+    rows = sorted((r["by_day"], r["by_lang"], r["doc_count"]) for r in out.collect())
+    assert [(lang, n) for _, lang, n in rows] == [("en", 2), ("fr", 2)]
+
+
 def test_histogram_buckets(spark, sales):
     got = {
         r["by_amt"]: r["doc_count"]

@@ -28,6 +28,12 @@ def test_connected_components_merges_transitively(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 10: 10, 11: 10}
 
 
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_connected_components_rejects_max_iter_below_one(spark, max_iter):
+    with pytest.raises(ValueError, match="max_iter"):
+        D.connected_components(_pairs(spark, [(1, 2)]), max_iter=max_iter)
+
+
 def test_connected_components_pointer_doubling_round_bound(spark):
     # r17 pointer doubling: rounds are O(log d), not O(d). A 9-node path
     # (diameter 8) must converge in <= 4 loop iterations INCLUDING the

@@ -42,6 +42,7 @@ from tweets_elastic_spark.operators.similarity import (
     ivf_cell_col,
     lsh_tables,
     portable_seed_centroids,
+    pq_books_from_seeds,
     pq_codes_batched,
     rh_signature_col,
     train_quantizer,
@@ -101,17 +102,6 @@ def enrich_embeddings(
             "pq_codes", pq_codes_batched(F.col(vec_col), pq_books)
         )
     return out
-
-
-def pq_books_from_seeds(seeds: np.ndarray, m: int = PQ_M) -> np.ndarray:
-    """Codebook s = the s-th of m subspace slices of the seed sample —
-    identical derivation in ann_pq_*_topk and the DuckDB oracles."""
-    seeds = np.asarray(seeds, dtype=np.float64)
-    dim = seeds.shape[1]
-    if dim % m:
-        raise ValueError(f"PQ requires dim divisible by m: dim={dim}, m={m}")
-    dsub = dim // m
-    return np.stack([seeds[:, s * dsub:(s + 1) * dsub] for s in range(m)])
 
 
 def build_index(

@@ -90,7 +90,7 @@ def connected_components(
     iterative-algorithm failure mode on Spark). The fixpoint check rides
     the propagation join — no extra pass.
 
-    Three round-cost controls (guide §2.4/§5, r16-r17):
+    Three round-cost controls (guide §2.4/§5):
 
     * ``edges`` is ``localCheckpoint``ed, not persisted: the pair
       generator's lineage (tokenize → shingle → posting join) would
@@ -102,7 +102,7 @@ def connected_components(
       ``distinct()`` init paid the same shuffle to produce labels the
       first round immediately rewrote. Saves a full round (3 shuffles +
       2 driver actions) on every component of diameter d ≥ 1.
-    * **Pointer doubling (r17)**: after each hop, labels are rebound
+    * **Pointer doubling**: after each hop, labels are rebound
       through the round's INPUT label relation — l(x) ← min(l'(x),
       l(l'(x))), one extra join of the hopped labels against the
       already-checkpointed previous labels (chasing through the hopped
@@ -123,6 +123,8 @@ def connected_components(
     most recent call — a test hook for the O(log d) round bound; it plays
     no part in the result."""
     global CC_LAST_ROUNDS
+    if max_iter < 1:
+        raise ValueError(f"connected_components needs max_iter >= 1, got {max_iter}")
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = edges.unionAll(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -747,7 +749,7 @@ def embedding_near_pairs_lsh(
     lower for recall.
     """
     from tweets_elastic_spark.operators.similarity import (
-        _hyperplanes,
+        lsh_tables,
         rh_signature_col,
     )
 
@@ -758,7 +760,7 @@ def embedding_near_pairs_lsh(
             [], f"id_a {dict(df.dtypes)[id_col]}, id_b {dict(df.dtypes)[id_col]}, cos double"
         )
     dim = len(first[0])
-    planes = _hyperplanes(dim, n_bits, seed)
+    planes = lsh_tables(dim, n_bits, 1, seed)[0]
     df = fan_out(df)
     sig_df = df.select(
         F.col(id_col).alias("_id"),

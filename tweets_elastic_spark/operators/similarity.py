@@ -1,32 +1,52 @@
-"""Similarity search over embedding columns (north-star block).
+"""Similarity search over embedding columns.
 
-Two tiers, same contract:
+Every search here is one pipeline: **candidates → exact rerank**.
 
-* **Brute-force cosine top-k** — the exactness baseline: one codegen'd
-  pass computing dot/norm per row, then ``TakeOrderedAndProject`` (per-
-  partition top-k + driver merge — no global sort, no full shuffle).
-  At 100 TB this is a single scan: fine for one-off queries, wasteful for
-  repeated ones.
-* **Random-hyperplane LSH ANN** — the scale path for repeated queries:
-  a deterministic signed-projection signature per vector (computed once,
-  persisted alongside the embeddings), bucket lookup + multi-probe (flip
-  each signature bit) to gather candidates, exact cosine rerank on the
-  small candidate set. Probe cost scales with bucket occupancy, not corpus
-  size; recall is tunable via ``n_bits`` (fewer bits → bigger buckets) and
-  probe depth.
+* **Exact baseline** — ``cosine_topk`` scores every row: one codegen'd
+  dot/norm pass, then ``TakeOrderedAndProject`` (per-partition top-k +
+  driver merge, no global sort). It is also the rerank step of every ANN
+  entry point, so all of them return the same (id, score) contract.
+* **Candidates** come from one of three quantizers, each step of which is
+  defined once below and composed by the public entry points:
 
-Hyperplanes are generated from a fixed NumPy seed and embedded as literal
-arrays — every executor, run, and the test oracle agree on them.
+  - IVF cells (k-means or the portable md5-seed sample): keep the rows
+    whose cell is among the ``nprobe`` cells nearest the query
+    (``_in_probed_cells``), then cosine rerank.
+  - PQ codes: rank rows by asymmetric distance from per-subspace lookup
+    tables and cosine-rerank the best ``rerank`` (``_adc_rerank``);
+    IVF-PQ applies the cell filter first.
+  - Random-hyperplane LSH signatures: keep the rows within Hamming
+    distance ``probe_bits`` of the query's signature in any table
+    (``_within_hamming``), then cosine rerank.
+
+  Cell ids and codes are argmins of the translation-free distance
+  ‖c‖² − 2·x·c, either as pure-JVM ``array_sort`` expressions
+  (``_nearest``, mirrored term-for-term by the DuckDB oracles) or as an
+  Arrow-batched GEMM (``_gemm_codes``, the ingest-time encoder).
+* **Batched** variants (``*_multi``) broadcast a query DataFrame against
+  the corpus, filter (doc, query) pairs with the same candidate rule and
+  take a per-query top-k with a ranking window (``_rerank_per_query``).
+
+Hyperplanes and quantizer samples are deterministic (fixed NumPy seeds,
+md5 order) and embedded as literal arrays, so every executor, run and
+oracle agrees on them. Stored signature/cell/code columns
+(indexing.build_index) make the ``*_indexed`` variants pure JVM filters
+over written columns.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType
+from pyspark.sql.window import Window
 
-from tweets_elastic_spark.functions.vectors import cosine, dot, lit_vector
+from tweets_elastic_spark.functions.vectors import cosine, dot, lit_vector, norm
 
 
 def cosine_topk(
@@ -45,6 +65,32 @@ def cosine_topk(
     )
 
 
+def _query_side(
+    queries: DataFrame, id_col: str, vec_col: str, **extra: Column
+) -> DataFrame:
+    """The broadcast (q_id, _qv, *extra) side of a batched search."""
+    return F.broadcast(queries.select(
+        F.col(id_col).alias("q_id"), F.col(vec_col).alias("_qv"),
+        *[c.alias(n) for n, c in extra.items()],
+    ))
+
+
+def _rerank_per_query(pairs: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact-cosine top-k per q_id over candidate (doc, query) pairs.
+
+    Projects to (q_id, id, cosine) BEFORE the ranking window, so the window
+    shuffle moves 3 scalars per pair instead of two d-dim vectors."""
+    scored = pairs.select(
+        "q_id", id_col, cosine(F.col(vec_col), F.col("_qv")).alias("_cos")
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col(id_col).asc())
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .select("q_id", id_col, F.round("_cos", 6).alias("score"))
+    )
+
+
 def cosine_topk_multi(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -56,41 +102,64 @@ def cosine_topk_multi(
 ) -> DataFrame:
     """Batched top-k: many query vectors against the corpus in ONE job.
 
-    The single-query variant fetches its vector with a driver ``.head()``
-    per invocation — fine for one query, a driver round-trip per query for
-    a workload. Here the query set is a DataFrame: broadcast it against the
-    corpus (small × big nested-loop is the RIGHT plan — every (query, doc)
-    pair must be scored), then per-query top-k via a ranking window over
-    the query id. One tiny shuffle on query_id; corpus scanned once
-    regardless of query count.
+    The single-query variant needs the query vector on the driver; here the
+    query set is a DataFrame, broadcast against the corpus (small × big
+    nested loop is the right plan: every (query, doc) pair must be scored).
+    The corpus is scanned once regardless of query count.
 
     Returns (q_id, {id_col}, score) with ≤ k rows per q_id.
     """
-    from pyspark.sql.window import Window
+    pairs = embeddings.select(F.col(id_col), F.col(vec_col)).crossJoin(
+        _query_side(queries, query_id_col, query_vec_col)
+    )
+    return _rerank_per_query(pairs, k, id_col, vec_col)
 
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("q_id"),
-            F.col(query_vec_col).alias("_qv"),
+
+# ---------------------------------------------------------------------------
+# Quantizer steps: distances and argmins, each defined once
+# ---------------------------------------------------------------------------
+
+def _sq_dists(C: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """‖c‖² − 2·q·c for every row c of C: the squared distance to q minus
+    the constant ‖q‖² (the translation-free form every engine computes)."""
+    return (C * C).sum(axis=1) - 2.0 * (C @ q)
+
+
+def _nearest_rows(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Index of the nearest row of C for every row of X as one GEMM:
+    argmin ‖x−c‖² = argmin ‖c‖² − 2·x·c (‖x‖² constant per row). O(n·k)
+    memory, unlike the (n, k, d) broadcast form."""
+    return ((C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T)).argmin(axis=1)
+
+
+def _gemm_codes(vecs: pd.Series, books: np.ndarray) -> np.ndarray:
+    """(n, m) int32 codes of an Arrow batch against (m, k, dsub) codebooks:
+    one (n × dsub)·(dsub × k) GEMM + argmin per subspace, vectorized NumPy,
+    never per-row Python. The body of both Arrow encoders."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(vecs), m), dtype=np.int32)
+    if len(vecs):
+        M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        for s in range(m):
+            codes[:, s] = _nearest_rows(M[:, s * dsub:(s + 1) * dsub], books[s])
+    return codes
+
+
+def _nearest(x: Column, C: np.ndarray, n: int) -> Column:
+    """The ``n`` rows of C nearest ``x`` as (d, i) structs, nearest first —
+    a pure JVM expression: per-row (‖c‖² − 2·x·c, index) structs,
+    ``array_sort`` (lexicographic: distance, then index as the tiebreak),
+    slice. The oracles mirror it term-for-term with list_dot_product."""
+    C = np.asarray(C, dtype=np.float64)
+    c_sq = (C * C).sum(axis=1)
+    structs = [
+        F.struct(
+            (F.lit(float(c_sq[j])) - 2.0 * dot(x, lit_vector(C[j]))).alias("d"),
+            F.lit(j).alias("i"),
         )
-    )
-    # project to (q_id, id, score) BEFORE the ranking window: the window
-    # shuffle then moves 3 scalars per row instead of two d-dim vectors
-    scored = (
-        embeddings.select(F.col(id_col), F.col(vec_col))
-        .crossJoin(q)
-        .select(
-            "q_id", id_col, cosine(F.col(vec_col), F.col("_qv")).alias("_cos")
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("_cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", id_col, F.round("_cos", 6).alias("score"))
-    )
+        for j in range(len(C))
+    ]
+    return F.slice(F.array_sort(F.array(*structs)), 1, n)
 
 
 # ---------------------------------------------------------------------------
@@ -111,11 +180,7 @@ def kmeans_centroids(
     mat = np.asarray(mat, dtype=np.float64)
     centers = mat[rng.choice(len(mat), size=min(k, len(mat)), replace=False)].copy()
     for _ in range(iters):
-        # GEMM distance form, O(n·k) memory (the (n,k,d) broadcast form is
-        # tens of GB at a 100k-vector sample with √n cells):
-        # argmin ‖x−c‖² = argmin ‖c‖² − 2·x·c  (‖x‖² constant per row)
-        d2 = (centers * centers).sum(axis=1)[None, :] - 2.0 * (mat @ centers.T)
-        assign = d2.argmin(axis=1)
+        assign = _nearest_rows(mat, centers)
         sums = np.zeros_like(centers)
         np.add.at(sums, assign, mat)
         counts = np.bincount(assign, minlength=len(centers)).astype(np.float64)
@@ -125,24 +190,14 @@ def kmeans_centroids(
 
 
 def ivf_cell_col(vec_col: Column, centroids: np.ndarray) -> Column:
-    """Nearest-centroid assignment as an Arrow-batched matrix op: one
-    (batch × d)·(d × k) GEMM + argmin per batch — vectorized NumPy, never
-    per-row Python. In production this column is materialized at ingest
-    (like the LSH signatures)."""
-    from pyspark.sql.types import IntegerType
-
-    C = np.asarray(centroids, dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)  # ‖c‖² per centroid
+    """Nearest-centroid assignment as an Arrow-batched GEMM + argmin per
+    batch. In production this column is materialized at ingest (like the
+    LSH signatures)."""
+    books = np.asarray(centroids, dtype=np.float64)[None]
 
     @F.pandas_udf(IntegerType())
     def _assign(vecs: pd.Series) -> pd.Series:
-        out = np.empty(len(vecs), dtype=np.int32)
-        if len(vecs):
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            # argmin ‖x-c‖² = argmin ‖c‖² - 2x·c  (‖x‖² constant per row)
-            d2 = c_sq[None, :] - 2.0 * (M @ C.T)
-            out = d2.argmin(axis=1).astype(np.int32)
-        return pd.Series(out)
+        return pd.Series(_gemm_codes(vecs, books)[:, 0])
 
     return _assign(vec_col)
 
@@ -185,10 +240,22 @@ def ivf_probe_cells(
     boundary could otherwise order differently per engine and flip the
     probe set. Stable argsort breaks exact ties by cell id, matching the
     oracles' ORDER BY (d, sid)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    C = np.asarray(centroids, dtype=np.float64)
-    d2 = (C * C).sum(axis=1) - 2.0 * (C @ q)
+    d2 = _sq_dists(
+        np.asarray(centroids, dtype=np.float64),
+        np.asarray(query_vec, dtype=np.float64),
+    )
     return [int(c) for c in d2.argsort(kind="stable")[:nprobe]]
+
+
+def _in_probed_cells(
+    df: DataFrame, cell: Column, centroids: np.ndarray,
+    query_vec: list[float], nprobe: int,
+) -> DataFrame:
+    """The rows whose ``cell`` is one of the ``nprobe`` cells nearest the
+    query — the one place a cell filter feeds a rerank. Over a stored cell
+    column the ``isin`` pushes down to the parquet scan."""
+    probes = ivf_probe_cells(centroids, query_vec, nprobe)
+    return df.withColumn("_cell", cell).filter(F.col("_cell").isin(probes))
 
 
 def ann_ivf_topk(
@@ -203,8 +270,7 @@ def ann_ivf_topk(
     train_limit: int | None = 4096,
 ) -> DataFrame:
     """IVF ANN: k-means cells + probe the ``nprobe`` cells nearest the
-    query + exact rerank — the second classic ANN index family next to
-    LSH (ann_lsh_topk). Probed fraction ≈ nprobe/n_cells of the corpus
+    query + exact rerank. Probed fraction ≈ nprobe/n_cells of the corpus
     (cells are balanced on isotropic data); raise n_cells with corpus
     size (√n is the usual rule) to keep it small.
 
@@ -215,10 +281,8 @@ def ann_ivf_topk(
     centroids = train_quantizer(
         embeddings, n_cells, seed, id_col, vec_col, train_limit
     )
-    probe_cells = ivf_probe_cells(centroids, query_vec, nprobe)
-    candidates = embeddings.withColumn(
-        "_cell", ivf_cell_col(F.col(vec_col), centroids)
-    ).filter(F.col("_cell").isin(probe_cells))
+    cell = ivf_cell_col(F.col(vec_col), centroids)
+    candidates = _in_probed_cells(embeddings, cell, centroids, query_vec, nprobe)
     return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
@@ -234,11 +298,11 @@ def ann_ivf_topk_indexed(
 ) -> DataFrame:
     """IVF ANN over a MATERIALIZED cell column (indexing.build_index): the
     query-time plan is ``filter(cell IN probes)`` + exact rerank — pure JVM
-    expressions over stored columns, no Python, no training job, and the
-    isin filter pushes down to the parquet scan. This is the 100 TB shape:
-    assignment cost was paid once at ingest."""
-    probes = ivf_probe_cells(centroids, query_vec, nprobe)
-    candidates = emb_indexed.filter(F.col(cell_col).isin(probes))
+    expressions over stored columns, no Python, no training job. This is
+    the 100 TB shape: assignment cost was paid once at ingest."""
+    candidates = _in_probed_cells(
+        emb_indexed, F.col(cell_col), centroids, query_vec, nprobe
+    )
     return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
@@ -256,45 +320,17 @@ def ann_ivf_topk_multi(
 ) -> DataFrame:
     """Batched IVF ANN through the index: a query workload in ONE corpus
     scan. Each query's probe set (its ``nprobe`` nearest cells) is computed
-    INSIDE the plan on the broadcast query side — distance to every
-    centroid as literal-vector expressions, ``array_sort`` over
-    (distance, cell) structs, slice nprobe — so no per-query driver
-    round-trip. The join condition is ``array_contains(probes, cell)``
-    against the STORED cell column, evaluated in a broadcast nested-loop;
-    candidates get exact-cosine scores and a per-query ranking window
-    takes the top k. The IVF sibling of ``ann_lsh_topk_multi``."""
-    from pyspark.sql.window import Window
-
-    C = np.asarray(centroids, dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
-    qv = F.col("_qv")
-    # argmin ‖x−c‖² over cells = argmin ‖c‖² − 2·x·c (‖x‖² constant/query)
-    dist_structs = [
-        F.struct(
-            (F.lit(float(c_sq[j])) - 2.0 * dot(qv, lit_vector([float(x) for x in C[j]])))
-            .alias("d"),
-            F.lit(j).alias("i"),
-        )
-        for j in range(len(C))
-    ]
+    INSIDE the plan on the broadcast query side (``_nearest`` over literal
+    centroids), so there is no per-query driver round-trip. The join
+    condition is ``array_contains(probes, cell)`` against the STORED cell
+    column, evaluated in a broadcast nested-loop; candidates are reranked
+    per query. The IVF sibling of ``ann_lsh_topk_multi``."""
     probes = F.transform(
-        F.slice(F.array_sort(F.array(*dist_structs)), 1, nprobe), lambda s: s["i"]
+        _nearest(F.col(query_vec_col), centroids, nprobe), lambda s: s["i"]
     )
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("q_id"), F.col(query_vec_col).alias("_qv")
-        ).withColumn("_probes", probes)
-    )
-    scored = (
-        emb_indexed.join(q, F.array_contains(F.col("_probes"), F.col(cell_col)))
-        .select("q_id", id_col, cosine(F.col(vec_col), qv).alias("_cos"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", id_col, F.round("_cos", 6).alias("score"))
-    )
+    q = _query_side(queries, query_id_col, query_vec_col, _probes=probes)
+    pairs = emb_indexed.join(q, F.array_contains(F.col("_probes"), F.col(cell_col)))
+    return _rerank_per_query(pairs, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -333,22 +369,9 @@ def portable_seed_centroids(
 
 
 def portable_cell_col(vec_col: Column, centroids: np.ndarray) -> Column:
-    """Nearest-seed cell id as a PURE JVM expression (no Python): per-seed
-    (distance, index) structs, array_sort (lexicographic: distance, then
-    index — the deterministic tiebreak), take slot 0. Distance uses the
-    translation-free form ‖c‖² − 2·x·c so the oracle can mirror it
-    term-for-term with list_dot_product."""
-    C = np.asarray(centroids, dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
-    structs = [
-        F.struct(
-            (F.lit(float(c_sq[j])) - 2.0 * dot(vec_col, lit_vector([float(x) for x in C[j]])))
-            .alias("d"),
-            F.lit(j).alias("i"),
-        )
-        for j in range(len(C))
-    ]
-    return F.slice(F.array_sort(F.array(*structs)), 1, 1)[0]["i"]
+    """Nearest-seed cell id as a PURE JVM expression (no Python): slot 0 of
+    ``_nearest``."""
+    return _nearest(vec_col, centroids, 1)[0]["i"]
 
 
 def ann_ivf_portable_topk(
@@ -366,160 +389,10 @@ def ann_ivf_portable_topk(
     ann_ivf_topk (probed fraction ≈ nprobe/n_seeds, cell column
     materializable at ingest) but every step is SQL-expressible, so the
     registered query carries a full DuckDB oracle."""
-    centroids = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
-    probes = ivf_probe_cells(centroids, query_vec, nprobe)
-    candidates = embeddings.withColumn(
-        "_cell", portable_cell_col(F.col(vec_col), centroids)
-    ).filter(F.col("_cell").isin(probes))
+    seeds = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
+    cell = portable_cell_col(F.col(vec_col), seeds)
+    candidates = _in_probed_cells(embeddings, cell, seeds, query_vec, nprobe)
     return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
-
-
-def pq_code_col(vec_col: Column, codebook: np.ndarray, sub: int, dsub: int) -> Column:
-    """Per-subspace PQ code: argmin over the codebook of the translation-
-    free distance ‖c‖² − 2·x_s·c on the vector's slice [sub·dsub,
-    (sub+1)·dsub) — same struct-array_sort argmin (d, then index) as
-    portable_cell_col, so the oracle mirrors it term-for-term."""
-    sl = F.slice(vec_col, sub * dsub + 1, dsub)
-    c_sq = (codebook * codebook).sum(axis=1)
-    structs = [
-        F.struct(
-            (F.lit(float(c_sq[j]))
-             - 2.0 * dot(sl, lit_vector([float(x) for x in codebook[j]])))
-            .alias("d"),
-            F.lit(j).alias("i"),
-        )
-        for j in range(len(codebook))
-    ]
-    return F.slice(F.array_sort(F.array(*structs)), 1, 1)[0]["i"]
-
-
-def pq_codes_batched(vec_col: Column, codebooks: np.ndarray) -> Column:
-    """All m PQ codes in ONE Arrow-batched pandas UDF: per batch, one
-    (n × dsub)·(dsub × k) GEMM + argmin per subspace — the production
-    encoder (the expression form evaluates m·k interpreted array-aggregates
-    per row; this is one vectorized NumPy pass). Same translation-free
-    distance form and argmin tiebreak as pq_code_col; f64 GEMM vs the
-    left-fold sum can differ only within ~1e-15, far below any real
-    codeword gap, so codes agree (equivalence-pinned in pytest and by
-    sharing the portable oracle)."""
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    B = np.asarray(codebooks, dtype=np.float64)  # (m, k, dsub)
-    m, _, dsub = B.shape
-    c_sq = (B * B).sum(axis=2)  # (m, k)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _enc(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        codes = np.empty((len(M), m), dtype=np.int32)
-        for s in range(m):
-            X = M[:, s * dsub:(s + 1) * dsub]
-            d2 = c_sq[s][None, :] - 2.0 * (X @ B[s].T)
-            codes[:, s] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    return _enc(vec_col)
-
-
-def ann_pq_arrow_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    rerank: int = 50,
-    n_seeds: int = 16,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ann_pq_portable_topk's production encoder: codes from the Arrow-
-    batched GEMM UDF instead of per-codeword expressions, ADC + rerank
-    unchanged. Identical results (shares the portable oracle)."""
-    dim = len(query_vec)
-    if dim % m:
-        raise ValueError(
-            f"PQ requires dim divisible by m: dim={dim}, m={m} would "
-            f"silently drop the trailing {dim % m} dimensions from "
-            "encoding and ADC ranking"
-        )
-    dsub = dim // m
-    seeds = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
-    books = np.stack([seeds[:, s * dsub:(s + 1) * dsub] for s in range(m)])
-    q = np.asarray(query_vec, dtype=np.float64)
-    codes = pq_codes_batched(F.col(vec_col), books)
-    enc = embeddings.select(F.col(id_col), F.col(vec_col), codes.alias("_codes"))
-    dist = None
-    for s in range(m):
-        qs = q[s * dsub:(s + 1) * dsub]
-        qdtab = (books[s] * books[s]).sum(axis=1) - 2.0 * (books[s] @ qs)
-        term = F.element_at(
-            F.array(*[F.lit(float(x)) for x in qdtab]),
-            F.element_at(F.col("_codes"), s + 1) + 1,
-        )
-        dist = term if dist is None else dist + term
-    cand = (
-        enc.select(F.col(id_col), F.col(vec_col), dist.alias("_adc"))
-        .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
-        .limit(rerank)
-    )
-    return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
-
-
-def ann_pq_portable_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    rerank: int = 50,
-    n_seeds: int = 16,
-    m: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization ANN (Jégou et al. 2011, TPAMI — the third
-    classic ANN index family next to LSH and IVF): split vectors into
-    ``m`` subspaces, encode each slice as its nearest codeword id, rank by
-    asymmetric distance (per-subspace lookup of the query-to-codeword
-    distance, summed), exact-cosine rerank of the top ``rerank``.
-
-    Portable flavor: the codebook of subspace s is the s-slice of the SAME
-    md5-ordered seed sample the portable IVF uses — deterministic and
-    SQL-reproducible, so the whole pipeline (encoding, ADC ranking,
-    rerank) carries a full DuckDB oracle. The ADC score drops the
-    constant Σ‖q_s‖² term: score = Σ_s (‖c‖² − 2·q_s·c) at the doc's
-    codewords, evaluated as a left-fold sum in subspace order on both
-    engines.
-
-    At scale: codes are m small ints per vector, materialized at ingest
-    (the 64-dim float vector becomes m bytes of index data — PQ's whole
-    point); query time is m table lookups per row riding the scan, no
-    vector arithmetic until the rerank of ``rerank`` candidates."""
-    dim = len(query_vec)
-    if dim % m:
-        raise ValueError(
-            f"PQ requires dim divisible by m: dim={dim}, m={m} would "
-            f"silently drop the trailing {dim % m} dimensions from "
-            "encoding and ADC ranking"
-        )
-    dsub = dim // m
-    seeds = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
-    q = np.asarray(query_vec, dtype=np.float64)
-    dist = None
-    for s in range(m):
-        book = seeds[:, s * dsub:(s + 1) * dsub]
-        code = pq_code_col(F.col(vec_col), book, s, dsub)
-        qs = q[s * dsub:(s + 1) * dsub]
-        qdtab = (book * book).sum(axis=1) - 2.0 * (book @ qs)
-        term = F.element_at(
-            F.array(*[F.lit(float(x)) for x in qdtab]), code + 1
-        )
-        dist = term if dist is None else dist + term
-    cand = (
-        embeddings.select(F.col(id_col), F.col(vec_col), dist.alias("_adc"))
-        .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
-        .limit(rerank)
-    )
-    return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def ann_ivf_portable_multi(
@@ -537,7 +410,7 @@ def ann_ivf_portable_multi(
     cell column (JVM argmin over seed literals), each broadcast query gets
     its probe set in-plan, one corpus scan serves the whole batch — the
     ann_ivf_topk_multi machinery with every step SQL-reproducible, so the
-    batched IVF shape finally carries a full oracle too."""
+    batched IVF shape carries a full oracle too."""
     C = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
     emb_cells = embeddings.withColumn(
         "_pcell", portable_cell_col(F.col(vec_col), C)
@@ -556,6 +429,138 @@ def ann_ivf_portable_multi(
     )
 
 
+# ---------------------------------------------------------------------------
+# PQ (product quantization): m subspace codes, asymmetric-distance ranking
+# ---------------------------------------------------------------------------
+
+def pq_books_from_seeds(seeds: np.ndarray, m: int = 8) -> np.ndarray:
+    """(m, k, dsub) codebooks: codebook s = the s-th of m subspace slices of
+    the seed sample — the one derivation shared by the ann_pq_* entry
+    points, the index build and the DuckDB oracles."""
+    seeds = np.asarray(seeds, dtype=np.float64)
+    dim = seeds.shape[1]
+    if dim % m:
+        raise ValueError(
+            f"PQ requires dim divisible by m: dim={dim}, m={m} would "
+            f"silently drop the trailing {dim % m} dimensions from "
+            "encoding and ADC ranking"
+        )
+    dsub = dim // m
+    return np.stack([seeds[:, s * dsub:(s + 1) * dsub] for s in range(m)])
+
+
+def pq_code_col(vec_col: Column, codebook: np.ndarray, sub: int, dsub: int) -> Column:
+    """Per-subspace PQ code: ``_nearest`` codeword of the vector's slice
+    [sub·dsub, (sub+1)·dsub) — the same argmin expression as
+    portable_cell_col, so the oracle mirrors it term-for-term."""
+    return _nearest(F.slice(vec_col, sub * dsub + 1, dsub), codebook, 1)[0]["i"]
+
+
+def pq_codes_batched(vec_col: Column, codebooks: np.ndarray) -> Column:
+    """All m PQ codes in ONE Arrow-batched pandas UDF — the production
+    encoder (the expression form evaluates m·k interpreted array-aggregates
+    per row; this is one vectorized NumPy pass). Same distance form and
+    argmin tiebreak as pq_code_col; f64 GEMM vs the left-fold sum can
+    differ only within ~1e-15, far below any real codeword gap, so codes
+    agree (equivalence-pinned in pytest and by sharing the portable
+    oracle)."""
+    books = np.asarray(codebooks, dtype=np.float64)
+
+    @F.pandas_udf(ArrayType(IntegerType()))
+    def _enc(vecs: pd.Series) -> pd.Series:
+        return pd.Series(list(_gemm_codes(vecs, books)), dtype=object)
+
+    return _enc(vec_col)
+
+
+def _adc_rerank(
+    df: DataFrame, books: np.ndarray, query_vec: list[float],
+    codes: Column | None, k: int, rerank: int, id_col: str, vec_col: str,
+) -> DataFrame:
+    """Rank ``df`` by asymmetric distance, exact-cosine rerank the best
+    ``rerank``.
+
+    ADC score = Σ_s (‖c‖² − 2·q_s·c) at the row's codeword of subspace s
+    (the constant Σ‖q_s‖² dropped): one lookup per subspace into a
+    query-side table, summed as a left fold in subspace order on both
+    engines. ``codes`` is the row's code array (stored or Arrow-encoded);
+    ``None`` encodes inline with pq_code_col expressions."""
+    books = np.asarray(books, dtype=np.float64)
+    m, _, dsub = books.shape
+    q = np.asarray(query_vec, dtype=np.float64)
+    if len(q) != m * dsub:
+        raise ValueError(
+            f"query dim {len(q)} != m*dsub = {m}*{dsub} of the codebooks "
+            "(PQ requires dim divisible by m)"
+        )
+    if codes is not None:
+        df = df.select(F.col(id_col), F.col(vec_col), codes.alias("_codes"))
+
+    def code(s: int) -> Column:
+        if codes is None:
+            return pq_code_col(F.col(vec_col), books[s], s, dsub)
+        return F.element_at(F.col("_codes"), s + 1)
+
+    adc = reduce(operator.add, [
+        F.element_at(lit_vector(_sq_dists(books[s], q[s * dsub:(s + 1) * dsub])),
+                     code(s) + 1)
+        for s in range(m)
+    ])
+    cand = (
+        df.select(F.col(id_col), F.col(vec_col), adc.alias("_adc"))
+        .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
+        .limit(rerank)
+    )
+    return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+
+
+def ann_pq_portable_topk(
+    embeddings: DataFrame,
+    query_vec: list[float],
+    k: int = 10,
+    rerank: int = 50,
+    n_seeds: int = 16,
+    m: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Product-quantization ANN (Jégou et al. 2011, TPAMI): split vectors
+    into ``m`` subspaces, encode each slice as its nearest codeword id,
+    rank by asymmetric distance, exact-cosine rerank of the top ``rerank``.
+
+    Portable flavor: the codebooks are subspace slices of the SAME
+    md5-ordered seed sample the portable IVF uses — deterministic and
+    SQL-reproducible, so encoding, ADC ranking and rerank all carry a full
+    DuckDB oracle.
+
+    At scale: codes are m small ints per vector, materialized at ingest
+    (the 64-dim float vector becomes m bytes of index data — PQ's whole
+    point); query time is m table lookups per row riding the scan, no
+    vector arithmetic until the rerank of ``rerank`` candidates."""
+    seeds = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
+    books = pq_books_from_seeds(seeds, m)
+    return _adc_rerank(embeddings, books, query_vec, None, k, rerank, id_col, vec_col)
+
+
+def ann_pq_arrow_topk(
+    embeddings: DataFrame,
+    query_vec: list[float],
+    k: int = 10,
+    rerank: int = 50,
+    n_seeds: int = 16,
+    m: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """ann_pq_portable_topk's production encoder: codes from the Arrow-
+    batched GEMM UDF instead of per-codeword expressions, ADC + rerank
+    unchanged. Identical results (shares the portable oracle)."""
+    seeds = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
+    books = pq_books_from_seeds(seeds, m)
+    codes = pq_codes_batched(F.col(vec_col), books)
+    return _adc_rerank(embeddings, books, query_vec, codes, k, rerank, id_col, vec_col)
+
+
 def ann_pq_topk_indexed(
     embeddings: DataFrame,
     books: np.ndarray,
@@ -572,27 +577,9 @@ def ann_pq_topk_indexed(
     ingest, indexing.enrich_embeddings). The corpus scan reads id + codes
     (+ vector only for the ``rerank`` survivors): per-query cost is m
     array lookups per row, the PQ deployment shape at any scale."""
-    m, _, dsub = np.asarray(books).shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    if len(q) != m * dsub:
-        raise ValueError(
-            f"query dim {len(q)} != m*dsub = {m}*{dsub} of the stored codebooks"
-        )
-    dist = None
-    for s in range(m):
-        qs = q[s * dsub:(s + 1) * dsub]
-        qdtab = (books[s] * books[s]).sum(axis=1) - 2.0 * (books[s] @ qs)
-        term = F.element_at(
-            F.array(*[F.lit(float(x)) for x in qdtab]),
-            F.element_at(F.col(codes_col), s + 1) + 1,
-        )
-        dist = term if dist is None else dist + term
-    cand = (
-        embeddings.select(F.col(id_col), F.col(vec_col), dist.alias("_adc"))
-        .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
-        .limit(rerank)
+    return _adc_rerank(
+        embeddings, books, query_vec, F.col(codes_col), k, rerank, id_col, vec_col
     )
-    return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def ann_ivfpq_topk(
@@ -613,54 +600,29 @@ def ann_ivfpq_topk(
     rerank touches just ``rerank`` full vectors.
 
     Both pruning structures are ingest-materializable columns (cell id +
-    code array — exactly what indexing.build_index stores for IVF), so at
-    100 TB a query reads nprobe/n_seeds of the rows × m bytes each, plus
-    ``rerank`` full vectors: the only entry point where BOTH the row count
-    AND the bytes-per-row shrink. Same portable seed quantizer for cells
-    and codebooks (cells from whole seed vectors, codebook s = the s-th
-    subspace slice of the same seeds), so the full pipeline carries a
+    code array), so at 100 TB a query reads nprobe/n_seeds of the rows ×
+    m bytes each, plus ``rerank`` full vectors: the only entry point where
+    BOTH the row count AND the bytes-per-row shrink. Cells and codebooks
+    come from the same portable seeds, so the full pipeline carries a
     DuckDB oracle like its two parents."""
-    dim = len(query_vec)
-    if dim % m:
-        raise ValueError(
-            f"PQ requires dim divisible by m: dim={dim}, m={m} would "
-            f"silently drop the trailing {dim % m} dimensions from "
-            "encoding and ADC ranking"
-        )
-    dsub = dim // m
     seeds = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
-    probes = ivf_probe_cells(seeds, query_vec, nprobe)
-    books = np.stack([seeds[:, s * dsub:(s + 1) * dsub] for s in range(m)])
-    q = np.asarray(query_vec, dtype=np.float64)
-    survivors = embeddings.withColumn(
-        "_cell", portable_cell_col(F.col(vec_col), seeds)
-    ).filter(F.col("_cell").isin(probes))
-    enc = survivors.select(
-        F.col(id_col), F.col(vec_col),
-        pq_codes_batched(F.col(vec_col), books).alias("_codes"),
+    books = pq_books_from_seeds(seeds, m)
+    survivors = _in_probed_cells(
+        embeddings, portable_cell_col(F.col(vec_col), seeds), seeds, query_vec, nprobe
     )
-    dist = None
-    for s in range(m):
-        qs = q[s * dsub:(s + 1) * dsub]
-        qdtab = (books[s] * books[s]).sum(axis=1) - 2.0 * (books[s] @ qs)
-        term = F.element_at(
-            F.array(*[F.lit(float(x)) for x in qdtab]),
-            F.element_at(F.col("_codes"), s + 1) + 1,
-        )
-        dist = term if dist is None else dist + term
-    cand = (
-        enc.select(F.col(id_col), F.col(vec_col), dist.alias("_adc"))
-        .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
-        .limit(rerank)
-    )
-    return cosine_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+    codes = pq_codes_batched(F.col(vec_col), books)
+    return _adc_rerank(survivors, books, query_vec, codes, k, rerank, id_col, vec_col)
 
+
+# ---------------------------------------------------------------------------
+# SemDeDup: the portable quantizer as a pairing partitioner
+# ---------------------------------------------------------------------------
 
 def derived_n_seeds(n_rows: int, target_cell: int = 1024, floor: int = 16) -> int:
     """Quantizer cell count ∝ corpus size: ``max(floor, n // target_cell)``
     keeps the expected cell population ≈ target_cell as data grows, so the
     within-cell pairing cost Σn_c² ≈ n·target_cell stays LINEAR in n instead
-    of quadratic at a fixed cell count (the r5 'weak default')."""
+    of quadratic at a fixed cell count."""
     return max(floor, n_rows // target_cell)
 
 
@@ -699,10 +661,6 @@ def semdedup_survivors(
       n_c². Vectors beyond the cap are kept as survivors (bounded
       under-dedup on the tail of a skewed cell, never unbounded work);
       ``None`` disables the cap."""
-    from pyspark.sql.window import Window
-
-    from tweets_elastic_spark.functions.vectors import norm
-
     if n_seeds is None:
         n_seeds = derived_n_seeds(embeddings.count(), target_cell)
     centroids = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
@@ -710,12 +668,12 @@ def semdedup_survivors(
     # (term-for-term mirrorable in SQL) but its size grows with n_seeds —
     # at a corpus-derived seed count the expression tree (k structs × d-dim
     # dot products) outgrows what codegen evaluates efficiently. Above 32
-    # seeds switch to the Arrow-GEMM assignment (one (batch×d)·(d×k) matmul
-    # per Arrow batch, same ‖c‖²−2x·c distance and first-min-index
-    # tiebreak); f64 GEMM vs the expression's left-fold sum differ only
-    # ~1e-15, far below any real centroid gap (the same argument — and
-    # pytest pinning — as pq_codes_batched vs pq_code_col). Gate/oracle
-    # scales stay on the exact expression path: 16 seeds at every test sf.
+    # seeds switch to the Arrow-GEMM assignment (same ‖c‖²−2x·c distance
+    # and first-min-index tiebreak); f64 GEMM vs the expression's left-fold
+    # sum differ only ~1e-15, far below any real centroid gap (the same
+    # argument — and pytest pinning — as pq_codes_batched vs pq_code_col).
+    # Gate/oracle scales stay on the exact expression path: 16 seeds at
+    # every test sf.
     if n_seeds > 32:
         assign_col = ivf_cell_col(F.col(vec_col), centroids)
     else:
@@ -772,18 +730,20 @@ def semdedup_survivors(
     return embeddings.select(id_col).join(dropped, id_col, "left_anti")
 
 
-def _hyperplanes(dim: int, n_bits: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.randn(n_bits, dim)
-
+# ---------------------------------------------------------------------------
+# Random-hyperplane LSH: multi-table signatures + Hamming candidate filter
+# ---------------------------------------------------------------------------
 
 def lsh_tables(
     dim: int, n_bits: int = 6, n_tables: int = 4, seed: int = 7
 ) -> list[np.ndarray]:
-    """The L independent hyperplane sets shared by every LSH ANN entry
-    point (inline, indexed, batched) AND the DuckDB oracles — one seed
-    schedule so signatures agree everywhere."""
-    return [_hyperplanes(dim, n_bits, seed + 101 * t) for t in range(n_tables)]
+    """The L independent (n_bits, dim) hyperplane sets shared by every LSH
+    entry point, the embedding near-dup join AND the DuckDB oracles — table
+    t draws from seed + 101·t, one schedule so signatures agree everywhere."""
+    return [
+        np.random.RandomState(seed + 101 * t).randn(n_bits, dim)
+        for t in range(n_tables)
+    ]
 
 
 def query_lsh_signatures(
@@ -814,6 +774,15 @@ def rh_signature_col(vec_col: Column, planes: np.ndarray) -> Column:
     return sig
 
 
+def _within_hamming(sigs: list[Column], q_sigs: list, probe_bits: int) -> Column:
+    """OR over tables of ``bit_count(sig XOR q_sig) <= probe_bits``: the
+    rows whose signature is within Hamming distance ``probe_bits`` of the
+    query's in ANY table. ``q_sigs`` are literal ints or columns."""
+    return reduce(operator.or_, [
+        F.bit_count(s.bitwiseXOR(q)) <= probe_bits for s, q in zip(sigs, q_sigs)
+    ])
+
+
 def ann_lsh_topk(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -830,9 +799,9 @@ def ann_lsh_topk(
     The classic recall lever is L INDEPENDENT hash tables (different
     hyperplane seeds): a true neighbor is missed only if it misses in
     every table — recall = 1-(1-r)^L for per-table recall r. ``probe_bits``
-    additionally probes every bucket within that Hamming distance of the
+    additionally admits every bucket within that Hamming distance of the
     query's signature in each table (0 → exact bucket; 1 → +n_bits flips;
-    2 → +C(n_bits,2) double flips). Probed corpus fraction ≈
+    2 → +C(n_bits,2) double flips; …). Probed corpus fraction ≈
     L · Σ C(n,i)/2ⁿ (small-corpus regime; at production sizes raise
     n_bits with L so each table has far more buckets than docs and the
     fraction collapses). Measured on the fixture corpus (uniform random
@@ -840,35 +809,18 @@ def ann_lsh_topk(
     non-neighbors): min recall@10 = 0.9 across probed query points at the
     defaults, vs 0.1-0.5 for the single-table variant.
 
-    The candidate filter is ONE scan with an OR over per-table
-    ``isin(probes)`` — all JVM expressions. In production the L signature
-    columns are materialized once at ingest
-    (``withColumn(f'sig{t}', rh_signature_col(...))`` + write); here they
+    The candidate filter is ONE scan with the Hamming filter over the L
+    signature expressions — all JVM. In production the signature columns
+    are materialized once at ingest (indexing.enrich_embeddings) and
+    ``ann_lsh_topk_indexed`` applies the same filter to them; here they
     are computed inline so the operator is self-contained.
     """
-    if probe_bits > 2:
-        raise ValueError(
-            "ann_lsh_topk enumerates probes only up to 2-bit flips; for "
-            "deeper probing use ann_lsh_topk_indexed, whose bit_count "
-            "filter supports any probe_bits"
-        )
-    tables = lsh_tables(len(query_vec), n_bits, n_tables, seed)
+    sigs = [
+        rh_signature_col(F.col(vec_col), planes)
+        for planes in lsh_tables(len(query_vec), n_bits, n_tables, seed)
+    ]
     q_sigs = query_lsh_signatures(query_vec, n_bits, n_tables, seed)
-    cond = None
-    for planes, q_sig in zip(tables, q_sigs):
-        probes = [q_sig]
-        if probe_bits >= 1:
-            probes += [q_sig ^ (1 << i) for i in range(n_bits)]
-        if probe_bits >= 2:
-            probes += [
-                q_sig ^ (1 << i) ^ (1 << j)
-                for i in range(n_bits)
-                for j in range(i + 1, n_bits)
-            ]
-        sig = rh_signature_col(F.col(vec_col), planes)
-        c = sig.isin(probes)
-        cond = c if cond is None else (cond | c)
-    candidates = embeddings.filter(cond)
+    candidates = embeddings.filter(_within_hamming(sigs, q_sigs, probe_bits))
     return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
@@ -884,17 +836,12 @@ def ann_lsh_topk_indexed(
     sig_cols: tuple[str, ...] = ("sig0", "sig1", "sig2", "sig3"),
 ) -> DataFrame:
     """LSH ANN over MATERIALIZED signature columns (indexing.build_index):
-    no per-row signature computation at query time — the candidate filter
-    is ``bit_count(sig_t XOR q_sig_t) <= probe_bits`` over stored longs
-    (identical set to the probe union: Hamming ≤ probe_bits), then exact
-    rerank. Query-side signatures are k·d driver math. This is the ingest-
-    time-analysis story the inline variant's docstring promises."""
+    no per-row signature computation at query time — the Hamming filter
+    runs over stored longs, then exact rerank. Query-side signatures are
+    k·d driver math."""
+    sigs = [F.col(c) for c in sig_cols]
     q_sigs = query_lsh_signatures(query_vec, n_bits, len(sig_cols), seed)
-    cond = None
-    for sc, qs in zip(sig_cols, q_sigs):
-        c = F.bit_count(F.col(sc).bitwiseXOR(F.lit(qs))) <= probe_bits
-        cond = c if cond is None else (cond | c)
-    candidates = emb_indexed.filter(cond)
+    candidates = emb_indexed.filter(_within_hamming(sigs, q_sigs, probe_bits))
     return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
@@ -915,13 +862,11 @@ def ann_lsh_topk_multi(
 ) -> DataFrame:
     """Batched ANN THROUGH the LSH index: a query workload served in one
     corpus scan. The query set (small) gets its per-table signatures and is
-    broadcast; the join condition is the same Hamming-≤-probe_bits filter
-    as the single-query indexed variant, evaluated per (doc, query) inside
-    a broadcast nested-loop join — so the corpus is scanned ONCE for the
-    whole batch, candidates are exact-cosine scored, and a per-query
-    ranking window takes the top k. Compare ``cosine_topk_multi``: same
-    broadcast-batch shape, but the index filter drops the non-candidate
-    (doc, query) pairs before any cosine is computed.
+    broadcast; the join condition is the same Hamming filter as the
+    single-query variants, evaluated per (doc, query) inside a broadcast
+    nested-loop join — so the corpus is scanned ONCE for the whole batch
+    and the index filter drops the non-candidate (doc, query) pairs before
+    any cosine is computed (compare ``cosine_topk_multi``).
 
     ``sig_cols=None`` computes the corpus signatures inline (self-contained
     test shape); the registered query passes the stored index columns.
@@ -930,52 +875,26 @@ def ann_lsh_topk_multi(
     NO signature is computed anywhere in the plan; without it the query
     side gets the hyperplane expressions inline (a per-batch cost
     proportional to the small query set, not the corpus)."""
-    from pyspark.sql.window import Window
-
-    n_tables_eff = len(sig_cols) if sig_cols else 4
-
-    def planes_for_data() -> list[np.ndarray]:
+    if sig_cols is None or query_sig_cols is None:
         # dim derived from the data unless given — a wrong default would
         # silently truncate/extend the hyperplanes and corrupt signatures
         d = dim or len(queries.select(query_vec_col).head()[0])
-        return lsh_tables(d, n_bits, n_tables_eff, seed)
-
+        tables = lsh_tables(d, n_bits, len(sig_cols) if sig_cols else 4, seed)
     corpus = emb_indexed
     if sig_cols is None:
-        tables = planes_for_data()
         sig_cols = tuple(f"_sig{t}" for t in range(len(tables)))
-        for sc, planes in zip(sig_cols, tables):
-            corpus = corpus.withColumn(sc, rh_signature_col(F.col(vec_col), planes))
-
-    if query_sig_cols is not None:
-        q = queries.select(
-            F.col(query_id_col).alias("q_id"),
-            F.col(query_vec_col).alias("_qv"),
-            *[
-                F.col(qs).alias(f"_qsig{t}")
-                for t, qs in enumerate(query_sig_cols)
-            ],
-        )
+        corpus = corpus.withColumns({
+            c: rh_signature_col(F.col(vec_col), p) for c, p in zip(sig_cols, tables)
+        })
+    if query_sig_cols is None:
+        q_sigs = [rh_signature_col(F.col(query_vec_col), p) for p in tables]
     else:
-        q = queries.select(
-            F.col(query_id_col).alias("q_id"), F.col(query_vec_col).alias("_qv")
-        )
-        for t, planes in enumerate(planes_for_data()[: len(sig_cols)]):
-            q = q.withColumn(f"_qsig{t}", rh_signature_col(F.col("_qv"), planes))
-    q = F.broadcast(q)
-
-    cond = None
-    for t, sc in enumerate(sig_cols):
-        c = F.bit_count(F.col(sc).bitwiseXOR(F.col(f"_qsig{t}"))) <= probe_bits
-        cond = c if cond is None else (cond | c)
-
-    # project to scalars before the ranking window (see cosine_topk_multi)
-    scored = corpus.join(q, cond).select(
-        "q_id", id_col, cosine(F.col(vec_col), F.col("_qv")).alias("_cos")
+        q_sigs = [F.col(c) for c in query_sig_cols]
+    q = _query_side(queries, query_id_col, query_vec_col,
+                    **{f"_qsig{t}": s for t, s in enumerate(q_sigs)})
+    cond = _within_hamming(
+        [F.col(c) for c in sig_cols],
+        [F.col(f"_qsig{t}") for t in range(len(q_sigs))],
+        probe_bits,
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("q_id", id_col, F.round("_cos", 6).alias("score"))
-    )
+    return _rerank_per_query(corpus.join(q, cond), k, id_col, vec_col)

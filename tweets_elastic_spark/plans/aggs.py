@@ -3227,7 +3227,7 @@ def _es_aggregate_impl(
         # inverse of the null contract every bucket agg applies. The
         # is-null predicate filters the scan (pushdown-eligible) and one
         # global aggregate evaluates the count plus any metric sub-aggs
-        # over the missing docs (r7) — no shuffle beyond the agg.
+        # over the missing docs — no shuffle beyond the agg.
         if any(next(iter(s)) in _BUCKET_KINDS for s in (sub or {}).values()):
             raise ValueError("missing agg sub-aggs must be metrics")
         return df.filter(F.col(body["field"]).isNull()).agg(
@@ -3396,7 +3396,7 @@ def _es_aggregate_impl(
     # ES null contract: a document with no value for the bucket field
     # (and no `missing` substitute) belongs to no bucket. For plain-
     # column keys the isNotNull filter runs BEFORE the shuffle (parquet
-    # pushdown prunes row groups); for EXPRESSION-heavy keys (r12) the
+    # pushdown prunes row groups); for EXPRESSION-heavy keys the
     # null bucket is dropped AFTER aggregation instead — semantically
     # identical (null keys hash into one bucket that partial agg
     # compacts to ~1 row per partition before the shuffle), but the key
@@ -3530,6 +3530,22 @@ def _es_aggregate_impl(
             out = out.orderBy(
                 F.col("doc_count").desc(), F.col(name).asc()
             ).limit(int(size))
+    sub_size = (sub_body.get("size")
+                if nested_bucket and sub_kind in ("terms", "multi_terms") else None)
+    if sub_size is not None:
+        # ES truncates a nested terms level PER PARENT bucket: top-size
+        # leaves by doc_count desc / key asc. Runs after the parent
+        # truncation, which ranks parents by their full doc_count.
+        from pyspark.sql.window import Window
+
+        w_sub = Window.partitionBy(name).orderBy(
+            F.col("doc_count").desc(), F.col(sub_name).asc()
+        )
+        out = (
+            out.withColumn("__sub_rank", F.row_number().over(w_sub))
+            .filter(F.col("__sub_rank") <= int(sub_size))
+            .drop("__sub_rank")
+        )
     if cc_pipes:
         # ES cumulative_cardinality: distinct entities seen in buckets
         # <= b. Per-bucket cardinalities don't merge, but the FIRST-SEEN

@@ -385,9 +385,7 @@ def _rh_sig_sql(vec_expr: str, n_bits: int = 12, dim: int = 64, seed: int = 7) -
     """Random-hyperplane signature as a SQL expression with LITERAL planes —
     the exact doubles Spark's rh_signature_col uses (fixed NumPy seed), so
     DuckDB and Spark compute bit-identical signatures."""
-    from tweets_elastic_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_bits, seed)
+    planes = S.lsh_tables(dim, n_bits, 1, seed)[0]
     terms = []
     for i, h in enumerate(planes):
         arr = "[" + ", ".join(repr(float(x)) for x in h) + "]"
@@ -893,11 +891,11 @@ def q_semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ann_lsh_topk is fully deterministic (fixed-seed hyperplanes, exhaustive
-# probe union), so it carries a REAL oracle: per-table signatures as
-# literal-plane SQL expressions on both the corpus and the query vector,
-# candidate = Hamming(sig, q_sig) <= probe_bits in ANY table (identical to
-# the Spark side's self + 1-flip + 2-flip probe union), exact-cosine rerank.
+# ann_lsh_topk is fully deterministic (fixed-seed hyperplanes), so it carries
+# a REAL oracle: per-table signatures as literal-plane SQL expressions on
+# both the corpus and the query vector, candidate = Hamming(sig, q_sig) <=
+# probe_bits in ANY table (the Spark side's filter, term for term),
+# exact-cosine rerank.
 _LSH_TABLE_SIGS = [
     (f"s{t}", f"q{t}", 7 + 101 * t) for t in range(4)  # seeds mirror ann_lsh_topk
 ]
@@ -931,7 +929,7 @@ _LSH_ORACLE = (
     doc="LSH-bucketed ANN top-k (4 tables of fixed-seed random hyperplanes "
         "+ 2-bit multiprobe + exact-cosine rerank). Deterministic, so the "
         "oracle mirrors it exactly: literal-plane signature SQL per table, "
-        "Hamming <= 2 candidate filter (== the probe union), same rerank.",
+        "Hamming <= 2 candidate filter, same rerank.",
 )
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
