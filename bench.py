@@ -2,7 +2,7 @@
 """Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints TWO JSON lines — a verbose record first (every headline query's
-best-of-3 and first-run time; also written to bench_full.json), then a
+best-of-3 and first-run time; also written to bench_full_c<cpus>.json), then a
 COMPACT final line sized to survive the driver's 2000-char tail capture
 (BENCH_r06 lost its per-query dict to that truncation — r6 verdict item 3):
 
@@ -335,7 +335,7 @@ HEADLINE = [
 # 105 queries don't. This subset is what lands in that line's "queries"
 # dict: the r5/r6 round-over-round comparable set plus one representative
 # per family added since. EVERYTHING in HEADLINE is still timed — the full
-# per-query dict goes to bench_full.json and the verbose first stdout line.
+# per-query dict goes to the full file and the verbose first stdout line.
 COMPARE_SUBSET = [
     # the r5-comparable core (52 names, unchanged since BENCH_r05)
     "denorm_order_lineitems", "tweet_documents_flat", "pricing_summary",
@@ -611,6 +611,26 @@ def _build_docs_emb_events(spark, src: str) -> None:
         .parquet(os.path.join(SF1_DIR, "events.parquet")))
 
 
+def stall_flags(
+    calibration_per_pass: list[float], ratio: float = 1.5
+) -> tuple[list[bool], bool]:
+    """Which timed passes ran on a degraded box, and whether the whole run
+    did.
+
+    ``calibration_per_pass`` holds the probe before every pass plus one
+    after the last. A pass's window is the larger of its two bracketing
+    probes (a stall inside the pass raises at least the closing one); the
+    pass is degraded when its window exceeds ``ratio`` × the run's
+    FASTEST window — the run median would itself be a degraded value once
+    two of three passes are hit. The run is flagged when the slowest probe
+    exceeds ``ratio`` × the fastest."""
+    windows = [max(a, b) for a, b in zip(calibration_per_pass, calibration_per_pass[1:])]
+    floor = min(windows)
+    degraded = [w > ratio * floor for w in windows]
+    run_flag = max(calibration_per_pass) > ratio * min(calibration_per_pass)
+    return degraded, run_flag
+
+
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
@@ -727,10 +747,9 @@ def main() -> None:
     # timed pass — calibration_per_pass = [before pass 0, before pass 1,
     # before pass 2, after pass 2] — and each query records which pass
     # its best-of-3 min came from. A query is STALL-FLAGGED when its
-    # min's pass window (the max of the two bracketing probes,
-    # conservative) deviates >1.5x from the run-median window: its "best"
-    # number was taken while the box was measurably degraded and must
-    # not be read as a plan property. Additions only: "queries",
+    # min's pass is degraded (stall_flags): its "best" number was taken
+    # while the box was measurably degraded and must not be read as a
+    # plan property. Additions only: "queries",
     # "calibration_sec" and every pre-r17 field keep their exact
     # meaning and methodology.
     calibration_per_pass: list[float] = [calibration_sec]
@@ -763,16 +782,7 @@ def main() -> None:
             samples[name].append(time.perf_counter() - t0)
     calibration_per_pass.append(calibrate())
 
-    # Per-pass window calibration: the max of the two probes bracketing
-    # the pass (a stall inside the window elevates at least the closing
-    # probe). A pass is degraded when its window exceeds 1.5x the median
-    # window of the run.
-    pass_window = [
-        max(calibration_per_pass[p], calibration_per_pass[p + 1])
-        for p in range(3)
-    ]
-    window_median = sorted(pass_window)[1]
-    degraded_pass = [w > 1.5 * window_median for w in pass_window]
+    degraded_pass, run_stall_flagged = stall_flags(calibration_per_pass)
 
     times: dict[str, float] = {}
     first_run: dict[str, float] = {}
@@ -807,6 +817,7 @@ def main() -> None:
         "calibration_per_pass": calibration_per_pass,
         "queries_min_pass": min_pass,
         "queries_stall_flagged": stall_flagged,
+        "run_stall_flagged": run_stall_flagged,
         "warmup": "per-query sf0.001 pass, then best-of-3 timed sf0.1 runs "
                   "taken as THREE FULL PASSES (pass 0 canonical order, "
                   "passes 1-2 shuffled, GC+settle between — a time-local "
@@ -815,10 +826,11 @@ def main() -> None:
                   "chronologically first sf0.1 run)",
         "sf": sf,
     }
-    # the driver records the default sf0.1 run as bench_full.json; other
-    # scales (e.g. --sf 1) write their own file so they never clobber it
-    full_name = ("bench_full.json" if sf == 0.1
-                 else f"bench_full_sf{sf:g}.json")
+    # one file per scale and core count, so a control run at another
+    # scale or core count never overwrites this one
+    cpus = spark.sparkContext.defaultParallelism
+    full_name = (f"bench_full_c{cpus}.json" if sf == 0.1
+                 else f"bench_full_sf{sf:g}_c{cpus}.json")
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            full_name), "w") as f:
         json.dump(full, f, indent=1)
@@ -835,17 +847,18 @@ def main() -> None:
         "first_run_total_sec": full["first_run_total_sec"],
         "index_build_sec": index_build_sec,
         "calibration_sec": calibration_sec,
-        # r17: per-pass probe brackets + how many queries' minima landed
-        # in a degraded (>1.5x median window) pass — stall-vs-plan is
-        # now decidable from this line alone; names in bench_full.json
+        # per-pass probe brackets + how many queries' minima landed in a
+        # degraded pass (stall_flags) — stall-vs-plan is decidable from
+        # this line alone; names in the full file
         "calibration_per_pass": calibration_per_pass,
         "n_stall_flagged": len(stall_flagged),
+        "run_stall_flagged": run_stall_flagged,
         "full": full_name,
         # r16 (r15 verdict task 6): the top-3 per-query spreads IN the
         # compact tail, so the driver artifact itself shows
         # stall-vs-plan at a glance (a large spread = an exogenous
         # shared-box stall hit some samples of that query; the min
-        # dodged it) without opening bench_full.json
+        # dodged it) without opening the full file
         "queries_spread_top3": {
             n: spread[n]
             for n in sorted(spread, key=spread.get, reverse=True)[:3]

@@ -1,11 +1,16 @@
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from tweets_elastic_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+# the reference project's source snapshot, a sibling of the test data
+REFERENCE_DIR = os.path.join(os.path.dirname(os.path.dirname(SF_SMOKE)), "reference")
 
 
 @pytest.fixture(scope="session")
@@ -23,3 +28,18 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture(scope="session")
+def reference_json():
+    """Loads a JSON file of the reference snapshot by relative path; the
+    calling test skips when the snapshot is not on this machine."""
+
+    def load(rel: str):
+        path = os.path.join(REFERENCE_DIR, rel)
+        if not os.path.exists(path):
+            pytest.skip(f"reference snapshot file {rel} is absent")
+        with open(path) as f:
+            return json.load(f)
+
+    return load

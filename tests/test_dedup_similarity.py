@@ -248,7 +248,7 @@ def test_portable_cell_matches_numpy_argmin(spark):
     got = {
         r["vec_id"]: r["c"]
         for r in emb.select(
-            "vec_id", S.portable_cell_col(F.col("embedding"), C).alias("c")
+            "vec_id", S.portable_cell_col("embedding", C).alias("c")
         ).collect()
     }
     M = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64) for r in emb.collect()}
@@ -322,7 +322,7 @@ def test_semdedup_gemm_assignment_matches_expression(spark):
     got = df.select(
         "vec_id",
         S.ivf_cell_col(F.col("embedding"), C).alias("g"),
-        S.portable_cell_col(F.col("embedding"), C).alias("e"),
+        S.portable_cell_col("embedding", C).alias("e"),
     ).collect()
     assert all(r["g"] == r["e"] for r in got)
     # end-to-end through the GEMM branch: deterministic, runs green
@@ -410,7 +410,7 @@ def test_pq_arrow_encoder_matches_expression_encoder(spark):
         ).collect()
     }
     expr_cols = [
-        S.pq_code_col(F.col("embedding"), books[s], s, dsub).alias(f"c{s}")
+        S.pq_code_col("embedding", books[s], s, dsub).alias(f"c{s}")
         for s in range(m)
     ]
     exprs = {
@@ -451,7 +451,7 @@ def test_ann_ivfpq_recall_and_pruning(spark, qid):
     cells = {
         r["c"]
         for r in emb.filter(F.col("vec_id").isin(approx))
-        .select(S.portable_cell_col(F.col("embedding"), seeds).alias("c"))
+        .select(S.portable_cell_col("embedding", seeds).alias("c"))
         .collect()
     }
     assert cells <= probes

@@ -192,35 +192,31 @@ def test_nested_bool_should_multiplies_inner_score(spark):
 
 # -- from_es_json: the JSON-DSL front-end -------------------------------------
 
-def test_from_es_json_parses_reference_artifact_verbatim():
+def test_from_es_json_parses_reference_artifact_verbatim(reference_json):
     """The compiler run on the reference's OWN query file
     (src/used_queries/elastic_queries.json:1-46) with nested paths taken
     from its OWN mapping (src/config/mapping.json) yields a tree EQUAL to
     the hand-built reference_query() — the DSL front-end and the Python
     builder are the same query."""
-    import json
-
     from tweets_elastic_spark.plans.search import (
         from_es_json, nested_paths_from_mapping,
     )
 
-    mapping = json.load(open("/root/reference/src/config/mapping.json"))
-    dsl = json.load(open("/root/reference/src/used_queries/elastic_queries.json"))
+    mapping = reference_json("src/config/mapping.json")
+    dsl = reference_json("src/used_queries/elastic_queries.json")
     parsed = from_es_json(dsl, nested_paths=nested_paths_from_mapping(mapping))
     assert parsed == reference_query()
 
 
-def test_from_es_json_artifact_executes_like_reference_query(spark, docs_df):
+def test_from_es_json_artifact_executes_like_reference_query(spark, docs_df, reference_json):
     """Executing the parsed artifact returns exactly the hand-built query's
     rows (id + score), on the tweet-documents corpus it targets."""
-    import json
-
     from tweets_elastic_spark.plans.search import (
         from_es_json, nested_paths_from_mapping,
     )
 
-    mapping = json.load(open("/root/reference/src/config/mapping.json"))
-    dsl = json.load(open("/root/reference/src/used_queries/elastic_queries.json"))
+    mapping = reference_json("src/config/mapping.json")
+    dsl = reference_json("src/used_queries/elastic_queries.json")
     parsed = from_es_json(dsl, nested_paths=nested_paths_from_mapping(mapping))
     got = [
         (r["id"], r["score"])
@@ -258,19 +254,17 @@ def _raising_provider(field, tokens_col, analyzer, text):
     )
 
 
-def test_from_es_json_reference_artifact_identical_with_bm25_provider():
+def test_from_es_json_reference_artifact_identical_with_bm25_provider(reference_json):
     """The reference's own query (keyword match inside a nested scope,
     constant weight 5) must compile to the BYTE-IDENTICAL tree whether or
     not a BM25 provider is supplied — the provider may not even be
     consulted (its match has no analyzer/tokens binding)."""
-    import json
-
     from tweets_elastic_spark.plans.search import (
         from_es_json, nested_paths_from_mapping,
     )
 
-    mapping = json.load(open("/root/reference/src/config/mapping.json"))
-    dsl = json.load(open("/root/reference/src/used_queries/elastic_queries.json"))
+    mapping = reference_json("src/config/mapping.json")
+    dsl = reference_json("src/used_queries/elastic_queries.json")
     nested = nested_paths_from_mapping(mapping)
     assert from_es_json(
         dsl, nested_paths=nested, bm25_stats_for=_raising_provider

@@ -123,14 +123,12 @@ def test_parent_with_hashtags_gets_sorted_list(docs):
     assert found, "fixture should contain at least one parent with hashtags"
 
 
-def test_document_field_paths_match_reference_sample(spark, docs):
+def test_document_field_paths_match_reference_sample(spark, docs, reference_json):
     """Every nested field path in the reference's own golden document
     (/root/reference/docs/sample_document.json:5-94, the `_source` body)
     exists in our document schema, and vice versa — wire-format parity a
     reference user can rely on when switching engines."""
-    import json
-
-    sample = json.load(open("/root/reference/docs/sample_document.json"))["_source"]
+    sample = reference_json("docs/sample_document.json")["_source"]
 
     def sample_paths(obj, prefix=""):
         out = set()

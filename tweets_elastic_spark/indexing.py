@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.analyzers import materialize_tokens
+from tweets_elastic_spark.functions.vectors import col_sql
 from tweets_elastic_spark.operators.similarity import (
     ivf_cell_col,
     lsh_tables,
@@ -95,7 +96,7 @@ def enrich_embeddings(
     dim = len(np.asarray(centroids)[0])
     out = emb
     for t, planes in enumerate(lsh_tables(dim, n_bits, n_tables, seed)):
-        out = out.withColumn(f"sig{t}", rh_signature_col(F.col(vec_col), planes))
+        out = out.withColumn(f"sig{t}", rh_signature_col(col_sql(vec_col), planes))
     out = out.withColumn("ivf_cell", ivf_cell_col(F.col(vec_col), centroids))
     if pq_books is not None:
         out = out.withColumn(

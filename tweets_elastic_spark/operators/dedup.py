@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from tweets_elastic_spark.functions.textstats import normalized_text, simple_tokens
+from tweets_elastic_spark.functions.vectors import col_sql, cosine, dot, norm
+from tweets_elastic_spark.operators.similarity import lsh_tables, rh_signature_col
 from tweets_elastic_spark.sources.catalog import fan_out
 
 # ---------------------------------------------------------------------------
@@ -504,23 +506,19 @@ def minhash_lsh_candidates(
     # Only (id, band, bucket) enters the pair join: the 64-long signature
     # payloads stay OUT of the shuffle and the pair dedup compares slim
     # (id_a, id_b) rows, not wide array rows.
+    # One parsed expression: assembled from Column calls, the band structs
+    # cost ~1.5k Py4J round trips per call (see functions/vectors.py).
+    band_keys = ", ".join(
+        f"struct({i} AS band, xxhash64({i}, "
+        + ", ".join(
+            f"element_at(_sig, {i * rows_per_band + j + 1})"
+            for j in range(rows_per_band)
+        )
+        + ") AS bucket)"
+        for i in range(bands)
+    )
     banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.xxhash64(
-                        F.lit(i),
-                        *[
-                            F.element_at("_sig", i * rows_per_band + j + 1)
-                            for j in range(rows_per_band)
-                        ],
-                    ).alias("bucket"),
-                )
-                for i in range(bands)
-            ])
-        ).alias("bb"),
+        "_id", F.expr(f"explode(array({band_keys})) AS bb")
     ).select("_id", "bb.band", "bb.bucket")
 
     a = banded.alias("a")
@@ -681,8 +679,6 @@ def embedding_near_pairs(
     Each side is L2-normalized BEFORE the join (O(n·d) once), so the O(n²)
     pair stage is a single dot product instead of dot + two norms — 3× less
     work exactly where the cost is quadratic."""
-    from tweets_elastic_spark.functions.vectors import dot, norm
-
     # The norm must be its OWN column in its OWN projection: placing
     # norm(vec) inside the transform lambda would inline the O(d) fold per
     # ELEMENT (the no-CSE HOF trap, see word_shingles_from_tokens), making
@@ -694,7 +690,7 @@ def embedding_near_pairs(
     if bucket_by is not None:
         pre_cols.append(bucket_by.alias("_bk"))
     pre = fan_out(df.select(*pre_cols)).select(
-        "*", norm(F.col("_v")).alias("_norm")
+        "*", norm("_v").alias("_norm")
     )
     cols = [
         "_id",
@@ -712,7 +708,7 @@ def embedding_near_pairs(
         cond = cond & (F.col("a._bk") == F.col("b._bk"))
     return (
         a.join(b, cond)
-        .withColumn("cos", dot(F.col("a._vn"), F.col("b._vn")))
+        .withColumn("cos", dot("a._vn", "b._vn"))
         .filter(F.col("cos") >= threshold)
         .select(
             F.col("a._id").alias("id_a"),
@@ -748,11 +744,6 @@ def embedding_near_pairs_lsh(
     true near-dups (cos ≥ 0.95) at n_bits=8; raise n_bits for precision,
     lower for recall.
     """
-    from tweets_elastic_spark.operators.similarity import (
-        lsh_tables,
-        rh_signature_col,
-    )
-
     # dim from the data: element count is fixed per dataset
     first = df.select(vec_col).head()
     if first is None:  # empty corpus → no pairs
@@ -764,7 +755,7 @@ def embedding_near_pairs_lsh(
     df = fan_out(df)
     sig_df = df.select(
         F.col(id_col).alias("_id"),
-        rh_signature_col(F.col(vec_col), planes).alias("_sig"),
+        rh_signature_col(col_sql(vec_col), planes).alias("_sig"),
     )
     probes = sig_df.select(
         "_id",
@@ -789,12 +780,10 @@ def embedding_near_pairs_lsh(
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     # AQE would coalesce the small candidate shuffle to one partition and
     # serialize the (CPU-heavy) cosine verification — keep it fanned out.
-    from tweets_elastic_spark.functions.vectors import cosine
-
     return (
         fan_out(cand).join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("cos", cosine(F.col("_va"), F.col("_vb")))
+        .withColumn("cos", cosine("_va", "_vb"))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
     )

@@ -29,14 +29,19 @@ Every search here is one pipeline: **candidates → exact rerank**.
 
 Hyperplanes and quantizer samples are deterministic (fixed NumPy seeds,
 md5 order) and embedded as literal arrays, so every executor, run and
-oracle agrees on them. Stored signature/cell/code columns
-(indexing.build_index) make the ``*_indexed`` variants pure JVM filters
-over written columns.
+oracle agrees on them. Every expression that embeds them — signatures,
+``_nearest`` argmins, the literal-query cosine, ADC lookup tables — is
+rendered as SQL text and parsed by ONE ``F.expr`` call, never assembled
+from Column calls: the tree is the same, but building it node by node cost
+the driver ~7k Py4J round trips per ``ann_lsh_topk`` and ~4.5k per 16-seed
+``portable_cell_col`` (~120 and 3 parsed), the largest cost of a curation
+pass at 600-document batches (see functions/vectors.py). Stored
+signature/cell/code columns (indexing.build_index) make the ``*_indexed``
+variants pure JVM filters over written columns.
 """
 
 from __future__ import annotations
 
-import operator
 from functools import reduce
 
 import numpy as np
@@ -46,7 +51,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 from pyspark.sql.window import Window
 
-from tweets_elastic_spark.functions.vectors import cosine, dot, lit_vector, norm
+from tweets_elastic_spark.functions.vectors import (
+    col_sql, cosine, dot, dot_sql, double_sql, norm, vec_sql,
+)
 
 
 def cosine_topk(
@@ -57,7 +64,7 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine similarity to a literal query vector."""
-    score = cosine(F.col(vec_col), lit_vector(query_vec))
+    score = cosine(col_sql(vec_col), vec_sql(query_vec))
     return (
         embeddings.select(F.col(id_col), F.round(score, 6).alias("score"))
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
@@ -81,7 +88,7 @@ def _rerank_per_query(pairs: DataFrame, k: int, id_col: str, vec_col: str) -> Da
     Projects to (q_id, id, cosine) BEFORE the ranking window, so the window
     shuffle moves 3 scalars per pair instead of two d-dim vectors."""
     scored = pairs.select(
-        "q_id", id_col, cosine(F.col(vec_col), F.col("_qv")).alias("_cos")
+        "q_id", id_col, cosine(col_sql(vec_col), "_qv").alias("_cos")
     )
     w = Window.partitionBy("q_id").orderBy(F.col("_cos").desc(), F.col(id_col).asc())
     return (
@@ -145,21 +152,20 @@ def _gemm_codes(vecs: pd.Series, books: np.ndarray) -> np.ndarray:
     return codes
 
 
-def _nearest(x: Column, C: np.ndarray, n: int) -> Column:
-    """The ``n`` rows of C nearest ``x`` as (d, i) structs, nearest first —
-    a pure JVM expression: per-row (‖c‖² − 2·x·c, index) structs,
-    ``array_sort`` (lexicographic: distance, then index as the tiebreak),
-    slice. The oracles mirror it term-for-term with list_dot_product."""
+def _nearest(x: str, C: np.ndarray, n: int) -> str:
+    """SQL for the ``n`` rows of C nearest the array expression ``x`` as
+    (d, i) structs, nearest first — a pure JVM expression: per-row
+    (‖c‖² − 2·x·c, index) structs, ``array_sort`` (lexicographic:
+    distance, then index as the tiebreak), slice. The oracles mirror it
+    term-for-term with list_dot_product."""
     C = np.asarray(C, dtype=np.float64)
     c_sq = (C * C).sum(axis=1)
-    structs = [
-        F.struct(
-            (F.lit(float(c_sq[j])) - 2.0 * dot(x, lit_vector(C[j]))).alias("d"),
-            F.lit(j).alias("i"),
-        )
+    structs = ", ".join(
+        f"struct({double_sql(c_sq[j])} - {dot_sql(x, vec_sql(C[j]))} * 2.0D AS d, "
+        f"{j} AS i)"
         for j in range(len(C))
-    ]
-    return F.slice(F.array_sort(F.array(*structs)), 1, n)
+    )
+    return f"slice(array_sort(array({structs})), 1, {n})"
 
 
 # ---------------------------------------------------------------------------
@@ -325,8 +331,8 @@ def ann_ivf_topk_multi(
     condition is ``array_contains(probes, cell)`` against the STORED cell
     column, evaluated in a broadcast nested-loop; candidates are reranked
     per query. The IVF sibling of ``ann_lsh_topk_multi``."""
-    probes = F.transform(
-        _nearest(F.col(query_vec_col), centroids, nprobe), lambda s: s["i"]
+    probes = F.expr(
+        f"transform({_nearest(col_sql(query_vec_col), centroids, nprobe)}, s -> s.i)"
     )
     q = _query_side(queries, query_id_col, query_vec_col, _probes=probes)
     pairs = emb_indexed.join(q, F.array_contains(F.col("_probes"), F.col(cell_col)))
@@ -368,10 +374,11 @@ def portable_seed_centroids(
     return np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
 
 
-def portable_cell_col(vec_col: Column, centroids: np.ndarray) -> Column:
-    """Nearest-seed cell id as a PURE JVM expression (no Python): slot 0 of
-    ``_nearest``."""
-    return _nearest(vec_col, centroids, 1)[0]["i"]
+def portable_cell_col(vec: str, centroids: np.ndarray) -> Column:
+    """Nearest-seed cell id of the array expression ``vec`` (e.g.
+    ``col_sql("embedding")``) as a PURE JVM expression (no Python): slot 0
+    of ``_nearest``."""
+    return F.expr(f"{_nearest(vec, centroids, 1)}[0].i")
 
 
 def ann_ivf_portable_topk(
@@ -390,7 +397,7 @@ def ann_ivf_portable_topk(
     materializable at ingest) but every step is SQL-expressible, so the
     registered query carries a full DuckDB oracle."""
     seeds = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
-    cell = portable_cell_col(F.col(vec_col), seeds)
+    cell = portable_cell_col(col_sql(vec_col), seeds)
     candidates = _in_probed_cells(embeddings, cell, seeds, query_vec, nprobe)
     return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
@@ -413,7 +420,7 @@ def ann_ivf_portable_multi(
     batched IVF shape carries a full oracle too."""
     C = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
     emb_cells = embeddings.withColumn(
-        "_pcell", portable_cell_col(F.col(vec_col), C)
+        "_pcell", portable_cell_col(col_sql(vec_col), C)
     )
     return ann_ivf_topk_multi(
         emb_cells,
@@ -449,11 +456,16 @@ def pq_books_from_seeds(seeds: np.ndarray, m: int = 8) -> np.ndarray:
     return np.stack([seeds[:, s * dsub:(s + 1) * dsub] for s in range(m)])
 
 
-def pq_code_col(vec_col: Column, codebook: np.ndarray, sub: int, dsub: int) -> Column:
-    """Per-subspace PQ code: ``_nearest`` codeword of the vector's slice
-    [sub·dsub, (sub+1)·dsub) — the same argmin expression as
-    portable_cell_col, so the oracle mirrors it term-for-term."""
-    return _nearest(F.slice(vec_col, sub * dsub + 1, dsub), codebook, 1)[0]["i"]
+def _pq_code_sql(vec: str, codebook: np.ndarray, sub: int, dsub: int) -> str:
+    return f"{_nearest(f'slice({vec}, {sub * dsub + 1}, {dsub})', codebook, 1)}[0].i"
+
+
+def pq_code_col(vec: str, codebook: np.ndarray, sub: int, dsub: int) -> Column:
+    """Per-subspace PQ code of the array expression ``vec``: ``_nearest``
+    codeword of its slice [sub·dsub, (sub+1)·dsub) — the same argmin
+    expression as portable_cell_col, so the oracle mirrors it
+    term-for-term."""
+    return F.expr(_pq_code_sql(vec, codebook, sub, dsub))
 
 
 def pq_codes_batched(vec_col: Column, codebooks: np.ndarray) -> Column:
@@ -496,16 +508,16 @@ def _adc_rerank(
     if codes is not None:
         df = df.select(F.col(id_col), F.col(vec_col), codes.alias("_codes"))
 
-    def code(s: int) -> Column:
+    def code(s: int) -> str:
         if codes is None:
-            return pq_code_col(F.col(vec_col), books[s], s, dsub)
-        return F.element_at(F.col("_codes"), s + 1)
+            return _pq_code_sql(col_sql(vec_col), books[s], s, dsub)
+        return f"element_at(_codes, {s + 1})"
 
-    adc = reduce(operator.add, [
-        F.element_at(lit_vector(_sq_dists(books[s], q[s * dsub:(s + 1) * dsub])),
-                     code(s) + 1)
+    adc = F.expr(" + ".join(
+        f"element_at({vec_sql(_sq_dists(books[s], q[s * dsub:(s + 1) * dsub]))}, "
+        f"{code(s)} + 1)"
         for s in range(m)
-    ])
+    ))
     cand = (
         df.select(F.col(id_col), F.col(vec_col), adc.alias("_adc"))
         .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
@@ -608,7 +620,7 @@ def ann_ivfpq_topk(
     seeds = portable_seed_centroids(embeddings, n_seeds, id_col, vec_col)
     books = pq_books_from_seeds(seeds, m)
     survivors = _in_probed_cells(
-        embeddings, portable_cell_col(F.col(vec_col), seeds), seeds, query_vec, nprobe
+        embeddings, portable_cell_col(col_sql(vec_col), seeds), seeds, query_vec, nprobe
     )
     codes = pq_codes_batched(F.col(vec_col), books)
     return _adc_rerank(survivors, books, query_vec, codes, k, rerank, id_col, vec_col)
@@ -677,7 +689,7 @@ def semdedup_survivors(
     if n_seeds > 32:
         assign_col = ivf_cell_col(F.col(vec_col), centroids)
     else:
-        assign_col = portable_cell_col(F.col(vec_col), centroids)
+        assign_col = portable_cell_col(col_sql(vec_col), centroids)
     # Precompute each vector's norm ON ITS SIDE of the join: the pair
     # predicate then evaluates ONE array-aggregate (the dot product) per
     # pair instead of three — n norm computations instead of n²/k. The
@@ -696,7 +708,7 @@ def semdedup_survivors(
     cells = embeddings.select(
         F.col(id_col), F.col(vec_col),
         assign_col.alias("_cell"),
-        norm(F.col(vec_col)).alias("_nrm"),
+        norm(col_sql(vec_col)).alias("_nrm"),
     )
     if max_cell_size is not None:
         # Rank within cell by id and pair only the first `cap` members: the
@@ -714,7 +726,7 @@ def semdedup_survivors(
     cells = cells.localCheckpoint()
     a = cells.alias("a")
     b = cells.alias("b")
-    pair_cos = dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")) / (
+    pair_cos = dot(col_sql(f"a.{vec_col}"), col_sql(f"b.{vec_col}")) / (
         F.col("a._nrm") * F.col("b._nrm")
     )
     dropped = (
@@ -762,24 +774,30 @@ def query_lsh_signatures(
     return sigs
 
 
-def rh_signature_col(vec_col: Column, planes: np.ndarray) -> Column:
-    """Signed-projection LSH signature as a long: bit i = [v·h_i > 0]."""
-    sig = F.lit(0).cast("long")
+def _rh_signature_sql(vec: str, planes: np.ndarray) -> str:
+    sig = "CAST(0 AS BIGINT)"
     for i, h in enumerate(planes):
-        bit = F.when(
-            dot(vec_col, lit_vector([float(x) for x in h])) > 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
+        sig = (
+            f"({sig} | shiftleft(CASE WHEN {dot_sql(vec, vec_sql(h))} > 0 "
+            f"THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END, {i}))"
+        )
     return sig
 
 
-def _within_hamming(sigs: list[Column], q_sigs: list, probe_bits: int) -> Column:
-    """OR over tables of ``bit_count(sig XOR q_sig) <= probe_bits``: the
-    rows whose signature is within Hamming distance ``probe_bits`` of the
-    query's in ANY table. ``q_sigs`` are literal ints or columns."""
-    return reduce(operator.or_, [
-        F.bit_count(s.bitwiseXOR(q)) <= probe_bits for s, q in zip(sigs, q_sigs)
+def rh_signature_col(vec: str, planes: np.ndarray) -> Column:
+    """Signed-projection LSH signature of the array expression ``vec`` as a
+    long: bit i = [v·h_i > 0]."""
+    return F.expr(_rh_signature_sql(vec, planes))
+
+
+def _within_hamming(sigs: list[str], q_sigs: list, probe_bits: int) -> str:
+    """SQL OR over tables of ``bit_count(sig XOR q_sig) <= probe_bits``:
+    the rows whose signature is within Hamming distance ``probe_bits`` of
+    the query's in ANY table. ``sigs`` and ``q_sigs`` are SQL fragments
+    or literal ints. Parenthesized as a left fold: the parser would
+    rebalance a bare ``a OR b OR c OR d`` chain into a different tree."""
+    return reduce(lambda acc, t: f"({acc} OR {t})", [
+        f"(bit_count({s} ^ {q}) <= {probe_bits})" for s, q in zip(sigs, q_sigs)
     ])
 
 
@@ -816,7 +834,7 @@ def ann_lsh_topk(
     are computed inline so the operator is self-contained.
     """
     sigs = [
-        rh_signature_col(F.col(vec_col), planes)
+        _rh_signature_sql(col_sql(vec_col), planes)
         for planes in lsh_tables(len(query_vec), n_bits, n_tables, seed)
     ]
     q_sigs = query_lsh_signatures(query_vec, n_bits, n_tables, seed)
@@ -839,7 +857,7 @@ def ann_lsh_topk_indexed(
     no per-row signature computation at query time — the Hamming filter
     runs over stored longs, then exact rerank. Query-side signatures are
     k·d driver math."""
-    sigs = [F.col(c) for c in sig_cols]
+    sigs = [col_sql(c) for c in sig_cols]
     q_sigs = query_lsh_signatures(query_vec, n_bits, len(sig_cols), seed)
     candidates = emb_indexed.filter(_within_hamming(sigs, q_sigs, probe_bits))
     return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
@@ -884,17 +902,17 @@ def ann_lsh_topk_multi(
     if sig_cols is None:
         sig_cols = tuple(f"_sig{t}" for t in range(len(tables)))
         corpus = corpus.withColumns({
-            c: rh_signature_col(F.col(vec_col), p) for c, p in zip(sig_cols, tables)
+            c: rh_signature_col(col_sql(vec_col), p) for c, p in zip(sig_cols, tables)
         })
     if query_sig_cols is None:
-        q_sigs = [rh_signature_col(F.col(query_vec_col), p) for p in tables]
+        q_sigs = [rh_signature_col(col_sql(query_vec_col), p) for p in tables]
     else:
         q_sigs = [F.col(c) for c in query_sig_cols]
     q = _query_side(queries, query_id_col, query_vec_col,
                     **{f"_qsig{t}": s for t, s in enumerate(q_sigs)})
-    cond = _within_hamming(
-        [F.col(c) for c in sig_cols],
-        [F.col(f"_qsig{t}") for t in range(len(q_sigs))],
+    cond = F.expr(_within_hamming(
+        [col_sql(c) for c in sig_cols],
+        [f"_qsig{t}" for t in range(len(q_sigs))],
         probe_bits,
-    )
+    ))
     return _rerank_per_query(corpus.join(q, cond), k, id_col, vec_col)

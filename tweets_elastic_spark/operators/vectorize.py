@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.hashing import hash60
+from tweets_elastic_spark.functions.vectors import norm, vec_sql
 
 
 def _tokens(text: Column) -> Column:
@@ -108,20 +109,18 @@ def hashed_tfidf_vectors(
     # a doc whose text analyzes to NO tokens produces no sparse rows —
     # keep it as a ZERO vector rather than silently dropping the id from
     # the corpus (downstream ANN/semdedup must see every document)
-    zero = F.array(*[F.lit(0.0)] * dim)
+    zero = F.expr(vec_sql([0.0] * dim))
     vec = (
         df.select(id_col).distinct()
         .join(vec, id_col, "left")
         .select(id_col, F.coalesce("vector", zero).alias("vector"))
     )
     if l2_normalize:
-        from tweets_elastic_spark.functions.vectors import norm
-
         # materialize the norm ONCE per row: inlining the O(dim)
         # aggregate into the transform lambda would re-evaluate it per
         # element (O(dim^2) per row — HOFs don't CSE captured subtrees)
         vec = (
-            vec.withColumn("_n", norm(F.col("vector")))
+            vec.withColumn("_n", norm("vector"))
             .select(
                 id_col,
                 F.when(

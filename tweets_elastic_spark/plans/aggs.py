@@ -98,6 +98,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.vectors import col_sql, cosine, vec_sql
+
 _CALENDAR_FMT = {
     "minute": "yyyy-MM-dd HH:mm",
     "hour": "yyyy-MM-dd HH",
@@ -3740,8 +3742,6 @@ def es_request(
         if tiebreak is None:
             raise ValueError("knn needs a tiebreak id column for "
                              "deterministic top-k")
-        from tweets_elastic_spark.functions.vectors import cosine, lit_vector
-
         scan = df
         flt = knn.get("filter")
         if flt is not None:
@@ -3750,8 +3750,7 @@ def es_request(
                 nested_paths=nested_paths,
             )
             scan = scan.filter(ftree.predicate(df.sparkSession, F.col))
-        qv = [float(x) for x in knn["query_vector"]]
-        sim = cosine(F.col(knn["field"]), lit_vector(qv))
+        sim = cosine(col_sql(knn["field"]), vec_sql(knn["query_vector"]))
         out = (
             scan.withColumn("score", F.round(sim, 6))
             .orderBy(F.col("score").desc(), F.col(tiebreak).asc())

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.analyzers import analyze, analyze_text
+from tweets_elastic_spark.functions.vectors import col_sql, cosine, vec_sql
 
 # A resolver maps a field path ("author.following_count", "domain.name") to
 # a Column, either at the row scope (F.col) or inside a nested-array lambda
@@ -4041,8 +4042,6 @@ def es_retriever(
     ``id_col`` ascending (ES's internal-doc-id tiebreak is not
     reproducible; the explicit key is the same determinism trade as
     search()'s tiebreak)."""
-    from tweets_elastic_spark.functions.vectors import cosine, lit_vector
-
     if not (isinstance(retriever, dict) and len(retriever) == 1):
         raise ValueError(
             f"a retriever is one {{kind: body}} object, got {retriever!r}"
@@ -4093,8 +4092,7 @@ def es_retriever(
         k = int(body.get("k", size))
         out = scan.select(
             F.col(id_col),
-            cosine(F.col(body["field"]),
-                   lit_vector([float(x) for x in body["query_vector"]]))
+            cosine(col_sql(body["field"]), vec_sql(body["query_vector"]))
             .alias("score"),
         )
         return ranked(out, min(k, size))

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.vectors import cosine, vec_sql
 from tweets_elastic_spark.operators import dedup as D
 from tweets_elastic_spark.operators import similarity as S
 from tweets_elastic_spark.registry import bench_variant, register
@@ -542,11 +543,9 @@ def q_ann_ivf_recall_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # full exact-cosine relation for the rerank-exactness check (the
     # top-10 join alone would miss IVF hits outside the exact top-10)
-    from tweets_elastic_spark.functions.vectors import cosine, lit_vector
-
     allcos = emb.select(
         "vec_id",
-        F.round(cosine(F.col("embedding"), lit_vector(qvec)), 6)
+        F.round(cosine("embedding", vec_sql(qvec)), 6)
         .alias("true_score"),
     )
     joined = (
@@ -1154,8 +1153,6 @@ def q_ann_cosine_topk_mrl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rerank touches 40 vectors, not the corpus.",
 )
 def q_ann_mrl_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.similarity import cosine, lit_vector
-
     emb = load_table(spark, sf_dir, "embeddings")
     qrow = emb.filter("vec_id = 0").head()["embedding"]
     q_full = [float(x) for x in qrow]
@@ -1163,8 +1160,7 @@ def q_ann_mrl_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist = (
         emb.select(
             "vec_id", "embedding",
-            cosine(F.slice("embedding", 1, 16),
-                   lit_vector(q_trunc)).alias("__s1"),
+            cosine("slice(embedding, 1, 16)", vec_sql(q_trunc)).alias("__s1"),
         )
         .orderBy(F.col("__s1").desc(), F.col("vec_id").asc())
         .limit(40)
@@ -1172,7 +1168,7 @@ def q_ann_mrl_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         shortlist.select(
             "vec_id",
-            cosine(F.col("embedding"), lit_vector(q_full)).alias("__s2"),
+            cosine("embedding", vec_sql(q_full)).alias("__s2"),
         )
         .orderBy(F.col("__s2").desc(), F.col("vec_id").asc())
         .limit(10)
