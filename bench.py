@@ -611,23 +611,25 @@ def _build_docs_emb_events(spark, src: str) -> None:
         .parquet(os.path.join(SF1_DIR, "events.parquet")))
 
 
-def stall_flags(
-    calibration_per_pass: list[float], ratio: float = 1.5
-) -> tuple[list[bool], bool]:
+# A probe this many times the fastest marks a degraded pass or run.
+STALL_RATIO = 1.5
+
+
+def stall_flags(calibration_per_pass: list[float]) -> tuple[list[bool], bool]:
     """Which timed passes ran on a degraded box, and whether the whole run
     did.
 
     ``calibration_per_pass`` holds the probe before every pass plus one
     after the last. A pass's window is the larger of its two bracketing
     probes (a stall inside the pass raises at least the closing one); the
-    pass is degraded when its window exceeds ``ratio`` × the run's
+    pass is degraded when its window exceeds STALL_RATIO × the run's
     FASTEST window — the run median would itself be a degraded value once
     two of three passes are hit. The run is flagged when the slowest probe
-    exceeds ``ratio`` × the fastest."""
+    exceeds STALL_RATIO × the fastest."""
     windows = [max(a, b) for a, b in zip(calibration_per_pass, calibration_per_pass[1:])]
     floor = min(windows)
-    degraded = [w > ratio * floor for w in windows]
-    run_flag = max(calibration_per_pass) > ratio * min(calibration_per_pass)
+    degraded = [w > STALL_RATIO * floor for w in windows]
+    run_flag = max(calibration_per_pass) > STALL_RATIO * min(calibration_per_pass)
     return degraded, run_flag
 
 

@@ -9,8 +9,10 @@ from tweets_elastic_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
-# the reference project's source snapshot, a sibling of the test data
-REFERENCE_DIR = os.path.join(os.path.dirname(os.path.dirname(SF_SMOKE)), "reference")
+# The test data and the reference project's source snapshot are installed
+# side by side under one data root, so the snapshot is found from it.
+DATA_ROOT = os.path.dirname(os.path.dirname(SF_SMOKE))
+REFERENCE_DIR = os.path.join(DATA_ROOT, "reference")
 
 
 @pytest.fixture(scope="session")

@@ -410,7 +410,7 @@ def test_pq_arrow_encoder_matches_expression_encoder(spark):
         ).collect()
     }
     expr_cols = [
-        S.pq_code_col("embedding", books[s], s, dsub).alias(f"c{s}")
+        F.expr(S.pq_code_sql("embedding", books[s], s, dsub)).alias(f"c{s}")
         for s in range(m)
     ]
     exprs = {

@@ -456,23 +456,19 @@ def pq_books_from_seeds(seeds: np.ndarray, m: int = 8) -> np.ndarray:
     return np.stack([seeds[:, s * dsub:(s + 1) * dsub] for s in range(m)])
 
 
-def _pq_code_sql(vec: str, codebook: np.ndarray, sub: int, dsub: int) -> str:
-    return f"{_nearest(f'slice({vec}, {sub * dsub + 1}, {dsub})', codebook, 1)}[0].i"
-
-
-def pq_code_col(vec: str, codebook: np.ndarray, sub: int, dsub: int) -> Column:
-    """Per-subspace PQ code of the array expression ``vec``: ``_nearest``
-    codeword of its slice [sub·dsub, (sub+1)·dsub) — the same argmin
-    expression as portable_cell_col, so the oracle mirrors it
+def pq_code_sql(vec: str, codebook: np.ndarray, sub: int, dsub: int) -> str:
+    """Per-subspace PQ code of the array expression ``vec``, as SQL text:
+    ``_nearest`` codeword of its slice [sub·dsub, (sub+1)·dsub) — the same
+    argmin expression as portable_cell_col, so the oracle mirrors it
     term-for-term."""
-    return F.expr(_pq_code_sql(vec, codebook, sub, dsub))
+    return f"{_nearest(f'slice({vec}, {sub * dsub + 1}, {dsub})', codebook, 1)}[0].i"
 
 
 def pq_codes_batched(vec_col: Column, codebooks: np.ndarray) -> Column:
     """All m PQ codes in ONE Arrow-batched pandas UDF — the production
     encoder (the expression form evaluates m·k interpreted array-aggregates
     per row; this is one vectorized NumPy pass). Same distance form and
-    argmin tiebreak as pq_code_col; f64 GEMM vs the left-fold sum can
+    argmin tiebreak as pq_code_sql; f64 GEMM vs the left-fold sum can
     differ only within ~1e-15, far below any real codeword gap, so codes
     agree (equivalence-pinned in pytest and by sharing the portable
     oracle)."""
@@ -496,7 +492,7 @@ def _adc_rerank(
     (the constant Σ‖q_s‖² dropped): one lookup per subspace into a
     query-side table, summed as a left fold in subspace order on both
     engines. ``codes`` is the row's code array (stored or Arrow-encoded);
-    ``None`` encodes inline with pq_code_col expressions."""
+    ``None`` encodes inline with pq_code_sql expressions."""
     books = np.asarray(books, dtype=np.float64)
     m, _, dsub = books.shape
     q = np.asarray(query_vec, dtype=np.float64)
@@ -510,7 +506,7 @@ def _adc_rerank(
 
     def code(s: int) -> str:
         if codes is None:
-            return _pq_code_sql(col_sql(vec_col), books[s], s, dsub)
+            return pq_code_sql(col_sql(vec_col), books[s], s, dsub)
         return f"element_at(_codes, {s + 1})"
 
     adc = F.expr(" + ".join(
@@ -683,7 +679,7 @@ def semdedup_survivors(
     # seeds switch to the Arrow-GEMM assignment (same ‖c‖²−2x·c distance
     # and first-min-index tiebreak); f64 GEMM vs the expression's left-fold
     # sum differ only ~1e-15, far below any real centroid gap (the same
-    # argument — and pytest pinning — as pq_codes_batched vs pq_code_col).
+    # argument — and pytest pinning — as pq_codes_batched vs pq_code_sql).
     # Gate/oracle scales stay on the exact expression path: 16 seeds at
     # every test sf.
     if n_seeds > 32:
