@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -45,3 +47,49 @@ def reference_json():
             return json.load(f)
 
     return load
+
+
+@contextmanager
+def _py4j_commands(spark):
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = [0]
+
+    def counting(*args, **kwargs):
+        n[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield n
+    finally:
+        del client.send_command
+
+
+@contextmanager
+def _spark_jobs(spark):
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted block")
+    n = [0]
+    try:
+        yield n
+    finally:
+        sc._jsc.clearJobGroup()
+        # the status store is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n[0] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def py4j_commands(spark):
+    """``with py4j_commands() as n:`` — ``n[0]`` is then the number of
+    commands the block sent over the Py4J connection."""
+    return lambda: _py4j_commands(spark)
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as n:`` — ``n[0]`` is then the number of Spark
+    jobs the block launched, read from the status store by job group."""
+    return lambda: _spark_jobs(spark)

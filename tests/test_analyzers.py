@@ -125,23 +125,23 @@ def test_englando_full_pipeline(spark):
     text = "<b>The</b> fïancé's tweets were troubling the OPERATORS"
     # html_strip → tokenize → possessive → lower → stop → porter
     # (englando has NO asciifolding — fïancé keeps its diacritics)
-    got = run(spark, A.analyzer_englando, text)
+    got = run(spark, lambda c: A.analyze(c, "englando"), text)
     assert got == ["fïancé", "tweet", "were", "troubl", "oper"]
 
 
 def test_custom_ngram_pipeline(spark):
-    got = run(spark, A.analyzer_custom_ngram, "Zoë")
+    got = run(spark, lambda c: A.analyze(c, "custom_ngram"), "Zoë")
     # lowercase → asciifold("zoë"→"zoe") → char grams pos-major
     assert got == ["z", "zo", "zoe", "o", "oe", "e"]
 
 
 def test_custom_shingles_pipeline(spark):
-    got = run(spark, A.analyzer_custom_shingles, "Wilbur Soot")
+    got = run(spark, lambda c: A.analyze(c, "custom_shingles"), "Wilbur Soot")
     assert got == ["wilbur", "soot", "wilbursoot"]
 
 
 def test_keyword_lowercase_pipeline(spark):
-    assert run(spark, A.analyzer_keyword_lowercase, "Ukraine") == ["ukraine"]
+    assert run(spark, lambda c: A.analyze(c, "keyword_lowercase"), "Ukraine") == ["ukraine"]
 
 
 def test_analyze_text_query_time(spark):
@@ -224,3 +224,53 @@ def test_englando_oracle_vocab_covers_corpus():
         f"corpus vocabulary outgrew the oracle fixture: "
         f"{sorted(vocab - set(_ENGLANDO_VOCAB))}"
     )
+
+
+# -- query-time analysis in the driver --------------------------------------
+
+HARD_TEXTS = [
+    "<p>Caf&eacute; &amp; <b>Straße</b></p>",
+    "&lt;tag&gt; &quot;q&quot; &#39;s&#39; &apos;t &nbsp;x",
+    "ﬁnancial ﬁle ﬂow",
+    "Ｆｕｌｌ ｗｉｄｔｈ ＡＢＣ１２３",
+    "ß æ Æ Ł ł þ Þ œ ø ð ı",
+    "élève naïve Zoë",
+    "Wilbur’s dog's cats’ 'quoted'",
+    "the and of is it This That THE",
+    "42 3.14 2026-10-17 1st 007",
+    "東京タワー 中文 한국어",
+    "🎉 party 🎉🎉 ok👍",
+    "running runner ran troubling OPERATORS",
+    "",
+    "   ",
+    " \t\n ",
+]
+
+
+@pytest.mark.parametrize("analyzer", sorted(A.ANALYZERS))
+def test_analyze_text_equals_column_analysis(spark, spark_jobs, monkeypatch, analyzer):
+    """The driver path (no job) yields exactly the tokens the column path
+    (Arrow UDFs for the token steps) stores at index time."""
+    monkeypatch.setattr(A, "_ANALYZE_TEXT_CACHE", type(A._ANALYZE_TEXT_CACHE)())
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(HARD_TEXTS)],
+                               "i int, text string")
+    column = {r["i"]: list(r["t"]) for r in
+              df.select("i", A.analyze("text", analyzer).alias("t")).collect()}
+    with spark_jobs() as jobs:
+        driver = {i: A.analyze_text(spark, t, analyzer)
+                  for i, t in enumerate(HARD_TEXTS)}
+    assert jobs[0] == 0
+    assert driver == column
+    if analyzer != "keyword_lowercase":  # the keyword tokenizer keeps the input
+        assert driver[HARD_TEXTS.index("")] == []
+        assert driver[HARD_TEXTS.index("   ")] == []
+
+
+def test_analyze_text_cache_is_bounded_lru(spark, monkeypatch):
+    monkeypatch.setattr(A, "_ANALYZE_TEXT_CACHE", type(A._ANALYZE_TEXT_CACHE)())
+    monkeypatch.setattr(A, "_ANALYZE_TEXT_CACHE_SIZE", 2)
+    for text in ["One", "Two", "One", "Three"]:
+        assert A.analyze_text(spark, text, "keyword_lowercase") == [text.lower()]
+    assert list(A._ANALYZE_TEXT_CACHE) == [
+        ("One", "keyword_lowercase"), ("Three", "keyword_lowercase"),
+    ]

@@ -213,6 +213,61 @@ def test_multi_analyzer_spec_keeps_all_corpus_stats(spark, tmp_path):
         indexing.bm25_stats_from_index(spark, out, "text__typo", ["spark"])
 
 
+def test_bm25_stats_lookup_is_one_job_and_provider_follows_segments(
+    spark, tmp_path, spark_jobs
+):
+    """On a two-segment index the statistics lookup is one shuffle-free job
+    and equals the aggregation over the stored documents. The provider's
+    memo follows the segment set: a repeated call on an unchanged index runs
+    no job, and the same text after an increment sees the new segment."""
+    from tweets_elastic_spark.functions.analyzers import analyze_text
+    from tweets_elastic_spark.plans.search import bm25_stats
+    from tweets_elastic_spark.sources.incremental import WatermarkStore
+
+    docs = load_table(spark, SF, "documents")
+    emb = load_table(spark, SF, "embeddings")
+    src_half, src_full = str(tmp_path / "half"), str(tmp_path / "full")
+    for out, pred in ((src_half, "<= 249"), (src_full, ">= 0")):
+        docs.filter(f"doc_id {pred}").write.parquet(os.path.join(out, "documents.parquet"))
+        emb.filter(f"vec_id {pred}").write.parquet(os.path.join(out, "embeddings.parquet"))
+    idx = indexing.build_index(spark, src_half, str(tmp_path / "idx"))
+    tok_col, text = "text__custom_shingles", "spark merge"
+    provider = indexing.index_bm25_provider(spark, idx)
+    before = provider("text", tok_col, "custom_shingles", text)
+    with spark_jobs() as jobs:
+        assert provider("text", tok_col, "custom_shingles", text) is before
+    assert jobs[0] == 0
+
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    assert indexing.index_increment(spark, src_full, idx, store) == 250
+    qtokens = analyze_text(spark, text, "custom_shingles")
+    with spark_jobs() as jobs:
+        direct = indexing.bm25_stats_from_index(spark, idx, tok_col, qtokens)
+    assert jobs[0] == 1
+    scan = bm25_stats(indexing.read_indexed_documents(spark, idx), tok_col, qtokens)
+    assert (direct.n_docs, direct.df) == (scan.n_docs, scan.df)
+    assert abs(direct.avgdl - scan.avgdl) < 1e-9
+
+    after = provider("text", tok_col, "custom_shingles", text)
+    assert after.n_docs == 2 * before.n_docs == 500.0
+    assert (after.n_docs, after.avgdl, after.df) == (direct.n_docs, direct.avgdl, direct.df)
+
+
+def test_fuzzy_expand_is_one_job_over_segments(spark, tmp_path, spark_jobs):
+    """The dictionary walk reads with the fixed schema (no inference job)
+    and dedupes a token held by several segments in the driver (no
+    shuffle)."""
+    idx = str(tmp_path / "idx")
+    for seg, rows in (("base", [("spark", 3), ("spork", 1), ("merge", 2)]),
+                      ("wm_9", [("spark", 1), ("sparc", 1)])):
+        spark.createDataFrame(rows, "token string, df long").write.parquet(
+            f"{idx}/token_stats__text__std/segment={seg}")
+    with spark_jobs() as jobs:
+        got = indexing.fuzzy_expand(spark, idx, "text__std", "sparx", fuzziness=1)
+    assert got == ["sparc", "spark"]
+    assert jobs[0] == 1
+
+
 def test_embeddings_only_increment_advances(spark, tmp_path):
     """An arrival with new embeddings but no new documents still indexes
     the vectors and advances the vec watermark (streams are independent)."""

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import math
 import struct
-from contextlib import contextmanager
 
 import numpy as np
 from hypothesis import example, given, settings, strategies as st
@@ -50,24 +49,6 @@ def test_vec_sql_non_finite_match_f_lit(spark):
     assert got[1:] == want[1:] == [math.inf, -math.inf]
 
 
-@contextmanager
-def _py4j_commands(spark):
-    """Counts the commands sent over the Py4J connection inside the block."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    n = [0]
-
-    def counting(*args, **kwargs):
-        n[0] += 1
-        return send(*args, **kwargs)
-
-    client.send_command = counting
-    try:
-        yield n
-    finally:
-        del client.send_command
-
-
 # Built from Column calls these took ~7.2k (ann_lsh_topk) and ~4.5k
 # (portable_cell_col) commands; parsed, ~120 and 3.
 MAX_BUILD_COMMANDS = 300
@@ -80,20 +61,20 @@ def _vectors(spark, rng, n, dim):
     )
 
 
-def test_ann_lsh_topk_builds_in_few_round_trips(spark):
+def test_ann_lsh_topk_builds_in_few_round_trips(spark, py4j_commands):
     rng = np.random.RandomState(3)
     emb = _vectors(spark, rng, 40, 16)
     q = [float(x) for x in rng.randn(16)]
-    with _py4j_commands(spark) as n:
+    with py4j_commands() as n:
         S.ann_lsh_topk(emb, q, k=10, n_bits=6, n_tables=4)
     assert n[0] < MAX_BUILD_COMMANDS
 
 
-def test_portable_cell_col_builds_in_few_round_trips(spark):
+def test_portable_cell_col_builds_in_few_round_trips(spark, py4j_commands):
     rng = np.random.RandomState(4)
     emb = _vectors(spark, rng, 40, 16)
     seeds = rng.randn(16, 16)
-    with _py4j_commands(spark) as n:
+    with py4j_commands() as n:
         cells = emb.select("vec_id", S.portable_cell_col("embedding", seeds).alias("c"))
     assert n[0] < MAX_BUILD_COMMANDS
     X = np.stack([r["embedding"] for r in emb.orderBy("vec_id").collect()])

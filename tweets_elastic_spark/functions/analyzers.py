@@ -3,21 +3,33 @@
 The reference declares four custom Elasticsearch analyzers
 (/root/reference/src/config/settings.json:8-45) bound to text fields in the
 index mapping; analysis happens at index time (per-document) and at query
-time (per query string). Here each Lucene primitive (T1-T10) is a
-``Column -> Column`` function and each analyzer (AN1-AN4) a named
-composition, applied either to a DataFrame column (index-time analogue,
-``materialize_tokens``) or to a literal query string (query-time analogue,
-``analyze_text``).
+time (per query string). Here each Lucene primitive (T1-T10) is defined
+once and each analyzer (AN1-AN4) is an ordered list of those steps, in
+``ANALYZERS``. Two kinds of step:
 
-JVM-side built-ins everywhere possible (whole-stage codegen); Python appears
-only in the two genuinely-custom primitives — asciifolding and Porter
-stemming — as Arrow-batched Pandas UDFs (SURVEY §2.10), never row-at-a-time.
-Char n-grams and shingles are pure SQL higher-order expressions.
+* Column steps (``Column -> Column``): JVM built-ins and SQL higher-order
+  expressions (whole-stage codegen) — char filters, tokenizers, lowercase,
+  stopwords, char n-grams, shingles;
+* token steps (``TokenFilter``): the two genuinely-custom primitives,
+  asciifolding and Porter stemming, each defined by its per-token Python
+  function.
+
+``analyze`` folds the steps over a DataFrame column (index time,
+``materialize_tokens``): a token step becomes an Arrow-batched Pandas UDF
+built from its per-token function (SURVEY §2.10), never row-at-a-time.
+``analyze_text`` analyzes one query string in the driver, the way
+Elasticsearch's coordinating node does, with no Spark job: each run of
+Column steps is one projection over a one-row ``VALUES`` relation, which
+Catalyst's ConvertToLocalRelation rule evaluates in the driver, and a token
+step calls its per-token function directly. Both paths run the same
+definitions, so query tokens always equal index tokens.
 """
 
 from __future__ import annotations
 
 import unicodedata
+from collections import OrderedDict
+from itertools import groupby
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -80,29 +92,44 @@ _FOLD_TABLE = str.maketrans({
 })
 
 
-def _fold_one(t: str) -> str:
-    t = t.translate(_FOLD_TABLE)
-    return "".join(
-        ch for ch in unicodedata.normalize("NFKD", t) if not unicodedata.combining(ch)
-    )
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def _asciifold_udf(batch: pd.Series) -> pd.Series:
+def _fold_token(t: str) -> str:
     # ASCII fast path (guide §4.2 — make the per-batch work cheap): an
     # all-ASCII token has no combining marks, NFKD is the identity, and
     # every _FOLD_TABLE key is non-ASCII — folding is a no-op. str.isascii
     # is a single C scan, vs NFKD + a join per token; real corpora are
     # overwhelmingly ASCII tokens, so this removes most of the Python cost
     # of the analyzer chain's one unavoidable UDF.
-    return batch.map(
-        lambda toks: None if toks is None
-        else [t if t.isascii() else _fold_one(t) for t in toks]
+    if t.isascii():
+        return t
+    t = t.translate(_FOLD_TABLE)
+    return "".join(
+        ch for ch in unicodedata.normalize("NFKD", t) if not unicodedata.combining(ch)
     )
 
 
-def asciifold(toks: Column) -> Column:
-    return _asciifold_udf(toks)
+class TokenFilter:
+    """A token step defined by one per-token Python function, ``token``.
+    Called on a token-array Column it applies ``token`` through an
+    Arrow-batched UDF named ``udf_name`` in query plans (index time; null
+    arrays stay null); ``analyze_text`` calls ``token`` directly (query
+    time)."""
+
+    def __init__(self, token, udf_name: str):
+        self.token = token
+
+        def apply(batch: pd.Series) -> pd.Series:
+            return batch.map(
+                lambda toks: None if toks is None else [token(t) for t in toks]
+            )
+
+        apply.__name__ = udf_name
+        self._udf = F.pandas_udf(apply, ArrayType(StringType()))
+
+    def __call__(self, toks: Column) -> Column:
+        return self._udf(toks)
+
+
+asciifold = TokenFilter(_fold_token, "_asciifold_udf")
 
 
 # T6: english_possessive_stemmer (settings.json:56-59) — strip 's / ’s.
@@ -129,40 +156,26 @@ def english_stop(toks: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# T8: english_stemmer (settings.json:64-67) — Porter, custom UDF item.
-# Memoized per Arrow batch: corpus vocabulary is tiny relative to tokens.
+# T8: english_stemmer (settings.json:64-67) — Porter, custom UDF item,
+# memoized: corpus vocabulary is tiny relative to tokens.
 # ---------------------------------------------------------------------------
 
 # Memo shared across batches AND tasks: the UDF lives in an importable
 # module, so a reused Python worker (spark.python.worker.reuse, default
-# on) keeps the module global across tasks (guide §4.5) — the per-batch
-# dict it replaces re-stemmed the whole vocabulary for every Arrow batch.
-# Pure-function cache, bounded by corpus vocabulary; never grows past a
-# few hundred k entries on real text.
+# on) keeps the module global across tasks (guide §4.5), and the driver
+# keeps it across queries. Pure-function cache, bounded by corpus
+# vocabulary; never grows past a few hundred k entries on real text.
 _PORTER_CACHE: dict[str, str] = {}
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _porter_udf(batch: pd.Series) -> pd.Series:
-    cache = _PORTER_CACHE
-
-    def stem_all(toks):
-        if toks is None:
-            return None
-        out = []
-        for t in toks:
-            s = cache.get(t)
-            if s is None:
-                s = porter_stem(t)
-                cache[t] = s
-            out.append(s)
-        return out
-
-    return batch.map(stem_all)
+def _stem_token(t: str) -> str:
+    s = _PORTER_CACHE.get(t)
+    if s is None:
+        s = _PORTER_CACHE[t] = porter_stem(t)
+    return s
 
 
-def porter_stem_tokens(toks: Column) -> Column:
-    return _porter_udf(toks)
+porter_stem_tokens = TokenFilter(_stem_token, "_porter_udf")
 
 
 # ---------------------------------------------------------------------------
@@ -221,35 +234,6 @@ def shingles(toks: Column) -> Column:
     return F.concat(toks, bigrams)
 
 
-# ---------------------------------------------------------------------------
-# Composed analyzers AN1-AN4 (settings.json:8-45); filter order mirrors the
-# ES definitions exactly.
-# ---------------------------------------------------------------------------
-
-def analyzer_englando(c: Column) -> Column:
-    """html_strip → standard → possessive → lowercase → stop → Porter
-    (settings.json:9-19)."""
-    toks = standard_tokenize(html_strip(c))
-    toks = possessive_stem(toks)
-    toks = lowercase(toks)
-    toks = english_stop(toks)
-    return porter_stem_tokens(toks)
-
-
-def analyzer_custom_ngram(c: Column) -> Column:
-    """html_strip → standard → lowercase → asciifolding → ngram(1,10)
-    (settings.json:20-29)."""
-    toks = lowercase(standard_tokenize(html_strip(c)))
-    return char_ngrams(asciifold(toks), 1, 10)
-
-
-def analyzer_custom_shingles(c: Column) -> Column:
-    """html_strip → standard → lowercase → asciifolding → shingles
-    (settings.json:30-39)."""
-    toks = lowercase(standard_tokenize(html_strip(c)))
-    return shingles(asciifold(toks))
-
-
 def trim_tokens(toks: Column) -> Column:
     """ES ``trim`` token filter: strip leading/trailing whitespace from
     each token (tokens that become empty stay — ES's behavior; chain
@@ -286,61 +270,105 @@ def fingerprint_filter(toks: Column) -> Column:
     ).otherwise(F.array(joined))
 
 
-def analyzer_fingerprint(c: Column) -> Column:
-    """ES's BUILT-IN ``fingerprint`` analyzer: standard tokenizer →
-    lowercase → asciifolding → fingerprint filter (no stopwords by
-    default). One token out: the sorted-deduped-space-joined normal
-    form — equal fingerprints mean same word multiset, the classic
-    near-dup clustering key."""
-    return fingerprint_filter(asciifold(lowercase(standard_tokenize(c))))
-
-
-def analyzer_standard(c: Column) -> Column:
-    """ES's BUILT-IN ``standard`` analyzer (standard tokenizer + lowercase,
-    no char filters) — the default every text field gets when the mapping
-    names no custom analyzer. Added for the query-DSL front-end's
-    match_phrase support: phrase positions are defined over plain word
-    tokens, not shingled/ngrammed streams."""
-    return lowercase(standard_tokenize(c))
-
-
-def analyzer_keyword_lowercase(c: Column) -> Column:
-    """keyword → lowercase (settings.json:40-44): hashtags match
-    case-insensitively as a single unit (docs/protokol.md:304)."""
-    return lowercase(keyword_tokenize(c))
-
+# ---------------------------------------------------------------------------
+# Analyzers as ordered step lists. AN1-AN4 (settings.json:8-45): filter
+# order mirrors the ES definitions exactly.
+# ---------------------------------------------------------------------------
 
 ANALYZERS = {
-    "englando": analyzer_englando,
-    "custom_ngram": analyzer_custom_ngram,
-    "custom_shingles": analyzer_custom_shingles,
-    "keyword_lowercase": analyzer_keyword_lowercase,
-    "standard": analyzer_standard,
-    "fingerprint": analyzer_fingerprint,
+    # AN1 (settings.json:9-19): html_strip → standard → possessive →
+    # lowercase → stop → Porter
+    "englando": [html_strip, standard_tokenize, possessive_stem, lowercase,
+                 english_stop, porter_stem_tokens],
+    # AN2 (settings.json:20-29): html_strip → standard → lowercase →
+    # asciifolding → ngram(1,10)
+    "custom_ngram": [html_strip, standard_tokenize, lowercase, asciifold,
+                     char_ngrams],
+    # AN3 (settings.json:30-39): html_strip → standard → lowercase →
+    # asciifolding → shingles
+    "custom_shingles": [html_strip, standard_tokenize, lowercase, asciifold,
+                        shingles],
+    # AN4 (settings.json:40-44): keyword → lowercase — hashtags match
+    # case-insensitively as a single unit (docs/protokol.md:304)
+    "keyword_lowercase": [keyword_tokenize, lowercase],
+    # ES's built-in ``standard`` analyzer, the default for a text field the
+    # mapping names no analyzer for; match_phrase positions are defined
+    # over these plain word tokens
+    "standard": [standard_tokenize, lowercase],
+    # ES's built-in ``fingerprint`` analyzer (no stopwords by default): one
+    # token out, the sorted-deduped-space-joined normal form — equal
+    # fingerprints mean the same word multiset, a near-dup clustering key
+    "fingerprint": [standard_tokenize, lowercase, asciifold,
+                    fingerprint_filter],
 }
 
 
 def analyze(c: Column | str, analyzer: str) -> Column:
     """Index-time analysis: column → array<string> of tokens."""
-    if isinstance(c, str):
-        c = F.col(c)
-    return ANALYZERS[analyzer](c)
+    return _apply_steps(F.col(c) if isinstance(c, str) else c, ANALYZERS[analyzer])
 
 
-_ANALYZE_TEXT_CACHE: dict[tuple[str, str], list[str]] = {}
+def _apply_steps(c: Column, steps) -> Column:
+    for step in steps:
+        c = step(c)
+    return c
+
+
+def _query_stages(analyzer: str) -> list:
+    """``ANALYZERS[analyzer]`` for query time: each run of Column steps
+    composed into one Column over ``v``, token steps as they are. Built once
+    per analyzer and reused, because building the Column costs hundreds of
+    Py4J calls; it names no relation, so any one-row relation can project
+    it."""
+    stages = _QUERY_STAGES.get(analyzer)
+    if stages is None:
+        stages = []
+        for is_token, steps in groupby(
+            ANALYZERS[analyzer], key=lambda s: isinstance(s, TokenFilter)
+        ):
+            if is_token:
+                stages += steps
+            else:
+                stages.append(_apply_steps(F.col("v"), steps))
+        _QUERY_STAGES[analyzer] = stages
+    return stages
+
+
+_QUERY_STAGES: dict[str, list] = {}
+
+# Distinct (text, analyzer) pairs kept by analyze_text, least recently
+# used evicted first.
+_ANALYZE_TEXT_CACHE_SIZE = 4096
+_ANALYZE_TEXT_CACHE: OrderedDict[tuple[str, str], tuple[str, ...]] = OrderedDict()
 
 
 def analyze_text(spark, text: str, analyzer: str) -> list[str]:
     """Query-time analysis of one string (ES analyzes the query with the
-    target field's analyzer before matching, SURVEY §2.7 Q5). Memoized:
-    analyzers are pure functions of the literal, and a query tree may ask
-    for the same analysis several times (predicate + score) — each miss
-    costs a 1-row Spark job."""
+    target field's analyzer before matching, SURVEY §2.7 Q5), in the
+    driver and without a Spark job. Each composed run of Column steps is
+    one projection over a one-row VALUES relation, which
+    ConvertToLocalRelation evaluates while optimizing, so collecting it
+    runs no job; each token step calls its per-token function. Memoized in
+    a bounded LRU: analyzers are pure functions of the literal, and a query
+    tree may ask for the same analysis several times (predicate + score)."""
     key = (text, analyzer)
-    if key not in _ANALYZE_TEXT_CACHE:
-        row = spark.range(1).select(analyze(F.lit(text), analyzer).alias("t")).head()
-        _ANALYZE_TEXT_CACHE[key] = list(row["t"])
-    return list(_ANALYZE_TEXT_CACHE[key])
+    toks = _ANALYZE_TEXT_CACHE.pop(key, None)
+    if toks is None:
+        value = text
+        for stage in _query_stages(analyzer):
+            if isinstance(stage, TokenFilter):
+                value = [stage.token(t) for t in value]
+            else:
+                sql_type = "ARRAY<STRING>" if isinstance(value, list) else "STRING"
+                value = spark.sql(
+                    f"SELECT * FROM VALUES (CAST(:v AS {sql_type})) AS t(v)",
+                    args={"v": value},
+                ).select(stage.alias("v")).collect()[0]["v"]
+        toks = tuple(value)
+    _ANALYZE_TEXT_CACHE[key] = toks
+    if len(_ANALYZE_TEXT_CACHE) > _ANALYZE_TEXT_CACHE_SIZE:
+        _ANALYZE_TEXT_CACHE.popitem(last=False)
+    return list(toks)
 
 
 def pin_computed(c: Column) -> Column:

@@ -412,6 +412,23 @@ def index_stats(spark: SparkSession, index_dir: str) -> dict:
     return out
 
 
+# Fixed schemas of the statistics datasets: reading with them skips the
+# footer-reading schema-inference job a schemaless parquet read launches.
+_STATS_SCHEMAS = {
+    "corpus_stats": "tok_col string, n_docs bigint, total_dl bigint",
+    "token_stats": "token string, df bigint",
+}
+
+
+def read_stats(spark: SparkSession, index_dir: str, dataset: str) -> DataFrame:
+    """One statistics dataset of an index — ``corpus_stats`` or a term
+    dictionary ``token_stats__<tok_col>`` — with its fixed schema. Reads the
+    segmented layout (``segment=*`` subdirectories, one per segment) and a
+    flat directory of parquet files alike."""
+    schema = _STATS_SCHEMAS[dataset.split("__")[0]]
+    return spark.read.schema(schema).parquet(os.path.join(index_dir, dataset))
+
+
 def bm25_stats_from_index(
     spark: SparkSession,
     index_dir: str,
@@ -419,53 +436,73 @@ def bm25_stats_from_index(
     query_tokens: list[str],
 ):
     """BM25 corpus statistics from the index, Lucene-style: per-SEGMENT
-    stats aggregated at lookup — (n_docs, avgdl) from the tiny corpus_stats
-    table, per-token df from a pushdown-filtered lookup of the term
-    dictionary summed across segments. The query's handful of tokens, not
-    a corpus scan; an appended segment is reflected immediately without
-    rewriting anything. Tokens absent from the dictionary get df=0 (same
-    as the aggregation path: nothing contains them)."""
+    rows summed at lookup. One Spark job, no shuffle: a union of this
+    token column's ``corpus_stats`` rows (n_docs, total_dl per segment)
+    and the term-dictionary rows of the query tokens (a pushdown-filtered
+    lookup), collected and summed in the driver, as Lucene's coordinating
+    node sums per-segment statistics. At most segments × (query tokens +
+    1) rows come back, never the corpus, so an appended segment is
+    reflected immediately without rewriting anything. Tokens absent from
+    the dictionary get df=0 (same as the aggregation path: nothing
+    contains them)."""
     from tweets_elastic_spark.plans.search import Bm25Stats
 
-    cs = (
-        spark.read.parquet(os.path.join(index_dir, "corpus_stats"))
-        .filter(F.col("tok_col") == tok_col)
-        .agg(F.sum("n_docs").alias("n"), F.sum("total_dl").alias("dl"))
-        .head()
-    )
-    if cs["n"] is None:
+    terms_dir = f"token_stats__{tok_col}"
+    rows = []
+    if os.path.isdir(os.path.join(index_dir, terms_dir)):
+        # A corpus row has a null token and its segment's n_docs and
+        # total_dl; a term row has its token and that segment's df in n.
+        corpus = (
+            read_stats(spark, index_dir, "corpus_stats")
+            .filter(F.col("tok_col") == tok_col)
+            .select(F.lit(None).cast("string").alias("token"),
+                    F.col("n_docs").alias("n"), "total_dl")
+        )
+        terms = (
+            read_stats(spark, index_dir, terms_dir)
+            .filter(F.col("token").isin(list(query_tokens)))
+            .select("token", F.col("df").alias("n"),
+                    F.lit(None).cast("bigint").alias("total_dl"))
+        )
+        rows = corpus.unionByName(terms).collect()
+    segments = [r for r in rows if r["token"] is None]
+    if not segments:
         raise ValueError(
             f"no corpus stats for token column {tok_col!r} in index "
             f"{index_dir!r} — was it in the build's token spec?"
         )
-    n_docs = float(cs["n"])
-    avgdl = float(cs["dl"]) / n_docs
-    rows = (
-        spark.read.parquet(os.path.join(index_dir, f"token_stats__{tok_col}"))
-        .filter(F.col("token").isin(list(query_tokens)))
-        .groupBy("token")
-        .agg(F.sum("df").alias("df"))
-        .collect()
-    )
+    n_docs = float(sum(r["n"] for r in segments))
     df = {t: 0.0 for t in query_tokens}
-    df.update({r["token"]: float(r["df"]) for r in rows})
-    return Bm25Stats(n_docs=n_docs, avgdl=avgdl, df=df)
+    for r in rows:
+        if r["token"] is not None:
+            df[r["token"]] += r["n"]
+    return Bm25Stats(
+        n_docs=n_docs, avgdl=sum(r["total_dl"] for r in segments) / n_docs, df=df
+    )
+
+
+def _stats_segments(index_dir: str) -> tuple:
+    """The index's current statistics segments, each with its mtime: an
+    appended segment, a compaction or a rebuild changes the tuple."""
+    with os.scandir(os.path.join(index_dir, "corpus_stats")) as it:
+        return tuple(sorted((e.name, e.stat().st_mtime_ns) for e in it))
 
 
 def index_bm25_provider(spark: SparkSession, index_dir: str):
     """A ``bm25_stats_for`` provider for ``plans.search.from_es_json``
-    backed by the materialized index: (n_docs, avgdl) from the tiny
-    per-segment corpus_stats table, per-token df from a pushdown-filtered
-    term-dictionary lookup — no corpus scan, the 100 TB path (a served
-    query touches segments' metadata, never the documents, to price its
-    terms). Memoized per (tokens_col, analyzer, text) so a tree reusing
-    the same match clause in scoring and filter context looks up once."""
+    backed by the materialized index: ``bm25_stats_from_index`` over the
+    query text's analysis — no corpus scan, the 100 TB path (a served
+    query touches segments' statistics, never the documents, to price its
+    terms). Memoized per (tokens_col, analyzer, text) and the index's
+    current segment set, so a tree reusing the same match clause in
+    scoring and filter context looks up once, and a lookup after an
+    increment or a compaction sees the new statistics."""
     from tweets_elastic_spark.functions.analyzers import analyze_text
 
     cache: dict[tuple, object] = {}
 
     def provider(field: str, tokens_col: str, analyzer: str, text: str):
-        key = (tokens_col, analyzer, text)
+        key = (tokens_col, analyzer, text, _stats_segments(index_dir))
         if key not in cache:
             cache[key] = bm25_stats_from_index(
                 spark, index_dir, tokens_col,
@@ -507,16 +544,17 @@ def fuzzy_expand(
     if d == 0:
         return [term]
     rows = (
-        spark.read.parquet(os.path.join(index_dir, f"token_stats__{tok_col}"))
+        read_stats(spark, index_dir, f"token_stats__{tok_col}")
         .select("token")
         .filter(
             (F.abs(F.length("token") - F.lit(len(term))) <= d)
             & (F.levenshtein(F.col("token"), F.lit(term)) <= d)
         )
-        .distinct()
         .collect()
     )
-    return sorted(r["token"] for r in rows)
+    # a token recurs once per segment holding it: dedupe in the driver,
+    # no shuffle
+    return sorted({r["token"] for r in rows})
 
 
 def suggest_terms(
@@ -536,7 +574,7 @@ def suggest_terms(
     dictionary walk fuzzy_expand does, with df carried along for ranking.
     Returns (suggestion, df, distance)."""
     vocab = (
-        spark.read.parquet(os.path.join(index_dir, f"token_stats__{tok_col}"))
+        read_stats(spark, index_dir, f"token_stats__{tok_col}")
         .groupBy("token")
         .agg(F.sum("df").alias("df"))
     )
@@ -582,7 +620,7 @@ def suggest_completion(
     from tweets_elastic_spark.plans.search import _like_escape
 
     vocab = (
-        spark.read.parquet(os.path.join(index_dir, f"token_stats__{tok_col}"))
+        read_stats(spark, index_dir, f"token_stats__{tok_col}")
         .groupBy("token")
         .agg(F.sum("df").alias("weight"))
     )
@@ -803,7 +841,7 @@ def compact_index_segments(spark: SparkSession, index_dir: str) -> int:
             new_meta[key] = int(mx) if mx is not None else None
         elif name == "corpus_stats":
             (
-                spark.read.parquet(src)
+                read_stats(spark, index_dir, name)
                 .groupBy("tok_col")
                 .agg(
                     F.sum("n_docs").cast("long").alias("n_docs"),
@@ -814,7 +852,7 @@ def compact_index_segments(spark: SparkSession, index_dir: str) -> int:
             )
         else:  # token_stats__<col>: document frequencies add across segments
             (
-                spark.read.parquet(src)
+                read_stats(spark, index_dir, name)
                 .groupBy("token")
                 .agg(F.sum("df").cast("long").alias("df"))
                 .write.parquet(out)
