@@ -882,7 +882,8 @@ def test_highlight_tags_analyzed_terms(spark):
 
 def test_match_terms_by_field_walks_all_node_types(spark):
     from tweets_elastic_spark.plans.search import (
-        Bool, FunctionScore, Match, MatchPhrase, MultiMatch, Term,
+        Bm25Stats, Bool, Boosting, ConstantScore, DisMax, FunctionScore,
+        Match, MatchPhrase, Pinned, ScriptScore, Term, from_es_json,
         match_terms_by_field,
     )
 
@@ -891,16 +892,66 @@ def test_match_terms_by_field_walks_all_node_types(spark):
         filter=[Term("lang", "en")],
         should=[
             (MatchPhrase("title", "fast join", analyzer="standard"), 2.0),
-            (MultiMatch([("body", 1.0), ("tag", 1.0)], "scan",
-                        analyzers={"body": "standard"}, tokens_cols={}), 1.0),
+            # an overlap multi_match: tag has no analyzer binding ->
+            # keyword, skipped
+            (from_es_json({"multi_match": {"query": "scan",
+                                           "fields": ["body", "tag"]}},
+                          analyzers={"body": "standard"}), 1.0),
         ],
     ))
     got = match_terms_by_field(tree, spark)
     assert got == {
         "text": ["spark", "merge"],
         "title": ["fast", "join"],
-        "body": ["scan"],  # tag has no analyzer binding -> keyword, skipped
+        "body": ["scan"],
     }
+    # every container reaches its clauses
+    leaf = Match("text", "spark", analyzer="standard")
+    for container in (
+        DisMax([leaf]),
+        ConstantScore(leaf, 2.0),
+        Boosting(Term("lang", "en"), leaf),
+        Pinned([1], leaf),
+        ScriptScore(leaf, "_score * 2"),
+    ):
+        assert match_terms_by_field(container, spark) == {"text": ["spark"]}
+    # a BM25 multi_match over two bound fields (a DisMax of BM25 legs) and
+    # a combined_fields (one BM25 node over both fields)
+    bound = dict(
+        analyzers={"a": "standard", "b": "standard"},
+        tokens_cols={"a": "a__t", "b": "b__t"},
+        bm25_stats_for=lambda cols, an, tx: Bm25Stats(1.0, 1.0, {}),
+    )
+    for kind in ("multi_match", "combined_fields"):
+        q = from_es_json({kind: {"query": "spark", "fields": ["a", "b"]}},
+                         **bound)
+        assert match_terms_by_field(q, spark) == {
+            "a": ["spark"], "b": ["spark"]
+        }
+
+
+def test_highlight_through_containers_and_multi_match(spark):
+    """es_request highlighting finds the analyzed terms under dis_max,
+    constant_score and boosting, and through a two-field multi_match."""
+    df = spark.createDataFrame(
+        [(1, "Spark wins", "merge here", 10.0), (2, "nothing", "x", 5.0)],
+        "id long, text string, title string, amount double",
+    )
+    leaf = {"match": {"text": "spark"}}
+    for query in (
+        {"dis_max": {"queries": [leaf]}},
+        {"constant_score": {"filter": leaf}},
+        {"boosting": {"positive": leaf, "negative": {"term": {"id": 2}},
+                      "negative_boost": 0.5}},
+        {"multi_match": {"query": "spark merge",
+                         "fields": ["text", "title"]}},
+    ):
+        got = es_request(df, {
+            "query": query, "sort": [{"amount": "desc"}],
+            "highlight": {"fields": {"text": {"number_of_fragments": 0}}},
+        }, analyzers={"text": "standard", "title": "standard"},
+            tiebreak="id").collect()
+        assert [r["text_highlight"] for r in got] == ["<em>Spark</em> wins"]
 
 
 def test_extended_stats_population_moments(spark, sales):

@@ -1048,10 +1048,11 @@ def test_qstr(spark, people):
                {"documents": docs}, analyzers={"text": "standard"})
     got = {r["doc_id"]: r["_score"] for r in out.collect()}
     assert set(got) == {1} and got[1] == 2.0   # constant-weight sum
-    # bare term + no binding -> loud refusal
-    with pytest.raises(ValueError, match="bare .*term"):
-        esql(spark, 'FROM people | WHERE QSTR("loose")',
-             people).collect()
+    # bare term + no binding -> loud refusal, also inside an OR's clauses
+    for text in ("loose", "loose OR team:eng"):
+        with pytest.raises(ValueError, match="bare .*term"):
+            esql(spark, f'FROM people | WHERE QSTR("{text}")',
+                 people).collect()
     # outside WHERE -> refusal (same contract as MATCH)
     with pytest.raises(ValueError, match="only valid in WHERE"):
         esql(spark, 'FROM people | EVAL x = QSTR("team:eng")', people)

@@ -175,9 +175,9 @@ def test_match_agrees_with_dsl_bm25_nodes(spark, docs):
     from pyspark.sql import functions as F
 
     qtok = analyze_text(spark, "spark merge", "custom_shingles")
-    stats = bm25_stats(docs, "text__custom_shingles", qtok)
-    node = BM25Match("text", "spark merge", analyzer="custom_shingles",
-                     tokens_col="text__custom_shingles", stats=stats)
+    stats = bm25_stats(docs, [("text__custom_shingles", 1.0)], qtok)
+    node = BM25Match([("text", "text__custom_shingles", 1.0)], "spark merge",
+                     analyzer="custom_shingles", stats=stats)
     want = sorted(
         tuple(r) for r in docs
         .filter(node.predicate(spark, F.col))

@@ -77,7 +77,7 @@ def test_term_dictionary_matches_aggregation_stats(spark, index_dir):
 
     docs = indexing.read_indexed_documents(spark, index_dir)
     qtokens = ["spark", "merge", "sparkmerge", "zzz-not-a-token"]
-    scan = bm25_stats(docs, "text__custom_shingles", qtokens)
+    scan = bm25_stats(docs, [("text__custom_shingles", 1.0)], qtokens)
     lookup = indexing.bm25_stats_from_index(
         spark, index_dir, "text__custom_shingles", qtokens
     )
@@ -233,9 +233,9 @@ def test_bm25_stats_lookup_is_one_job_and_provider_follows_segments(
     idx = indexing.build_index(spark, src_half, str(tmp_path / "idx"))
     tok_col, text = "text__custom_shingles", "spark merge"
     provider = indexing.index_bm25_provider(spark, idx)
-    before = provider("text", tok_col, "custom_shingles", text)
+    before = provider(((tok_col, 1.0),), "custom_shingles", text)
     with spark_jobs() as jobs:
-        assert provider("text", tok_col, "custom_shingles", text) is before
+        assert provider(((tok_col, 1.0),), "custom_shingles", text) is before
     assert jobs[0] == 0
 
     store = WatermarkStore(str(tmp_path / "wm.json"))
@@ -244,13 +244,43 @@ def test_bm25_stats_lookup_is_one_job_and_provider_follows_segments(
     with spark_jobs() as jobs:
         direct = indexing.bm25_stats_from_index(spark, idx, tok_col, qtokens)
     assert jobs[0] == 1
-    scan = bm25_stats(indexing.read_indexed_documents(spark, idx), tok_col, qtokens)
+    scan = bm25_stats(indexing.read_indexed_documents(spark, idx), [(tok_col, 1.0)],
+                      qtokens)
     assert (direct.n_docs, direct.df) == (scan.n_docs, scan.df)
     assert abs(direct.avgdl - scan.avgdl) < 1e-9
 
-    after = provider("text", tok_col, "custom_shingles", text)
+    after = provider(((tok_col, 1.0),), "custom_shingles", text)
     assert after.n_docs == 2 * before.n_docs == 500.0
     assert (after.n_docs, after.avgdl, after.df) == (direct.n_docs, direct.avgdl, direct.df)
+
+
+def test_index_provider_serves_one_column(spark, index_dir):
+    """The index stores one term dictionary per token column, so the
+    provider prices one column; the union document frequency a
+    several-field combined_fields / cross_fields needs is refused at
+    compile time. A weighted single column scales the mean length."""
+    from tweets_elastic_spark.plans.search import from_es_json
+
+    provider = indexing.index_bm25_provider(spark, index_dir)
+    bindings = dict(
+        analyzers={"text": "custom_shingles", "title": "custom_shingles"},
+        tokens_cols={"text": "text__custom_shingles",
+                     "title": "title__custom_shingles"},
+        bm25_stats_for=provider,
+    )
+    for dsl in (
+        {"combined_fields": {"query": "spark merge",
+                             "fields": ["text", "title"]}},
+        {"multi_match": {"query": "spark merge", "fields": ["text", "title"],
+                         "type": "cross_fields"}},
+    ):
+        with pytest.raises(ValueError, match="union document frequency"):
+            from_es_json(dsl, **bindings)
+    col = "text__custom_shingles"
+    one = provider(((col, 1.0),), "custom_shingles", "spark merge")
+    two = provider(((col, 2.0),), "custom_shingles", "spark merge")
+    assert (two.n_docs, two.df) == (one.n_docs, one.df)
+    assert two.avgdl == 2 * one.avgdl
 
 
 def test_fuzzy_expand_is_one_job_over_segments(spark, tmp_path, spark_jobs):
@@ -351,8 +381,8 @@ def test_reference_flow_etl_index_search(spark, tmp_path):
         spark, idx, "content__custom_shingles", qtokens
     )
     match = BM25Match(
-        "content", "tweet number", analyzer="custom_shingles",
-        tokens_col="content__custom_shingles", stats=stats,
+        [("content", "content__custom_shingles", 1.0)], "tweet number",
+        analyzer="custom_shingles", stats=stats,
     )
     query = FunctionScore(
         Bool(
@@ -441,8 +471,8 @@ def test_segmented_increment_equals_monolithic_index(spark, tmp_path):
             spark, idx, "text__custom_shingles", qtokens
         )
         match = BM25Match(
-            "text", "spark merge", analyzer="custom_shingles",
-            tokens_col="text__custom_shingles", stats=stats,
+            [("text", "text__custom_shingles", 1.0)], "spark merge",
+            analyzer="custom_shingles", stats=stats,
         )
         q = FunctionScore(Bool(should=[(match, 1.0)], filter=[Term("lang", "en"), match]))
         out = search(d, q, k=None).select("doc_id", F.round("score", 6).alias("s"))
@@ -591,8 +621,8 @@ def test_compaction_merges_segments_without_reanalysis(spark, tmp_path):
         stats = indexing.bm25_stats_from_index(
             spark, i, "text__custom_shingles", qtokens
         )
-        m = BM25Match("text", "spark merge", analyzer="custom_shingles",
-                      tokens_col="text__custom_shingles", stats=stats)
+        m = BM25Match([("text", "text__custom_shingles", 1.0)], "spark merge",
+                      analyzer="custom_shingles", stats=stats)
         out = search(d, m, k=None).select(
             "doc_id", F.round("score", 6).alias("s")
         )
@@ -703,8 +733,8 @@ def test_index_lifecycle_end_to_end(spark, tmp_path):
         d = indexing.read_indexed_documents(spark, i)
         stats = indexing.bm25_stats_from_index(
             spark, i, "text__custom_shingles", qtokens)
-        m = BM25Match("text", "spark merge", analyzer="custom_shingles",
-                      tokens_col="text__custom_shingles", stats=stats)
+        m = BM25Match([("text", "text__custom_shingles", 1.0)], "spark merge",
+                      analyzer="custom_shingles", stats=stats)
         out = search(d, m, k=None).select(
             "doc_id", F.round("score", 6).alias("s"))
         return sorted((r["doc_id"], r["s"]) for r in out.collect())

@@ -149,12 +149,12 @@ def test_bm25_ranking_properties(spark):
     # tokenize per word instead of keyword for this test
     df = df.withColumn("toks", F.split(F.lower(F.col("text")), " "))
     qt = ["rare", "common"]
-    stats = bm25_stats(df, "toks", qt)
+    stats = bm25_stats(df, [("toks", 1.0)], qt)
     assert stats.n_docs == 5.0
     assert stats.df["rare"] == 2.0 and stats.df["common"] == 3.0
 
-    match = BM25Match("text", "rare common", analyzer="keyword_lowercase",
-                      tokens_col="toks", stats=stats)
+    match = BM25Match([("text", "toks", 1.0)], "rare common",
+                      analyzer="keyword_lowercase", stats=stats)
     # analyzer only feeds query-side tokens; patch them via monkey tokens
     match._query_tokens = lambda spark: qt
     out = search(df, FunctionScore(Bool(should=[(match, 1.0)])), k=None)
@@ -248,7 +248,7 @@ def _fixed_stats(n=10.0, avgdl=4.0, df=None):
     return Bm25Stats(n_docs=n, avgdl=avgdl, df=df or {})
 
 
-def _raising_provider(field, tokens_col, analyzer, text):
+def _raising_provider(columns, analyzer, text):
     raise AssertionError(
         "bm25_stats_for must not be consulted for this query shape"
     )
@@ -277,8 +277,8 @@ def test_from_es_json_match_compiles_to_bm25_with_provider():
     stats = _fixed_stats(df={"spark": 3.0})
     seen = []
 
-    def provider(field, tokens_col, analyzer, text):
-        seen.append((field, tokens_col, analyzer, text))
+    def provider(columns, analyzer, text):
+        seen.append((columns, analyzer, text))
         return stats
 
     q = from_es_json(
@@ -289,10 +289,10 @@ def test_from_es_json_match_compiles_to_bm25_with_provider():
         bm25_stats_for=provider,
     )
     assert q == BM25Match(
-        "text", "spark", analyzer="standard", tokens_col="text__standard",
+        [("text", "text__standard", 1.0)], "spark", analyzer="standard",
         stats=stats, operator="and", minimum_should_match=1,
     )
-    assert seen == [("text", "text__standard", "standard", "spark")]
+    assert seen == [((("text__standard", 1.0),), "standard", "spark")]
 
 
 def test_from_es_json_bm25_fallbacks_keep_overlap_match():
@@ -326,19 +326,19 @@ def test_from_es_json_multi_match_bm25_tree_shapes():
     best_fields → DisMax, most_fields → score-summing Bool; field^boost
     lands on the leg."""
     from tweets_elastic_spark.plans.search import (
-        BM25Match, Bool, DisMax, MultiMatch, from_es_json,
+        BM25Match, Bool, ConstantScore, DisMax, Match, from_es_json,
     )
 
     stats = _fixed_stats(df={"spark": 2.0})
     kw = dict(
         analyzers={"a": "standard", "b": "standard"},
         tokens_cols={"a": "a__t", "b": "b__t"},
-        bm25_stats_for=lambda f, tc, an, tx: stats,
+        bm25_stats_for=lambda cols, an, tx: stats,
     )
     legs = [
-        BM25Match("a", "spark", analyzer="standard", tokens_col="a__t",
+        BM25Match([("a", "a__t", 1.0)], "spark", analyzer="standard",
                   stats=stats, boost=2.0),
-        BM25Match("b", "spark", analyzer="standard", tokens_col="b__t",
+        BM25Match([("b", "b__t", 1.0)], "spark", analyzer="standard",
                   stats=stats),
     ]
     best = from_es_json(
@@ -348,10 +348,14 @@ def test_from_es_json_multi_match_bm25_tree_shapes():
         {"multi_match": {"query": "spark", "fields": ["a^2", "b"],
                          "type": "most_fields"}}, **kw)
     assert most == Bool(should=[(legs[0], 1.0), (legs[1], 1.0)])
-    # one field unbound → the whole clause falls back to MultiMatch
+    # one field unbound → the whole clause falls back to overlap legs
     partial = from_es_json(
         {"multi_match": {"query": "spark", "fields": ["a", "c"]}}, **kw)
-    assert isinstance(partial, MultiMatch)
+    assert partial == DisMax([
+        ConstantScore(Match("a", "spark", analyzer="standard",
+                            tokens_col="a__t"), 1.0),
+        ConstantScore(Match("c", "spark"), 1.0),
+    ])
 
 
 def test_bm25_match_operator_msm_boost_execution(spark):
@@ -378,16 +382,17 @@ def test_bm25_match_operator_msm_boost_execution(spark):
         idf = math.log(1.0 + (4.0 - dfreq + 0.5) / (dfreq + 0.5))
         return boost * idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / 2.0))
 
-    base = dict(analyzer="standard", tokens_col="toks", stats=stats)
-    m_and = BM25Match("toks", "spark merge", **base, operator="and")
+    base = dict(analyzer="standard", stats=stats)
+    toks = [("toks", "toks", 1.0)]
+    m_and = BM25Match(toks, "spark merge", **base, operator="and")
     got = {r["id"]: r["score"]
            for r in search(df, m_and, k=None).collect()}
     assert set(got) == {"d1"}
     want = okapi(2, 3, 2.0) + okapi(1, 3, 2.0)
     assert abs(got["d1"] - want) < 1e-9
-    m_msm = BM25Match("toks", "spark merge", **base, minimum_should_match=2)
+    m_msm = BM25Match(toks, "spark merge", **base, minimum_should_match=2)
     assert {r["id"] for r in search(df, m_msm, k=None).collect()} == {"d1"}
-    m_boost = BM25Match("toks", "spark merge", **base, boost=3.0)
+    m_boost = BM25Match(toks, "spark merge", **base, boost=3.0)
     got_b = {r["id"]: r["score"]
              for r in search(df, m_boost, k=None).collect()}
     assert set(got_b) == {"d1", "d2", "d3"}
@@ -647,6 +652,9 @@ def test_multi_match_tie_breaker(spark):
         from_es_json({"query": {"multi_match": {
             "query": "x", "fields": ["a"], "type": "most_fields",
             "tie_breaker": 0.5}}})
+    with pytest.raises(ValueError, match=r"tie_breaker must be in \[0, 1\]"):
+        from_es_json({"multi_match": {"query": "x", "fields": ["a"],
+                                      "tie_breaker": 1.5}})
     # BM25 path: tie_breaker lands on the DisMax combiner
     stats = _fixed_stats(df={"spark": 2.0})
     parsed = from_es_json(
@@ -654,11 +662,11 @@ def test_multi_match_tie_breaker(spark):
                          "tie_breaker": 0.4}},
         analyzers={"a": "standard", "b": "standard"},
         tokens_cols={"a": "a__t", "b": "b__t"},
-        bm25_stats_for=lambda f, tc, an, tx: stats,
+        bm25_stats_for=lambda cols, an, tx: stats,
     )
-    legs = [BM25Match("a", "spark", analyzer="standard", tokens_col="a__t",
+    legs = [BM25Match([("a", "a__t", 1.0)], "spark", analyzer="standard",
                       stats=stats),
-            BM25Match("b", "spark", analyzer="standard", tokens_col="b__t",
+            BM25Match([("b", "b__t", 1.0)], "spark", analyzer="standard",
                       stats=stats)]
     assert parsed == DisMax(legs, tie_breaker=0.4)
 
@@ -993,29 +1001,28 @@ def test_from_es_json_compound_scoring_clauses():
 
 
 def test_multi_match_most_fields_sums_legs(spark):
-    from tweets_elastic_spark.plans.search import MultiMatch, from_es_json
+    from tweets_elastic_spark.plans.search import Bool, Match, from_es_json
 
     df = spark.createDataFrame(
         [(1, "alpha beta", "alpha"), (2, "alpha x", "zzz"), (3, "q", "alpha")],
         "id long, text string, title string",
     )
     an = {"text": "standard", "title": "standard"}
-    q = MultiMatch([("text", 2.0), ("title", 1.0)], "alpha",
-                   analyzers=an, tokens_cols={}, type="most_fields")
-    by_id = {r["id"]: r["score"] for r in search(df, q, k=None).collect()}
-    # doc1 matches both legs: 2 + 1 = 3 (best_fields would give 2)
-    assert by_id == {1: 3.0, 2: 2.0, 3: 1.0}
-    parsed = from_es_json(
+    q = from_es_json(
         {"multi_match": {"query": "alpha", "type": "most_fields",
                          "fields": ["text^2", "title"]}},
         analyzers=an,
     )
-    assert parsed == MultiMatch([("text", 2.0), ("title", 1.0)], "alpha",
-                                analyzers=an, tokens_cols={},
-                                type="most_fields")
+    by_id = {r["id"]: r["score"] for r in search(df, q, k=None).collect()}
+    # doc1 matches both legs: 2 + 1 = 3 (best_fields would give 2)
+    assert by_id == {1: 3.0, 2: 2.0, 3: 1.0}
+    assert q == Bool(should=[
+        (Match("text", "alpha", analyzer="standard"), 2.0),
+        (Match("title", "alpha", analyzer="standard"), 1.0),
+    ])
     with pytest.raises(ValueError, match="unsupported multi_match type"):
-        MultiMatch([("text", 1.0)], "x", analyzers=an, tokens_cols={},
-                   type="cross_fields")
+        from_es_json({"multi_match": {"query": "x", "fields": ["text"],
+                                      "type": "phrase"}}, analyzers=an)
 
 
 def test_more_like_this_selects_similar_docs(spark):
@@ -2432,9 +2439,9 @@ def test_span_containing_and_within(spark):
 def test_combined_fields_bm25f(spark):
     from tweets_elastic_spark.functions.analyzers import materialize_tokens
     from tweets_elastic_spark.plans.search import (
-        CombinedFields,
-        combined_bm25_stats,
-        corpus_combined_provider,
+        BM25Match,
+        bm25_stats,
+        corpus_bm25_provider,
         from_es_json,
         search,
     )
@@ -2447,16 +2454,15 @@ def test_combined_fields_bm25f(spark):
     )
     docs = materialize_tokens(docs, {"head": ["standard"],
                                      "body": ["standard"]})
-    fields = [("head__standard", 2.0), ("body__standard", 1.0)]
-    stats = combined_bm25_stats(docs, fields, ["alpha", "beta"])
+    fields = [("head", "head__standard", 2.0), ("body", "body__standard", 1.0)]
+    stats = bm25_stats(docs, [(c, w) for _, c, w in fields], ["alpha", "beta"])
     # union df: alpha in doc1 (both fields -> counted once) = 1;
     # beta in doc1(head) + doc2(both) = 2
     assert stats.df == {"alpha": 1.0, "beta": 2.0}
     # avgdl: weighted lengths 2*2+3=7, 2*1+3=5, 2*1+2=4 -> 16/3
     assert abs(stats.avgdl - 16.0 / 3.0) < 1e-12
 
-    q = CombinedFields(fields, "alpha beta", analyzer="standard",
-                       stats=stats)
+    q = BM25Match(fields, "alpha beta", analyzer="standard", stats=stats)
     out = {r["doc_id"]: r["score"]
            for r in search(docs, q, k=None).collect()}
     assert set(out) == {1, 2}
@@ -2470,8 +2476,8 @@ def test_combined_fields_bm25f(spark):
     assert abs(out[1] - want1) < 1e-9
 
     # operator=and requires every term in SOME field
-    q_and = CombinedFields(fields, "alpha beta", analyzer="standard",
-                           stats=stats, operator="and")
+    q_and = BM25Match(fields, "alpha beta", analyzer="standard",
+                      stats=stats, operator="and")
     assert [r["doc_id"] for r in search(docs, q_and, k=None).collect()] == [1]
 
     # DSL wiring: provider required, analyzers must agree
@@ -2481,10 +2487,10 @@ def test_combined_fields_bm25f(spark):
         analyzers={"head": "standard", "body": "standard"},
         tokens_cols={"head": "head__standard", "body": "body__standard"},
     )
-    with pytest.raises(ValueError, match="combined_stats_for"):
+    with pytest.raises(ValueError, match="bm25_stats_for"):
         from_es_json(dsl, **bindings)
-    provider = corpus_combined_provider(spark, docs)
-    qj = from_es_json(dsl, **bindings, combined_stats_for=provider)
+    provider = corpus_bm25_provider(spark, docs)
+    qj = from_es_json(dsl, **bindings, bm25_stats_for=provider)
     outj = {r["doc_id"]: r["score"]
             for r in search(docs, qj, k=None).collect()}
     assert outj == out
@@ -2492,7 +2498,7 @@ def test_combined_fields_bm25f(spark):
         from_es_json(dsl, analyzers={"head": "standard",
                                      "body": "englando"},
                      tokens_cols=bindings["tokens_cols"],
-                     combined_stats_for=provider)
+                     bm25_stats_for=provider)
 
 
 def test_render_search_template():
@@ -2582,7 +2588,7 @@ def test_terms_lookup_and_cross_fields_routing(spark):
                                       "path": "allowed"}}},
                      lookup_indices={"lk": (lookup, "lid")})
     # cross_fields without a provider refuses via the combined_fields path
-    with pytest.raises(ValueError, match="combined_stats_for"):
+    with pytest.raises(ValueError, match="bm25_stats_for"):
         from_es_json({"multi_match": {"query": "x", "fields": ["g"],
                                       "type": "cross_fields"}},
                      analyzers={"g": "standard"},
@@ -2699,7 +2705,7 @@ def test_validate_query():
     assert not ok and "no_such_query" in expl
     ok, expl = es_validate_query(
         {"combined_fields": {"query": "x", "fields": ["a"]}})
-    assert not ok and "combined_stats_for" in expl
+    assert not ok and "bm25_stats_for" in expl
 
 
 def test_terms_enum_pagination_and_case(spark):

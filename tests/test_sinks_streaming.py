@@ -637,8 +637,8 @@ def test_streaming_index_maintenance_equals_monolithic(spark, tmp_path):
             spark, idx, "text__custom_shingles", qtokens
         )
         match = BM25Match(
-            "text", "spark merge", analyzer="custom_shingles",
-            tokens_col="text__custom_shingles", stats=stats,
+            [("text", "text__custom_shingles", 1.0)], "spark merge",
+            analyzer="custom_shingles", stats=stats,
         )
         out = search(d, match, k=None).select(
             "doc_id", F.round("score", 6).alias("s")

@@ -493,7 +493,12 @@ def index_bm25_provider(spark: SparkSession, index_dir: str):
     backed by the materialized index: ``bm25_stats_from_index`` over the
     query text's analysis — no corpus scan, the 100 TB path (a served
     query touches segments' statistics, never the documents, to price its
-    terms). Memoized per (tokens_col, analyzer, text) and the index's
+    terms). Called as ``(columns, analyzer, text)``, it serves ONE
+    ``(tokens_col, weight)`` column (a weight scales the mean length the
+    way it scales every document's): the index stores a term dictionary
+    per column, so the union document frequency several columns of a
+    ``combined_fields`` need is not there — that request raises
+    ``ValueError``. Memoized per (column, analyzer, text) and the index's
     current segment set, so a tree reusing the same match clause in
     scoring and filter context looks up once, and a lookup after an
     increment or a compaction sees the new statistics."""
@@ -501,13 +506,24 @@ def index_bm25_provider(spark: SparkSession, index_dir: str):
 
     cache: dict[tuple, object] = {}
 
-    def provider(field: str, tokens_col: str, analyzer: str, text: str):
-        key = (tokens_col, analyzer, text, _stats_segments(index_dir))
+    def provider(columns, analyzer: str, text: str):
+        if len(columns) != 1:
+            raise ValueError(
+                "index_bm25_provider serves one token column, got "
+                f"{[c for c, _ in columns]}: the index stores per-column "
+                "term dictionaries, so the union document frequency "
+                "combined_fields needs is not there (use "
+                "plans.search.corpus_bm25_provider)"
+            )
+        (tokens_col, weight), = columns
+        key = (tokens_col, weight, analyzer, text, _stats_segments(index_dir))
         if key not in cache:
-            cache[key] = bm25_stats_from_index(
+            stats = bm25_stats_from_index(
                 spark, index_dir, tokens_col,
                 analyze_text(spark, text, analyzer),
             )
+            stats.avgdl *= weight
+            cache[key] = stats
         return cache[key]
 
     return provider

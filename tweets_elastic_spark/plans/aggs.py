@@ -98,7 +98,25 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.analyzers import analyze
+from tweets_elastic_spark.functions.hashing import hash60
+from tweets_elastic_spark.functions.ip import (
+    ipv6_canonical,
+    ipv6_groups,
+    ipv6_mask,
+)
+from tweets_elastic_spark.functions.studentt import student_t_two_sided_p
 from tweets_elastic_spark.functions.vectors import col_sql, cosine, vec_sql
+from tweets_elastic_spark.plans.search import (
+    Regexp,
+    compile_painless,
+    es_retriever,
+    from_es_json,
+    haversine_meters,
+    match_terms_by_field,
+    parse_distance_meters,
+    search,
+)
 
 _CALENDAR_FMT = {
     "minute": "yyyy-MM-dd HH:mm",
@@ -204,9 +222,6 @@ def _bucket_key(kind: str, body: dict) -> Column:
         # divergence shared with the geo_distance query); the haversine
         # distance is one scan-local expression the ring CASE ladder
         # branches on — bind it once (no CSE across branches).
-        from tweets_elastic_spark.plans.search import (
-            haversine_meters, parse_distance_meters,
-        )
 
         fld, origin = body.get("field"), body.get("origin")
         if not (isinstance(fld, dict) and {"lat", "lon"} <= set(fld)):
@@ -580,10 +595,6 @@ def _bucket_key(kind: str, body: dict) -> Column:
         # pure Catalyst, see functions/ip.py.
         bits = int(body["prefix_length"])
         if body.get("is_ipv6"):
-            from tweets_elastic_spark.functions.ip import (
-                ipv6_canonical, ipv6_groups, ipv6_mask,
-            )
-
             sfx = f"/{bits}" if body.get("append_prefix_length") else ""
 
             def key6(g: Column) -> Column:
@@ -642,8 +653,6 @@ def _ip_range_v6_key(src: Column, ranges: list) -> Column:
     Mixing IPv4 and IPv6 specs in one agg raises (ES splits these by
     field type)."""
     import ipaddress
-
-    from tweets_elastic_spark.functions.ip import ipv6_groups
 
     bounds = []
     for r in ranges:
@@ -865,8 +874,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # out of the sum (ES throws on missing doc values; the
             # NULL contract here is the documented safer divergence).
             import re as _re
-
-            from tweets_elastic_spark.plans.search import compile_painless
 
             extra = set(body) - {"init_script", "map_script",
                                  "combine_script", "reduce_script",
@@ -1326,8 +1333,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
                 if "filter" in sp:
                     from pyspark.sql import SparkSession
 
-                    from tweets_elastic_spark.plans.search import from_es_json
-
                     pred = from_es_json(sp["filter"]).predicate(
                         SparkSession.getActiveSession(), F.col
                     )
@@ -1471,8 +1476,6 @@ def _filters_agg(
     an empty bucket, NULL only for min/max/avg, so those kinds coalesce
     to 0 on the join tail. Still one scan; the only shuffle is keyed by
     the B bucket names."""
-    from tweets_elastic_spark.plans.search import from_es_json
-
     named = body.get("filters")
     if not isinstance(named, dict) or not named:
         raise ValueError("filters agg needs {'filters': {name: query, ...}}")
@@ -1587,8 +1590,6 @@ def _adjacency_matrix_agg(
     the filters agg's tag-explode path instead — each row tags itself
     with every cell it lands in (including pair cells) and one
     explode + groupBy evaluates the metrics; empty cells stay dropped."""
-    from tweets_elastic_spark.plans.search import from_es_json
-
     named = body.get("filters")
     if not isinstance(named, dict) or len(named) < 2:
         raise ValueError(
@@ -2057,8 +2058,6 @@ def _jlh_rank(
             F.exp(-num / den),
         ).otherwise(F.lit(0.0))
     elif heuristic == "script_heuristic":
-        from tweets_elastic_spark.plans.search import compile_painless
-
         score = compile_painless(script, params={
             "_subset_freq": F.col("doc_count").cast("double"),
             "_superset_freq": F.col("bg_count").cast("double"),
@@ -2153,8 +2152,6 @@ def _significant_text(
     ride the explode masked to NULL outside the foreground (a doc
     contributes once per distinct token it carries, the same doc-frequency
     convention as the counts)."""
-    from tweets_elastic_spark.functions.analyzers import analyze
-
     field = body["field"]
     size = int(body.get("size", 10))
     if fg_pred is None:
@@ -2304,8 +2301,6 @@ def _apply_pipeline_aggs(
     bucket relation (histogram cardinality, not corpus cardinality), so the
     single-partition window is the semantics, not a scale bug."""
     from pyspark.sql.window import Window
-
-    from tweets_elastic_spark.plans.search import compile_painless
 
     ordered_kinds = ("cumulative_sum", "derivative", "moving_fn",
                      "serial_diff", "moving_percentiles")
@@ -2679,10 +2674,6 @@ def _attach_t_test_p(out: DataFrame, aggs_dsl: dict) -> DataFrame:
     def _p_batch(t, df_):
         import pandas as pd
 
-        from tweets_elastic_spark.functions.studentt import (
-            student_t_two_sided_p,
-        )
-
         return pd.Series([
             None if tv is None or dv is None or pd.isna(tv) or pd.isna(dv)
             else student_t_two_sided_p(float(tv), float(dv))
@@ -3001,7 +2992,6 @@ def _es_aggregate_impl(
                 "random_sampler needs sub-aggregations to run over the "
                 "sample"
             )
-        from tweets_elastic_spark.functions.hashing import hash60
 
         seed = int(body.get("seed", 0))
         threshold = int(p * (1 << 60))
@@ -3442,7 +3432,6 @@ def _es_aggregate_impl(
         # value list, applied while collecting (before size). The regex
         # goes through the Regexp node's Lucene-core translation, so
         # optional operators are rejected and ^/$ stay literals.
-        from tweets_elastic_spark.plans.search import Regexp
 
         if nested_bucket:
             raise ValueError(
@@ -3627,8 +3616,6 @@ def es_request(
     to ``size``, projected to ``_source`` when present. Explicit sort +
     size compiles to TakeOrderedAndProject, the same per-partition-top-k /
     merge plan relevance queries get."""
-    from tweets_elastic_spark.plans.search import from_es_json, search
-
     body = dict(request)
     rt = body.get("runtime_mappings")
     if rt is not None:
@@ -3640,7 +3627,6 @@ def es_request(
         # pipeline as any column (Catalyst inlines the expression) — vs
         # ES, where runtime fields are evaluated per-doc at query time
         # with no index support.
-        from tweets_elastic_spark.plans.search import compile_painless
 
         for fname, spec in rt.items():
             ftype = spec.get("type")
@@ -3665,7 +3651,6 @@ def es_request(
         # the tree (rrf/linear/reranker nodes), so envelope features
         # that would re-order or re-shape its output are contradictions,
         # not extensions.
-        from tweets_elastic_spark.plans.search import es_retriever
 
         conflict = set(body) & {
             "query", "knn", "aggs", "aggregations", "sort", "from",
@@ -4021,7 +4006,6 @@ def es_request(
         # the corpus, and unlike ES the evaluation is codegen'd, not
         # scripted. _score is available when the hits carry a score
         # column (the relevance path).
-        from tweets_elastic_spark.plans.search import compile_painless
 
         score_col = F.col("score") if "score" in out.columns else None
         for fname, spec in sfields.items():
@@ -4052,8 +4036,6 @@ def es_request(
         # is the documented divergence, chosen because the exact same
         # arithmetic runs in SQL: string_split + list_zip + right/left).
         import re as _re
-
-        from tweets_elastic_spark.plans.search import match_terms_by_field
 
         terms = match_terms_by_field(tree, df.sparkSession)
         pre = hl.get("pre_tags", ["<em>"])[0]

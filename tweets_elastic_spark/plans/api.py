@@ -11,7 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tweets_elastic_spark.plans.search import _col_resolver, from_es_json
+from tweets_elastic_spark.functions.analyzers import analyze
+from tweets_elastic_spark.plans.aggs import es_request
+from tweets_elastic_spark.plans.search import (
+    _col_resolver,
+    from_es_json,
+    search,
+)
+from tweets_elastic_spark.plans.templates import render_search_template
 
 
 def es_count(
@@ -45,8 +52,6 @@ def es_msearch(
     concurrently simply trigger the returned frames' actions from
     concurrent driver threads (Spark's scheduler interleaves the jobs —
     the scatter half of ES's msearch fan-out)."""
-    from tweets_elastic_spark.plans.aggs import es_request
-
     if not isinstance(requests, list) or not requests:
         raise ValueError("_msearch needs a non-empty list of requests")
     return [
@@ -65,8 +70,6 @@ def es_msearch_template(
     """ES ``_msearch/template``: a batch of (template source, params)
     pairs — each rendered through the mustache subset and executed as an
     ordinary msearch entry. Declarative like es_msearch."""
-    from tweets_elastic_spark.plans.templates import render_search_template
-
     if not isinstance(entries, list) or not entries:
         raise ValueError("_msearch/template needs a non-empty list of "
                          "(source, params) pairs")
@@ -81,8 +84,6 @@ def es_validate_query(query_dsl: dict, **compile_opts) -> tuple[bool, str]:
     success (ES's rewritten-query explanation analogue) or the compile
     error. Nothing executes; compilation IS the validation in a
     plan-compiled engine."""
-    from tweets_elastic_spark.plans.search import from_es_json
-
     try:
         tree = from_es_json(query_dsl, **compile_opts)
     except (ValueError, KeyError, TypeError) as e:
@@ -133,8 +134,6 @@ def es_termvectors(
     already carries it — then the analyzer never re-runs); positions
     aggregate as a sorted int list, ES's response shape flattened to one
     row per (doc, term)."""
-    from tweets_elastic_spark.functions.analyzers import analyze
-
     toks = (
         F.col(tokens_col) if tokens_col is not None
         else analyze(F.col(text_col), analyzer)
@@ -156,8 +155,6 @@ def es_analyze(spark, text: str, *, analyzer: str = "standard") -> DataFrame:
     start/end offsets are not reported (the composed chains here
     transform the token stream — folding/stemming — without tracking
     source offsets; a documented divergence from ES's response)."""
-    from tweets_elastic_spark.functions.analyzers import analyze
-
     df = spark.createDataFrame([(text,)], "text string")
     return df.select(
         F.posexplode(analyze(F.col("text"), analyzer))
@@ -285,8 +282,6 @@ def es_rank_eval(
     the overall ES ``metric_score`` is the caller's avg over the
     relation."""
     from pyspark.sql.window import Window
-
-    from tweets_elastic_spark.plans.search import search
 
     requests = body.get("requests")
     if not isinstance(requests, list) or not requests:

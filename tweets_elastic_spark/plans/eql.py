@@ -92,6 +92,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.ip import cidr_match
+
 __all__ = ["parse_eql", "eql_search"]
 
 _DURATION_RE = re.compile(r"^(\d+)(ms|s|m|h|d)$")
@@ -929,8 +931,6 @@ def _func_col(call: FuncCall) -> Column:
             pred = m if pred is None else (pred | m)
         return pred
     if call.name == "cidrmatch":
-        from tweets_elastic_spark.functions.ip import cidr_match
-
         pred = None
         for _, cidr in call.args[1:]:
             m = cidr_match(fld, cidr)

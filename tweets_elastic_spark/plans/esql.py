@@ -203,6 +203,27 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.hashing import hash60
+from tweets_elastic_spark.functions.ip import (
+    cidr_match_v4_long,
+    cidr_match_v6_groups,
+    ipv4_long,
+    ipv6_canonical,
+    ipv6_groups,
+    ipv6_mask,
+)
+from tweets_elastic_spark.plans.aggs import categorize_key, mad_expr
+from tweets_elastic_spark.plans.query_string import (
+    parse_kql,
+    parse_query_string,
+)
+from tweets_elastic_spark.plans.search import (
+    Match,
+    bm25_match,
+    haversine_meters,
+    query_nodes,
+)
+
 __all__ = ["esql"]
 
 _TOKEN_RE = re.compile(
@@ -569,10 +590,10 @@ class _ExprParser:
         if fn == "MATCH":
             # ES|QL 8.16 full-text: MATCH(field, "query") as a WHERE
             # predicate, compiled through the SAME Match/BM25Match
-            # nodes the DSL / ES-SQL front-ends use (plans/essql.py
-            # _match_builder) — with analyzer + token-column bindings
-            # and a stats provider the score is Okapi BM25, surfaced
-            # via FROM ... METADATA _score.
+            # nodes the DSL / ES-SQL front-ends use (_match_builder) —
+            # with analyzer + token-column bindings and a stats
+            # provider the score is Okapi BM25, surfaced via FROM ...
+            # METADATA _score.
             if self.make_match is None:
                 raise ValueError(
                     "ES|QL: MATCH() is only valid in WHERE"
@@ -757,8 +778,6 @@ class _ExprParser:
             if not 0 <= v6 <= 128:
                 raise ValueError(
                     f"IP_PREFIX v6 length {v6} not in 0-128")
-            from tweets_elastic_spark.functions.ip import (
-                ipv4_long, ipv6_canonical, ipv6_groups, ipv6_mask)
 
             mask4 = (0xFFFFFFFF << (32 - v4)) & 0xFFFFFFFF
 
@@ -798,10 +817,6 @@ class _ExprParser:
             # each block is then one range/prefix compare, OR-folded.
             # Predicate arithmetic shared with EQL's cidrMatch
             # (functions/ip.py).
-            from tweets_elastic_spark.functions.ip import (
-                cidr_match_v4_long, cidr_match_v6_groups,
-                ipv4_long, ipv6_groups,
-            )
 
             self.expect_op("(")
             c = self.expr()
@@ -1005,8 +1020,6 @@ class _ExprParser:
             # haversine (ES mean earth radius) the DSL geo_distance
             # query compiles to, shared from plans/search.py
             need(2)
-            from tweets_elastic_spark.plans.search import (
-                haversine_meters)
             return haversine_meters(
                 a[0]["lat"], a[0]["lon"], a[1]["lat"], a[1]["lon"])
         if fn == "CATEGORIZE":
@@ -1017,7 +1030,6 @@ class _ExprParser:
             # permissive superset, documented), and the ML
             # similarity-merging stage is the same refused divergence.
             need(1)
-            from tweets_elastic_spark.plans.aggs import categorize_key
             return categorize_key(a[0])
         if fn == "TO_DATETIME":
             # TO_DATETIME(string|long): ISO-8601-ish strings via
@@ -1043,9 +1055,6 @@ class _ExprParser:
             # validation gate — malformed addresses become NULL (ES
             # raises a per-value warning and nulls the result)
             need(1)
-            from tweets_elastic_spark.functions.ip import (
-                ipv4_long, ipv6_groups,
-            )
             return F.when(
                 ipv4_long(a[0]).isNotNull()
                 | ipv6_groups(a[0]).isNotNull(),
@@ -1809,36 +1818,59 @@ def esql(
     return df
 
 
+def _match_builder(df: DataFrame, analyzers, tokens_cols, bm25_stats_for):
+    """(field, text, opts) → (predicate Column, score Column) for ES-SQL
+    and ES|QL ``MATCH``, compiled through the query-DSL nodes so MATCH and
+    DSL match can never drift: ``bm25_match`` (plans/search.py) picks
+    BM25Match when the field has analyzer + tokens_col bindings and a
+    stats provider, else the overlap/keyword Match (constant score)."""
+    spark = df.sparkSession
+    analyzers = analyzers or {}
+    tokens_cols = tokens_cols or {}
+
+    def make(field: str, text: str, opts: dict[str, str]):
+        bad = set(opts) - {"operator", "minimum_should_match"}
+        if bad:
+            raise ValueError(
+                f"ES SQL: unsupported MATCH options {sorted(bad)} "
+                "(operator / minimum_should_match)"
+            )
+        operator = opts.get("operator", "or")
+        msm = int(opts.get("minimum_should_match", 0))
+        node = bm25_match(
+            field, text, analyzers, tokens_cols, bm25_stats_for,
+            operator=operator, minimum_should_match=msm,
+        )
+        if node is None:
+            # keyword equality (no analyzer binding) or overlap matching —
+            # ES's non-relevance semantics; score is the constant 1.0
+            node = Match(
+                field, text, analyzer=analyzers.get(field),
+                tokens_col=tokens_cols.get(field),
+                operator=operator, minimum_should_match=msm,
+            )
+        pred = node.predicate(spark, F.col)
+        score = node.score(spark, F.col)
+        if not node.CONSTANT_SCORE:
+            # a clause only contributes when IT matches (ES bool scoring);
+            # constant-score nodes already gate inside Query.score
+            score = F.when(pred, score).otherwise(F.lit(0.0))
+        return pred, score
+
+    return make
+
+
 def _qstr_builder(df: DataFrame, analyzers, tokens_cols):
     """text → (predicate, score) through plans/query_string.py — the
     QSTR() full-text function (8.16). Bare terms resolve to the single
     analyzer-bound field (the stand-in for ES's index default_field
     setting); with zero or several bindings the query must field-scope
     every term, enforced loudly by the parser receiving no default."""
-    from tweets_elastic_spark.plans.query_string import (
-        parse_query_string,
-    )
-
     spark = df.sparkSession
     analyzers = analyzers or {}
     tokens_cols = tokens_cols or {}
 
     _SENTINEL = "__qstr_no_default_field__"
-
-    def _uses(node, field_name: str) -> bool:
-        import dataclasses
-
-        if not dataclasses.is_dataclass(node):
-            return False
-        for f in dataclasses.fields(node):
-            v = getattr(node, f.name)
-            if f.name == "field" and v == field_name:
-                return True
-            for child in v if isinstance(v, (list, tuple)) else [v]:
-                if dataclasses.is_dataclass(child) and _uses(
-                        child, field_name):
-                    return True
-        return False
 
     def make(text: str):
         default_field = (
@@ -1848,7 +1880,9 @@ def _qstr_builder(df: DataFrame, analyzers, tokens_cols):
             text, default_field=default_field,
             analyzers=analyzers, tokens_cols=tokens_cols,
         )
-        if default_field == _SENTINEL and _uses(q, _SENTINEL):
+        if default_field == _SENTINEL and any(
+                getattr(n, "field", None) == _SENTINEL
+                for n in query_nodes(q)):
             raise ValueError(
                 "ES|QL: QSTR has a bare (unscoped) term but no single "
                 "analyzed-field binding to resolve it against (ES's "
@@ -1864,8 +1898,6 @@ def _kql_builder(df: DataFrame, analyzers, tokens_cols):
     """text → predicate through plans/query_string.parse_kql — the
     KQL() full-text function (8.17). Filter context: no score. Bare
     terms resolve to the single analyzer-bound field like QSTR."""
-    from tweets_elastic_spark.plans.query_string import parse_kql
-
     spark = df.sparkSession
     analyzers = analyzers or {}
     tokens_cols = tokens_cols or {}
@@ -1949,8 +1981,6 @@ def _run_stages(
         toks, raws = _tokenize(stage)
         p = _ExprParser(toks, raws)
         if p.eat_kw("WHERE"):
-            from tweets_elastic_spark.plans.essql import _match_builder
-
             p.make_match = _match_builder(
                 df, analyzers, tokens_cols, bm25_stats_for)
             p.make_qstr = _qstr_builder(df, analyzers, tokens_cols)
@@ -2140,7 +2170,6 @@ def _run_stages(
                     raise ValueError("ES|QL: SAMPLE seed must be an "
                                      "integer")
                 seed = int(v)
-            from tweets_elastic_spark.functions.hashing import hash60
 
             key = F.concat_ws(
                 "\x1f",
@@ -2577,7 +2606,6 @@ def _agg_column(fn: str, arg, q, filt=None, w=None) -> Column:
     if fn == "MEDIAN_ABSOLUTE_DEVIATION":
         # exact MAD (upstream: t-digest estimate) — shared with the
         # aggs front-end's metric; one sorted-array aggregate
-        from tweets_elastic_spark.plans.aggs import mad_expr
 
         return mad_expr(a.cast("double"), ov=ov)
     return ov({

@@ -33,11 +33,13 @@ verbatim on DuckDB/Postgres, which is exactly how the oracle checks it):
   WHERE predicate (options = ``;``-separated ``operator=and`` /
   ``minimum_should_match=n``) and ``SCORE()`` in the select list (alias
   required) / ORDER BY. A MATCH compiles to the SAME nodes the query DSL
-  uses (plans/search.py): ``BM25Match`` when the field has analyzer +
-  token-column bindings and a ``bm25_stats_for`` provider, else the
-  overlap/keyword ``Match`` (constant score 1.0 — ES's non-scored
-  semantics). ``SCORE()`` is the sum of the per-MATCH clause scores, each
-  0 when that clause doesn't match the row (ES bool scoring). MATCH
+  uses, through the builder ES|QL's MATCH shares (plans/esql.py
+  ``_match_builder``), which asks plans/search.py's ``bm25_match`` for the
+  choice: ``BM25Match`` when the field has analyzer + token-column
+  bindings and a ``bm25_stats_for`` provider, else the overlap/keyword
+  ``Match`` (constant score 1.0 — ES's non-scored semantics).
+  ``SCORE()`` is the sum of the per-MATCH clause scores, each 0 when
+  that clause doesn't match the row (ES bool scoring). MATCH
   without bindings on an analyzed query, or SCORE() with no MATCH in
   WHERE, raises loudly.
 
@@ -67,6 +69,8 @@ import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tweets_elastic_spark.plans.esql import _match_builder, _qstr_builder
 
 __all__ = ["es_sql"]
 
@@ -572,53 +576,6 @@ def _agg_col(fn: str, arg, digits: int | None, alias: str) -> Column:
     return out.alias(alias)
 
 
-def _match_builder(df: DataFrame, analyzers, tokens_cols, bm25_stats_for):
-    """(field, text, opts) → (predicate Column, score Column), compiled
-    through the query-DSL nodes so ES-SQL MATCH and DSL match can never
-    drift: BM25Match when the field has analyzer + tokens_col bindings and
-    a stats provider, else the overlap/keyword Match (constant score)."""
-    from tweets_elastic_spark.plans.search import BM25Match, Match
-
-    spark = df.sparkSession
-    analyzers = analyzers or {}
-    tokens_cols = tokens_cols or {}
-
-    def make(field: str, text: str, opts: dict[str, str]):
-        bad = set(opts) - {"operator", "minimum_should_match"}
-        if bad:
-            raise ValueError(
-                f"ES SQL: unsupported MATCH options {sorted(bad)} "
-                "(operator / minimum_should_match)"
-            )
-        operator = opts.get("operator", "or")
-        msm = int(opts.get("minimum_should_match", 0))
-        analyzer = analyzers.get(field)
-        tok_col = tokens_cols.get(field)
-        if (analyzer is not None and tok_col is not None
-                and bm25_stats_for is not None):
-            node = BM25Match(
-                field, text, analyzer=analyzer, tokens_col=tok_col,
-                stats=bm25_stats_for(field, tok_col, analyzer, text),
-                operator=operator, minimum_should_match=msm,
-            )
-        else:
-            # keyword equality (no analyzer binding) or overlap matching —
-            # ES's non-relevance semantics; score is the constant 1.0
-            node = Match(
-                field, text, analyzer=analyzer, tokens_col=tok_col,
-                operator=operator, minimum_should_match=msm,
-            )
-        pred = node.predicate(spark, F.col)
-        score = node.score(spark, F.col)
-        if not node.CONSTANT_SCORE:
-            # a clause only contributes when IT matches (ES bool scoring);
-            # constant-score nodes already gate inside Query.score
-            score = F.when(pred, score).otherwise(F.lit(0.0))
-        return pred, score
-
-    return make
-
-
 def es_sql(
     sql: str,
     tables: dict[str, DataFrame],
@@ -672,8 +629,6 @@ def es_sql(
         )
     df = tables[tname]
     p.make_match = _match_builder(df, analyzers, tokens_cols, bm25_stats_for)
-    from tweets_elastic_spark.plans.esql import _qstr_builder
-
     p.make_query = _qstr_builder(df, analyzers, tokens_cols)
 
     if p.accept_kw("WHERE"):

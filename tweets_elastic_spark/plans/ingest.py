@@ -45,6 +45,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.plans.search import compile_painless
+
 __all__ = ["apply_ingest_pipeline", "grok_to_regex"]
 
 _GROK_SYNTAX = {
@@ -184,8 +186,6 @@ def apply_ingest_pipeline(
                     c = c.cast(cast_t)
                 df = df.withColumn(name, c)
         elif kind == "script":
-            from tweets_elastic_spark.plans.search import compile_painless
-
             m = re.match(
                 r"^\s*ctx\.([A-Za-z_][A-Za-z0-9_]*)\s*=\s*(.+?)\s*;?\s*$",
                 body["source"], flags=re.DOTALL,

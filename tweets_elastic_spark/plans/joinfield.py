@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.plans.aggs import _metric_cols
 from tweets_elastic_spark.plans.search import (
     MatchAll,
     Query,
@@ -158,8 +159,6 @@ def children_agg(
     one groupBy evaluates every metric. ``aggs`` uses the ordinary metric
     DSL ({name: {kind: {field: ...}}}); doc_count counts CHILDREN, ES's
     contract for the children agg."""
-    from tweets_elastic_spark.plans.aggs import _metric_cols
-
     keyed_parents = parents.select(
         F.col(parent_key).alias("__pk"), F.col(group_by)
     ).filter(F.col(group_by).isNotNull())
@@ -190,8 +189,6 @@ def parent_agg(
     parent keys (broadcast when dimension-sized), one groupBy.
     ``doc_count`` counts PARENTS; ``aggs`` metrics evaluate over the
     deduped parent rows."""
-    from tweets_elastic_spark.plans.aggs import _metric_cols
-
     pairs = (
         children.select(
             F.col(group_by), F.col(child_key).alias("__pk")

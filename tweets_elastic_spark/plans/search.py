@@ -18,12 +18,19 @@ Scoring fidelity (SURVEY §7 risk 4): the default implements exactly what
 the reference exercises — constant ``weight`` per should-clause
 (elastic_queries.json:20), keyword equality inside ``nested`` scopes
 (domain.name is a keyword field, mapping.json:77), analyzed token-overlap
-for text fields. Real relevance is ``BM25Match`` (Okapi BM25 over
-materialized token columns, corpus- or index-backed stats), reachable
-from the JSON DSL too: ``from_es_json(..., bm25_stats_for=...)`` compiles
-bound ``match``/``multi_match`` clauses to BM25 — what ES does implicitly
-for text fields — while the reference artifact's tree stays
-byte-identical.
+for text fields. Real relevance is ``BM25Match``, the one BM25 node:
+Okapi BM25 over one or more weighted materialized token columns — one for
+``match``, several for the ``combined_fields`` pseudo-field — priced by
+one statistics contract, ``bm25_stats`` behind a ``(columns, analyzer,
+text)`` provider (corpus- or index-backed). ``bm25_match`` is the one
+place that chooses BM25 over token overlap for a clause; the JSON DSL
+(``from_es_json(..., bm25_stats_for=...)``) and the ES-SQL / ES|QL
+``MATCH`` builder both ask it, so bound ``match``/``multi_match`` clauses
+score with BM25 — what ES does implicitly for text fields — while the
+reference artifact's tree stays byte-identical. ``multi_match`` has no
+node of its own: its legs combine through ``DisMax`` (best_fields) or a
+score-summing ``Bool`` (most_fields), over BM25 or overlap legs alike;
+``Match`` and ``BM25Match`` share one and/or/minimum_should_match gate.
 
 Match semantics for text fields mirror ES's two-sided analysis: the query
 string is analyzed with the target field's analyzer at query time
@@ -36,12 +43,19 @@ with full predicate pushdown on the non-analyzed filters next to it.
 
 from __future__ import annotations
 
+import dataclasses
+import math
+from collections.abc import Iterator
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tweets_elastic_spark.functions.analyzers import analyze, analyze_text
+from tweets_elastic_spark.functions.analyzers import (
+    analyze,
+    analyze_text,
+    pin_computed,
+)
 from tweets_elastic_spark.functions.vectors import col_sql, cosine, vec_sql
 
 # A resolver maps a field path ("author.following_count", "domain.name") to
@@ -158,8 +172,7 @@ class Match(Query):
         )
 
     def predicate(self, spark, resolve) -> Column:
-        if self.operator not in ("or", "and"):
-            raise ValueError(f"match operator must be 'or'/'and', got {self.operator!r}")
+        _check_operator(self.operator)
         if self.analyzer is None:
             return resolve(self.field) == F.lit(self.text)
         query_tokens = analyze_text(spark, self.text, self.analyzer)
@@ -172,28 +185,16 @@ class Match(Query):
         )
 
         def pred_over(ft: Column) -> Column:
-            if self.operator == "and":
-                out = self._token_pred(ft, query_tokens[0])
-                for t in query_tokens[1:]:
-                    out = out & self._token_pred(ft, t)
-                return out
-            if self.minimum_should_match > 1:
-                matched = sum(
-                    (
-                        self._token_pred(ft, t).cast("int")
-                        for t in query_tokens
-                    ),
-                    start=F.lit(0),
-                )
-                return matched >= self.minimum_should_match
-            if self.fuzziness is None:
+            def overlap() -> Column:
                 return F.arrays_overlap(
                     ft, F.array(*[F.lit(t) for t in query_tokens])
                 )
-            out = self._token_pred(ft, query_tokens[0])
-            for t in query_tokens[1:]:
-                out = out | self._token_pred(ft, t)
-            return out
+
+            return _token_gate(
+                lambda t: self._token_pred(ft, t), query_tokens,
+                self.operator, self.minimum_should_match,
+                overlap if self.fuzziness is None else None,
+            )
 
         if self.tokens_col is None and len(query_tokens) > 1:
             # inline analysis referenced once per query token on the
@@ -205,6 +206,42 @@ class Match(Query):
                 F.transform(F.array(field_tokens), pred_over), 1
             )
         return pred_over(field_tokens)
+
+
+def _check_operator(operator: str) -> None:
+    if operator not in ("or", "and"):
+        raise ValueError(f"match operator must be 'or'/'and', got {operator!r}")
+
+
+def _token_gate(contains, tokens: list[str], operator: str,
+                minimum_should_match: int, overlap=None) -> Column:
+    """The candidate gate of a text match over its analyzed query tokens,
+    shared by ``Match`` and ``BM25Match`` (ES: the match options pick the
+    candidate set; BM25 then scores it). ``contains(t)`` is the per-token
+    predicate:
+
+    * ``operator="and"``: every token present — a conjunction;
+    * ``minimum_should_match=n`` (n > 1): at least n tokens present — a
+      sum of matched-token indicators;
+    * ``operator="or"``: any token present — ``overlap()`` when the caller
+      has one expression for it (``arrays_overlap`` over one token
+      column), else a disjunction."""
+    if operator == "and":
+        out = contains(tokens[0])
+        for t in tokens[1:]:
+            out = out & contains(t)
+        return out
+    if minimum_should_match > 1:
+        matched = sum(
+            (contains(t).cast("int") for t in tokens), start=F.lit(0)
+        )
+        return matched >= minimum_should_match
+    if overlap is not None:
+        return overlap()
+    out = contains(tokens[0])
+    for t in tokens[1:]:
+        out = out | contains(t)
+    return out
 
 
 @dataclass
@@ -390,84 +427,6 @@ class Ids(Query):
 
     def predicate(self, spark, resolve) -> Column:
         return resolve(self.id_field).isin(list(self.values))
-
-
-@dataclass
-class MultiMatch(Query):
-    """ES ``multi_match``: the query text runs against several fields,
-    each analyzed by its OWN mapping analyzer; a document matches if any
-    field matches. ``type`` picks the score combination: ``best_fields``
-    (the default) takes the best single field — greatest(boost_i ·
-    matched_i); ``most_fields`` SUMS the per-field scores, ES's shape for
-    "the same text analyzed different ways, every matching variant adds
-    evidence". Fields without an analyzer binding are keywords →
-    whole-string equality, exactly the per-field Match semantics. Either
-    way the score is one codegen'd expression, no per-field subquery."""
-
-    CONSTANT_SCORE = False
-
-    fields: list  # [(field, boost), ...]
-    text: str
-    analyzers: dict
-    tokens_cols: dict
-    type: str = "best_fields"
-    tie_breaker: float = 0.0
-
-    def __post_init__(self):
-        if self.type not in ("best_fields", "most_fields"):
-            raise ValueError(
-                f"unsupported multi_match type: {self.type!r} "
-                "(best_fields/most_fields)"
-            )
-        if not (0.0 <= self.tie_breaker <= 1.0):
-            raise ValueError(
-                f"tie_breaker must be in [0, 1], got {self.tie_breaker}"
-            )
-        if self.tie_breaker and self.type != "best_fields":
-            raise ValueError(
-                "tie_breaker applies to best_fields (most_fields already "
-                "sums every matching leg)"
-            )
-
-    def _legs(self, spark, resolve) -> list[tuple[Column, float]]:
-        legs = []
-        for field, boost in self.fields:
-            m = Match(
-                field, self.text,
-                analyzer=self.analyzers.get(field),
-                tokens_col=self.tokens_cols.get(field),
-            )
-            legs.append((m.predicate(spark, resolve), float(boost)))
-        return legs
-
-    def predicate(self, spark, resolve) -> Column:
-        legs = self._legs(spark, resolve)
-        out = legs[0][0]
-        for p, _ in legs[1:]:
-            out = out | p
-        return out
-
-    def score(self, spark, resolve) -> Column:
-        scored = [
-            F.when(p, F.lit(b)).otherwise(F.lit(0.0))
-            for p, b in self._legs(spark, resolve)
-        ]
-        if len(scored) == 1:
-            return scored[0]
-        if self.type == "most_fields":
-            total = scored[0]
-            for s in scored[1:]:
-                total = total + s
-            return total
-        best = F.greatest(*scored)
-        if self.tie_breaker == 0.0:
-            return best
-        # ES best_fields tie_breaker: best + tb · (sum − best), DisMax's
-        # combination over the per-field legs
-        total = scored[0]
-        for s in scored[1:]:
-            total = total + s
-        return best + F.lit(float(self.tie_breaker)) * (total - best)
 
 
 @dataclass
@@ -1190,12 +1149,38 @@ class Bm25Stats:
     df: dict[str, float]
 
 
-def bm25_stats(df: DataFrame, tokens_col: str, query_tokens: list[str]) -> Bm25Stats:
+def _weighted_sum(parts) -> Column:
+    """Σ weight · column over ``(Column, weight)`` pairs; a weight-1 term
+    is not multiplied, so one weight-1 column stays the bare column."""
+    out = None
+    for c, w in parts:
+        c = c if w == 1.0 else c * F.lit(float(w))
+        out = c if out is None else out + c
+    return out
+
+
+def _any_contains(cols: list[Column], t: str) -> Column:
+    out = F.array_contains(cols[0], t)
+    for c in cols[1:]:
+        out = out | F.array_contains(c, t)
+    return out
+
+
+def bm25_stats(df: DataFrame, columns, query_tokens: list[str]) -> Bm25Stats:
+    """BM25 statistics over ``columns``, ``(tokens_col, weight)`` pairs:
+    one column at weight 1 for a field's ``match``, several for the
+    ``combined_fields`` pseudo-field, whose doc length is Σ weight·len and
+    whose per-token df counts docs containing the token in ANY column. One
+    aggregation job. The union df is EXACT — Lucene's CombinedFieldQuery
+    approximates it by merging per-field term stats because the inverted
+    index can't see the union; a scan-side engine can."""
+    cols = [F.col(c) for c, _ in columns]
     aggs = [
         F.count(F.lit(1)).cast("double").alias("_n"),
-        F.avg(F.size(F.col(tokens_col))).alias("_avgdl"),
+        F.avg(_weighted_sum((F.size(F.col(c)), w) for c, w in columns))
+        .alias("_avgdl"),
     ] + [
-        F.sum(F.array_contains(F.col(tokens_col), t).cast("long"))
+        F.sum(_any_contains(cols, t).cast("long"))
         .cast("double")
         .alias(f"_df_{i}")
         for i, t in enumerate(query_tokens)
@@ -1210,18 +1195,18 @@ def bm25_stats(df: DataFrame, tokens_col: str, query_tokens: list[str]) -> Bm25S
 
 def corpus_bm25_provider(spark: SparkSession, docs: DataFrame):
     """A ``bm25_stats_for`` provider (see ``from_es_json``) that computes
-    corpus statistics with one aggregation over ``docs`` — the inline path
-    when no materialized index exists. Memoized per (tokens_col, analyzer,
+    ``bm25_stats`` with one aggregation over ``docs`` — the inline path
+    when no materialized index exists. Memoized per (columns, analyzer,
     text): a DSL tree reusing the same match in scoring and filter context
     pays for ONE stats job. At index scale prefer
     ``indexing.index_bm25_provider`` (term-dictionary lookup, no scan)."""
     cache: dict[tuple, Bm25Stats] = {}
 
-    def provider(field: str, tokens_col: str, analyzer: str, text: str) -> Bm25Stats:
-        key = (tokens_col, analyzer, text)
+    def provider(columns, analyzer: str, text: str) -> Bm25Stats:
+        key = (tuple(columns), analyzer, text)
         if key not in cache:
             cache[key] = bm25_stats(
-                docs, tokens_col, analyze_text(spark, text, analyzer)
+                docs, columns, analyze_text(spark, text, analyzer)
             )
         return cache[key]
 
@@ -1230,29 +1215,36 @@ def corpus_bm25_provider(spark: SparkSession, docs: DataFrame):
 
 @dataclass
 class BM25Match(Query):
-    """Q5 with real relevance: Okapi BM25 over a materialized token column
+    """Q5 with real relevance: Okapi BM25 over materialized token columns
     (the scoring ES applies to ``match``, which v1 scoped to constant
-    weights — SURVEY §7 risk 4). Per query token t:
+    weights — SURVEY §7 risk 4). ``fields`` holds ``(field, tokens_col,
+    weight)`` triples: ONE at weight 1 for ``match``, each ``multi_match``
+    leg and ES-SQL/ES|QL ``MATCH``; several for ``combined_fields`` /
+    ``cross_fields``, ES's BM25F pseudo-field whose term frequency and
+    length are the weighted sums over the columns. Per query token t:
 
-        idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))          (Lucene idf)
-        tf_sat = tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))  (saturation)
-        score  = Σ idf(t) · tf_sat(t, doc)
+        tf(t)    = Σ_f weight_f · tf_f(t)
+        dl       = Σ_f weight_f · dl_f
+        idf(t)   = ln(1 + (N - df + 0.5)/(df + 0.5))           (Lucene idf)
+        tf_sat   = tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))   (saturation)
+        score    = Σ idf(t) · tf_sat(t, doc)
 
-    All per-doc math is JVM Column expressions over the token array
+    All per-doc math is JVM Column expressions over the token arrays
     (``size(filter(tokens, = t))``); corpus stats arrive as literals from
-    ``bm25_stats``. Absent tokens contribute 0 naturally (tf = 0).
+    ``bm25_stats`` (for several columns: union df, weighted avgdl). Absent
+    tokens contribute 0 naturally (tf = 0). ES requires the fields of a
+    ``combined_fields`` to share one analyzer: one ``analyzer`` here.
 
     ``operator``/``minimum_should_match`` gate WHICH documents match with
-    the same semantics as ``Match`` (ES: match options pick the candidate
-    set; BM25 then scores the candidates); ``boost`` multiplies the final
-    score (the ``field^boost`` convention ``multi_match`` compiles to)."""
+    the same semantics as ``Match`` (a token is present when any column
+    holds it); ``boost`` multiplies the final score (the ``field^boost``
+    convention ``multi_match`` compiles to)."""
 
     CONSTANT_SCORE = False
 
-    field: str
+    fields: list[tuple[str, str, float]]  # (field, tokens_col, weight)
     text: str
     analyzer: str
-    tokens_col: str
     stats: Bm25Stats
     k1: float = 1.2
     b: float = 0.75
@@ -1264,39 +1256,33 @@ class BM25Match(Query):
         return analyze_text(spark, self.text, self.analyzer)
 
     def predicate(self, spark, resolve) -> Column:
-        if self.operator not in ("or", "and"):
-            raise ValueError(
-                f"match operator must be 'or'/'and', got {self.operator!r}"
-            )
+        _check_operator(self.operator)
         qt = self._query_tokens(spark)
         if not qt:
             return F.lit(False)
-        toks = resolve(self.tokens_col)
-        if self.operator == "and":
-            out = F.array_contains(toks, qt[0])
-            for t in qt[1:]:
-                out = out & F.array_contains(toks, t)
-            return out
-        if self.minimum_should_match > 1:
-            matched = sum(
-                (F.array_contains(toks, t).cast("int") for t in qt),
-                start=F.lit(0),
-            )
-            return matched >= self.minimum_should_match
-        return F.arrays_overlap(toks, F.array(*[F.lit(t) for t in qt]))
+        cols = [resolve(c) for _, c, _ in self.fields]
+
+        def overlap() -> Column:
+            return F.arrays_overlap(cols[0], F.array(*[F.lit(t) for t in qt]))
+
+        return _token_gate(
+            lambda t: _any_contains(cols, t), qt, self.operator,
+            self.minimum_should_match, overlap if len(cols) == 1 else None,
+        )
 
     def score(self, spark, resolve) -> Column:
-        import math
-
-        toks = resolve(self.tokens_col)
-        dl = F.size(toks).cast("double")
+        cols = [(resolve(c), w) for _, c, w in self.fields]
+        dl = _weighted_sum((F.size(c).cast("double"), w) for c, w in cols)
         total = F.lit(0.0)
         for t in self._query_tokens(spark):
             df_t = self.stats.df.get(t, 0.0)
             idf = math.log(
                 1.0 + (self.stats.n_docs - df_t + 0.5) / (df_t + 0.5)
             )
-            tf = F.size(F.filter(toks, lambda x: x == F.lit(t))).cast("double")
+            tf = _weighted_sum(
+                (F.size(F.filter(c, lambda x: x == F.lit(t))).cast("double"), w)
+                for c, w in cols
+            )
             sat = (tf * F.lit(self.k1 + 1.0)) / (
                 tf
                 + F.lit(self.k1)
@@ -1308,150 +1294,40 @@ class BM25Match(Query):
         return total
 
 
-def combined_bm25_stats(
-    df: DataFrame, fields: list[tuple[str, float]], query_tokens: list[str]
-) -> Bm25Stats:
-    """Corpus statistics for the ``combined_fields`` pseudo-field: doc
-    length = Σ_f weight_f·len_f, and per-token df = docs containing the
-    token in ANY field. One aggregation job, like ``bm25_stats``. The
-    union-df is EXACT — Lucene's CombinedFieldQuery approximates the
-    pseudo-df by merging per-field term stats because the inverted index
-    can't see the union; a scan-side engine can, a documented
-    strictly-more-principled divergence."""
-    dl = None
-    for col_name, w in fields:
-        term = F.size(F.col(col_name)).cast("double") * F.lit(float(w))
-        dl = term if dl is None else dl + term
-    aggs = [
-        F.count(F.lit(1)).cast("double").alias("_n"),
-        F.avg(dl).alias("_avgdl"),
-    ]
-    for i, t in enumerate(query_tokens):
-        any_f = None
-        for col_name, _ in fields:
-            c = F.array_contains(F.col(col_name), t)
-            any_f = c if any_f is None else (any_f | c)
-        aggs.append(
-            F.sum(any_f.cast("long")).cast("double").alias(f"_df_{i}")
-        )
-    row = df.agg(*aggs).head()
-    return Bm25Stats(
-        n_docs=float(row["_n"]),
-        avgdl=float(row["_avgdl"]),
-        df={t: float(row[f"_df_{i}"]) for i, t in enumerate(query_tokens)},
+def bm25_match(
+    field: str,
+    text: str,
+    analyzers: dict[str, str],
+    tokens_cols: dict[str, str],
+    bm25_stats_for,
+    *,
+    operator: str = "or",
+    minimum_should_match: int = 0,
+    fuzziness: object = None,
+    nested_paths=frozenset(),
+    boost: float = 1.0,
+) -> BM25Match | None:
+    """The one choice between BM25 and token-overlap scoring for a text
+    clause on ``field`` (``from_es_json``'s ``match``/``multi_match`` and
+    the ES-SQL / ES|QL ``MATCH`` builder all ask it): a ``BM25Match`` when
+    a stats provider is given and the field has BOTH an analyzer and a
+    token-column binding — what ES does for text fields — else None, and
+    the caller builds the overlap/keyword ``Match``. Deliberate fallbacks
+    to overlap scoring, each the documented v1 semantics: fuzziness (ES
+    BM25-scores fuzzy expansions per expanded term — needs the term
+    dictionary) and fields under a nested path (ES nested scoring
+    modes)."""
+    analyzer, tok_col = analyzers.get(field), tokens_cols.get(field)
+    if (bm25_stats_for is None or analyzer is None or tok_col is None
+            or fuzziness is not None
+            or any(field.startswith(np + ".") for np in nested_paths)):
+        return None
+    return BM25Match(
+        [(field, tok_col, 1.0)], text, analyzer,
+        stats=bm25_stats_for(((tok_col, 1.0),), analyzer, text),
+        operator=operator, minimum_should_match=minimum_should_match,
+        boost=boost,
     )
-
-
-def corpus_combined_provider(spark: SparkSession, docs: DataFrame):
-    """A ``combined_stats_for`` provider for ``from_es_json`` computing
-    combined-pseudo-field statistics with one aggregation over ``docs``
-    (memoized per (fields, analyzer, text), like ``corpus_bm25_provider``).
-    At index scale the union-df belongs with the segment stats, same as
-    the per-field term dictionary."""
-    cache: dict[tuple, Bm25Stats] = {}
-
-    def provider(tok_fields, analyzer: str, text: str) -> Bm25Stats:
-        key = (tuple(tok_fields), analyzer, text)
-        if key not in cache:
-            cache[key] = combined_bm25_stats(
-                docs, list(tok_fields), analyze_text(spark, text, analyzer)
-            )
-        return cache[key]
-
-    return provider
-
-
-@dataclass
-class CombinedFields(Query):
-    """ES ``combined_fields``: BM25F-style scoring that treats several
-    text fields as ONE combined field (the principled multi-field query —
-    vs multi_match's per-field score combination):
-
-        tf_c(t)  = Σ_f weight_f · tf_f(t)
-        dl_c     = Σ_f weight_f · dl_f
-        score    = Σ_t idf(union_df) · tf_c·(k1+1) /
-                   (tf_c + k1·(1 - b + b·dl_c/avgdl_c))
-
-    ES requires all fields to share one analyzer; enforced at compile.
-    Per-doc math is JVM Column expressions over the token arrays; corpus
-    stats arrive as literals from ``combined_bm25_stats``. operator /
-    minimum_should_match gate candidates on presence in ANY field."""
-
-    CONSTANT_SCORE = False
-
-    fields: list[tuple[str, float]]  # (tokens_col, weight)
-    text: str
-    analyzer: str
-    stats: Bm25Stats
-    k1: float = 1.2
-    b: float = 0.75
-    operator: str = "or"
-    minimum_should_match: int = 0
-    boost: float = 1.0
-
-    def _query_tokens(self, spark) -> list[str]:
-        return analyze_text(spark, self.text, self.analyzer)
-
-    def _contains(self, resolve, t: str) -> Column:
-        out = None
-        for col_name, _ in self.fields:
-            c = F.array_contains(resolve(col_name), t)
-            out = c if out is None else (out | c)
-        return out
-
-    def predicate(self, spark, resolve) -> Column:
-        if self.operator not in ("or", "and"):
-            raise ValueError(
-                f"combined_fields operator must be 'or'/'and', "
-                f"got {self.operator!r}"
-            )
-        qt = self._query_tokens(spark)
-        if not qt:
-            return F.lit(False)
-        per_tok = [self._contains(resolve, t) for t in qt]
-        if self.operator == "and":
-            out = per_tok[0]
-            for c in per_tok[1:]:
-                out = out & c
-            return out
-        if self.minimum_should_match > 1:
-            matched = sum((c.cast("int") for c in per_tok), start=F.lit(0))
-            return matched >= self.minimum_should_match
-        out = per_tok[0]
-        for c in per_tok[1:]:
-            out = out | c
-        return out
-
-    def score(self, spark, resolve) -> Column:
-        import math
-
-        dl = None
-        for col_name, w in self.fields:
-            term = F.size(resolve(col_name)).cast("double") * F.lit(float(w))
-            dl = term if dl is None else dl + term
-        total = F.lit(0.0)
-        for t in self._query_tokens(spark):
-            df_t = self.stats.df.get(t, 0.0)
-            idf = math.log(
-                1.0 + (self.stats.n_docs - df_t + 0.5) / (df_t + 0.5)
-            )
-            tf = None
-            for col_name, w in self.fields:
-                c = (
-                    F.size(F.filter(resolve(col_name), lambda x: x == F.lit(t)))
-                    .cast("double") * F.lit(float(w))
-                )
-                tf = c if tf is None else tf + c
-            sat = (tf * F.lit(self.k1 + 1.0)) / (
-                tf
-                + F.lit(self.k1)
-                * (F.lit(1.0 - self.b)
-                   + F.lit(self.b) * dl / F.lit(self.stats.avgdl))
-            )
-            total = total + F.lit(idf) * sat
-        if self.boost != 1.0:
-            total = total * F.lit(float(self.boost))
-        return total
 
 
 @dataclass
@@ -1885,8 +1761,6 @@ class DecayFunction:
     decay: float = 0.5
 
     def value(self, spark, resolve) -> Column:
-        import math
-
         if self.kind not in ("gauss", "exp", "linear"):
             raise ValueError(f"unsupported decay function: {self.kind!r}")
         if not (0.0 < self.decay < 1.0) or self.scale <= 0:
@@ -2352,33 +2226,22 @@ def _rebind_analyzed(query: Query, bind) -> Query:
     unchanged. Pure plan rewrite — match/score values are identical, the
     analyzer chain just runs once per row instead of once per reference
     (guide §4.4)."""
-    import dataclasses as _dc
-
     if isinstance(
         query, (Match, MatchPhrase, MatchPhrasePrefix, MatchBoolPrefix)
     ):
         if query.analyzer is not None and query.tokens_col is None:
-            return _dc.replace(
+            return dataclasses.replace(
                 query, tokens_col=bind(query.field, query.analyzer)
             )
         return query
     if isinstance(query, Intervals):
         if query.tokens_col is None:
-            return _dc.replace(
+            return dataclasses.replace(
                 query, tokens_col=bind(query.field, query.analyzer)
             )
         return query
-    if isinstance(query, MultiMatch):
-        new_cols = dict(query.tokens_cols)
-        changed = False
-        for field, _ in query.fields:
-            an = query.analyzers.get(field)
-            if an and not new_cols.get(field):
-                new_cols[field] = bind(field, an)
-                changed = True
-        return _dc.replace(query, tokens_cols=new_cols) if changed else query
     if isinstance(query, Bool):
-        return _dc.replace(
+        return dataclasses.replace(
             query,
             must=[_rebind_analyzed(q, bind) for q in query.must],
             filter=[_rebind_analyzed(q, bind) for q in query.filter],
@@ -2388,33 +2251,33 @@ def _rebind_analyzed(query: Query, bind) -> Query:
             ],
         )
     if isinstance(query, ConstantScore):
-        return _dc.replace(query, filter=_rebind_analyzed(query.filter, bind))
+        return dataclasses.replace(query, filter=_rebind_analyzed(query.filter, bind))
     if isinstance(query, DisMax):
-        return _dc.replace(
+        return dataclasses.replace(
             query, queries=[_rebind_analyzed(q, bind) for q in query.queries]
         )
     if isinstance(query, Boosting):
-        return _dc.replace(
+        return dataclasses.replace(
             query,
             positive=_rebind_analyzed(query.positive, bind),
             negative=_rebind_analyzed(query.negative, bind),
         )
     if isinstance(query, FunctionScore):
         functions = [
-            _dc.replace(fn, filter=_rebind_analyzed(fn.filter, bind))
+            dataclasses.replace(fn, filter=_rebind_analyzed(fn.filter, bind))
             if isinstance(fn, WeightFunction) and fn.filter is not None
             else fn
             for fn in query.functions
         ]
-        return _dc.replace(
+        return dataclasses.replace(
             query,
             query=_rebind_analyzed(query.query, bind),
             functions=functions,
         )
     if isinstance(query, Pinned):
-        return _dc.replace(query, organic=_rebind_analyzed(query.organic, bind))
+        return dataclasses.replace(query, organic=_rebind_analyzed(query.organic, bind))
     if isinstance(query, ScriptScore):
-        return _dc.replace(query, query=_rebind_analyzed(query.query, bind))
+        return dataclasses.replace(query, query=_rebind_analyzed(query.query, bind))
     return query
 
 
@@ -2433,8 +2296,6 @@ def bind_analyzed_tokens(
     output both the filter and the score read as an attribute. Queries
     that already pass ``tokens_col`` (index-backed token columns) are
     untouched."""
-    from tweets_elastic_spark.functions.analyzers import pin_computed
-
     bound: dict[tuple[str, str], str] = {}
 
     def bind(field: str, analyzer: str) -> str:
@@ -2478,12 +2339,29 @@ def search(
     return out.orderBy(*order).limit(k)
 
 
+def query_nodes(node) -> Iterator[Query]:
+    """Every query node of a tree, ``node`` first, in field order: one walk
+    over the dataclass fields that reaches every container — lists,
+    ``Bool.should``'s (clause, weight) pairs and non-query dataclasses
+    such as a ``function_score``'s filtered functions — without a list of
+    container kinds to keep up to date."""
+    if isinstance(node, (list, tuple)):
+        for child in node:
+            yield from query_nodes(child)
+    elif dataclasses.is_dataclass(node):
+        if isinstance(node, Query):
+            yield node
+        for f in dataclasses.fields(node):
+            yield from query_nodes(getattr(node, f.name))
+
+
 def match_terms_by_field(query: Query, spark) -> dict[str, list[str]]:
-    """Walk a compiled query tree and collect the ANALYZED query terms per
-    field — what ES's highlighter extracts from the query to decide which
-    words to tag. Covers every analyzed-match node (Match, MatchPhrase,
-    BM25Match, MultiMatch legs with an analyzer binding); keyword-equality
-    legs contribute nothing (ES highlights analyzed text fields)."""
+    """Collect the ANALYZED query terms per field over every node of a
+    compiled query tree — what ES's highlighter extracts from the query to
+    decide which words to tag. Covers every analyzed-match node (Match,
+    MatchPhrase, BM25Match — each of a combined_fields' fields) under any
+    container; keyword-equality legs contribute nothing (ES highlights
+    analyzed text fields)."""
     out: dict[str, list[str]] = {}
 
     def add(field: str, tokens: list[str]) -> None:
@@ -2492,23 +2370,12 @@ def match_terms_by_field(query: Query, spark) -> dict[str, list[str]]:
             if t not in seen:
                 seen.append(t)
 
-    def walk(q: Query) -> None:
-        if isinstance(q, (Match, MatchPhrase, BM25Match)) and q.analyzer:
+    for q in query_nodes(query):
+        if isinstance(q, (Match, MatchPhrase)) and q.analyzer:
             add(q.field, analyze_text(spark, q.text, q.analyzer))
-        elif isinstance(q, MultiMatch):
-            for field, _ in q.fields:
-                analyzer = q.analyzers.get(field)
-                if analyzer:
-                    add(field, analyze_text(spark, q.text, analyzer))
-        elif isinstance(q, Bool):
-            for child in q.must + q.filter + q.must_not:
-                walk(child)
-            for child, _ in q.should:
-                walk(child)
-        elif isinstance(q, (FunctionScore, Nested)):
-            walk(q.query)
-
-    walk(query)
+        elif isinstance(q, BM25Match):
+            for field, _, _ in q.fields:
+                add(field, analyze_text(spark, q.text, q.analyzer))
     return out
 
 
@@ -2547,7 +2414,6 @@ def from_es_json(
     nested_paths: set[str] | frozenset[str] = frozenset(),
     id_field: str = "doc_id",
     bm25_stats_for=None,
-    combined_stats_for=None,
     lookup_indices: dict[str, tuple[DataFrame, str]] | None = None,
 ) -> Query:
     """Compile an Elasticsearch query-DSL JSON object into the Query tree —
@@ -2589,48 +2455,44 @@ def from_es_json(
     while a Bool node scores only its should list).
 
     BM25 relevance (ES scores every ``match``/``multi_match`` on a text
-    field with BM25; VERDICT r6 item 1): pass ``bm25_stats_for``, a
-    callable ``(field, tokens_col, analyzer, text) -> Bm25Stats`` (use
-    ``corpus_bm25_provider`` for inline corpora or
-    ``indexing.index_bm25_provider`` for term-dictionary lookups against a
-    materialized index). A ``match`` whose field has BOTH an analyzer and a
-    tokens_col binding then compiles to ``BM25Match`` instead of
-    token-overlap scoring (``operator``/``minimum_should_match`` carry
-    over; they gate the candidate set, BM25 scores it); a ``multi_match``
-    whose fields ALL have both bindings compiles to per-field BM25 legs
-    combined per its ``type`` — ``best_fields`` → ``DisMax``,
-    ``most_fields`` → score-summing ``Bool`` — with ``field^boost``
-    multiplying that field's BM25 score. Everything else is unchanged, so
-    the reference artifact (elastic_queries.json — keyword match inside a
-    nested scope, constant ``weight: 5``) compiles to the IDENTICAL tree
-    with or without a provider (pinned by test). Deliberate fallbacks to
-    overlap scoring, each the documented v1 semantics: fuzziness (ES
-    BM25-scores fuzzy expansions per expanded term — needs the term
-    dictionary), fields under a nested path (ES nested scoring modes), and
-    fields missing either binding (keyword semantics / inline analysis)."""
+    field with BM25): pass ``bm25_stats_for``, the one statistics
+    provider — a callable ``(columns, analyzer, text) -> Bm25Stats``,
+    ``columns`` being the clause's ``(tokens_col, weight)`` pairs: one
+    column at weight 1 for ``match`` and each ``multi_match`` leg, several
+    for ``combined_fields``/``cross_fields``. ``corpus_bm25_provider``
+    aggregates inline corpora for any number of columns;
+    ``indexing.index_bm25_provider`` looks terms up in a materialized
+    index's term dictionary and serves ONE column only — the index stores
+    per-column dictionaries, so the union document frequency a
+    several-column ``combined_fields`` needs is not there (it raises
+    ``ValueError``). ``bm25_match`` makes the BM25-or-overlap choice per
+    field: a ``match`` whose field has BOTH an analyzer and a tokens_col
+    binding compiles to ``BM25Match`` instead of token-overlap scoring
+    (``operator``/``minimum_should_match`` carry over; they gate the
+    candidate set, BM25 scores it); a ``multi_match`` whose fields ALL
+    have both bindings compiles to per-field BM25 legs with
+    ``field^boost`` multiplying that field's BM25 score, otherwise to
+    overlap ``Match`` legs worth their boost — combined per its ``type``
+    either way: ``best_fields`` → ``DisMax`` (over ``ConstantScore``
+    overlap legs), ``most_fields`` → score-summing ``Bool``.
+    ``combined_fields`` requires the provider: no constant-score fallback
+    keeps its meaning. Everything else is unchanged, so the reference
+    artifact (elastic_queries.json — keyword match inside a nested scope,
+    constant ``weight: 5``) compiles to the IDENTICAL tree with or without
+    a provider (pinned by test). Deliberate fallbacks to overlap scoring
+    are listed on ``bm25_match``; inside an explicit ``nested`` clause
+    every match scores by overlap too (ES nested scoring modes)."""
     analyzers = analyzers or {}
     tokens_cols = tokens_cols or {}
     nested_paths = set(nested_paths)
 
-    def bm25_or_none(
-        field: str, text: str, operator: str, msm: int, fuzziness,
-        scope, boost: float = 1.0,
-    ) -> Query | None:
+    def bm25_or_none(field: str, text: str, scope, **opts) -> Query | None:
         """BM25Match for this match clause, or None → caller falls back to
-        the overlap-scoring Match path (row scope only: nested-scoped BM25
-        is a documented fallback, see docstring)."""
-        if bm25_stats_for is None or fuzziness is not None or scope is not None:
+        the overlap-scoring Match path (row scope only)."""
+        if scope is not None:
             return None
-        analyzer, tok_col = analyzers.get(field), tokens_cols.get(field)
-        if analyzer is None or tok_col is None:
-            return None
-        if any(field.startswith(np + ".") for np in nested_paths):
-            return None
-        return BM25Match(
-            field, text, analyzer=analyzer, tokens_col=tok_col,
-            stats=bm25_stats_for(field, tok_col, analyzer, text),
-            operator=operator, minimum_should_match=msm, boost=boost,
-        )
+        return bm25_match(field, text, analyzers, tokens_cols, bm25_stats_for,
+                          nested_paths=nested_paths, **opts)
 
     def leaf_field(field: str, scope: str | None) -> str:
         if scope is not None and field.startswith(scope + "."):
@@ -2876,7 +2738,8 @@ def from_es_json(
                 fuzziness = spec.get("fuzziness")
             else:
                 text, operator, msm, fuzziness = spec, "or", 0, None
-            bm = bm25_or_none(field, text, operator, msm, fuzziness, scope)
+            bm = bm25_or_none(field, text, scope, operator=operator,
+                              minimum_should_match=msm, fuzziness=fuzziness)
             if bm is not None:
                 return bm
             return auto_nest(
@@ -2901,7 +2764,7 @@ def from_es_json(
                 # term-centric score; combined_fields is ES's own
                 # documented successor with principled BM25F semantics —
                 # cross_fields routes there (documented mapping; needs
-                # the combined_stats_for provider like combined_fields).
+                # the bm25_stats_for provider like combined_fields).
                 if body.get("tie_breaker"):
                     raise ValueError(
                         "tie_breaker does not apply to cross_fields "
@@ -2935,40 +2798,40 @@ def from_es_json(
                     "tie_breaker applies to best_fields (most_fields "
                     "already sums every matching leg)"
                 )
-            legs = [
-                bm25_or_none(f, body["query"], "or", 0, None, scope, boost=b)
-                for f, b in fields
-            ]
+            legs = [bm25_or_none(f, body["query"], scope, boost=b)
+                    for f, b in fields]
             if all(leg is not None for leg in legs):
-                # all fields BM25-scorable → per-field legs combined per
-                # ES's type semantics
-                if mm_type == "most_fields":
-                    return Bool(should=[(leg, 1.0) for leg in legs])
-                if len(legs) == 1:
-                    return legs[0]
-                return DisMax(legs, tie_breaker=tb)
-            return MultiMatch(
-                fields, body["query"], analyzers=analyzers,
-                tokens_cols=tokens_cols,
-                type=mm_type, tie_breaker=tb,
-            )
+                # all fields BM25-scorable → per-field legs, boost inside
+                should = [(leg, 1.0) for leg in legs]
+            else:
+                # token overlap: each matching field is worth its boost
+                should = [
+                    (Match(f, body["query"], analyzer=analyzers.get(f),
+                           tokens_col=tokens_cols.get(f)), b)
+                    for f, b in fields
+                ]
+                legs = [ConstantScore(m, b) for m, b in should]
+            # combined per ES's type semantics
+            if mm_type == "most_fields":
+                return Bool(should=should)
+            return DisMax(legs, tie_breaker=tb)
         if kind == "combined_fields":
             # BM25F: fields fused into one pseudo-field before scoring.
-            # Needs corpus stats over the COMBINED field (union df,
-            # weighted length), so a combined_stats_for provider is
-            # required — there is no constant-score fallback that would
-            # preserve the query's meaning, refuse instead.
+            # Needs stats over the COMBINED field (union df, weighted
+            # length), so a provider is required — there is no
+            # constant-score fallback that would preserve the query's
+            # meaning, refuse instead.
             extra = set(body) - {"query", "fields", "operator",
                                  "minimum_should_match", "boost"}
             if extra:
                 raise ValueError(
                     f"unsupported combined_fields options: {sorted(extra)}"
                 )
-            if combined_stats_for is None:
+            if bm25_stats_for is None:
                 raise ValueError(
-                    "combined_fields needs a combined_stats_for provider "
-                    "(corpus_combined_provider / an index-backed one) — "
-                    "its BM25F scoring has no constant-score fallback"
+                    "combined_fields needs a bm25_stats_for provider "
+                    "(corpus_bm25_provider) — its BM25F scoring has no "
+                    "constant-score fallback"
                 )
             cf_fields = []
             for spec in body["fields"]:
@@ -2984,7 +2847,7 @@ def from_es_json(
                     f"{ {f: analyzers.get(f) for f, _ in cf_fields} }"
                 )
             (cf_analyzer,) = cf_analyzers
-            tok_fields = []
+            bm_fields = []
             for f, w in cf_fields:
                 tc = tokens_cols.get(f)
                 if tc is None:
@@ -2992,15 +2855,15 @@ def from_es_json(
                         f"combined_fields field {f!r} has no token-column "
                         "binding"
                     )
-                tok_fields.append((tc, w))
-            msm = int(body.get("minimum_should_match", 0))
-            return CombinedFields(
-                tok_fields, body["query"], analyzer=cf_analyzer,
-                stats=combined_stats_for(
-                    tuple(tok_fields), cf_analyzer, body["query"]
+                bm_fields.append((f, tc, w))
+            return BM25Match(
+                bm_fields, body["query"], cf_analyzer,
+                stats=bm25_stats_for(
+                    tuple((tc, w) for _, tc, w in bm_fields), cf_analyzer,
+                    body["query"],
                 ),
                 operator=body.get("operator", "or"),
-                minimum_should_match=msm,
+                minimum_should_match=int(body.get("minimum_should_match", 0)),
                 boost=float(body.get("boost", 1.0)),
             )
         if kind == "fuzzy":
@@ -3897,8 +3760,6 @@ def more_like_this(
 
     Returns (id, n_matched, score) for the top-k, score = Σ idf rounded
     to 6 dp (summation-order portability)."""
-    from tweets_elastic_spark.functions.analyzers import analyze
-
     toks = docs.select(
         F.col(id_col).alias("_id"),
         F.explode(
@@ -4124,9 +3985,6 @@ def es_retriever(
                 "text_similarity_reranker needs 'retriever', 'field' "
                 "and 'inference_text'"
             )
-        from tweets_elastic_spark.functions.analyzers import (
-            analyze, analyze_text,
-        )
 
         window = int(body.get("rank_window_size", size))
         leg = es_retriever(df, child, id_col=id_col, size=window,

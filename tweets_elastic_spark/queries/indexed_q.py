@@ -75,8 +75,8 @@ def q_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     qtokens = analyze_text(spark, "spark merge", "custom_shingles")
     stats = bm25_stats_from_index(spark, idx, "text__custom_shingles", qtokens)
     match = BM25Match(
-        "text", "spark merge", analyzer="custom_shingles",
-        tokens_col="text__custom_shingles", stats=stats,
+        [("text", "text__custom_shingles", 1.0)], "spark merge",
+        analyzer="custom_shingles", stats=stats,
     )
     query = FunctionScore(
         Bool(should=[(match, 1.0)], filter=[Term("lang", "en"), match])
@@ -126,8 +126,8 @@ def q_search_bm25_function_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     qtokens = analyze_text(spark, "spark merge", "custom_shingles")
     stats = bm25_stats_from_index(spark, idx, "text__custom_shingles", qtokens)
     match = BM25Match(
-        "text", "spark merge", analyzer="custom_shingles",
-        tokens_col="text__custom_shingles", stats=stats,
+        [("text", "text__custom_shingles", 1.0)], "spark merge",
+        analyzer="custom_shingles", stats=stats,
     )
     query = FunctionScore(
         Bool(

@@ -233,10 +233,10 @@ def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (at ingest scale the token column is stored, not cached)
     docs = materialize_tokens(docs, {"text": ["custom_shingles"]})
     qtokens = analyze_text(spark, "spark merge", "custom_shingles")
-    stats = bm25_stats(docs, "text__custom_shingles", qtokens)
+    stats = bm25_stats(docs, [("text__custom_shingles", 1.0)], qtokens)
     match = BM25Match(
-        "text", "spark merge", analyzer="custom_shingles",
-        tokens_col="text__custom_shingles", stats=stats,
+        [("text", "text__custom_shingles", 1.0)], "spark merge",
+        analyzer="custom_shingles", stats=stats,
     )
     query = FunctionScore(
         Bool(should=[(match, 1.0)], filter=[Term("lang", "en"), match])
@@ -2803,10 +2803,10 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     docs = materialize_tokens(docs, {"text": ["custom_shingles"]})
     qtokens = analyze_text(spark, "spark merge", "custom_shingles")
-    stats = bm25_stats(docs, "text__custom_shingles", qtokens)
+    stats = bm25_stats(docs, [("text__custom_shingles", 1.0)], qtokens)
     match = BM25Match(
-        "text", "spark merge", analyzer="custom_shingles",
-        tokens_col="text__custom_shingles", stats=stats,
+        [("text", "text__custom_shingles", 1.0)], "spark merge",
+        analyzer="custom_shingles", stats=stats,
     )
     query = FunctionScore(
         Bool(should=[(match, 1.0)], filter=[Term("lang", "en"), match])
@@ -5373,11 +5373,11 @@ _CF_ORACLE = f"""
         "sums across fields, idf uses the exact union document frequency "
         "— Lucene's CombinedFieldQuery approximates that df from merged "
         "per-field term stats; the scan-side union is exact, documented). "
-        "Through the JSON front-end with a corpus_combined_provider; "
+        "Through the JSON front-end with a corpus_bm25_provider; "
         "per-doc math is JVM expressions, stats one aggregation job.",
 )
 def q_search_combined_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import corpus_combined_provider
+    from tweets_elastic_spark.plans.search import corpus_bm25_provider
 
     docs = fan_out(load_table(spark, sf_dir, "documents")).withColumn(
         "head", F.substring("text", 1, 80)
@@ -5392,7 +5392,7 @@ def q_search_combined_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
         }},
         analyzers={"text": "standard", "head": "standard"},
         tokens_cols={"text": "text__standard", "head": "head__standard"},
-        combined_stats_for=corpus_combined_provider(spark, docs),
+        bm25_stats_for=corpus_bm25_provider(spark, docs),
     )
     return search(docs, query, k=None).select(
         "doc_id", F.round("score", 6).alias("score")
@@ -5914,7 +5914,7 @@ def q_update_by_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "VERBATIM — the two front-ends must agree row-for-row.",
 )
 def q_search_cross_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import corpus_combined_provider
+    from tweets_elastic_spark.plans.search import corpus_bm25_provider
 
     docs = fan_out(load_table(spark, sf_dir, "documents")).withColumn(
         "head", F.substring("text", 1, 80)
@@ -5930,7 +5930,7 @@ def q_search_cross_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
         }},
         analyzers={"text": "standard", "head": "standard"},
         tokens_cols={"text": "text__standard", "head": "head__standard"},
-        combined_stats_for=corpus_combined_provider(spark, docs),
+        bm25_stats_for=corpus_bm25_provider(spark, docs),
     )
     return search(docs, query, k=None).select(
         "doc_id", F.round("score", 6).alias("score")
