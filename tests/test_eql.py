@@ -4,7 +4,6 @@ hand-computed vectors, and the no-Python / single-shuffle plan shape."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from tweets_elastic_spark.plans.eql import eql_search, parse_eql
 
@@ -320,96 +319,6 @@ def test_until_clears_pending(spark):
     assert pq.until.category == "x" and len(pq.stages) == 3
 
 
-def test_streaming_eql_matches_batch(spark, tmp_path):
-    """One availableNow pass over the fixture == the batch result exactly;
-    a second fixture drop resumes from checkpointed automaton state."""
-    import shutil
-
-    from tweets_elastic_spark.sources.catalog import load_table
-    from tweets_elastic_spark.streaming.eql import streaming_eql_sequence
-    from tweets_elastic_spark.streaming.ingest import stream_events
-    from tweets_elastic_spark.plans.eql import eql_search
-
-    sf = "/root/testdata/sf0.001"
-    events_dir = str(tmp_path / "events_in")
-    import os
-    os.makedirs(events_dir)
-    shutil.copy(os.path.join(sf, "events.parquet"),
-                os.path.join(events_dir, "part-0.parquet"))
-    q = """sequence by user_id with maxspan=2d
-      [ view where true ] [ click where true ] [ purchase where true ]"""
-    sink = str(tmp_path / "eql_out")
-
-    def run_once():
-        out = (
-            streaming_eql_sequence(stream_events(spark, events_dir), q)
-            .writeStream.outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "eql_ckpt"))
-            .format("parquet").option("path", sink).start()
-        )
-        out.awaitTermination(120)
-
-    run_once()
-    got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
-    want = sorted(tuple(r) for r in
-                  eql_search(load_table(spark, sf, "events"), q).collect())
-    assert got == want and len(got) > 0
-
-    # drop the same file again shifted: new events for the same users
-    # extend from PERSISTED state — rows only appear for the new batch
-    ev2 = (spark.read.parquet(os.path.join(sf, "events.parquet"))
-           .withColumn("event_id", F.col("event_id") + 100000)
-           .withColumn("ts", F.col("ts") + F.expr("interval 40 days")))
-    ev2.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "drop2"))
-    for f in os.listdir(str(tmp_path / "drop2")):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(str(tmp_path / "drop2"), f),
-                        os.path.join(events_dir, "part-1.parquet"))
-    run_once()
-    n2 = spark.read.parquet(sink).count()
-    # the 40-days-later drop re-runs the funnel from the persisted state:
-    # at least one new completed sequence per prior match cohort
-    assert n2 > len(got)
-
-
-def test_streaming_state_evicts_idle_keys(spark, tmp_path):
-    """Keys with no pending prefix must hold NO state-store row: a key
-    whose sequence completed, and a key that only ever saw non-initial
-    stages, are evicted; only a genuinely pending prefix keeps a row.
-    Without eviction the store grows with every distinct key ever seen."""
-    from tweets_elastic_spark.streaming.eql import streaming_eql_sequence
-
-    schema = ("event_id long, ts double, user_id long, event_type string, "
-              "value double")
-    rows = [
-        # key 1: full a->b->c run (completes; slots cleared)
-        (1, 0.0, 1, "a", 0.0), (2, 1.0, 1, "b", 0.0), (3, 2.0, 1, "c", 0.0),
-        # key 2: stage-2/3 events only (never starts a prefix)
-        (4, 0.0, 2, "b", 0.0), (5, 1.0, 2, "c", 0.0),
-        # key 3: dangling stage-1 (the one legitimate state row)
-        (6, 0.0, 3, "a", 0.0),
-    ]
-    src = str(tmp_path / "ev_in")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        streaming_eql_sequence(stream, SEQ)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .format("parquet").option("path", str(tmp_path / "out")).start()
-    )
-    q.awaitTermination(120)
-    progress = [p for p in q.recentProgress if p["stateOperators"]]
-    assert progress, "no stateful progress recorded"
-    assert progress[-1]["stateOperators"][0]["numRowsTotal"] == 1
-    got = sorted(tuple(r) for r in
-                 spark.read.parquet(str(tmp_path / "out")).collect())
-    assert got == [(1, 0.0, 2.0, 1, 2, 3)]
-
-
 def test_composite_by_keys(spark):
     """`sequence by a, b` — sequences never cross a composite-key boundary."""
     df = spark.createDataFrame(
@@ -480,115 +389,6 @@ def test_sequence_pipes(spark):
     assert pq.kind == "sequence" and pq.pipes == [("head", 3)]
     with pytest.raises(ValueError, match="not a sequence output column"):
         eql_search(df, q + " | unique nope").collect()
-
-
-def test_watermarked_streaming_eql_reorders_late_events(spark, tmp_path):
-    """A stage-2 event arriving AFTER the stage-3 event (out of order
-    across micro-batches) still completes the sequence: the watermarked
-    variant buffers events and runs the automaton in event-time order
-    once the watermark passes them. The at-arrival variant cannot match
-    this input."""
-    import os
-    import time as _time
-
-    from tweets_elastic_spark.streaming.eql import (
-        streaming_eql_sequence_watermarked,
-    )
-    from tweets_elastic_spark.streaming.ingest import stream_events
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-
-    def write_file(rows, name):
-        df = spark.createDataFrame(rows, schema)
-        tmp = str(tmp_path / ("stage_" + name))
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(str(tmp_path / "in"), exist_ok=True)
-        for f in os.listdir(tmp):
-            if f.endswith(".parquet"):
-                dst = str(tmp_path / "in" / name)
-                os.replace(os.path.join(tmp, f), dst)
-        _time.sleep(1.1)  # distinct mtimes → file-source batch order
-
-    import datetime as dt
-    t = lambda s: dt.datetime(2024, 1, 1, 0, 0, s)
-    # batch 1: a@1, c@3 arrive; plus a watermark pusher far in the
-    # future (it must MATCH a stage filter: Catalyst pushes the stage
-    # filter below the watermark collector, so filtered-out rows never
-    # advance the watermark — user 99 keys its own automaton, harmless)
-    write_file([(1, t(1), 7, "a", 0.0), (3, t(3), 7, "c", 0.0),
-                (99, dt.datetime(2024, 1, 2), 99, "a", 0.0)], "part-0.parquet")
-    # batch 2: the missing b@2 arrives late (but within the delay) —
-    # NO further pusher: the flush must come from the event-time
-    # TIMEOUT wakeup (watermark from batch 1 already covers t1..t3)
-    write_file([(2, t(2), 7, "b", 0.0)], "part-1.parquet")
-
-    q = """sequence by user_id with maxspan=1h
-      [ a where true ] [ b where true ] [ c where true ]"""
-    stream = stream_events(spark, str(tmp_path / "in")) \
-        .sparkSession.readStream.schema(schema) \
-        .option("maxFilesPerTrigger", 1).parquet(str(tmp_path / "in"))
-    out = (
-        streaming_eql_sequence_watermarked(stream, q, delay="1 minute")
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "wm_ckpt"))
-        .format("parquet").option("path", str(tmp_path / "wm_out"))
-        .start()
-    )
-    out.awaitTermination(180)
-    got = sorted(tuple(r) for r in
-                 spark.read.parquet(str(tmp_path / "wm_out")).collect())
-    assert got == [(7, t(1).timestamp(), t(3).timestamp(), 1, 2, 3)]
-
-
-def test_watermarked_streaming_evicts_expired_prefixes(spark, tmp_path):
-    """A key holding a dangling prefix whose maxspan has expired relative
-    to the watermark must NOT keep a state row forever: the prefix can
-    never be extended (future-consumed events all sit above the
-    watermark), so it is pruned and the key evicted via its registered
-    event-time timeout — without this, state grows with every key that
-    ever starts-but-never-finishes a sequence."""
-    import datetime as dt
-    import os
-
-    from tweets_elastic_spark.streaming.eql import (
-        streaming_eql_sequence_watermarked,
-    )
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    t = lambda s: dt.datetime(2024, 1, 1, 0, 0, s)
-    far = dt.datetime(2024, 1, 2)  # watermark pusher, ~24h later
-    # user 7 starts a sequence (stage-1 'a') and never finishes; the
-    # pusher (user 99, its own key) drives the watermark far past
-    # t(1) + maxspan(1h), so 7's prefix is provably dead
-    rows = [(1, t(1), 7, "a", 0.0), (99, far, 99, "a", 0.0)]
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite").parquet(str(tmp_path / "stage"))
-    for f in os.listdir(str(tmp_path / "stage")):
-        if f.endswith(".parquet"):
-            os.replace(os.path.join(str(tmp_path / "stage"), f),
-                       os.path.join(src, "part-0.parquet"))
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = """sequence by user_id with maxspan=1h
-      [ a where true ] [ b where true ]"""
-    out = (
-        streaming_eql_sequence_watermarked(stream, q, delay="1 minute")
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .format("parquet").option("path", str(tmp_path / "out")).start()
-    )
-    out.awaitTermination(180)
-    progress = [p for p in out.recentProgress if p["stateOperators"]]
-    assert progress, "no stateful progress recorded"
-    # only the pusher's own (un-expired, still-buffered) key keeps a row;
-    # user 7's expired prefix is evicted
-    assert progress[-1]["stateOperators"][0]["numRowsTotal"] == 1
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 0
 
 
 def test_hot_key_guard(spark):
@@ -901,100 +701,6 @@ def test_per_stage_by_null_key_drops(spark):
         """).collect()
     )
     assert got == [("5", 2, 3)]  # the NULL-keyed login never correlates
-
-
-def test_streaming_per_stage_by_matches_batch(spark, tmp_path):
-    """The per-stage-by candidate fan-out runs BEFORE the stateful
-    grouping, so one availableNow pass must equal the batch engine
-    row-for-row (same string-rendered key columns)."""
-    import os
-    import shutil
-
-    from tweets_elastic_spark.sources.catalog import load_table
-    from tweets_elastic_spark.streaming.eql import streaming_eql_sequence
-    from tweets_elastic_spark.streaming.ingest import stream_events
-
-    sf = "/root/testdata/sf0.001"
-    events_dir = str(tmp_path / "events_in")
-    os.makedirs(events_dir)
-    shutil.copy(os.path.join(sf, "events.parquet"),
-                os.path.join(events_dir, "part-0.parquet"))
-    q = """sequence with maxspan=2d
-      [ signup where true ] by user_id
-      [ click where true ] by uid2"""
-
-    def with_uid2(df):
-        return df.filter(F.col("value").isNotNull()).withColumn(
-            "uid2", F.floor(F.col("value") % 50).cast("long"))
-
-    sink = str(tmp_path / "eql_sby_out")
-    out = (
-        streaming_eql_sequence(with_uid2(stream_events(spark, events_dir)), q)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "eql_sby_ckpt"))
-        .format("parquet").option("path", sink).start()
-    )
-    out.awaitTermination(120)
-    got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
-    want = sorted(
-        tuple(r) for r in
-        eql_search(with_uid2(load_table(spark, sf, "events")), q).collect()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_watermarked_per_stage_by_matches_batch(spark, tmp_path):
-    """The watermarked variant supports per-stage keys too (r11): the
-    candidate fan-out is a narrow projection+explode, so the event-time
-    attribute rides through and one availableNow pass over an ordered
-    fixture equals the batch engine row-for-row."""
-    import os
-    import shutil
-
-    from tweets_elastic_spark.sources.catalog import load_table
-    from tweets_elastic_spark.streaming.eql import (
-        streaming_eql_sequence_watermarked,
-    )
-    from tweets_elastic_spark.streaming.ingest import stream_events
-
-    sf = "/root/testdata/sf0.001"
-    events_dir = str(tmp_path / "events_in_wm")
-    os.makedirs(events_dir)
-    shutil.copy(os.path.join(sf, "events.parquet"),
-                os.path.join(events_dir, "part-0.parquet"))
-    q = """sequence with maxspan=2d
-      [ signup where true ] by user_id
-      [ click where true ] by uid2"""
-
-    def with_uid2(df):
-        return df.filter(F.col("value").isNotNull()).withColumn(
-            "uid2", F.floor(F.col("value") % 50).cast("long"))
-
-    sink = str(tmp_path / "eql_wm_sby_out")
-    out = (
-        streaming_eql_sequence_watermarked(
-            with_uid2(stream_events(spark, events_dir)), q,
-            delay="10 minutes")
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "eql_wm_sby_ckpt"))
-        .format("parquet").option("path", sink).start()
-    )
-    out.awaitTermination(120)
-    got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
-    batch = with_uid2(load_table(spark, sf, "events"))
-    want_all = sorted(tuple(r) for r in eql_search(batch, q).collect())
-    # the final watermark = max stage-matching event time - delay; any
-    # match completing INSIDE that trailing window is still buffered when
-    # the availableNow run ends (correct watermark semantics, the same
-    # caveat every event-time pipeline has at stream end)
-    wm_final = (
-        batch.filter(F.col("event_type").isin("signup", "click"))
-        .agg(F.max(F.col("ts").cast("double"))).collect()[0][0] - 600.0
-    )
-    want = [w for w in want_all if w[2] <= wm_final]  # w[2] = last_ts
-    assert got == want and len(got) > 0
 
 
 SAMPLE = """sample by user_id

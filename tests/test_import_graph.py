@@ -1,7 +1,8 @@
 """Static import-graph guards, read from the source with ``ast`` (no imports
 run): the query-language modules import each other at module top, never
-inside a function, and the package's import-time graph has no cycle, so a
-cycle can neither hide behind a lazy import nor break a fresh import."""
+inside a function; the package's import-time graph has no cycle, so a
+cycle can neither hide behind a lazy import nor break a fresh import; and
+every module has a caller outside the tests."""
 
 from __future__ import annotations
 
@@ -9,16 +10,22 @@ import ast
 from pathlib import Path
 
 PKG = "tweets_elastic_spark"
-ROOT = Path(__file__).resolve().parent.parent / PKG
+REPO = Path(__file__).resolve().parent.parent
+ROOT = REPO / PKG
+# code that calls the package besides the package itself
+CALLERS = ["perfbench", "scripts", "bench.py", "__spark_entry__.py"]
+# the tests' data generator: the one module only tests are meant to import
+TEST_ONLY = {f"{PKG}.sources.fixtures"}
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(REPO).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
 def _modules() -> dict[str, ast.Module]:
-    out = {}
-    for path in ROOT.rglob("*.py"):
-        parts = path.relative_to(ROOT.parent).with_suffix("").parts
-        name = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
-        out[name] = ast.parse(path.read_text(), str(path))
-    return out
+    return {_module_name(path): ast.parse(path.read_text(), str(path))
+            for path in ROOT.rglob("*.py")}
 
 
 def _imported(node: ast.AST) -> list[str]:
@@ -81,3 +88,23 @@ def test_package_import_graph_has_no_cycle():
     for name in sorted(graph):
         if name not in state:
             visit(name, [])
+
+
+def test_every_module_has_a_caller_outside_tests():
+    """Each module is imported by package code, the benchmarks, the scripts
+    or the driver entry point, not by tests alone."""
+    sources = {path: _module_name(path) for path in ROOT.rglob("*.py")}
+    for caller in map(REPO.joinpath, CALLERS):
+        for path in sorted(caller.rglob("*.py")) if caller.is_dir() else [caller]:
+            if "tests" not in path.relative_to(REPO).parts:
+                sources[path] = None
+    imported = set()
+    for path, own in sources.items():
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            for dotted in _imported(node):
+                # importing a submodule imports its parent packages too
+                while dotted:
+                    if dotted != own:
+                        imported.add(dotted)
+                    dotted = dotted.rpartition(".")[0]
+    assert sorted(set(_modules()) - imported - TEST_ONLY - {PKG}) == []

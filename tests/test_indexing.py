@@ -254,6 +254,46 @@ def test_bm25_stats_lookup_is_one_job_and_provider_follows_segments(
     assert (after.n_docs, after.avgdl, after.df) == (direct.n_docs, direct.avgdl, direct.df)
 
 
+def test_request_envelopes_score_like_from_es_json(spark, index_dir):
+    """BM25 ``match`` and ``multi_match`` requests shaped like the search
+    benchmark's return the same ids and scores through ``es_request``,
+    ``es_msearch`` and ``from_es_json`` + ``search``: the envelopes hand
+    the index provider to every query they compile."""
+    from tweets_elastic_spark.plans.aggs import es_request
+    from tweets_elastic_spark.plans.api import es_msearch
+    from tweets_elastic_spark.plans.search import from_es_json, search
+
+    docs = indexing.read_indexed_documents(spark, index_dir)
+    bindings = dict(
+        analyzers={"text": "custom_shingles"},
+        tokens_cols={"text": "text__custom_shingles"},
+        id_field="doc_id",
+        bm25_stats_for=indexing.index_bm25_provider(spark, index_dir),
+    )
+    requests = [
+        {"query": {"bool": {
+            "should": [{"match": {"text": {"query": "spark merge"}}}],
+            "filter": [{"term": {"lang": "en"}},
+                       {"match": {"text": "spark merge"}}]}}, "size": 10},
+        {"query": {"multi_match": {"query": "spark merge",
+                                   "fields": ["text^2"],
+                                   "type": "most_fields"}}, "size": 10},
+    ]
+
+    def rows(df):
+        return [(r["doc_id"], round(r["score"], 6))
+                for r in df.select("doc_id", "score").collect()]
+
+    want = [rows(search(docs, from_es_json({"query": r["query"]}, **bindings),
+                        k=10, tiebreak="doc_id")) for r in requests]
+    # BM25 scores vary by document; overlap legs would score a constant
+    assert all(len({s for _, s in w}) > 1 for w in want)
+    assert [rows(es_request(docs, r, tiebreak="doc_id", **bindings))
+            for r in requests] == want
+    assert [rows(df) for df in es_msearch(docs, requests, tiebreak="doc_id",
+                                          **bindings)] == want
+
+
 def test_index_provider_serves_one_column(spark, index_dir):
     """The index stores one term dictionary per token column, so the
     provider prices one column; the union document frequency a
@@ -699,17 +739,14 @@ def test_compaction_crash_recovery(spark, tmp_path):
 def test_index_lifecycle_end_to_end(spark, tmp_path):
     """The whole served-index story in one flow: ETL denormalizes the
     star tables into documents -> base index build -> a query day (BM25 +
-    term suggest) -> batch increment -> STREAMING segment maintenance ->
-    compaction -> the same queries, with results identical to a
-    monolithic index over everything. Every stage is covered piecewise
-    elsewhere; this pins that the stages COMPOSE."""
+    term suggest) -> two batch increments -> compaction -> the same
+    queries, with results identical to a monolithic index over
+    everything. Every stage is covered piecewise elsewhere; this pins that
+    the stages COMPOSE."""
     from tweets_elastic_spark.functions.analyzers import analyze_text
     from tweets_elastic_spark.plans.search import BM25Match, search
     from tweets_elastic_spark.sources.catalog import load_table
     from tweets_elastic_spark.sources.incremental import WatermarkStore
-    from tweets_elastic_spark.streaming.indexing import (
-        run_streaming_index_maintenance, stream_documents,
-    )
 
     sf = "/root/testdata/sf0.01"
     docs = load_table(spark, sf, "documents")
@@ -741,27 +778,15 @@ def test_index_lifecycle_end_to_end(spark, tmp_path):
 
     assert bm25(idx)  # the young index already serves queries
 
-    # batch increment: docs 151..300
+    # two batch increments: docs 151..300, then the rest
     store = WatermarkStore(str(tmp_path / "wm.json"))
-    indexing.index_increment(spark, src_b, idx, store)
-
-    # the rest arrives as a STREAM of files
-    arrivals = str(tmp_path / "arrivals")
-    docs.filter("doc_id > 300").repartition(3).write.parquet(arrivals)
-    q = run_streaming_index_maintenance(
-        stream_documents(spark, arrivals), idx, str(tmp_path / "ckpt"))
-    assert q.awaitTermination(120), "stream did not drain in time"
-    # the two maintenance paths share one watermark contract: streaming
-    # owns the doc stream here, so the batch store must be advanced past
-    # what the stream indexed before a batch increment runs against the
-    # same source — otherwise it would re-index the streamed docs
-    store.set("index.doc_id", int(docs.agg(F.max("doc_id")).head()[0]))
-    # embeddings catch up through the batch path
-    indexing.index_increment(spark, src_full, idx, store)
+    assert indexing.index_increment(spark, src_b, idx, store) == 150
+    assert indexing.index_increment(spark, src_full, idx, store) == \
+        docs.filter("doc_id > 300").count()
 
     seg_dir = os.path.join(idx, "documents_indexed")
     n_segs = len([d for d in os.listdir(seg_dir) if d.startswith("segment=")])
-    assert n_segs >= 4  # base + increment + >=2 stream batches
+    assert n_segs == 3  # base + two increments
 
     # multi-segment index answers identically to the monolithic build
     assert bm25(idx) == bm25(idx_mono)

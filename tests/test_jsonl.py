@@ -8,7 +8,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from tweets_elastic_spark.sources.catalog import load_table
 from tweets_elastic_spark.sources.jsonl import (
@@ -102,53 +101,6 @@ def test_gzip_shards(spark, tmp_path):
     assert quarantine.count() == 0 and valid.count() == 20
 
 
-# --------------------------------------------------------- delimited twin
-
-
-def test_csv_valid_and_quarantine(spark, tmp_path):
-    from pyspark.sql.types import StructType
-
-    from tweets_elastic_spark.sources.delimited import read_delimited
-
-    src = tmp_path / "csv"
-    src.mkdir()
-    with open(src / "a.csv", "w") as f:
-        f.write("id,name\n")          # header
-        f.write("1,alpha\n")
-        f.write("2,beta\n")
-        f.write("nope,gamma\n")       # id not a long -> quarantine
-    valid, quar = read_delimited(
-        spark, str(src), StructType.fromDDL("id long, name string"),
-        header=True,
-    )
-    assert sorted((r["id"], r["name"]) for r in valid.collect()) == \
-        [(1, "alpha"), (2, "beta")]
-    assert [r[0] for r in quar.collect()] == ["nope,gamma"]
-
-
-def test_tsv_and_short_rows_quarantined(spark, tmp_path):
-    """Unlike JSON (named fields -> missing is NULL), CSV column count is
-    positional STRUCTURE: a short row is quarantined, not null-filled —
-    silent null-fill would hide column drift in a 100 TB corpus."""
-    from pyspark.sql.types import StructType
-
-    from tweets_elastic_spark.sources.delimited import read_delimited
-
-    src = tmp_path / "tsv"
-    src.mkdir()
-    with open(src / "a.tsv", "w") as f:
-        f.write("7\tx\n")
-        f.write("8\n")  # short row -> quarantine
-        f.write("9\t\n")  # empty trailing token -> NULL name, valid
-    valid, quar = read_delimited(
-        spark, str(src), StructType.fromDDL("id long, name string"),
-        sep="\t",
-    )
-    assert [r[0] for r in quar.collect()] == ["8"]
-    assert sorted((r["id"], r["name"]) for r in valid.collect()) == \
-        [(7, "x"), (9, None)]
-
-
 # -------------------------------------------- review-pass regressions (r6)
 
 
@@ -165,21 +117,6 @@ def test_blank_lines_quarantined_not_null_filled(spark, tmp_path):
         spark, str(src), StructType.fromDDL("id long, name string"))
     assert sorted(r["id"] for r in valid.collect()) == [1, 2]
     assert quar.count() == 2  # the blank and the whitespace-only line
-
-
-def test_blank_csv_lines_quarantined(spark, tmp_path):
-    from pyspark.sql.types import StructType
-
-    from tweets_elastic_spark.sources.delimited import read_delimited
-
-    src = tmp_path / "csv"
-    src.mkdir()
-    with open(src / "a.csv", "w") as f:
-        f.write("1,alpha\n\n2,beta\n")
-    valid, quar = read_delimited(
-        spark, str(src), StructType.fromDDL("id long, name string"))
-    assert sorted(r["id"] for r in valid.collect()) == [1, 2]
-    assert quar.count() == 1
 
 
 def test_subsecond_timestamps_round_trip(spark, tmp_path):

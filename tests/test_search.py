@@ -358,6 +358,35 @@ def test_from_es_json_multi_match_bm25_tree_shapes():
     ])
 
 
+def test_half_bound_multi_match_asks_no_provider():
+    """Whether every multi_match field is BM25-bound is settled before any
+    statistics lookup: with only ``a`` bound, the provider is never called
+    and the clause compiles to the same overlap legs."""
+    from tweets_elastic_spark.plans.search import (
+        Bool, ConstantScore, DisMax, Match, from_es_json,
+    )
+
+    calls = []
+
+    def provider(cols, analyzer, text):
+        calls.append(cols)
+        return _fixed_stats(df={"spark": 2.0})
+
+    kw = dict(analyzers={"a": "standard"}, tokens_cols={"a": "a__t"},
+              bm25_stats_for=provider)
+    legs = [ConstantScore(Match("a", "spark", analyzer="standard",
+                                tokens_col="a__t"), 1.0),
+            ConstantScore(Match("c", "spark"), 1.0)]
+    best = from_es_json(
+        {"multi_match": {"query": "spark", "fields": ["a", "c"]}}, **kw)
+    most = from_es_json(
+        {"multi_match": {"query": "spark", "fields": ["a", "c"],
+                         "type": "most_fields"}}, **kw)
+    assert calls == []
+    assert best == DisMax(legs)
+    assert most == Bool(should=[(leg.filter, leg.boost) for leg in legs])
+
+
 def test_bm25_match_operator_msm_boost_execution(spark):
     """BM25Match candidate gating (operator='and', msm) and boost
     multiplication, executed on an inline corpus against hand-computed

@@ -1,33 +1,15 @@
-"""Sink idempotence + quarantine (SURVEY §5.2 item 5), incremental
-watermark ingestion (S3), and the Structured-Streaming layer (windows,
-foreachBatch, custom stateful operator) — streaming results checked against
-their batch twins."""
+"""Sink idempotence + quarantine (SURVEY §5.2 item 5), document
+serialization and update-in-place at the sink, and the event-time window
+functions in batch mode."""
 
 from __future__ import annotations
-
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.sinks import validate_split, write_documents
 from tweets_elastic_spark.sources.catalog import load_table
-from tweets_elastic_spark.sources.incremental import (
-    WatermarkStore,
-    ingest_increment,
-    read_increment,
-)
-from tweets_elastic_spark.streaming.ingest import (
-    run_foreach_batch_ingest,
-    run_windowed_stream,
-    stream_events,
-)
-from tweets_elastic_spark.streaming.stateful import running_user_totals
-from tweets_elastic_spark.streaming.windows import (
-    session_counts,
-    sliding_counts,
-    tumbling_counts,
-)
+from tweets_elastic_spark.streaming.windows import session_counts, sliding_counts
 
 SF = "/root/testdata/sf0.001"
 
@@ -70,109 +52,7 @@ def test_validate_split_quarantine(spark):
     }
 
 
-# -- incremental (keyset watermark) -------------------------------------------
-
-def test_incremental_ingest_watermark_cycle(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    orders = load_table(spark, SF, "orders")
-    # first arrival: keys <= 700
-    orders.filter("o_orderkey <= 700").write.parquet(str(src / "orders.parquet"))
-    store = WatermarkStore(str(tmp_path / "wm.json"))
-    sink = str(tmp_path / "sink")
-
-    n1 = ingest_increment(spark, str(src), "orders", "o_orderkey", sink, store)
-    assert n1 == orders.filter("o_orderkey <= 700").count()
-    # caught up → 0 rows, watermark unchanged
-    assert ingest_increment(spark, str(src), "orders", "o_orderkey", sink, store) == 0
-
-    # second arrival: the rest
-    shutil.rmtree(src / "orders.parquet")
-    orders.write.parquet(str(src / "orders.parquet"))
-    n2 = ingest_increment(spark, str(src), "orders", "o_orderkey", sink, store)
-    assert n1 + n2 == orders.count()
-    assert spark.read.parquet(sink).count() == orders.count()
-    # predicate actually prunes: read_increment matches filter semantics
-    assert (
-        read_increment(spark, SF, "orders", "o_orderkey", 700).count()
-        == orders.filter("o_orderkey > 700").count()
-    )
-
-
-# -- streaming ----------------------------------------------------------------
-
-@pytest.fixture()
-def events_dir(spark, tmp_path):
-    d = tmp_path / "events_in"
-    d.mkdir()
-    shutil.copy(f"{SF}/events.parquet", d / "events.parquet")
-    return str(d)
-
-
-def test_windowed_stream_matches_batch(spark, tmp_path, events_dir):
-    sink = str(tmp_path / "agg_out")
-    q = run_windowed_stream(
-        stream_events(spark, events_dir), sink, str(tmp_path / "ckpt"),
-        width="1 hour", watermark="2 hours",
-    )
-    q.awaitTermination(120)
-    streamed = spark.read.parquet(sink)
-
-    batch_events = load_table(spark, SF, "events")
-    max_ts = batch_events.agg(F.max("ts").alias("m")).head()["m"]
-    batch = tumbling_counts(batch_events, "1 hour").filter(
-        F.col("window_start") + F.expr("INTERVAL 1 HOUR")
-        <= F.lit(max_ts) - F.expr("INTERVAL 2 HOURS")
-    )
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in streamed.collect()
-    }
-    want = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in batch.collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_foreach_batch_ingest_exactly_once(spark, tmp_path, events_dir):
-    sink = str(tmp_path / "ev_out")
-    ckpt = str(tmp_path / "ev_ckpt")
-    q = run_foreach_batch_ingest(stream_events(spark, events_dir), sink, ckpt)
-    q.awaitTermination(120)
-    assert spark.read.parquet(sink).count() == 1000
-    # restart with same checkpoint: no new files → no duplicates
-    q2 = run_foreach_batch_ingest(stream_events(spark, events_dir), sink, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(sink).count() == 1000
-
-
-def test_stateful_running_totals_match_batch(spark, tmp_path, events_dir):
-    out = (
-        running_user_totals(stream_events(spark, events_dir))
-        .writeStream.outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "st_ckpt"))
-        .format("memory")
-        .queryName("user_totals")
-        .start()
-    )
-    out.awaitTermination(120)
-    # last update per user == batch aggregate
-    final = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-        for r in spark.sql("select * from user_totals").collect()
-    }
-    batch = {
-        r["user_id"]: (r["n"], round(r["t"], 6))
-        for r in load_table(spark, SF, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("t"))
-        .collect()
-    }
-    # memory sink in update mode appends rows; keep the max-count row per user
-    assert {u: v for u, v in final.items() if v[0] == batch[u][0]} == batch
-
+# -- windows -------------------------------------------------------------------
 
 def test_sliding_and_session_windows_batch(spark):
     events = load_table(spark, SF, "events")
@@ -241,28 +121,6 @@ def test_parse_es_timestamp_offset_preserving(spark):
     assert out[3] is None
 
 
-# -- incremental: crash-replay idempotence -----------------------------------
-
-def test_incremental_replay_does_not_duplicate(spark, tmp_path):
-    """A crash between the increment write and the watermark advance replays
-    the same increment into the same ingest_wm partition (overwrite) —
-    effectively-once without a transactional sink."""
-    src = tmp_path / "src"
-    src.mkdir()
-    orders = load_table(spark, SF, "orders")
-    orders.write.parquet(str(src / "orders.parquet"))
-    store = WatermarkStore(str(tmp_path / "wm.json"))
-    sink = str(tmp_path / "sink")
-
-    n1 = ingest_increment(spark, str(src), "orders", "o_orderkey", sink, store)
-    assert n1 == orders.count()
-    # simulate the crash: roll the watermark back as if store.set never ran
-    store.set("orders.o_orderkey", -1)
-    n2 = ingest_increment(spark, str(src), "orders", "o_orderkey", sink, store)
-    assert n2 == n1
-    assert spark.read.parquet(sink).count() == orders.count()  # no dups
-
-
 # -- S11: batch update-in-place analogue ---------------------------------------
 
 def test_increment_counters_update_in_place(spark, tmp_path):
@@ -291,73 +149,6 @@ def test_increment_counters_update_in_place(spark, tmp_path):
     empty = spark.createDataFrame([], "id long, delta int")
     assert increment_counters(spark, path, empty) == 0
     assert {r["id"]: r["retweet_count"] for r in spark.read.parquet(path).collect()} == back
-
-
-# -- streaming dedup -----------------------------------------------------------
-
-def test_streaming_dedup_exact_suppresses_in_horizon_dups(spark, tmp_path):
-    """Duplicates arriving within the watermark horizon are suppressed;
-    distinct texts all pass."""
-    from tweets_elastic_spark.streaming.dedup import streaming_dedup_exact
-
-    src = tmp_path / "docs_in"
-    src.mkdir()
-    rows = [
-        (1, "alpha beta gamma", "2024-01-01 10:00:00"),
-        (2, "Alpha  beta GAMMA", "2024-01-01 10:05:00"),   # dup of 1 (normalized)
-        (3, "something different", "2024-01-01 10:10:00"),
-        (4, "alpha beta gamma", "2024-01-01 10:20:00"),     # dup of 1, in horizon
-        (5, "yet another doc", "2024-01-01 11:00:00"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, raw_ts string")
-    df = df.withColumn("ts", F.to_timestamp("raw_ts")).drop("raw_ts")
-    # stage FLAT files: the file-stream source does not recurse into the
-    # directory-per-dataset layout df.write.parquet produces
-    staging = tmp_path / "staging"
-    df.coalesce(1).write.parquet(str(staging))
-    import glob
-
-    for i, part in enumerate(glob.glob(str(staging / "part-*.parquet"))):
-        shutil.copy(part, src / f"batch{i}.parquet")
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .parquet(str(src))
-    )
-    out = (
-        streaming_dedup_exact(stream, watermark="1 hour")
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .format("memory")
-        .queryName("dedup_out")
-        .start()
-    )
-    out.awaitTermination(120)
-    survivors = {r["doc_id"] for r in spark.sql("select * from dedup_out").collect()}
-    # one survivor per distinct normalized text
-    assert len(survivors) == 3
-    assert 3 in survivors and 5 in survivors
-    assert len(survivors & {1, 2, 4}) == 1
-
-
-def test_salted_collect_list_matches_plain_groupby(spark):
-    """Two-stage salted aggregation == plain groupBy+collect_list (sorted),
-    including under a pathologically hot key."""
-    from tweets_elastic_spark.operators.skew import salted_collect_list
-
-    rows = [(1, f"v{i:04d}") for i in range(500)] + [(k, f"x{k}") for k in range(2, 30)]
-    df = spark.createDataFrame(rows, "key long, val string")
-    salted = {
-        r["key"]: list(r["vals"])
-        for r in salted_collect_list(df, "key", F.col("val"), "vals", salts=8).collect()
-    }
-    plain = {
-        r["key"]: sorted(r["vals"])
-        for r in df.groupBy("key").agg(F.collect_list("val").alias("vals")).collect()
-    }
-    assert salted == plain
-    assert len(salted[1]) == 500
 
 
 # -- S6: ES connector (optional; sandbox has no jar) --------------------------
@@ -522,141 +313,6 @@ def test_partitioned_sink_prunes_on_read(spark, tmp_path):
     n_langs = docs.select("lang").distinct().count()
     assert back.select("lang").distinct().count() == 1
     assert n_langs > 1  # pruning actually excluded something
-
-
-def test_stream_stream_join_matches_batch(spark, tmp_path, events_dir):
-    """Stream-stream interval join (clicks × same-user error windows, both
-    sides watermarked) emits exactly the batch pairs: the same
-    click_error_pairs function runs on the batch DataFrames (watermarks
-    are no-ops there), so the twin is literal, not re-implemented."""
-    from tweets_elastic_spark.streaming.ingest import stream_events
-    from tweets_elastic_spark.streaming.joins import (
-        click_error_pairs,
-        run_click_error_join,
-    )
-
-    ev_c = stream_events(spark, events_dir)
-    ev_e = stream_events(spark, events_dir)
-    q = run_click_error_join(
-        ev_c.filter(F.col("event_type") == "click"),
-        ev_e.filter(F.col("event_type") == "error"),
-        str(tmp_path / "pairs_out"),
-        str(tmp_path / "pairs_ckpt"),
-    )
-    q.awaitTermination(120)
-    streamed = {
-        (r["err_id"], r["click_ts"])
-        for r in spark.read.parquet(str(tmp_path / "pairs_out")).collect()
-    }
-
-    ev = load_table(spark, SF, "events")
-    batch = {
-        (r["err_id"], r["click_ts"])
-        for r in click_error_pairs(
-            ev.filter(F.col("event_type") == "click"),
-            ev.filter(F.col("event_type") == "error"),
-        ).collect()
-    }
-    assert streamed == batch
-    assert len(batch) > 0
-
-
-def test_stream_events_empty_dir_fails_fast(spark, tmp_path):
-    """An empty source directory can't be probed for the ts encoding;
-    guessing micros would crash the running query at runtime if nanos files
-    arrive, so stream definition must raise unless allow_empty=True."""
-    d = tmp_path / "empty_events"
-    d.mkdir()
-    with pytest.raises(FileNotFoundError, match="allow_empty"):
-        stream_events(spark, str(d))
-    # escape hatch: explicit opt-in starts (micros assumption, documented)
-    assert stream_events(spark, str(d), allow_empty=True).isStreaming
-
-
-def test_streaming_index_maintenance_equals_monolithic(spark, tmp_path):
-    """The NRT-segment story: base index over half the corpus, then the
-    rest arrives as a document STREAM drained via availableNow — each
-    micro-batch one appended segment. Aggregated BM25 stats and results
-    equal a monolithic full build; base segment files untouched; replaying
-    the stream from the same checkpoint appends nothing twice."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tweets_elastic_spark import indexing
-    from tweets_elastic_spark.functions.analyzers import analyze_text
-    from tweets_elastic_spark.plans.search import BM25Match, search
-    from tweets_elastic_spark.sources.catalog import load_table
-    from tweets_elastic_spark.streaming.indexing import (
-        run_streaming_index_maintenance,
-        stream_documents,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    docs = load_table(spark, sf, "documents")
-    emb = load_table(spark, sf, "embeddings")
-    src_half = str(tmp_path / "src_half")
-    src_full = str(tmp_path / "src_full")
-    for out, dpred, epred in (
-        (src_half, "doc_id <= 250", "vec_id <= 250"),
-        (src_full, "true", "true"),
-    ):
-        docs.filter(dpred).write.parquet(os.path.join(out, "documents.parquet"))
-        emb.filter(epred).write.parquet(os.path.join(out, "embeddings.parquet"))
-
-    idx_mono = indexing.build_index(spark, src_full, str(tmp_path / "idx_mono"))
-    idx_seg = indexing.build_index(spark, src_half, str(tmp_path / "idx_seg"))
-    base_dir = os.path.join(idx_seg, "documents_indexed", "segment=base")
-    base_files = {
-        os.path.join(r, f) for r, _, fs in os.walk(base_dir) for f in fs
-    }
-    base_mtimes = {f: os.path.getmtime(f) for f in base_files}
-
-    # the "arriving" docs: several parquet files so several micro-batches
-    stream_src = str(tmp_path / "arrivals")
-    docs.filter("doc_id > 250").repartition(4).write.parquet(stream_src)
-    ckpt = str(tmp_path / "ckpt")
-    q = run_streaming_index_maintenance(
-        stream_documents(spark, stream_src), idx_seg, ckpt
-    )
-    q.awaitTermination(120)
-
-    # replay from the same checkpoint: nothing new arrives, nothing doubles
-    q2 = run_streaming_index_maintenance(
-        stream_documents(spark, stream_src), idx_seg, ckpt
-    )
-    q2.awaitTermination(120)
-
-    assert {f: os.path.getmtime(f) for f in base_files} == base_mtimes
-
-    qtokens = analyze_text(spark, "spark merge", "custom_shingles")
-
-    def bm25_results(idx):
-        d = indexing.read_indexed_documents(spark, idx)
-        stats = indexing.bm25_stats_from_index(
-            spark, idx, "text__custom_shingles", qtokens
-        )
-        match = BM25Match(
-            [("text", "text__custom_shingles", 1.0)], "spark merge",
-            analyzer="custom_shingles", stats=stats,
-        )
-        out = search(d, match, k=None).select(
-            "doc_id", F.round("score", 6).alias("s")
-        )
-        return sorted((r["doc_id"], r["s"]) for r in out.collect())
-
-    assert bm25_results(idx_seg) == bm25_results(idx_mono)
-
-
-def test_stream_documents_requires_files(spark, tmp_path):
-    import pytest as _pytest
-
-    from tweets_elastic_spark.streaming.indexing import stream_documents
-
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    with _pytest.raises(FileNotFoundError, match="no parquet files"):
-        stream_documents(spark, str(empty))
 
 
 def test_delete_and_update_by_query(spark):

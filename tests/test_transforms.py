@@ -1,102 +1,10 @@
-"""ES transforms: batch pivot == direct aggregate; continuous transform
-keeps the dest at the latest per-group value across micro-batches."""
+"""ES rollups: a rollup job's buckets merge back to the raw aggregate, and
+its guards reject grains it cannot answer."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
-
-from tweets_elastic_spark.transforms import (
-    compile_pivot,
-    transform_batch,
-    transform_continuous,
-)
-
-DEF = {
-    "source": {"index": "events"},
-    "pivot": {
-        "group_by": {"etype": {"terms": {"field": "event_type"}}},
-        "aggregations": {
-            "total": {"sum": {"field": "value"}},
-            "hi": {"max": {"field": "value"}},
-        },
-    },
-    "dest": {"index": None},  # filled per test
-}
-
-
-@pytest.fixture(scope="module")
-def events(spark):
-    return spark.createDataFrame(
-        [(1, "click", 10.0), (2, "click", 20.0), (3, "view", 5.0),
-         (4, None, 7.0)],
-        "event_id long, event_type string, value double",
-    )
-
-
-def test_batch_transform(spark, events, tmp_path):
-    import copy
-
-    d = copy.deepcopy(DEF)
-    d["dest"]["index"] = str(tmp_path / "dest")
-    n = transform_batch(spark, events, d)
-    assert n == 2  # NULL group key drops, ES's contract
-    got = {r["etype"]: (r["doc_count"], r["total"], r["hi"], r["_id"])
-           for r in spark.read.parquet(d["dest"]["index"]).collect()}
-    assert got == {"click": (2, 30.0, 20.0, "click"),
-                   "view": (1, 5.0, 5.0, "view")}
-
-
-def test_continuous_transform_merges(spark, tmp_path):
-    import copy
-
-    d = copy.deepcopy(DEF)
-    dest = str(tmp_path / "cdest")
-    d["dest"]["index"] = dest
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-    schema = "event_id long, event_type string, value double"
-
-    def drop(rows, name):
-        df = spark.createDataFrame(rows, schema)
-        tmp = str(tmp_path / ("stage_" + name))
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        for f in os.listdir(tmp):
-            if f.endswith(".parquet"):
-                os.replace(os.path.join(tmp, f),
-                           os.path.join(src_dir, name))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = transform_continuous(
-            stream, d, checkpoint=str(tmp_path / "ckpt"))
-        # availableNow isn't exposed by the helper; emulate with
-        # processing-time stop-after-idle: process all available files
-        q.processAllAvailable()
-        q.stop()
-
-    drop([(1, "click", 10.0), (2, "view", 5.0)], "p0.parquet")
-    run()
-    got = {r["etype"]: r["total"]
-           for r in spark.read.parquet(dest).collect()}
-    assert got == {"click": 10.0, "view": 5.0}
-
-    # second drop updates one group, leaves the other untouched
-    drop([(3, "click", 30.0)], "p1.parquet")
-    run()
-    got = {r["etype"]: (r["doc_count"], r["total"])
-           for r in spark.read.parquet(dest).collect()}
-    assert got == {"click": (2, 40.0), "view": (1, 5.0)}
-
-
-def test_pivot_guards(spark, events):
-    with pytest.raises(ValueError, match="group_by"):
-        compile_pivot(events, {"group_by": {}})
-    with pytest.raises(ValueError, match="unsupported transform group_by"):
-        compile_pivot(events, {"group_by":
-                               {"g": {"rare_terms": {"field": "x"}}}})
 
 
 def test_rollup_merge_and_guards(spark):

@@ -263,6 +263,38 @@ def test_incremental_etl_pages_union_to_full(spark, tmp_path):
             assert b[doc_id] == j, f"doc {doc_id} differs"
 
 
+def test_incremental_etl_replay_does_not_duplicate(spark, tmp_path):
+    """A crash between the page write and the watermark advance replays
+    the same page into the same ``ingest_wm`` partition (overwrite), so the
+    sink keeps the same rows and no id twice — effectively-once without a
+    transactional sink."""
+    from tweets_elastic_spark.pipeline import etl_increment
+    from tweets_elastic_spark.sinks import document_json
+    from tweets_elastic_spark.sources.incremental import WatermarkStore
+
+    tables = make_tweets_tables(spark, n_conversations=30)
+    src = tmp_path / "src"
+    for name, df in tables.items():
+        df.write.parquet(str(src / f"{name}.parquet"))
+    sink = str(tmp_path / "inc")
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    store.set("conversations.id", 0)
+
+    def sink_rows():
+        docs = spark.read.parquet(sink)
+        return sorted((r["id"], r["json"]) for r in document_json(docs).collect())
+
+    assert etl_increment(spark, str(src), sink, store, page_limit=20) == 20
+    first = sink_rows()
+    # the crash: the watermark rolls back as if store.set never ran
+    store.set("conversations.id", 0)
+    assert etl_increment(spark, str(src), sink, store, page_limit=20) == 20
+    again = sink_rows()
+    assert again == first
+    ids = [i for i, _ in again]
+    assert len(ids) == len(set(ids)) == 20
+
+
 def test_backfill_then_compact_equals_full_build(spark, tmp_path):
     """The cross-increment overwrite-by-id story end-to-end: conversations
     arrive in two batches, then the watermark is REWOUND (a backfill — the

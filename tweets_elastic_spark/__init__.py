@@ -11,10 +11,11 @@ multimodal plumbing) such an engine needs at 100 TB.
 Layout:
     session.py            SparkSession factory with scale-aware defaults
     schemas.py            declared StructTypes (strict schemas, SURVEY §1.2)
-    sources/              table catalog, fixture synthesis, incremental
-                          scans, JSONL/CSV interchange with quarantine
+    sources/              table catalog, fixture synthesis, keyset
+                          watermark, JSONL interchange with quarantine,
+                          WARC records
     operators/            denormalize, dedup, similarity/ANN, curation,
-                          DSIR/BPE/sampling, percolate, vectorize, layout
+                          DSIR/BPE/sampling, percolate, vectorize
     functions/            analyzers, text stats, hashing, vector math,
                           PII, multimodal
     plans/                search-query layer (JSON DSL + Lucene
@@ -22,8 +23,8 @@ Layout:
                           aggregations DSL + request envelope, REST-API
                           surface (_count/_msearch/_field_caps/
                           _termvectors)
-    streaming/            windowed aggs, stateful ops, stream joins,
-                          dedup, foreachBatch ingest, NRT index segments
+    streaming/            windowed aggs (one function for batch and
+                          streaming DataFrames)
     indexing.py           analyze-once index build/increment/compact,
                           suggesters, stats
     queries/ registry.py  the named-query corpus + DuckDB oracles the

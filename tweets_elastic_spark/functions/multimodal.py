@@ -21,11 +21,10 @@ formats the Python stdlib can handle and clearly-marked stubs for the rest:
   ``functions/mp3``).
 * **Gated native (r11)**: decoding those containers' SAMPLES — H.264
   pixels, Layer-III PCM — goes through the ffmpeg seam at the bottom of
-  this module (``decode_video_frames_native`` / ``decode_audio_pcm_native``
-  + the ``decode_video_frames`` mapInPandas operator), the exact policy
-  ``functions/png`` applies to Pillow: real invocation wherever ffmpeg
-  exists (skip-gated pytest), loud ``NotImplementedError`` here where it
-  doesn't. ``resize_images`` and other pixel paths still refuse for
+  this module (``decode_video_frames_native`` / ``decode_audio_pcm_native``),
+  the exact policy ``functions/png`` applies to Pillow: real invocation
+  wherever ffmpeg exists (skip-gated pytest), loud ``NotImplementedError``
+  here where it doesn't. ``resize_images`` and other pixel paths still refuse for
   these mimes so the boundary is unmistakable. The deterministic fake
   (``application/x-fake``, byte-length pseudo-dims) keeps the plumbing
   testable at scale.
@@ -546,37 +545,3 @@ def decode_audio_pcm_native(payload: bytes) -> np.ndarray:
         ["-f", "s16le", "-acodec", "pcm_s16le", "-ac", "1"],
     )
     return np.frombuffer(out, np.int16)
-
-
-DECODED_FRAMES_SCHEMA = (
-    "asset_id long, frame_idx int, width int, height int, pixel_sha string"
-)
-
-
-def decode_video_frames(assets: DataFrame, n_frames: int = 4) -> DataFrame:
-    """The Spark-side seam over ``decode_video_frames_native``: 1→N rows
-    per MP4 asset with each DECODED frame's dimensions and pixel-bytes
-    sha256 (the decoded-pixel analogue of sample_frames' container-level
-    addressing). Same scale shape as every multimodal op: mapInPandas,
-    narrow, payload never shuffles — only 8-byte-scale sketch columns
-    leave the scan. Fails loudly (per batch) when ffmpeg is absent."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, shas = [], [], [], [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                frames = decode_video_frames_native(bytes(payload), n_frames)
-                for i, fr in enumerate(frames):
-                    ids.append(aid)
-                    idxs.append(i)
-                    hs.append(fr.shape[0])
-                    ws.append(fr.shape[1])
-                    shas.append(hashlib.sha256(fr.tobytes()).hexdigest())
-            yield pd.DataFrame({
-                "asset_id": ids, "frame_idx": idxs,
-                "width": ws, "height": hs, "pixel_sha": shas,
-            })
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        sample, DECODED_FRAMES_SCHEMA
-    )

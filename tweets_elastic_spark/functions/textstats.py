@@ -157,10 +157,6 @@ def _features_from(toks: Column, c: Column) -> dict[str, Column]:
     }
 
 
-def quality_features(c: Column) -> dict[str, Column]:
-    return _features_from(simple_tokens(c), c)
-
-
 def _combined_quality(c: Column, combine) -> Column:
     """``combine(features)`` with the tokenization AND the feature scalars
     each bound once (two _bind levels): one regexp split + one pass per

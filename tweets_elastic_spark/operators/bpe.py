@@ -176,9 +176,3 @@ def bpe_encode(
         return texts.map(enc)
 
     return docs.withColumn(out_col, _encode(F.col(text_col)))
-
-
-def bpe_vocab(merges: list[tuple[str, str]]) -> list[str]:
-    """The subword vocabulary implied by the merges (chars come from data
-    at encode time; this is the learned-units part)."""
-    return [a + b for a, b in merges]

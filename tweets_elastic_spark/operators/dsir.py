@@ -41,8 +41,6 @@ engine along SURVEY §6's LLM-training-data north star.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -188,9 +186,3 @@ def dsir_sample(
     )
     top = keyed.orderBy(F.col("key").desc(), F.col(id_col).asc()).limit(k)
     return raw.join(top, id_col)
-
-
-def math_check() -> None:
-    """Self-check for the Gumbel transform (unit-test hook)."""
-    u = 0.5
-    assert abs(-math.log(-math.log(u)) - 0.3665129205816643) < 1e-12

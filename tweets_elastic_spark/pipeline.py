@@ -18,7 +18,7 @@ documents, advancing ``last_id`` } (src/main.py:106-162). Here:
   because it also feeds the parent-hashtag lookup for parents outside the
   page. Watermark stats ride the write job (observe()); each increment
   lands in a deterministic ``ingest_wm=<wm>`` partition so crash replays
-  overwrite instead of duplicating (see sources/incremental.py).
+  overwrite instead of duplicating.
 
 Both writers use the same ``ingest_wm=…`` partition layout (``-1`` for the
 one-shot build), so a sink stays readable with plain

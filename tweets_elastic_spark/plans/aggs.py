@@ -3603,10 +3603,8 @@ def es_request(
     df: DataFrame,
     request: dict,
     *,
-    analyzers: dict[str, str] | None = None,
-    tokens_cols: dict[str, str] | None = None,
-    nested_paths=frozenset(),
     tiebreak: str | None = None,
+    **bindings,
 ) -> DataFrame:
     """Execute a full ES search-request envelope: optional ``query``
     (compiled by plans.search.from_es_json) filters the scan; ``aggs``
@@ -3615,7 +3613,13 @@ def es_request(
     ES's explicit-sort shape) or by score when no sort is given, truncated
     to ``size``, projected to ``_source`` when present. Explicit sort +
     size compiles to TakeOrderedAndProject, the same per-partition-top-k /
-    merge plan relevance queries get."""
+    merge plan relevance queries get.
+
+    ``bindings`` are ``from_es_json``'s keywords (``analyzers``,
+    ``tokens_cols``, ``nested_paths``, ``id_field``, ``bm25_stats_for``,
+    ...), passed to every query the request compiles, so a request scores
+    exactly like ``from_es_json`` + ``search``."""
+    analyzers = bindings.get("analyzers")
     body = dict(request)
     rt = body.get("runtime_mappings")
     if rt is not None:
@@ -3682,15 +3686,12 @@ def es_request(
             )
         return es_retriever(
             df, retr, id_col=tiebreak, size=int(body.get("size", 10)),
-            analyzers=analyzers, tokens_cols=tokens_cols,
+            analyzers=analyzers, tokens_cols=bindings.get("tokens_cols"),
         )
     q = body.get("query")
     aggs = body.get("aggs", body.get("aggregations"))
     if q is not None:
-        tree = from_es_json(
-            {"query": q}, analyzers=analyzers, tokens_cols=tokens_cols,
-            nested_paths=nested_paths,
-        )
+        tree = from_es_json({"query": q}, **bindings)
     else:
         tree = None
     knn = body.get("knn")
@@ -3730,10 +3731,7 @@ def es_request(
         scan = df
         flt = knn.get("filter")
         if flt is not None:
-            ftree = from_es_json(
-                flt, analyzers=analyzers, tokens_cols=tokens_cols,
-                nested_paths=nested_paths,
-            )
+            ftree = from_es_json(flt, **bindings)
             scan = scan.filter(ftree.predicate(df.sparkSession, F.col))
         sim = cosine(col_sql(knn["field"]), vec_sql(knn["query_vector"]))
         out = (
@@ -3946,10 +3944,7 @@ def es_request(
             qw = float(rbody.get("query_weight", 1.0))
             rqw = float(rbody.get("rescore_query_weight", 1.0))
             mode = rbody.get("score_mode", "total")
-            rtree = from_es_json(
-                rbody["rescore_query"], analyzers=analyzers,
-                tokens_cols=tokens_cols, nested_paths=nested_paths,
-            )
+            rtree = from_es_json(rbody["rescore_query"], **bindings)
             win = search(df, tree, k=window, tiebreak=tiebreak)
             spark_ = df.sparkSession
             orig = F.col("score") * F.lit(qw)

@@ -22,7 +22,7 @@ for text fields. Real relevance is ``BM25Match``, the one BM25 node:
 Okapi BM25 over one or more weighted materialized token columns — one for
 ``match``, several for the ``combined_fields`` pseudo-field — priced by
 one statistics contract, ``bm25_stats`` behind a ``(columns, analyzer,
-text)`` provider (corpus- or index-backed). ``bm25_match`` is the one
+text)`` provider (corpus- or index-backed). ``bm25_bound`` is the one
 place that chooses BM25 over token overlap for a clause; the JSON DSL
 (``from_es_json(..., bm25_stats_for=...)``) and the ES-SQL / ES|QL
 ``MATCH`` builder both ask it, so bound ``match``/``multi_match`` clauses
@@ -1294,6 +1294,30 @@ class BM25Match(Query):
         return total
 
 
+def bm25_bound(
+    field: str,
+    analyzers: dict[str, str],
+    tokens_cols: dict[str, str],
+    bm25_stats_for,
+    *,
+    fuzziness: object = None,
+    nested_paths=frozenset(),
+) -> bool:
+    """The one choice between BM25 and token-overlap scoring for a text
+    clause on ``field``: True when a stats provider is given and the field
+    has BOTH an analyzer and a token-column binding — what ES does for
+    text fields. Deliberate fallbacks to overlap scoring, each the
+    documented v1 semantics: fuzziness (ES BM25-scores fuzzy expansions
+    per expanded term — needs the term dictionary) and fields under a
+    nested path (ES nested scoring modes). Asks no provider, so a
+    ``multi_match`` settles every field before any statistics lookup."""
+    return (bm25_stats_for is not None
+            and analyzers.get(field) is not None
+            and tokens_cols.get(field) is not None
+            and fuzziness is None
+            and not any(field.startswith(np + ".") for np in nested_paths))
+
+
 def bm25_match(
     field: str,
     text: str,
@@ -1307,21 +1331,14 @@ def bm25_match(
     nested_paths=frozenset(),
     boost: float = 1.0,
 ) -> BM25Match | None:
-    """The one choice between BM25 and token-overlap scoring for a text
-    clause on ``field`` (``from_es_json``'s ``match``/``multi_match`` and
-    the ES-SQL / ES|QL ``MATCH`` builder all ask it): a ``BM25Match`` when
-    a stats provider is given and the field has BOTH an analyzer and a
-    token-column binding — what ES does for text fields — else None, and
-    the caller builds the overlap/keyword ``Match``. Deliberate fallbacks
-    to overlap scoring, each the documented v1 semantics: fuzziness (ES
-    BM25-scores fuzzy expansions per expanded term — needs the term
-    dictionary) and fields under a nested path (ES nested scoring
-    modes)."""
-    analyzer, tok_col = analyzers.get(field), tokens_cols.get(field)
-    if (bm25_stats_for is None or analyzer is None or tok_col is None
-            or fuzziness is not None
-            or any(field.startswith(np + ".") for np in nested_paths)):
+    """A ``BM25Match`` for a text clause on ``field`` when ``bm25_bound``
+    says so, else None and the caller builds the overlap/keyword ``Match``
+    (``from_es_json``'s ``match``/``multi_match`` and the ES-SQL / ES|QL
+    ``MATCH`` builder all ask it)."""
+    if not bm25_bound(field, analyzers, tokens_cols, bm25_stats_for,
+                      fuzziness=fuzziness, nested_paths=nested_paths):
         return None
+    analyzer, tok_col = analyzers[field], tokens_cols[field]
     return BM25Match(
         [(field, tok_col, 1.0)], text, analyzer,
         stats=bm25_stats_for(((tok_col, 1.0),), analyzer, text),
@@ -2465,22 +2482,23 @@ def from_es_json(
     index's term dictionary and serves ONE column only — the index stores
     per-column dictionaries, so the union document frequency a
     several-column ``combined_fields`` needs is not there (it raises
-    ``ValueError``). ``bm25_match`` makes the BM25-or-overlap choice per
+    ``ValueError``). ``bm25_bound`` makes the BM25-or-overlap choice per
     field: a ``match`` whose field has BOTH an analyzer and a tokens_col
     binding compiles to ``BM25Match`` instead of token-overlap scoring
     (``operator``/``minimum_should_match`` carry over; they gate the
     candidate set, BM25 scores it); a ``multi_match`` whose fields ALL
-    have both bindings compiles to per-field BM25 legs with
-    ``field^boost`` multiplying that field's BM25 score, otherwise to
-    overlap ``Match`` legs worth their boost — combined per its ``type``
-    either way: ``best_fields`` → ``DisMax`` (over ``ConstantScore``
-    overlap legs), ``most_fields`` → score-summing ``Bool``.
+    have both bindings (settled before any statistics lookup) compiles to
+    per-field BM25 legs with ``field^boost`` multiplying that field's BM25
+    score, otherwise to overlap ``Match`` legs worth their boost —
+    combined per its ``type`` either way: ``best_fields`` → ``DisMax``
+    (over ``ConstantScore`` overlap legs), ``most_fields`` →
+    score-summing ``Bool``.
     ``combined_fields`` requires the provider: no constant-score fallback
     keeps its meaning. Everything else is unchanged, so the reference
     artifact (elastic_queries.json — keyword match inside a nested scope,
     constant ``weight: 5``) compiles to the IDENTICAL tree with or without
     a provider (pinned by test). Deliberate fallbacks to overlap scoring
-    are listed on ``bm25_match``; inside an explicit ``nested`` clause
+    are listed on ``bm25_bound``; inside an explicit ``nested`` clause
     every match scores by overlap too (ES nested scoring modes)."""
     analyzers = analyzers or {}
     tokens_cols = tokens_cols or {}
@@ -2798,10 +2816,14 @@ def from_es_json(
                     "tie_breaker applies to best_fields (most_fields "
                     "already sums every matching leg)"
                 )
-            legs = [bm25_or_none(f, body["query"], scope, boost=b)
-                    for f, b in fields]
-            if all(leg is not None for leg in legs):
+            if scope is None and all(
+                bm25_bound(f, analyzers, tokens_cols, bm25_stats_for,
+                           nested_paths=nested_paths)
+                for f, _ in fields
+            ):
                 # all fields BM25-scorable → per-field legs, boost inside
+                legs = [bm25_or_none(f, body["query"], scope, boost=b)
+                        for f, b in fields]
                 should = [(leg, 1.0) for leg in legs]
             else:
                 # token overlap: each matching field is worth its boost

@@ -1,7 +1,7 @@
 """Event-time window queries over the events table (SURVEY §2.9 extension:
 the reference has no windows; the engine ships tumbling/sliding/session).
-The same functions power the Structured-Streaming entry points
-(streaming/ingest.py) — registered here in batch mode for the oracle gate.
+The same functions accept a streaming DataFrame unchanged — registered here
+in batch mode for the oracle gate.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from tweets_elastic_spark.streaming.windows import (
     FROM events
     GROUP BY 1, 2
     """,
-    doc="Tumbling event-time window + agg (streaming twin in streaming/ingest.py).",
+    doc="Tumbling event-time window + agg.",
 )
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_counts(load_table(spark, sf_dir, "events"), "1 hour")

@@ -9,7 +9,7 @@ compares row-count + schema + order-insensitive value-hash at sf=0.01
 * Keep result types hash-stable across engines: counts → BIGINT, money →
   exact DECIMAL sums cast to DOUBLE once at the end (bit-identical both
   sides), arrays → sorted arrays of primitives.
-* Ops that SQL can't express (stateful streaming, LSH internals) register
+* Ops that SQL can't express (LSH internals) register
   with ``oracle=None`` → the driver records a weaker rows-only check.
 """
 

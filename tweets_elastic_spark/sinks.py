@@ -30,6 +30,8 @@ import shutil
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.sources.jsonl import write_jsonl
+
 
 def write_documents(
     df: DataFrame,
@@ -220,11 +222,10 @@ def write_documents_json(
 ) -> None:
     """JSON-lines sink variant of write_documents (S8 + P6): one
     ``{"id": ..., "json": "..."}`` line per document — the bulk-request
-    body the reference ships over HTTP, materialized as files."""
-    out = document_json(df, id_col)
-    if target_file_partitions is not None:
-        out = out.repartition(target_file_partitions)
-    out.write.mode(mode).json(path)
+    body the reference ships over HTTP, materialized as files by the one
+    JSON-lines writer, ``sources.jsonl.write_jsonl``."""
+    write_jsonl(document_json(df, id_col), path, mode=mode,
+                target_file_partitions=target_file_partitions)
 
 
 def validate_split(

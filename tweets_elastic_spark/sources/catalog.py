@@ -47,7 +47,7 @@ def parquet_ts_is_nanos(path: str, col: str) -> bool:
     directory is assumed — mixed-encoding directories would need per-file
     dispatch, which Spark's one-schema-per-scan model can't express
     anyway). An EMPTY directory returns False WITHOUT caching, so a
-    stream started before its first file arrives re-probes on the next
+    directory read before its first file arrives re-probes on the next
     call instead of pinning a guess forever."""
     if os.path.isdir(path):
         parts = sorted(
@@ -87,10 +87,6 @@ def _declared_ts_cols(schema: StructType) -> list[str]:
     from pyspark.sql.types import TimestampType
 
     return [f.name for f in schema.fields if isinstance(f.dataType, TimestampType)]
-
-
-def events_raw_schema() -> StructType:
-    return _raw_long_schema(TESTDATA_TABLES["events"], ["ts"])
 
 
 def _raw_long_schema(base: StructType, long_cols: list[str]) -> StructType:

@@ -1,28 +1,19 @@
-"""Watermark-based incremental ingestion (SURVEY §2.1 S3).
+"""Durable keyset watermark for incremental ingestion (SURVEY §2.1 S3).
 
 The reference paginates with a keyset loop — ``WHERE c.id > last_id ORDER BY
 c.id LIMIT n`` (src/main.py:98-100,118-124) — holding ``last_id`` as its
-only checkpoint state (src/main.py:143). In Spark the *parallel scan* makes
-pagination unnecessary; what remains useful is the re-runnable increment:
-"give me everything past the watermark, then advance it". That is this
-module: a JSON-file watermark store (the ``last_id`` variable made durable)
-plus a filter-past-watermark reader whose predicate pushes down to the scan.
-
-The Structured-Streaming variant of the same idea lives in
-streaming/ingest.py (checkpointed foreachBatch). At 100 TB: the watermark
-predicate prunes row groups via parquet min/max stats, so an increment
-touches only new files — no full-table rescan.
+only checkpoint state (src/main.py:143). ``WatermarkStore`` is that variable
+made durable: ``pipeline.etl_increment`` reads it, documents the page past
+it and advances it, and ``indexing.index_increment`` keeps its own entry
+the same way. At 100 TB: the watermark predicate prunes row groups via
+parquet min/max stats, so an increment touches only new files — no
+full-table rescan.
 """
 
 from __future__ import annotations
 
 import json
 import os
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from tweets_elastic_spark.sources.catalog import load_table
 
 
 class WatermarkStore:
@@ -49,61 +40,3 @@ class WatermarkStore:
             json.dump(state, f)
         os.replace(tmp, self.path)
 
-
-def read_increment(
-    spark: SparkSession, sf_dir: str, table: str, key: str, watermark: int
-) -> DataFrame:
-    """Everything past the watermark (F1). The ``>`` predicate reaches the
-    parquet scan (PushedFilters), so old row groups are skipped via
-    min/max stats rather than read-and-discarded."""
-    return load_table(spark, sf_dir, table).filter(F.col(key) > F.lit(watermark))
-
-
-def ingest_increment(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    key: str,
-    sink_path: str,
-    store: WatermarkStore,
-) -> int:
-    """One incremental batch: read past watermark, write it, advance the
-    watermark. Returns rows ingested (0 = caught up — the reference's
-    loop-termination condition, src/main.py:161-162).
-
-    Two failure modes of the naive read-stats-then-write version are closed:
-
-    * Stats (count/max) ride the write job itself via ``observe()`` — ONE
-      scan serves both, so rows landing in the source between two separate
-      scans can no longer be written yet left above the recorded watermark
-      (they arrive with the next increment instead).
-    * Each increment writes to a deterministic partition directory
-      ``ingest_wm=<old watermark>`` with overwrite semantics. A crash
-      between the write and ``store.set`` replays the SAME increment into
-      the SAME directory — at-least-once becomes effectively-once without
-      a transactional sink. Readers see the batch lineage as an
-      ``ingest_wm`` partition column (``spark.read.parquet(sink_path)``)."""
-    from pyspark.sql import Observation
-
-    wm = store.get(f"{table}.{key}")
-    inc = read_increment(spark, sf_dir, table, key, wm)
-    # caught up? cheap limit-1 probe (the > predicate is pushed down, so an
-    # idle poll reads footers, not data) — without it every poll would run
-    # a write job and litter an empty ingest_wm partition
-    if inc.isEmpty():
-        return 0
-    # A4 analogue: running counters ride the write job via observe() — the
-    # reference's processed_rows/last_id bookkeeping (src/main.py:112-156)
-    # without a second scan. ONE pass computes stats AND writes, so the
-    # recorded watermark describes exactly the rows that were written.
-    obs = Observation()
-    inc = inc.observe(
-        obs, F.count(F.lit(1)).alias("n"), F.max(F.col(key)).alias("mx")
-    )
-    inc.write.mode("overwrite").parquet(os.path.join(sink_path, f"ingest_wm={wm}"))
-    metrics = obs.get
-    n, mx = metrics["n"], metrics["mx"]
-    if n == 0:
-        return 0
-    store.set(f"{table}.{key}", int(mx))
-    return int(n)

@@ -69,22 +69,15 @@ def read_jsonl(
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
         ).alias("_parsed"),
     )
-    return split_parsed(raw)
-
-
-def split_parsed(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split a (value, _parsed) relation into (valid, quarantine) — the
-    shared tail of read_jsonl and sources/delimited.read_delimited. A row
-    is quarantined when the parse flagged it corrupt, when the parse
-    expression returned a NULL struct, or when the line is blank:
-    ``from_json('')`` yields a NULL struct and ``from_csv('')`` an
-    all-NULL struct, each WITHOUT setting the corrupt column — silently
-    admitting either would inject all-NULL rows into the valid leg, the
-    exact failure the quarantine channel exists to surface."""
-    corrupt = F.col(f"_parsed.{CORRUPT_COL}")
+    # A row is quarantined when the parse flagged it corrupt, when the
+    # parse returned a NULL struct, or when the line is blank:
+    # ``from_json('')`` yields a NULL struct WITHOUT setting the corrupt
+    # column, and silently admitting it would inject an all-NULL row into
+    # the valid leg, the exact failure the quarantine channel exists to
+    # surface.
     bad = (
         F.col("_parsed").isNull()
-        | corrupt.isNotNull()
+        | F.col(f"_parsed.{CORRUPT_COL}").isNotNull()
         | (F.trim(F.col("value")) == "")
     )
     valid = raw.filter(~bad).select("_parsed.*").drop(CORRUPT_COL)

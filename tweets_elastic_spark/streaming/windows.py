@@ -4,8 +4,8 @@ The reference has no streaming operators — its closest construct is the
 hand-rolled keyset micro-batch loop. The fixtures ship an ``events`` table
 specifically so the engine demonstrates the Structured-Streaming surface:
 tumbling / sliding / session windows, all written so the SAME function works
-on a batch DataFrame and on a streaming one (the Spark unification), with
-watermarks added by the streaming entry points in ingest.py.
+on a batch DataFrame and on a streaming one (the Spark unification); a
+streaming caller adds its own watermark before calling them.
 
 Exact decimal sums (cast once to double) keep results bit-stable across
 partial-aggregation orders — required for oracle comparison and a good idea
