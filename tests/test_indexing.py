@@ -256,9 +256,10 @@ def test_bm25_stats_lookup_is_one_job_and_provider_follows_segments(
 
 def test_request_envelopes_score_like_from_es_json(spark, index_dir):
     """BM25 ``match`` and ``multi_match`` requests shaped like the search
-    benchmark's return the same ids and scores through ``es_request``,
-    ``es_msearch`` and ``from_es_json`` + ``search``: the envelopes hand
-    the index provider to every query they compile."""
+    benchmark's, and a ``standard`` retriever around the ``match``, return
+    the same ids and scores through ``es_request``, ``es_msearch`` and
+    ``from_es_json`` + ``search``: the envelopes hand the index provider to
+    every query they compile."""
     from tweets_elastic_spark.plans.aggs import es_request
     from tweets_elastic_spark.plans.api import es_msearch
     from tweets_elastic_spark.plans.search import from_es_json, search
@@ -270,22 +271,25 @@ def test_request_envelopes_score_like_from_es_json(spark, index_dir):
         id_field="doc_id",
         bm25_stats_for=indexing.index_bm25_provider(spark, index_dir),
     )
+    match = {"bool": {
+        "should": [{"match": {"text": {"query": "spark merge"}}}],
+        "filter": [{"term": {"lang": "en"}},
+                   {"match": {"text": "spark merge"}}]}}
+    multi = {"multi_match": {"query": "spark merge", "fields": ["text^2"],
+                             "type": "most_fields"}}
+    queries = [match, multi, match]
     requests = [
-        {"query": {"bool": {
-            "should": [{"match": {"text": {"query": "spark merge"}}}],
-            "filter": [{"term": {"lang": "en"}},
-                       {"match": {"text": "spark merge"}}]}}, "size": 10},
-        {"query": {"multi_match": {"query": "spark merge",
-                                   "fields": ["text^2"],
-                                   "type": "most_fields"}}, "size": 10},
+        {"query": match, "size": 10},
+        {"query": multi, "size": 10},
+        {"retriever": {"standard": {"query": match}}, "size": 10},
     ]
 
     def rows(df):
         return [(r["doc_id"], round(r["score"], 6))
                 for r in df.select("doc_id", "score").collect()]
 
-    want = [rows(search(docs, from_es_json({"query": r["query"]}, **bindings),
-                        k=10, tiebreak="doc_id")) for r in requests]
+    want = [rows(search(docs, from_es_json({"query": q}, **bindings),
+                        k=10, tiebreak="doc_id")) for q in queries]
     # BM25 scores vary by document; overlap legs would score a constant
     assert all(len({s for _, s in w}) > 1 for w in want)
     assert [rows(es_request(docs, r, tiebreak="doc_id", **bindings))

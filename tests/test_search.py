@@ -4,6 +4,8 @@ operator-level checks for the DSL nodes."""
 
 from __future__ import annotations
 
+import gc
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -60,6 +62,62 @@ def test_reference_query_topk_deterministic(spark, docs_df, docs_py):
         for r in search(docs_df, reference_query(), k=10, tiebreak="id").collect()
     ]
     assert got == top
+
+
+def test_request_compile_py4j_budget(spark, docs_df, py4j_commands):
+    """Compiling the search benchmark's reference request and its sorted
+    ``search_after`` page stays within a Py4J command budget. With
+    PySpark's per-call call-site capture on, every Column method adds five
+    round trips: 305 and 221 commands against 115 and 61 without it."""
+    from tweets_elastic_spark.plans.aggs import es_request
+    from tweets_elastic_spark.plans.search import from_es_json
+
+    nested = frozenset({"context_annotations", "conversation_hashtags",
+                        "annotations", "links", "conversation_references"})
+    reference = {"query": {"function_score": {"query": {"bool": {
+        "should": [{"query": {"nested": {
+            "path": "context_annotations",
+            "query": {"match": {"context_annotations.domain.name": "Person"}}}},
+            "weight": 5}],
+        "filter": [
+            {"range": {"author.following_count": {"gt": 1}}},
+            {"range": {"author.followers_count": {"gt": 1}}},
+            {"nested": {"path": "links", "query": {"exists": {"field": "url"}}}},
+        ]}}}}}
+    page = {"query": {"term": {"language": "en"}},
+            "sort": [{"like_count": "desc"}], "search_after": [2, 500],
+            "size": 10, "_source": ["id", "like_count"]}
+
+    def commands(compile_request):
+        # the fewest of three compiles: a garbage collection inside the
+        # block would add one release command per freed JVM reference
+        counts = []
+        for _ in range(3):
+            gc.collect()
+            with py4j_commands() as n:
+                compile_request()
+            counts.append(n[0])
+        return min(counts)
+
+    assert commands(lambda: search(
+        docs_df, from_es_json(reference, nested_paths=nested, id_field="id"),
+        k=10, tiebreak="id").select("id", "score")) < 200
+    assert commands(lambda: es_request(
+        docs_df, page, nested_paths=nested, tiebreak="id")) < 140
+
+
+def test_missing_field_error_names_field(spark, docs_df):
+    """Sessions from ``get_spark`` turn PySpark's call-site capture off.
+    An error still carries Spark's error class and names the field."""
+    from pyspark.errors import AnalysisException
+
+    from tweets_elastic_spark.plans.search import from_es_json
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    q = from_es_json({"range": {"no_such_field": {"gt": 1}}})
+    with pytest.raises(AnalysisException, match="no_such_field") as err:
+        search(docs_df, q, k=10, tiebreak="id").collect()
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
 
 
 def test_match_all_count(spark, docs_df):

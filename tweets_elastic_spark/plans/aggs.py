@@ -3686,7 +3686,7 @@ def es_request(
             )
         return es_retriever(
             df, retr, id_col=tiebreak, size=int(body.get("size", 10)),
-            analyzers=analyzers, tokens_cols=bindings.get("tokens_cols"),
+            **bindings,
         )
     q = body.get("query")
     aggs = body.get("aggs", body.get("aggregations"))

@@ -3890,8 +3890,7 @@ def es_retriever(
     *,
     id_col: str = "doc_id",
     size: int = 10,
-    analyzers: dict[str, str] | None = None,
-    tokens_cols: dict[str, str] | None = None,
+    **bindings,
 ) -> DataFrame:
     """ES 8.14+ ``retriever`` tree: the request-level composition surface
     that replaced the top-level query/knn/rank split. Leaves produce a
@@ -3924,7 +3923,12 @@ def es_retriever(
     coordinator-side shape rrf_fuse documents. Ties everywhere break by
     ``id_col`` ascending (ES's internal-doc-id tiebreak is not
     reproducible; the explicit key is the same determinism trade as
-    search()'s tiebreak)."""
+    search()'s tiebreak).
+
+    ``bindings`` are ``from_es_json``'s keywords (``analyzers``,
+    ``tokens_cols``, ``bm25_stats_for``, ...), passed to every query the
+    tree compiles, so a ``standard`` leg scores exactly like
+    ``from_es_json`` + ``search``."""
     if not (isinstance(retriever, dict) and len(retriever) == 1):
         raise ValueError(
             f"a retriever is one {{kind: body}} object, got {retriever!r}"
@@ -3952,12 +3956,10 @@ def es_retriever(
             )
         scan = df
         if body.get("filter") is not None:
-            pre = from_es_json({"query": body["filter"]},
-                               analyzers=analyzers, tokens_cols=tokens_cols)
+            pre = from_es_json({"query": body["filter"]}, **bindings)
             scan = scan.filter(pre.predicate(scan.sparkSession,
                                              _col_resolver))
-        tree = from_es_json({"query": body["query"]}, analyzers=analyzers,
-                            tokens_cols=tokens_cols)
+        tree = from_es_json({"query": body["query"]}, **bindings)
         return ranked(search(scan, tree, k=None), size)
     if kind == "knn":
         extra = set(body) - {"field", "query_vector", "k",
@@ -3968,8 +3970,7 @@ def es_retriever(
             )
         scan = df
         if body.get("filter") is not None:
-            pre = from_es_json({"query": body["filter"]},
-                               analyzers=analyzers, tokens_cols=tokens_cols)
+            pre = from_es_json({"query": body["filter"]}, **bindings)
             scan = scan.filter(pre.predicate(scan.sparkSession,
                                              _col_resolver))
         k = int(body.get("k", size))
@@ -4010,8 +4011,7 @@ def es_retriever(
 
         window = int(body.get("rank_window_size", size))
         leg = es_retriever(df, child, id_col=id_col, size=window,
-                           analyzers=analyzers, tokens_cols=tokens_cols
-                           ).select(id_col)
+                           **bindings).select(id_col)
         qtok = sorted(set(analyze_text(df.sparkSession, qtext, "standard")))
         doctoks = F.array_distinct(analyze(F.col(field), "standard"))
         qarr = F.array(*[F.lit(t) for t in qtok])
@@ -4040,14 +4040,12 @@ def es_retriever(
             raise ValueError("rrf retriever needs >= 2 child retrievers")
         scan = df
         if body.get("filter") is not None:
-            pre = from_es_json({"query": body["filter"]},
-                               analyzers=analyzers, tokens_cols=tokens_cols)
+            pre = from_es_json({"query": body["filter"]}, **bindings)
             scan = scan.filter(pre.predicate(scan.sparkSession,
                                              _col_resolver))
         window = int(body.get("rank_window_size", size))
         legs = [
-            es_retriever(scan, c, id_col=id_col, size=window,
-                         analyzers=analyzers, tokens_cols=tokens_cols)
+            es_retriever(scan, c, id_col=id_col, size=window, **bindings)
             .select(id_col, "score")
             for c in children
         ]
@@ -4064,8 +4062,7 @@ def es_retriever(
             raise ValueError("linear retriever needs child retrievers")
         scan = df
         if body.get("filter") is not None:
-            pre = from_es_json({"query": body["filter"]},
-                               analyzers=analyzers, tokens_cols=tokens_cols)
+            pre = from_es_json({"query": body["filter"]}, **bindings)
             scan = scan.filter(pre.predicate(scan.sparkSession,
                                              _col_resolver))
         window = int(body.get("rank_window_size", size))
@@ -4096,8 +4093,7 @@ def es_retriever(
                     "(none/minmax)"
                 )
             leg = es_retriever(scan, spec, id_col=id_col, size=window,
-                               analyzers=analyzers, tokens_cols=tokens_cols
-                               ).select(id_col, "score")
+                               **bindings).select(id_col, "score")
             if norm == "minmax":
                 # leg-sized relation: the min/max aggregate is a 1-row
                 # broadcast over at most rank_window_size rows

@@ -12,6 +12,13 @@ correct in both worlds:
 * Session timezone pinned to UTC — the reference's offset-preserving date
   format (mapping.json:16-19) is compared instant-wise, not string-wise
   (SURVEY §7 risk 3).
+* DataFrame debugging off — PySpark otherwise captures the Python call site
+  of every ``Column`` method (five Py4J round trips each), which is most of
+  the driver-side cost of compiling a search request. Errors keep Spark's
+  error class, message and plan; they lose only the Python ``file:line``
+  "DataFrame context". Sessions this module did not build keep PySpark's
+  default, and ``extra_conf`` can turn it back on. PySpark reads the
+  setting once per process, from the first active session.
 """
 
 from __future__ import annotations
@@ -58,6 +65,7 @@ def get_spark(
         # (on by default in Spark 3.4+; pinned so the plan is stable).
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():
