@@ -12,7 +12,7 @@ import random
 import pytest
 
 
-from tweets_elastic_spark.plans.search import _col_resolver, from_es_json
+from tweets_elastic_spark.plans.search import from_es_json
 
 
 def _leaf(rng: random.Random) -> dict:
@@ -92,8 +92,8 @@ def test_random_supported_trees_compile_and_analyze(spark, seed):
     )
     dsl = {"query": _tree(rng, 3)}
     q = from_es_json(dsl, analyzers={"text": "standard"})
-    pred = q.predicate(spark, _col_resolver)
-    score = q.score(spark, _col_resolver)
+    pred = q.predicate(spark)
+    score = q.score(spark)
     # analysis against the real schema resolves every column/type; an
     # unresolvable or type-broken expression raises here
     plan = df.filter(pred).withColumn("s", score)

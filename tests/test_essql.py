@@ -180,8 +180,8 @@ def test_match_agrees_with_dsl_bm25_nodes(spark, docs):
                      analyzer="custom_shingles", stats=stats)
     want = sorted(
         tuple(r) for r in docs
-        .filter(node.predicate(spark, F.col))
-        .select("doc_id", F.round(node.score(spark, F.col), 6).alias("s"))
+        .filter(node.predicate(spark))
+        .select("doc_id", F.round(node.score(spark), 6).alias("s"))
         .collect()
     )
     got = sorted(_rows(es_sql(

@@ -13,7 +13,6 @@ from tweets_elastic_spark.plans.query_string import (
     QueryStringSyntaxError,
     parse_kql,
 )
-from tweets_elastic_spark.plans.search import _col_resolver
 
 
 def _clause(rng: random.Random, depth: int) -> str:
@@ -56,7 +55,7 @@ def test_random_kql_parses_and_analyzes(spark, seed):
         "n_chars int",
     )
     q = parse_kql(_bool(rng, 2), analyzers={"text": "standard"})
-    pred = q.predicate(spark, _col_resolver)
+    pred = q.predicate(spark)
     # analysis against the real schema resolves every column/type
     assert df.filter(pred).schema is not None
 

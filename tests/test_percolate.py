@@ -32,7 +32,7 @@ def test_matches_equal_manual_filters(spark):
     got = _pairs(percolate(docs, STORED))
     want = []
     for qid, q in STORED:
-        ids = docs.filter(q.predicate(spark, F.col)).select("doc_id").collect()
+        ids = docs.filter(q.predicate(spark)).select("doc_id").collect()
         want += [(r["doc_id"], qid) for r in ids]
     assert got == sorted(want) and len(got) > 0
 

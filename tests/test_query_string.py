@@ -295,7 +295,7 @@ def test_simple_trailing_star_on_analyzed_field_is_token_prefix(spark, sf_dir):
     q = SP("spar*", analyzers={"text": "standard"})
     assert isinstance(q, MatchPhrasePrefix)
     hits = docs.filter(
-        q.predicate(spark, __import__("pyspark").sql.functions.col)
+        q.predicate(spark)
     ).count()
     assert hits > 0
 

@@ -65,12 +65,15 @@ def test_reference_query_topk_deterministic(spark, docs_df, docs_py):
 
 
 def test_request_compile_py4j_budget(spark, docs_df, py4j_commands):
-    """Compiling the search benchmark's reference request and its sorted
-    ``search_after`` page stays within a Py4J command budget. With
-    PySpark's per-call call-site capture on, every Column method adds five
-    round trips: 305 and 221 commands against 115 and 61 without it."""
+    """Compiling the search benchmark's reference request, its BM25
+    ``multi_match`` and its sorted ``search_after`` page stays within a
+    Py4J command budget. Each query tree renders one SQL fragment for its
+    predicate and one for its score, parsed once each: 115 and 284
+    commands while the nodes built Columns call by call, 32 and 32 now;
+    the page, whose sort and cursor are still built from Columns, 61 → 57."""
+    from tweets_elastic_spark.functions.analyzers import materialize_tokens
     from tweets_elastic_spark.plans.aggs import es_request
-    from tweets_elastic_spark.plans.search import from_es_json
+    from tweets_elastic_spark.plans.search import corpus_bm25_provider, from_es_json
 
     nested = frozenset({"context_annotations", "conversation_hashtags",
                         "annotations", "links", "conversation_references"})
@@ -101,9 +104,22 @@ def test_request_compile_py4j_budget(spark, docs_df, py4j_commands):
 
     assert commands(lambda: search(
         docs_df, from_es_json(reference, nested_paths=nested, id_field="id"),
-        k=10, tiebreak="id").select("id", "score")) < 200
+        k=10, tiebreak="id").select("id", "score")) < 40
     assert commands(lambda: es_request(
-        docs_df, page, nested_paths=nested, tiebreak="id")) < 140
+        docs_df, page, nested_paths=nested, tiebreak="id")) < 60
+
+    toked = materialize_tokens(docs_df, {"content": ["custom_shingles"]})
+    provider = corpus_bm25_provider(spark, toked)
+    text = "spark merge conflict"
+    provider((("content__custom_shingles", 1.0),), "custom_shingles", text)
+    multi_match = {"query": {"multi_match": {
+        "query": text, "fields": ["content^2"], "type": "most_fields"}}}
+    assert commands(lambda: search(
+        toked, from_es_json(multi_match, analyzers={"content": "custom_shingles"},
+                            tokens_cols={"content": "content__custom_shingles"},
+                            nested_paths=nested, id_field="id",
+                            bm25_stats_for=provider),
+        k=10, tiebreak="id").select("id", "score")) < 60
 
 
 def test_missing_field_error_names_field(spark, docs_df):
@@ -505,6 +521,11 @@ def test_from_es_json_unknown_clause_raises():
         from_es_json({"query": {"fuzzy_like_this": {"text": "x"}}})
     with pytest.raises(ValueError, match="unsupported bool keys"):
         from_es_json({"bool": {"boost_mode": "sum"}})
+    # ES rejects a null term value; compiled it would match nothing
+    for dsl in ({"term": {"language": None}},
+                {"term": {"language": {"value": None}}}):
+        with pytest.raises(ValueError, match="'language' has a null value"):
+            from_es_json(dsl)
 
 
 def test_from_es_json_scalar_and_list_clauses_and_msm():
@@ -955,9 +976,9 @@ def test_regexp_anchored_and_rejects_optional_operators(spark):
     assert got == {1, 4}
     for bad in ("a~b", "a&b", "<1-9>", "a@"):
         with pytest.raises(ValueError, match="optional operator"):
-            Regexp("source", bad).predicate(spark, F.col)
+            Regexp("source", bad).predicate(spark)
     # escaped specials pass validation
-    Regexp("source", r"a\~b").predicate(spark, F.col)
+    Regexp("source", r"a\~b").predicate(spark)
 
 
 def test_constant_score_scores_boost(spark):
@@ -1044,7 +1065,7 @@ def test_script_score_rejects_unknown_syntax(spark):
         ("1 2", "trailing tokens"),
     ]:
         with pytest.raises(ValueError, match=msg):
-            ScriptScore(MatchAll(), bad).score(spark, F.col)
+            ScriptScore(MatchAll(), bad).score(spark)
 
 
 def test_from_es_json_compound_scoring_clauses():
@@ -1558,7 +1579,7 @@ def test_terms_set_per_document_bound(spark):
         rows, "id long, tags array<string>, required int")
     q = TermsSet("tags", ["a", "b", "c"],
                  minimum_should_match_field="required")
-    got = sorted(r["id"] for r in df.filter(q.predicate(spark, F.col)).collect())
+    got = sorted(r["id"] for r in df.filter(q.predicate(spark)).collect())
     assert got == [1, 3]
 
 
@@ -1568,12 +1589,12 @@ def test_terms_set_validation(spark):
     from tweets_elastic_spark.plans.search import TermsSet
 
     with pytest.raises(ValueError, match="exactly one"):
-        TermsSet("tags", ["a"]).predicate(spark, F.col)
+        TermsSet("tags", ["a"]).predicate(spark)
     with pytest.raises(ValueError, match="exactly one"):
         TermsSet("tags", ["a"], minimum_should_match=1,
-                 minimum_should_match_field="r").predicate(spark, F.col)
+                 minimum_should_match_field="r").predicate(spark)
     with pytest.raises(ValueError, match="non-empty"):
-        TermsSet("tags", [], minimum_should_match=1).predicate(spark, F.col)
+        TermsSet("tags", [], minimum_should_match=1).predicate(spark)
 
 
 def test_terms_set_from_es_json(spark):
@@ -1602,39 +1623,37 @@ def typeahead_docs(spark):
 
 
 def test_match_phrase_prefix_semantics(spark, typeahead_docs):
-    from pyspark.sql import functions as F
     from tweets_elastic_spark.plans.search import MatchPhrasePrefix
 
     q = MatchPhrasePrefix("text", "spark mer", analyzer="standard")
     got = sorted(r["id"] for r in
-                 typeahead_docs.filter(q.predicate(spark, F.col)).collect())
+                 typeahead_docs.filter(q.predicate(spark)).collect())
     # 1: spark+merge consecutive; 2: spark+mergers; 3 is out of order;
     # 5's 'sparkling' is not the token 'spark'
     assert got == [1, 2]
     # single term -> bare token prefix
     q1 = MatchPhrasePrefix("text", "sparkl", analyzer="standard")
     got1 = sorted(r["id"] for r in
-                  typeahead_docs.filter(q1.predicate(spark, F.col)).collect())
+                  typeahead_docs.filter(q1.predicate(spark)).collect())
     assert got1 == [5]
     # full last token also matches (prefix includes equality)
     q2 = MatchPhrasePrefix("text", "spark merge", analyzer="standard")
     got2 = sorted(r["id"] for r in
-                  typeahead_docs.filter(q2.predicate(spark, F.col)).collect())
+                  typeahead_docs.filter(q2.predicate(spark)).collect())
     assert got2 == [1, 2]  # 'merge' prefixes 'mergers' too
 
 
 def test_match_bool_prefix_or_vs_and(spark, typeahead_docs):
-    from pyspark.sql import functions as F
     from tweets_elastic_spark.plans.search import MatchBoolPrefix
 
     q_and = MatchBoolPrefix("text", "spark mer", analyzer="standard",
                             operator="and")
     got = sorted(r["id"] for r in
-                 typeahead_docs.filter(q_and.predicate(spark, F.col)).collect())
+                 typeahead_docs.filter(q_and.predicate(spark)).collect())
     assert got == [1, 2, 3]  # order-free, but needs BOTH
     q_or = MatchBoolPrefix("text", "spark mer", analyzer="standard")
     got = sorted(r["id"] for r in
-                 typeahead_docs.filter(q_or.predicate(spark, F.col)).collect())
+                 typeahead_docs.filter(q_or.predicate(spark)).collect())
     assert got == [1, 2, 3, 4, 5]  # 5: 'merchandise' matches 'mer' prefix
 
 
@@ -3064,3 +3083,97 @@ def test_span_multi_semantics(spark):
     with pytest.raises(ValueError, match="field_masking_span"):
         ids({"field_masking_span": {
             "query": {"span_term": {"text": "fox"}}, "field": "lang"}})
+
+
+_HOSTILE = ["it's", "back\\slash", "a -- b", "/* c */", "x' OR true OR 'x",
+            "nôn nočbás"]
+
+
+@pytest.fixture(scope="module")
+def hostile_df(spark):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    values = _HOSTILE + ["it", "x", "plain", "back", "a -", "100%_", "nôn"]
+    schema = StructType([StructField("id", LongType()),
+                         StructField("we`ird", StringType())])
+    return spark.createDataFrame(list(enumerate(values)), schema)
+
+
+@pytest.mark.parametrize("kind", ["term", "match", "prefix", "wildcard"])
+@pytest.mark.parametrize("value", _HOSTILE + ["100%_", "*'*", "x?"])
+def test_request_text_cannot_escape_the_sql(spark, hostile_df, kind, value):
+    """Request values and a field name holding a backquote reach the
+    rendered SQL as literals and a quoted name: each clause selects exactly
+    the rows the same test in Python selects."""
+    import re
+
+    from tweets_elastic_spark.plans.search import from_es_json
+
+    field = "we`ird"
+    body = {"query": value} if kind == "match" else {"value": value}
+    q = from_es_json({kind: {field: body}})
+    if kind == "prefix":
+        keep = lambda v: v.startswith(value)  # noqa: E731
+    elif kind == "wildcard":
+        rx = "".join(".*" if c == "*" else "." if c == "?" else re.escape(c)
+                     for c in value)
+        keep = lambda v: re.fullmatch(rx, v, re.S) is not None  # noqa: E731
+    else:
+        keep = lambda v: v == value  # noqa: E731
+    got = sorted(r["id"] for r in search(hostile_df, q, k=None).collect())
+    want = sorted(r["id"] for r in hostile_df.collect() if keep(r[field]))
+    assert got == want
+
+
+def test_bm25_scores_equal_python_recomputation(spark):
+    """BM25 scores rendered with ``double_sql`` literals (statistics that
+    no short decimal writes exactly) are bit-equal to the same formula
+    evaluated in Python in the same operation order."""
+    import math
+
+    from tweets_elastic_spark.functions.analyzers import materialize_tokens
+    from tweets_elastic_spark.plans.search import BM25Match, Bm25Stats
+
+    texts = ["spark merge spark", "merge conflict in spark plans",
+             "unrelated words", "spark", "merge merge merge conflict"]
+    docs = materialize_tokens(
+        spark.createDataFrame(list(enumerate(texts)), "id long, text string"),
+        {"text": ["standard"]})
+    stats = Bm25Stats(n_docs=7.0, avgdl=10.0 / 3.0,
+                      df={"spark": 3.0, "merge": 1.0 / 3.0, "conflict": 2.0})
+    k1, b, boost = 1.2, 0.75, 0.1
+    q = BM25Match([("text", "text__standard", 1.0)], "spark merge conflict",
+                  "standard", stats, k1=k1, b=b, boost=boost)
+    got = {r["id"]: r["score"] for r in search(docs, q, k=None).collect()}
+    want = {}
+    for i, toks in docs.select("id", "text__standard").collect():
+        toks = list(toks)
+        if not {"spark", "merge", "conflict"} & set(toks):
+            continue
+        dl, total = float(len(toks)), 0.0
+        for t in ("spark", "merge", "conflict"):
+            df_t = stats.df[t]
+            idf = math.log(1.0 + (stats.n_docs - df_t + 0.5) / (df_t + 0.5))
+            tf = float(toks.count(t))
+            sat = (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + (b * dl) / stats.avgdl))
+            total = total + idf * sat
+        want[i] = total * boost
+    assert got == want and len(want) == 4
+
+
+def test_nested_inside_nested_reads_each_scope(spark):
+    """A nested scope inside another reads its array from the outer
+    element and its fields from its own element."""
+    df = spark.createDataFrame(
+        [(1, [{"a": [{"b": 1}, {"b": 2}], "c": 5}]),
+         (2, [{"a": [{"b": 3}], "c": 6}, {"a": [{"b": 2}], "c": 1}])],
+        "id long, xs array<struct<a: array<struct<b: int>>, c: int>>")
+
+    def ids(q):
+        return sorted(r["id"] for r in search(df, q, k=None).collect())
+
+    assert ids(Nested("xs", Nested("a", Term("b", 2)))) == [1, 2]
+    assert ids(Nested("xs", Bool(filter=[
+        Range("c", gt=5), Nested("a", Term("b", 2))]))) == []
+    assert ids(Nested("xs", Bool(filter=[
+        Range("c", gt=5), Nested("a", Term("b", 3))]))) == [2]

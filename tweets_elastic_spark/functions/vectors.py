@@ -52,6 +52,29 @@ def double_sql(x: float) -> str:
     return f"coalesce(CAST('{name}' AS DOUBLE), 0.0D)"
 
 
+def lit_sql(v) -> str:
+    """``v`` as the SQL literal ``F.lit(v)`` makes: a string (every
+    backslash and quote escaped, control characters as ``\\uXXXX``, so
+    request text can never end the literal), a boolean, an integer
+    (INT, or BIGINT past 32 bits), a double (``double_sql``) or NULL."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return double_sql(v)
+    if isinstance(v, str):
+        body = "".join(
+            "\\\\" if ch == "\\" else "\\'" if ch == "'"
+            else f"\\u{ord(ch):04x}" if ord(ch) < 32 else ch
+            for ch in v
+        )
+        return f"'{body}'"
+    raise TypeError(f"no SQL literal for {type(v).__name__} {v!r}")
+
+
 def vec_sql(v) -> str:
     """A literal ``array<double>`` of the values of ``v``."""
     return "array(" + ", ".join(double_sql(x) for x in v) + ")"

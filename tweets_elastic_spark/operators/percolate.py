@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tweets_elastic_spark.plans.search import Query, _col_resolver
+from tweets_elastic_spark.plans.search import Query
 
 
 def percolate(
@@ -90,7 +90,7 @@ def percolate(
     for i in range(0, len(stored), batch_size):
         batch = stored[i:i + batch_size]
         arrays.append(F.array_compact(F.array(*[
-            F.when(q.predicate(spark, _col_resolver), F.lit(qid))
+            F.when(q.predicate(spark), F.lit(qid))
             for qid, q in batch
         ])))
     hits = arrays[0] if len(arrays) == 1 else F.concat(*arrays)

@@ -106,13 +106,18 @@ from tweets_elastic_spark.functions.ip import (
     ipv6_mask,
 )
 from tweets_elastic_spark.functions.studentt import student_t_two_sided_p
-from tweets_elastic_spark.functions.vectors import col_sql, cosine, vec_sql
+from tweets_elastic_spark.functions.vectors import (
+    col_sql,
+    cosine,
+    double_sql,
+    vec_sql,
+)
 from tweets_elastic_spark.plans.search import (
     Regexp,
     compile_painless,
     es_retriever,
     from_es_json,
-    haversine_meters,
+    haversine_sql,
     match_terms_by_field,
     parse_distance_meters,
     search,
@@ -134,6 +139,11 @@ _METRICS = {
     "value_count": lambda c: F.count(c),
     "cardinality": lambda c: F.countDistinct(c),
 }
+
+
+def _double_ref(field: str) -> str:
+    """``field`` read as a double, in SQL (a Painless ``doc[...]`` value)."""
+    return f"CAST({col_sql(field)} AS DOUBLE)"
 
 
 def categorize_key(src: Column, max_matched_tokens=None) -> Column:
@@ -246,11 +256,10 @@ def _bucket_key(kind: str, body: dict) -> Column:
                     "geo_distance rings must be sorted and non-overlapping "
                     f"(got {a} then {b})"
                 )
-        dist = haversine_meters(
-            F.col(fld["lat"]).cast("double"),
-            F.col(fld["lon"]).cast("double"),
-            F.lit(float(origin["lat"])), F.lit(float(origin["lon"])),
-        )
+        dist = F.expr(haversine_sql(
+            _double_ref(fld["lat"]), _double_ref(fld["lon"]),
+            double_sql(origin["lat"]), double_sql(origin["lon"]),
+        ))
 
         def ring_key(d: Column) -> Column:
             key: Column = F.lit(None).cast("string")
@@ -941,14 +950,14 @@ def _metric_cols(aggs: dict) -> list[Column]:
                     "return t')"
                 )
             params = {
-                k: F.lit(float(v))
+                k: double_sql(v)
                 for k, v in (body.get("params") or {}).items()
             }
-            expr = compile_painless(
+            expr = F.expr(compile_painless(
                 mm.group(1),
-                resolve_doc=lambda f: F.col(f).cast("double"),
+                resolve_doc=_double_ref,
                 params=params or None,
-            )
+            ))
             # 3 dp: double summation order differs across partials;
             # 3 decimals holds to ~1e6-scale sums (n·eps·Σ|x| bound)
             out.append(F.round(F.sum(expr), 3).alias(name))
@@ -1334,7 +1343,7 @@ def _metric_cols(aggs: dict) -> list[Column]:
                     from pyspark.sql import SparkSession
 
                     pred = from_es_json(sp["filter"]).predicate(
-                        SparkSession.getActiveSession(), F.col
+                        SparkSession.getActiveSession()
                     )
                     c = F.when(pred, c)
                 return c
@@ -1484,7 +1493,7 @@ def _filters_agg(
         counts = [
             F.sum(
                 F.when(
-                    from_es_json(q).predicate(spark, F.col), 1
+                    from_es_json(q).predicate(spark), 1
                 ).otherwise(0)
             ).cast("long").alias(bucket)
             for bucket, q in named.items()
@@ -1493,7 +1502,7 @@ def _filters_agg(
         return wide.unpivot([], list(named), name, "doc_count")
     tags = F.array_compact(F.array(*[
         F.when(
-            from_es_json(q).predicate(spark, F.col), F.lit(bucket)
+            from_es_json(q).predicate(spark), F.lit(bucket)
         )
         for bucket, q in named.items()
     ]))
@@ -1608,7 +1617,7 @@ def _adjacency_matrix_agg(
         )
     spark = df.sparkSession
     preds = {
-        b: from_es_json(q).predicate(spark, F.col) for b, q in named.items()
+        b: from_es_json(q).predicate(spark) for b, q in named.items()
     }
     # ES sorts filter keys before pairing, so pair keys are normalized
     # (always "big&us", never "us&big") regardless of request order
@@ -2058,12 +2067,12 @@ def _jlh_rank(
             F.exp(-num / den),
         ).otherwise(F.lit(0.0))
     elif heuristic == "script_heuristic":
-        score = compile_painless(script, params={
-            "_subset_freq": F.col("doc_count").cast("double"),
-            "_superset_freq": F.col("bg_count").cast("double"),
-            "_subset_size": F.col("_fg_total"),
-            "_superset_size": F.col("_bg_total"),
-        })
+        score = F.expr(compile_painless(script, params={
+            "_subset_freq": _double_ref("doc_count"),
+            "_superset_freq": _double_ref("bg_count"),
+            "_subset_size": col_sql("_fg_total"),
+            "_superset_size": col_sql("_bg_total"),
+        }))
     else:
         raise ValueError(
             f"unsupported significance heuristic {heuristic!r} "
@@ -2330,8 +2339,7 @@ def _apply_pipeline_aggs(
                 f"param-name -> metric, got {paths!r}"
             )
         return {
-            p: F.col(metric_path(pkind, m)).cast("double")
-            for p, m in paths.items()
+            p: _double_ref(metric_path(pkind, m)) for p, m in paths.items()
         }
 
     # evaluated in request order, as ES does — a bucket_selector may
@@ -2506,10 +2514,10 @@ def _apply_pipeline_aggs(
         elif pkind == "bucket_script":
             out = out.withColumn(
                 pname,
-                compile_painless(
+                F.expr(compile_painless(
                     pbody["script"],
                     params=script_params(pkind, pbody),
-                ),
+                )),
             )
         elif pkind == "inference":
             # ES inference pipeline agg: apply a trained model to each
@@ -2560,7 +2568,7 @@ def _apply_pipeline_aggs(
                 )
             resp = F.lit(float(model.get("intercept", 0.0)))
             for p in sorted(model["weights"]):
-                resp = resp + F.lit(float(model["weights"][p])) * feats[p]
+                resp = resp + F.lit(float(model["weights"][p])) * F.expr(feats[p])
             if mtype == "regression":
                 out = out.withColumn(pname, resp)
             else:
@@ -2572,11 +2580,11 @@ def _apply_pipeline_aggs(
                 )
         elif pkind == "bucket_selector":
             out = out.filter(
-                compile_painless(
+                F.expr(compile_painless(
                     pbody["script"],
                     params=script_params(pkind, pbody),
                     compare=True,
-                )
+                ))
             )
         elif pkind == "bucket_sort":
             order = []
@@ -3449,7 +3457,7 @@ def _es_aggregate_impl(
                     "partitioned form {'partition': N, ...} is not "
                     "supported)"
                 )
-            return Regexp(name, spec).predicate(None, F.col)
+            return Regexp(name, spec).predicate(None)
 
         if "include" in body:
             out = out.filter(term_pred(body["include"]))
@@ -3643,10 +3651,8 @@ def es_request(
             src_txt = script["source"] if isinstance(script, dict) else script
             df = df.withColumn(
                 fname,
-                compile_painless(
-                    src_txt,
-                    resolve_doc=lambda f: F.col(f).cast("double"),
-                ).cast(ftype),
+                F.expr(compile_painless(src_txt, resolve_doc=_double_ref))
+                .cast(ftype),
             )
     retr = body.get("retriever")
     if retr is not None:
@@ -3732,7 +3738,7 @@ def es_request(
         flt = knn.get("filter")
         if flt is not None:
             ftree = from_es_json(flt, **bindings)
-            scan = scan.filter(ftree.predicate(df.sparkSession, F.col))
+            scan = scan.filter(ftree.predicate(df.sparkSession))
         sim = cosine(col_sql(knn["field"]), vec_sql(knn["query_vector"]))
         out = (
             scan.withColumn("score", F.round(sim, 6))
@@ -3744,7 +3750,7 @@ def es_request(
             out = out.select(*source)
         return out
     if aggs is not None:
-        pred = None if tree is None else tree.predicate(df.sparkSession, F.col)
+        pred = None if tree is None else tree.predicate(df.sparkSession)
         if len(aggs) == 1:
             (_, spec0), = aggs.items()
             kinds = [k for k in spec0 if k != "aggs"]
@@ -3774,7 +3780,7 @@ def es_request(
             "explicit sort or rescore) in this engine"
         )
     if sort is not None:
-        out = df.filter(tree.predicate(df.sparkSession, F.col))
+        out = df.filter(tree.predicate(df.sparkSession))
         # the FULL hit relation, captured before any keyset cursor filter:
         # collapse.inner_hits must report each group's top-N over the
         # whole index (ES semantics), not over the current page's suffix
@@ -3948,7 +3954,7 @@ def es_request(
             win = search(df, tree, k=window, tiebreak=tiebreak)
             spark_ = df.sparkSession
             orig = F.col("score") * F.lit(qw)
-            rs = rtree.score(spark_, F.col) * F.lit(rqw)
+            rs = rtree.score(spark_) * F.lit(rqw)
             combined = {
                 "total": orig + rs,
                 "multiply": orig * rs,
@@ -3963,8 +3969,7 @@ def es_request(
             # multiply/min)
             out = win.withColumn(
                 "score",
-                F.when(rtree.predicate(spark_, F.col), combined)
-                .otherwise(orig),
+                F.when(rtree.predicate(spark_), combined).otherwise(orig),
             )
             order2 = [F.col("score").desc()]
             if tiebreak is not None:
@@ -4002,18 +4007,13 @@ def es_request(
         # scripted. _score is available when the hits carry a score
         # column (the relevance path).
 
-        score_col = F.col("score") if "score" in out.columns else None
+        score_col = col_sql("score") if "score" in out.columns else None
         for fname, spec in sfields.items():
             script = spec["script"] if isinstance(spec, dict) else spec
             src_txt = script["source"] if isinstance(script, dict) else script
-            out = out.withColumn(
-                fname,
-                compile_painless(
-                    src_txt,
-                    score=score_col,
-                    resolve_doc=lambda f: F.col(f).cast("double"),
-                ),
-            )
+            out = out.withColumn(fname, F.expr(compile_painless(
+                src_txt, score=score_col, resolve_doc=_double_ref,
+            )))
     hl = body.get("highlight")
     if hl is not None:
         # ES highlighting: tag every analyzed query term for the

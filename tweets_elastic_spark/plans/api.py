@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from tweets_elastic_spark.functions.analyzers import analyze
 from tweets_elastic_spark.plans.aggs import es_request
 from tweets_elastic_spark.plans.search import (
-    _col_resolver,
     from_es_json,
     search,
 )
@@ -34,7 +33,7 @@ def es_count(
     body = (request or {}).get("query")
     if body is not None:
         q = from_es_json({"query": body}, **compile_opts)
-        df = df.filter(q.predicate(df.sparkSession, _col_resolver))
+        df = df.filter(q.predicate(df.sparkSession))
     return df.agg(F.count(F.lit(1)).alias("count"))
 
 

@@ -1018,7 +1018,8 @@ class _ExprParser:
         if fn == "ST_DISTANCE":
             # great-circle meters between two geo_points — the SAME
             # haversine (ES mean earth radius) the DSL geo_distance
-            # query compiles to, shared from plans/search.py
+            # query compiles to: plans/search.py haversine_sql, applied
+            # to these Columns by haversine_meters
             need(2)
             return haversine_meters(
                 a[0]["lat"], a[0]["lon"], a[1]["lat"], a[1]["lon"])
@@ -1849,8 +1850,8 @@ def _match_builder(df: DataFrame, analyzers, tokens_cols, bm25_stats_for):
                 tokens_col=tokens_cols.get(field),
                 operator=operator, minimum_should_match=msm,
             )
-        pred = node.predicate(spark, F.col)
-        score = node.score(spark, F.col)
+        pred = node.predicate(spark)
+        score = node.score(spark)
         if not node.CONSTANT_SCORE:
             # a clause only contributes when IT matches (ES bool scoring);
             # constant-score nodes already gate inside Query.score
@@ -1889,7 +1890,7 @@ def _qstr_builder(df: DataFrame, analyzers, tokens_cols):
                 "index default_field setting has no analog here); "
                 "field-scope every term, or bind exactly one analyzer"
             )
-        return q.predicate(spark, F.col), q.score(spark, F.col)
+        return q.predicate(spark), q.score(spark)
 
     return make
 
@@ -1910,7 +1911,7 @@ def _kql_builder(df: DataFrame, analyzers, tokens_cols):
             text, default_field=default_field,
             analyzers=analyzers, tokens_cols=tokens_cols,
         )
-        return q.predicate(spark, F.col)
+        return q.predicate(spark)
 
     return make
 

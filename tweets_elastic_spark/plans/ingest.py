@@ -45,6 +45,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.vectors import col_sql, lit_sql
 from tweets_elastic_spark.plans.search import compile_painless
 
 __all__ = ["apply_ingest_pipeline", "grok_to_regex"]
@@ -198,11 +199,11 @@ def apply_ingest_pipeline(
             target, rhs = m.group(1), m.group(2)
             rhs_doc = re.sub(r"ctx\.([A-Za-z_][A-Za-z0-9_]*)",
                              r"doc['\1'].value", rhs)
-            expr = compile_painless(
-                rhs_doc, resolve_doc=F.col,
-                params={k: F.lit(v)
+            expr = F.expr(compile_painless(
+                rhs_doc, resolve_doc=col_sql,
+                params={k: lit_sql(v)
                         for k, v in body.get("params", {}).items()},
-            )
+            ))
             df = df.withColumn(target, expr)
         elif kind == "date":
             formats = body.get("formats", [])

@@ -35,7 +35,6 @@ from tweets_elastic_spark.plans.aggs import _metric_cols
 from tweets_elastic_spark.plans.search import (
     MatchAll,
     Query,
-    _col_resolver,
     from_es_json,
 )
 
@@ -81,12 +80,12 @@ def has_child(
                          "is match_all on the parent side — refuse loudly")
     q = _compile(query, id_field)
     spark = children.sparkSession
-    matched = children.filter(q.predicate(spark, _col_resolver))
+    matched = children.filter(q.predicate(spark))
     aggs = [F.count(F.lit(1)).alias("__n_children")]
     fold = _SCORE_MODES[score_mode]
     if fold is not None:
         aggs.append(
-            fold(q.score(spark, _col_resolver)).cast("double").alias(score_col)
+            fold(q.score(spark)).cast("double").alias(score_col)
         )
     per_parent = matched.groupBy(F.col(child_key).alias("__ck")).agg(*aggs)
     cond: Column = F.col("__n_children") >= F.lit(min_children)
@@ -116,7 +115,7 @@ def has_parent(
     the matching parent's score onto each child (ES's contract)."""
     q = _compile(query, id_field)
     spark = parents.sparkSession
-    matched = parents.filter(q.predicate(spark, _col_resolver))
+    matched = parents.filter(q.predicate(spark))
     if not score:
         return children.join(
             matched.select(F.col(parent_key).alias("__pk")),
@@ -125,7 +124,7 @@ def has_parent(
         )
     keyed = matched.select(
         F.col(parent_key).alias("__pk"),
-        q.score(spark, _col_resolver).cast("double").alias(score_col),
+        q.score(spark).cast("double").alias(score_col),
     )
     return (
         children.join(keyed, on=children[child_key] == F.col("__pk"),

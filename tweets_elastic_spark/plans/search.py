@@ -14,6 +14,28 @@ Scatter-gather-merge over shards (SURVEY §3.3) maps to Spark's
 ``TakeOrderedAndProject``: per-partition top-k, then a merge on the driver —
 the same plan shape Lucene executes, for free, at any partition count.
 
+**Every node renders SQL text.** A node's ``predicate_sql`` and
+``score_sql`` return one SQL fragment each, built from its children's
+fragments; ``search()`` parses the tree's predicate and its score once
+each with ``F.expr``. Building the same expressions from Column calls
+costs Py4J round trips per node (115 commands for the reference request,
+284 for a BM25 ``multi_match``; ~37 once parsed from text) while
+Catalyst sees the same expression tree either way. Field references are
+rendered by a resolver, a function from a field path to a SQL reference:
+``col_sql`` at row scope, a lambda variable's field inside ``nested``.
+Request-supplied names go through ``col_sql`` and values through
+``lit_sql``/``double_sql`` (functions/vectors.py), so no field name or
+query text can read as SQL syntax. ``predicate(spark)``/``score(spark)``
+parse a node's fragment into a Column for callers that compose Columns.
+
+Inline analysis is the one thing SQL text cannot name: the analyzers are
+Arrow UDFs. ``search()`` materializes each inline-analyzed (field,
+analyzer) pair as one pinned token column (``bind_analyzed_tokens``) and
+rebinds the tree to read it before rendering; ``predicate``/``score``
+bind it as a field of one struct that the parsed fragment reads through a
+SQL lambda. Inside a ``nested`` scope neither applies: a text match there
+needs a token column.
+
 Scoring fidelity (SURVEY §7 risk 4): the default implements exactly what
 the reference exercises — constant ``weight`` per should-clause
 (elastic_queries.json:20), keyword equality inside ``nested`` scopes
@@ -35,17 +57,20 @@ score-summing ``Bool`` (most_fields), over BM25 or overlap legs alike;
 Match semantics for text fields mirror ES's two-sided analysis: the query
 string is analyzed with the target field's analyzer at query time
 (``analyze_text``) and compared against the field's index-time token column
-(``materialize_tokens``) or an inline analysis — token overlap = match.
-At 100 TB: materialize token columns at ingest; the match then compiles to
-``arrays_overlap(tokens_col, lit(query_tokens))``, a codegen'd expression
-with full predicate pushdown on the non-analyzed filters next to it.
+(``materialize_tokens``) or a bound inline analysis — token overlap =
+match. At 100 TB: materialize token columns at ingest; the match then
+compiles to ``arrays_overlap(tokens_col, array(<query tokens>))``, a
+codegen'd expression with full predicate pushdown on the non-analyzed
+filters next to it.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import itertools
 import math
-from collections.abc import Iterator
+import re
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -56,57 +81,126 @@ from tweets_elastic_spark.functions.analyzers import (
     analyze_text,
     pin_computed,
 )
-from tweets_elastic_spark.functions.vectors import col_sql, cosine, vec_sql
+from tweets_elastic_spark.functions.vectors import (
+    col_sql,
+    cosine,
+    double_sql,
+    lit_sql,
+    vec_sql,
+)
 
-# A resolver maps a field path ("author.following_count", "domain.name") to
-# a Column, either at the row scope (F.col) or inside a nested-array lambda
-# (struct element getter).
-Resolver = object
+# A resolver maps a field path ("author.following_count", "domain.name")
+# to its SQL reference: ``col_sql`` at row scope, a lambda variable's
+# field inside a nested-array scope.
+Resolver = Callable[[str], str]
+
+def _element_ref(path: str) -> str:
+    """``path`` inside a nested scope: a field of the element ``__el``."""
+    return f"__el.{col_sql(path)}"
 
 
-def _col_resolver(path: str) -> Column:
-    return F.col(path)
+def _fold(op: str, parts) -> str:
+    """``parts`` joined by the binary ``op``, left-associated and
+    parenthesized — the tree the same chain of Column operators builds."""
+    parts = list(parts)
+    out = parts[0]
+    for p in parts[1:]:
+        out = f"({out} {op} {p})"
+    return out
 
 
-def _element_resolver(element: Column):
-    def resolve(path: str) -> Column:
-        c = element
-        for part in path.split("."):
-            c = c[part]
-        return c
+def _case(cond: str, then: str, otherwise: str = "0.0D") -> str:
+    return f"CASE WHEN {cond} THEN {then} ELSE {otherwise} END"
 
-    return resolve
+
+def _array_sql(values) -> str:
+    return "array(" + ", ".join(lit_sql(v) for v in values) + ")"
+
+
+def _in_sql(ref: str, values) -> str:
+    if not values:
+        return "false"
+    return f"({ref} IN (" + ", ".join(lit_sql(v) for v in values) + "))"
+
+
+def _positions_sql(ts: str, hit) -> str:
+    """The positions of ``ts`` (a token-array fragment) whose token
+    satisfies ``hit(x)``, in order."""
+    return (f"filter(transform({ts}, (__x, __i) -> "
+            f"{_case(hit('__x'), '__i', '-1')}), __p -> (__p >= 0))")
+
+
+def _bind_once(value: str, var: str, body: str) -> str:
+    """``body`` with ``var`` bound to ``value`` evaluated once (Catalyst
+    does not CSE repeated subtrees)."""
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
 
 
 @dataclass
 class Query:
-    """Base node. ``predicate`` = does the row/element match (non-scoring);
-    ``score`` = the clause's score contribution when matched.
+    """Base node. ``predicate_sql`` = does the row/element match
+    (non-scoring); ``score_sql`` = the clause's score contribution when
+    matched. Both return one SQL fragment; ``predicate``/``score`` parse it
+    (nodes render SQL and never override those two).
 
     ``CONSTANT_SCORE`` marks clauses whose score is 1.0 whenever they match
-    (every v1 node — the reference only exercises constant ``weight``
-    scoring, elastic_queries.json:20). Bool.score exploits it to evaluate
-    such clauses' predicates ONCE instead of predicate+score — Catalyst
-    does not CSE the duplicated expression trees, and for analyzed matches
-    each tree re-runs the full analyzer pipeline per row. A future BM25
-    node sets CONSTANT_SCORE = False."""
+    (the reference only exercises constant ``weight`` scoring,
+    elastic_queries.json:20). Bool's score exploits it to evaluate such
+    clauses' predicates ONCE instead of predicate+score — Catalyst does
+    not CSE the duplicated expression trees. Scoring nodes set
+    CONSTANT_SCORE = False."""
 
     CONSTANT_SCORE = True
 
-    def predicate(self, spark: SparkSession, resolve) -> Column:
+    def predicate_sql(self, spark: SparkSession, ref: Resolver) -> str:
         raise NotImplementedError
 
-    def score(self, spark: SparkSession, resolve) -> Column:
-        p = self.predicate(spark, resolve)
-        return F.when(p, F.lit(1.0)).otherwise(F.lit(0.0))
+    def score_sql(self, spark: SparkSession, ref: Resolver) -> str:
+        return _case(self.predicate_sql(spark, ref), "1.0D")
+
+    def predicate(self, spark: SparkSession) -> Column:
+        return self._parse(spark, "predicate_sql")
+
+    def score(self, spark: SparkSession) -> Column:
+        return self._parse(spark, "score_sql")
+
+    def _parse(self, spark, render: str) -> Column:
+        """The node's ``render`` fragment parsed into one Column. An inline
+        analysis (no SQL name) is bound once per (field, analyzer) as a
+        field of one struct, and the fragment reads it through a SQL
+        lambda over that struct; ``search()`` binds it as a pinned column
+        instead (``bind_analyzed_tokens``)."""
+        helpers: dict[tuple[str, str], str] = {}
+        tree = _rebind_analyzed(
+            self, lambda f, a: helpers.setdefault((f, a), f"__toks{len(helpers)}"))
+        if not helpers:
+            return F.expr(getattr(self, render)(spark, col_sql))
+        names = set(helpers.values())
+        body = getattr(tree, render)(
+            spark, lambda p: f"__h.{col_sql(p)}" if p in names else col_sql(p))
+        struct = F.struct(*[analyze(F.expr(col_sql(f)), a).alias(name)
+                            for (f, a), name in helpers.items()])
+        return F.element_at(
+            F.call_function("transform", F.array(struct), F.expr(f"__h -> {body}")), 1)
+
+
+def _tokens_sql(node, ref: Resolver) -> str:
+    """The token array a text node reads: its materialized or bound
+    ``tokens_col``."""
+    if node.tokens_col is None:
+        raise ValueError(
+            f"inline analysis of {node.field!r} ({node.analyzer}) has no SQL "
+            "name and is bound at row scope only: pass a tokens_col"
+        )
+    return ref(node.tokens_col)
 
 
 @dataclass
 class MatchAll(Query):
     """Q8 (docs/protokol.md:545-550): the identity."""
 
-    def predicate(self, spark, resolve) -> Column:
-        return F.lit(True)
+    def predicate_sql(self, spark, ref) -> str:
+        return "true"
 
 
 @dataclass
@@ -115,8 +209,8 @@ class MatchNone(Query):
     placeholder ES template-built queries compile to when every optional
     clause is absent)."""
 
-    def predicate(self, spark, resolve) -> Column:
-        return F.lit(False)
+    def predicate_sql(self, spark, ref) -> str:
+        return "false"
 
 
 @dataclass
@@ -126,8 +220,8 @@ class Term(Query):
     field: str
     value: object
 
-    def predicate(self, spark, resolve) -> Column:
-        return resolve(self.field) == F.lit(self.value)
+    def predicate_sql(self, spark, ref) -> str:
+        return f"({ref(self.field)} = {lit_sql(self.value)})"
 
 
 @dataclass
@@ -136,7 +230,8 @@ class Match(Query):
     keyword → equality (exactly what the reference query needs for
     ``context_annotations.domain.name`` = "Person"). With an analyzer, the
     query text is analyzed at query time and matched against ``tokens_col``
-    (materialized) or an inline analysis. ES's match options:
+    (materialized, or bound by ``bind_analyzed_tokens``). ES's match
+    options:
 
     * ``operator="or"`` (default): any query token present — arrays_overlap.
     * ``operator="and"``: EVERY query token present — a conjunction of
@@ -161,51 +256,26 @@ class Match(Query):
     minimum_should_match: int = 0
     fuzziness: object = None
 
-    def _token_pred(self, field_tokens: Column, t: str) -> Column:
-        if self.fuzziness is None:
-            return F.array_contains(field_tokens, t)
-        d = Fuzzy(self.field, t, fuzziness=self.fuzziness).max_edits()
-        if d == 0:
-            return F.array_contains(field_tokens, t)
-        return F.exists(
-            field_tokens, lambda x: F.levenshtein(x, F.lit(t)) <= d
-        )
-
-    def predicate(self, spark, resolve) -> Column:
+    def predicate_sql(self, spark, ref) -> str:
         _check_operator(self.operator)
         if self.analyzer is None:
-            return resolve(self.field) == F.lit(self.text)
+            return f"({ref(self.field)} = {lit_sql(self.text)})"
         query_tokens = analyze_text(spark, self.text, self.analyzer)
         if not query_tokens:
-            return F.lit(False)
-        field_tokens = (
-            resolve(self.tokens_col)
-            if self.tokens_col is not None
-            else analyze(resolve(self.field), self.analyzer)
-        )
+            return "false"
+        ft = _tokens_sql(self, ref)
 
-        def pred_over(ft: Column) -> Column:
-            def overlap() -> Column:
-                return F.arrays_overlap(
-                    ft, F.array(*[F.lit(t) for t in query_tokens])
-                )
+        def contains(t: str) -> str:
+            d = 0 if self.fuzziness is None else Fuzzy(
+                self.field, t, fuzziness=self.fuzziness).max_edits()
+            if d == 0:
+                return f"array_contains({ft}, {lit_sql(t)})"
+            return f"exists({ft}, __x -> (levenshtein(__x, {lit_sql(t)}) <= {d}))"
 
-            return _token_gate(
-                lambda t: self._token_pred(ft, t), query_tokens,
-                self.operator, self.minimum_should_match,
-                overlap if self.fuzziness is None else None,
-            )
-
-        if self.tokens_col is None and len(query_tokens) > 1:
-            # inline analysis referenced once per query token on the
-            # and/msm/fuzzy paths — bind it once (Catalyst does not CSE
-            # repeated subtrees, so each reference would re-run the
-            # analyzer); a materialized column is already an O(1)
-            # attribute read and needs no binding
-            return F.element_at(
-                F.transform(F.array(field_tokens), pred_over), 1
-            )
-        return pred_over(field_tokens)
+        overlap = (f"arrays_overlap({ft}, {_array_sql(query_tokens)})"
+                   if self.fuzziness is None else None)
+        return _token_gate(contains, query_tokens, self.operator,
+                           self.minimum_should_match, overlap)
 
 
 def _check_operator(operator: str) -> None:
@@ -214,7 +284,7 @@ def _check_operator(operator: str) -> None:
 
 
 def _token_gate(contains, tokens: list[str], operator: str,
-                minimum_should_match: int, overlap=None) -> Column:
+                minimum_should_match: int, overlap: str | None = None) -> str:
     """The candidate gate of a text match over its analyzed query tokens,
     shared by ``Match`` and ``BM25Match`` (ES: the match options pick the
     candidate set; BM25 then scores it). ``contains(t)`` is the per-token
@@ -223,37 +293,29 @@ def _token_gate(contains, tokens: list[str], operator: str,
     * ``operator="and"``: every token present — a conjunction;
     * ``minimum_should_match=n`` (n > 1): at least n tokens present — a
       sum of matched-token indicators;
-    * ``operator="or"``: any token present — ``overlap()`` when the caller
+    * ``operator="or"``: any token present — ``overlap`` when the caller
       has one expression for it (``arrays_overlap`` over one token
       column), else a disjunction."""
     if operator == "and":
-        out = contains(tokens[0])
-        for t in tokens[1:]:
-            out = out & contains(t)
-        return out
+        return _fold("AND", (contains(t) for t in tokens))
     if minimum_should_match > 1:
-        matched = sum(
-            (contains(t).cast("int") for t in tokens), start=F.lit(0)
-        )
-        return matched >= minimum_should_match
+        matched = _fold("+", ["0"] + [f"CAST({contains(t)} AS INT)" for t in tokens])
+        return f"({matched} >= {int(minimum_should_match)})"
     if overlap is not None:
-        return overlap()
-    out = contains(tokens[0])
-    for t in tokens[1:]:
-        out = out | contains(t)
-    return out
+        return overlap
+    return _fold("OR", (contains(t) for t in tokens))
 
 
 @dataclass
 class Terms(Query):
     """ES ``terms``: keyword membership in a literal list (the multi-value
-    Term). Compiles to ``isin`` — an IN-list the scan can push down."""
+    Term). Compiles to an IN-list the scan can push down."""
 
     field: str
     values: list
 
-    def predicate(self, spark, resolve) -> Column:
-        return resolve(self.field).isin(list(self.values))
+    def predicate_sql(self, spark, ref) -> str:
+        return _in_sql(ref(self.field), list(self.values))
 
 
 @dataclass
@@ -272,7 +334,7 @@ class TermsSet(Query):
     minimum_should_match: int | None = None
     minimum_should_match_field: str | None = None
 
-    def predicate(self, spark, resolve) -> Column:
+    def predicate_sql(self, spark, ref) -> str:
         if not self.terms:
             raise ValueError("terms_set needs a non-empty terms list")
         if (self.minimum_should_match is None) == (
@@ -282,16 +344,15 @@ class TermsSet(Query):
                 "terms_set needs exactly one of minimum_should_match / "
                 "minimum_should_match_field"
             )
-        arr = resolve(self.field)
-        matched = sum(
-            (F.array_contains(arr, t).cast("int") for t in self.terms),
-            start=F.lit(0),
-        )
+        arr = ref(self.field)
+        matched = _fold("+", ["0"] + [
+            f"CAST(array_contains({arr}, {lit_sql(t)}) AS INT)" for t in self.terms
+        ])
         if self.minimum_should_match_field is not None:
-            bound = resolve(self.minimum_should_match_field)
+            bound = ref(self.minimum_should_match_field)
         else:
-            bound = F.lit(int(self.minimum_should_match))
-        return matched >= bound
+            bound = str(int(self.minimum_should_match))
+        return f"({matched} >= {bound})"
 
 
 def _like_escape(s: str) -> str:
@@ -306,8 +367,8 @@ class Prefix(Query):
     field: str
     value: str
 
-    def predicate(self, spark, resolve) -> Column:
-        return resolve(self.field).like(_like_escape(self.value) + "%")
+    def predicate_sql(self, spark, ref) -> str:
+        return f"({ref(self.field)} LIKE {lit_sql(_like_escape(self.value) + '%')})"
 
 
 @dataclass
@@ -319,9 +380,9 @@ class Wildcard(Query):
     field: str
     pattern: str
 
-    def predicate(self, spark, resolve) -> Column:
+    def predicate_sql(self, spark, ref) -> str:
         like = _like_escape(self.pattern).replace("*", "%").replace("?", "_")
-        return resolve(self.field).like(like)
+        return f"({ref(self.field)} LIKE {lit_sql(like)})"
 
 
 @dataclass
@@ -379,8 +440,8 @@ class Regexp(Query):
             i += 1
         return "".join(out)
 
-    def predicate(self, spark, resolve) -> Column:
-        return resolve(self.field).rlike("^(?:" + self._translate() + ")$")
+    def predicate_sql(self, spark, ref) -> str:
+        return f"({ref(self.field)} RLIKE {lit_sql('^(?:' + self._translate() + ')$')})"
 
 
 @dataclass
@@ -409,11 +470,11 @@ class Fuzzy(Query):
             return 0 if n <= 2 else (1 if n <= 5 else 2)
         return int(self.fuzziness)
 
-    def predicate(self, spark, resolve) -> Column:
+    def predicate_sql(self, spark, ref) -> str:
         d = self.max_edits()
         if d == 0:
-            return resolve(self.field) == F.lit(self.value)
-        return F.levenshtein(resolve(self.field), F.lit(self.value)) <= d
+            return f"({ref(self.field)} = {lit_sql(self.value)})"
+        return f"(levenshtein({ref(self.field)}, {lit_sql(self.value)}) <= {d})"
 
 
 @dataclass
@@ -425,8 +486,8 @@ class Ids(Query):
     values: list
     id_field: str = "doc_id"
 
-    def predicate(self, spark, resolve) -> Column:
-        return resolve(self.id_field).isin(list(self.values))
+    def predicate_sql(self, spark, ref) -> str:
+        return _in_sql(ref(self.id_field), list(self.values))
 
 
 @dataclass
@@ -449,132 +510,78 @@ class MatchPhrase(Query):
     tokens_col: str | None = None
     slop: int = 0
 
-    def predicate(self, spark, resolve) -> Column:
+    def predicate_sql(self, spark, ref) -> str:
         phrase = analyze_text(spark, self.text, self.analyzer)
         if not phrase:
-            return F.lit(False)
-        toks = (
-            resolve(self.tokens_col)
-            if self.tokens_col is not None
-            else analyze(resolve(self.field), self.analyzer)
-        )
+            return "false"
+        toks = _tokens_sql(self, ref)
         if self.slop:
-            # Sloppy phrase (ES match_phrase slop), Lucene's semantics
-            # (SloppyPhraseMatcher): each phrase slot's document positions
-            # are ADJUSTED by its phrase offset (p - q); the phrase matches
-            # iff some assignment of DISTINCT document positions (Lucene's
-            # rule for repeated terms) - one per slot - has
-            #     max(adjusted) - min(adjusted) <= slop
-            # - the "matchLength" Lucene sweeps for, equal to the number of
-            # position-moves to edit the document arrangement into the
-            # query's (a transposition of adjacent terms costs 2: gap + 1).
-            # Expressed scan-locally: the optimal window starts AT one of
-            # the adjusted positions (anchor a); slot (t, q) may then use
-            # any p in P(t) ∩ [a+q, a+q+slop]. Distinctness across
-            # DISTINCT tokens is automatic (one token per position); within
-            # a token repeated at offsets q_1<...<q_m, a system of distinct
-            # representatives for the equal-length candidate intervals
-            # exists iff Hall's condition holds on every CONTIGUOUS offset
-            # range (sufficient for equal-length sorted intervals: any
-            # overlap-connected subset of slots is bounded by the count
-            # over its hull range):
-            #     |P(t) ∩ ∪_{k in [i,j]} [a+q_k, a+q_k+slop]| >= j-i+1
-            # - sum of m_t(m_t+1)/2 size(filter(...)) checks, all
-            # scan-local HOFs over position arrays, no shuffle. For
-            # all-distinct phrases (every m_t = 1) this reduces to one
-            # window-membership exists per term.
-            slop = int(self.slop)
+            return self._sloppy_sql(phrase, toks)
+        nul = lit_sql("\x00")
+        hay = f"concat({nul}, array_join({toks}, {nul}), {nul})"
+        needle = "\x00" + "\x00".join(phrase) + "\x00"
+        return f"(instr({hay}, {lit_sql(needle)}) > 0)"
 
-            offsets: dict[str, list[int]] = {}
-            for q, t in enumerate(phrase):
-                offsets.setdefault(t, []).append(q)
-            terms = list(offsets)
+    def _sloppy_sql(self, phrase: list[str], toks: str) -> str:
+        """Sloppy phrase (ES match_phrase slop), Lucene's semantics
+        (SloppyPhraseMatcher): each phrase slot's document positions are
+        ADJUSTED by its phrase offset (p - q); the phrase matches iff some
+        assignment of DISTINCT document positions (Lucene's rule for
+        repeated terms) - one per slot - has
 
-            def check(ts: Column) -> Column:
-                # ts = the token array, BOUND once (Catalyst does not CSE
-                # repeated subtrees — an unbound `toks` would re-run the
-                # whole analyzer per position-array reference). The
-                # per-term position arrays are likewise bound once as a
-                # struct before the anchor sweep references them
-                # n + Σ m_t(m_t+1)/2 times each.
-                def positions(term: str) -> Column:
-                    return F.filter(
-                        F.transform(
-                            ts,
-                            lambda x, i: F.when(
-                                x == F.lit(term), i
-                            ).otherwise(-1),
-                        ),
-                        lambda p: p >= 0,
+            max(adjusted) - min(adjusted) <= slop
+
+        - the "matchLength" Lucene sweeps for, equal to the number of
+        position-moves to edit the document arrangement into the query's
+        (a transposition of adjacent terms costs 2: gap + 1). Expressed
+        scan-locally: the optimal window starts AT one of the adjusted
+        positions (anchor a); slot (t, q) may then use any p in
+        P(t) ∩ [a+q, a+q+slop]. Distinctness across DISTINCT tokens is
+        automatic (one token per position); within a token repeated at
+        offsets q_1<...<q_m, a system of distinct representatives for the
+        equal-length candidate intervals exists iff Hall's condition holds
+        on every CONTIGUOUS offset range (sufficient for equal-length
+        sorted intervals: any overlap-connected subset of slots is bounded
+        by the count over its hull range):
+
+            |P(t) ∩ ∪_{k in [i,j]} [a+q_k, a+q_k+slop]| >= j-i+1
+
+        - sum of m_t(m_t+1)/2 size(filter(...)) checks, all scan-local HOFs
+        over position arrays, no shuffle. For all-distinct phrases (every
+        m_t = 1) this reduces to one window-membership exists per term.
+        The token array is bound once, and so are the per-term position
+        arrays (as one struct) before the anchor sweep references them
+        n + Σ m_t(m_t+1)/2 times each."""
+        slop = int(self.slop)
+        offsets: dict[str, list[int]] = {}
+        for q, t in enumerate(phrase):
+            offsets.setdefault(t, []).append(q)
+        terms = list(offsets)
+        pos_struct = "struct(" + ", ".join(
+            _positions_sql("__ts", lambda x, t=t: f"({x} = {lit_sql(t)})") + f" AS p{i}"
+            for i, t in enumerate(terms)
+        ) + ")"
+        pos_by_term = {t: f"__ps.p{i}" for i, t in enumerate(terms)}
+        starts = "flatten(array(" + ", ".join(
+            f"transform({pos_by_term[t]}, __q -> (__q - {q}))"
+            for t, qs in offsets.items() for q in qs
+        ) + "))"
+        conds = []
+        for t, qs in offsets.items():
+            pt = pos_by_term[t]
+            for i in range(len(qs)):
+                for j in range(i, len(qs)):
+                    need = j - i + 1
+                    member = _fold("OR", (
+                        f"((__m >= (__a + {q})) AND (__m <= (__a + {q + slop})))"
+                        for q in qs[i:j + 1]
+                    ))
+                    conds.append(
+                        f"exists({pt}, __m -> {member})" if need == 1
+                        else f"(size(filter({pt}, __m -> {member})) >= {need})"
                     )
-
-                pos_struct = F.struct(*[
-                    positions(t).alias(f"p{i}") for i, t in enumerate(terms)
-                ])
-
-                def sweep(ps: Column) -> Column:
-                    pos_by_term = {
-                        t: ps[f"p{i}"] for i, t in enumerate(terms)
-                    }
-
-                    def adjust(term: str, offset: int) -> Column:
-                        # bind offset eagerly: PySpark HOF lambdas must
-                        # stay single-parameter (arity drives (x) vs
-                        # (x, i) dispatch)
-                        off = F.lit(offset)
-                        return F.transform(
-                            pos_by_term[term], lambda p: p - off
-                        )
-
-                    starts = F.flatten(F.array(*[
-                        adjust(t, q)
-                        for t, qs in offsets.items() for q in qs
-                    ]))
-
-                    def window_covers(a: Column) -> Column:
-                        cond = None
-                        for t, qs in offsets.items():
-                            pt = pos_by_term[t]
-                            for i in range(len(qs)):
-                                for j in range(i, len(qs)):
-                                    need = j - i + 1
-                                    ks = tuple(qs[i:j + 1])
-
-                                    # single-parameter on purpose (HOF
-                                    # arity dispatch); `ks` is a closure,
-                                    # safe because F.exists/F.filter
-                                    # invoke it eagerly this iteration
-                                    def member(p) -> Column:
-                                        m = None
-                                        for q in ks:
-                                            rng = (p >= a + F.lit(q)) & (
-                                                p <= a + F.lit(q + slop)
-                                            )
-                                            m = rng if m is None else m | rng
-                                        return m
-
-                                    c = (
-                                        F.exists(pt, member)
-                                        if need == 1
-                                        else F.size(F.filter(pt, member))
-                                        >= need
-                                    )
-                                    cond = c if cond is None else cond & c
-                        return cond
-
-                    return F.exists(starts, window_covers)
-
-                return F.element_at(
-                    F.transform(F.array(pos_struct), sweep), 1
-                )
-
-            return F.element_at(F.transform(F.array(toks), check), 1)
-        nul = "\x00"
-        hay = F.concat(
-            F.lit(nul), F.array_join(toks, nul), F.lit(nul)
-        )
-        needle = nul + nul.join(phrase) + nul
-        return F.instr(hay, needle) > 0
+        sweep = f"exists({starts}, __a -> {_fold('AND', conds)})"
+        return _bind_once(toks, "__ts", _bind_once(pos_struct, "__ps", sweep))
 
 
 @dataclass
@@ -717,129 +724,77 @@ class Intervals(Query):
                 f"(supported: {list(cls._RULE_KINDS)})"
             )
 
-    def predicate(self, spark, resolve) -> Column:
-        toks = (
-            resolve(self.tokens_col)
-            if self.tokens_col is not None
-            else analyze(resolve(self.field), self.analyzer)
-        )
-
-        def check(ts: Column) -> Column:
-            return self._compile(spark, ts, self.rule)
-
+    def predicate_sql(self, spark, ref) -> str:
         # bind the analyzed token array ONCE (Catalyst does not CSE)
-        return F.element_at(F.transform(F.array(toks), check), 1)
+        return _bind_once(_tokens_sql(self, ref), "__ts",
+                          self._compile(spark, "__ts", self.rule))
 
-    def _compile(self, spark, ts: Column, rule: dict) -> Column:
+    def _compile(self, spark, ts: str, rule: dict) -> str:
         (kind, body), = rule.items()
         if kind == "any_of":
-            cond = None
-            for sub in body["intervals"]:
-                c = self._compile(spark, ts, sub)
-                cond = c if cond is None else cond | c
-            return cond
+            return _fold("OR", (self._compile(spark, ts, sub)
+                                for sub in body["intervals"]))
         if kind == "all_of":
             return self._compile_all_of(spark, ts, body)
         if kind in ("prefix", "wildcard"):
-            return F.size(self._unit_positions(ts, kind, body)) > 0
+            return f"(size({self._unit_positions(ts, kind, body)}) > 0)"
         # match
         tokens = analyze_text(
             spark, body["query"], body.get("analyzer", self.analyzer)
         )
         if not tokens:
-            return F.lit(False)
+            return "false"
         n = len(tokens)
         max_gaps = int(body.get("max_gaps", -1))
         ordered = bool(body.get("ordered", False))
         terms = list(dict.fromkeys(tokens))
         mult = {t: tokens.count(t) for t in terms}
-
-        def positions(term: str) -> Column:
-            tl = F.lit(term)
-            return F.filter(
-                F.transform(
-                    ts,
-                    lambda x, i: F.when(x == tl, i).otherwise(-1),
-                ),
-                lambda p: p >= 0,
-            )
-
-        pos_struct = F.struct(*[
-            positions(t).alias(f"p{i}") for i, t in enumerate(terms)
-        ])
-
-        def sweep(ps: Column) -> Column:
-            pos_by_term = {t: ps[f"p{i}"] for i, t in enumerate(terms)}
-            if ordered:
-                first = pos_by_term[tokens[0]]
-
-                def chain_ok(a: Column) -> Column:
-                    p = a
-                    for t in tokens[1:]:
-                        prev = p
-                        p = F.array_min(
-                            F.filter(pos_by_term[t], lambda x: x > prev)
-                        )
-
-                    def fin(pn: Column) -> Column:
-                        ok = pn.isNotNull()
-                        if max_gaps >= 0:
-                            ok = ok & (pn - a + 1 - n <= max_gaps)
-                        return ok
-
-                    # bind the chain's end once (it is referenced twice)
-                    return F.element_at(
-                        F.transform(F.array(p), fin), 1
-                    )
-
-                return F.coalesce(F.exists(first, chain_ok), F.lit(False))
-            if max_gaps < 0:
-                cond = None
-                for t in terms:
-                    c = F.size(pos_by_term[t]) >= mult[t]
-                    cond = c if cond is None else cond & c
-                return cond
+        pos_struct = "struct(" + ", ".join(
+            _positions_sql(ts, lambda x, t=t: f"({x} = {lit_sql(t)})") + f" AS p{i}"
+            for i, t in enumerate(terms)
+        ) + ")"
+        pos_by_term = {t: f"__ps.p{i}" for i, t in enumerate(terms)}
+        if ordered:
+            # anchor at each position of the first query term, then take
+            # the smallest next position of each following term
+            p = "__a"
+            for k, t in enumerate(tokens[1:]):
+                p = f"array_min(filter({pos_by_term[t]}, __y{k} -> (__y{k} > {p})))"
+            ok = "(__pn IS NOT NULL)"
+            if max_gaps >= 0:
+                ok = f"({ok} AND ((((__pn - __a) + 1) - {n}) <= {max_gaps}))"
+            # bind the chain's end once (it is referenced twice)
+            chain = _bind_once(p, "__pn", ok)
+            sweep = f"coalesce(exists({pos_by_term[tokens[0]]}, __a -> {chain}), false)"
+        elif max_gaps < 0:
+            sweep = _fold("AND", (f"(size({pos_by_term[t]}) >= {mult[t]})"
+                                  for t in terms))
+        else:
             width = n + max_gaps
-            starts = F.flatten(F.array(*[pos_by_term[t] for t in terms]))
+            starts = "flatten(array(" + ", ".join(pos_by_term[t] for t in terms) + "))"
+            window = _fold("AND", (
+                f"(size(filter({pos_by_term[t]}, __m -> ((__m >= __a) AND "
+                f"(__m <= (__a + {width - 1}))))) >= {mult[t]})"
+                for t in terms
+            ))
+            sweep = f"coalesce(exists({starts}, __a -> {window}), false)"
+        return _bind_once(pos_struct, "__ps", sweep)
 
-            def window_ok(a: Column) -> Column:
-                cond = None
-                for t in terms:
-                    c = F.size(F.filter(
-                        pos_by_term[t],
-                        lambda p: (p >= a) & (p <= a + F.lit(width - 1)),
-                    )) >= mult[t]
-                    cond = c if cond is None else cond & c
-                return cond
-
-            return F.coalesce(F.exists(starts, window_ok), F.lit(False))
-
-        return F.element_at(F.transform(F.array(pos_struct), sweep), 1)
-
-    def _unit_positions(self, ts: Column, kind: str, body: dict) -> Column:
+    def _unit_positions(self, ts: str, kind: str, body: dict) -> str:
         """Token positions matching a unit-width (single-position) rule:
         ``prefix`` = tokens starting with the (lowercased) prefix,
         ``wildcard`` = tokens matching the (lowercased) ``*``/``?``
         pattern as an anchored regex — one scan-local HOF, no UDF."""
         if kind == "prefix":
-            lit = F.lit(body["prefix"].lower())
-            pred = lambda x: x.startswith(lit)
-        else:
-            import re as _re
-
-            rx = "".join(
-                ".*" if ch == "*" else "." if ch == "?" else _re.escape(ch)
-                for ch in body["pattern"].lower()
-            )
-            pred = lambda x: x.rlike("^" + rx + "$")
-        return F.filter(
-            F.transform(
-                ts, lambda x, i: F.when(pred(x), i).otherwise(-1)
-            ),
-            lambda p: p >= 0,
+            lit = lit_sql(body["prefix"].lower())
+            return _positions_sql(ts, lambda x: f"startswith({x}, {lit})")
+        rx = "".join(
+            ".*" if ch == "*" else "." if ch == "?" else re.escape(ch)
+            for ch in body["pattern"].lower()
         )
+        return _positions_sql(ts, lambda x: f"({x} RLIKE {lit_sql('^' + rx + '$')})")
 
-    def _compile_all_of(self, spark, ts: Column, body: dict) -> Column:
+    def _compile_all_of(self, spark, ts: str, body: dict) -> str:
         """Ordered all_of over contiguous children: each child's
         occurrence-start array is one scan-local expression (positions s
         where slice(ts, s+1, n_c) equals the child's token literal;
@@ -860,7 +815,7 @@ class Intervals(Query):
                 spark, mbody["query"], mbody.get("analyzer", self.analyzer)
             )
             if not toks:
-                return F.lit(False)
+                return "false"
             if len(toks) > 1 and int(mbody.get("max_gaps", -1)) != 0:
                 raise ValueError(
                     "all_of children must be contiguous: a multi-term "
@@ -875,82 +830,49 @@ class Intervals(Query):
             children.append(("match", toks))
         widths = [1 if k != "match" else len(p) for k, p in children]
         total_w = sum(widths)
-        n_doc = F.size(ts)
+        n_doc = f"size({ts})"
 
-        def starts_of(ctoks: list[str]) -> Column:
-            lit = F.array(*[F.lit(t) for t in ctoks])
+        def starts_of(ctoks: list[str]) -> str:
             nc = len(ctoks)
-            return F.when(
-                n_doc >= nc,
-                F.filter(
-                    F.transform(
-                        F.sequence(F.lit(0), n_doc - nc),
-                        lambda s: F.when(
-                            F.slice(ts, s + 1, nc) == lit, s
-                        ).otherwise(-1),
-                    ),
-                    lambda p: p >= 0,
-                ),
-            ).otherwise(F.array().cast("array<int>"))
+            hits = (f"filter(transform(sequence(0, ({n_doc} - {nc})), __s -> "
+                    f"{_case(f'(slice({ts}, (__s + 1), {nc}) = {_array_sql(ctoks)})', '__s', '-1')}"
+                    "), __p -> (__p >= 0))")
+            return _case(f"({n_doc} >= {nc})", hits, "CAST(array() AS ARRAY<INT>)")
 
-        starts_struct = F.struct(*[
-            (starts_of(p) if k == "match"
-             else self._unit_positions(ts, k, p)).alias(f"c{i}")
+        starts_struct = "struct(" + ", ".join(
+            (starts_of(p) if k == "match" else self._unit_positions(ts, k, p))
+            + f" AS c{i}"
             for i, (k, p) in enumerate(children)
-        ])
+        ) + ")"
 
-        # unordered (r12, formerly a loud refusal): ES all_of intervals
-        # must not overlap, so a valid any-order assignment exists iff
-        # SOME permutation chains in order — OR the ordered chain over
-        # every child permutation (validated <= 4 children = 24 chains,
-        # all reading the same bound starts struct). Exactness: sort any
-        # valid assignment by start to get its permutation; the greedy
-        # earliest-next chain anchored at that assignment's first start
-        # ends no later, so its gap count can only be smaller.
-        import itertools
-
+        # unordered: ES all_of intervals must not overlap, so a valid
+        # any-order assignment exists iff SOME permutation chains in
+        # order — OR the ordered chain over every child permutation
+        # (validated <= 4 children = 24 chains, all reading the same bound
+        # starts struct). Exactness: sort any valid assignment by start to
+        # get its permutation; the greedy earliest-next chain anchored at
+        # that assignment's first start ends no later, so its gap count
+        # can only be smaller.
         perms = (
             [tuple(range(len(children)))] if body.get("ordered")
             else list(itertools.permutations(range(len(children))))
         )
 
-        def sweep(ss: Column) -> Column:
-            def make_chain_ok(perm):
-                # factory, NOT a default arg: HOF lambdas are
-                # arity-dispatched, so a second parameter would receive
-                # the element index
-                def chain_ok(a: Column) -> Column:
-                    end = a + F.lit(widths[perm[0]] - 1)
-                    for i in perm[1:]:
-                        prev_end = end
-                        s_i = F.array_min(
-                            F.filter(ss[f"c{i}"], lambda x: x > prev_end)
-                        )
-                        end = s_i + F.lit(widths[i] - 1)
+        def chain_ok(perm) -> str:
+            end = f"(__a + {widths[perm[0]] - 1})"
+            for k, i in enumerate(perm[1:]):
+                s_i = f"array_min(filter(__ss.c{i}, __y{k} -> (__y{k} > {end})))"
+                end = f"({s_i} + {widths[i] - 1})"
+            ok = "(__e IS NOT NULL)"
+            if max_gaps >= 0:
+                ok = f"({ok} AND ((((__e - __a) + 1) - {total_w}) <= {max_gaps}))"
+            return _bind_once(end, "__e", ok)
 
-                    def fin(e: Column) -> Column:
-                        ok = e.isNotNull()
-                        if max_gaps >= 0:
-                            ok = ok & (e - a + 1 - total_w <= max_gaps)
-                        return ok
-
-                    return F.element_at(F.transform(F.array(end), fin), 1)
-
-                return chain_ok
-
-            conds = []
-            for perm in perms:
-                first = ss[f"c{perm[0]}"]
-                conds.append(
-                    F.coalesce(F.exists(first, make_chain_ok(perm)),
-                               F.lit(False))
-                )
-            out = conds[0]
-            for c in conds[1:]:
-                out = out | c
-            return out
-
-        return F.element_at(F.transform(F.array(starts_struct), sweep), 1)
+        sweep = _fold("OR", (
+            f"coalesce(exists(__ss.c{perm[0]}, __a -> {chain_ok(perm)}), false)"
+            for perm in perms
+        ))
+        return _bind_once(starts_struct, "__ss", sweep)
 
 
 @dataclass
@@ -969,21 +891,17 @@ class MatchPhrasePrefix(Query):
     analyzer: str
     tokens_col: str | None = None
 
-    def predicate(self, spark, resolve) -> Column:
+    def predicate_sql(self, spark, ref) -> str:
         phrase = analyze_text(spark, self.text, self.analyzer)
         if not phrase:
-            return F.lit(False)
-        toks = (
-            resolve(self.tokens_col)
-            if self.tokens_col is not None
-            else analyze(resolve(self.field), self.analyzer)
-        )
-        nul = "\x00"
+            return "false"
+        toks = _tokens_sql(self, ref)
         if len(phrase) == 1:
-            return F.exists(toks, lambda t: t.startswith(phrase[0]))
-        hay = F.concat(F.lit(nul), F.array_join(toks, nul), F.lit(nul))
-        needle = nul + nul.join(phrase)  # no trailing NUL: prefix match
-        return F.instr(hay, needle) > 0
+            return f"exists({toks}, __x -> startswith(__x, {lit_sql(phrase[0])}))"
+        nul = lit_sql("\x00")
+        hay = f"concat({nul}, array_join({toks}, {nul}), {nul})"
+        needle = "\x00" + "\x00".join(phrase)  # no trailing NUL: prefix match
+        return f"(instr({hay}, {lit_sql(needle)}) > 0)"
 
 
 @dataclass
@@ -1000,27 +918,128 @@ class MatchBoolPrefix(Query):
     tokens_col: str | None = None
     operator: str = "or"
 
-    def predicate(self, spark, resolve) -> Column:
+    def predicate_sql(self, spark, ref) -> str:
         if self.operator not in ("or", "and"):
             raise ValueError(
                 f"operator must be 'or'/'and', got {self.operator!r}"
             )
         phrase = analyze_text(spark, self.text, self.analyzer)
         if not phrase:
-            return F.lit(False)
-        toks = (
-            resolve(self.tokens_col)
-            if self.tokens_col is not None
-            else analyze(resolve(self.field), self.analyzer)
+            return "false"
+        toks = _tokens_sql(self, ref)
+        preds = [f"array_contains({toks}, {lit_sql(t)})" for t in phrase[:-1]]
+        preds.append(f"exists({toks}, __x -> startswith(__x, {lit_sql(phrase[-1])}))")
+        return _fold(self.operator.upper(), preds)
+
+
+def _one_token(spark, value: str, analyzer: str, kind: str) -> str:
+    toks = analyze_text(spark, value, analyzer)
+    if len(toks) != 1:
+        raise ValueError(
+            f"{kind} term {value!r} analyzes to {len(toks)} tokens; span "
+            "terms are single-token"
         )
-        last = phrase[-1]
-        prefix_pred = F.exists(toks, lambda t: t.startswith(last))
-        full_preds = [F.array_contains(toks, t) for t in phrase[:-1]]
-        preds = full_preds + [prefix_pred]
-        out = preds[0]
-        for p in preds[1:]:
-            out = (out & p) if self.operator == "and" else (out | p)
-        return out
+    return toks[0]
+
+
+@dataclass
+class SpanFirst(Query):
+    """Lucene ``span_first`` over unit terms (``span_term``, or a
+    ``span_or`` of them): one of the analyzed ``values`` occurs among the
+    first ``end`` token positions — one slice + overlap expression,
+    scan-local. Query terms are analyzed at render time, like
+    ``Intervals``."""
+
+    field: str
+    analyzer: str
+    tokens_col: str | None
+    values: list
+    end: int
+
+    def predicate_sql(self, spark, ref) -> str:
+        toks = [_one_token(spark, v, self.analyzer, "span_first")
+                for v in self.values]
+        return (f"arrays_overlap(slice({_tokens_sql(self, ref)}, 1, {self.end}), "
+                f"{_array_sql(toks)})")
+
+
+@dataclass
+class SpanNot(Query):
+    """Lucene ``span_not`` over unit-width spans: some ``include``
+    position has no ``exclude`` position within ``pre`` before or
+    ``post`` after it. ``include``/``exclude`` are (literal terms, pattern
+    specs) pairs, a spec being ``("prefix", lowered)`` or
+    ``("wildcard", anchored regex)`` from a ``span_multi`` wrapper —
+    scan-local HOFs on the analyzed token stream."""
+
+    field: str
+    analyzer: str
+    tokens_col: str | None
+    include: tuple
+    exclude: tuple
+    pre: int
+    post: int
+
+    def predicate_sql(self, spark, ref) -> str:
+        ts = _tokens_sql(self, ref)
+
+        def pos_of(vals: list, specs: list) -> str:
+            lits = [_one_token(spark, v, self.analyzer, "span_not") for v in vals]
+
+            def hit(x: str) -> str:
+                conds = ["false"]
+                if lits:
+                    conds.append(f"array_contains({_array_sql(lits)}, {x})")
+                for kind, val in specs:
+                    conds.append(f"startswith({x}, {lit_sql(val)})" if kind == "prefix"
+                                 else f"({x} RLIKE {lit_sql(val)})")
+                return _fold("OR", conds)
+
+            return _positions_sql(ts, hit)
+
+        # bind both position arrays once (Catalyst no-CSE)
+        st = f"struct({pos_of(*self.include)} AS i, {pos_of(*self.exclude)} AS e)"
+        near = f"((__q >= (__ip - {self.pre})) AND (__q <= (__ip + {self.post})))"
+        check = f"coalesce(exists(__st.i, __ip -> (NOT exists(__st.e, __q -> {near}))), false)"
+        return _bind_once(st, "__st", check)
+
+
+@dataclass
+class SpanContaining(Query):
+    """Lucene ``span_containing``/``span_within`` as a document filter
+    (the two coincide there): some BIG span — the minimal greedy chain of
+    ``big_terms`` in order within ``slop`` from an anchor at the first
+    term — contains a position of one of ``little_terms``."""
+
+    field: str
+    analyzer: str
+    tokens_col: str | None
+    big_terms: list
+    little_terms: list
+    slop: int
+    kind: str = "span_containing"
+
+    def predicate_sql(self, spark, ref) -> str:
+        ts = _tokens_sql(self, ref)
+
+        def pos_of(vals: list) -> str:
+            arr = _array_sql([_one_token(spark, v, self.analyzer, self.kind)
+                              for v in vals])
+            return _positions_sql(ts, lambda x: f"array_contains({arr}, {x})")
+
+        st = "struct(" + ", ".join(
+            [f"{pos_of([t])} AS b{j}" for j, t in enumerate(self.big_terms)]
+            + [f"{pos_of(self.little_terms)} AS lit"]
+        ) + ")"
+        n_big = len(self.big_terms)
+        end = "__a"
+        for j in range(1, n_big):
+            end = f"array_min(filter(__s.b{j}, __y{j} -> (__y{j} > {end})))"
+        fin = (f"(((__end IS NOT NULL) AND ((((__end - __a) + 1) - {n_big}) <= "
+               f"{int(self.slop)})) AND coalesce(exists(__s.lit, __q -> "
+               "((__q >= __a) AND (__q <= __end))), false))")
+        check = f"coalesce(exists(__s.b0, __a -> {_bind_once(end, '__end', fin)}), false)"
+        return _bind_once(st, "__s", check)
 
 
 @dataclass
@@ -1034,7 +1053,7 @@ class RankFeature(Query):
     * ``log``: boost * ln(scaling_factor + x)
     * ``sigmoid``: boost * x^exp / (x^exp + pivot^exp)
 
-    All pure Column arithmetic riding the scan, oracle-able verbatim."""
+    All pure arithmetic riding the scan, oracle-able verbatim."""
 
     CONSTANT_SCORE = False
 
@@ -1045,27 +1064,26 @@ class RankFeature(Query):
     exponent: float = 1.0
     boost: float = 1.0
 
-    def predicate(self, spark, resolve) -> Column:
-        c = resolve(self.field)
-        return c.isNotNull() & (c > 0)
+    def predicate_sql(self, spark, ref) -> str:
+        c = ref(self.field)
+        return f"(({c} IS NOT NULL) AND ({c} > 0))"
 
-    def score(self, spark, resolve) -> Column:
-        x = resolve(self.field).cast("double")
+    def score_sql(self, spark, ref) -> str:
+        x = f"CAST({ref(self.field)} AS DOUBLE)"
         if self.function == "saturation":
-            s = x / (x + F.lit(float(self.pivot)))
+            s = f"({x} / ({x} + {double_sql(self.pivot)}))"
         elif self.function == "log":
-            s = F.log(F.lit(float(self.scaling_factor)) + x)
+            s = f"log(({double_sql(self.scaling_factor)} + {x}))"
         elif self.function == "sigmoid":
-            e = float(self.exponent)
-            s = F.pow(x, e) / (F.pow(x, e) + F.lit(float(self.pivot) ** e))
+            e = double_sql(self.exponent)
+            s = (f"(power({x}, {e}) / (power({x}, {e}) + "
+                 f"{double_sql(float(self.pivot) ** float(self.exponent))}))")
         else:
             raise ValueError(
                 f"rank_feature function must be saturation/log/sigmoid, "
                 f"got {self.function!r}"
             )
-        return F.when(
-            self.predicate(spark, resolve), F.lit(float(self.boost)) * s
-        ).otherwise(F.lit(0.0))
+        return _case(self.predicate_sql(spark, ref), f"({double_sql(self.boost)} * {s})")
 
 
 @dataclass
@@ -1084,18 +1102,17 @@ class Pinned(Query):
     id_field: str = "doc_id"
     pin_base: float = 1e9
 
-    def predicate(self, spark, resolve) -> Column:
-        return resolve(self.id_field).isin(list(self.ids)) | \
-            self.organic.predicate(spark, resolve)
+    def predicate_sql(self, spark, ref) -> str:
+        return (f"({_in_sql(ref(self.id_field), list(self.ids))} OR "
+                f"{self.organic.predicate_sql(spark, ref)})")
 
-    def score(self, spark, resolve) -> Column:
-        idc = resolve(self.id_field)
-        out = self.organic.score(spark, resolve)
+    def score_sql(self, spark, ref) -> str:
+        idc = ref(self.id_field)
+        out = self.organic.score_sql(spark, ref)
         k = len(self.ids)
         for i, pid in enumerate(self.ids):
-            out = F.when(
-                idc == F.lit(pid), F.lit(self.pin_base + (k - i))
-            ).otherwise(out)
+            out = _case(f"({idc} = {lit_sql(pid)})",
+                        lit_sql(self.pin_base + (k - i)), out)
         return out
 
 
@@ -1116,24 +1133,20 @@ class DistanceFeature(Query):
     pivot: float
     boost: float = 1.0
 
-    def predicate(self, spark, resolve) -> Column:
-        return resolve(self.field).isNotNull()
+    def predicate_sql(self, spark, ref) -> str:
+        return f"({ref(self.field)} IS NOT NULL)"
 
-    def score(self, spark, resolve) -> Column:
-        c = resolve(self.field)
+    def score_sql(self, spark, ref) -> str:
         # cast-to-double works for numerics AND timestamps (epoch seconds
         # WITH fraction — unix_timestamp would truncate and drift from
         # engines that keep sub-second precision)
-        v = c.cast("double")
+        v = f"CAST({ref(self.field)} AS DOUBLE)"
         if self.pivot <= 0:
             raise ValueError(f"pivot must be > 0, got {self.pivot}")
-        dist = F.abs(v - F.lit(float(self.origin)))
-        s = F.lit(float(self.boost)) * F.lit(float(self.pivot)) / (
-            F.lit(float(self.pivot)) + dist
-        )
-        return F.when(self.predicate(spark, resolve), s).otherwise(
-            F.lit(0.0)
-        )
+        pivot = double_sql(self.pivot)
+        dist = f"abs(({v} - {double_sql(self.origin)}))"
+        s = f"(({double_sql(self.boost)} * {pivot}) / ({pivot} + {dist}))"
+        return _case(self.predicate_sql(spark, ref), s)
 
 
 @dataclass
@@ -1149,21 +1162,15 @@ class Bm25Stats:
     df: dict[str, float]
 
 
-def _weighted_sum(parts) -> Column:
-    """Σ weight · column over ``(Column, weight)`` pairs; a weight-1 term
-    is not multiplied, so one weight-1 column stays the bare column."""
-    out = None
-    for c, w in parts:
-        c = c if w == 1.0 else c * F.lit(float(w))
-        out = c if out is None else out + c
-    return out
+def _weighted_sum(parts) -> str:
+    """Σ weight · term over ``(SQL fragment, weight)`` pairs; a weight-1
+    term is not multiplied, so one weight-1 term stays the bare term."""
+    return _fold("+", (c if w == 1.0 else f"({c} * {double_sql(w)})"
+                       for c, w in parts))
 
 
-def _any_contains(cols: list[Column], t: str) -> Column:
-    out = F.array_contains(cols[0], t)
-    for c in cols[1:]:
-        out = out | F.array_contains(c, t)
-    return out
+def _any_contains(cols: list[str], t: str) -> str:
+    return _fold("OR", (f"array_contains({c}, {lit_sql(t)})" for c in cols))
 
 
 def bm25_stats(df: DataFrame, columns, query_tokens: list[str]) -> Bm25Stats:
@@ -1174,18 +1181,15 @@ def bm25_stats(df: DataFrame, columns, query_tokens: list[str]) -> Bm25Stats:
     aggregation job. The union df is EXACT — Lucene's CombinedFieldQuery
     approximates it by merging per-field term stats because the inverted
     index can't see the union; a scan-side engine can."""
-    cols = [F.col(c) for c, _ in columns]
+    cols = [col_sql(c) for c, _ in columns]
+    dl = _weighted_sum((f"size({col_sql(c)})", w) for c, w in columns)
     aggs = [
-        F.count(F.lit(1)).cast("double").alias("_n"),
-        F.avg(_weighted_sum((F.size(F.col(c)), w) for c, w in columns))
-        .alias("_avgdl"),
+        "CAST(count(1) AS DOUBLE) AS _n", f"avg({dl}) AS _avgdl",
     ] + [
-        F.sum(_any_contains(cols, t).cast("long"))
-        .cast("double")
-        .alias(f"_df_{i}")
+        f"CAST(sum(CAST({_any_contains(cols, t)} AS BIGINT)) AS DOUBLE) AS _df_{i}"
         for i, t in enumerate(query_tokens)
     ]
-    row = df.agg(*aggs).head()
+    row = df.selectExpr(*aggs).head()
     return Bm25Stats(
         n_docs=float(row["_n"]),
         avgdl=float(row["_avgdl"]),
@@ -1229,7 +1233,7 @@ class BM25Match(Query):
         tf_sat   = tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))   (saturation)
         score    = Σ idf(t) · tf_sat(t, doc)
 
-    All per-doc math is JVM Column expressions over the token arrays
+    All per-doc math is JVM SQL expressions over the token arrays
     (``size(filter(tokens, = t))``); corpus stats arrive as literals from
     ``bm25_stats`` (for several columns: union df, weighted avgdl). Absent
     tokens contribute 0 naturally (tf = 0). ES requires the fields of a
@@ -1255,42 +1259,37 @@ class BM25Match(Query):
     def _query_tokens(self, spark) -> list[str]:
         return analyze_text(spark, self.text, self.analyzer)
 
-    def predicate(self, spark, resolve) -> Column:
+    def predicate_sql(self, spark, ref) -> str:
         _check_operator(self.operator)
         qt = self._query_tokens(spark)
         if not qt:
-            return F.lit(False)
-        cols = [resolve(c) for _, c, _ in self.fields]
+            return "false"
+        cols = [ref(c) for _, c, _ in self.fields]
+        overlap = (f"arrays_overlap({cols[0]}, {_array_sql(qt)})"
+                   if len(cols) == 1 else None)
+        return _token_gate(lambda t: _any_contains(cols, t), qt, self.operator,
+                           self.minimum_should_match, overlap)
 
-        def overlap() -> Column:
-            return F.arrays_overlap(cols[0], F.array(*[F.lit(t) for t in qt]))
-
-        return _token_gate(
-            lambda t: _any_contains(cols, t), qt, self.operator,
-            self.minimum_should_match, overlap if len(cols) == 1 else None,
-        )
-
-    def score(self, spark, resolve) -> Column:
-        cols = [(resolve(c), w) for _, c, w in self.fields]
-        dl = _weighted_sum((F.size(c).cast("double"), w) for c, w in cols)
-        total = F.lit(0.0)
+    def score_sql(self, spark, ref) -> str:
+        cols = [(ref(c), w) for _, c, w in self.fields]
+        dl = _weighted_sum((f"CAST(size({c}) AS DOUBLE)", w) for c, w in cols)
+        k1, b = lit_sql(self.k1), lit_sql(self.b)
+        norm = f"({k1} * ({lit_sql(1.0 - self.b)} + (({b} * {dl}) / {lit_sql(self.stats.avgdl)})))"
+        terms = ["0.0D"]
         for t in self._query_tokens(spark):
             df_t = self.stats.df.get(t, 0.0)
             idf = math.log(
                 1.0 + (self.stats.n_docs - df_t + 0.5) / (df_t + 0.5)
             )
             tf = _weighted_sum(
-                (F.size(F.filter(c, lambda x: x == F.lit(t))).cast("double"), w)
+                (f"CAST(size(filter({c}, __x -> (__x = {lit_sql(t)}))) AS DOUBLE)", w)
                 for c, w in cols
             )
-            sat = (tf * F.lit(self.k1 + 1.0)) / (
-                tf
-                + F.lit(self.k1)
-                * (F.lit(1.0 - self.b) + F.lit(self.b) * dl / F.lit(self.stats.avgdl))
-            )
-            total = total + F.lit(idf) * sat
+            sat = f"(({tf} * {lit_sql(self.k1 + 1.0)}) / ({tf} + {norm}))"
+            terms.append(f"({double_sql(idf)} * {sat})")
+        total = _fold("+", terms)
         if self.boost != 1.0:
-            total = total * F.lit(float(self.boost))
+            total = f"({total} * {double_sql(self.boost)})"
         return total
 
 
@@ -1357,46 +1356,44 @@ class Range(Query):
     lt: object = None
     lte: object = None
 
-    def predicate(self, spark, resolve) -> Column:
-        c = resolve(self.field)
-        conds = []
-        if self.gt is not None:
-            conds.append(c > F.lit(self.gt))
-        if self.gte is not None:
-            conds.append(c >= F.lit(self.gte))
-        if self.lt is not None:
-            conds.append(c < F.lit(self.lt))
-        if self.lte is not None:
-            conds.append(c <= F.lit(self.lte))
+    def predicate_sql(self, spark, ref) -> str:
+        c = ref(self.field)
+        conds = [f"({c} {op} {lit_sql(v)})" for op, v in (
+            (">", self.gt), (">=", self.gte), ("<", self.lt), ("<=", self.lte)
+        ) if v is not None]
         if not conds:
             raise ValueError(
                 f"Range({self.field!r}) needs at least one bound (gt/gte/lt/lte)"
             )
-        out = conds[0]
-        for extra in conds[1:]:
-            out = out & extra
-        return out
+        return _fold("AND", conds)
 
 
 #: ES's mean earth radius (GeoUtils.EARTH_MEAN_RADIUS), meters.
 EARTH_RADIUS_M = 6371008.7714
 
 
+def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
+    """Great-circle distance in meters between two (lat, lon) degree
+    pairs of SQL fragments — the haversine formula with ES's mean earth
+    radius, as pure JVM math (radians/sin/cos/asin/sqrt), so it rides
+    whole-stage codegen and mirrors verbatim into a SQL oracle."""
+    dlat = f"(radians(({lat2} - {lat1})) / 2.0D)"
+    dlon = f"(radians(({lon2} - {lon1})) / 2.0D)"
+    a = (f"((sin({dlat}) * sin({dlat})) + (((cos(radians({lat1})) * "
+         f"cos(radians({lat2}))) * sin({dlon})) * sin({dlon})))")
+    return f"({double_sql(2.0 * EARTH_RADIUS_M)} * asin(sqrt({a})))"
+
+
 def haversine_meters(
     lat1: Column, lon1: Column, lat2: Column, lon2: Column
 ) -> Column:
-    """Great-circle distance in meters between two (lat, lon) degree
-    pairs — the haversine formula with ES's mean earth radius, as pure
-    JVM math (radians/sin/cos/asin/sqrt), so it rides whole-stage codegen
-    and mirrors verbatim into a SQL oracle."""
-    dlat = F.radians(lat2 - lat1) / 2.0
-    dlon = F.radians(lon2 - lon1) / 2.0
-    a = (
-        F.sin(dlat) * F.sin(dlat)
-        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2))
-        * F.sin(dlon) * F.sin(dlon)
-    )
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
+    """``haversine_sql`` over Columns: the four operands are bound as one
+    struct whose fields the formula reads through a SQL lambda."""
+    pts = F.struct(lat1.alias("lat1"), lon1.alias("lon1"),
+                   lat2.alias("lat2"), lon2.alias("lon2"))
+    body = haversine_sql("__g.lat1", "__g.lon1", "__g.lat2", "__g.lon2")
+    return F.element_at(
+        F.call_function("transform", F.array(pts), F.expr(f"__g -> {body}")), 1)
 
 
 def parse_distance_meters(v) -> float:
@@ -1437,13 +1434,13 @@ class GeoDistance(Query):
         if self.distance_m <= 0:
             raise ValueError(f"distance must be > 0, got {self.distance_m}")
 
-    def predicate(self, spark, resolve) -> Column:
-        d = haversine_meters(
-            resolve(self.lat_field).cast("double"),
-            resolve(self.lon_field).cast("double"),
-            F.lit(float(self.lat)), F.lit(float(self.lon)),
+    def predicate_sql(self, spark, ref) -> str:
+        d = haversine_sql(
+            f"CAST({ref(self.lat_field)} AS DOUBLE)",
+            f"CAST({ref(self.lon_field)} AS DOUBLE)",
+            double_sql(self.lat), double_sql(self.lon),
         )
-        return d <= F.lit(float(self.distance_m))
+        return f"({d} <= {double_sql(self.distance_m)})"
 
 
 @dataclass
@@ -1471,15 +1468,14 @@ class GeoBoundingBox(Query):
             if not -180.0 <= v <= 180.0:
                 raise ValueError(f"bad longitude bound {name}={v}")
 
-    def predicate(self, spark, resolve) -> Column:
-        lat = resolve(self.lat_field).cast("double")
-        lon = resolve(self.lon_field).cast("double")
-        lat_ok = (lat >= F.lit(self.bottom)) & (lat <= F.lit(self.top))
-        if self.left <= self.right:
-            lon_ok = (lon >= F.lit(self.left)) & (lon <= F.lit(self.right))
-        else:  # antimeridian crossing: wrapped range
-            lon_ok = (lon >= F.lit(self.left)) | (lon <= F.lit(self.right))
-        return lat_ok & lon_ok
+    def predicate_sql(self, spark, ref) -> str:
+        lat = f"CAST({ref(self.lat_field)} AS DOUBLE)"
+        lon = f"CAST({ref(self.lon_field)} AS DOUBLE)"
+        lat_ok = f"(({lat} >= {lit_sql(self.bottom)}) AND ({lat} <= {lit_sql(self.top)}))"
+        # a box whose left > right crosses the antimeridian: wrapped range
+        op = "AND" if self.left <= self.right else "OR"
+        lon_ok = f"(({lon} >= {lit_sql(self.left)}) {op} ({lon} <= {lit_sql(self.right)}))"
+        return f"({lat_ok} AND {lon_ok})"
 
 
 @dataclass
@@ -1513,29 +1509,26 @@ class GeoPolygon(Query):
             if not (-180.0 <= float(lon) <= 180.0):
                 raise ValueError(f"vertex longitude out of range: {lon}")
 
-    def predicate(self, spark, resolve) -> Column:
-        lat = resolve(self.lat_field).cast("double")
-        lon = resolve(self.lon_field).cast("double")
+    def predicate_sql(self, spark, ref) -> str:
+        lat = f"CAST({ref(self.lat_field)} AS DOUBLE)"
+        lon = f"CAST({ref(self.lon_field)} AS DOUBLE)"
         verts = [(float(a), float(o)) for a, o in self.points]
         # drop an explicitly repeated closing vertex; closure is implicit
         if verts[0] == verts[-1] and len(verts) > 3:
             verts = verts[:-1]
-        crossings: Column = F.lit(0)
+        crossings = ["0"]
         n = len(verts)
         for i in range(n):
             y1, x1 = verts[i]
             y2, x2 = verts[(i + 1) % n]
             if y1 == y2:
                 continue  # horizontal edge never crosses the ray
-            cond = (
-                ((F.lit(y1) > lat) != (F.lit(y2) > lat))
-                & (lon < (F.lit(x2 - x1) * (lat - F.lit(y1))
-                          / F.lit(y2 - y1) + F.lit(x1)))
-            )
-            crossings = crossings + F.when(cond, 1).otherwise(0)
-        return (
-            lat.isNotNull() & lon.isNotNull() & (crossings % 2 == 1)
-        )
+            d = double_sql
+            cond = (f"((({d(y1)} > {lat}) <> ({d(y2)} > {lat})) AND ({lon} < "
+                    f"((({d(x2 - x1)} * ({lat} - {d(y1)})) / {d(y2 - y1)}) + {d(x1)})))")
+            crossings.append(_case(cond, "1", "0"))
+        return (f"((({lat} IS NOT NULL) AND ({lon} IS NOT NULL)) AND "
+                f"(({_fold('+', crossings)} % 2) = 1))")
 
 
 @dataclass
@@ -1544,8 +1537,8 @@ class Exists(Query):
 
     field: str
 
-    def predicate(self, spark, resolve) -> Column:
-        return resolve(self.field).isNotNull()
+    def predicate_sql(self, spark, ref) -> str:
+        return f"({ref(self.field)} IS NOT NULL)"
 
 
 @dataclass
@@ -1557,11 +1550,11 @@ class Nested(Query):
     path: str
     query: Query
 
-    def predicate(self, spark, resolve) -> Column:
-        return F.exists(
-            resolve(self.path),
-            lambda el: self.query.predicate(spark, _element_resolver(el)),
-        )
+    def predicate_sql(self, spark, ref) -> str:
+        # a nested scope inside this one rebinds __el in its own lambda;
+        # its array argument, outside that lambda, still reads this one
+        inner = self.query.predicate_sql(spark, _element_ref)
+        return f"exists({ref(self.path)}, __el -> {inner})"
 
 
 @dataclass
@@ -1582,12 +1575,9 @@ class Bool(Query):
     must_not: list[Query] = dc_field(default_factory=list)
     minimum_should_match: int = 0
 
-    def predicate(self, spark, resolve) -> Column:
-        out = F.lit(True)
-        for q in self.must + self.filter:
-            out = out & q.predicate(spark, resolve)
-        for q in self.must_not:
-            out = out & ~q.predicate(spark, resolve)
+    def predicate_sql(self, spark, ref) -> str:
+        conds = [q.predicate_sql(spark, ref) for q in self.must + self.filter]
+        conds += [f"(NOT {q.predicate_sql(spark, ref)})" for q in self.must_not]
         # ES semantics: a bool with ONLY should clauses requires at least
         # one of them to match (implicit minimum_should_match=1); with
         # must/filter present, should stays purely optional/scoring
@@ -1595,41 +1585,30 @@ class Bool(Query):
         if msm == 0 and self.should and not (self.must or self.filter):
             msm = 1
         if msm > 0 and self.should:
-            matched = sum(
-                (
-                    F.when(q.predicate(spark, resolve), 1).otherwise(0)
-                    for q, _ in self.should
-                ),
-                start=F.lit(0),
-            )
-            out = out & (matched >= msm)
-        return out
+            matched = _fold("+", ["0"] + [
+                _case(q.predicate_sql(spark, ref), "1", "0") for q, _ in self.should
+            ])
+            conds.append(f"({matched} >= {int(msm)})")
+        return _fold("AND", conds) if conds else "true"
 
-    def should_contributions(self, spark, resolve) -> list[Column]:
-        """One score-contribution Column per should clause — the SINGLE
-        definition both Bool.score and the _explain breakdown
-        (score_parts) compile from, so the explanation can never drift
+    def should_sql(self, spark, ref) -> list[str]:
+        """One score-contribution fragment per should clause — the SINGLE
+        definition both Bool's score and the _explain breakdown
+        (score_parts) render from, so the explanation can never drift
         from the actual scoring expression."""
         contributions = []
         for q, w in self.should:
-            p = q.predicate(spark, resolve)
+            p = q.predicate_sql(spark, ref)
             if q.CONSTANT_SCORE:
-                c = F.when(p, F.lit(float(w))).otherwise(F.lit(0.0))
+                contributions.append(_case(p, double_sql(w)))
             else:
-                c = F.when(p, F.lit(w) * q.score(spark, resolve)).otherwise(
-                    F.lit(0.0)
-                )
-            contributions.append(c)
+                contributions.append(
+                    _case(p, f"({lit_sql(w)} * {q.score_sql(spark, ref)})"))
         return contributions
 
-    def score(self, spark, resolve) -> Column:
-        contributions = self.should_contributions(spark, resolve)
-        if not contributions:
-            return F.lit(0.0)
-        total = contributions[0]
-        for c in contributions[1:]:
-            total = total + c
-        return total
+    def score_sql(self, spark, ref) -> str:
+        contributions = self.should_sql(spark, ref)
+        return _fold("+", contributions) if contributions else "0.0D"
 
 
 @dataclass
@@ -1644,12 +1623,11 @@ class ConstantScore(Query):
     filter: Query
     boost: float = 1.0
 
-    def predicate(self, spark, resolve) -> Column:
-        return self.filter.predicate(spark, resolve)
+    def predicate_sql(self, spark, ref) -> str:
+        return self.filter.predicate_sql(spark, ref)
 
-    def score(self, spark, resolve) -> Column:
-        p = self.filter.predicate(spark, resolve)
-        return F.when(p, F.lit(float(self.boost))).otherwise(F.lit(0.0))
+    def score_sql(self, spark, ref) -> str:
+        return _case(self.filter.predicate_sql(spark, ref), double_sql(self.boost))
 
 
 @dataclass
@@ -1673,23 +1651,18 @@ class DisMax(Query):
                 f"tie_breaker must be in [0, 1], got {self.tie_breaker}"
             )
 
-    def predicate(self, spark, resolve) -> Column:
-        out = self.queries[0].predicate(spark, resolve)
-        for q in self.queries[1:]:
-            out = out | q.predicate(spark, resolve)
-        return out
+    def predicate_sql(self, spark, ref) -> str:
+        return _fold("OR", (q.predicate_sql(spark, ref) for q in self.queries))
 
-    def score(self, spark, resolve) -> Column:
-        scores = [q.score(spark, resolve) for q in self.queries]
+    def score_sql(self, spark, ref) -> str:
+        scores = [q.score_sql(spark, ref) for q in self.queries]
         if len(scores) == 1:
             return scores[0]
-        best = F.greatest(*scores)
+        best = f"greatest({', '.join(scores)})"
         if self.tie_breaker == 0.0:
             return best
-        total = scores[0]
-        for s in scores[1:]:
-            total = total + s
-        return best + F.lit(float(self.tie_breaker)) * (total - best)
+        return (f"({best} + ({double_sql(self.tie_breaker)} * "
+                f"({_fold('+', scores)} - {best})))")
 
 
 @dataclass
@@ -1711,23 +1684,20 @@ class Boosting(Query):
                 f"negative_boost must be >= 0, got {self.negative_boost}"
             )
 
-    def predicate(self, spark, resolve) -> Column:
-        return self.positive.predicate(spark, resolve)
+    def predicate_sql(self, spark, ref) -> str:
+        return self.positive.predicate_sql(spark, ref)
 
-    def score(self, spark, resolve) -> Column:
-        base = self.positive.score(spark, resolve)
-        demote = F.when(
-            self.negative.predicate(spark, resolve),
-            F.lit(float(self.negative_boost)),
-        ).otherwise(F.lit(1.0))
-        return base * demote
+    def score_sql(self, spark, ref) -> str:
+        demote = _case(self.negative.predicate_sql(spark, ref),
+                       double_sql(self.negative_boost), "1.0D")
+        return f"({self.positive.score_sql(spark, ref)} * {demote})"
 
 
 _FVF_MODIFIERS = {
     "none": lambda c: c,
-    "log1p": lambda c: F.log1p(c),
-    "sqrt": lambda c: F.sqrt(c),
-    "square": lambda c: c * c,
+    "log1p": lambda c: f"log1p({c})",
+    "sqrt": lambda c: f"sqrt({c})",
+    "square": lambda c: f"({c} * {c})",
 }
 
 
@@ -1743,16 +1713,16 @@ class FieldValueFactor:
     modifier: str = "none"
     missing: float | None = None
 
-    def value(self, spark, resolve) -> Column:
+    def value_sql(self, spark, ref) -> str:
         if self.modifier not in _FVF_MODIFIERS:
             raise ValueError(
                 f"unsupported field_value_factor modifier {self.modifier!r} "
                 f"(supported: {sorted(_FVF_MODIFIERS)})"
             )
-        c = resolve(self.field).cast("double")
+        c = f"CAST({ref(self.field)} AS DOUBLE)"
         if self.missing is not None:
-            c = F.coalesce(c, F.lit(float(self.missing)))
-        return _FVF_MODIFIERS[self.modifier](c * F.lit(float(self.factor)))
+            c = f"coalesce({c}, {double_sql(self.missing)})"
+        return _FVF_MODIFIERS[self.modifier](f"({c} * {double_sql(self.factor)})")
 
 
 @dataclass
@@ -1777,7 +1747,7 @@ class DecayFunction:
     offset: float = 0.0
     decay: float = 0.5
 
-    def value(self, spark, resolve) -> Column:
+    def value_sql(self, spark, ref) -> str:
         if self.kind not in ("gauss", "exp", "linear"):
             raise ValueError(f"unsupported decay function: {self.kind!r}")
         if not (0.0 < self.decay < 1.0) or self.scale <= 0:
@@ -1785,21 +1755,19 @@ class DecayFunction:
                 f"decay needs 0 < decay < 1 and scale > 0, got "
                 f"decay={self.decay}, scale={self.scale}"
             )
-        x = resolve(self.field).cast("double")
-        d = F.greatest(
-            F.lit(0.0),
-            F.abs(x - F.lit(float(self.origin))) - F.lit(float(self.offset)),
-        )
+        x = f"CAST({ref(self.field)} AS DOUBLE)"
+        d = (f"greatest(0.0D, (abs(({x} - {double_sql(self.origin)})) - "
+             f"{double_sql(self.offset)}))")
         if self.kind == "gauss":
             sigma2 = -self.scale * self.scale / (2.0 * math.log(self.decay))
-            val = F.exp(-(d * d) / F.lit(2.0 * sigma2))
+            val = f"exp(((- ({d} * {d})) / {double_sql(2.0 * sigma2)}))"
         elif self.kind == "exp":
             lam = math.log(self.decay) / self.scale
-            val = F.exp(F.lit(lam) * d)
+            val = f"exp(({double_sql(lam)} * {d}))"
         else:
-            s = self.scale / (1.0 - self.decay)
-            val = F.greatest(F.lit(0.0), (F.lit(s) - d) / F.lit(s))
-        return F.when(x.isNull(), F.lit(1.0)).otherwise(val)
+            s = double_sql(self.scale / (1.0 - self.decay))
+            val = f"greatest(0.0D, (({s} - {d}) / {s}))"
+        return _case(f"({x} IS NULL)", "1.0D", val)
 
 
 @dataclass
@@ -1811,13 +1779,11 @@ class WeightFunction:
     weight: float
     filter: Query | None = None
 
-    def value(self, spark, resolve) -> Column:
-        w = F.lit(float(self.weight))
+    def value_sql(self, spark, ref) -> str:
+        w = double_sql(self.weight)
         if self.filter is None:
             return w
-        return F.when(self.filter.predicate(spark, resolve), w).otherwise(
-            F.lit(1.0)
-        )
+        return _case(self.filter.predicate_sql(spark, ref), w, "1.0D")
 
 
 @dataclass
@@ -1827,7 +1793,7 @@ class FunctionScore(Query):
     per-document value, ``score_mode`` combines them (sum/multiply/max/
     min/avg), and ``boost_mode`` combines the result with the wrapped
     query's score (multiply — the default — /sum/replace). Everything
-    compiles to one arithmetic Column expression over the scan."""
+    compiles to one arithmetic expression over the scan."""
 
     CONSTANT_SCORE = False  # passes through the wrapped query's score
 
@@ -1836,53 +1802,48 @@ class FunctionScore(Query):
     score_mode: str = "multiply"
     boost_mode: str = "multiply"
 
-    def predicate(self, spark, resolve) -> Column:
-        return self.query.predicate(spark, resolve)
+    def predicate_sql(self, spark, ref) -> str:
+        return self.query.predicate_sql(spark, ref)
 
-    def score(self, spark, resolve) -> Column:
-        base = self.query.score(spark, resolve)
+    def score_sql(self, spark, ref) -> str:
+        base = self.query.score_sql(spark, ref)
         if not self.functions:
             return base
-        vals = [fn.value(spark, resolve) for fn in self.functions]
+        vals = [fn.value_sql(spark, ref) for fn in self.functions]
         if self.score_mode == "sum":
-            fscore = sum(vals[1:], start=vals[0])
+            fscore = _fold("+", vals)
         elif self.score_mode == "multiply":
-            fscore = vals[0]
-            for v in vals[1:]:
-                fscore = fscore * v
-        elif self.score_mode == "max":
-            fscore = vals[0] if len(vals) == 1 else F.greatest(*vals)
-        elif self.score_mode == "min":
-            fscore = vals[0] if len(vals) == 1 else F.least(*vals)
+            fscore = _fold("*", vals)
+        elif self.score_mode in ("max", "min"):
+            fn = "greatest" if self.score_mode == "max" else "least"
+            fscore = vals[0] if len(vals) == 1 else f"{fn}({', '.join(vals)})"
         elif self.score_mode == "avg":
-            fscore = sum(vals[1:], start=vals[0]) / F.lit(float(len(vals)))
+            fscore = f"({_fold('+', vals)} / {double_sql(len(vals))})"
         else:
             raise ValueError(f"unsupported score_mode: {self.score_mode!r}")
         if self.boost_mode == "multiply":
-            return base * fscore
+            return f"({base} * {fscore})"
         if self.boost_mode == "sum":
-            return base + fscore
+            return f"({base} + {fscore})"
         if self.boost_mode == "replace":
             return fscore
         raise ValueError(f"unsupported boost_mode: {self.boost_mode!r}")
 
 
 _PAINLESS_FUNCS = {
-    "Math.log": (1, F.log),       # natural log, as in Java
-    "Math.log10": (1, F.log10),
-    "Math.sqrt": (1, F.sqrt),
-    "Math.exp": (1, F.exp),
-    "Math.abs": (1, F.abs),
-    "Math.max": (2, F.greatest),
-    "Math.min": (2, F.least),
-    "Math.pow": (2, F.pow),
+    "Math.log": (1, "log"),       # natural log, as in Java
+    "Math.log10": (1, "log10"),
+    "Math.sqrt": (1, "sqrt"),
+    "Math.exp": (1, "exp"),
+    "Math.abs": (1, "abs"),
+    "Math.max": (2, "greatest"),
+    "Math.min": (2, "least"),
+    "Math.pow": (2, "pow"),
 }
 
 
 def _tokenize_painless(src: str) -> list[tuple[str, object]]:
-    import re as _re
-
-    token_re = _re.compile(
+    token_re = re.compile(
         r"\s*(?:(?P<num>\d+\.\d+|\d+|\.\d+)"
         r"|(?P<doc>doc\[\s*'(?P<field>[A-Za-z0-9_.]+)'\s*\]\s*\.\s*value)"
         r"|(?P<param>params\.(?P<pname>[A-Za-z_][A-Za-z0-9_]*))"
@@ -1924,17 +1885,18 @@ def _tokenize_painless(src: str) -> list[tuple[str, object]]:
 def compile_painless(
     source: str,
     *,
-    score: Column | None = None,
-    resolve_doc=None,
-    params: dict | None = None,
+    score: str | None = None,
+    resolve_doc: Resolver | None = None,
+    params: dict[str, str] | None = None,
     compare: bool = False,
-) -> Column:
-    """Compile the Painless ARITHMETIC SUBSET to one Catalyst Column:
+) -> str:
+    """Compile the Painless ARITHMETIC SUBSET to one SQL expression:
     numbers, ``+ - * /`` with standard precedence, unary minus,
     parentheses, ``Math.log/log10/sqrt/exp/abs/max/min/pow``, and the
-    variable forms each caller enables — ``_score`` (``score=``),
-    ``doc['field'].value`` (``resolve_doc=``), ``params.name`` (a Column
-    per name, the ``bucket_script``/``bucket_selector`` binding). With
+    variable forms each caller enables — ``_score`` (``score=``, a SQL
+    fragment), ``doc['field'].value`` (``resolve_doc=``, field → SQL
+    fragment), ``params.name`` (a SQL fragment per name, the
+    ``bucket_script``/``bucket_selector`` binding). With
     ``compare=True`` one top-level comparison (``> >= < <= == !=``) is
     allowed and the result is boolean — the bucket_selector contract.
     Unknown syntax raises at compile time, never silently mis-scores."""
@@ -1955,11 +1917,11 @@ def compile_painless(
         pos += 1
         return t[1]
 
-    def primary() -> Column:
+    def primary() -> str:
         kind, val = peek()
         if kind == "num":
             eat("num")
-            return F.lit(float(val))
+            return double_sql(val)
         if kind == "score":
             eat("score")
             if score is None:
@@ -2000,7 +1962,7 @@ def compile_painless(
                 raise ValueError(
                     f"script_score: {val} takes {arity} args, got {len(args)}"
                 )
-            return fn(*args)
+            return f"{fn}({', '.join(args)})"
         if kind == "op" and val == "(":
             eat("op", "(")
             e = expr()
@@ -2008,36 +1970,30 @@ def compile_painless(
             return e
         if kind == "op" and val == "-":
             eat("op", "-")
-            return -primary()
+            return f"(- {primary()})"
         raise ValueError(
             f"script_score: unexpected {kind}:{val!r} in {source!r}"
         )
 
-    def term() -> Column:
+    def term() -> str:
         e = primary()
         while peek()[0] == "op" and peek()[1] in "*/":
             op = eat("op")
-            rhs = primary()
-            e = e * rhs if op == "*" else e / rhs
+            e = f"({e} {op} {primary()})"
         return e
 
-    def expr() -> Column:
+    def expr() -> str:
         e = term()
         while peek()[0] == "op" and peek()[1] in "+-":
             op = eat("op")
-            rhs = term()
-            e = e + rhs if op == "+" else e - rhs
+            e = f"({e} {op} {term()})"
         return e
 
     out = expr()
     if compare and peek()[0] == "cmp":
         op = eat("cmp")
-        rhs = expr()
-        out = {
-            ">": out > rhs, ">=": out >= rhs,
-            "<": out < rhs, "<=": out <= rhs,
-            "==": out == rhs, "!=": out != rhs,
-        }[op]
+        sql_op = {"==": "=", "!=": "<>"}.get(op, op)
+        out = f"({out} {sql_op} {expr()})"
     if peek()[0] != "end":
         raise ValueError(f"script_score: trailing tokens in {source!r}")
     return out
@@ -2051,7 +2007,7 @@ class ScriptScore(Query):
     ``doc['field'].value``, ``+ - * /`` with standard precedence, unary
     minus, parentheses, and ``Math.log/log10/sqrt/exp/abs/max/min/pow`` —
     compiled ONCE at plan time by a recursive-descent parser into a single
-    Catalyst Column expression riding the scan (never a per-row UDF:
+    SQL expression riding the scan (never a per-row UDF:
     Painless runs scripted, this engine runs codegen'd). Unknown syntax
     raises at compile time, never silently mis-scores. Like ES, a script
     returning a negative score is an error class left to the caller; NULL
@@ -2063,23 +2019,24 @@ class ScriptScore(Query):
     source: str
     params: dict | None = None
 
-    def predicate(self, spark, resolve) -> Column:
-        return self.query.predicate(spark, resolve)
+    def predicate_sql(self, spark, ref) -> str:
+        return self.query.predicate_sql(spark, ref)
 
-    def score(self, spark, resolve) -> Column:
+    def score_sql(self, spark, ref) -> str:
         # ES script params (``params.name`` in the source): numeric
         # constants shipped separately so the script text is reusable —
-        # bound here as literal Columns, still one codegen'd expression
-        params = {
-            k: F.lit(float(v)) for k, v in (self.params or {}).items()
-        }
+        # bound here as double literals, still one codegen'd expression
         out = compile_painless(
             self.source,
-            score=self.query.score(spark, resolve),
-            resolve_doc=lambda f: resolve(f).cast("double"),
-            params=params or None,
+            score=self.query.score_sql(spark, ref),
+            resolve_doc=lambda f: f"CAST({ref(f)} AS DOUBLE)",
+            params=_painless_params(self.params),
         )
-        return F.coalesce(out, F.lit(0.0))
+        return f"coalesce({out}, 0.0D)"
+
+
+def _painless_params(params: dict | None) -> dict[str, str] | None:
+    return {k: double_sql(v) for k, v in params.items()} if params else None
 
 
 @dataclass
@@ -2119,22 +2076,17 @@ class SparseVectorQuery(Query):
                 f"sparse_vector weights must be numeric: {bad!r}"
             )
 
-    def predicate(self, spark, resolve) -> Column:
-        m = resolve(self.field)
-        cond = None
-        for t in self.query_vector:
-            c = m.getItem(t).isNotNull()
-            cond = c if cond is None else cond | c
-        return cond
+    def predicate_sql(self, spark, ref) -> str:
+        m = ref(self.field)
+        return _fold("OR", (f"({m}[{lit_sql(t)}] IS NOT NULL)"
+                            for t in self.query_vector))
 
-    def score(self, spark, resolve) -> Column:
-        m = resolve(self.field)
-        total: Column = F.lit(0.0)
-        for t, w in self.query_vector.items():
-            total = total + F.coalesce(
-                m.getItem(t).cast("double"), F.lit(0.0)
-            ) * F.lit(float(w))
-        return total
+    def score_sql(self, spark, ref) -> str:
+        m = ref(self.field)
+        return _fold("+", ["0.0D"] + [
+            f"(coalesce(CAST({m}[{lit_sql(t)}] AS DOUBLE), 0.0D) * {double_sql(w)})"
+            for t, w in self.query_vector.items()
+        ])
 
 
 @dataclass
@@ -2143,10 +2095,10 @@ class ScriptQuery(Query):
     context (``{"script": {"script": {"source": "doc['f'].value > 3"}}}``).
     The source is the Painless ARITHMETIC SUBSET with exactly one
     top-level comparison (the same contract as ``bucket_selector``),
-    compiled once into a codegen'd boolean Column riding the scan —
+    compiled once into a codegen'd boolean expression riding the scan —
     vs ES, where the script query is the per-doc interpreted slow path
-    that cannot use the index at all. Numeric ``params`` bind as literal
-    Columns. A source with no comparison raises at plan time (an
+    that cannot use the index at all. Numeric ``params`` bind as double
+    literals. A source with no comparison raises at plan time (an
     arithmetic result is not a predicate); NULL fields make the
     comparison NULL → the doc does not match (ES: missing doc values
     throw unless guarded — our NULL-contract divergence is the safer
@@ -2155,52 +2107,45 @@ class ScriptQuery(Query):
     source: str
     params: dict | None = None
 
-    def predicate(self, spark, resolve) -> Column:
+    def predicate_sql(self, spark, ref) -> str:
         if not any(k == "cmp" for k, _ in _tokenize_painless(self.source)):
             raise ValueError(
                 "script query source must be a boolean comparison "
                 f"(> >= < <= == !=): {self.source!r}"
             )
-        params = {
-            k: F.lit(float(v)) for k, v in (self.params or {}).items()
-        }
         out = compile_painless(
             self.source,
-            resolve_doc=lambda f: resolve(f).cast("double"),
-            params=params or None,
+            resolve_doc=lambda f: f"CAST({ref(f)} AS DOUBLE)",
+            params=_painless_params(self.params),
             compare=True,
         )
-        return F.coalesce(out, F.lit(False))
+        return f"coalesce({out}, false)"
 
 
-def score_parts(
-    query: Query, spark, resolve
-) -> list[tuple[str, Column]]:
+def score_parts(query: Query, spark, ref: Resolver) -> list[tuple[str, str]]:
     """ES ``_explain`` analogue: the labeled additive components of a
-    query's score — one (label, contribution) pair per scoring clause,
-    guaranteed to SUM to ``query.score(...)``. Walks the same tree the
-    score compiles from, so the explanation can never drift from the
-    actual scoring expression. Non-composite queries explain as a single
+    query's score — one (label, SQL fragment) pair per scoring clause,
+    guaranteed to SUM to the query's score. Walks the same tree the score
+    renders from, so the explanation can never drift from the actual
+    scoring expression. Non-composite queries explain as a single
     component."""
     if isinstance(query, Bool):
-        contribs = query.should_contributions(spark, resolve)
+        contribs = query.should_sql(spark, ref)
         parts = [
             (f"should[{i}]:{type(q).__name__}", c)
             for (i, (q, _)), c in zip(enumerate(query.should), contribs)
         ]
-        return parts or [("no_scoring_clauses", F.lit(0.0))]
+        return parts or [("no_scoring_clauses", "0.0D")]
     if isinstance(query, FunctionScore) and query.boost_mode == "sum":
         # boost_mode=sum is the one FunctionScore combination that
         # decomposes additively: base query score + the functions term
-        # (query.score minus the base reproduces it exactly)
-        base = score_parts(query.query, spark, resolve)
-        base_total: Column = F.lit(0.0)
-        for _, c in base:
-            base_total = base_total + c
+        # (query score minus the base reproduces it exactly)
+        base = score_parts(query.query, spark, ref)
+        base_total = _fold("+", ["0.0D"] + [c for _, c in base])
         return base + [
-            ("functions", query.score(spark, resolve) - base_total)
+            ("functions", f"({query.score_sql(spark, ref)} - {base_total})")
         ]
-    return [(type(query).__name__, query.score(spark, resolve))]
+    return [(type(query).__name__, query.score_sql(spark, ref))]
 
 
 def explain_score(
@@ -2215,103 +2160,69 @@ def explain_score(
     ``_explain``/``explain=true``. Pure expression work riding the same
     scan as search(); no extra pass."""
     spark = df.sparkSession
-    parts = score_parts(query, spark, _col_resolver)
+    df, query, helpers = bind_analyzed_tokens(df, query)
+    parts = score_parts(query, spark, col_sql)
     # map keys must be unique (Spark's mapKeyDedupPolicy=EXCEPTION): a
     # tree can legitimately repeat a label (two FunctionScores in one
     # should list both contribute "functions") — suffix duplicates
     seen: dict[str, int] = {}
-    uniq = []
+    labels, values = [], []
     for lbl, c in parts:
         n = seen.get(lbl, 0)
         seen[lbl] = n + 1
-        uniq.append((f"{lbl}#{n + 1}" if n else lbl, c))
-    parts = uniq
-    out = df.filter(query.predicate(spark, _col_resolver))
-    labels = F.array(*[F.lit(lbl) for lbl, _ in parts])
-    values = F.array(*[c.cast("double") for _, c in parts])
-    return out.withColumn(
-        score_col, query.score(spark, _col_resolver)
-    ).withColumn(parts_col, F.map_from_arrays(labels, values))
+        labels.append(f"{lbl}#{n + 1}" if n else lbl)
+        values.append(f"CAST({c} AS DOUBLE)")
+    out = df.filter(query.predicate(spark)).withColumn(
+        score_col, query.score(spark)
+    ).withColumn(parts_col, F.expr(
+        f"map_from_arrays({_array_sql(labels)}, array({', '.join(values)}))"
+    ))
+    return out.drop(*helpers) if helpers else out
 
 
-def _rebind_analyzed(query: Query, bind) -> Query:
-    """Rewrite a query tree so every inline-analyzed leaf reads a shared
-    materialized token column instead (``bind(field, analyzer)`` returns
-    the column name, registering it). Containers recurse; ``Nested``
-    subtrees are left alone (their fields resolve inside the array
-    element scope, not at row scope); unknown node kinds pass through
-    unchanged. Pure plan rewrite — match/score values are identical, the
-    analyzer chain just runs once per row instead of once per reference
-    (guide §4.4)."""
-    if isinstance(
-        query, (Match, MatchPhrase, MatchPhrasePrefix, MatchBoolPrefix)
-    ):
-        if query.analyzer is not None and query.tokens_col is None:
-            return dataclasses.replace(
-                query, tokens_col=bind(query.field, query.analyzer)
-            )
-        return query
-    if isinstance(query, Intervals):
-        if query.tokens_col is None:
-            return dataclasses.replace(
-                query, tokens_col=bind(query.field, query.analyzer)
-            )
-        return query
-    if isinstance(query, Bool):
+def _rebind_analyzed(node, bind):
+    """Rewrite a query tree so every inline-analyzed text node (one with
+    an ``analyzer`` and no ``tokens_col``) reads a shared materialized
+    token column instead (``bind(field, analyzer)`` returns the column
+    name, registering it). One walk over the dataclass fields reaches
+    every container; ``Nested`` subtrees are left alone (their fields
+    resolve inside the array element scope, not at row scope). Pure plan
+    rewrite — match/score values are identical, the analyzer chain just
+    runs once per row instead of once per reference (guide §4.4)."""
+    if isinstance(node, (list, tuple)):
+        new = [_rebind_analyzed(child, bind) for child in node]
+        if all(n is o for n, o in zip(new, node)):
+            return node
+        return type(node)(new)
+    if not dataclasses.is_dataclass(node) or isinstance(node, (type, Nested)):
+        return node
+    if getattr(node, "analyzer", None) is not None and \
+            getattr(node, "tokens_col", "") is None:
         return dataclasses.replace(
-            query,
-            must=[_rebind_analyzed(q, bind) for q in query.must],
-            filter=[_rebind_analyzed(q, bind) for q in query.filter],
-            must_not=[_rebind_analyzed(q, bind) for q in query.must_not],
-            should=[
-                (_rebind_analyzed(q, bind), b) for q, b in query.should
-            ],
-        )
-    if isinstance(query, ConstantScore):
-        return dataclasses.replace(query, filter=_rebind_analyzed(query.filter, bind))
-    if isinstance(query, DisMax):
-        return dataclasses.replace(
-            query, queries=[_rebind_analyzed(q, bind) for q in query.queries]
-        )
-    if isinstance(query, Boosting):
-        return dataclasses.replace(
-            query,
-            positive=_rebind_analyzed(query.positive, bind),
-            negative=_rebind_analyzed(query.negative, bind),
-        )
-    if isinstance(query, FunctionScore):
-        functions = [
-            dataclasses.replace(fn, filter=_rebind_analyzed(fn.filter, bind))
-            if isinstance(fn, WeightFunction) and fn.filter is not None
-            else fn
-            for fn in query.functions
-        ]
-        return dataclasses.replace(
-            query,
-            query=_rebind_analyzed(query.query, bind),
-            functions=functions,
-        )
-    if isinstance(query, Pinned):
-        return dataclasses.replace(query, organic=_rebind_analyzed(query.organic, bind))
-    if isinstance(query, ScriptScore):
-        return dataclasses.replace(query, query=_rebind_analyzed(query.query, bind))
-    return query
+            node, tokens_col=bind(node.field, node.analyzer))
+    changes = {}
+    for f in dataclasses.fields(node):
+        old = getattr(node, f.name)
+        new = _rebind_analyzed(old, bind)
+        if new is not old:
+            changes[f.name] = new
+    return dataclasses.replace(node, **changes) if changes else node
 
 
 def bind_analyzed_tokens(
     df: DataFrame, query: Query
 ) -> tuple[DataFrame, Query, list[str]]:
     """Materialize every (field, analyzer) pair the tree analyzes INLINE
-    as one pinned token column and rebind the tree to read it.
+    as one pinned token column and rebind the tree to read it — SQL text
+    cannot name the Arrow-UDF analyzers. Returns the extended frame, the
+    rebound tree and the helper columns added (the caller drops them after
+    use).
 
-    Without this, ``search()`` evaluates the Arrow-UDF analyzer chain at
-    least twice per document — once inside the compiled filter predicate
-    and once inside the score expression — and the optimizer's filter
-    pushdown can duplicate it again below the scan projection (two
-    ArrowEvalPython nodes, guide §4.4). Bound + pinned
-    (``pin_computed``), the chain is ONE ArrowEvalPython node whose
-    output both the filter and the score read as an attribute. Queries
-    that already pass ``tokens_col`` (index-backed token columns) are
+    Bound + pinned (``pin_computed``), the analyzer chain is ONE
+    ArrowEvalPython node whose output both the filter and the score read
+    as an attribute; unpinned, the optimizer's filter pushdown can
+    duplicate it below the scan projection (guide §4.4). Queries that
+    already pass ``tokens_col`` (index-backed token columns) are
     untouched."""
     bound: dict[tuple[str, str], str] = {}
 
@@ -2322,12 +2233,10 @@ def bind_analyzed_tokens(
         return bound[key]
 
     rebound = _rebind_analyzed(query, bind)
-    out = df
     for (field, analyzer), name in bound.items():
-        out = out.withColumn(
-            name, pin_computed(analyze(_col_resolver(field), analyzer))
-        )
-    return out, rebound, list(bound.values())
+        df = df.withColumn(
+            name, pin_computed(analyze(F.expr(col_sql(field)), analyzer)))
+    return df, rebound, list(bound.values())
 
 
 def search(
@@ -2337,22 +2246,24 @@ def search(
     tiebreak: str | None = None,
     score_col: str = "score",
 ) -> DataFrame:
-    """Compile the query tree to filter → score → top-k (SURVEY §2.7).
+    """Compile the query tree to filter → score → top-k (SURVEY §2.7): the
+    tree's predicate and its score are each rendered as one SQL fragment
+    and parsed once.
 
     ``tiebreak`` (an id column) makes the hit list fully deterministic —
     ES breaks score ties by internal doc id, which isn't reproducible; an
     explicit key is. ``k=None`` returns all hits scored, unsorted."""
     spark = df.sparkSession
     df, query, helpers = bind_analyzed_tokens(df, query)
-    out = df.filter(query.predicate(spark, _col_resolver))
-    out = out.withColumn(score_col, query.score(spark, _col_resolver))
+    out = df.filter(query.predicate_sql(spark, col_sql))
+    out = out.withColumn(score_col, query.score(spark))
     if helpers:
         out = out.drop(*helpers)
     if k is None:
         return out
-    order = [F.col(score_col).desc()]
+    order = [F.desc(score_col)]
     if tiebreak is not None:
-        order.append(F.col(tiebreak).asc())
+        order.append(F.asc(tiebreak))
     return out.orderBy(*order).limit(k)
 
 
@@ -2665,7 +2576,7 @@ def from_es_json(
                 ):
                     raise ValueError(
                         "script params must be NUMERIC (they bind as "
-                        "literal Columns in the compiled expression)"
+                        "double literals in the compiled expression)"
                     )
             return ScriptScore(
                 compile_node(body["query"], scope), src, params=params
@@ -2694,7 +2605,7 @@ def from_es_json(
                 ):
                     raise ValueError(
                         "script params must be NUMERIC (they bind as "
-                        "literal Columns in the compiled expression)"
+                        "double literals in the compiled expression)"
                     )
             return ScriptQuery(src, params=params)
         if kind == "sparse_vector":
@@ -2908,6 +2819,10 @@ def from_es_json(
         if kind == "term":
             (field, spec), = body.items()
             value = spec["value"] if isinstance(spec, dict) else spec
+            if value is None:
+                # ES rejects a null term value; compiled, `field = NULL`
+                # would silently match nothing
+                raise ValueError(f"term query on {field!r} has a null value")
             return auto_nest(field, lambda f: Term(f, value), scope)
         if kind == "terms":
             (field, values), = body.items()
@@ -3042,26 +2957,8 @@ def from_es_json(
                     "column bindings (positional semantics are over "
                     "analyzed token sequences)"
                 )
-            class _SpanFirst(Query):
-                # query-term analysis happens at predicate time (like
-                # Intervals) — compile has no SparkSession
-                def predicate(self, spark_, resolve) -> Column:
-                    values = []
-                    for _, v in leaves:
-                        toks = analyze_text(spark_, v, analyzer)
-                        if len(toks) != 1:
-                            raise ValueError(
-                                f"span_first term {v!r} analyzes to "
-                                f"{len(toks)} tokens; span terms are "
-                                "single-token"
-                            )
-                        values.append(toks[0])
-                    head = F.slice(resolve(tok_col), 1, end_pos)
-                    return F.arrays_overlap(
-                        head, F.array(*[F.lit(t) for t in values])
-                    )
-
-            return _SpanFirst()
+            return SpanFirst(field, analyzer, tok_col,
+                             [v for _, v in leaves], end_pos)
         if kind in ("span_term", "span_or", "span_near", "span_multi"):
             # Lucene span queries, translated onto the intervals
             # machinery (ES itself recommends intervals over spans —
@@ -3225,11 +3122,9 @@ def from_es_json(
                     v = str(v).lower()
                     if mk == "prefix":
                         return f, [], [("prefix", v)]
-                    import re as _re
-
                     rx = "".join(
                         ".*" if ch == "*" else "." if ch == "?"
-                        else _re.escape(ch) for ch in v
+                        else re.escape(ch) for ch in v
                     )
                     return f, [], [("wildcard", "^" + rx + "$")]
                 if nk == "span_or":
@@ -3266,69 +3161,10 @@ def from_es_json(
                     "binding (positional semantics are over analyzed "
                     "token sequences)"
                 )
-
-            class _SpanNot(Query):
-                def predicate(self, spark_, resolve) -> Column:
-                    def one_tok(v: str) -> str:
-                        toks_ = analyze_text(spark_, v, sn_analyzer)
-                        if len(toks_) != 1:
-                            raise ValueError(
-                                f"span_not term {v!r} analyzes to "
-                                f"{len(toks_)} tokens; span terms are "
-                                "single-token"
-                            )
-                        return toks_[0]
-
-                    ts = (resolve(sn_tok) if sn_tok is not None
-                          else analyze(resolve(inc_field), sn_analyzer))
-
-                    def pos_of(vals: list, specs: list) -> Column:
-                        toks_lit = [one_tok(v) for v in vals]
-
-                        def hit(x: Column) -> Column:
-                            cond = F.lit(False)
-                            if toks_lit:
-                                cond = cond | F.array_contains(
-                                    F.array(*[F.lit(t) for t in toks_lit]),
-                                    x,
-                                )
-                            for skind, sval in specs:
-                                if skind == "prefix":
-                                    cond = cond | x.startswith(F.lit(sval))
-                                else:
-                                    cond = cond | x.rlike(sval)
-                            return cond
-
-                        return F.filter(
-                            F.transform(
-                                ts,
-                                lambda x, i: F.when(hit(x), i)
-                                .otherwise(-1),
-                            ),
-                            lambda p: p >= 0,
-                        )
-
-                    def check(st: Column) -> Column:
-                        ip, ep = st["i"], st["e"]
-                        return F.coalesce(
-                            F.exists(ip, lambda p: ~F.exists(
-                                ep,
-                                lambda q: (q >= p - F.lit(pre))
-                                & (q <= p + F.lit(post)),
-                            )),
-                            F.lit(False),
-                        )
-
-                    # bind both position arrays once (Catalyst no-CSE)
-                    st = F.struct(
-                        pos_of(inc_vals, inc_specs).alias("i"),
-                        pos_of(exc_vals, exc_specs).alias("e"),
-                    )
-                    return F.element_at(
-                        F.transform(F.array(st), check), 1
-                    )
-
-            return _SpanNot()
+            return SpanNot(
+                inc_field, sn_analyzer, sn_tok, (inc_vals, inc_specs),
+                (exc_vals, exc_specs), pre, post,
+            )
         if kind in ("span_containing", "span_within"):
             # Lucene span_containing / span_within (r12, formerly
             # refusals): containment between a BIG span (span_near of
@@ -3407,68 +3243,10 @@ def from_es_json(
                 raise ValueError(
                     f"{kind} on {sc_field!r} needs an analyzer binding"
                 )
-            n_big = len(big_terms)
-
-            class _SpanContaining(Query):
-                def predicate(self, spark_, resolve) -> Column:
-                    def one_tok(v: str) -> str:
-                        toks_ = analyze_text(spark_, v, sc_analyzer)
-                        if len(toks_) != 1:
-                            raise ValueError(
-                                f"{kind} term {v!r} analyzes to "
-                                f"{len(toks_)} tokens; span terms are "
-                                "single-token"
-                            )
-                        return toks_[0]
-
-                    ts = (resolve(sc_tok) if sc_tok is not None
-                          else analyze(resolve(sc_field), sc_analyzer))
-
-                    def pos_of(vals: list) -> Column:
-                        arr = F.array(*[F.lit(one_tok(v)) for v in vals])
-                        return F.filter(
-                            F.transform(
-                                ts,
-                                lambda x, i: F.when(
-                                    F.array_contains(arr, x), i
-                                ).otherwise(-1),
-                            ),
-                            lambda p: p >= 0,
-                        )
-
-                    st = F.struct(
-                        *[pos_of([t]).alias(f"b{j}")
-                          for j, t in enumerate(big_terms)],
-                        pos_of(lit_terms).alias("lit"),
-                    )
-
-                    def check(s: Column) -> Column:
-                        def chain_ok(a: Column) -> Column:
-                            e = a
-                            for j in range(1, n_big):
-                                prev = e
-                                e = F.array_min(F.filter(
-                                    s[f"b{j}"], lambda x: x > prev))
-
-                            def fin(end: Column) -> Column:
-                                ok = end.isNotNull() \
-                                    & (end - a + 1 - n_big
-                                       <= F.lit(slop))
-                                return ok & F.coalesce(F.exists(
-                                    s["lit"],
-                                    lambda q: (q >= a) & (q <= end),
-                                ), F.lit(False))
-
-                            return F.element_at(
-                                F.transform(F.array(e), fin), 1)
-
-                        return F.coalesce(
-                            F.exists(s["b0"], chain_ok), F.lit(False))
-
-                    return F.element_at(
-                        F.transform(F.array(st), check), 1)
-
-            return _SpanContaining()
+            return SpanContaining(
+                sc_field, sc_analyzer, sc_tok, big_terms, lit_terms,
+                slop, kind,
+            )
         if kind == "field_masking_span":
             raise ValueError(
                 "field_masking_span is not supported — it re-reads "
@@ -3957,8 +3735,7 @@ def es_retriever(
         scan = df
         if body.get("filter") is not None:
             pre = from_es_json({"query": body["filter"]}, **bindings)
-            scan = scan.filter(pre.predicate(scan.sparkSession,
-                                             _col_resolver))
+            scan = scan.filter(pre.predicate(scan.sparkSession))
         tree = from_es_json({"query": body["query"]}, **bindings)
         return ranked(search(scan, tree, k=None), size)
     if kind == "knn":
@@ -3971,8 +3748,7 @@ def es_retriever(
         scan = df
         if body.get("filter") is not None:
             pre = from_es_json({"query": body["filter"]}, **bindings)
-            scan = scan.filter(pre.predicate(scan.sparkSession,
-                                             _col_resolver))
+            scan = scan.filter(pre.predicate(scan.sparkSession))
         k = int(body.get("k", size))
         out = scan.select(
             F.col(id_col),
@@ -4041,8 +3817,7 @@ def es_retriever(
         scan = df
         if body.get("filter") is not None:
             pre = from_es_json({"query": body["filter"]}, **bindings)
-            scan = scan.filter(pre.predicate(scan.sparkSession,
-                                             _col_resolver))
+            scan = scan.filter(pre.predicate(scan.sparkSession))
         window = int(body.get("rank_window_size", size))
         legs = [
             es_retriever(scan, c, id_col=id_col, size=window, **bindings)
@@ -4063,8 +3838,7 @@ def es_retriever(
         scan = df
         if body.get("filter") is not None:
             pre = from_es_json({"query": body["filter"]}, **bindings)
-            scan = scan.filter(pre.predicate(scan.sparkSession,
-                                             _col_resolver))
+            scan = scan.filter(pre.predicate(scan.sparkSession))
         window = int(body.get("rank_window_size", size))
         fused = None
         for c in children:

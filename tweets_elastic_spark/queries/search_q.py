@@ -3279,7 +3279,7 @@ def q_es_aggs_multi_terms_mad_sketch(
 
 
 # Shared haversine-in-SQL (ES's mean earth radius; operand order mirrors
-# plans/search.haversine_meters exactly). The fixtures carry no geographic
+# plans/search.haversine_sql exactly). The fixtures carry no geographic
 # columns, so the geo queries derive a deterministic (lat, lon) pair from
 # events — the operator is agnostic to where the degrees came from.
 _GEO_CTE = """
@@ -4653,7 +4653,7 @@ def q_search_terms_set(spark: SparkSession, sf_dir: str) -> DataFrame:
         start=F.lit(0),
     )
     return (
-        toked.filter(q.predicate(spark, F.col))
+        toked.filter(q.predicate(spark))
         .select("doc_id", "lang", matched.alias("n_matched"))
     )
 
@@ -4776,7 +4776,7 @@ def q_search_match_bool_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     q = MatchBoolPrefix("text", "spark mer", analyzer="standard",
                         operator="and")
-    return docs.filter(q.predicate(spark, F.col)).select("doc_id", "lang")
+    return docs.filter(q.predicate(spark)).select("doc_id", "lang")
 
 
 @register(

@@ -30,6 +30,7 @@ import shutil
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.vectors import col_sql, lit_sql
 from tweets_elastic_spark.sources.jsonl import write_jsonl
 
 
@@ -301,13 +302,8 @@ def delete_by_query(df: DataFrame, query) -> DataFrame:
     write it back through ``write_documents(mode='overwrite')`` or a
     transactional DELETE at deploy scale. ``query`` is ES query-DSL JSON
     or a compiled Query node."""
-    from tweets_elastic_spark.plans.search import _col_resolver
-
     q = _compile_dsl(query)
-    spark = df.sparkSession
-    return df.filter(~F.coalesce(
-        q.predicate(spark, _col_resolver), F.lit(False)
-    ))
+    return df.filter(~F.coalesce(q.predicate(df.sparkSession), F.lit(False)))
 
 
 _CTX_RE = None
@@ -328,10 +324,7 @@ def update_by_query(df: DataFrame, query, script: str,
     reindex. Anything outside that shape raises loudly."""
     import re
 
-    from tweets_elastic_spark.plans.search import (
-        _col_resolver,
-        compile_painless,
-    )
+    from tweets_elastic_spark.plans.search import compile_painless
 
     m = re.match(
         r"^\s*ctx\._source\.([A-Za-z_][A-Za-z0-9_]*)\s*=\s*(.+?)\s*;?\s*$",
@@ -353,14 +346,13 @@ def update_by_query(df: DataFrame, query, script: str,
     # doc['X'].value form
     rhs_doc = re.sub(r"ctx\._source\.([A-Za-z_][A-Za-z0-9_]*)",
                      r"doc['\1'].value", rhs)
-    expr = compile_painless(
+    expr = F.expr(compile_painless(
         rhs_doc,
-        resolve_doc=F.col,
-        params={k: F.lit(v) for k, v in (params or {}).items()},
-    )
+        resolve_doc=col_sql,
+        params={k: lit_sql(v) for k, v in (params or {}).items()},
+    ))
     q = _compile_dsl(query)
-    spark = df.sparkSession
-    pred = F.coalesce(q.predicate(spark, _col_resolver), F.lit(False))
+    pred = F.coalesce(q.predicate(df.sparkSession), F.lit(False))
     old = F.col(target)
     return df.withColumn(
         target,
