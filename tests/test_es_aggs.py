@@ -4,6 +4,7 @@ terms-size truncation, the envelope path, and refusal of ambiguous shapes."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import example, given, settings, strategies as st
 
 from tweets_elastic_spark.plans.aggs import es_aggregate, es_request
 
@@ -240,6 +241,109 @@ def test_search_after_tie_handling_and_errors(spark, sales):
         es_request(sales, {**req, "search_after": [5.0]}, tiebreak="id")
     with pytest.raises(ValueError, match="requires an explicit sort"):
         es_request(sales, {"query": {"match_all": {}}, "search_after": [1]})
+
+
+# nulls and ties in both sort fields; ids 1..n are the tiebreak
+_PAGED_ROWS = st.lists(
+    st.tuples(st.sampled_from([None, 1, 2, 3]), st.sampled_from([None, 1, 2])),
+    min_size=1, max_size=7,
+)
+_PAGED_SORT = st.lists(
+    st.tuples(st.sampled_from(["a", "b"]), st.sampled_from(["asc", "desc"])),
+    min_size=1, max_size=2, unique_by=lambda key: key[0],
+)
+_PROBE = [(5, None), (None, None), (3, None), (None, None), (1, None)]
+
+
+@settings(max_examples=10, deadline=None)
+@given(rows=_PAGED_ROWS, sort=_PAGED_SORT, page=st.integers(1, 3))
+@example(rows=_PROBE, sort=[("a", "asc")], page=2)
+@example(rows=_PROBE, sort=[("a", "desc")], page=2)
+def test_search_after_pages_concatenate_to_the_unpaged_hits(spark, rows, sort, page):
+    """Walking ``search_after`` pages reaches every hit exactly once, in
+    the unpaged order, also when a sort field is missing on some hits: a
+    null key compares by its place in the order (first ascending, last
+    descending), never by SQL NULL."""
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(rows, 1)], "id long, a long, b long")
+    base = {"query": {"match_all": {}}, "sort": [{f: d} for f, d in sort],
+            "_source": ["id", "a", "b"]}
+    whole = [r["id"] for r in es_request(
+        df, {**base, "size": len(rows)}, tiebreak="id").collect()]
+    paged, after = [], None
+    for _ in range(len(rows) + 1):
+        req = {**base, "size": page}
+        if after is not None:
+            req["search_after"] = after
+        hits = es_request(df, req, tiebreak="id").collect()
+        if not hits:
+            break
+        paged += [r["id"] for r in hits]
+        after = [hits[-1][f] for f, _ in sort] + [hits[-1]["id"]]
+    assert paged == whole
+    assert sorted(whole) == list(range(1, len(rows) + 1))
+
+
+def _geo_line_by(spark, d):
+    df = spark.createDataFrame(
+        [("a", 3.0, 30.0, 13.0), ("a", 1.0, 10.0, 11.0), ("a", 2.0, 20.0, 12.0)],
+        "k string, s double, lon double, lat double",
+    )
+    return es_aggregate(df, {"g": {"terms": {"field": "k"}, "aggs": {"t": {
+        "geo_line": {"point": {"field": {"lat": "lat", "lon": "lon"}},
+                     "sort": {"field": "s"}, "sort_order": d}}}}}).head()["t_line"]
+
+
+# each ES sort surface: (run it with direction d, its answer under "desc")
+_SORT_SURFACES = {
+    "sort": (lambda spark, sales, d: [r["id"] for r in es_request(sales, {
+        "query": {"match_all": {}}, "sort": [{"amount": d}], "size": 3,
+        "_source": ["id"]}, tiebreak="id").collect()], [2, 7, 6]),
+    "inner_hits": (lambda spark, sales, d: sorted(
+        (r["region"], [h["id"] for h in r["h"]]) for r in es_request(sales, {
+            "query": {"match_all": {}}, "sort": [{"id": "asc"}],
+            "collapse": {"field": "region", "inner_hits": {
+                "name": "h", "size": 2, "sort": [{"amount": {"order": d}}],
+                "_source": ["id"]}},
+            "_source": ["region", "h"]}, tiebreak="id").collect()),
+        [("ap", [8]), ("eu", [2, 1]), ("us", [7, 6])]),
+    "top_hits": (lambda spark, sales, d: sorted(
+        r["id"] for r in es_aggregate(sales, {"r": {
+            "terms": {"field": "region"}, "aggs": {"h": {"top_hits": {
+                "size": 1, "sort": [{"amount": d}], "_source": ["id"]}}}}}).collect()),
+        [2, 7, 8]),
+    "bucket_sort": (lambda spark, sales, d: [r["r"] for r in es_aggregate(sales, {"r": {
+        "terms": {"field": "region"}, "aggs": {
+            "total": {"sum": {"field": "amount"}},
+            "s": {"bucket_sort": {"sort": [{"total": d}]}}}}}).collect()],
+        ["us", "eu", "ap"]),
+    "top_metrics": (lambda spark, sales, d: sorted(
+        (r["r"], r["m_amount"]) for r in es_aggregate(sales, {"r": {
+            "terms": {"field": "region"}, "aggs": {"m": {"top_metrics": {
+                "metrics": {"field": "amount"}, "sort": {"id": d}}}}}}).collect()),
+        [("ap", 1.0), ("eu", 5.0), ("us", 13.0)]),
+    "terms_order": (lambda spark, sales, d: [r["r"] for r in es_aggregate(sales, {"r": {
+        "terms": {"field": "region", "size": 3, "order": {"_key": d}}}}).collect()],
+        ["us", "eu", "ap"]),
+    "composite": (lambda spark, sales, d: [r["r"] for r in es_aggregate(sales, {"p": {
+        "composite": {"sources": [{"r": {"terms": {
+            "field": "region", "order": d}}}]}}}).collect()],
+        ["us", "eu", "ap"]),
+    "geo_line": (lambda spark, sales, d: _geo_line_by(spark, d),
+                 [[30.0, 13.0], [20.0, 12.0], [10.0, 11.0]]),
+}
+
+
+@pytest.mark.parametrize("surface", sorted(_SORT_SURFACES))
+def test_every_sort_surface_rejects_a_bad_direction(spark, sales, surface):
+    """Each ES sort surface reads its direction through one rule: exactly
+    "asc" or "desc". A misspelt direction raises instead of silently
+    sorting ascending, and "desc" sorts descending."""
+    run, descending = _SORT_SURFACES[surface]
+    assert run(spark, sales, "desc") == descending
+    for bad in ("DESC", "down"):
+        with pytest.raises(ValueError, match="bad sort direction"):
+            run(spark, sales, bad)
 
 
 def test_top_hits_per_bucket(spark, sales):
@@ -591,39 +695,46 @@ def test_composite_missing_bucket_positions_and_cursor(spark, sales_nullable):
 def test_composite_missing_bucket_full_walk(spark, sales_nullable):
     """Page-walking size=2 across the null/non-null boundary reproduces
     the one-shot bucket relation exactly — no gap, overlap, or NULL-
-    propagation hole at the boundary; metrics ride along."""
-    base = {
-        "sources": [
-            {"r": {"terms": {"field": "region", "missing_bucket": True}}},
-            {"p": {"terms": {"field": "product"}}},
-        ],
-        "size": 2,
-    }
-    walked, after = [], None
-    for _ in range(10):
-        body = dict(base)
-        if after is not None:
-            body["after"] = after
-        page = es_aggregate(sales_nullable, {
-            "w": {"composite": body,
-                  "aggs": {"total": {"sum": {"field": "amount"}}}}
-        }).collect()
-        if not page:
-            break
-        walked += [(r["r"], r["p"], r["doc_count"], r["total"]) for r in page]
-        after = {"r": page[-1]["r"], "p": page[-1]["p"]}
+    propagation hole at the boundary; metrics ride along. Walked with the
+    null bucket leading (asc) and trailing (desc)."""
     import pyspark.sql.functions as F
 
-    one_shot = (
-        sales_nullable.groupBy("region", "product")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("amount").alias("t"))
-        .orderBy(F.col("region").asc_nulls_first(), F.col("product").asc())
-        .collect()
-    )
-    assert walked == [
-        (r["region"], r["product"], r["n"], r["t"]) for r in one_shot
-    ]
-    assert walked[0][0] is None and walked[0][1] == "a"
+    for order, region_order in (
+        ("asc", F.col("region").asc_nulls_first()),
+        ("desc", F.col("region").desc_nulls_last()),
+    ):
+        base = {
+            "sources": [
+                {"r": {"terms": {"field": "region", "order": order,
+                                 "missing_bucket": True}}},
+                {"p": {"terms": {"field": "product", "order": order}}},
+            ],
+            "size": 2,
+        }
+        walked, after = [], None
+        for _ in range(10):
+            body = dict(base)
+            if after is not None:
+                body["after"] = after
+            page = es_aggregate(sales_nullable, {
+                "w": {"composite": body,
+                      "aggs": {"total": {"sum": {"field": "amount"}}}}
+            }).collect()
+            if not page:
+                break
+            walked += [(r["r"], r["p"], r["doc_count"], r["total"]) for r in page]
+            after = {"r": page[-1]["r"], "p": page[-1]["p"]}
+        one_shot = (
+            sales_nullable.groupBy("region", "product")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("amount").alias("t"))
+            .orderBy(region_order, F.col("product").asc() if order == "asc"
+                     else F.col("product").desc())
+            .collect()
+        )
+        assert walked == [
+            (r["region"], r["product"], r["n"], r["t"]) for r in one_shot
+        ]
+        assert walked[0 if order == "asc" else -1][:2] == (None, "a")
 
 
 # -------------------------------------------------------------- percentiles

@@ -70,7 +70,9 @@ def test_request_compile_py4j_budget(spark, docs_df, py4j_commands):
     Py4J command budget. Each query tree renders one SQL fragment for its
     predicate and one for its score, parsed once each: 115 and 284
     commands while the nodes built Columns call by call, 32 and 32 now;
-    the page, whose sort and cursor are still built from Columns, 61 → 57."""
+    the page 57 while its ``search_after`` cursor was built from Columns,
+    34 since the cursor is one SQL fragment (its sort order is still
+    Columns)."""
     from tweets_elastic_spark.functions.analyzers import materialize_tokens
     from tweets_elastic_spark.plans.aggs import es_request
     from tweets_elastic_spark.plans.search import corpus_bm25_provider, from_es_json
@@ -106,7 +108,7 @@ def test_request_compile_py4j_budget(spark, docs_df, py4j_commands):
         docs_df, from_es_json(reference, nested_paths=nested, id_field="id"),
         k=10, tiebreak="id").select("id", "score")) < 40
     assert commands(lambda: es_request(
-        docs_df, page, nested_paths=nested, tiebreak="id")) < 60
+        docs_df, page, nested_paths=nested, tiebreak="id")) < 37
 
     toked = materialize_tokens(docs_df, {"content": ["custom_shingles"]})
     provider = corpus_bm25_provider(spark, toked)

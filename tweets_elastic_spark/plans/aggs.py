@@ -72,6 +72,16 @@ Supported surface:
   rank, must be the bucket's only sub-agg since its result shape is
   documents, not metrics).
 
+Every ES sort surface (request ``sort``, ``collapse.inner_hits``,
+``top_hits``, ``bucket_sort``, ``top_metrics``, terms ``order``,
+composite source ``order``, ``geo_line``'s ``sort_order``) reads its keys
+through one rule, ``_sort_keys``: a direction is exactly ``"asc"`` or
+``"desc"`` and anything else raises; nulls sort first ascending and last
+descending (composite sources: per ``missing_order``). ``_order_cols``
+turns the keys into sort columns with that null placement, and
+``search_after`` and composite ``after`` both page through one keyset
+cursor, ``_keyset_after``: one null-aware strictly-after SQL predicate.
+
 The hits path (es_request) additionally supports ``collapse`` (field
 collapsing: best hit per group under the request sort — a window rank),
 ``highlight`` (full-field tagging), ``script_fields`` (Painless-subset
@@ -110,6 +120,7 @@ from tweets_elastic_spark.functions.vectors import (
     col_sql,
     cosine,
     double_sql,
+    lit_sql,
     vec_sql,
 )
 from tweets_elastic_spark.plans.search import (
@@ -144,6 +155,72 @@ _METRICS = {
 def _double_ref(field: str) -> str:
     """``field`` read as a double, in SQL (a Painless ``doc[...]`` value)."""
     return f"CAST({col_sql(field)} AS DOUBLE)"
+
+
+def _sort_keys(spec, surface: str) -> list[tuple[str, bool, bool]]:
+    """ES sort syntax → ``(field, desc, nulls_first)`` keys. ``spec`` is a
+    field name (ascending), ``{field: dir}``, ``{field: {"order": dir}}``
+    or a list of these; ``dir`` is exactly ``"asc"`` or ``"desc"``, and
+    anything else raises naming the value and ``surface``. Nulls take
+    Spark's default place: first ascending, last descending (ES puts
+    missing values last either way, MIGRATION.md)."""
+    keys = []
+    for entry in spec if isinstance(spec, list) else [spec]:
+        if isinstance(entry, str):
+            field, direction = entry, "asc"
+        else:
+            (field, direction), = entry.items()
+            if isinstance(direction, dict):
+                direction = direction.get("order", "asc")
+        if direction not in ("asc", "desc"):
+            raise ValueError(
+                f"unsupported {surface}: {direction!r} for {field!r} "
+                "(bad sort direction; asc/desc only)"
+            )
+        keys.append((field, direction == "desc", direction == "asc"))
+    return keys
+
+
+def _order_cols(keys) -> list[Column]:
+    """``(field, desc, nulls_first)`` keys → ``orderBy``/``Window`` columns
+    with the null placement explicit."""
+    return [
+        F.col(f).desc_nulls_first() if desc and nf
+        else F.col(f).desc_nulls_last() if desc
+        else F.col(f).asc_nulls_first() if nf
+        else F.col(f).asc_nulls_last()
+        for f, desc, nf in keys
+    ]
+
+
+def _keyset_after(keys, values) -> str:
+    """The rows strictly after the cursor ``values`` in the order of
+    ``keys`` (``(column, desc, nulls_first)``), as one SQL predicate
+    (``search_after`` and composite ``after``). Lexicographic over the
+    keys; a null on either side compares by its place in the order, so a
+    null-keyed row is reached from both sides of the cursor. The
+    predicate uses only AND/OR, under which a NULL comparison acts as
+    false, so ``c > v`` needs no ``coalesce`` and a leading plain column
+    reaches the scan as a pushed filter."""
+    pred = None  # the keys after this one; None is false
+    for (name, desc, nulls_first), v in reversed(list(zip(keys, values))):
+        c = col_sql(name)
+        if v is None:
+            eq = f"{c} IS NULL"
+            strict = f"{c} IS NOT NULL" if nulls_first else None
+        else:
+            eq = f"{c} = {lit_sql(v)}"
+            strict = f"{c} {'<' if desc else '>'} {lit_sql(v)}"
+            if not nulls_first:
+                strict += f" OR {c} IS NULL"
+        terms = ([strict] if strict else []) + ([f"{eq} AND ({pred})"] if pred else [])
+        pred = " OR ".join(f"({t})" for t in terms) or None
+    return pred or "false"
+
+
+def _ranked_keys(tiebreak: str | None) -> list[tuple[str, bool, bool]]:
+    """Relevance order: score descending, then the tiebreak ascending."""
+    return [("score", True, False)] + ([(tiebreak, False, True)] if tiebreak else [])
 
 
 def categorize_key(src: Column, max_matched_tokens=None) -> Column:
@@ -989,9 +1066,8 @@ def _metric_cols(aggs: dict) -> list[Column]:
             sfield = body.get("sort", {}).get("field")
             if not sfield:
                 raise ValueError("geo_line needs 'sort': {'field': col}")
-            order = body.get("sort_order", "asc")
-            if order not in ("asc", "desc"):
-                raise ValueError(f"unsupported sort_order {order!r}")
+            (_, desc, _), = _sort_keys(
+                {sfield: body.get("sort_order", "asc")}, "sort_order in geo_line")
             size = int(body.get("size", 10000))
             if not 0 < size <= 10000:
                 raise ValueError(
@@ -1005,7 +1081,7 @@ def _metric_cols(aggs: dict) -> list[Column]:
                 s.alias("s"), lon.alias("lon"), lat.alias("lat")
             ))
             arr = F.slice(
-                F.sort_array(F.collect_list(pt), asc=(order == "asc")),
+                F.sort_array(F.collect_list(pt), asc=not desc),
                 1, size,
             )
             out += [
@@ -1154,15 +1230,17 @@ def _metric_cols(aggs: dict) -> list[Column]:
                     f"top_metrics size must be in [1, 10] (ES's cap), "
                     f"got {size}"
                 )
-            (sfield, sdir), = body["sort"].items() \
-                if isinstance(body["sort"], dict) else ((body["sort"], "asc"),)
-            if sdir not in ("asc", "desc"):
-                raise ValueError(f"top_metrics sort must be asc/desc, got {sdir!r}")
+            skeys = _sort_keys(body["sort"], "top_metrics sort")
+            if len(skeys) != 1:
+                raise ValueError(
+                    f"top_metrics sort takes exactly one key, got {len(skeys)}"
+                )
+            (sfield, desc, _), = skeys
             metrics_spec = body["metrics"]
             if isinstance(metrics_spec, dict):
                 metrics_spec = [metrics_spec]
             if size == 1:
-                pick = F.max_by if sdir == "desc" else F.min_by
+                pick = F.max_by if desc else F.min_by
                 for m in metrics_spec:
                     mfield = m["field"]
                     out.append(
@@ -1180,7 +1258,7 @@ def _metric_cols(aggs: dict) -> list[Column]:
                         F.collect_list(
                             F.when(F.col(sfield).isNotNull(), row)
                         ),
-                        asc=(sdir == "asc"),
+                        asc=not desc,
                     ),
                     1, size,
                 )
@@ -1801,10 +1879,11 @@ def _composite_agg(df: DataFrame, body: dict, sub: dict) -> DataFrame:
 
     Compiled so each page is cheap at 100 TB: every source key is a
     deterministic row-level expression, so the strictly-after cursor
-    condition is applied BELOW the aggregation as a row filter (the same
-    direction-aware lexicographic keyset predicate search_after uses) —
-    for leading terms sources it is a plain comparison the parquet scan
-    prunes on, and the groupBy then aggregates only the remaining rows.
+    condition is applied BELOW the aggregation as a row filter
+    (``_keyset_after`` over the keys projected under hidden names, the
+    predicate search_after uses) — for leading terms sources it is a
+    plain comparison the parquet scan prunes on, and the groupBy then
+    aggregates only the remaining rows.
     ES's own composite agg does exactly this walk over the doc-values
     index. Bucket order = source order (each ``asc`` by default, per-source
     ``"order": "desc"`` honored); date_histogram keys are zero-padded
@@ -1814,90 +1893,67 @@ def _composite_agg(df: DataFrame, body: dict, sub: dict) -> DataFrame:
     ``missing_bucket: true`` on a source includes docs missing that value
     as a null-keyed bucket, positioned per ``missing_order`` ("first",
     "last", or ES's "default": first when asc, last when desc); the
-    ``after`` cursor accepts null for such sources and the keyset
-    predicate's comparators are null-aware (null compares per its
-    configured position, never SQL-NULL-propagates a row away). Without
+    ``after`` cursor accepts null for such sources, and a null compares
+    per its configured position, never SQL-NULL-propagates a row away. Without
     missing_bucket, docs missing the source value are skipped — ES's
     contract. Metric sub-aggs ride the single groupBy."""
     sources = body.get("sources")
     if not isinstance(sources, list) or not sources:
         raise ValueError("composite needs a non-empty 'sources' list")
-    # (name, key expr, desc, missing_bucket, nulls_first | None)
-    keys: list[tuple[str, Column, bool, bool, bool]] = []
+    # the source keys, projected under hidden names the cursor reads
+    keys, names, exprs, missing = [], [], {}, set()
     for entry in sources:
         (sname, sspec), = entry.items()
         (skind, sbody), = sspec.items()
         if skind not in ("terms", "date_histogram", "histogram"):
             raise ValueError(f"unsupported composite source type: {skind!r}")
-        desc = sbody.get("order", "asc") == "desc"
-        missing = bool(sbody.get("missing_bucket", False))
+        (_, desc, nulls_first), = _sort_keys(
+            {sname: sbody.get("order", "asc")}, "composite order")
         morder = sbody.get("missing_order", "default")
         if morder not in ("default", "first", "last"):
             raise ValueError(
                 f"unsupported missing_order: {morder!r} (default/first/last)"
             )
-        if "missing_order" in sbody and not missing:
+        hidden = f"__key_{len(keys)}"
+        if sbody.get("missing_bucket", False):
+            missing.add(hidden)
+            if morder != "default":
+                nulls_first = morder == "first"
+        elif "missing_order" in sbody:
             raise ValueError(
                 f"missing_order on source {sname!r} needs "
                 "missing_bucket: true (ES's contract; without it there is "
                 "no null bucket to position)"
             )
-        if morder == "default":
-            nulls_first = not desc
-        else:
-            nulls_first = morder == "first"
-        keys.append((sname, _bucket_key(skind, sbody), desc, missing,
-                     nulls_first))
+        keys.append((hidden, desc, nulls_first))
+        names.append(sname)
+        exprs[hidden] = _bucket_key(skind, sbody)
     if any(next(iter(s)) in _BUCKET_KINDS for s in sub.values()):
         raise ValueError("composite sub-aggs must be metrics, not buckets")
-    keyed = df
-    for _, k, _, missing, _ in keys:
-        if not missing:
-            keyed = keyed.filter(k.isNotNull())
+    keyed = df.withColumns(exprs)
+    for h in exprs:
+        if h not in missing:
+            keyed = keyed.filter(f"{h} IS NOT NULL")
     after = body.get("after")
     if after is not None:
-        missing_keys = [n for n, _, _, _, _ in keys if n not in after]
-        if missing_keys:
-            raise ValueError(
-                f"after cursor missing source keys: {missing_keys}"
-            )
-        pred = F.lit(False)
-        for sname, k, desc, missing, nulls_first in reversed(keys):
-            val = after[sname]
-            if val is None:
-                if not missing:
-                    raise ValueError(
-                        f"after[{sname!r}] is null but the source has no "
-                        "missing_bucket"
-                    )
-                eq = k.isNull()
-                # strictly after the null bucket: everything non-null when
-                # null leads, nothing when null trails
-                strict = k.isNotNull() if nulls_first else F.lit(False)
-            else:
-                eq = k.eqNullSafe(F.lit(val))
-                cmp = (k < F.lit(val)) if desc else (k > F.lit(val))
-                # a null key must compare by its POSITION, not SQL-NULL:
-                # false when null leads (it precedes every value), true
-                # when null trails (it follows every value)
-                strict = F.coalesce(cmp, F.lit(False))
-                if missing and not nulls_first:
-                    strict = strict | k.isNull()
-            pred = strict | (eq & pred)
-        keyed = keyed.filter(pred)
+        absent = [n for n in names if n not in after]
+        if absent:
+            raise ValueError(f"after cursor missing source keys: {absent}")
+        for n, (h, _, _) in zip(names, keys):
+            if after[n] is None and h not in missing:
+                raise ValueError(
+                    f"after[{n!r}] is null but the source has no "
+                    "missing_bucket"
+                )
+        keyed = keyed.filter(_keyset_after(keys, [after[n] for n in names]))
+    # grouped by the key expressions themselves: the optimizer folds the
+    # hidden names back into them, so the plan keeps no extra projection
     out = (
-        keyed.groupBy(*[k.alias(n) for n, k, _, _, _ in keys])
+        keyed.drop(*exprs)
+        .groupBy(*[e.alias(n) for e, n in zip(exprs.values(), names)])
         .agg(F.count(F.lit(1)).alias("doc_count"), *_metric_cols(sub))
     )
-    order = []
-    for n, _, d, _, nulls_first in keys:
-        c = F.col(n)
-        if d:
-            order.append(c.desc_nulls_first() if nulls_first
-                         else c.desc_nulls_last())
-        else:
-            order.append(c.asc_nulls_first() if nulls_first
-                         else c.asc_nulls_last())
+    order = _order_cols([(n, d, nf) for (_, d, nf), n in zip(keys, names)])
     return out.orderBy(*order).limit(int(body.get("size", 10)))
 
 
@@ -2587,21 +2643,10 @@ def _apply_pipeline_aggs(
                 ))
             )
         elif pkind == "bucket_sort":
-            order = []
-            for entry in pbody.get("sort", []):
-                if isinstance(entry, str):
-                    field, direction = entry, "asc"
-                else:
-                    (field, direction), = entry.items()
-                    if isinstance(direction, dict):
-                        direction = direction.get("order", "asc")
-                col = F.col(metric_path(pkind, field))
-                order.append(
-                    col.desc() if direction == "desc" else col.asc()
-                )
+            keys = [(metric_path(pkind, f), d, nf) for f, d, nf
+                    in _sort_keys(pbody.get("sort", []), "bucket_sort sort")]
             # bucket-key tiebreak keeps truncation deterministic
-            order.append(F.col(bucket_name).asc())
-            out = out.orderBy(*order)
+            out = out.orderBy(*_order_cols(keys + [(bucket_name, False, True)]))
             frm = int(pbody.get("from", 0))
             if frm:
                 out = out.offset(frm)
@@ -2623,19 +2668,10 @@ def _top_hits(
     from pyspark.sql.window import Window
 
     size = int(body.get("size", 3))
-    order = []
-    for entry in body.get("sort", []):
-        if isinstance(entry, str):
-            order.append(F.col(entry).asc())
-        else:
-            (field, direction), = entry.items()
-            if isinstance(direction, dict):
-                direction = direction.get("order", "asc")
-            col = F.col(field)
-            order.append(col.desc() if direction == "desc" else col.asc())
-    if not order:
+    keys = _sort_keys(body.get("sort", []), "top_hits sort")
+    if not keys:
         raise ValueError("top_hits needs an explicit sort (score is bucket-free here)")
-    w = Window.partitionBy("_bucket").orderBy(*order)
+    w = Window.partitionBy("_bucket").orderBy(*_order_cols(keys))
     out = (
         df.withColumn("_bucket", bucket_key)
         .filter(F.col("_bucket").isNotNull())
@@ -3503,19 +3539,17 @@ def _es_aggregate_impl(
                     "terms order above a nested bucket agg is ambiguous in "
                     "the flattened relation"
                 )
-            (target, direction), = order_body.items()
-            col_name = {"_count": "doc_count", "_key": name}.get(target, target)
-            if col_name not in out.columns:
-                raise ValueError(
-                    f"terms order target {target!r} is not _key/_count or a "
-                    f"sibling metric (have: {out.columns})"
-                )
-            lead = (
-                F.col(col_name).desc()
-                if direction == "desc"
-                else F.col(col_name).asc()
-            )
-            out = out.orderBy(lead, F.col(name).asc()).limit(int(size))
+            keys = []
+            for target, d, nf in _sort_keys(order_body, "terms order"):
+                col_name = {"_count": "doc_count", "_key": name}.get(target, target)
+                if col_name not in out.columns:
+                    raise ValueError(
+                        f"terms order target {target!r} is not _key/_count or "
+                        f"a sibling metric (have: {out.columns})"
+                    )
+                keys.append((col_name, d, nf))
+            out = out.orderBy(
+                *_order_cols(keys + [(name, False, True)])).limit(int(size))
         elif nested_bucket:
             top = (
                 out.groupBy(name)
@@ -3617,11 +3651,12 @@ def es_request(
     """Execute a full ES search-request envelope: optional ``query``
     (compiled by plans.search.from_es_json) filters the scan; ``aggs``
     returns the bucket relation; otherwise hits are returned — sorted by
-    ``sort`` (a list of field names or ``{field: "asc"|"desc"}`` entries,
-    ES's explicit-sort shape) or by score when no sort is given, truncated
-    to ``size``, projected to ``_source`` when present. Explicit sort +
-    size compiles to TakeOrderedAndProject, the same per-partition-top-k /
-    merge plan relevance queries get.
+    ``sort`` (``_sort_keys``' shapes) or by score when no sort is given,
+    then offset by ``from`` and truncated to ``size``, projected to
+    ``_source`` when present. Every hit list, sorted, relevance-ranked,
+    rescored or ``knn``, ends in the same page: one order, offset, limit,
+    which compiles to TakeOrderedAndProject, the per-partition-top-k /
+    merge plan.
 
     ``bindings`` are ``from_es_json``'s keywords (``analyzers``,
     ``tokens_cols``, ``nested_paths``, ``id_field``, ``bm25_stats_for``,
@@ -3701,6 +3736,9 @@ def es_request(
     else:
         tree = None
     knn = body.get("knn")
+    sort, rescore = body.get("sort"), body.get("rescore")
+    min_score, source = body.get("min_score"), body.get("_source")
+    frm, size = int(body.get("from", 0)), int(body.get("size", 10))
     if knn is not None:
         # ES 8 knn search: top-k by vector similarity with an optional
         # PRE-filter. ES runs HNSW with `num_candidates` per shard; this
@@ -3719,8 +3757,8 @@ def es_request(
                 "knn combines with neither 'query' nor 'aggs' here — "
                 "fuse retrievers explicitly with plans.search.rrf_fuse"
             )
-        # the knn branch returns before the hits-envelope tail: reject
-        # envelope features it would otherwise silently drop
+        # k is the page: reject the envelope features that would page,
+        # order or reshape it
         unsupported = set(body) & {
             "sort", "collapse", "search_after", "from", "rescore",
             "highlight", "script_fields", "size",
@@ -3740,16 +3778,9 @@ def es_request(
             ftree = from_es_json(flt, **bindings)
             scan = scan.filter(ftree.predicate(df.sparkSession))
         sim = cosine(col_sql(knn["field"]), vec_sql(knn["query_vector"]))
-        out = (
-            scan.withColumn("score", F.round(sim, 6))
-            .orderBy(F.col("score").desc(), F.col(tiebreak).asc())
-            .limit(int(knn.get("k", 10)))
-        )
-        source = body.get("_source")
-        if source is not None:
-            out = out.select(*source)
-        return out
-    if aggs is not None:
+        out = scan.withColumn("score", F.round(sim, 6))
+        keys, size = _ranked_keys(tiebreak), int(knn.get("k", 10))
+    elif aggs is not None:
         pred = None if tree is None else tree.predicate(df.sparkSession)
         if len(aggs) == 1:
             (_, spec0), = aggs.items()
@@ -3764,14 +3795,9 @@ def es_request(
                 return es_aggregate(df, aggs)
         filtered = df if pred is None else df.filter(pred)
         return es_aggregate(filtered, aggs, analyzers=analyzers)
-    if tree is None:
+    elif tree is None:
         raise ValueError("request has neither 'query' nor 'aggs'")
-    sort = body.get("sort")
-    source = body.get("_source")
-    min_score = body.get("min_score")
-    if min_score is not None and (
-        sort is not None or body.get("rescore") is not None
-    ):
+    elif min_score is not None and (sort is not None or rescore is not None):
         # ES under an explicit sort only honors min_score with
         # track_scores, and rescore re-orders after the cut — both
         # compositions are ambiguous here; refuse rather than guess
@@ -3779,46 +3805,37 @@ def es_request(
             "min_score applies to relevance ranking only (not under an "
             "explicit sort or rescore) in this engine"
         )
-    if sort is not None:
+    elif sort is not None:
+        if rescore is not None:
+            raise ValueError(
+                "rescore applies to relevance ranking; ES ignores it under "
+                "an explicit sort — drop 'sort' or 'rescore'"
+            )
         out = df.filter(tree.predicate(df.sparkSession))
         # the FULL hit relation, captured before any keyset cursor filter:
         # collapse.inner_hits must report each group's top-N over the
         # whole index (ES semantics), not over the current page's suffix
         all_hits = out
-        specs: list[tuple[str, bool]] = []  # (field, is_desc)
-        for entry in sort if isinstance(sort, list) else [sort]:
-            if isinstance(entry, str):
-                specs.append((entry, False))
-            else:
-                (field, direction), = entry.items()
-                if isinstance(direction, dict):  # {"field": {"order": "desc"}}
-                    direction = direction.get("order", "asc")
-                if direction not in ("asc", "desc"):
-                    raise ValueError(f"bad sort direction {direction!r} for {field!r}")
-                specs.append((field, direction == "desc"))
+        keys = _sort_keys(sort, "sort")
         if tiebreak is not None:
-            specs.append((tiebreak, False))
+            keys.append((tiebreak, False, True))
         after = body.get("search_after")
         if after is not None:
             # ES deep pagination: rows STRICTLY after the cursor in the
-            # total sort order — the keyset predicate, lexicographic over
-            # the sort keys (direction-aware), which pushes down to the
-            # scan instead of skipping `from` rows.
-            if len(after) != len(specs):
+            # total sort order — the keyset predicate, which pushes down
+            # to the scan instead of skipping `from` rows.
+            if frm:
+                raise ValueError(
+                    "'from' and 'search_after' are mutually exclusive "
+                    "(ES's contract: search_after replaces offset "
+                    "pagination)"
+                )
+            if len(after) != len(keys):
                 raise ValueError(
                     f"search_after needs one value per sort key "
-                    f"(incl. tiebreak): got {len(after)}, sort has {len(specs)}"
+                    f"(incl. tiebreak): got {len(after)}, sort has {len(keys)}"
                 )
-            pred = F.lit(False)
-            for i in range(len(specs) - 1, -1, -1):
-                field, is_desc = specs[i]
-                col, val = F.col(field), F.lit(after[i])
-                strict = col < val if is_desc else col > val
-                pred = strict | ((col == val) & pred)
-            out = out.filter(pred)
-        order = [
-            F.col(f).desc() if d else F.col(f).asc() for f, d in specs
-        ]
+            out = out.filter(_keyset_after(keys, after))
         collapse = body.get("collapse")
         if collapse is not None:
             # ES field collapsing: keep only the best hit per collapse-field
@@ -3828,7 +3845,7 @@ def es_request(
             from pyspark.sql.window import Window
 
             cfield = collapse["field"]
-            w = Window.partitionBy(cfield).orderBy(*order)
+            w = Window.partitionBy(cfield).orderBy(*_order_cols(keys))
             out = (
                 out.withColumn("_rk", F.row_number().over(w))
                 .filter(F.col("_rk") == 1)
@@ -3850,32 +3867,13 @@ def es_request(
                         "collapse.inner_hits needs an explicit _source "
                         "column list (the nested payload must be bounded)"
                     )
-                iorder = []
-                for entry in ih.get("sort", []):
-                    if isinstance(entry, str):
-                        iorder.append(F.col(entry).asc())
-                    else:
-                        (fld, direction), = entry.items()
-                        if isinstance(direction, dict):
-                            direction = direction.get("order", "asc")
-                        if direction not in ("asc", "desc"):
-                            raise ValueError(
-                                f"bad sort direction {direction!r} for "
-                                f"inner_hits sort on {fld!r}"
-                            )
-                        c = F.col(fld)
-                        iorder.append(
-                            c.desc() if direction == "desc" else c.asc()
-                        )
-                if iorder:
-                    # the tiebreak makes the inner top-N deterministic
-                    # under sort-key ties, same as the outer sort
-                    if tiebreak is not None:
-                        iorder.append(F.col(tiebreak).asc())
-                else:
-                    iorder = list(order)  # default: the request sort
+                ikeys = _sort_keys(ih.get("sort", []), "inner_hits sort")
+                # the tiebreak makes the inner top-N deterministic under
+                # sort-key ties; no inner sort means the request sort
+                if ikeys and tiebreak is not None:
+                    ikeys.append((tiebreak, False, True))
                 isize = int(ih.get("size", 3))
-                w2 = Window.partitionBy(cfield).orderBy(*iorder)
+                w2 = Window.partitionBy(cfield).orderBy(*_order_cols(ikeys or keys))
                 inner = (
                     all_hits.withColumn("_irk", F.row_number().over(w2))
                     .filter(F.col("_irk") <= isize)
@@ -3896,25 +3894,6 @@ def es_request(
                 out = out.join(
                     inner, F.col(cfield).eqNullSafe(F.col("_ckey")), "left"
                 ).drop("_ckey")
-        if body.get("rescore") is not None:
-            raise ValueError(
-                "rescore applies to relevance ranking; ES ignores it under "
-                "an explicit sort — drop 'sort' or 'rescore'"
-            )
-        out = out.orderBy(*order)
-        frm = int(body.get("from", 0))
-        if frm:
-            if body.get("search_after") is not None:
-                raise ValueError(
-                    "'from' and 'search_after' are mutually exclusive "
-                    "(ES's contract: search_after replaces offset "
-                    "pagination)"
-                )
-            # ES offset pagination: rows [from, from+size). search_after is
-            # the scale path (keyset predicate, pushes down); `from` is the
-            # shallow-page convenience and pays the skip, as in ES.
-            out = out.offset(frm)
-        out = out.limit(int(body.get("size", 10)))
     else:
         if body.get("search_after") is not None:
             raise ValueError("search_after requires an explicit sort")
@@ -3923,9 +3902,6 @@ def es_request(
                 "collapse requires an explicit sort (deterministic "
                 "best-hit-per-group needs a total order)"
             )
-        rescore = body.get("rescore")
-        frm = int(body.get("from", 0))
-        size = int(body.get("size", 10))
         if rescore is not None:
             # ES two-phase ranking: re-score only the top `window_size`
             # hits of the first-pass ranking with a (costlier) secondary
@@ -3971,32 +3947,19 @@ def es_request(
                 "score",
                 F.when(rtree.predicate(spark_), combined).otherwise(orig),
             )
-            order2 = [F.col("score").desc()]
-            if tiebreak is not None:
-                order2.append(F.col(tiebreak).asc())
-            out = out.orderBy(*order2)
-            if frm:
-                out = out.offset(frm)
-            out = out.limit(size)
-        elif frm or min_score is not None:
-            # ES min_score: drop hits scoring below the floor BEFORE the
-            # page is taken (the page never backfills in ES either) —
-            # the filter rides the scored scan, then the ordinary
-            # TakeOrdered page
-            scored = search(df, tree, k=None, tiebreak=tiebreak)
-            if min_score is not None:
-                scored = scored.filter(
-                    F.col("score") >= float(min_score)
-                )
-            order2 = [F.col("score").desc()]
-            if tiebreak is not None:
-                order2.append(F.col(tiebreak).asc())
-            out = scored.orderBy(*order2)
-            if frm:
-                out = out.offset(frm)
-            out = out.limit(size)
         else:
-            out = search(df, tree, k=size, tiebreak=tiebreak)
+            out = search(df, tree, k=None, tiebreak=tiebreak)
+            if min_score is not None:
+                # ES min_score: drop hits scoring below the floor BEFORE
+                # the page is taken (the page never backfills in ES either)
+                out = out.filter(F.col("score") >= float(min_score))
+        keys = _ranked_keys(tiebreak)
+    # the page: one order, then ES offset pagination (`from` pays the
+    # skip, as in ES; search_after is the scale path) and the size
+    out = out.orderBy(*_order_cols(keys))
+    if frm:
+        out = out.offset(frm)
+    out = out.limit(size)
     sfields = body.get("script_fields")
     if sfields is not None:
         # ES script_fields: computed output columns per hit. Each script
