@@ -249,24 +249,33 @@ _PAGED_ROWS = st.lists(
     min_size=1, max_size=7,
 )
 _PAGED_SORT = st.lists(
-    st.tuples(st.sampled_from(["a", "b"]), st.sampled_from(["asc", "desc"])),
+    st.tuples(st.sampled_from(["a", "b"]), st.sampled_from(["asc", "desc"]),
+              st.sampled_from([None, "_first", "_last"])),
     min_size=1, max_size=2, unique_by=lambda key: key[0],
 )
 _PROBE = [(5, None), (None, None), (3, None), (None, None), (1, None)]
 
 
+def _sort_entry(field, direction, missing):
+    if missing is None:
+        return {field: direction}
+    return {field: {"order": direction, "missing": missing}}
+
+
 @settings(max_examples=10, deadline=None)
 @given(rows=_PAGED_ROWS, sort=_PAGED_SORT, page=st.integers(1, 3))
-@example(rows=_PROBE, sort=[("a", "asc")], page=2)
-@example(rows=_PROBE, sort=[("a", "desc")], page=2)
+@example(rows=_PROBE, sort=[("a", "asc", None)], page=2)
+@example(rows=_PROBE, sort=[("a", "desc", None)], page=2)
+@example(rows=_PROBE, sort=[("a", "asc", "_last")], page=2)
+@example(rows=_PROBE, sort=[("a", "desc", "_first")], page=2)
 def test_search_after_pages_concatenate_to_the_unpaged_hits(spark, rows, sort, page):
     """Walking ``search_after`` pages reaches every hit exactly once, in
     the unpaged order, also when a sort field is missing on some hits: a
-    null key compares by its place in the order (first ascending, last
-    descending), never by SQL NULL."""
+    null key compares by its place in the order (``missing``, else first
+    ascending and last descending), never by SQL NULL."""
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(rows, 1)], "id long, a long, b long")
-    base = {"query": {"match_all": {}}, "sort": [{f: d} for f, d in sort],
+    base = {"query": {"match_all": {}}, "sort": [_sort_entry(*key) for key in sort],
             "_source": ["id", "a", "b"]}
     whole = [r["id"] for r in es_request(
         df, {**base, "size": len(rows)}, tiebreak="id").collect()]
@@ -279,9 +288,30 @@ def test_search_after_pages_concatenate_to_the_unpaged_hits(spark, rows, sort, p
         if not hits:
             break
         paged += [r["id"] for r in hits]
-        after = [hits[-1][f] for f, _ in sort] + [hits[-1]["id"]]
+        after = [hits[-1][f] for f, _, _ in sort] + [hits[-1]["id"]]
     assert paged == whole
     assert sorted(whole) == list(range(1, len(rows) + 1))
+
+
+def test_sort_missing_places_the_null_hits(spark):
+    """``missing: _first/_last`` moves the hits without the sort field;
+    any other option of the object form raises instead of being dropped."""
+    df = spark.createDataFrame([(1, 2), (2, None), (3, 1)], "id long, a long")
+
+    def ids(sort):
+        return [r["id"] for r in es_request(df, {
+            "query": {"match_all": {}}, "sort": sort, "_source": ["id"]},
+            tiebreak="id").collect()]
+
+    assert ids([{"a": {"order": "asc"}}]) == [2, 3, 1]
+    assert ids([{"a": {"order": "asc", "missing": "_last"}}]) == [3, 1, 2]
+    assert ids([{"a": {"order": "desc", "missing": "_first"}}]) == [2, 1, 3]
+    assert ids([{"a": {"missing": "_last"}}]) == [3, 1, 2]
+    for bad in ({"order": "asc", "mode": "min"},
+                {"order": "asc", "unmapped_type": "long"},
+                {"order": "asc", "missing": 0}):
+        with pytest.raises(ValueError, match="unsupported sort options"):
+            ids([{"a": bad}])
 
 
 def _geo_line_by(spark, d):
@@ -558,6 +588,40 @@ def test_fixed_interval_date_histogram(spark):
     }
     with pytest.raises(ValueError, match="bad fixed_interval"):
         es_aggregate(df, {"b": {"date_histogram": {"field": "ts", "fixed_interval": "1w"}}})
+
+
+@pytest.mark.parametrize("word,compact", [
+    ("minute", "1m"), ("hour", "1h"), ("day", "1d"), ("month", "1M"), ("year", "1y")])
+def test_calendar_interval_compact_form_matches_the_word(spark, word, compact):
+    """ES's compact ``calendar_interval`` spellings give the word form's
+    buckets; note ``1m`` is a minute and ``1M`` a month."""
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2023, 12, 31, 23, 59, 30)), (2, dt.datetime(2024, 1, 1, 0, 0, 10)),
+         (3, dt.datetime(2024, 1, 1, 0, 0, 50))], "id long, ts timestamp")
+
+    def buckets(interval):
+        return sorted(tuple(r) for r in es_aggregate(df, {"b": {"date_histogram": {
+            "field": "ts", "calendar_interval": interval}}}).collect())
+
+    got = buckets(compact)
+    assert got == buckets(word)
+    assert [n for _, n in got] == [1, 2]  # each unit's boundary falls after row 1
+
+
+def test_interval_spellings_without_a_key_format_stay_refused(spark):
+    """Week and quarter have no date_histogram key format, and a fixed
+    interval below a second has no grid (keys have seconds resolution)."""
+    df = spark.createDataFrame([(1,)], "id long").selectExpr(
+        "id", "timestamp'2024-01-01 00:00:00' AS ts")
+    for interval in ("week", "1w", "quarter", "1q", "2d", "1fortnight"):
+        with pytest.raises(ValueError, match="unsupported date_histogram interval"):
+            es_aggregate(df, {"b": {"date_histogram": {
+                "field": "ts", "calendar_interval": interval}}})
+    with pytest.raises(ValueError, match="sub-second"):
+        es_aggregate(df, {"b": {"date_histogram": {
+            "field": "ts", "fixed_interval": "500ms"}}})
 
 
 def test_min_doc_count_filters_buckets(spark, sales):
@@ -1410,6 +1474,18 @@ def test_knn_request_prefilter_and_guards(spark):
         es_request(emb, {"knn": {"field": "embedding",
                                  "query_vector": [1.0], "boost": 2}},
                    tiebreak="vec_id")
+
+
+def test_knn_honours_min_score(spark):
+    """``min_score`` drops knn hits below the floor, as it does relevance
+    hits (scores here: 1.0, 0.707107, 0.0)."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 1.0]), (3, [0.0, 1.0])], "id long, v array<float>")
+    knn = {"field": "v", "query_vector": [1, 0], "k": 3}
+    assert [r["score"] for r in es_request(df, {"knn": knn}, tiebreak="id").collect()] \
+        == [1.0, 0.707107, 0.0]
+    hits = es_request(df, {"knn": knn, "min_score": 0.99}, tiebreak="id").collect()
+    assert [(r["id"], r["score"]) for r in hits] == [(1, 1.0)]
 
 
 def test_min_doc_count_zero_fills_empty_buckets(spark):

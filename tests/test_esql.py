@@ -553,6 +553,45 @@ def test_bucket(spark):
             esql(spark, q2, None)
 
 
+# every unit spelling of span arithmetic, and the canonical word it means
+_SPELLINGS = [
+    ("ms", "millisecond"), ("milliseconds", "millisecond"),
+    ("s", "second"), ("sec", "second"), ("seconds", "second"),
+    ("m", "minute"), ("min", "minute"), ("minutes", "minute"),
+    ("h", "hour"), ("hours", "hour"), ("HOUR", "hour"),
+    ("d", "day"), ("days", "day"),
+    ("w", "week"), ("weeks", "week"),
+    ("M", "month"), ("mo", "month"), ("months", "month"),
+    ("q", "quarter"), ("quarters", "quarter"),
+    ("y", "year"), ("years", "year"),
+]
+
+
+@pytest.mark.parametrize("spelling,word", _SPELLINGS)
+def test_span_bucket_and_date_diff_read_one_unit_table(spark, spelling, word):
+    """``ts + n <unit>``, ``BUCKET(ts, 1 <unit>)``, ``DATE_TRUNC`` and
+    ``DATE_DIFF("<unit>", ...)`` accept the same spellings with the same
+    meaning: the diff counts the added span back, the bucket holds ``ts``
+    and is one unit wide, and each equals its canonical word's result."""
+    def row(unit, with_bucket):
+        q = ('ROW t = "2024-05-16 09:41:27" | EVAL ts = TO_DATETIME(t), '
+             f'later = ts + 3 {unit}, dd = DATE_DIFF("{unit}", ts, later), '
+             f'tr = DATE_TRUNC("{unit}", ts)')
+        if with_bucket:
+            q += f', b = BUCKET(ts, 1 {unit}), nxt = b + 1 {unit}'
+        return _rows(spark, q)[0].asDict()
+
+    sub_second = word == "millisecond"
+    got, canonical = row(spelling, not sub_second), row(word, not sub_second)
+    assert got == canonical
+    assert got["dd"] == 3 and got["later"] > got["ts"] >= got["tr"]
+    if sub_second:
+        with pytest.raises(ValueError, match="sub-second"):
+            esql(spark, f'ROW t = "2024-05-16" | EVAL b = BUCKET(TO_DATETIME(t), 1 {spelling})', None)
+    else:
+        assert got["b"] <= got["ts"] < got["nxt"]
+
+
 def test_spatial_functions(spark):
     q = ('ROW a = "POINT (18.6 48.7)", b = "POINT(18.6 49.7)", '
          'bad = "POINT(x y)" | EVAL '
@@ -822,7 +861,7 @@ def test_r14_cidr_and_date_functions(spark):
     with pytest.raises(ValueError, match="ChronoField subset"):
         esql(spark, 'ROW x = 1 | EVAL y = DATE_EXTRACT("era", x)', None)
     with pytest.raises(ValueError, match="DATE_DIFF unit"):
-        esql(spark, 'ROW x = 1 | EVAL y = DATE_DIFF("weeks", x, x)', None)
+        esql(spark, 'ROW x = 1 | EVAL y = DATE_DIFF("fortnights", x, x)', None)
     with pytest.raises(ValueError, match="at least one block"):
         esql(spark, 'ROW x = "1.2.3.4" | EVAL y = CIDR_MATCH(x)', None)
     # malformed compile-time v4 BLOCK literals refuse loudly (ADVICE

@@ -347,8 +347,8 @@ def test_histogram_grouping(spark, t):
         "FROM e GROUP BY d ORDER BY d", ts))
     assert [str(d)[:10] for d, _ in got] == ["2024-01-01", "2024-01-02"]
     assert [n for _, n in got] == [2, 1]
-    # calendar INTERVAL beyond 1 refused (the date_histogram rule)
-    with pytest.raises(ValueError, match="calendar INTERVAL"):
+    # calendar INTERVAL beyond 1 refused (the one bucket-grid rule)
+    with pytest.raises(ValueError, match="calendar month bucket takes a count of 1"):
         es_sql("SELECT HISTOGRAM(ts, INTERVAL 2 MONTH) AS m, "
                "COUNT(*) AS n FROM e GROUP BY m", ts)
     with pytest.raises(ValueError, match="must be positive"):

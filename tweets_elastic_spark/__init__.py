@@ -17,7 +17,7 @@ Layout:
     operators/            denormalize, dedup, similarity/ANN, curation,
                           DSIR/BPE/sampling, percolate, vectorize
     functions/            analyzers, text stats, hashing, vector math,
-                          PII, multimodal
+                          PII, multimodal, IP addresses, time units
     plans/                search-query layer (JSON DSL + Lucene
                           query-string front-ends → DataFrame plans),
                           aggregations DSL + request envelope, REST-API

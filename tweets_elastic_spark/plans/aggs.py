@@ -12,8 +12,10 @@ Supported surface:
 
 * bucket aggs: ``terms`` (keyword buckets, ``size`` top-N by doc_count
   desc / key asc or an explicit ``order``), ``date_histogram``
-  (``calendar_interval``: minute, hour, day, month, year; or
-  ``fixed_interval``), ``histogram`` (numeric, fixed ``interval``),
+  (``calendar_interval``: minute, hour, day, month, year, or ES's
+  compact ``1m``/``1h``/``1d``/``1M``/``1y``; or ``fixed_interval``
+  ``<n>s|m|h|d``), ``histogram`` (numeric, fixed ``interval``); units
+  and grids come from functions/time_units.py,
   ``range`` / ``date_range`` (sorted non-overlapping [from, to) buckets,
   ES key labels); one bucket agg may nest ONE further bucket agg under
   ``aggs``. ES's null contract holds: documents missing the bucket field
@@ -103,8 +105,6 @@ partial aggregation map-side), metrics are built-in JVM aggregates, and
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -116,6 +116,8 @@ from tweets_elastic_spark.functions.ip import (
     ipv6_mask,
 )
 from tweets_elastic_spark.functions.studentt import student_t_two_sided_p
+from tweets_elastic_spark.functions.time_units import (
+    CALENDAR, SECONDS, bucket, read_compact, unit_of)
 from tweets_elastic_spark.functions.vectors import (
     col_sql,
     cosine,
@@ -134,12 +136,13 @@ from tweets_elastic_spark.plans.search import (
     search,
 )
 
+# calendar unit → its date_histogram key format, finest first
 _CALENDAR_FMT = {
-    "minute": "yyyy-MM-dd HH:mm",
-    "hour": "yyyy-MM-dd HH",
-    "day": "yyyy-MM-dd",
-    "month": "yyyy-MM",
-    "year": "yyyy",
+    "MINUTE": "yyyy-MM-dd HH:mm",
+    "HOUR": "yyyy-MM-dd HH",
+    "DAY": "yyyy-MM-dd",
+    "MONTH": "yyyy-MM",
+    "YEAR": "yyyy",
 }
 
 _METRICS = {
@@ -159,25 +162,30 @@ def _double_ref(field: str) -> str:
 
 def _sort_keys(spec, surface: str) -> list[tuple[str, bool, bool]]:
     """ES sort syntax → ``(field, desc, nulls_first)`` keys. ``spec`` is a
-    field name (ascending), ``{field: dir}``, ``{field: {"order": dir}}``
-    or a list of these; ``dir`` is exactly ``"asc"`` or ``"desc"``, and
-    anything else raises naming the value and ``surface``. Nulls take
-    Spark's default place: first ascending, last descending (ES puts
-    missing values last either way, MIGRATION.md)."""
+    field name (ascending), ``{field: dir}``, ``{field: {"order": dir,
+    "missing": "_first"|"_last"}}`` or a list of these; ``dir`` is
+    exactly ``"asc"`` or ``"desc"``, and anything else, or any other key
+    in the object form, raises naming the value and ``surface``. Without
+    ``missing``, nulls take Spark's default place: first ascending, last
+    descending (ES puts missing values last either way, MIGRATION.md)."""
     keys = []
     for entry in spec if isinstance(spec, list) else [spec]:
-        if isinstance(entry, str):
-            field, direction = entry, "asc"
-        else:
+        field, direction, opts = entry, "asc", {}
+        if not isinstance(entry, str):
             (field, direction), = entry.items()
             if isinstance(direction, dict):
-                direction = direction.get("order", "asc")
+                opts, direction = direction, direction.get("order", "asc")
+        missing = opts.get("missing")
+        if set(opts) - {"order", "missing"} or missing not in (None, "_first", "_last"):
+            raise ValueError(f"unsupported {surface} options for {field!r}: "
+                             f"{opts} (order, and missing _first/_last, only)")
         if direction not in ("asc", "desc"):
             raise ValueError(
                 f"unsupported {surface}: {direction!r} for {field!r} "
                 "(bad sort direction; asc/desc only)"
             )
-        keys.append((field, direction == "desc", direction == "asc"))
+        nulls_first = direction == "asc" if missing is None else missing == "_first"
+        keys.append((field, direction == "desc", nulls_first))
     return keys
 
 
@@ -277,6 +285,26 @@ def mad_expr(value: Column, ov=lambda c: c) -> Column:
         return _arr_median(devs)
 
     return F.element_at(F.transform(F.array(arr), _mad_of), 1)
+
+
+def _histogram_interval(body: dict) -> tuple[int, str, bool]:
+    """A date_histogram's interval → ``(n, unit, fixed)``.
+    ``fixed_interval`` is ES's compact ``<n><code>`` of a unit of a day
+    or less; ``calendar_interval`` is a unit word or its ``1<code>``
+    form, of a unit that has a key format."""
+    fixed = body.get("fixed_interval")
+    if fixed is not None:
+        n, unit = read_compact(fixed) or (0, None)
+        if unit is None or unit in CALENDAR:
+            raise ValueError(
+                f"bad fixed_interval {fixed!r} (expected <n>[smhd])")
+        return n, unit, True
+    interval = str(body.get("calendar_interval", body.get("interval")))
+    n, unit = read_compact(interval) or (1, unit_of(interval))
+    if n != 1 or unit not in _CALENDAR_FMT:
+        raise ValueError(f"unsupported date_histogram interval: {interval!r} (minute/"
+                         "hour/day/month/year or 1m/1h/1d/1M/1y, or fixed_interval)")
+    return n, unit, False
 
 
 def _bucket_key(kind: str, body: dict) -> Column:
@@ -473,33 +501,14 @@ def _bucket_key(kind: str, body: dict) -> Column:
     if kind == "terms":
         return src
     if kind == "date_histogram":
-        fixed = body.get("fixed_interval")
-        if fixed is not None:
-            # "30s" / "15m" / "6h" / "2d" → UTC-epoch-aligned buckets of
-            # that exact width, keyed by the bucket-start timestamp string
-            # (ES's fixed_interval semantics).
-            import re
-
-            m = re.fullmatch(r"(\d+)(s|m|h|d)", str(fixed))
-            if not m:
-                raise ValueError(
-                    f"bad fixed_interval {fixed!r} (expected <n>[smhd])"
-                )
-            secs = int(m.group(1)) * {"s": 1, "m": 60, "h": 3600, "d": 86400}[m.group(2)]
-            bucket_start = F.timestamp_seconds(
-                F.floor(F.unix_timestamp(src) / F.lit(secs)) * F.lit(secs)
-            )
-            return F.date_format(bucket_start, "yyyy-MM-dd HH:mm:ss")
-        interval = body.get("calendar_interval", body.get("interval"))
-        if interval not in _CALENDAR_FMT:
-            raise ValueError(
-                f"unsupported date_histogram interval: {interval!r} "
-                f"(supported: {sorted(_CALENDAR_FMT)}, or fixed_interval)"
-            )
-        return F.date_format(src, _CALENDAR_FMT[interval])
+        n, unit, fixed = _histogram_interval(body)
+        if fixed:
+            # UTC-epoch-aligned buckets of that exact width, keyed by the
+            # bucket-start timestamp string (ES's fixed_interval semantics)
+            return F.date_format(bucket(src, n, unit), "yyyy-MM-dd HH:mm:ss")
+        return F.date_format(src, _CALENDAR_FMT[unit])
     if kind == "histogram":
-        width = float(body["interval"])
-        return (F.floor(src / F.lit(width)) * F.lit(width)).cast("double")
+        return bucket(src, float(body["interval"]), None)
     if kind == "date_range":
         # ES date_range: the range agg over timestamps — [from, to) buckets
         # with ISO date(-time) bounds, same key labels and non-overlap
@@ -2321,11 +2330,10 @@ def _fill_empty_buckets(
             ).alias("_i")
         ).select((F.col("_i") * F.lit(width)).cast("double").alias(name))
     elif kind == "date_histogram":
-        interval = body.get("calendar_interval", body.get("interval"))
-        if interval != "day":
+        if _histogram_interval(body) != (1, "DAY", False):
             raise ValueError(
                 "min_doc_count=0 bucket filling supports the 'day' "
-                f"calendar_interval, got {interval!r}"
+                f"calendar_interval, got {body}"
             )
         bounds = out.agg(
             F.min(name).alias("_lo"), F.max(name).alias("_hi")
@@ -2929,8 +2937,9 @@ def _es_aggregate_impl(
         if target <= 0:
             raise ValueError("auto_date_histogram buckets must be > 0")
         lo, hi = df.agg(F.min(field), F.max(field)).first()
-        ladder = [1, 5, 10, 30, 60, 300, 600, 1800, 3600, 3 * 3600,
-                  12 * 3600, 86400, 7 * 86400, 30 * 86400, 90 * 86400]
+        ladder = [n * SECONDS[unit] for n, unit in map(read_compact, (
+            "1s", "5s", "10s", "30s", "1m", "5m", "10m", "30m", "1h", "3h",
+            "12h", "1d", "7d", "30d", "90d"))]
         if lo is None:
             secs = ladder[0]
         else:
@@ -3345,29 +3354,22 @@ def _es_aggregate_impl(
             raise ValueError(
                 f"rate needs a date_histogram parent, got {kind!r}"
             )
-        unit_s = {"second": 1, "minute": 60, "hour": 3600, "day": 86400,
-                  "week": 604800}
-        fixed = body.get("fixed_interval")
-        if fixed is not None:
-            m = re.fullmatch(r"(\d+)(s|m|h|d)", str(fixed))
-            if not m:
-                raise ValueError(
-                    f"bad fixed_interval {fixed!r} (expected <n>[smhd])"
-                )
-            bucket_s = int(m.group(1)) * {
-                "s": 1, "m": 60, "h": 3600, "d": 86400}[m.group(2)]
-        else:
-            cal = body.get("calendar_interval", body.get("interval"))
-            if cal not in unit_s or cal == "week":
-                raise ValueError(
-                    f"rate under calendar_interval {cal!r} is not fixed-"
-                    "width; use minute/hour/day or fixed_interval"
-                )
-            bucket_s = unit_s[cal]
+        width, wunit, _ = _histogram_interval(body)
+        if wunit in CALENDAR:
+            raise ValueError(
+                f"rate under calendar_interval {wunit.lower()!r} is not "
+                "fixed-width; use minute/hour/day or fixed_interval"
+            )
+        bucket_s = width * SECONDS[wunit]
         for rname, rspec in rates.items():
             rbody = rspec["rate"]
-            unit = rbody.get("unit")
-            factor = 1.0 if unit is None else bucket_s / unit_s[unit]
+            factor = 1.0
+            if rbody.get("unit") is not None:
+                runit = unit_of(str(rbody["unit"]))
+                if runit not in SECONDS:
+                    raise ValueError(
+                        f"rate unit {rbody['unit']!r} is not fixed-width")
+                factor = bucket_s / SECONDS[runit]
             c = (
                 F.sum(F.col(rbody["field"]).cast("double"))
                 if "field" in rbody else F.count(F.lit(1))
@@ -3949,11 +3951,12 @@ def es_request(
             )
         else:
             out = search(df, tree, k=None, tiebreak=tiebreak)
-            if min_score is not None:
-                # ES min_score: drop hits scoring below the floor BEFORE
-                # the page is taken (the page never backfills in ES either)
-                out = out.filter(F.col("score") >= float(min_score))
         keys = _ranked_keys(tiebreak)
+    if min_score is not None:
+        # ES min_score, on relevance and knn hits alike: drop hits scoring
+        # below the floor BEFORE the page is taken (the page never
+        # backfills in ES either)
+        out = out.filter(F.col("score") >= float(min_score))
     # the page: one order, then ES offset pagination (`from` pays the
     # skip, as in ES; search_after is the scale path) and the size
     out = out.orderBy(*_order_cols(keys))

@@ -93,11 +93,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.ip import cidr_match
+from tweets_elastic_spark.functions.time_units import SECONDS, read_compact
 
 __all__ = ["parse_eql", "eql_search"]
 
-_DURATION_RE = re.compile(r"^(\d+)(ms|s|m|h|d)$")
-_DUR_SECONDS = {"ms": 0.001, "s": 1.0, "m": 60.0, "h": 3600.0, "d": 86400.0}
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_.]*$")
 _CMP_OPS = ("==", "!=", ">=", "<=", ">", "<")
 
@@ -251,12 +250,15 @@ class EqlQuery:
 
 
 def _parse_duration(tok: str) -> float:
-    m = _DURATION_RE.match(tok)
-    if not m:
+    """An EQL duration (``2d``, ``500ms``) → seconds."""
+    parsed = read_compact(tok)
+    if parsed is None or parsed[1] not in SECONDS:
         raise ValueError(
-            f"unsupported EQL maxspan {tok!r} (expected <int><ms|s|m|h|d>)"
+            f"unsupported EQL maxspan {tok!r} (expected <int><unit> of a "
+            "fixed width: ms, s, m, h, d, w)"
         )
-    return int(m.group(1)) * _DUR_SECONDS[m.group(2)]
+    n, unit = parsed
+    return float(n * SECONDS[unit])
 
 
 def _parse_literal(tok: str):

@@ -79,7 +79,7 @@ token, the ES-SQL/EQL convention):
   blocks folded at compile time, the predicate shared with EQL's
   cidrMatch), DATE_FORMAT("pattern", ts), DATE_EXTRACT("part", ts)
   (ChronoField-name core subset, BIGINT), DATE_DIFF("unit", a, b)
-  (seconds/minutes/hours/days, truncated toward zero), and the r15
+  (whole units from a to b, truncated toward zero), and the r15
   widening: SIN/COS/TAN/ASIN/ACOS/ATAN/ATAN2/SINH/COSH/TANH/CBRT/
   HYPOT/TO_DEGREES/TO_RADIANS (1:1 Catalyst builtins), MV_APPEND,
   DATE_PARSE("pattern", s) (try_to_timestamp — NULL on unparseable),
@@ -97,11 +97,13 @@ token, the ES-SQL/EQL convention):
   pass shared with the agg front-end; the ML similarity merge is the
   same refused divergence; valid anywhere, a permissive superset of
   upstream's STATS-BY-only rule), and BUCKET(expr, span) (8.13 —
-  numeric span = floor grid; `N second..day` durations truncate on
-  the fixed-width epoch grid; calendar `1 week|month|quarter|year`
-  via date_trunc (week is Monday-anchored, the upstream DATE_PERIOD
-  rule), N > 1 calendar refused like the date_histogram agg;
-  the 4-arg auto-width form refused — not a reproducible contract).
+  the functions/time_units.py grid: numeric span = floor grid;
+  `N second..day` durations on the fixed-width epoch grid; calendar
+  `1 week|month|quarter|year` via date_trunc (week is Monday-anchored,
+  the upstream DATE_PERIOD rule), N > 1 calendar refused; the 4-arg
+  auto-width form refused — not a reproducible contract). Span
+  literals, BUCKET, DATE_TRUNC and DATE_DIFF read units through one
+  table (``1 h``, ``1 hour``, ``"hours"``).
 * multivalue functions: MV_COUNT, MV_MIN, MV_MAX, MV_FIRST, MV_LAST,
   MV_DEDUPE, MV_SORT(col[, "ASC"|"DESC"]), MV_ZIP(a, b[, delim]),
   MV_SUM/MV_AVG (DOUBLE; NULL on empty), MV_MEDIAN (exact; even
@@ -212,6 +214,7 @@ from tweets_elastic_spark.functions.ip import (
     ipv6_groups,
     ipv6_mask,
 )
+from tweets_elastic_spark.functions.time_units import bucket, unit_of
 from tweets_elastic_spark.plans.aggs import categorize_key, mad_expr
 from tweets_elastic_spark.plans.query_string import (
     parse_kql,
@@ -259,23 +262,6 @@ class _Span:
 
     def __init__(self, n: int, unit: str):
         self.n, self.unit = n, unit
-
-
-# upstream unit spellings (full singular/plural + the documented
-# abbreviations) → Spark timestampadd units
-_SPAN_UNITS = {
-    "millisecond": "MILLISECOND", "milliseconds": "MILLISECOND",
-    "ms": "MILLISECOND",
-    "second": "SECOND", "seconds": "SECOND", "sec": "SECOND",
-    "s": "SECOND",
-    "minute": "MINUTE", "minutes": "MINUTE", "min": "MINUTE",
-    "hour": "HOUR", "hours": "HOUR", "h": "HOUR",
-    "day": "DAY", "days": "DAY", "d": "DAY",
-    "week": "WEEK", "weeks": "WEEK", "w": "WEEK",
-    "month": "MONTH", "months": "MONTH", "mo": "MONTH",
-    "quarter": "QUARTER", "quarters": "QUARTER", "q": "QUARTER",
-    "year": "YEAR", "years": "YEAR", "y": "YEAR",
-}
 
 
 def _no_span(c, ctx: str):
@@ -529,14 +515,14 @@ class _ExprParser:
         k, v = self.next()
         if k == "num":
             nk, nv = self.peek()
-            if nk == "ident" and nv.lower() in _SPAN_UNITS:
+            if nk == "ident" and unit_of(nv):
                 # `1 day`, `15 minutes` — a temporal-amount literal
                 if isinstance(v, float):
                     raise ValueError(
                         "ES|QL: time spans take an integer amount"
                     )
                 self.i += 1
-                return _Span(int(v), _SPAN_UNITS[nv.lower()])
+                return _Span(int(v), unit_of(nv))
             return F.lit(v)
         if k == "str":
             return F.lit(v)
@@ -571,6 +557,15 @@ class _ExprParser:
         if k != "str":
             raise ValueError(f"ES|QL: {what} must be a string literal")
         return v
+
+    def _unit_arg(self, fn: str) -> str:
+        """``fn``'s literal "unit" argument → its canonical time unit."""
+        spelling = self._lit_str_arg(f"{fn} unit")
+        unit = unit_of(spelling)
+        if unit is None:
+            raise ValueError(
+                f"ES|QL: {fn} unit {spelling!r} is not a time unit")
+        return unit
 
     def _lit_int_arg(self, what: str) -> int:
         neg = False
@@ -662,11 +657,11 @@ class _ExprParser:
             return F.split(c, re.escape(delim))
         if fn == "DATE_TRUNC":
             self.expect_op("(")
-            unit = self._lit_str_arg("DATE_TRUNC unit")
+            unit = self._unit_arg(fn)
             self.expect_op(",")
             c = self.expr()
             self.expect_op(")")
-            return F.date_trunc(unit, c)
+            return F.date_trunc(unit.lower(), c)
         if fn == "MV_SORT":
             # MV_SORT(col[, order]) — order is a LITERAL "ASC"/"DESC"
             # upstream; anything else (a typo like "DSC", a column) is
@@ -688,69 +683,33 @@ class _ExprParser:
             return F.reverse(F.array_sort(c)) if desc else F.array_sort(c)
         if fn == "BUCKET":
             # BUCKET(expr, span) (8.13, the ES|QL histogram grouping
-            # function — formerly AUTO_BUCKET):
-            #   * numeric span  -> floor(v / span) * span
-            #   * time span     -> the bucket's start timestamp:
-            #     `N second|minute|hour|day|week` truncate on the
-            #     fixed-width epoch grid; calendar `1 month|1 year`
-            #     via date_trunc (N > 1 calendar units refused — no
-            #     fixed width exists, same rule as the date_histogram
-            #     agg's calendar_interval).
-            # The 4-arg auto-width form (count, min, max -> a "nice"
-            # width chosen by ES heuristics) is refused with a pointer:
-            # pick the width explicitly, the heuristic is not a
-            # reproducible contract.
+            # function — formerly AUTO_BUCKET): a numeric span or a time
+            # span on the functions/time_units.py grid. The 4-arg
+            # auto-width form (count, min, max -> a "nice" width chosen
+            # by ES heuristics) is refused with a pointer: pick the
+            # width explicitly, the heuristic is not a reproducible
+            # contract.
             self.expect_op("(")
             c = self.expr()
             self.expect_op(",")
-            k2, v2 = self.peek()
-            neg = v2 == "-" and k2 == "op"
-            if neg:
-                raise ValueError("ES|QL: BUCKET span must be positive")
             k2, span = self.next()
             if k2 != "num":
                 raise ValueError(
-                    "ES|QL: BUCKET needs a literal span — "
+                    "ES|QL: BUCKET needs a positive literal span — "
                     "BUCKET(expr, 50.0) or BUCKET(ts, 1 day)"
                 )
-            if span <= 0:
-                raise ValueError("ES|QL: BUCKET span must be positive")
-            k3, unit = self.peek()
+            unit = None
+            k3, v3 = self.peek()
             if k3 == "ident":
                 self.i += 1
-                u = unit.lower().rstrip("s")
-                secs = {"second": 1, "minute": 60, "hour": 3600,
-                        "day": 86400}
-                if u in secs:
-                    if isinstance(span, float):
-                        raise ValueError(
-                            "ES|QL: BUCKET time spans take an integer "
-                            "count"
-                        )
-                    width = int(span) * secs[u]
-                    self.expect_op(")")
-                    ep = F.unix_timestamp(c)
-                    return F.timestamp_seconds(
-                        F.floor(ep / width).cast("long") * width)
-                if u in ("week", "month", "year", "quarter"):
-                    # calendar (DATE_PERIOD) units truncate on the
-                    # calendar grid — `1 week` is MONDAY-anchored
-                    # (ISO, matching upstream's weekly buckets), not
-                    # the epoch-grid Thursday a 604800s width would
-                    # give; N > 1 has no fixed width, refused like
-                    # the date_histogram calendar_interval rule
-                    if span != 1:
-                        raise ValueError(
-                            f"ES|QL: BUCKET calendar unit {unit!r} "
-                            "only supports a count of 1 (no fixed "
-                            "width exists)"
-                        )
-                    self.expect_op(")")
-                    return F.date_trunc(u, c)
-                raise ValueError(
-                    f"ES|QL: unknown BUCKET time unit {unit!r}"
-                )
-            if self.peek() == ("op", ","):
+                unit = unit_of(v3)
+                if unit is None:
+                    raise ValueError(
+                        f"ES|QL: unknown BUCKET time unit {v3!r}")
+                if isinstance(span, float):
+                    raise ValueError(
+                        "ES|QL: BUCKET time spans take an integer count")
+            elif self.peek() == ("op", ","):
                 raise ValueError(
                     "ES|QL: the 4-arg BUCKET(expr, count, min, max) "
                     "auto-width form is not supported — its 'nice "
@@ -758,8 +717,7 @@ class _ExprParser:
                     "pass the width explicitly"
                 )
             self.expect_op(")")
-            sp = float(span)
-            return F.floor(c / F.lit(sp)) * F.lit(sp)
+            return bucket(c, span, unit)
         if fn == "IP_PREFIX":
             # IP_PREFIX(ip, v4_len, v6_len) (8.15): the address masked
             # at the family-matching prefix length, rendered back as an
@@ -915,24 +873,16 @@ class _ExprParser:
             return col.cast("bigint")
         if fn == "DATE_DIFF":
             # DATE_DIFF("unit", start, end) — signed count of whole
-            # units from start to end, truncated toward zero (ES)
+            # units from start to end, truncated toward zero (ES's
+            # ChronoUnit.between, which Spark's timestampdiff runs)
             self.expect_op("(")
-            unit = self._lit_str_arg("DATE_DIFF unit").lower()
-            secs = {"seconds": 1, "minutes": 60, "hours": 3600,
-                    "days": 86400}.get(unit)
-            if secs is None:
-                raise ValueError(
-                    f"ES|QL: DATE_DIFF unit {unit!r} "
-                    f"(seconds/minutes/hours/days)"
-                )
+            unit = self._unit_arg(fn)
             self.expect_op(",")
             start = self.expr()
             self.expect_op(",")
             end = self.expr()
             self.expect_op(")")
-            d = (F.unix_timestamp(end) - F.unix_timestamp(start)) \
-                / F.lit(secs)
-            return d.cast("bigint")  # truncates toward zero
+            return F.timestamp_diff(unit, start, end)
         a = self._args()
 
         def need(n):

@@ -44,12 +44,13 @@ verbatim on DuckDB/Postgres, which is exactly how the oracle checks it):
   WHERE, raises loudly.
 
 * ``HISTOGRAM(col, interval)`` in the select list (alias required,
-  GROUP BY the alias) — ES SQL's grouping function: numeric interval →
-  the fixed-width floor grid (DOUBLE, the histogram-agg contract);
-  ``INTERVAL n SECOND|MINUTE|HOUR|DAY`` → the epoch floor grid;
-  ``INTERVAL 1 MONTH|YEAR`` → calendar date_trunc (N > 1 calendar
-  refused, the date_histogram rule). Not ANSI — the oracle replays the
-  grid arithmetic instead of running the string verbatim.
+  GROUP BY the alias) — ES SQL's grouping function on the
+  functions/time_units.py grid: numeric interval → the fixed-width
+  floor grid (DOUBLE, the histogram-agg contract); ``INTERVAL n
+  SECOND|MINUTE|HOUR|DAY`` → the epoch floor grid; ``INTERVAL 1
+  WEEK|MONTH|QUARTER|YEAR`` → calendar date_trunc (N > 1 calendar
+  refused). Not ANSI — the oracle replays the grid arithmetic instead
+  of running the string verbatim.
 * ``QUERY('lucene query string')`` as a WHERE predicate — ES SQL's
   query_string escape hatch, compiled through plans/query_string.py
   (same parser as the DSL front-end and ES|QL QSTR()); its score joins
@@ -70,6 +71,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.time_units import bucket, unit_of
 from tweets_elastic_spark.plans.esql import _match_builder, _qstr_builder
 
 __all__ = ["es_sql"]
@@ -379,14 +381,10 @@ class _Parser:
 
     def _histogram_call(self) -> Column:
         """``HISTOGRAM(col, interval)`` — ES SQL's grouping function
-        (the SQL spelling of the histogram / date_histogram agg).
-        Numeric interval → the shared fixed-width grid
-        floor(v/w)*w (DOUBLE, the BUCKET/histogram-agg contract);
-        ``INTERVAL n SECOND|MINUTE|HOUR|DAY`` → the epoch floor grid
-        (fixed-width instants, tz-independent); ``INTERVAL 1
-        MONTH|YEAR`` → calendar date_trunc (N > 1 calendar refused,
-        the same rule as the date_histogram agg). Scan-local
-        arithmetic — the key feeds one hash aggregation."""
+        (the SQL spelling of the histogram / date_histogram agg): a
+        number or ``INTERVAL n unit`` on the functions/time_units.py
+        grid. Scan-local arithmetic — the key feeds one hash
+        aggregation."""
         if not self.accept_op("("):
             raise ValueError("ES SQL: HISTOGRAM needs (")
         ck, cv = self.next()
@@ -394,49 +392,26 @@ class _Parser:
             raise ValueError("ES SQL: HISTOGRAM argument must be a column")
         if not self.accept_op(","):
             raise ValueError("ES SQL: HISTOGRAM(col, interval)")
-        k, v = self.peek()
-        if k == "kw" and v == "INTERVAL":
-            self.next()
+        unit = None
+        if self.accept_kw("INTERVAL"):
             nk, nv = self.next()
             if nk != "num" or isinstance(nv, float):
                 raise ValueError(
                     "ES SQL: INTERVAL amount must be an integer")
             uk, uv = self.next()
-            unit = str(uv).upper().rstrip("S") if uk in ("kw", "ident") \
-                else ""
-            fixed = {"SECOND": 1, "MINUTE": 60, "HOUR": 3600,
-                     "DAY": 86400}
-            if unit in fixed:
-                width = int(nv) * fixed[unit]
-                out = F.timestamp_seconds(
-                    F.floor(F.unix_timestamp(F.col(cv))
-                            / F.lit(width)).cast("long") * F.lit(width)
-                )
-            elif unit in ("MONTH", "YEAR"):
-                if int(nv) != 1:
-                    raise ValueError(
-                        f"ES SQL: calendar INTERVAL supports 1 {unit} "
-                        "only (the date_histogram calendar rule)")
-                out = F.date_trunc(unit.lower(), F.col(cv))
-            else:
+            unit = unit_of(str(uv)) if uk in ("kw", "ident") else None
+            if unit is None:
                 raise ValueError(
-                    f"ES SQL: unsupported INTERVAL unit {uv!r} "
-                    "(SECOND/MINUTE/HOUR/DAY/MONTH/YEAR)")
+                    f"ES SQL: unsupported INTERVAL unit {uv!r}")
         else:
             nk, nv = self.next()
             if nk != "num":
                 raise ValueError(
                     "ES SQL: HISTOGRAM interval must be a number or "
                     "INTERVAL n unit")
-            w = float(nv)
-            if w <= 0:
-                raise ValueError("ES SQL: HISTOGRAM interval must be "
-                                 "positive")
-            out = (F.floor(F.col(cv) / F.lit(w)) * F.lit(w)) \
-                .cast("double")
         if not self.accept_op(")"):
             raise ValueError("ES SQL: HISTOGRAM missing )")
-        return out
+        return bucket(F.col(cv), nv, unit)
 
     def _query_call(self) -> Column:
         """``QUERY('lucene query string')`` — ES SQL's query_string

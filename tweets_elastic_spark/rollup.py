@@ -20,11 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.plans.aggs import _CALENDAR_FMT, _bucket_key
+
 __all__ = ["rollup_job", "rollup_search"]
 
-# calendar grain → zero-padded key prefix length ("yyyy-MM-dd HH:mm")
-_GRAIN_PREFIX = {"minute": 16, "hour": 13, "day": 10, "month": 7, "year": 4}
-_GRAIN_ORDER = ["minute", "hour", "day", "month", "year"]
+# the date_histogram calendar grains, finest first; a grain's key is
+# the zero-padded prefix of a finer one, as long as its format
+_GRAIN_ORDER = [unit.lower() for unit in _CALENDAR_FMT]
 
 
 def rollup_job(
@@ -38,9 +40,7 @@ def rollup_job(
     """Build the rollup relation: one row per (time bucket, terms...)
     holding doc_count + per-metric algebraic partials
     ``{f}__sum/__count/__min/__max``."""
-    from tweets_elastic_spark.plans.aggs import _bucket_key
-
-    if interval not in _GRAIN_PREFIX:
+    if interval not in _GRAIN_ORDER:
         raise ValueError(
             f"unsupported rollup interval {interval!r} "
             f"(calendar grains: {_GRAIN_ORDER})"
@@ -83,7 +83,7 @@ def rollup_search(
             f"grain {interval!r} — rebuild the job or query the raw corpus"
         )
     bucket = F.substring(F.col("__rollup_ts"), 1,
-                         _GRAIN_PREFIX[interval]).alias("bucket")
+                         len(_CALENDAR_FMT[interval.upper()])).alias("bucket")
     group = [bucket] + [F.col(t) for t in (terms or [])]
     aggs = [F.sum("doc_count").cast("bigint").alias("doc_count")]
     for f_name, stats in metrics.items():
