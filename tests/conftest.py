@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 from contextlib import contextmanager
 
@@ -54,9 +55,13 @@ def _py4j_commands(spark):
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     n = [0]
+    # other threads share the connection (Py4J's finalizer thread sends a
+    # memory-delete command per collected JavaObject): count this one only
+    owner = threading.get_ident()
 
     def counting(*args, **kwargs):
-        n[0] += 1
+        if threading.get_ident() == owner:
+            n[0] += 1
         return send(*args, **kwargs)
 
     client.send_command = counting

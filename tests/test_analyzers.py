@@ -173,26 +173,14 @@ def test_char_ngrams_min_gram_above_one_no_fabricated_grams(spark):
     assert list(row2["g"]) == []
 
 
-def test_trim_truncate_unique_fingerprint_filters(spark):
+def test_fingerprint_filter(spark):
     from tweets_elastic_spark.functions.analyzers import (
-        analyze, fingerprint_filter, trim_tokens, truncate_tokens,
-        unique_tokens,
+        analyze, fingerprint_filter,
     )
 
-    df = spark.createDataFrame([(" b ", ["  a ", "b"], ["b", "a", "b"])],
-                               "s string, t array<string>, u array<string>")
-    row = df.select(
-        trim_tokens("t").alias("trim"),
-        truncate_tokens(F.col("u"), 1).alias("trunc"),
-        unique_tokens("u").alias("uniq"),
-        fingerprint_filter("u").alias("fp"),
-    ).head()
-    assert list(row["trim"]) == ["a", "b"]
-    assert list(row["trunc"]) == ["b", "a", "b"]
-    assert list(row["uniq"]) == ["b", "a"]       # first occurrence kept
+    df = spark.createDataFrame([(["b", "a", "b"],)], "u array<string>")
+    row = df.select(fingerprint_filter("u").alias("fp")).head()
     assert list(row["fp"]) == ["a b"]            # sorted, deduped, joined
-    with pytest.raises(ValueError, match=">= 1"):
-        df.select(truncate_tokens(F.col("u"), 0))
     # the full fingerprint analyzer: tokenize, lower, fold, normalize
     out = spark.createDataFrame(
         [("The quick  brown the QUICK fox",), ("",), ("  ",)],
@@ -200,6 +188,7 @@ def test_trim_truncate_unique_fingerprint_filters(spark):
     ).select(analyze(F.col("text"), "fingerprint").alias("fp")).collect()
     assert list(out[0]["fp"]) == ["brown fox quick the"]
     assert list(out[1]["fp"]) == [] and list(out[2]["fp"]) == []
+
 
 def test_englando_oracle_vocab_covers_corpus():
     """The englando oracle's stem CASE is a fixture over the corpus's

@@ -282,9 +282,7 @@ def test_span_dedup_hand_planted(spark):
 
 
 def test_dup_ngram_stats_counts_shared_grams(spark):
-    from tweets_elastic_spark.operators.curation import (
-        dup_ngram_filter, dup_ngram_stats,
-    )
+    from tweets_elastic_spark.operators.curation import dup_ngram_stats
 
     shared = "one two three four five six"
     docs = spark.createDataFrame(
@@ -300,12 +298,6 @@ def test_dup_ngram_stats_counts_shared_grams(spark):
     # doc1: 9 words -> 6 distinct 4-grams; 3 duplicated -> 0.5
     assert stats[1]["n_grams"] == 6
     assert stats[1]["dup_frac"] == 0.5
-    kept = {r["doc_id"]
-            for r in dup_ngram_filter(docs, k=4, max_dup_frac=0.4).collect()}
-    assert kept == {3}
-    kept2 = {r["doc_id"]
-             for r in dup_ngram_filter(docs, k=4, max_dup_frac=0.5).collect()}
-    assert 1 in kept2 and 3 in kept2
 
 
 def test_dup_ngram_stats_short_docs_and_within_doc_repeat(spark):

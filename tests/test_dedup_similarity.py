@@ -461,14 +461,20 @@ def test_ann_ivfpq_recall_and_pruning(spark, qid):
 
 
 def test_fingerprint_store_roundtrip_and_append(spark, tmp_path):
-    from tweets_elastic_spark.operators.dedup import (
-        dedup_increment_exact, write_fingerprints,
-    )
+    """The continuous-ingest shape: the corpus's ``fingerprint_md5``
+    values stored as parquet, each accepted batch appending its own."""
+    from tweets_elastic_spark.functions.textstats import fingerprint_md5
+    from tweets_elastic_spark.operators.dedup import dedup_increment_exact
+
+    path = str(tmp_path / "fps")
+
+    def store(df, mode):
+        df.select(fingerprint_md5(F.col("text")).alias("fp")) \
+            .write.mode(mode).parquet(path)
 
     corpus = spark.createDataFrame(
         [(1, "alpha  text"), (2, "beta text")], "doc_id long, text string")
-    path = str(tmp_path / "fps")
-    write_fingerprints(corpus, path)
+    store(corpus, "overwrite")
     inc = spark.createDataFrame(
         [
             (10, "ALPHA TEXT"),      # whitespace/case dup of corpus 1
@@ -482,28 +488,6 @@ def test_fingerprint_store_roundtrip_and_append(spark, tmp_path):
                  for r in dedup_increment_exact(inc, fps).collect())
     assert got == [11, 13]
     # accept the batch: append its fingerprints; a replay now drops all
-    write_fingerprints(inc, path, mode="append")
+    store(inc, "append")
     fps2 = spark.read.parquet(path)
     assert dedup_increment_exact(inc, fps2).count() == 0
-
-
-def test_dedup_increment_near_drops_corpus_neighbors(spark):
-    from tweets_elastic_spark.operators.dedup import dedup_increment_near
-
-    base = ("the quick brown fox jumps over the lazy dog and runs far "
-            "away into the deep green forest tonight")
-    corpus = spark.createDataFrame(
-        [(1, base), (2, "completely different corpus text about spark "
-                        "streaming joins and watermarks at scale")],
-        "doc_id long, text string")
-    inc = spark.createDataFrame(
-        [
-            (10, base.replace("tonight", "today")),   # near-dup of 1
-            (11, "entirely novel increment document about parquet row "
-                 "group statistics pruning and layouts"),
-        ],
-        "doc_id long, text string")
-    got = sorted(r["doc_id"] for r in
-                 dedup_increment_near(inc, corpus,
-                                      est_threshold=0.35).collect())
-    assert got == [11]

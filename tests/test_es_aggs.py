@@ -624,6 +624,28 @@ def test_interval_spellings_without_a_key_format_stay_refused(spark):
             "field": "ts", "fixed_interval": "500ms"}}})
 
 
+def test_date_histogram_refuses_offset_and_time_zone(spark):
+    """Buckets are UTC-midnight-aligned, so an ``offset`` or a
+    ``time_zone`` (which would move the 03:00 row into the previous day's
+    bucket) raises instead of being ignored; so does any other key the
+    aggregation does not read."""
+    df = spark.createDataFrame([(1,), (2,)], "id long").selectExpr(
+        "id", "CASE id WHEN 1 THEN timestamp'2024-01-01 03:00:00' "
+        "ELSE timestamp'2024-01-01 09:00:00' END AS ts")
+    body = {"field": "ts", "calendar_interval": "day"}
+    got = es_aggregate(df, {"b": {"date_histogram": body}}).collect()
+    assert [(r["b"], r["doc_count"]) for r in got] == [("2024-01-01", 2)]
+    for extra in ({"offset": "+6h"}, {"time_zone": "-05:00"},
+                  {"format": "yyyy"}, {"bogus": 1}):
+        with pytest.raises(ValueError,
+                           match="unsupported date_histogram parameters"):
+            es_aggregate(df, {"b": {"date_histogram": {**body, **extra}}})
+    # a composite source's own keys are not date_histogram parameters
+    comp = {"composite": {"sources": [{"d": {"date_histogram": {
+        **body, "order": "desc", "missing_bucket": True}}}]}}
+    assert es_aggregate(df, {"c": comp}).count() == 1
+
+
 def test_min_doc_count_filters_buckets(spark, sales):
     got = {
         r["by_region"]

@@ -1,12 +1,14 @@
 """Static import-graph guards, read from the source with ``ast`` (no imports
 run): the query-language modules import each other at module top, never
 inside a function; the package's import-time graph has no cycle, so a
-cycle can neither hide behind a lazy import nor break a fresh import; and
-every module has a caller outside the tests."""
+cycle can neither hide behind a lazy import nor break a fresh import;
+every module has a caller outside the tests; and every public function
+has one too, or a MIGRATION.md row."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 PKG = "tweets_elastic_spark"
@@ -47,6 +49,16 @@ def _import_time(node: ast.AST):
         if isinstance(child, (ast.Import, ast.ImportFrom)):
             yield child
         yield from _import_time(child)
+
+
+def _caller_files() -> list[Path]:
+    """The package and the non-test code in CALLERS."""
+    files = sorted(ROOT.rglob("*.py"))
+    for caller in map(REPO.joinpath, CALLERS):
+        for path in sorted(caller.rglob("*.py")) if caller.is_dir() else [caller]:
+            if "tests" not in path.relative_to(REPO).parts:
+                files.append(path)
+    return files
 
 
 def test_plans_have_no_in_function_package_imports():
@@ -93,13 +105,9 @@ def test_package_import_graph_has_no_cycle():
 def test_every_module_has_a_caller_outside_tests():
     """Each module is imported by package code, the benchmarks, the scripts
     or the driver entry point, not by tests alone."""
-    sources = {path: _module_name(path) for path in ROOT.rglob("*.py")}
-    for caller in map(REPO.joinpath, CALLERS):
-        for path in sorted(caller.rglob("*.py")) if caller.is_dir() else [caller]:
-            if "tests" not in path.relative_to(REPO).parts:
-                sources[path] = None
     imported = set()
-    for path, own in sources.items():
+    for path in _caller_files():
+        own = _module_name(path) if path.is_relative_to(ROOT) else None
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             for dotted in _imported(node):
                 # importing a submodule imports its parent packages too
@@ -108,3 +116,60 @@ def test_every_module_has_a_caller_outside_tests():
                         imported.add(dotted)
                     dotted = dotted.rpartition(".")[0]
     assert sorted(set(_modules()) - imported - TEST_ONLY - {PKG}) == []
+
+
+def _named(tree: ast.AST) -> set[str]:
+    """Every name a module uses: Name and Attribute nodes, import aliases
+    and string constants (``getattr`` targets, dispatch tables)."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name.rpartition(".")[2])
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            out.add(node.value)
+    return out
+
+
+def _migration_code_names() -> set[str]:
+    """Identifiers in MIGRATION.md's code: its fenced blocks and its
+    backtick spans. The fences go first, so that a fenced block's own
+    backticks do not shift the pairing of the spans after it."""
+    text = (REPO / "MIGRATION.md").read_text()
+    fences = re.findall(r"^```.*?^```", text, flags=re.M | re.S)
+    prose = re.sub(r"^```.*?^```", "", text, flags=re.M | re.S)
+    code = fences + re.findall(r"`([^`]+)`", prose)
+    return {w for c in code for w in re.findall(r"[A-Za-z_]\w*", c)}
+
+
+def _is_query(fn: ast.FunctionDef) -> bool:
+    for deco in fn.decorator_list:
+        target = deco.func if isinstance(deco, ast.Call) else deco
+        if getattr(target, "id", getattr(target, "attr", None)) in (
+                "register", "bench_variant"):
+            return True
+    return False
+
+
+def test_every_public_function_has_a_caller_or_a_migration_row():
+    """A top-level public function is named by non-test code, or MIGRATION.md
+    names it as the counterpart of an ES endpoint or a reference artifact.
+    MIGRATION.md is the one list of public API that only users call."""
+    named = set().union(*(_named(ast.parse(p.read_text(), str(p)))
+                          for p in _caller_files()))
+    assert {"search", "load_table"} <= named  # the walk sees calls
+    listed = _migration_code_names()
+    assert "index_increment" in listed  # a row after §2's fenced block
+    named |= listed
+    unnamed = []
+    for name, tree in _modules().items():
+        if name in TEST_ONLY:
+            continue
+        unnamed += [f"{name}.{fn.name}" for fn in tree.body
+                    if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not fn.name.startswith("_") and not _is_query(fn)
+                    and fn.name not in named]
+    assert unnamed == []

@@ -224,30 +224,92 @@ def test_lossless_guards():
 
 
 # ---------------------------------------------------------------------------
-# 12-bit extended sequential process (SOF1, r12)
+# 12-bit extended sequential process (SOF1)
 # ---------------------------------------------------------------------------
+# The package decodes 12-bit streams but writes none, so the tests build
+# their input here: the 8-bit block pipeline with a 2048 level shift and
+# FLAT canonical Huffman tables whose magnitude categories reach 15 (DC) /
+# 14 (AC) — valid per T.81 C.2 with the all-ones code unused, simple over
+# optimal. Gray or RGB, 4:4:4 only.
+
+_DC12 = ([0, 0, 0, 0, 16] + [0] * 11, list(range(16)))
+_AC12_VALS = [0x00, 0xF0] + [
+    (run << 4) | size for run in range(16) for size in range(1, 15)
+]
+_AC12 = ([0] * 8 + [len(_AC12_VALS)] + [0] * 7, _AC12_VALS)  # all length 9
+
+
+def _encode_jpeg_12bit(pixels: np.ndarray, quality: int = 90) -> bytes:
+    """(H, W) or (H, W, 3) uint16 samples in 0..4095 → 12-bit extended
+    sequential (SOF1) JFIF bytes with embedded tables. At quality=100 the
+    quant table is all-ones, so constant 8x8 blocks round-trip exactly."""
+    import struct
+
+    from tweets_elastic_spark.functions.jpeg import (
+        STD_LUMA_QT, ZIGZAG, _BitWriter, _encode_blocks, _huff_encode_table,
+        _pad_to, _scaled_qt,
+    )
+
+    h, w = pixels.shape[:2]
+    px = pixels.astype(np.float64)
+    if pixels.ndim == 2:
+        planes = [px]
+    else:
+        r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
+        planes = [
+            np.round(0.299 * r + 0.587 * g + 0.114 * b),
+            np.round(2048.0 - 0.168736 * r - 0.331264 * g + 0.5 * b),
+            np.round(2048.0 + 0.5 * r - 0.418688 * g - 0.081312 * b),
+        ]
+    lq = _scaled_qt(STD_LUMA_QT, quality)
+    padded = [_pad_to(p, 8, 8) for p in planes]
+    n = len(planes)
+    out = bytearray(b"\xFF\xD8")
+    out += b"\xFF\xDB" + struct.pack(">HB", 67, 0) \
+        + bytes(int(x) for x in lq.reshape(-1)[ZIGZAG])
+    out += b"\xFF\xC1" + struct.pack(">HBHHB", 8 + 3 * n, 12, h, w, n)
+    for cid in range(n):
+        out += struct.pack(">BBB", cid + 1, 0x11, 0)
+    for tc, (bits, vals) in ((0, _DC12), (1, _AC12)):
+        out += b"\xFF\xC4" + struct.pack(">HB", 19 + len(vals), tc << 4) \
+            + bytes(bits) + bytes(vals)
+    out += b"\xFF\xDA" + struct.pack(">HB", 6 + 2 * n, n)
+    for cid in range(n):
+        out += struct.pack(">BB", cid + 1, 0x00)
+    out += b"\x00\x3F\x00"
+    dc_enc, ac_enc = _huff_encode_table(*_DC12), _huff_encode_table(*_AC12)
+    wtr = _BitWriter()
+    preds = [0] * n
+    for y0 in range(0, padded[0].shape[0], 8):
+        for x0 in range(0, padded[0].shape[1], 8):
+            for ci, plane in enumerate(padded):
+                preds[ci] = _encode_blocks(
+                    wtr, plane[y0:y0 + 8, x0:x0 + 8], lq, dc_enc, ac_enc,
+                    preds[ci], mid=2048.0,
+                )
+    wtr.flush()
+    return bytes(out + wtr.out + b"\xFF\xD9")
+
 
 def test_12bit_constant_blocks_exact_and_bounded_error():
-    """12-bit DCT (formerly a loud refusal): constant 8x8 gray blocks at
+    """12-bit DCT: constant 8x8 gray blocks at
     quality=100 round-trip BIT-EXACTLY (DC-only, unit quant, 2048 level
     shift); smooth/noisy data stays within conforming-decoder rounding
     of the 0..4095 range; output dtype is uint16."""
-    from tweets_elastic_spark.functions.jpeg import encode_jpeg_12bit
-
     rng = np.random.RandomState(61)
     grays = rng.randint(0, 4096, (3, 4)).astype(np.uint16)
     img = np.repeat(np.repeat(grays, 8, 0), 8, 1)
-    dec = decode_jpeg(encode_jpeg_12bit(img, quality=100))
+    dec = decode_jpeg(_encode_jpeg_12bit(img, quality=100))
     assert dec.dtype == np.uint16
     assert np.array_equal(dec, np.stack([img] * 3, axis=2))
     noisy = rng.randint(0, 4096, (16, 16, 3)).astype(np.uint16)
-    dec2 = decode_jpeg(encode_jpeg_12bit(noisy, quality=100))
+    dec2 = decode_jpeg(_encode_jpeg_12bit(noisy, quality=100))
     assert np.abs(dec2.astype(int) - noisy.astype(int)).max() <= 3
     x = np.linspace(0, 2047, 32)
     smooth = (x[None, :] + x[:, None]).astype(np.uint16)
-    dec3 = decode_jpeg(encode_jpeg_12bit(smooth, quality=90))
+    dec3 = decode_jpeg(_encode_jpeg_12bit(smooth, quality=90))
     assert np.abs(dec3[:, :, 0].astype(int) - smooth.astype(int)).max() <= 8
-    assert jpeg_dimensions(encode_jpeg_12bit(smooth)) == (32, 32)
+    assert jpeg_dimensions(_encode_jpeg_12bit(smooth)) == (32, 32)
 
 
 def test_12bit_sixteen_bit_quant_tables_parse():
@@ -256,12 +318,10 @@ def test_12bit_sixteen_bit_quant_tables_parse():
     storage)."""
     import struct as _s
 
-    from tweets_elastic_spark.functions.jpeg import encode_jpeg_12bit
-
     rng = np.random.RandomState(62)
     img = np.repeat(np.repeat(
         rng.randint(0, 4096, (2, 2)), 8, 0), 8, 1).astype(np.uint16)
-    enc = encode_jpeg_12bit(img, quality=100)
+    enc = _encode_jpeg_12bit(img, quality=100)
     i = enc.find(b"\xFF\xDB")
     body = enc[i + 4:i + 4 + 65]          # pq/tq byte + 64 entries
     tq = body[0] & 0x0F
@@ -273,14 +333,8 @@ def test_12bit_sixteen_bit_quant_tables_parse():
 
 
 def test_12bit_guards():
-    from tweets_elastic_spark.functions.jpeg import encode_jpeg_12bit
-
-    with pytest.raises(ValueError, match="0..4095"):
-        encode_jpeg_12bit(np.full((8, 8), 5000, dtype=np.uint16))
-    with pytest.raises(ValueError, match="expects"):
-        encode_jpeg_12bit(np.zeros((8, 8, 4), dtype=np.uint16))
     # SOF0 stays 8-bit by spec: flip the 12-bit stream's SOF1 to SOF0
-    enc = bytearray(encode_jpeg_12bit(np.zeros((8, 8), dtype=np.uint16)))
+    enc = bytearray(_encode_jpeg_12bit(np.zeros((8, 8), dtype=np.uint16)))
     i = enc.find(b"\xFF\xC1")
     enc[i + 1] = 0xC0
     with pytest.raises(NotImplementedError, match="8-bit by spec"):

@@ -3,13 +3,9 @@ broadcast-plan guarantee behind the 100 TB story."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from tweets_elastic_spark.operators.lm import (
     bigram_ce_filter,
     doc_bigrams,
-    fit_bigram_lm,
-    score_bigram_ce,
 )
 
 
@@ -47,19 +43,6 @@ def test_short_docs_drop_out(spark):
         [(1, "single"), (2, ""), (3, "two tokens")], "doc_id long, text string"
     )
     assert {r["doc_id"] for r in bigram_ce_filter(df, 10.0).collect()} == {3}
-
-
-def test_unseen_bigram_gets_smoothed_mass(spark):
-    """Scoring a doc against an LM trained elsewhere: unseen history ->
-    P = alpha/(alpha*V) = 1/V under Laplace; CE = ln V exactly."""
-    import math
-
-    train = spark.createDataFrame([(1, "a b a b")], "doc_id long, text string")
-    test = spark.createDataFrame([(9, "x y")], "doc_id long, text string")
-    c12, c1, vocab = fit_bigram_lm(train)
-    v = vocab.head()["v"]  # = 2 (a, b)
-    got = score_bigram_ce(test, c12, c1, vocab).head()["bigram_ce"]
-    assert abs(got - math.log(v)) < 1e-12
 
 
 def test_scoring_joins_are_broadcast(spark):

@@ -157,12 +157,11 @@ def test_error_paths_are_loud():
         encode_png(img, filter_type=9)
 
 
-def test_spark_decode_resize_dhash(spark):
-    """PNG through the three mapInPandas seams: metadata decode, resize
-    (re-encoded as PNG, still lossless), and the dHash near-dup sketch
-    (magic-dispatched next to PPM/JPEG)."""
+def test_spark_decode_dhash(spark):
+    """PNG through two mapInPandas seams: metadata decode and the dHash
+    near-dup sketch (magic-dispatched next to PPM/JPEG)."""
     from tweets_elastic_spark.functions.multimodal import (
-        decode_assets, image_dhash, resize_images,
+        decode_assets, image_dhash,
     )
 
     imgs = [_rand_img(h=16, w=12, seed=s) for s in range(3)]
@@ -175,13 +174,6 @@ def test_spark_decode_resize_dhash(spark):
     )
     meta = {r["asset_id"]: r for r in decode_assets(df).collect()}
     assert meta[0]["width"] == 12 and meta[0]["height"] == 16
-
-    resized = {r["asset_id"]: r for r in resize_images(df, 6, 8).collect()}
-    # nearest-neighbor: output pixel (y, x) samples input ((y*16)//8, (x*12)//6)
-    out = decode_png(bytes(resized[1]["payload"]))
-    rows_idx = (np.arange(8) * 16) // 8
-    cols_idx = (np.arange(6) * 12) // 6
-    assert np.array_equal(out, imgs[1][rows_idx][:, cols_idx])
 
     from tweets_elastic_spark.functions.multimodal import dhash64
 

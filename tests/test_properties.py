@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.analyzers import char_ngrams, shingles
 from tweets_elastic_spark.functions.textstats import normalized_text
-from tweets_elastic_spark.operators.dedup import word_shingles
+from tweets_elastic_spark.operators.dedup import word_shingles_from_tokens
 
 # lowercase word tokens: what survives the tokenizers unchanged
 WORD = st.text(alphabet="abcdefghijklmnopqrstuvwxyz", min_size=1, max_size=8)
@@ -32,7 +32,8 @@ def test_word_shingles_structure(spark, words):
     """Every k-shingle has exactly k words; distinct; count ≤ n-k+1; short
     texts collapse to one whole-text shingle."""
     text = " ".join(words)
-    out = _eval(spark, word_shingles(F.lit(text), 3))
+    toks = F.array(*[F.lit(w) for w in words]).cast("array<string>")
+    out = _eval(spark, word_shingles_from_tokens(toks, 3))
     n = len(words)
     if n == 0:
         assert out == []

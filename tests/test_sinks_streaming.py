@@ -1,6 +1,5 @@
-"""Sink idempotence + quarantine (SURVEY §5.2 item 5), document
-serialization and update-in-place at the sink, and the event-time window
-functions in batch mode."""
+"""Sink idempotence + quarantine (SURVEY §5.2 item 5), update-in-place
+at the sink, and the event-time window functions in batch mode."""
 
 from __future__ import annotations
 
@@ -63,62 +62,6 @@ def test_sliding_and_session_windows_batch(spark):
     sess = session_counts(events, "30 minutes")
     # sessions partition all events
     assert sess.agg(F.sum("n_events").alias("s")).head()["s"] == events.count()
-
-
-# -- P6: document JSON serialization at the sink -----------------------------
-
-def test_document_json_byte_stable_golden(spark):
-    """The golden document's JSON wire format is byte-stable run-to-run
-    (P6: to_json(a.*) queries.sql:20 / bulk bodies main.py:140,146)."""
-    from tweets_elastic_spark.operators.denormalize import build_tweet_documents
-    from tweets_elastic_spark.sinks import document_json
-    from tweets_elastic_spark.sources.fixtures import make_tweets_tables
-
-    tables = make_tweets_tables(spark, n_conversations=5)
-    doc = build_tweet_documents(tables)
-    j1 = {r["id"]: r["json"] for r in document_json(doc).collect()}
-    j2 = {r["id"]: r["json"] for r in document_json(doc).collect()}
-    assert j1 == j2  # byte-stable
-
-    import json as jsonlib
-    golden = jsonlib.loads(j1[1])
-    # id travels in the header (op pair), not the body — like the bulk loop
-    assert "id" not in golden
-    assert golden["author"]["username"] == "WilburSoot"
-    assert golden["created_at"] == "2022-02-26T23:29:55Z"
-    assert [h["tag"] for h in golden["conversation_hashtags"]] == ["Peace", "Ukraine"]
-    # P4: childless conversation serializes [] (not null/missing)
-    bare = jsonlib.loads(j1[2])
-    assert bare["links"] == [] and bare["annotations"] == []
-
-
-def test_write_documents_json_lines(spark, tmp_path):
-    from tweets_elastic_spark.sinks import write_documents_json
-
-    df = load_table(spark, SF, "orders").limit(50)
-    path = str(tmp_path / "docs_json")
-    write_documents_json(df, path, id_col="o_orderkey")
-    back = spark.read.json(path)
-    assert back.count() == 50
-    assert set(back.columns) == {"o_orderkey", "json"}
-
-
-# -- P5: string-timestamp ingest ---------------------------------------------
-
-def test_parse_es_timestamp_offset_preserving(spark):
-    """yyyy-MM-dd'T'HH:mm:ssZZZZZ parse (mapping.json:16-19) — offsets
-    normalize to the same instant under the pinned-UTC session."""
-    from tweets_elastic_spark.schemas import parse_es_timestamp
-
-    df = spark.createDataFrame(
-        [("2022-02-23T09:51:47+00:00",), ("2022-02-23T10:51:47+01:00",),
-         ("2022-02-23T09:51:47Z",), (None,)],
-        "raw string",
-    ).select(parse_es_timestamp(F.col("raw")).alias("ts"))
-    out = [r["ts"] for r in df.collect()]
-    assert out[0] == out[1] == out[2]  # same instant, offset-normalized
-    assert out[0].isoformat().startswith("2022-02-23T09:51:47")
-    assert out[3] is None
 
 
 # -- S11: batch update-in-place analogue ---------------------------------------
@@ -243,57 +186,6 @@ def test_increment_counters_sums_duplicate_delta_ids(spark, tmp_path):
     rows = spark.read.parquet(path).collect()
     assert len(rows) == 2  # one row per doc, no join fan-out
     assert {r["id"]: r["retweet_count"] for r in rows} == {1: 18, 2: 1}
-
-
-def test_compact_sink_latest_increment_wins(spark, tmp_path):
-    """compact_sink keeps the row from the highest ingest_wm per id,
-    collapses the sink to one partition, and is idempotent."""
-    from tweets_elastic_spark.sinks import compact_sink
-
-    sink = str(tmp_path / "sink")
-    spark.createDataFrame(
-        [(1, "v0"), (2, "v0"), (3, "v0")], "id long, payload string"
-    ).write.parquet(sink + "/ingest_wm=0")
-    spark.createDataFrame(
-        [(2, "v10"), (4, "v10")], "id long, payload string"
-    ).write.parquet(sink + "/ingest_wm=10")
-    spark.createDataFrame(
-        [(3, "v5")], "id long, payload string"
-    ).write.parquet(sink + "/ingest_wm=5")
-
-    n = compact_sink(spark, sink, id_col="id")
-    assert n == 4
-    rows = {r["id"]: r["payload"] for r in
-            spark.read.parquet(sink).drop("ingest_wm").collect()}
-    assert rows == {1: "v0", 2: "v10", 3: "v5", 4: "v10"}
-    wms = {r["ingest_wm"] for r in spark.read.parquet(sink).collect()}
-    assert wms == {-1}
-    # idempotent: compacting a compacted sink changes nothing
-    assert compact_sink(spark, sink, id_col="id") == 4
-    rows2 = {r["id"]: r["payload"] for r in
-             spark.read.parquet(sink).drop("ingest_wm").collect()}
-    assert rows2 == rows
-
-
-def test_json_string_ingest_parses_es_timestamps(spark, tmp_path):
-    """P5 at its real call site: a JSON-lines export carrying the
-    reference's ...ssZZZZZ timestamps round-trips through load_table_json
-    into exactly the typed rows the parquet path would produce."""
-    from tweets_elastic_spark.schemas import ES_TIMESTAMP_FORMAT, TWEETS_TABLES
-    from tweets_elastic_spark.sources.catalog import load_table_json
-    from tweets_elastic_spark.sources.fixtures import make_tweets_tables
-
-    conv = make_tweets_tables(spark, n_conversations=20)["conversations"]
-    path = str(tmp_path / "conversations.jsonl")
-    conv.write.option("timestampFormat", ES_TIMESTAMP_FORMAT).json(path)
-
-    back = load_table_json(spark, path, "conversations")
-    # nullability is reader-dependent; names and TYPES must match exactly
-    want = [(f.name, f.dataType) for f in TWEETS_TABLES["conversations"].fields]
-    assert [(f.name, f.dataType) for f in back.schema.fields] == want
-    a = sorted(map(tuple, conv.collect()))
-    b = sorted(map(tuple, back.collect()))
-    assert a == b
 
 
 def test_partitioned_sink_prunes_on_read(spark, tmp_path):

@@ -9,10 +9,18 @@ NULL nested hashtags for a parent without hashtags (queries.sql:61-66).
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from tweets_elastic_spark import schemas
 from tweets_elastic_spark.operators.denormalize import build_tweet_documents
 from tweets_elastic_spark.sources.fixtures import make_tweets_tables
+
+
+def _doc_json(df):
+    """(id, json): every other column serialized, the byte-level form the
+    ETL equality tests compare."""
+    body = F.struct(*[c for c in df.columns if c != "id"])
+    return df.select("id", F.to_json(body).alias("json"))
 
 
 @pytest.fixture(scope="module")
@@ -167,7 +175,6 @@ def test_incremental_etl_equals_full_build(spark, tmp_path):
     point OUTSIDE their own page (J6-J8 lookups run over the full tables,
     so cross-page parent hashtags must resolve, not NULL out)."""
     from tweets_elastic_spark.pipeline import etl_full, etl_increment
-    from tweets_elastic_spark.sinks import document_json
     from tweets_elastic_spark.sources.incremental import WatermarkStore
 
     tables = make_tweets_tables(spark, n_conversations=60)
@@ -203,8 +210,8 @@ def test_incremental_etl_equals_full_build(spark, tmp_path):
     # equality of the document sets, byte-level via the JSON wire format
     full_docs = spark.read.parquet(full_sink).drop("ingest_wm")
     inc_docs = spark.read.parquet(inc_sink).drop("ingest_wm")
-    a = {r["id"]: r["json"] for r in document_json(full_docs).collect()}
-    b = {r["id"]: r["json"] for r in document_json(inc_docs).collect()}
+    a = {r["id"]: r["json"] for r in _doc_json(full_docs).collect()}
+    b = {r["id"]: r["json"] for r in _doc_json(inc_docs).collect()}
     assert a == b
 
 
@@ -212,7 +219,6 @@ def test_incremental_etl_pages_union_to_full(spark, tmp_path):
     """True paging: source grows in two arrivals; increments resolve parent
     references against the full current source and union to the full build."""
     from tweets_elastic_spark.pipeline import etl_full, etl_increment
-    from tweets_elastic_spark.sinks import document_json
     from tweets_elastic_spark.sources.incremental import WatermarkStore
     import shutil as sh
 
@@ -242,11 +248,11 @@ def test_incremental_etl_pages_union_to_full(spark, tmp_path):
     etl_full(spark, str(src), full_sink)
     a = {
         r["id"]: r["json"]
-        for r in document_json(spark.read.parquet(full_sink).drop("ingest_wm")).collect()
+        for r in _doc_json(spark.read.parquet(full_sink).drop("ingest_wm")).collect()
     }
     b = {
         r["id"]: r["json"]
-        for r in document_json(spark.read.parquet(inc_sink).drop("ingest_wm")).collect()
+        for r in _doc_json(spark.read.parquet(inc_sink).drop("ingest_wm")).collect()
     }
     # batch-1 docs whose parent arrived in batch 2 legitimately differ
     # (the reference would show the same: its pages see the DB as of the
@@ -269,7 +275,6 @@ def test_incremental_etl_replay_does_not_duplicate(spark, tmp_path):
     sink keeps the same rows and no id twice — effectively-once without a
     transactional sink."""
     from tweets_elastic_spark.pipeline import etl_increment
-    from tweets_elastic_spark.sinks import document_json
     from tweets_elastic_spark.sources.incremental import WatermarkStore
 
     tables = make_tweets_tables(spark, n_conversations=30)
@@ -282,7 +287,7 @@ def test_incremental_etl_replay_does_not_duplicate(spark, tmp_path):
 
     def sink_rows():
         docs = spark.read.parquet(sink)
-        return sorted((r["id"], r["json"]) for r in document_json(docs).collect())
+        return sorted((r["id"], r["json"]) for r in _doc_json(docs).collect())
 
     assert etl_increment(spark, str(src), sink, store, page_limit=20) == 20
     first = sink_rows()
@@ -293,66 +298,3 @@ def test_incremental_etl_replay_does_not_duplicate(spark, tmp_path):
     assert again == first
     ids = [i for i, _ in again]
     assert len(ids) == len(set(ids)) == 20
-
-
-def test_backfill_then_compact_equals_full_build(spark, tmp_path):
-    """The cross-increment overwrite-by-id story end-to-end: conversations
-    arrive in two batches, then the watermark is REWOUND (a backfill — the
-    reference would re-run its loop from an earlier last_id and let ES
-    overwrite by _id) so ids 26..60 are re-documented into a third
-    partition. compact_sink keeps the latest version per id; the result is
-    byte-identical (JSON wire format) to a one-shot full build — including
-    batch-1 documents whose parents arrived late and are only correct in
-    the re-documented version."""
-    import shutil as sh
-
-    from tweets_elastic_spark.pipeline import etl_full, etl_increment
-    from tweets_elastic_spark.sinks import compact_sink, document_json
-    from tweets_elastic_spark.sources.incremental import WatermarkStore
-
-    tables = make_tweets_tables(spark, n_conversations=60)
-    src = tmp_path / "src"
-    for name, df in tables.items():
-        if name == "conversations":
-            df.filter("id <= 30").write.parquet(str(src / f"{name}.parquet"))
-        else:
-            df.write.parquet(str(src / f"{name}.parquet"))
-
-    inc_sink = str(tmp_path / "inc")
-    store = WatermarkStore(str(tmp_path / "wm.json"))
-    store.set("conversations.id", 0)
-    assert etl_increment(spark, str(src), inc_sink, store) == 30
-
-    # arrival 2 + normal increment
-    sh.rmtree(src / "conversations.parquet")
-    tables["conversations"].write.parquet(str(src / "conversations.parquet"))
-    assert etl_increment(spark, str(src), inc_sink, store) == 30
-
-    # backfill: rewind the watermark to 0 (re-document EVERYTHING — only a
-    # full rewind can refresh batch-1 docs whose parents arrived late; a
-    # partial rewind deliberately leaves docs below the rewind point
-    # untouched). The rewound run overwrites its deterministic ingest_wm=0
-    # directory; ids 31..60 still duplicate against the ingest_wm=30 batch.
-    store.set("conversations.id", 0)
-    assert etl_increment(spark, str(src), inc_sink, store) == 60
-    pre = spark.read.parquet(inc_sink)
-    assert pre.count() == 90 and pre.select("id").distinct().count() == 60
-
-    n = compact_sink(spark, inc_sink, id_col="id")
-    assert n == 60
-
-    full_sink = str(tmp_path / "full")
-    etl_full(spark, str(src), full_sink)
-    a = {
-        r["id"]: r["json"]
-        for r in document_json(
-            spark.read.parquet(full_sink).drop("ingest_wm")
-        ).collect()
-    }
-    b = {
-        r["id"]: r["json"]
-        for r in document_json(
-            spark.read.parquet(inc_sink).drop("ingest_wm")
-        ).collect()
-    }
-    assert a == b

@@ -1,17 +1,10 @@
-"""Hashed TF-IDF vectorizer: dense/sparse equivalence, normalization,
-and the end-to-end raw-text -> ANN composition."""
+"""Hashed TF-IDF vectorizer (operators/vectorize.py)."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
-from pyspark.sql import functions as F
 
-from tweets_elastic_spark.operators.vectorize import (
-    hashed_tfidf_sparse,
-    hashed_tfidf_vectors,
-)
+from tweets_elastic_spark.operators.vectorize import hashed_tfidf_sparse
 from tweets_elastic_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -22,54 +15,6 @@ def docs(spark):
     return load_table(spark, SF, "documents").limit(120)
 
 
-def test_dense_equals_sparse(spark, docs):
-    dim = 64
-    sparse = {
-        (r["doc_id"], r["fid"]): r["w"]
-        for r in hashed_tfidf_sparse(docs, dim=dim).collect()
-    }
-    dense = hashed_tfidf_vectors(
-        docs, dim=dim, l2_normalize=False
-    ).collect()
-    assert dense
-    for r in dense:
-        for fid, v in enumerate(r["vector"]):
-            assert v == sparse.get((r["doc_id"], fid), 0.0)
-
-
-def test_l2_normalized(spark, docs):
-    for r in hashed_tfidf_vectors(docs, dim=64).limit(20).collect():
-        n = math.sqrt(sum(x * x for x in r["vector"]))
-        assert n == pytest.approx(1.0, abs=1e-9)
-
-
-def test_text_to_ann_composition(spark, docs):
-    """Raw text -> hashed tf-idf -> cosine top-k: a document's nearest
-    neighbor under its own vector is itself (score 1.0)."""
-    from tweets_elastic_spark.operators.similarity import cosine_topk
-
-    vecs = hashed_tfidf_vectors(docs, dim=128)
-    row = vecs.filter(F.col("doc_id") == vecs.agg(
-        F.min("doc_id")).head()[0]).head()
-    top = cosine_topk(
-        vecs, [float(x) for x in row["vector"]], k=3,
-        id_col="doc_id", vec_col="vector",
-    ).collect()
-    assert top[0]["doc_id"] == row["doc_id"]
-    assert top[0]["score"] == pytest.approx(1.0, abs=1e-6)
-
-
 def test_dim_guard(spark, docs):
     with pytest.raises(ValueError, match="dim"):
         hashed_tfidf_sparse(docs, dim=0)
-
-
-def test_zero_token_docs_become_zero_vectors(spark):
-    df = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "!!! ???"), (3, "")],
-        "doc_id long, text string")
-    out = {r["doc_id"]: r["vector"]
-           for r in hashed_tfidf_vectors(df, dim=16).collect()}
-    assert set(out) == {1, 2, 3}  # no doc silently dropped
-    assert all(v == 0.0 for v in out[2]) and all(v == 0.0 for v in out[3])
-    assert any(v != 0.0 for v in out[1])

@@ -12,8 +12,7 @@ Layout:
     session.py            SparkSession factory with scale-aware defaults
     schemas.py            declared StructTypes (strict schemas, SURVEY §1.2)
     sources/              table catalog, fixture synthesis, keyset
-                          watermark, JSONL interchange with quarantine,
-                          WARC records
+                          watermark, WARC records
     operators/            denormalize, dedup, similarity/ANN, curation,
                           DSIR/BPE/sampling, percolate, vectorize
     functions/            analyzers, text stats, hashing, vector math,

@@ -234,31 +234,6 @@ def shingles(toks: Column) -> Column:
     return F.concat(toks, bigrams)
 
 
-def trim_tokens(toks: Column) -> Column:
-    """ES ``trim`` token filter: strip leading/trailing whitespace from
-    each token (tokens that become empty stay — ES's behavior; chain
-    with a length/stop filter to drop them). The lambda is single-arg on
-    purpose: HOF callables are arity-dispatched, and a bare ``F.trim``
-    (which has an optional second parameter) would receive the element
-    INDEX as its trim-character set."""
-    return F.transform(toks, lambda t: F.trim(t))
-
-
-def truncate_tokens(toks: Column, length: int = 10) -> Column:
-    """ES ``truncate`` token filter: cut every token to ``length``
-    characters (default 10, ES's default)."""
-    if length < 1:
-        raise ValueError("truncate length must be >= 1")
-    return F.transform(toks, lambda t: F.substring(t, 1, length))
-
-
-def unique_tokens(toks: Column) -> Column:
-    """ES ``unique`` token filter: drop duplicate tokens, keeping each
-    first occurrence in stream order (``only_on_same_position`` is not
-    supported — positions aren't tracked here)."""
-    return F.array_distinct(toks)
-
-
 def fingerprint_filter(toks: Column) -> Column:
     """ES ``fingerprint`` token filter: sort, dedupe and concatenate the
     stream into ONE output token (the OpenRefine-style clustering

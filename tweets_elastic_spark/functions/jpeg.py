@@ -1,21 +1,21 @@
 """JFIF (ITU T.81) codec — pure stdlib + NumPy, no PIL/libjpeg.
 
-Closes the r7 verdict's loudest stub (functions/multimodal.py routed
-``image/jpeg`` to NotImplementedError): real multimodal corpora are JPEG,
-and the dHash/banding dedup machinery downstream was ready. Scope is the
+Real multimodal corpora are JPEG, so ``image/jpeg`` payloads decode
+here for the dHash/banding dedup machinery downstream. Scope is the
 baseline sequential process — SOF0, 8-bit samples, Huffman entropy coding,
 1 or 3 components, any sampling factors (4:4:4 / 4:2:2 / 4:2:0), restart
-intervals — plus, since r11, the PROGRESSIVE process (SOF2): multi-scan
+intervals — plus the PROGRESSIVE process (SOF2): multi-scan
 spectral selection and successive approximation per T.81 G.2 (DC
 first/refinement, AC band scans with EOB runs, AC refinement with
 correction bits), decoded through the same coefficient store the
-baseline path fills in one scan — and, since r12, the LOSSLESS process
+baseline path fills in one scan — the LOSSLESS process
 (SOF3, Annex H): predictive coding with the seven spec predictors,
 2..16-bit precision, point transform, restart markers, decode ==
-encoder input bit-exactly — and the 12-BIT extended sequential process
-(SOF1): 2048 level shift, 0..4095 clamp, 16-bit quant tables (DQT
-pq=1), extended magnitude categories, uint16 output. Arithmetic coding
-and hierarchical mode raise ``NotImplementedError`` loudly.
+encoder input bit-exactly — and, decode only, the 12-BIT extended
+sequential process (SOF1): 2048 level shift, 0..4095 clamp, 16-bit quant
+tables (DQT pq=1), extended magnitude categories, uint16 output.
+Arithmetic coding and hierarchical mode raise ``NotImplementedError``
+loudly.
 
 The encoders exist so the decoder is testable without external
 libraries: round-trip tests (encode → decode ≈ original within
@@ -268,7 +268,7 @@ def _magnitude(v: int) -> tuple[int, int]:
 def jpeg_dimensions(payload: bytes) -> tuple[int, int]:
     """(width, height) from the SOF header — no entropy decode."""
     for marker, seg, _ in _segments(payload):
-        if marker in (0xFFC0, 0xFFC1, 0xFFC2, 0xFFC3):  # SOF3 since r12
+        if marker in (0xFFC0, 0xFFC1, 0xFFC2, 0xFFC3):  # SOF0-SOF3
             _, h, w = struct.unpack(">BHH", seg[:5])
             return w, h
         if marker == 0xFFC3 or 0xFFC5 <= marker <= 0xFFCF and \
@@ -401,7 +401,7 @@ def _decode_ac_refine(reader, ctx, coef, act, ss, se, al):
 
 
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Baseline (SOF0/1) or PROGRESSIVE (SOF2, r11) JFIF → (H, W, 3)
+    """Baseline (SOF0/1) or PROGRESSIVE (SOF2) JFIF → (H, W, 3)
     uint8 RGB (grayscale replicates). All scans accumulate into one
     coefficient store (zigzag order, per component block grid); the
     dequantize + IDCT + upsample + color-convert tail runs once at EOI —
@@ -433,7 +433,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         seg = payload[i + 2:i + ln]
         after = i + ln
         i = after
-        if marker == 0xFFDB:  # DQT (pq=1 = 16-bit entries, r12)
+        if marker == 0xFFDB:  # DQT (pq=1 = 16-bit entries)
             j = 0
             while j < len(seg):
                 pq, tq = seg[j] >> 4, seg[j] & 0x0F
@@ -463,7 +463,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 cid, hv, tq = seg[6 + c * 3:9 + c * 3]
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
                               "tq": tq})
-        elif marker == 0xFFC3:  # lossless (r12): own predictive path
+        elif marker == 0xFFC3:  # lossless: own predictive path
             return _decode_lossless(payload)
         elif marker in (0xFFC5, 0xFFC6, 0xFFC7, 0xFFC9, 0xFFCA,
                         0xFFCB, 0xFFCD, 0xFFCE, 0xFFCF):
@@ -632,7 +632,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
 def _encode_blocks(writer, plane, qt, dc_enc, ac_enc, pred, mid=128.0):
     """FDCT + quantize + Huffman-encode every 8×8 block of a padded plane
     row-major; returns the updated DC predictor. ``mid`` is the level
-    shift (128 for 8-bit, 2048 for the r12 12-bit extended process)."""
+    shift (128 for 8-bit, 2048 for the 12-bit extended process)."""
     hh, ww = plane.shape
     for y0 in range(0, hh, 8):
         for x0 in range(0, ww, 8):
@@ -778,7 +778,7 @@ def _box2(p: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Progressive encoder (r11): spectral selection + successive approximation,
+# Progressive encoder: spectral selection + successive approximation,
 # the cjpeg-shaped scan script. Exists (like encode_png's filter knob) so
 # round-trip tests drive every progressive DECODE path through real byte
 # streams — DC first/refine, AC first with EOB runs, AC refinement with
@@ -1051,7 +1051,7 @@ def encode_jpeg_progressive(
 
 
 # ---------------------------------------------------------------------------
-# Lossless process (SOF3, T.81 Annex H) — r12, formerly a loud refusal
+# Lossless process (SOF3, T.81 Annex H)
 # ---------------------------------------------------------------------------
 # Predictive coding, no DCT and no quantization: each sample's
 # difference from a neighborhood prediction is Huffman-coded with a
@@ -1290,87 +1290,6 @@ def encode_jpeg_lossless(
                     if size:
                         wtr.write(mag, size)
             unit += 1
-    wtr.flush()
-    out += wtr.out
-    out += b"\xFF\xD9"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# 12-bit extended sequential process (SOF1, r12 — formerly a loud refusal)
-# ---------------------------------------------------------------------------
-# T.81's extended DCT process at 12-bit precision: the same block
-# pipeline with a 2048 level shift, 0..4095 clamp, and Huffman tables
-# whose magnitude categories reach 15 (DC) / 14 (AC). The embedded
-# tables are FLAT canonical codes (all DC symbols at one length, all AC
-# symbols at another) — valid per C.2 with the all-ones code unused,
-# deliberately simple over optimal since these streams exist to pin the
-# decoder. Gray or RGB, 4:4:4 only.
-
-_DC12_BITS = [0, 0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_DC12_VALS = list(range(16))
-_AC12_VALS = [0x00, 0xF0] + [
-    (run << 4) | size for run in range(16) for size in range(1, 15)
-]
-_AC12_BITS = [0] * 16
-_AC12_BITS[8] = len(_AC12_VALS)  # 226 codes at length 9 (Kraft 226/512)
-_AC12_BITS_POS = 8  # index 8 = length 9
-
-
-def encode_jpeg_12bit(pixels: np.ndarray, quality: int = 90) -> bytes:
-    """(H, W) or (H, W, 3) uint16 samples in 0..4095 → 12-bit extended
-    sequential (SOF1) JFIF bytes, 4:4:4. Tables are embedded; at
-    quality=100 the quant table is all-ones, so constant 8x8 blocks
-    round-trip BIT-EXACTLY (the oracle-row fixture contract, same as
-    8-bit)."""
-    gray = pixels.ndim == 2
-    if not gray and (pixels.ndim != 3 or pixels.shape[2] != 3):
-        raise ValueError("encode_jpeg_12bit expects (H, W) or (H, W, 3)")
-    if int(pixels.max(initial=0)) > 4095:
-        raise ValueError("12-bit samples must be in 0..4095")
-    h, w = pixels.shape[:2]
-    px = pixels.astype(np.float64)
-    if gray:
-        planes = [px]
-    else:
-        r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-        planes = [
-            np.round(0.299 * r + 0.587 * g + 0.114 * b),
-            np.round(2048.0 - 0.168736 * r - 0.331264 * g + 0.5 * b),
-            np.round(2048.0 + 0.5 * r - 0.418688 * g - 0.081312 * b),
-        ]
-    lq = _scaled_qt(STD_LUMA_QT, quality)
-    padded = [_pad_to(p, 8, 8) for p in planes]
-
-    out = bytearray(b"\xFF\xD8")
-    out += b"\xFF\xDB" + struct.pack(">HB", 67, 0) \
-        + bytes(int(x) for x in lq.reshape(-1)[ZIGZAG])
-    n = len(planes)
-    out += b"\xFF\xC1" + struct.pack(">HBHHB", 8 + 3 * n, 12, h, w, n)
-    for cid in range(n):
-        out += struct.pack(">BBB", cid + 1, 0x11, 0)
-    for tc, (bits, vals) in ((0, (_DC12_BITS, _DC12_VALS)),
-                             (1, (_AC12_BITS, _AC12_VALS))):
-        out += b"\xFF\xC4" + struct.pack(">HB", 19 + len(vals), tc << 4) \
-            + bytes(bits) + bytes(vals)
-    out += b"\xFF\xDA" + struct.pack(">HB", 6 + 2 * n, n)
-    for cid in range(n):
-        out += struct.pack(">BB", cid + 1, 0x00)
-    out += b"\x00\x3F\x00"
-
-    dc_enc = _huff_encode_table(_DC12_BITS, _DC12_VALS)
-    ac_enc = _huff_encode_table(_AC12_BITS, _AC12_VALS)
-    wtr = _BitWriter()
-    preds = [0] * n
-    mcux, mcuy = padded[0].shape[1] // 8, padded[0].shape[0] // 8
-    for my in range(mcuy):
-        for mx in range(mcux):
-            y0, x0 = my * 8, mx * 8
-            for ci, plane in enumerate(padded):
-                preds[ci] = _encode_blocks(
-                    wtr, plane[y0:y0 + 8, x0:x0 + 8], lq, dc_enc, ac_enc,
-                    preds[ci], mid=2048.0,
-                )
     wtr.flush()
     out += wtr.out
     out += b"\xFF\xD9"

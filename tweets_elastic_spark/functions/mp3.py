@@ -4,13 +4,11 @@ A training-data pipeline filtering scraped audio needs duration /
 sample-rate / bitrate metadata per asset; all of it lives in the 4-byte
 frame headers (ISO/IEC 11172-3 §2.4.1), no codec required. This module
 walks the frame sequence (skipping ID3v2/ID3v1 tags), validates sync,
-and aggregates the stream's metadata. Decoding PCM SAMPLES genuinely
-needs a DCT synthesis filterbank (ffmpeg/libmad) and stays a loud
-``NotImplementedError`` in functions/multimodal.py.
+and aggregates the stream's metadata. Decoding PCM SAMPLES needs a DCT
+synthesis filterbank and is out of scope.
 
-Scope: MPEG-1/2/2.5 Layers I, II and III (r12 — Layer I/II were a
-loud refusal until their frame-size formulas landed; scraped "MP3"
-archives carry the occasional Layer II stream). Reserved
+Scope: MPEG-1/2/2.5 Layers I, II and III (scraped "MP3" archives carry
+the occasional Layer II stream). Reserved
 version/layer/bitrate/samplerate codes raise loudly — a mis-synced
 walk silently producing garbage durations is the failure mode this
 module exists to prevent.
@@ -156,7 +154,7 @@ def build_mp3(
 ) -> bytes:
     """A valid constant-bitrate MPEG-1 frame sequence with zeroed
     payloads — the deterministic fixture encoder for the parser.
-    ``layer`` selects I/II/III (r12); bitrate must be valid for it."""
+    ``layer`` selects I/II/III; bitrate must be valid for it."""
     table = {1: _BITRATE_V1_L1, 2: _BITRATE_V1_L2, 3: _BITRATE_V1}[layer]
     bi = table.index(bitrate_kbps)
     ri = _RATE_V1.index(sample_rate)

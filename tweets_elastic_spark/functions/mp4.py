@@ -8,11 +8,11 @@ hashing, dedup) can address real frames WITHOUT a codec. This module
 provides exactly that: box walking, ``moov`` metadata, and
 ``stbl``-derived (offset, size) sample ranges. FRAGMENTED files (fMP4 —
 ``moof``/``traf``/``trun``, the DASH/HLS/CMAF layout most scraped
-streaming video actually uses) are supported since r11: sample ranges
+streaming video actually uses) are supported: sample ranges
 and durations come from each fragment's ``trun`` (with ``tfhd``/``trex``
 defaults), bases resolved per the spec's default-base-is-moof rules.
-Decoding the frames' PIXELS (H.264 etc.) genuinely needs ffmpeg and goes
-through the gated seam in functions/multimodal.py.
+Decoding the frames' PIXELS (H.264 etc.) needs a video codec and is out
+of scope.
 
 ``build_mp4`` / ``build_fmp4`` assemble minimal valid one-video-track
 files from raw "frame" blobs — the test-fixture encoder siblings (same
@@ -262,7 +262,7 @@ def _parse_fragments(
 
 def mp4_metadata(payload: bytes) -> Mp4Metadata:
     """Parse ``ftyp`` + ``moov`` into :class:`Mp4Metadata`. Fragmented
-    files (r11): per-track sample counts and durations come from the
+    files: per-track sample counts and durations come from the
     ``moof`` fragments (``mvhd``/``mdhd`` durations are 0 by convention
     in fMP4), added onto whatever the progressive sample table holds."""
     major = ""
@@ -321,7 +321,7 @@ def mp4_sample_ranges(
     """Per-sample ``(byte_offset, size)`` ranges for the first track with
     the given handler — the sample table decoded from ``stsz`` (sizes),
     ``stco``/``co64`` (chunk offsets) and ``stsc`` (samples-per-chunk
-    runs), plus (r11) every ``moof`` fragment's ``trun`` entries for
+    runs), plus every ``moof`` fragment's ``trun`` entries for
     fragmented files, appended in file order. This is what lets frame
     operators address real frames without a codec: each range slices one
     access unit out of ``mdat``."""

@@ -105,7 +105,7 @@ def decontaminate_fuzzy(
     only where a shingle is shared, and only (corpus × benchmark) pairs
     are scored — the corpus never self-joins, so cost is bounded by
     benchmark size × shared-shingle fan-out, not corpus²."""
-    # NOT checkpointed (r16 measurement): the corpus postings are consumed
+    # NOT checkpointed (measured): the corpus postings are consumed
     # twice (size agg + intersection join), but materializing the fat
     # (id, shingle-string) rows costs MORE than replaying the cheap
     # tokenize→shingle lineage — measured 1.30 s → 2.12 s with a
@@ -295,7 +295,7 @@ def line_dedup(
     # per-doc line totals are array-local: size(split(text)) equals the
     # exploded count(*) row-for-row (posexplode emits no rows for a NULL
     # text, hence the matching isNotNull gate) — this spares the third
-    # explode + groupBy pass over the corpus (r16, guide §2.4)
+    # explode + groupBy pass over the corpus (guide §2.4)
     totals = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col),
         F.size(F.split(F.col(text_col), "\n")).cast("long").alias("_n_total"),
@@ -331,7 +331,7 @@ def c4_line_filter(
       survive (C4 counts sentences; this engine counts kept lines — a
       documented approximation, no sentence splitter in the chain);
     * drop the whole page when it contains any word from ``bad_words``
-      (C4's bad-words page rule, r11): whole-word, case-insensitive —
+      (C4's bad-words page rule): whole-word, case-insensitive —
       all words fold into ONE compiled alternation regex so the gate is
       a single scan-local ``rlike``. The canonical blocklist ("List of
       Dirty, Naughty, Obscene..." — the public artifact C4 used) is NOT
@@ -345,7 +345,7 @@ def c4_line_filter(
     line array (split → filter HOF → array_join) — NO shuffle, the
     filter literally rides the scan; at 100 TB this is the cheapest
     possible pass (one read, one write). The kept-lines array is pinned
-    to ONE evaluation site (r16, pin_computed — Catalyst does not CSE,
+    to ONE evaluation site (pin_computed — Catalyst does not CSE,
     so the unpinned form ran the split+line-gate HOF up to 3× per row:
     rebuild projection, size projection, and the pushed min_lines
     filter)."""
@@ -410,7 +410,7 @@ def dup_ngram_stats(
     from tweets_elastic_spark.operators.dedup import _shingle_posting_list
 
     # Postings key on the portable 60-bit gram hash and materialize once
-    # (r8, the jaccard_pairs treatment): a 13-gram is a ~90-char string,
+    # (the jaccard_pairs treatment): a 13-gram is a ~90-char string,
     # so hashing shrinks both shuffles ~10×, and the df aggregation + the
     # join-back would otherwise each replay the tokenize→shingle lineage.
     # The oracle hashes identically (hash60_sql), so a 2⁻⁶⁰ collision
@@ -437,31 +437,13 @@ def dup_ngram_stats(
     )
 
 
-def dup_ngram_filter(
-    corpus: DataFrame,
-    k: int = 13,
-    max_dup_frac: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keep documents whose duplicated-k-gram fraction is at most
-    ``max_dup_frac`` — the conservative span-dedup decision (drop
-    boilerplate-heavy docs wholesale rather than surgically cutting spans;
-    the surgical variant is line_dedup)."""
-    stats = dup_ngram_stats(corpus, k, text_col, id_col)
-    return corpus.join(
-        stats.filter(F.col("dup_frac") <= max_dup_frac).select(id_col),
-        id_col,
-    )
-
-
 def span_dedup(
     corpus: DataFrame,
     k: int = 50,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact duplicated-SPAN removal (r8) — the substring-level member of
+    """Exact duplicated-SPAN removal — the substring-level member of
     the dedup family (Lee et al. 2022, "Deduplicating Training Data Makes
     Language Models Better": remove every repeated substring of ≥ k
     tokens, keeping one occurrence), expressed over rolling k-token
@@ -506,7 +488,7 @@ def span_dedup(
         "_id", F.explode(win_structs).alias("w")
     ).select("_id", F.col("w.s").alias("_s"), F.col("w.h").alias("_h"))
     # occurrence count + keeper as WINDOW functions riding one hash
-    # exchange (r16): the groupBy+join shape evaluated the `windows`
+    # exchange: the groupBy+join shape evaluated the `windows`
     # projection TWICE (aggregation build + join probe side), and that
     # projection is the operator's CPU core (an md5 per token position);
     # the window form evaluates it once and drops the join outright
@@ -716,7 +698,7 @@ def robots_gate(
     host_col: str = "host",
     txt_col: str = "robots_txt",
 ) -> DataFrame:
-    """RFC 9309 robots.txt gate (r13) — the crawl-politeness filter next
+    """RFC 9309 robots.txt gate — the crawl-politeness filter next
     to url_quality_filter / url_blocklist_filter: keep pages whose path
     the host's robots.txt allows for ``agent``.
 

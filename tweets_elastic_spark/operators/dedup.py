@@ -279,13 +279,6 @@ def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.array_distinct(shingled)
 
 
-def word_shingles(c: Column, k: int = 3) -> Column:
-    """Shingles straight from a text column (convenience for small inputs;
-    the scan-scale operators below tokenize in a separate projection so the
-    regex tokenization runs once per row — ``_tokens_projection``)."""
-    return word_shingles_from_tokens(F.transform(simple_tokens(c), F.lower), k)
-
-
 def _tokens_projection(
     df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
@@ -296,7 +289,7 @@ def _tokens_projection(
     CollapseProject refuses to inline it (expensive expression, multiple
     references) and it executes once per row. ``fan_out`` spreads the
     CPU-heavy stages across all cores — the tokenize projection sits
-    ABOVE the exchange (r16): below it, the regex tokenization ran at the
+    ABOVE the exchange: below it, the regex tokenization ran at the
     raw scan's parallelism (one task on a one-row-group fixture file),
     and the exchange carried token arrays where raw text is smaller."""
     return fan_out(
@@ -342,7 +335,7 @@ def jaccard_pairs(
     from tweets_elastic_spark.functions.hashing import hash60
 
     # Postings carry the PORTABLE 60-bit hash of the shingle, not the
-    # string (r8): every downstream shuffle/group key is then 8 bytes
+    # string: every downstream shuffle/group key is then 8 bytes
     # instead of a ~25-char phrase — measured 13.8 s → ~8 s at the sf1
     # scaling fixture. The oracle hashes identically (hash60_sql), so a
     # hash collision — ~2⁻⁶⁰ per distinct-shingle pair — would merge the
@@ -492,10 +485,9 @@ def minhash_lsh_candidates(
         ).alias("_sig"),
     )
     # The signature table is referenced four times below (two band-join
-    # sides + two re-attachments); materialize it ONCE (r8 —
-    # localCheckpoint, bounded: id + num_hashes longs per doc). The r6
-    # measurement that recompute beat .persist() at sf0.1 inverts at the
-    # sf1 decade, where four tokenize→shingle→minhash replays dominate
+    # sides + two re-attachments); materialize it ONCE (localCheckpoint,
+    # bounded: id + num_hashes longs per doc). Recompute beats .persist()
+    # at sf0.1 but loses at the sf1 decade, where four tokenize→shingle→minhash replays dominate
     # (10.4 s → 6.5 s); checkpoint blocks free with the RDD, the same
     # lifecycle note as semdedup's cells. At production scale signatures
     # are materialized alongside the corpus at ingest, making this moot.
@@ -622,7 +614,7 @@ def hamming_band_pairs(
     verify exact Hamming. Shared by SimHash text dedup and the perceptual
     image-hash dedup (functions/multimodal.image_dhash).
 
-    The sketch relation materializes ONCE (r8 — localCheckpoint, bounded:
+    The sketch relation materializes ONCE (localCheckpoint, bounded:
     two longs per doc): both band-join sides would otherwise replay the
     caller's signature lineage — for SimHash that is the whole
     tokenize + 60-bit-vote expression, the dominant scan cost (measured
@@ -684,7 +676,7 @@ def embedding_near_pairs(
     # ELEMENT (the no-CSE HOF trap, see word_shingles_from_tokens), making
     # normalization O(d²) per row. As a separate Project node `_norm` is an
     # attribute the lambda reads for free. Computed ABOVE the fan_out
-    # exchange (r16) so the O(n·d) norm pass runs at full parallelism, not
+    # exchange so the O(n·d) norm pass runs at full parallelism, not
     # at the single-split scan's.
     pre_cols = [F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")]
     if bucket_by is not None:
@@ -792,38 +784,9 @@ def embedding_near_pairs_lsh(
 # ---------------------------------------------------------------------------
 # Incremental dedup against a STORED corpus — the continuous-ingest shape:
 # a new batch must not re-add documents the corpus already holds. At 100 TB
-# the corpus is never re-scanned per batch; its FINGERPRINTS (40-byte rows)
-# are materialized once at ingest (the same analyze-once story as the token
-# /signature columns indexing.build_index stores) and each increment
-# anti-joins that slim store.
+# the corpus is never re-scanned per batch; each increment anti-joins a
+# slim relation of the corpus's ``fingerprint_md5`` values.
 # ---------------------------------------------------------------------------
-
-def write_fingerprints(
-    df: DataFrame,
-    path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the corpus's exact-dup fingerprint store: one (fp,
-    keeper_id) row per DISTINCT normalized text. ``mode='append'`` adds an
-    increment's fingerprints after it is accepted (appends may duplicate
-    a fp across files; dedup_increment_exact's left_anti join is
-    membership-only, so duplicates cost bytes, never correctness)."""
-    from tweets_elastic_spark.functions.textstats import fingerprint_md5
-
-    (
-        df.select(
-            fingerprint_md5(F.col(text_col)).alias("fp"),
-            F.col(id_col).alias("keeper_id"),
-        )
-        .groupBy("fp")
-        .agg(F.min("keeper_id").alias("keeper_id"))
-        .write.mode(mode)
-        .parquet(path)
-    )
-
 
 def dedup_increment_exact(
     new_df: DataFrame,
@@ -849,50 +812,3 @@ def dedup_increment_exact(
         .join(fingerprints.select("fp"), "fp", "left_anti")
         .drop("fp")
     )
-
-
-def dedup_increment_near(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    est_threshold: float = 0.7,
-    base_hash=None,
-) -> DataFrame:
-    """NEAR-dup survivors of an increment vs the corpus: MinHash-LSH
-    banding across the union, keeping only increment docs with no
-    estimated-Jaccard >= threshold neighbor ON THE CORPUS SIDE
-    (within-increment near-dups are a separate, composable step —
-    dedup_near_survivors). Ids must be globally unique across both
-    inputs. At production scale the corpus side of the band join reads
-    the signatures materialized at ingest (indexing.build_index's
-    analyze-once story) rather than recomputing them."""
-    tagged = corpus_df.select(
-        F.col(id_col), F.col(text_col), F.lit(True).alias("_corpus")
-    ).unionByName(new_df.select(
-        F.col(id_col), F.col(text_col), F.lit(False).alias("_corpus")
-    ))
-    sides = tagged.select(F.col(id_col).alias("_sid"), "_corpus")
-    pairs = minhash_lsh_candidates(
-        tagged, text_col=text_col, id_col=id_col, k=k,
-        num_hashes=num_hashes, bands=bands, seed=seed, base_hash=base_hash,
-    ).filter(F.col("est_jaccard") >= est_threshold)
-    # cross-side hits: the increment member of each (corpus, new) pair
-    hit_ids = (
-        pairs.join(sides.withColumnRenamed("_sid", "id_a")
-                   .withColumnRenamed("_corpus", "_ca"), "id_a")
-        .join(sides.withColumnRenamed("_sid", "id_b")
-              .withColumnRenamed("_corpus", "_cb"), "id_b")
-        .filter(F.col("_ca") != F.col("_cb"))
-        .select(
-            F.when(F.col("_ca"), F.col("id_b")).otherwise(F.col("id_a"))
-            .alias(id_col)
-        )
-        .distinct()
-    )
-    return new_df.join(hit_ids, id_col, "left_anti")

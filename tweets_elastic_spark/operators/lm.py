@@ -22,8 +22,8 @@ corpus-sized — they aggregate once (map-side partial combine does most of
 the work) and then BROADCAST to the scoring join, so the document stream
 itself is never shuffled: tokenize → explode bigrams → two broadcast hash
 joins → per-doc re-aggregation on the same doc_id key the explode
-preserved. A trained-once LM (the production deployment) is just these two
-DataFrames persisted; ``score_bigram_ce`` takes them as inputs.
+preserved. A trained-once LM (the production deployment) is just the
+DataFrames ``fit_bigram_lm`` returns, persisted.
 """
 
 from __future__ import annotations
@@ -76,46 +76,6 @@ def fit_bigram_lm(
     return c12, c1, vocab
 
 
-def score_bigram_ce(
-    docs: DataFrame,
-    c12: DataFrame,
-    c1: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 1.0,
-) -> DataFrame:
-    """Per-document bigram cross-entropy against a trained model:
-    mean -ln((c12+α)/(c1+α·V)) over the doc's bigrams. Unseen bigrams /
-    histories contribute their smoothed mass via COALESCE-to-0 counts.
-    Documents with fewer than two tokens have no bigrams and drop out
-    (the caller's length filter owns them — CCNet also scores only
-    tokenizable lines).
-
-    The count tables are broadcast (vocabulary-sized); the document
-    stream is never shuffled except the final per-doc mean, which reuses
-    the id the explode preserved."""
-    big = doc_bigrams(docs, text_col, id_col)
-    scored = (
-        big.join(F.broadcast(c12), ["w1", "w2"], "left")
-        .join(F.broadcast(c1), ["w1"], "left")
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            F.col(id_col),
-            (
-                -F.log(
-                    (F.coalesce(F.col("c12"), F.lit(0)).cast("double") + F.lit(alpha))
-                    / (
-                        F.coalesce(F.col("c1"), F.lit(0)).cast("double")
-                        + F.lit(alpha) * F.col("v")
-                    )
-                )
-            ).alias("nll"),
-        )
-    )
-    return scored.groupBy(id_col).agg(F.avg("nll").alias("bigram_ce"))
-
-
 def bigram_ce_filter(
     docs: DataFrame,
     threshold: float,
@@ -128,17 +88,13 @@ def bigram_ce_filter(
     gibberish, boilerplate-free repetition, wrong-language residue — sits
     high). Returns (id, bigram_ce, keep).
 
-    Tokenize-once (r16, guide §2.3/§5): self-scoring reads the corpus for
-    the bigram counts, the history counts, the vocabulary AND the scoring
-    stream — four executions of scan + analyzer chain through the generic
-    fit/score path. Here the token arrays are materialized once
-    (``localCheckpoint`` — the analyze-once move corpus_clean already
-    makes for its cleaned set) and all four consumers derive from the
-    checkpointed tokens; only the cheap zip_with/explode re-runs per
-    consumer. Counts, smoothing and the per-doc mean are unchanged
-    expression-for-expression, so scores are identical to the fit/score
-    path (oracle-parity-gated; the trained-once deployment keeps using
-    ``fit_bigram_lm`` + ``score_bigram_ce``)."""
+    Tokenize-once: self-scoring reads the corpus for the bigram counts,
+    the history counts, the vocabulary AND the scoring stream. The token
+    arrays are materialized once (``localCheckpoint`` — the analyze-once
+    move corpus_clean already makes for its cleaned set) and all four
+    consumers derive from the checkpointed tokens; only the cheap
+    zip_with/explode re-runs per consumer. Counts are the same
+    expressions ``fit_bigram_lm`` builds (oracle-parity-gated)."""
     toks = docs.select(
         F.col(id_col), analyze(F.col(text_col), "standard").alias("_toks")
     ).localCheckpoint()

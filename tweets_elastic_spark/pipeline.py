@@ -24,9 +24,8 @@ Both writers use the same ``ingest_wm=…`` partition layout (``-1`` for the
 one-shot build), so a sink stays readable with plain
 ``spark.read.parquet(sink)`` whichever mode produced it. Re-documenting a
 conversation across increments (watermark rewound for a backfill, or
-mixing modes) leaves both versions in different partitions;
-``sinks.compact_sink`` resolves that — latest ``ingest_wm`` wins per id,
-the cross-partition overwrite-by-id ES applies at write time.
+mixing modes) leaves both versions in different partitions; a reader
+that needs ES's overwrite-by-id keeps the latest ``ingest_wm`` per id.
 
 Unioned increments are exactly ``etl_full``'s output as long as referenced
 parents exist in the source when their child's page is processed — for a

@@ -287,11 +287,22 @@ def mad_expr(value: Column, ov=lambda c: c) -> Column:
     return F.element_at(F.transform(F.array(arr), _mad_of), 1)
 
 
+# the keys a date_histogram honours: buckets are UTC-aligned, so
+# ``offset`` and ``time_zone`` raise rather than being ignored
+_DATE_HISTOGRAM_KEYS = {"field", "missing", "calendar_interval",
+                        "fixed_interval", "interval", "min_doc_count",
+                        "extended_bounds"}
+
+
 def _histogram_interval(body: dict) -> tuple[int, str, bool]:
     """A date_histogram's interval → ``(n, unit, fixed)``.
     ``fixed_interval`` is ES's compact ``<n><code>`` of a unit of a day
     or less; ``calendar_interval`` is a unit word or its ``1<code>``
     form, of a unit that has a key format."""
+    extra = set(body) - _DATE_HISTOGRAM_KEYS
+    if extra:
+        raise ValueError(
+            f"unsupported date_histogram parameters: {sorted(extra)}")
     fixed = body.get("fixed_interval")
     if fixed is not None:
         n, unit = read_compact(fixed) or (0, None)
@@ -606,7 +617,7 @@ def _bucket_key(kind: str, body: dict) -> Column:
         # strings / octets > 255 fall in no bucket (ES rejects them at
         # index time via the ip field type; the scan-side engine filters
         # instead, documented). Overlapping ranges would need an
-        # explode — refuse, same policy as range. IPv6 specs (r12)
+        # explode — refuse, same policy as range. IPv6 specs
         # dispatch to a group-wise lexicographic compare: the bound's
         # eight 16-bit groups are compile-time constants, the address
         # binds once as array<long>, and [from, to) evaluates as one
@@ -684,7 +695,7 @@ def _bucket_key(kind: str, body: dict) -> Column:
         # ES's response key shape. Malformed addresses fall in no
         # bucket, same documented policy as ip_range. Arithmetic is
         # //-and-% (not bitwise) so the DuckDB oracle mirrors it
-        # operator for operator. is_ipv6 (r12): the address parses to
+        # operator for operator. is_ipv6: the address parses to
         # its eight 16-bit groups, masked GROUP-WISE (no 128-bit ints
         # anywhere) and rendered back in RFC 5952 canonical form — all
         # pure Catalyst, see functions/ip.py.
@@ -739,7 +750,7 @@ def _bucket_key(kind: str, body: dict) -> Column:
 
 
 def _ip_range_v6_key(src: Column, ranges: list) -> Column:
-    """IPv6 ip_range bucket key (r12, formerly a loud refusal): parse
+    """IPv6 ip_range bucket key: parse
     the address into its eight 16-bit groups (functions/ip.py), then
     test [from, to) per bucket with a group-wise lexicographic >= whose
     bound side is eight compile-time constants — ≤16 long comparisons
@@ -1215,8 +1226,8 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # the price at the latest timestamps" without a top_hits
             # payload. size=1 (ES's default) compiles to max_by/min_by, a
             # single JVM aggregate riding the same partial/final plan and
-            # emitting a SCALAR {name}_{metric_field} column. size>1 (r8,
-            # ES caps it at 10) collects (sort, metrics...) structs,
+            # emitting a SCALAR {name}_{metric_field} column. size>1 (ES
+            # caps it at 10) collects (sort, metrics...) structs,
             # sorts, and slices the top `size` — each metric column then
             # renders as an ARRAY of up to `size` values in sort order.
             # Spark deduplicates semantically-equal aggregate functions,
@@ -1562,7 +1573,7 @@ def _filters_agg(
     the documents its query matches (buckets may overlap — a doc can land
     in several). Without sub-aggs: ONE conditional-aggregation scan
     (sum-of-CASE per bucket), stacked to (name, doc_count) rows with the
-    native unpivot — no shuffle, no join. With metric sub-aggs (r7): each
+    native unpivot — no shuffle, no join. With metric sub-aggs: each
     row tags itself with the array of bucket names it matches, ONE
     explode + groupBy evaluates every metric per bucket (any metric kind,
     overlap preserved — a doc feeds every bucket it matches), and the
@@ -1594,7 +1605,7 @@ def _filters_agg(
         for bucket, q in named.items()
     ]))
     if any(next(iter(s)) in _BUCKET_KINDS for s in sub.values()):
-        return _tagged_nested_bucket(df, name, tags, sub)  # r12
+        return _tagged_nested_bucket(df, name, tags, sub)
     got = (
         df.withColumn("__bucket", F.explode(tags))
         .groupBy(F.col("__bucket").alias(name))
@@ -1615,9 +1626,8 @@ def _filters_agg(
 def _tagged_nested_bucket(
     df: DataFrame, name: str, tags: Column, sub: dict
 ) -> DataFrame:
-    """Shared filters / adjacency_matrix nested-BUCKET sub-agg path
-    (r12, formerly a 'must be metrics' refusal): rows explode on the
-    cells they match and ONE (cell, inner-key) groupBy evaluates the
+    """Shared filters / adjacency_matrix nested-BUCKET sub-agg path: rows
+    explode on the cells they match and ONE (cell, inner-key) groupBy evaluates the
     inner bucket with its metric sub-aggs — the flattened leaf
     relation, same machinery as the generic two-level path. Cells with
     no matching rows drop (a flattened rendering has no row to carry
@@ -1682,7 +1692,7 @@ def _adjacency_matrix_agg(
     intersection ("a&b" keys, ES's separator) — the co-occurrence matrix
     shape. Like the filters agg, ONE conditional-aggregation scan builds
     every cell (singles + pairs), stacked with the native unpivot; empty
-    intersections are dropped, ES's contract. Metric sub-aggs (r7) take
+    intersections are dropped, ES's contract. Metric sub-aggs take
     the filters agg's tag-explode path instead — each row tags itself
     with every cell it lands in (including pair cells) and one
     explode + groupBy evaluates the metrics; empty cells stay dropped."""
@@ -1718,7 +1728,7 @@ def _adjacency_matrix_agg(
             F.when(p, F.lit(label)) for label, p in cells.items()
         ]))
         if any(next(iter(s)) in _BUCKET_KINDS for s in sub.values()):
-            return _tagged_nested_bucket(df, name, tags, sub)  # r12
+            return _tagged_nested_bucket(df, name, tags, sub)
         return (
             df.withColumn("__cell", F.explode(tags))
             .groupBy(F.col("__cell").alias(name))
@@ -1765,7 +1775,7 @@ def _frequent_item_sets(df: DataFrame, name: str, body: dict) -> DataFrame:
     One field of array type (multi-field item tuples unsupported,
     documented).
 
-    Shape (r16): the per-document sorted distinct item array
+    Shape: the per-document sorted distinct item array
     materializes ONCE (eager ``localCheckpoint`` — the upstream may be
     an expensive aggregation, and singles, pairs AND the document count
     all consume it; without the checkpoint Catalyst replays the whole
@@ -1936,7 +1946,9 @@ def _composite_agg(df: DataFrame, body: dict, sub: dict) -> DataFrame:
             )
         keys.append((hidden, desc, nulls_first))
         names.append(sname)
-        exprs[hidden] = _bucket_key(skind, sbody)
+        exprs[hidden] = _bucket_key(skind, {
+            k: v for k, v in sbody.items()
+            if k not in ("order", "missing_bucket", "missing_order")})
     if any(next(iter(s)) in _BUCKET_KINDS for s in sub.values()):
         raise ValueError("composite sub-aggs must be metrics, not buckets")
     keyed = df.withColumns(exprs)
@@ -1985,7 +1997,7 @@ def _significant_terms(
     (shard_size, shard_min_doc_count) are index-sharding workarounds this
     engine doesn't need: the groupBy sees global counts.
 
-    Metric sub-aggs (r7) aggregate the bucket's FOREGROUND documents —
+    Metric sub-aggs aggregate the bucket's FOREGROUND documents —
     ES's semantics (a significant bucket IS its matching docs; the
     background set only prices significance). Each metric field is
     masked to NULL outside the foreground before the same single groupBy
@@ -2221,7 +2233,7 @@ def _significant_text(
     de-duplicated counting), so counts are document frequencies; the JLH
     scoring and the coordinator-scale global-window totals are shared with
     significant_terms. One scan: analyze → array_distinct → explode →
-    token groupBy (the only shuffle). Metric sub-aggs (r7) aggregate the
+    token groupBy (the only shuffle). Metric sub-aggs aggregate the
     token's FOREGROUND documents, like significant_terms — metric fields
     ride the explode masked to NULL outside the foreground (a doc
     contributes once per distinct token it carries, the same doc-frequency
@@ -3987,7 +3999,7 @@ def es_request(
         # regexp_replace per field riding the (already top-k-truncated)
         # hit set, word-boundary + case-insensitive, the regex dialect
         # both engines share. number_of_fragments: 0 returns the whole
-        # tagged field ({field}_highlight); N > 0 (r11) returns up to N
+        # tagged field ({field}_highlight); N > 0 returns up to N
         # fixed-char-window snippets ({field}_fragments, array<string>):
         # the tagged text splits on the pre-tag, and fragment i carries
         # the last fragment_size//3 chars before match i plus the first

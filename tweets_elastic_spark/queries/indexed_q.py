@@ -28,6 +28,7 @@ from tweets_elastic_spark.registry import bench_variant, register
 from tweets_elastic_spark.queries.dedup_q import _LSH_ORACLE, _PQ_ORACLE, _rh_sig_sql
 from tweets_elastic_spark.queries.search_q import (
     _BM25_DF_SQL,
+    _BM25_ORACLE,
     _BM25_SCORE_SQL,
     _TOKENS_CTE,
 )
@@ -39,19 +40,7 @@ def _query_vec(emb: DataFrame, vec_id: int = 0) -> list[float]:
 
 @register(
     "search_bm25_indexed",
-    oracle=_TOKENS_CTE + f""",
-    stats AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n,
-               avg(CAST(len(tokens) AS DOUBLE)) AS avgdl
-        FROM toks
-    ),
-    dfs AS (SELECT {_BM25_DF_SQL} FROM toks)
-    SELECT doc_id, lang,
-           round({_BM25_SCORE_SQL}, 6) AS score
-    FROM toks, stats s, dfs d
-    WHERE lang = 'en'
-      AND list_has_any(tokens, ['spark', 'merge', 'sparkmerge'])
-    """,
+    oracle=_BM25_ORACLE,
     doc="search_bm25 over the WRITTEN index: tokens come from the stored "
         "text__custom_shingles column (one analyzer pass at ingest, never "
         "at query time), corpus stats from the sidecar + a pushdown lookup "
@@ -162,7 +151,7 @@ def q_ann_lsh_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @bench_variant(
     "ann_ivf_topk_indexed",
-    doc="PRODUCTION IVF-through-the-index (bench-only since r13): probe "
+    doc="PRODUCTION IVF-through-the-index (bench-only): probe "
         "cells come from the sidecar centroids, which no static SQL can "
         "reach — stored==recomputed cells and single-vs-indexed "
         "equivalence are pinned in tests/test_indexing.py, and the "
@@ -237,7 +226,7 @@ def q_ann_lsh_multi_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @bench_variant(
     "ann_ivf_multi_indexed",
-    doc="PRODUCTION batched IVF through the index (bench-only since r13; "
+    doc="PRODUCTION batched IVF through the index (bench-only; "
         "see ann_ivf_topk_indexed): per-query probe cells computed "
         "inside the plan (literal-centroid distances + array_sort on the "
         "broadcast query side), array_contains(probes, stored_cell) "
@@ -351,7 +340,7 @@ def q_es_suggest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "es_suggest_phrase",
-    # Full SQL replay (r12 — the r11 verdict asked for this oracle): the
+    # Full SQL replay: the
     # Laplace bigram arithmetic in indexing.suggest_phrase is plain
     # smoothed counting, so DuckDB re-derives the candidate lists from
     # raw text (same dictionary rebuild as the es_suggest_terms oracle,
@@ -452,7 +441,7 @@ def q_es_suggest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ES's shingle-field LM rescoring. 'sparc mrege' corrects to the "
         "corpus-frequent 'spark merge'; the whole computation touches the "
         "bounded vocabulary + a capped candidate product, the corpus only "
-        "to fit the LM. The oracle (r12) replays ALL of it in SQL: "
+        "to fit the LM. The oracle replays ALL of it in SQL: "
         "dictionary + df rebuilt from raw text, verbatim-fallback "
         "candidate lists, phrase cross product, and the Laplace bigram "
         "score over counts rebuilt from the standard token stream.",

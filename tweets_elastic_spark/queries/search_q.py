@@ -42,9 +42,9 @@ _TOKENS_CTE = """
 """
 
 
-@register(
-    "search_function_score",
-    oracle=_TOKENS_CTE + """
+# Shared by the three forms of one function_score query (query nodes,
+# JSON artifact, materialized tokens): they must agree row-for-row.
+_FUNCTION_SCORE_ORACLE = _TOKENS_CTE + """
     SELECT doc_id, lang, n_chars,
            CAST(
              CASE WHEN list_has_any(tokens, ['spark', 'merge', 'sparkmerge'])
@@ -55,7 +55,12 @@ _TOKENS_CTE = """
     WHERE n_chars > 300 AND lang = 'en'
     ORDER BY score DESC, doc_id ASC
     LIMIT 25
-    """,
+    """
+
+
+@register(
+    "search_function_score",
+    oracle=_FUNCTION_SCORE_ORACLE,
     doc="Reference-query shape (Q1-Q7, elastic_queries.json): weighted "
         "should (analyzed match + term) over a non-scoring filter, top-k.",
 )
@@ -106,18 +111,7 @@ _DSL_ARTIFACT = {
 
 @register(
     "search_from_json_dsl",
-    oracle=_TOKENS_CTE + """
-    SELECT doc_id, lang, n_chars,
-           CAST(
-             CASE WHEN list_has_any(tokens, ['spark', 'merge', 'sparkmerge'])
-                  THEN 5.0 ELSE 0.0 END
-           + CASE WHEN source = 'src1' THEN 2.0 ELSE 0.0 END
-           AS DOUBLE) AS score
-    FROM toks
-    WHERE n_chars > 300 AND lang = 'en'
-    ORDER BY score DESC, doc_id ASC
-    LIMIT 25
-    """,
+    oracle=_FUNCTION_SCORE_ORACLE,
     doc="The ES-DSL JSON front-end: the search_function_score query parsed "
         "from its JSON artifact by from_es_json (the compiler that runs "
         "the reference's own elastic_queries.json verbatim — tree equality "
@@ -136,18 +130,7 @@ def q_search_from_json_dsl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "search_materialized_tokens",
-    oracle=_TOKENS_CTE + """
-    SELECT doc_id, lang, n_chars,
-           CAST(
-             CASE WHEN list_has_any(tokens, ['spark', 'merge', 'sparkmerge'])
-                  THEN 5.0 ELSE 0.0 END
-           + CASE WHEN source = 'src1' THEN 2.0 ELSE 0.0 END
-           AS DOUBLE) AS score
-    FROM toks
-    WHERE n_chars > 300 AND lang = 'en'
-    ORDER BY score DESC, doc_id ASC
-    LIMIT 25
-    """,
+    oracle=_FUNCTION_SCORE_ORACLE,
     doc="Same query as search_function_score but over an index-time "
         "materialized token column (materialize_tokens, the multi-field "
         "analogue of mapping.json:23-54) — the 100 TB plan: the match is "
@@ -197,9 +180,9 @@ _BM25_DF_SQL = ", ".join(
 )
 
 
-# Shared by search_bm25 (builder form) and search_dsl_bm25 (JSON front-end):
-# the two entries must agree row-for-row or the DSL's BM25 wiring drifted
-# from the scoring node.
+# Shared by search_bm25 (query nodes), search_dsl_bm25 (JSON front-end)
+# and search_bm25_indexed (stored tokens): the entries must agree
+# row-for-row or the DSL's BM25 wiring or the stored columns drifted.
 _BM25_ORACLE = _TOKENS_CTE + f""",
     stats AS (
         SELECT CAST(count(*) AS DOUBLE) AS n,
@@ -246,7 +229,7 @@ def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The BM25 query AS A JSON ARTIFACT (VERDICT r6 item 1): what a generic ES
+# The BM25 query AS A JSON ARTIFACT: what a generic ES
 # user sends — a bare `match` they expect relevance-ranked. The analyzer +
 # token-column bindings come from the mapping side as always; the stats
 # provider is the only new input.
@@ -447,7 +430,7 @@ def q_search_dsl_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND len(list_filter(a2, p -> p >= a AND p <= a + 3)) > 0)) > 0
     """,
     doc="N-term sloppy phrase (Lucene match_phrase slop semantics, "
-        "generalized past the former 2-term guard — r6 verdict item 5): "
+        "generalized past the former 2-term guard): "
         "'vector merge order' with slop=3 matches when some assignment of "
         "one document position per term has max-min of offset-adjusted "
         "positions <= slop (Lucene's matchLength). Compiled through "
@@ -494,7 +477,7 @@ def q_search_phrase_slop(spark: SparkSession, sf_dir: str) -> DataFrame:
             y > list_min(list_filter(p1, x -> x > a)))) - a - 2 <= 4
     )) > 0
     """,
-    doc="ES intervals query (r8 — the general positional front-end): "
+    doc="ES intervals query (the general positional front-end): "
         "'vector merge order' with ordered=true, max_gaps=4 matches when "
         "the three terms occur at strictly increasing positions spanning "
         "at most 3+4 positions. Compiled through from_es_json; the "
@@ -541,7 +524,7 @@ def q_search_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND list_min(list_filter(p1, x -> x > a)) - a - 1 <= 4
     )) > 0
     """,
-    doc="ES intervals prefix/wildcard rules (late r8): unit-width "
+    doc="ES intervals prefix/wildcard rules: unit-width "
         "position filters — wildcard 'd?ta*' (anchored regex over the "
         "token stream) followed within 4 gaps by a token with prefix "
         "'quer', composed through ordered all_of. The oracle replays the "
@@ -589,7 +572,7 @@ def q_search_intervals_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND list_min(list_filter(s2, x -> x > a + 1)) - a + 1 - 3 <= 5
     )) > 0
     """,
-    doc="ES intervals all_of (r8, the ordered contiguous-children "
+    doc="ES intervals all_of (the ordered contiguous-children "
         "subset): the phrase 'vector merge' followed — strictly after, "
         "in order — by 'order', with at most 5 uncovered positions "
         "inside the composed span (Lucene's gaps() = span width minus "
@@ -646,7 +629,7 @@ def q_search_intervals_all_of(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND list_min(list_filter(s1, x -> x > b)) + 1 - b + 1 - 3 <= 5
     )) > 0
     """,
-    doc="ES intervals all_of UNORDERED (r12, formerly a loud refusal): "
+    doc="ES intervals all_of UNORDERED: "
         "the phrase 'vector merge' and the term 'order' in EITHER "
         "order, non-overlapping, with at most 5 uncovered positions in "
         "the composed span. Exact evaluation ORs the ordered greedy "
@@ -698,7 +681,7 @@ def q_search_intervals_all_of_unordered(
         len(list_filter(ep, q -> q >= p - 1 AND q <= p + 2)) = 0
     )) > 0
     """,
-    doc="Lucene span_not (r12, formerly a refusal): an occurrence of "
+    doc="Lucene span_not: an occurrence of "
         "'spark' or 'vector' (span_or include) that does NOT overlap "
         "any 'merge' occurrence expanded by pre=1 position before and "
         "post=2 after — Lucene's negative-proximity primitive ('X, but "
@@ -752,7 +735,7 @@ def q_search_span_not(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AND q <= list_min(list_filter(s2, x -> x > a)))) > 0
     )) > 0
     """,
-    doc="Lucene span_containing (r12, formerly a refusal): a BIG "
+    doc="Lucene span_containing: a BIG "
         "ordered span_near('vector' ... 'order', slop 4) span that "
         "CONTAINS a little 'merge' span — 'X near Y, with Z inside the "
         "window', the positional-scope primitive. The big span is the "
@@ -806,7 +789,7 @@ def q_search_span_containing(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND list_min(list_filter(tm, x -> x > a)) - a + 1 - 2 <= 3
     )) > 0
     """,
-    doc="Lucene span_multi (r13, formerly a refusal): a wildcard "
+    doc="Lucene span_multi: a wildcard "
         "multi-term query ('*ow' — row/slow/window...) wrapped as "
         "unit-width spans and composed under an ordered span_near with "
         "a 'merge' span_term, slop 3 — 'any -ow word shortly before "
@@ -1217,7 +1200,7 @@ def q_es_aggs_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY by_type ASC NULLS FIRST, by_day ASC
     LIMIT 25
     """,
-    doc="Composite missing_bucket (r6 verdict item 6): docs lacking the "
+    doc="Composite missing_bucket: docs lacking the "
         "source value form a null-keyed bucket positioned per ES's "
         "missing_order default (first when asc), and the after cursor "
         "accepts a null key — the keyset predicate's comparators are "
@@ -1852,7 +1835,7 @@ def q_es_request_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
              ' ... ') AS snips
     FROM win
     """,
-    doc="ES highlighting, FRAGMENT mode (r11, number_of_fragments: 3, "
+    doc="ES highlighting, FRAGMENT mode (number_of_fragments: 3, "
         "fragment_size: 60): fixed-char windows around the first N "
         "matches in document order — the tagged text splits on the "
         "pre-tag and each fragment is right(prefix, 20) + '<em>' + "
@@ -2720,7 +2703,7 @@ def q_es_aggs_date_range_weighted(spark: SparkSession, sf_dir: str) -> DataFrame
         "terms filtered by tf/df bounds (df >= 2, df <= 78% of the corpus "
         "— the stopword guard; the synthetic corpus's 31-term vocabulary "
         "sits almost entirely at df 75-80%, so ES's default 25% cap "
-        "selects nothing and the r12 driver row passed 0-vs-0 — this "
+        "selects nothing and the oracle check passed 0-vs-0 — this "
         "seed puts the cut MID-distribution so selection, idf arithmetic "
         "and the msm gate all do real work: 12 of 13 candidate terms "
         "selected, k=120 crosses the 12-matched/11-matched score "
@@ -3238,8 +3221,7 @@ def q_es_aggs_multi_terms_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_count DESC, by_ls ASC
     LIMIT 10
     """,
-    # FULL oracle since r13 (was rows-only "sketch output is approximate"):
-    # in the all-values regime (bucket n <= the GK buffer at accuracy
+    # FULL oracle: in the all-values regime (bucket n <= the GK buffer at accuracy
     # 20000 — provable at every oracle-gated SF; fixture buckets hold
     # 10-112 values) Spark's percentile_approx(0.5) deterministically
     # returns the order statistic at 1-based rank ceil(n/2), which is
@@ -3250,8 +3232,8 @@ def q_es_aggs_multi_terms_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (test_es_aggs.py::test_mad_zipf_skew_exact_vs_sketch, 20k rows);
     # if fixture buckets ever outgrow the buffer the row fails loudly
     # rather than silently passing.
-    doc="The SKEW-SAFE twin of es_aggs_multi_terms_mad (r6 verdict item "
-        "2): median_absolute_deviation with ES's compression knob opts "
+    doc="The SKEW-SAFE twin of es_aggs_multi_terms_mad: "
+        "median_absolute_deviation with ES's compression knob opts "
         "into the sketch path — per-bucket state is two mergeable "
         "quantile summaries (percentile_approx) REGARDLESS of bucket "
         "population, vs the exact path's O(bucket) value buffer (the one "
@@ -3307,7 +3289,7 @@ _GEO_CTE = """
     FROM d
     WHERE dist_m <= 3000000.0
     """,
-    doc="ES geo_distance query (r7 — the geo family): events within "
+    doc="ES geo_distance query (the geo family): events within "
         "3000 km of the origin, haversine with ES's mean earth radius as "
         "scan-local JVM math over a numeric degree column pair (no "
         "geo_point type — a pair of doubles IS columnar point storage; "
@@ -3341,7 +3323,7 @@ def q_search_geo_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d
     GROUP BY 1
     """,
-    doc="ES geo_distance aggregation (r7): concentric distance rings "
+    doc="ES geo_distance aggregation: concentric distance rings "
         "around an origin, [from, to) meters with range-agg key labels, "
         "carrying a metric. The haversine distance is bound once and the "
         "ring CASE ladder branches on it; one groupBy. ES distance-string "
@@ -3386,7 +3368,7 @@ def q_es_aggs_geo_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE lat >= -10.0 AND lat <= 40.0
       AND (lon >= 150.0 OR lon <= -120.0)
     """,
-    doc="ES geo_bounding_box query (r8): documents inside a degree box "
+    doc="ES geo_bounding_box query: documents inside a degree box "
         "over the numeric degree column pair — and this box CROSSES the "
         "antimeridian (left 150 > right -120), exercising the wrapped "
         "longitude contract (lon >= left OR lon <= right). Pure "
@@ -3435,7 +3417,7 @@ def q_search_geo_bounding_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t
     GROUP BY 1
     """,
-    doc="ES geotile_grid bucket agg (r8): Web-Mercator slippy-map tiles "
+    doc="ES geotile_grid bucket agg: Web-Mercator slippy-map tiles "
         "at precision 4, keys 'z/x/y', carrying an avg metric. Latitude "
         "clamps to the Mercator limit (±85.05112878) and x/y clamp to "
         "[0, 2^z−1] — ES's contract for the lon=180/pole edges. The y "
@@ -3509,7 +3491,7 @@ def _geohash_oracle(p: int) -> str:
 @register(
     "es_aggs_geohash_grid",
     oracle=_geohash_oracle(3),
-    doc="ES geohash_grid bucket agg (r8): the classic base32 geohash "
+    doc="ES geohash_grid bucket agg: the classic base32 geohash "
         "cell per point at precision 3, carrying an avg metric. A "
         "precision-p hash is 5p bits of alternating lon/lat bisections "
         "— computed CLOSED-FORM (quantize lon to ceil(5p/2) bits, lat "
@@ -3573,7 +3555,7 @@ def _geo_polygon_oracle() -> str:
 @register(
     "search_geo_polygon",
     oracle=_geo_polygon_oracle(),
-    doc="ES geo_polygon query (late r8): even-odd ray-casting "
+    doc="ES geo_polygon query: even-odd ray-casting "
         "containment over planar degree coordinates — how ES's legacy "
         "geo_polygon evaluates — against a NON-CONVEX hexagon (a notch "
         "exercises the parity logic). One indicator per edge summed "
@@ -3619,14 +3601,14 @@ def q_search_geo_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pts
     GROUP BY 1
     """,
-    doc="ES geo_line agg (late r8): each bucket's points joined into a "
+    doc="ES geo_line agg: each bucket's points joined into a "
         "LineString in timestamp order — the track-reconstruction agg. "
         "size=20 truncates after the sort (complete=false when the "
         "bucket holds more); include_sort returns the sort values; "
         "[lon, lat] GeoJSON coordinate order; ties on the sort value "
         "break by (lon, lat) so both engines share one total order. The "
         "oracle replays the ordered-list slice with DuckDB list "
-        "aggregates. r12: the coordinate and sort-value arrays are "
+        "aggregates. The coordinate and sort-value arrays are "
         "projected to ';'-joined '%.6f'-formatted strings (C-style "
         "formatting is identical across the JVM and DuckDB; driver "
         "prefix primitive-schema constraint) — the agg itself keeps the "
@@ -3684,7 +3666,7 @@ def q_es_aggs_geo_line(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pts
     GROUP BY 1
     """,
-    doc="ES geo_centroid metric agg (r8) under a terms bucket: the "
+    doc="ES geo_centroid metric agg under a terms bucket: the "
         "arithmetic mean of each bucket's coordinates (ES's documented "
         "computation) plus the point count, over the degree column "
         "pair; docs missing either coordinate drop out. One groupBy, "
@@ -3741,7 +3723,7 @@ def q_es_aggs_geo_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ELSE lmax END, 6) AS box_right
     FROM agg
     """,
-    doc="ES geo_bounds metric agg (r8 s4) under a terms bucket: each "
+    doc="ES geo_bounds metric agg under a terms bucket: each "
         "bucket's smallest enclosing lat/lon box with ES's default "
         "wrap_longitude=true — the 'error' bucket's longitudes cluster "
         "across the antimeridian so its box crosses (left > right), the "
@@ -3788,7 +3770,7 @@ def q_es_aggs_geo_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(max(value), 6)
     FROM events WHERE event_type = 'no_such_type'
     """,
-    doc="ES filters agg with metric sub-aggs (r7): named DSL-predicate "
+    doc="ES filters agg with metric sub-aggs: named DSL-predicate "
         "buckets each carrying sum/max metrics — rows tag themselves with "
         "the matching bucket names, one explode + groupBy evaluates every "
         "metric (overlap preserved), and the literal name list left-joins "
@@ -3879,7 +3861,7 @@ def q_es_aggs_filters_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN ideal ON q.request_id = ideal.request_id
     ORDER BY q.request_id
     """,
-    doc="ES _rank_eval (r7): NDCG@10 of two DSL queries against literal "
+    doc="ES _rank_eval: NDCG@10 of two DSL queries against literal "
         "relevance judgments — the search-quality/retrieval-evaluation "
         "API. Each request's leg is an already-truncated top-k "
         "(TakeOrderedAndProject through the shared search plan), the "
@@ -3963,7 +3945,7 @@ def q_es_rank_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN err ON q.request_id = err.request_id
     ORDER BY q.request_id
     """,
-    doc="ES _rank_eval expected_reciprocal_rank (r8, completing the "
+    doc="ES _rank_eval expected_reciprocal_rank (completing the "
         "metric set): the Chapelle cascade model — "
         "sum (1/r)*R_r*prod(1-R_i) over rated hits in rank order, "
         "R = (2^rating-1)/2^max_relevance (=3 here). Unrated hits have "
@@ -4006,7 +3988,7 @@ def q_es_rank_eval_err(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING count(*) <= 3
     ORDER BY doc_count ASC, by_cust ASC
     """,
-    doc="ES rare_terms bucket agg (r7): the LONG TAIL — customers with at "
+    doc="ES rare_terms bucket agg: the LONG TAIL — customers with at "
         "most 3 orders, rarest first, carrying a metric. ES bounds memory "
         "with a CuckooFilter and documents false negatives; this engine "
         "evaluates the tail EXACTLY from the same one-groupBy relation "
@@ -4145,7 +4127,7 @@ def q_es_aggs_time_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE lang IS NOT NULL
     GROUP BY 1
     """,
-    doc="ES boxplot metric agg per terms bucket (r7): min/max + exact "
+    doc="ES boxplot metric agg per terms bucket: min/max + exact "
         "interpolated quartiles of document length by language — ES "
         "estimates the quartiles with t-digest, this engine evaluates "
         "them exactly (quantile_cont definition, oracle bit-for-bit at "
@@ -4177,7 +4159,7 @@ def q_es_aggs_boxplot(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_type IS NOT NULL
     GROUP BY 1
     """,
-    doc="ES top_metrics agg (r7): the metric's value AT the bucket's "
+    doc="ES top_metrics agg: the metric's value AT the bucket's "
         "top-sorted document — 'the value at the latest timestamp' "
         "without a top_hits payload. size=1 compiles to max_by/min_by, "
         "a single JVM aggregate in the same partial/final hash plan (ES "
@@ -4225,14 +4207,13 @@ def q_es_aggs_top_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rn <= 3
     GROUP BY event_type
     """,
-    doc="ES top_metrics with size>1 (r8, formerly a loud refusal routing "
-        "to top_hits): the metric's values at the bucket's top-3 "
+    doc="ES top_metrics with size>1: the metric's values at the bucket's top-3 "
         "documents by sort field. One shared collect buffer per bucket "
         "(Spark dedups equal aggregate functions), sorted and sliced to "
         "size — per-bucket memory O(bucket) before the slice, acceptable "
         "because ES caps size at 10. Sort ties break by the metric "
         "values themselves (deterministic, mirrored in the oracle's "
-        "window ORDER BY). r12: the top-3 array is projected to per-rank "
+        "window ORDER BY). The top-3 array is projected to per-rank "
         "PRIMITIVE columns recent_value_1..3 (driver prefix constraint — "
         "tests/test_plans.py primitive-schema guard; the array form "
         "stays exercised via the plan itself).",
@@ -4438,7 +4419,7 @@ def q_es_aggs_sibling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT daily.*, sib.* FROM daily, sib
     """,
-    doc="ES extended_stats_bucket sibling pipeline (r10): the "
+    doc="ES extended_stats_bucket sibling pipeline: the "
         "stats_bucket set plus sum_of_squares, POPULATION variance and "
         "std-deviation, and avg ± sigma·std bounds (sigma=2 default) "
         "over a daily histogram's doc_counts — flattened {name}_{stat} "
@@ -4491,7 +4472,7 @@ def q_es_aggs_extended_stats_bucket(
     FROM nets
     GROUP BY 1
     """,
-    doc="ES ip_prefix agg (r10): bucket by the /N IPv4 network prefix — "
+    doc="ES ip_prefix agg: bucket by the /N IPv4 network prefix — "
         "the unbounded-cardinality sibling of ip_range (buckets come "
         "from the data; one hash aggregation, validate-regex + integer "
         "//-and-% octet arithmetic bound once, no UDF; the oracle "
@@ -4517,7 +4498,7 @@ def q_es_aggs_ip_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("user_id") * 7) % 256).cast("string"),
         ),
     )
-    # r15: sum over DECIMAL(18,2) on both engines — the raw double sum's
+    # Sum over DECIMAL(18,2) on both engines — the raw double sum's
     # ~1e-10 summation-order noise is order-dependent at full precision
     # (the es_aggs_parent driver-hash lesson, applied fleet-wide); exact
     # decimal accumulation is order-free, one cast back keeps the schema.
@@ -4569,7 +4550,7 @@ for _n in range(2, 9):  # longest run wins: wrap ascending, outer = longer
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
     FROM comp GROUP BY 1
     """,
-    doc="ES ip_prefix agg with is_ipv6 (r12, formerly a loud refusal): "
+    doc="ES ip_prefix agg with is_ipv6: "
         "bucket by the /N IPv6 network prefix. The address parses to "
         "its eight 16-bit groups ('::'-expanding pure-Catalyst parse, "
         "functions/ip.py), is masked GROUP-WISE at /68 (full groups "
@@ -4781,7 +4762,7 @@ def q_search_match_bool_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "es_aggs_percentiles_tdigest",
-    # r12: the approx_distinct_profile contract pattern — sketch values
+    # The approx_distinct_profile contract pattern — sketch values
     # are engine-specific, so the hash-checkable surface is (exact
     # percentiles, within-bound booleans): the query still DRIVES the
     # tdigest/percentile_approx path and asserts each sketch value lands
@@ -4804,7 +4785,7 @@ def q_search_match_bool_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "percentile_approx, a Greenwald-Khanna summary): bounded-memory, "
         "executor-MERGEABLE per-group state — the 100 TB shape, where the "
         "exact form's per-group value buffer is the scale limit. Driver "
-        "contract (r12): exact percentiles (cross-engine, quantile_cont "
+        "contract: exact percentiles (cross-engine, quantile_cont "
         "interpolation) plus within-bound booleans computed against the "
         "engine's own sketch values — the GK rank-error bound is "
         "hash-verified, the sketch values stay engine-side.",
@@ -4976,7 +4957,7 @@ def q_es_aggs_significant_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY score DESC, by_lang ASC
     LIMIT 5
     """,
-    doc="significant_terms with the gnd heuristic (r7 — the last named "
+    doc="significant_terms with the gnd heuristic (the last named "
         "significance heuristic): Google Normalized Distance (Cilibrasi & "
         "Vitányi 2007) between the term and the foreground, scored as "
         "exp(-NGD) so smaller distance ranks first. Same one-scan "
@@ -5109,8 +5090,8 @@ def q_es_request_runtime_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the analyzed token stream — one posexplode + groupBy, the "
         "keyword-extraction/relevance-debugging API. The oracle rebuilds "
         "positions independently via an unnest-with-ordinality walk. "
-        "r12: positions projected to a comma-joined string (driver "
-        "prefix primitive-schema constraint); the API itself keeps the "
+        "Positions are projected to a comma-joined string (verified "
+        "rows need primitive schemas); the API itself keeps the "
         "array<int> column.",
 )
 def q_es_termvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5218,7 +5199,7 @@ def q_search_pinned_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o.o_orderkey, o.o_orderstatus, CAST(k.n AS DOUBLE) AS score
     FROM orders o JOIN kids k ON o.o_orderkey = k.k
     """,
-    doc="ES has_child query (r8 s4, plans/joinfield.py): orders having "
+    doc="ES has_child query (plans/joinfield.py): orders having "
         ">= 3 lineitems matching a child range query, score_mode=sum "
         "folding the constant-score children (= matching-child count). "
         "The child side aggregates BEFORE the join — map-side partial "
@@ -5248,7 +5229,7 @@ def q_search_has_child(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_orderkey IN (SELECT o_orderkey FROM orders
                          WHERE o_orderstatus = 'F')
     """,
-    doc="ES has_parent query (r8 s4, plans/joinfield.py): lineitems whose "
+    doc="ES has_parent query (plans/joinfield.py): lineitems whose "
         "parent order matches a term query, score=false — a LEFT SEMI "
         "join (only child columns move; the parent side carries just its "
         "key). The child-side quantity filter rides the parquet scan.",
@@ -5291,7 +5272,7 @@ def q_search_has_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) AS BIGINT) AS total_users
     FROM per p LEFT JOIN news n USING (by_day)
     """,
-    doc="ES cumulative_cardinality pipeline agg (r8 s4): distinct users "
+    doc="ES cumulative_cardinality pipeline agg: distinct users "
         "seen up to each day bucket. Distinct counts don't sum, so the "
         "engine uses the exact first-seen decomposition — one extra "
         "groupBy(user) -> min(bucket) over the same scan, a bucket-sized "
@@ -5368,7 +5349,7 @@ _CF_ORACLE = f"""
 @register(
     "search_combined_fields",
     oracle=_CF_ORACLE,
-    doc="ES combined_fields query (r8 s4): BM25F — the fields fused into "
+    doc="ES combined_fields query: BM25F — the fields fused into "
         "ONE pseudo-field before scoring (tf and doc length are weighted "
         "sums across fields, idf uses the exact union document frequency "
         "— Lucene's CombinedFieldQuery approximates that df from merged "
@@ -5408,7 +5389,7 @@ def q_search_combined_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_type IN ('click', 'error') AND value >= 10
     GROUP BY 1
     """,
-    doc="ES search templates (r8 s4, plans/templates.py): a mustache "
+    doc="ES search templates (plans/templates.py): a mustache "
         "source rendered against params — {{#toJson}} injects the terms "
         "list, a truthy section splices the optional range clause, scalar "
         "{{min_value}} interpolates — then parsed and executed through "
@@ -5467,7 +5448,7 @@ _MST_LIST_SRC = (
     SELECT 1 AS req, doc_id, lang FROM documents WHERE lang = 'fr'
     """,
     doc="ES _msearch/template with a LIST param (plans/templates.py "
-        "mustache iteration, r10): {{#langs}}...{{.}}...{{/langs}} "
+        "mustache iteration): {{#langs}}...{{.}}...{{/langs}} "
         "expands one term clause per element into a bool.should "
         "(implicit minimum_should_match=1), rendered per batch entry and "
         "executed through the ordinary msearch/es_request path; results "
@@ -5518,7 +5499,7 @@ def q_msearch_template_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE ipn IS NOT NULL AND ipn < 168165376
     GROUP BY 1
     """,
-    doc="ES ip_range agg (r8 s4): [from, to) IPv4 buckets (from/to "
+    doc="ES ip_range agg: [from, to) IPv4 buckets (from/to "
         "addresses + a CIDR mask). Addresses compile to integer bounds "
         "at plan time; per-row work is one validating regex + 4-octet "
         "arithmetic, scan-local and codegen'd. The oracle re-parses the "
@@ -5591,7 +5572,7 @@ def q_es_aggs_ip_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM based
     GROUP BY 1
     """,
-    doc="ES ip_range agg over IPv6 (r12, formerly a loud refusal): "
+    doc="ES ip_range agg over IPv6: "
         "[from, to) buckets whose bounds compile to eight 16-bit group "
         "constants at plan time; per-row work is the shared "
         "'::'-expanding parse (functions/ip.py, bound once) plus a "
@@ -5663,8 +5644,8 @@ def q_es_aggs_ip_range_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cells WHERE event_type IS NOT NULL
     GROUP BY 1, 2
     """,
-    doc="ES adjacency_matrix with a nested BUCKET sub-agg (r12, "
-        "formerly a 'must be metrics' refusal): each row explodes on "
+    doc="ES adjacency_matrix with a nested BUCKET sub-agg: each row "
+        "explodes on "
         "the cells it matches — singles plus sorted-name '&' pair "
         "intersections — and ONE (cell, inner-key) groupBy evaluates "
         "the inner terms bucket with its avg metric: the flattened "
@@ -5718,7 +5699,7 @@ def q_es_aggs_adjacency_nested_terms(
     WHERE pattern <> ''
     GROUP BY 1
     """,
-    doc="ES categorize_text agg (r8 s4): log messages grouped by their "
+    doc="ES categorize_text agg: log messages grouped by their "
         "invariant token pattern — whitespace tokens, number-bearing "
         "tokens dropped as variables, the surviving sequence is the "
         "category key (ES's deterministic first pass; its ML "
@@ -5774,7 +5755,7 @@ def q_es_aggs_categorize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
            cp.cp_key, cp.cp_stat
     FROM per p, cp
     """,
-    doc="ES change_point sibling agg (r8 s4): the split of the ordered "
+    doc="ES change_point sibling agg: the split of the ordered "
         "bucket metric series maximizing the CUSUM mean-shift statistic "
         "sqrt(nl*nr/n)*|mean_l - mean_r| — the deterministic step-change "
         "detector (ES's ML spike/trend classification is replaced by the "
@@ -5822,18 +5803,18 @@ def q_es_aggs_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
            doc_count, round(doc_count / n, 6) AS support
     FROM u, nn WHERE doc_count >= n * 0.05
     """,
-    doc="ES frequent_item_sets agg (r8 s4): market-basket mining over "
+    doc="ES frequent_item_sets agg: market-basket mining over "
         "order baskets (items = part categories) — itemsets of size 1-2 "
         "with support >= 5%, mined EXACTLY (ES's miner is sampled ECLAT, "
         "approximate by contract; sizes > 2 refuse loudly). The basket "
-        "arrays materialize once (r16 localCheckpoint — previously the "
-        "collect_set upstream ran 3x: singles, pairs, denominator); "
+        "arrays materialize once (localCheckpoint — otherwise the "
+        "collect_set upstream would run 3x: singles, pairs, denominator); "
         "size-1 and size-2 itemsets come from ONE per-document HOF "
         "(C(d,2) per doc, no join, doc-size capped) counted in one "
         "explode+groupBy, support denominator a 1-row broadcast. "
         "The driver row projects the itemset to a pipe-joined string: "
         "the driver's canonicalizer sorts RAW pandas cells and cannot "
-        "factorize list values (the r10 red row) — prefix rows must be "
+        "factorize list values — prefix rows must be "
         "primitive-only (tests/test_plans.py guard).",
 )
 def q_es_aggs_frequent_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5864,7 +5845,7 @@ def q_es_aggs_frequent_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, lang, n_chars FROM documents
     WHERE NOT coalesce((n_chars < 100 OR lang = 'de'), false)
     """,
-    doc="ES _delete_by_query (r8 s4, sinks.py): the survivor relation — "
+    doc="ES _delete_by_query (sinks.py): the survivor relation — "
         "one negated-predicate filter riding the scan (vs ES's "
         "scroll-then-bulk-delete round trips); write-back goes through "
         "write_documents(mode=overwrite) / a transactional DELETE.",
@@ -5887,7 +5868,7 @@ def q_delete_by_query(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE value END AS value
     FROM events
     """,
-    doc="ES _update_by_query (r8 s4, sinks.py): the Painless assignment "
+    doc="ES _update_by_query (sinks.py): the Painless assignment "
         "`ctx._source.value = ctx._source.value * params.f + 1` over "
         "matching documents, compiled to ONE conditional codegen'd "
         "projection (non-matching rows pass through bit-unchanged) — vs "
@@ -5944,7 +5925,7 @@ def q_search_cross_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_type IN (SELECT DISTINCT event_type FROM events
                          WHERE user_id = 7)
     """,
-    doc="ES terms LOOKUP query (r8 s4): the terms list lives in another "
+    doc="ES terms LOOKUP query: the terms list lives in another "
         "document ({'index','id','path'}) — ES's coordinator GETs that "
         "one doc and expands it to a regular terms query (capped at "
         "index.max_terms_count=65536); here the same bounded 1-document "
@@ -5980,7 +5961,7 @@ def q_search_terms_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pts
     WHERE lat >= -10 AND lat <= 60 AND (lon >= 160 OR lon <= -170)
     """,
-    doc="ES geo_shape query (r8 s4) against point documents: an inline "
+    doc="ES geo_shape query against point documents: an inline "
         "envelope crossing the antimeridian (GeoJSON [lon, lat] corner "
         "order), relation=intersects — for point docs intersects/within "
         "coincide and disjoint negates; contains and indexed_shape "
@@ -6036,7 +6017,7 @@ def q_search_geo_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
            'etl-v1' AS tag
     FROM msgs
     """,
-    doc="ES ingest pipeline (r8 s4, plans/ingest.py): a processor chain "
+    doc="ES ingest pipeline (plans/ingest.py): a processor chain "
         "— grok (%{LOGLEVEL}/%{INT}/%{IP} subset compiled to one "
         "regexp_extract per captured field, no-match -> NULL), lowercase, "
         "script (Painless arithmetic through the shared compiler), set — "
@@ -6083,14 +6064,14 @@ def q_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o.o_orderpriority IS NOT NULL
     GROUP BY 1
     """,
-    doc="ES children agg (r8 s4, plans/joinfield.py): parents bucketed "
+    doc="ES children agg (plans/joinfield.py): parents bucketed "
         "by a parent field, metrics over each bucket's CHILDREN "
         "(doc_count counts children, ES's contract). One projection "
         "join — the parent's (key, bucket) pair onto the children, "
         "broadcast at dimension size — and one groupBy for every "
         "metric. The revenue sum runs over DECIMAL(18,2) on BOTH "
         "engines: bucket sums reach ~1e9 where float64 summation-order "
-        "noise (~1e-4) survives 6-digit rounding, so the r14 driver "
+        "noise (~1e-4) survives 6-digit rounding, so the hash check "
         "reddened the double-sum twin (es_aggs_parent) while this row "
         "passed on luck. Exact decimal accumulation is order-free; one "
         "cast back to double after the agg keeps the output schema.",
@@ -6132,7 +6113,7 @@ def q_es_aggs_children(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pairs p JOIN orders o ON p.l_orderkey = o.o_orderkey
     GROUP BY 1
     """,
-    doc="ES parent agg (r10, plans/joinfield.py — the children agg's "
+    doc="ES parent agg (plans/joinfield.py — the children agg's "
         "inverse): children bucketed by a child field, metrics over each "
         "bucket's PARENTS with every parent counted ONCE per bucket no "
         "matter how many children land there (ES's per-shard "
@@ -6144,7 +6125,7 @@ def q_es_aggs_children(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tweets_elastic_spark.plans.joinfield import parent_agg
 
-    # r15 fix for the r14 red row: sum over DECIMAL(18,2) on both engines.
+    # Sum over DECIMAL(18,2) on both engines.
     # Bucket revenue reaches ~2.75e9 where double summation-order noise
     # (Spark 2754983250.180004 vs DuckDB ...18001) survives round(,6);
     # exact decimal accumulation is order-free, one cast back to double
@@ -6179,13 +6160,13 @@ def q_es_aggs_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY term
     LIMIT 10
     """,
-    doc="ES _terms_enum (r10, plans/api.py): the first N distinct "
+    doc="ES _terms_enum (plans/api.py): the first N distinct "
         "keyword-field values with a given prefix, ascending — the index "
         "autocomplete endpoint. Prefix filter rides the scan (startswith "
         "pushes down), one distinct hash aggregation over qualifying "
         "terms, TakeOrdered for the page; search_after keyset pagination "
         "and case_insensitive matching are pytest-pinned. (Driver row "
-        "re-seeded r11: p_brand's 'Brand#1' prefix matches 11 distinct "
+        "seed: p_brand's 'Brand#1' prefix matches 11 distinct "
         "terms so the size-10 page boundary actually cuts — p_type had "
         "one qualifying term, a near-empty verification.)",
 )

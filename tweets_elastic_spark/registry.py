@@ -33,15 +33,11 @@ class RegisteredQuery:
 
 _REGISTRY: dict[str, RegisteredQuery] = {}
 
-# Production fast-path twins OUTSIDE the driver contract (r13, closing the
-# rows-only class): entries whose only divergence from a full-oracle
-# registry sibling is an engine-private primitive (xxhash64 base hash,
-# k-means/sidecar centroids) register here instead of carrying a
-# permanently-unverifiable oracle=None row. They stay timed by bench.py
-# (they ARE the production path) and correctness-pinned by equivalence
-# pytests against their oracled siblings; they no longer appear in
-# queries()/oracle_sql(), so the driver surface contains no entry that can
-# never hold a hard signal.
+# Production fast-path twins outside queries()/oracle_sql(): an entry whose
+# only divergence from a full-oracle sibling is an engine-private
+# primitive (xxhash64 base hash, k-means/sidecar centroids) registers here,
+# timed by bench.py and pinned by equivalence pytests against its sibling,
+# so the verified surface holds no entry that can never be verified.
 _BENCH_VARIANTS: dict[str, RegisteredQuery] = {}
 
 
@@ -79,53 +75,21 @@ def bench_variants() -> dict[str, QueryFn]:
 # equivalence/recall pytests against full-oracle prefix twins. If the
 # driver's sampling changes, _emission_order() still yields every
 # registered query; only the driver-vs-local verification split moves.
-# Per-round rotation rationale lives in COVERAGE.md ("Verification
-# structure" + the round-N addition notes), not here.
+# Why each entry holds its seat: COVERAGE.md ("Verification structure"
+# and its rotation notes).
 DRIVER_PRIORITY: list[str] = [
-    # r16 ROTATION — THE FULL BACKLOG CLOSE-OUT. Entering r16 the
-    # cumulative ever-driver-green ledger stood at 218/262 (backlog
-    # 44). ALL 44 remaining never-driver-verified entries replay green
-    # at sf0.01 under the 17-significant-digit gate at TWO
-    # shuffle-partition layouts (scripts/replay_backlog.py, run this
-    # round), every one has a primitive-only schema (driver
-    # canonicalizer requirement, checked this round), so the whole
-    # backlog seats at once: 1 flagship + 44 first-time + 5 new-code
-    # rows (esql_sample_stats / esql_qstr_score / esql_mad_round_to /
-    # esql_span_window / esql_kql_filter — the r16-new SAMPLE command,
-    # QSTR full-text, exact-MAD + ROUND_TO, temporal-span arithmetic,
-    # and the KQL filter-context front-end, new-code-first) = 50.
-    # The flagship itself is the standing keeper; every non-seated
-    # family stays hash-gated every run by tests/test_oracle_parity.py.
-    # If r16 comes back green the burn-down ends: every registry entry
-    # ever-driver-verified. OUT (all green r15, all still hash-gated
-    # every run by test_oracle_parity.py at 17g): the whole r15 wave —
-    # scoring variants/fuzzy, sampling/stats aggs, request surfaces,
-    # esql_enrich/esql_change_point, the six pulled-forward agg rows,
-    # es_aggs_parent/children/ip_prefix_v6 (decimal-sum fix class,
-    # driver-confirmed r15), retriever/EQL/analyzer/curation/ANN/
-    # chunking seats.
-    # Prior waves' rationale: git history of this list + COVERAGE.md
-    # rotation notes.
-    #
-    # r17 ROTATION (optimization round — no new queries): seat
-    # essql_histogram, the single remaining never-driver-green entry
-    # (r16 verdict item 9; CORRECTNESS_r16 left the cumulative ledger at
-    # 267/268). ml_anomaly_score rotates out to keep the prefix at 50 —
-    # it went driver-green in r16 and stays hash-gated every run by
-    # tests/test_oracle_parity.py. Green r17 ⇒ cumulative 268/268.
-    #
     # flagship
     "tweet_documents_flat",
-    # r17: the last never-driver-verified entry (ES-SQL HISTOGRAM)
+    # ES-SQL HISTOGRAM
     "essql_histogram",
-    # r16-new code first: the ES|QL SAMPLE command (deterministic
-    # portable-hash sampling; the verdict's task 3), QSTR full-text,
+    # newest code first: the ES|QL SAMPLE command (deterministic
+    # portable-hash sampling), QSTR full-text,
     # the exact-MAD + ROUND_TO STATS row, and temporal-span arithmetic
     "esql_sample_stats", "esql_qstr_score", "esql_mad_round_to",
     "esql_span_window", "esql_kql_filter",
-    # r15-new ES|QL trio (parity-green at birth, driver-dark until now)
+    # ES|QL trio
     "esql_stats_where", "esql_fork", "esql_bucket_stats",
-    # agg remainder wave (the COVERAGE.md r16 schedule)
+    # agg remainder wave
     "es_aggs_scripted_metric", "es_aggs_variable_width_histogram",
     "es_aggs_normalize", "es_aggs_terms_order_metric",
     "es_aggs_sibling_stats", "es_aggs_rate_serial_diff",
@@ -134,7 +98,7 @@ DRIVER_PRIORITY: list[str] = [
     "es_aggs_geo_centroid", "es_aggs_ip_prefix", "es_aggs_ip_range",
     "es_aggs_categorize_text", "es_aggs_change_point",
     "es_aggs_significant_script",
-    # search/request stragglers (the promoted r17 six + the rest)
+    # search/request stragglers
     "es_rank_eval_err", "search_template", "search_explain_parts",
     "search_terms_set", "search_sparse_vector", "search_dsl_extended",
     "es_request_sorted_hits", "search_function_score_fvf",

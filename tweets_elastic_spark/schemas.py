@@ -187,24 +187,6 @@ TWEETS_DOCUMENT = _st(
         _f("hashtags", ArrayType(_st(_f("tag", StringType()))))))),
 )
 
-# P5: the reference's explicit date format — ``yyyy-MM-dd'T'HH:mm:ssZZZZZ``
-# (mapping.json:16-19; sample value docs/sample_document.json:15). ES's
-# ZZZZZ (offset with colon) is Java-time XXX. Spark normalizes parsed
-# instants to the session timezone (pinned UTC in session.py), so
-# offset-preserving inputs compare instant-wise (SURVEY §7 risk 3).
-ES_TIMESTAMP_FORMAT = "yyyy-MM-dd'T'HH:mm:ssXXX"
-
-
-def parse_es_timestamp(c):
-    """String→TimestampType for the reference's wire format (P5).
-
-    Use on string-ingest paths (raw JSON/CSV arrivals); parquet fixtures
-    arrive pre-typed so this is the boundary op, not a scan default."""
-    from pyspark.sql import functions as F
-
-    return F.to_timestamp(c, ES_TIMESTAMP_FORMAT)
-
-
 # ---------------------------------------------------------------------------
 # 2. Driver-provided testdata tables (/root/testdata/sf*/; FIXTURES.md §2)
 # ---------------------------------------------------------------------------

@@ -31,7 +31,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.vectors import col_sql, lit_sql
-from tweets_elastic_spark.sources.jsonl import write_jsonl
 
 
 def write_documents(
@@ -148,87 +147,6 @@ def _swap_dataset_dir(path: str, tmp: str) -> None:
     shutil.rmtree(old)
 
 
-def compact_sink(spark, path: str, id_col: str = "id") -> int:
-    """Cross-increment overwrite-by-id for the ``ingest_wm=…`` sink layout
-    (pipeline.py): keep the row from the LATEST increment per id and
-    rewrite the dataset as a single ``ingest_wm=-1`` partition.
-
-    The incremental writers are append-only across partitions — when a
-    conversation is re-documented (watermark rewound for a backfill, or a
-    one-shot build followed by increments), both versions exist in
-    different ``ingest_wm`` directories. ES resolves that at write time by
-    ``_id`` overwrite; a filesystem sink resolves it here: one shuffle by
-    id, ``row_number`` over ``ingest_wm DESC`` (a later increment always
-    wins), rewrite, swap. Compaction is idempotent and the compacted sink
-    remains a valid target for further increments (``-1`` sorts below
-    every real watermark, so the next re-document still wins).
-
-    Recency is the watermark lineage, not wall-clock: a REWOUND backfill
-    writes into a lower ``ingest_wm`` directory than later normal batches.
-    That is still correct — every id the rewound run re-documents either
-    has no newer coverage, or a newer batch documented it from the same
-    source state — but it means a backfill refreshes exactly the ids
-    at/after its rewind point; rewind to 0 to re-document everything (the
-    reference's full re-import, ES overwriting by ``_id``).
-
-    Returns the number of surviving documents."""
-    from pyspark.sql import Observation
-    from pyspark.sql.window import Window
-
-    docs = spark.read.parquet(path)
-    w = Window.partitionBy(id_col).orderBy(F.col("ingest_wm").desc())
-    obs = Observation()
-    latest = (
-        docs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "ingest_wm")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-    )
-    tmp = path.rstrip("/") + ".compacting"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    latest.write.mode("overwrite").parquet(os.path.join(tmp, "ingest_wm=-1"))
-    n = int(obs.get["n"])
-    _swap_dataset_dir(path, tmp)
-    return n
-
-
-def document_json(df: DataFrame, id_col: str = "id") -> DataFrame:
-    """P6: the document's JSON wire format (to_json at the sink boundary —
-    ``to_json(a.*)`` queries.sql:20; bulk bodies src/main.py:140,146).
-
-    Internally documents stay native nested structs (SURVEY §1.1); JSON
-    exists only when rows cross to an external system. Returns
-    (id, json) where ``json`` serializes every column EXCEPT the id — the
-    id travels in the bulk-op header, not the body, exactly like the
-    reference's ``{'index': {'_id': ...}}`` + document pairs
-    (src/main.py:137-141). Timestamps render in ISO-8601; field order is
-    schema order, so the bytes are stable run-to-run."""
-    body = [c for c in df.columns if c != id_col]
-    return df.select(
-        F.col(id_col),
-        F.to_json(
-            F.struct(*[F.col(c) for c in body]),
-            {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ssXXX"},
-        ).alias("json"),
-    )
-
-
-def write_documents_json(
-    df: DataFrame,
-    path: str,
-    id_col: str = "id",
-    mode: str = "overwrite",
-    target_file_partitions: int | None = None,
-) -> None:
-    """JSON-lines sink variant of write_documents (S8 + P6): one
-    ``{"id": ..., "json": "..."}`` line per document — the bulk-request
-    body the reference ships over HTTP, materialized as files by the one
-    JSON-lines writer, ``sources.jsonl.write_jsonl``."""
-    write_jsonl(document_json(df, id_col), path, mode=mode,
-                target_file_partitions=target_file_partitions)
-
-
 def validate_split(
     df: DataFrame, rules: dict[str, Column]
 ) -> tuple[DataFrame, DataFrame]:
@@ -304,9 +222,6 @@ def delete_by_query(df: DataFrame, query) -> DataFrame:
     or a compiled Query node."""
     q = _compile_dsl(query)
     return df.filter(~F.coalesce(q.predicate(df.sparkSession), F.lit(False)))
-
-
-_CTX_RE = None
 
 
 def update_by_query(df: DataFrame, query, script: str,

@@ -21,8 +21,6 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from tweets_elastic_spark.schemas import TESTDATA_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Fixture generations have flipped timestamp encodings between rounds
 # (events.ts shipped as TIMESTAMP(NANOS) in some generations and
 # TIMESTAMP(MICROS) in others). Spark rejects NANOS outright
@@ -113,37 +111,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df
         return spark.read.schema(schema).parquet(path)
     return spark.read.parquet(path)
-
-
-def load_table_json(
-    spark: SparkSession, path: str, name: str, schema: StructType | None = None
-) -> DataFrame:
-    """S1 variant for STRING-typed arrivals (JSON-lines exports, the wire
-    format the reference's bulk bodies use): read with the declared schema
-    but timestamps as strings, then parse the reference's explicit
-    ``…ssZZZZZ`` format at the ingest boundary (P5,
-    ``schemas.parse_es_timestamp``) — never schema inference, never a
-    format guess. Parquet fixtures arrive pre-typed; this is the path for
-    raw JSON drops."""
-    from pyspark.sql.types import StringType, TimestampType
-
-    from tweets_elastic_spark import schemas as SM
-
-    if schema is None:
-        schema = SM.TWEETS_TABLES.get(name) or TESTDATA_TABLES[name]
-    wire = StructType([
-        StructField(
-            f.name,
-            StringType() if isinstance(f.dataType, TimestampType) else f.dataType,
-            f.nullable,
-        )
-        for f in schema.fields
-    ])
-    df = spark.read.schema(wire).json(path)
-    for f in schema.fields:
-        if isinstance(f.dataType, TimestampType):
-            df = df.withColumn(f.name, SM.parse_es_timestamp(F.col(f.name)))
-    return df
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
