@@ -157,7 +157,7 @@ def test_match_options_and_score_guards(spark, docs):
     with pytest.raises(ValueError, match="aliased"):
         es_sql("SELECT SCORE() FROM docs WHERE MATCH(lang, 'en')",
                {"docs": docs}, **b)
-    with pytest.raises(ValueError, match="unsupported MATCH options"):
+    with pytest.raises(ValueError, match="unsupported MATCH keys"):
         es_sql("SELECT doc_id FROM docs "
                "WHERE MATCH(text, 'spark', 'fuzziness=2')",
                {"docs": docs}, **b)

@@ -283,9 +283,11 @@ def _encode_jpeg_12bit(pixels: np.ndarray, quality: int = 90) -> bytes:
     for y0 in range(0, padded[0].shape[0], 8):
         for x0 in range(0, padded[0].shape[1], 8):
             for ci, plane in enumerate(padded):
+                # the 12-bit level shift is 2048: 1920 here, the encoder's
+                # 128 after (exact, the samples are integers)
                 preds[ci] = _encode_blocks(
-                    wtr, plane[y0:y0 + 8, x0:x0 + 8], lq, dc_enc, ac_enc,
-                    preds[ci], mid=2048.0,
+                    wtr, plane[y0:y0 + 8, x0:x0 + 8] - 1920.0, lq, dc_enc,
+                    ac_enc, preds[ci],
                 )
     wtr.flush()
     return bytes(out + wtr.out + b"\xFF\xD9")

@@ -530,6 +530,26 @@ def test_from_es_json_unknown_clause_raises():
             from_es_json(dsl)
 
 
+def test_from_es_json_unhonoured_keys_raise():
+    """A key the clause does not read raises. Each of these used to
+    compile to a query that ignored it: ``prefix`` on "E" matched no
+    ``en`` row, ``term`` dropped its boost."""
+    from tweets_elastic_spark.plans.search import from_es_json
+
+    for kind, body, key in (
+        ("prefix", {"lang": {"value": "E", "case_insensitive": True}},
+         "case_insensitive"),
+        ("wildcard", {"lang": {"value": "E*", "case_insensitive": True}},
+         "case_insensitive"),
+        ("term", {"lang": {"value": "en", "boost": 2.0}}, "boost"),
+        ("exists", {"field": "lang", "bogus": 1}, "bogus"),
+        ("ids", {"values": [1], "bogus": 1}, "bogus"),
+        ("match_all", {"boost": 2.0}, "boost"),
+    ):
+        with pytest.raises(ValueError, match=rf"unsupported {kind} keys: \['{key}'\]"):
+            from_es_json({"query": {kind: body}})
+
+
 def test_from_es_json_scalar_and_list_clauses_and_msm():
     from tweets_elastic_spark.plans.search import from_es_json
 
@@ -674,7 +694,7 @@ def test_ids_query_binds_to_id_field(spark):
     df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "pk long, v string")
     q = from_es_json({"query": {"ids": {"values": [1, 3]}}}, id_field="pk")
     assert {r["pk"] for r in search(df, q, k=None).collect()} == {1, 3}
-    with pytest.raises(ValueError, match="values"):
+    with pytest.raises(ValueError, match=r"unsupported ids keys: \['value'\]"):
         from_es_json({"query": {"ids": {"value": [1]}}})
 
 
@@ -708,7 +728,7 @@ def test_match_minimum_should_match_tokens(spark):
         analyzers={"text": "standard"},
     )
     assert {r["id"] for r in search(df, q, k=None).collect()} == {1, 2}
-    with pytest.raises(ValueError, match="unsupported match options"):
+    with pytest.raises(ValueError, match="unsupported match keys"):
         from_es_json({"query": {"match": {"text": {
             "query": "x", "zero_terms_query": "all"}}}})
 
@@ -2051,7 +2071,7 @@ def test_rank_eval_metrics_hand_computed(spark):
     with _pytest.raises(ValueError, match="unsupported rank_eval metric"):
         es_rank_eval(docs, {"requests": [body["requests"][0]],
                             "metric": {"err": {}}}, **an)
-    with _pytest.raises(ValueError, match="parameters"):
+    with _pytest.raises(ValueError, match="unsupported precision keys"):
         es_rank_eval(docs, {"requests": [body["requests"][0]],
                             "metric": {"precision": {"ignore_unlabeled":
                                                      True}}}, **an)
@@ -2234,11 +2254,11 @@ def test_intervals_prefix_wildcard_rules(spark):
         {"prefix": {"prefix": "pro"}}, {"wildcard": {"pattern": "d?ta"}},
     ]}}) == [4]
 
-    with pytest.raises(ValueError, match="use_field is out of scope"):
+    with pytest.raises(ValueError, match=r"unsupported intervals prefix keys: \['use_field'\]"):
         ids({"prefix": {"prefix": "x", "use_field": "other"}})
     with pytest.raises(ValueError, match="non-empty string"):
         ids({"prefix": {"prefix": ""}})
-    with pytest.raises(ValueError, match="unsupported intervals rule"):
+    with pytest.raises(ValueError, match="unsupported intervals keys"):
         ids({"fuzzy": {"term": "x"}})
 
 
@@ -2328,7 +2348,7 @@ def test_sparse_vector_query_dot_product_and_guards(spark):
     with pytest.raises(ValueError, match="weights must be numeric"):
         from_es_json({"query": {"sparse_vector": {
             "field": "w", "query_vector": {"a": "hi"}}}})
-    with pytest.raises(ValueError, match="inference_id needs a model"):
+    with pytest.raises(ValueError, match=r"unsupported sparse_vector keys: \['inference_id'\]"):
         from_es_json({"query": {"sparse_vector": {
             "field": "w", "query_vector": {"a": 1},
             "inference_id": "elser"}}})

@@ -629,14 +629,14 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
 # Encoder
 # ---------------------------------------------------------------------------
 
-def _encode_blocks(writer, plane, qt, dc_enc, ac_enc, pred, mid=128.0):
-    """FDCT + quantize + Huffman-encode every 8×8 block of a padded plane
-    row-major; returns the updated DC predictor. ``mid`` is the level
-    shift (128 for 8-bit, 2048 for the 12-bit extended process)."""
+def _encode_blocks(writer, plane, qt, dc_enc, ac_enc, pred):
+    """FDCT + quantize + Huffman-encode every 8×8 block of a padded 8-bit
+    plane row-major, level-shifted by 128; returns the updated DC
+    predictor."""
     hh, ww = plane.shape
     for y0 in range(0, hh, 8):
         for x0 in range(0, ww, 8):
-            blk = plane[y0:y0 + 8, x0:x0 + 8] - mid
+            blk = plane[y0:y0 + 8, x0:x0 + 8] - 128.0
             coef = _C @ blk @ _C.T
             q = np.round(coef / qt).astype(np.int64)
             zz = q.reshape(-1)[ZIGZAG]

@@ -95,8 +95,9 @@ top-k; hybrid fusion via plans.search.rrf_fuse).
 Result shape: the flattened leaf-bucket relation — one row per innermost
 bucket combination, carrying every level's key column plus ``doc_count``
 and the metric columns (ES's nested JSON response is a tree rendering of
-exactly this relation). Unknown agg types raise — never a silently
-dropped aggregation.
+exactly this relation). Unknown agg types, and keys outside a kind's
+row of ``_AGG_KEYS``, raise — never a silently dropped aggregation or
+option.
 
 At scale nothing here is new machinery: buckets are groupBy keys (hash
 partial aggregation map-side), metrics are built-in JVM aggregates, and
@@ -126,7 +127,9 @@ from tweets_elastic_spark.functions.vectors import (
     vec_sql,
 )
 from tweets_elastic_spark.plans.search import (
+    _RETRIEVER_KEYS,
     Regexp,
+    check_keys,
     compile_painless,
     es_retriever,
     from_es_json,
@@ -175,10 +178,11 @@ def _sort_keys(spec, surface: str) -> list[tuple[str, bool, bool]]:
             (field, direction), = entry.items()
             if isinstance(direction, dict):
                 opts, direction = direction, direction.get("order", "asc")
+        check_keys(opts, {"order", "missing"}, surface)
         missing = opts.get("missing")
-        if set(opts) - {"order", "missing"} or missing not in (None, "_first", "_last"):
-            raise ValueError(f"unsupported {surface} options for {field!r}: "
-                             f"{opts} (order, and missing _first/_last, only)")
+        if missing not in (None, "_first", "_last"):
+            raise ValueError(f"unsupported {surface} missing for {field!r}: "
+                             f"{missing!r} (_first/_last)")
         if direction not in ("asc", "desc"):
             raise ValueError(
                 f"unsupported {surface}: {direction!r} for {field!r} "
@@ -287,22 +291,11 @@ def mad_expr(value: Column, ov=lambda c: c) -> Column:
     return F.element_at(F.transform(F.array(arr), _mad_of), 1)
 
 
-# the keys a date_histogram honours: buckets are UTC-aligned, so
-# ``offset`` and ``time_zone`` raise rather than being ignored
-_DATE_HISTOGRAM_KEYS = {"field", "missing", "calendar_interval",
-                        "fixed_interval", "interval", "min_doc_count",
-                        "extended_bounds"}
-
-
 def _histogram_interval(body: dict) -> tuple[int, str, bool]:
     """A date_histogram's interval → ``(n, unit, fixed)``.
     ``fixed_interval`` is ES's compact ``<n><code>`` of a unit of a day
     or less; ``calendar_interval`` is a unit word or its ``1<code>``
     form, of a unit that has a key format."""
-    extra = set(body) - _DATE_HISTOGRAM_KEYS
-    if extra:
-        raise ValueError(
-            f"unsupported date_histogram parameters: {sorted(extra)}")
     fixed = body.get("fixed_interval")
     if fixed is not None:
         n, unit = read_compact(fixed) or (0, None)
@@ -414,11 +407,6 @@ def _bucket_key(kind: str, body: dict) -> Column:
             raise ValueError(
                 f"geohash_grid precision must be 1..12, got {p}"
             )
-        extra = set(body) - {"field", "precision"}
-        if extra:
-            raise ValueError(
-                f"unsupported geohash_grid keys: {sorted(extra)}"
-            )
         total = 5 * p
         n_lon = (total + 1) // 2
         n_lat = total // 2
@@ -483,9 +471,6 @@ def _bucket_key(kind: str, body: dict) -> Column:
         z = int(body.get("precision", 7))
         if not 0 <= z <= 29:
             raise ValueError(f"geotile_grid precision must be 0..29, got {z}")
-        extra = set(body) - {"field", "precision"}
-        if extra:
-            raise ValueError(f"unsupported geotile_grid keys: {sorted(extra)}")
         n = float(1 << z)
         lat = F.col(fld["lat"]).cast("double")
         lon = F.col(fld["lon"]).cast("double")
@@ -596,17 +581,6 @@ def _bucket_key(kind: str, body: dict) -> Column:
         # isn't reproducible scan-side. Messages with no invariant token
         # land in no bucket. One scan-local HOF chain, groupBy on the
         # derived key.
-        extra = set(body) - {"field", "max_matched_tokens", "size"}
-        if "similarity_threshold" in body:
-            raise ValueError(
-                "categorize_text similarity_threshold (ML category "
-                "merging) is not reproducible scan-side — unsupported; "
-                "the deterministic token-pattern pass is what runs"
-            )
-        if extra:
-            raise ValueError(
-                f"unsupported categorize_text parameters: {sorted(extra)}"
-            )
         return categorize_key(src, body.get("max_matched_tokens"))
     if kind == "ip_range":
         # ES ip_range agg over an IPv4 string column: [from, to) buckets
@@ -821,25 +795,8 @@ def _metric_cols(aggs: dict) -> list[Column]:
     columns — the flattened rendering of the stats object."""
     out = []
     for name, spec in aggs.items():
-        spec = dict(spec)
-        spec.pop("aggs", None)  # a sibling bucket agg carries its own subtree
-        (kind, body), = spec.items()
+        kind, body = _agg_node(spec)
         if kind in _METRICS:
-            # ES simple-metric options: ``missing`` substitutes for null
-            # values; cardinality's ``precision_threshold`` (the count
-            # below which ES's HLL is near-exact) is accepted and
-            # trivially satisfied — counting is EXACT here at every
-            # cardinality, the documented strictly-more-accurate
-            # divergence. Anything else raises (never silently ignore an
-            # option that would change the result).
-            allowed = {"field", "missing"} | (
-                {"precision_threshold"} if kind == "cardinality" else set()
-            )
-            extra = set(body) - allowed
-            if extra:
-                raise ValueError(
-                    f"unsupported {kind} parameters: {sorted(extra)}"
-                )
             c = F.col(body["field"])
             if "missing" in body:
                 c = F.coalesce(c, F.lit(body["missing"]))
@@ -923,11 +880,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # ES. Docs missing either coordinate drop out. Four extra
             # min/max aggregates on the shared partial/final plan — no
             # second pass for the wrapped candidate.
-            extra = set(body) - {"field", "wrap_longitude"}
-            if extra:
-                raise ValueError(
-                    f"unsupported geo_bounds parameters: {sorted(extra)}"
-                )
             fld = body.get("field")
             if not (isinstance(fld, dict) and {"lat", "lon"} <= set(fld)):
                 raise ValueError(
@@ -980,14 +932,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # out of the sum (ES throws on missing doc values; the
             # NULL contract here is the documented safer divergence).
             import re as _re
-
-            extra = set(body) - {"init_script", "map_script",
-                                 "combine_script", "reduce_script",
-                                 "params"}
-            if extra:
-                raise ValueError(
-                    f"unsupported scripted_metric keys: {sorted(extra)}"
-                )
 
             def _src(key: str) -> str:
                 v = body.get(key)
@@ -1071,12 +1015,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # point list (ES caps it the same way: size <= 10000, the
             # bucket's points are coordinator-side) — the exactness
             # trade documented for MAD/string_stats.
-            extra = set(body) - {"point", "sort", "include_sort",
-                                 "sort_order", "size"}
-            if extra:
-                raise ValueError(
-                    f"unsupported geo_line parameters: {sorted(extra)}"
-                )
             fld = body.get("point", {}).get("field")
             if not (isinstance(fld, dict) and {"lat", "lon"} <= set(fld)):
                 raise ValueError(
@@ -1205,13 +1143,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # percentiles/cardinality. Flattened: {name}_min/_max/_q1/
             # _q2/_q3; min/max are plain aggregates, the quartiles one
             # sorted-buffer aggregate each.
-            extra = set(body) - {"field"}
-            if extra:
-                raise ValueError(
-                    f"unsupported boxplot parameters: {sorted(extra)} "
-                    "(compression tunes ES's sketch; quartiles here are "
-                    "exact)"
-                )
             c = F.col(body["field"]).cast("double")
             out += [
                 F.min(c).alias(f"{name}_min"),
@@ -1239,11 +1170,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # on the sort value break by the metric values themselves
             # (deterministic, oracle-mirrorable), where ES leaves shard
             # order unspecified.
-            extra = set(body) - {"metrics", "sort", "size"}
-            if extra:
-                raise ValueError(
-                    f"unsupported top_metrics keys: {sorted(extra)}"
-                )
             size = int(body.get("size", 1))
             if not 1 <= size <= 10:
                 raise ValueError(
@@ -1346,11 +1272,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # {name}_{fi}_{fj}_covariance/_correlation for i<j in the
             # request's field order. Degenerate guards: n<=1 -> NULL
             # variance legs; M2=0 -> NULL skewness/kurtosis/correlation.
-            extra = set(body) - {"fields", "missing"}
-            if extra:
-                raise ValueError(
-                    f"unsupported matrix_stats parameters: {sorted(extra)}"
-                )
             fields = body["fields"]
             if not isinstance(fields, list) or len(fields) < 2:
                 raise ValueError(
@@ -1417,11 +1338,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # side drops the pair. heteroscedastic (default): Welch t
             # with the Welch–Satterthwaite df. homoscedastic: pooled
             # variance, df = na + nb - 2.
-            extra = set(body) - {"a", "b", "type"}
-            if extra:
-                raise ValueError(
-                    f"unsupported t_test parameters: {sorted(extra)}"
-                )
             ttype = body.get("type", "heteroscedastic")
             if ttype not in ("paired", "homoscedastic", "heteroscedastic"):
                 raise ValueError(
@@ -1431,11 +1347,7 @@ def _metric_cols(aggs: dict) -> list[Column]:
 
             def _leg(l: str) -> Column:
                 sp = body[l]
-                bad = set(sp) - {"field", "filter"}
-                if bad:
-                    raise ValueError(
-                        f"unsupported t_test.{l} keys: {sorted(bad)}"
-                    )
+                check_keys(sp, {"field", "filter"}, f"t_test.{l}")
                 c = F.col(sp["field"]).cast("double")
                 if "filter" in sp:
                     from pyspark.sql import SparkSession
@@ -1702,9 +1614,6 @@ def _adjacency_matrix_agg(
             "adjacency_matrix needs {'filters': {name: query, ...}} with "
             ">= 2 entries"
         )
-    extra = set(body) - {"filters", "separator"}
-    if extra:
-        raise ValueError(f"unsupported adjacency_matrix keys: {sorted(extra)}")
     sep = str(body.get("separator", "&"))
     bad = [b for b in named if sep in b]
     if bad:
@@ -1789,12 +1698,6 @@ def _frequent_item_sets(df: DataFrame, name: str, body: dict) -> DataFrame:
     before pair generation) is the scale path, not brute force.
     Support's denominator is the total document count, attached as a
     1-row broadcast."""
-    extra = set(body) - {"fields", "minimum_support", "minimum_set_size",
-                         "maximum_set_size", "max_items_per_doc"}
-    if extra:
-        raise ValueError(
-            f"unsupported frequent_item_sets parameters: {sorted(extra)}"
-        )
     fields = body.get("fields")
     if not (isinstance(fields, list) and len(fields) == 1
             and isinstance(fields[0], dict) and "field" in fields[0]):
@@ -1890,6 +1793,16 @@ _SIBLING_KINDS = {
 }
 
 
+# the key-expression keys each composite source kind honours, beside the
+# source's own order, missing_bucket and missing_order
+_COMPOSITE_SOURCE_KEYS = {
+    "terms": {"field", "missing"},
+    "histogram": {"field", "missing", "interval"},
+    "date_histogram": {"field", "missing", "calendar_interval",
+                       "fixed_interval", "interval"},
+}
+
+
 def _composite_agg(df: DataFrame, body: dict, sub: dict) -> DataFrame:
     """ES ``composite`` agg: the SCALE path for bucket enumeration — instead
     of one truncated top-N response, buckets stream out in total key order,
@@ -1924,8 +1837,10 @@ def _composite_agg(df: DataFrame, body: dict, sub: dict) -> DataFrame:
     for entry in sources:
         (sname, sspec), = entry.items()
         (skind, sbody), = sspec.items()
-        if skind not in ("terms", "date_histogram", "histogram"):
+        if skind not in _COMPOSITE_SOURCE_KEYS:
             raise ValueError(f"unsupported composite source type: {skind!r}")
+        check_keys(sbody, _COMPOSITE_SOURCE_KEYS[skind]
+                   | {"order", "missing_bucket", "missing_order"}, f"composite {skind}")
         (_, desc, nulls_first), = _sort_keys(
             {sname: sbody.get("order", "asc")}, "composite order")
         morder = sbody.get("missing_order", "default")
@@ -2187,20 +2102,11 @@ def _sig_heuristic(body: dict) -> tuple[str, str | None]:
         spec = params.get("script")
         if spec is None:
             raise ValueError("script_heuristic needs a 'script'")
-        src = spec["source"] if isinstance(spec, dict) else spec
-        if isinstance(spec, dict) and set(spec) - {"source"}:
-            raise ValueError(
-                f"unsupported script keys: {set(spec) - {'source'}} "
-                "(inline values into source; the four frequency variables "
-                "arrive as params._subset_freq/_superset_freq/"
-                "_subset_size/_superset_size)"
-            )
-        if set(params) - {"script"}:
-            raise ValueError(
-                f"unsupported script_heuristic parameters: "
-                f"{sorted(set(params) - {'script'})}"
-            )
-        return "script_heuristic", src
+        if isinstance(spec, dict):
+            # the four frequency variables are the only params
+            check_keys(spec, {"source"}, "script")
+        check_keys(params, {"script"}, "script_heuristic")
+        return "script_heuristic", spec["source"] if isinstance(spec, dict) else spec
     ok_params = {
         "jlh": set(),
         "percentage": set(),
@@ -2210,11 +2116,7 @@ def _sig_heuristic(body: dict) -> tuple[str, str | None]:
         "chi_square": {"include_negatives", "background_is_superset"},
         "gnd": {"background_is_superset"},
     }[found[0]]
-    extra = set(params) - ok_params
-    if extra:
-        raise ValueError(
-            f"unsupported {found[0]} parameters: {sorted(extra)}"
-        )
+    check_keys(params, ok_params, found[0])
     for p in ("include_negatives", "background_is_superset"):
         if p in params and params[p] is not True:
             raise ValueError(
@@ -2492,11 +2394,6 @@ def _apply_pipeline_aggs(
             # documents). Window/shift semantics shared with moving_fn;
             # an empty window yields NULLs (the first bucket at
             # shift=0). Output: {name}_p{percent} per requested percent.
-            extra = set(pbody) - {"buckets_path", "window", "shift"}
-            if extra:
-                raise ValueError(
-                    f"unsupported moving_percentiles keys: {sorted(extra)}"
-                )
             path = pbody["buckets_path"]
             ref = (sub_specs or {}).get(path, {})
             if "percentiles" not in ref:
@@ -2553,9 +2450,6 @@ def _apply_pipeline_aggs(
             # the aggregates are bucket-cardinality work. NULL metrics
             # stay NULL and are ignored by the window aggregates (ES
             # skips empty buckets the same way).
-            extra = set(pbody) - {"buckets_path", "method", "format"}
-            if extra:
-                raise ValueError(f"unsupported normalize keys: {sorted(extra)}")
             path = metric_path(pkind, pbody["buckets_path"])
             x = F.col(path).cast("double")
             wa = w.rowsBetween(
@@ -2630,6 +2524,7 @@ def _apply_pipeline_aggs(
                     "store; raw parquet has none, so supply the trained "
                     "parameters inline)"
                 )
+            check_keys(model, {"type", "weights", "intercept"}, "inference model")
             mtype = model.get("type", "regression")
             if mtype not in ("regression", "classification"):
                 raise ValueError(
@@ -2662,7 +2557,7 @@ def _apply_pipeline_aggs(
                     compare=True,
                 ))
             )
-        elif pkind == "bucket_sort":
+        else:  # bucket_sort
             keys = [(metric_path(pkind, f), d, nf) for f, d, nf
                     in _sort_keys(pbody.get("sort", []), "bucket_sort sort")]
             # bucket-key tiebreak keeps truncation deterministic
@@ -2672,8 +2567,6 @@ def _apply_pipeline_aggs(
                 out = out.offset(frm)
             if "size" in pbody:
                 out = out.limit(int(pbody["size"]))
-        else:
-            raise ValueError(f"unsupported pipeline agg: {pkind!r}")
     hidden = [c for c in out.columns if c.startswith("__mp_")]
     return out.drop(*hidden) if hidden else out
 
@@ -2753,6 +2646,119 @@ def _attach_t_test_p(out: DataFrame, aggs_dsl: dict) -> DataFrame:
     return out
 
 
+_RANGES = {"field", "missing", "ranges"}
+_PATH = {"buckets_path"}
+_WINDOW = {"buckets_path", "window", "shift"}
+_SIGNIFICANT = {"field", "size", *_SIG_HEURISTICS}
+# The keys each aggregation kind honours; ``_check_aggs`` refuses every
+# other key and every other kind before a reader sees the request.
+_AGG_KEYS = {
+    # bucket kinds
+    "terms": {"field", "missing", "size", "order", "min_doc_count",
+              "include", "exclude"},
+    "multi_terms": {"terms", "size", "order", "min_doc_count"},
+    "date_histogram": {"field", "missing", "calendar_interval",
+                       "fixed_interval", "interval", "min_doc_count",
+                       "extended_bounds"},
+    "histogram": {"field", "missing", "interval", "min_doc_count",
+                  "extended_bounds"},
+    "range": _RANGES,
+    "date_range": _RANGES,
+    "ip_range": _RANGES,
+    "ip_prefix": {"field", "missing", "prefix_length", "is_ipv6",
+                  "append_prefix_length"},
+    "categorize_text": {"field", "missing", "max_matched_tokens"},
+    "geo_distance": {"field", "origin", "ranges"},
+    "geohash_grid": {"field", "precision"},
+    "geotile_grid": {"field", "precision"},
+    # metric kinds
+    "sum": {"field", "missing"},
+    "avg": {"field", "missing"},
+    "min": {"field", "missing"},
+    "max": {"field", "missing"},
+    "value_count": {"field", "missing"},
+    # precision_threshold bounds the error of ES's estimate; counting
+    # here is exact at every cardinality
+    "cardinality": {"field", "missing", "precision_threshold"},
+    "percentiles": {"field", "percents", "tdigest", "hdr"},
+    "percentile_ranks": {"field", "values"},
+    "stats": {"field"},
+    "extended_stats": {"field"},
+    "weighted_avg": {"value", "weight"},
+    "median_absolute_deviation": {"field", "compression", "execution_hint"},
+    "string_stats": {"field"},
+    "boxplot": {"field"},
+    "top_metrics": {"metrics", "sort", "size"},
+    "geo_centroid": {"field"},
+    "geo_bounds": {"field", "wrap_longitude"},
+    "matrix_stats": {"fields", "missing"},
+    "t_test": {"a", "b", "type"},
+    "scripted_metric": {"init_script", "map_script", "combine_script",
+                        "reduce_script", "params"},
+    "geo_line": {"point", "sort", "include_sort", "sort_order", "size"},
+    "rate": {"field", "unit"},
+    "top_hits": {"size", "sort", "_source"},
+    "reverse_nested": set(),
+    # parent pipeline kinds
+    "cumulative_sum": _PATH,
+    "derivative": _PATH,
+    "serial_diff": {"buckets_path", "lag"},
+    "moving_fn": _WINDOW | {"script"},
+    "moving_percentiles": _WINDOW,
+    "normalize": {"buckets_path", "method"},
+    "bucket_script": {"buckets_path", "script"},
+    "bucket_selector": {"buckets_path", "script"},
+    "bucket_sort": {"sort", "from", "size"},
+    "cumulative_cardinality": _PATH,
+    "inference": {"buckets_path", "model"},
+    # sibling pipeline kinds
+    "avg_bucket": _PATH,
+    "sum_bucket": _PATH,
+    "min_bucket": _PATH,
+    "max_bucket": _PATH,
+    "stats_bucket": _PATH,
+    "extended_stats_bucket": {"buckets_path", "sigma"},
+    "percentiles_bucket": {"buckets_path", "percents"},
+    "change_point": _PATH,
+    # kinds with a reader of their own
+    "frequent_item_sets": {"fields", "minimum_support", "minimum_set_size",
+                           "maximum_set_size", "max_items_per_doc"},
+    "auto_date_histogram": {"field", "buckets", "missing"},
+    "variable_width_histogram": {"field", "buckets"},
+    "random_sampler": {"probability", "seed", "id_field"},
+    "sampler": {"sort_field", "tiebreak_field", "shard_size"},
+    "diversified_sampler": {"sort_field", "tiebreak_field", "shard_size",
+                            "field", "max_docs_per_value"},
+    "rare_terms": {"field", "max_doc_count", "missing"},
+    "time_series": {"dimensions", "size"},
+    "filters": {"filters"},
+    "adjacency_matrix": {"filters", "separator"},
+    "composite": {"sources", "size", "after"},
+    "nested": {"path"},
+    "significant_terms": _SIGNIFICANT,
+    "significant_text": _SIGNIFICANT,
+    "missing": {"field"},
+    "global": set(),
+}
+
+
+def _agg_node(spec: dict) -> tuple[str, dict]:
+    """A named agg's ``(kind, body)``, its body checked against its kind's
+    row of ``_AGG_KEYS``."""
+    kind = _agg_kind(spec)
+    if kind not in _AGG_KEYS:
+        raise ValueError(f"unsupported aggregation type: {kind!r}")
+    check_keys(spec[kind], _AGG_KEYS[kind], kind)
+    return kind, spec[kind]
+
+
+def _check_aggs(aggs_dsl: dict) -> None:
+    """Check every named agg of a request subtree (``_agg_node``)."""
+    for spec in aggs_dsl.values():
+        _agg_node(spec)
+        _check_aggs(spec.get("aggs", {}))
+
+
 def es_aggregate(
     df: DataFrame, aggs_dsl: dict, fg_pred: Column | None = None,
     analyzers: dict[str, str] | None = None,
@@ -2774,6 +2780,7 @@ def _es_aggregate_impl(
     df: DataFrame, aggs_dsl: dict, fg_pred: Column | None = None,
     analyzers: dict[str, str] | None = None,
 ) -> DataFrame:
+    _check_aggs(aggs_dsl)
     siblings = {
         n: s for n, s in aggs_dsl.items()
         if isinstance(s, dict) and s and next(iter(s)) in _SIBLING_KINDS
@@ -2980,16 +2987,6 @@ def _es_aggregate_impl(
         # divergence: identical response SHAPE, reproducible (not ES's
         # cluster-seeded) bucket placement. Sub-aggs must be metrics
         # (they ride the same groupBy).
-        extra = set(body) - {"field", "buckets"}
-        if extra:
-            # initial_buffer/shard_size tune ES's online clusterer,
-            # which this deterministic rule replaces — reject loudly
-            raise ValueError(
-                f"unsupported variable_width_histogram parameters: "
-                f"{sorted(extra)} (initial_buffer/shard_size tune ES's "
-                "online clusterer, replaced here by exact quantile "
-                "placement)"
-            )
         k = int(body.get("buckets", 10))
         if not 1 <= k <= 1024:
             raise ValueError(
@@ -3034,11 +3031,6 @@ def _es_aggregate_impl(
         # rescaling of doc_count-like values is the caller's 1/p
         # multiply here); the emitted `sampling_probability` column
         # carries p for that rescale.
-        extra = set(body) - {"probability", "seed", "id_field"}
-        if extra:
-            raise ValueError(
-                f"unsupported random_sampler parameters: {sorted(extra)}"
-            )
         p = float(body["probability"])
         if not (0.0 < p < 0.5 or p == 1.0):
             raise ValueError(
@@ -3136,11 +3128,6 @@ def _es_aggregate_impl(
         # approximation) — the documented strictly-more-accurate
         # divergence. Metric sub-aggs ride the groupBy; there is no
         # ``size`` in ES's surface (the tail is the result).
-        extra = set(body) - {"field", "max_doc_count", "missing"}
-        if extra:
-            raise ValueError(
-                f"unsupported rare_terms parameters: {sorted(extra)}"
-            )
         mdc = int(body.get("max_doc_count", 1))
         if not (1 <= mdc <= 100):
             raise ValueError(
@@ -3177,11 +3164,6 @@ def _es_aggregate_impl(
         # drop (loudly documented; pre-coalesce to keep them). Plan:
         # one hash aggregation on the dimension tuple + TakeOrdered for
         # the size cap — the terms-agg shape on a compound key.
-        extra = set(body) - {"dimensions", "size"}
-        if extra:
-            raise ValueError(
-                f"unsupported time_series parameters: {sorted(extra)}"
-            )
         dims = body.get("dimensions")
         if not (isinstance(dims, list) and dims
                 and all(isinstance(d, str) for d in dims)):
@@ -3236,12 +3218,6 @@ def _es_aggregate_impl(
         def replace_rn(obj):
             if isinstance(obj, dict):
                 if set(obj) == {"reverse_nested"}:
-                    if obj["reverse_nested"]:
-                        raise ValueError(
-                            "reverse_nested supports only {} (back to the "
-                            "root document; intermediate-path step-back "
-                            "needs multi-level nesting, unsupported)"
-                        )
                     return {"cardinality": {"field": "__parent"}}
                 return {k: replace_rn(v) for k, v in obj.items()}
             return obj
@@ -3295,8 +3271,6 @@ def _es_aggregate_impl(
         # the WHOLE index. es_request routes the unfiltered frame here;
         # the wrapper contributes nothing but scope, so compile the inner
         # aggs directly.
-        if body:
-            raise ValueError("global agg takes no parameters")
         if len(sub) != 1:
             raise ValueError("global agg needs exactly one sub-aggregation")
         (_, sspec), = sub.items()
@@ -3655,6 +3629,14 @@ def _es_aggregate_impl(
     return out
 
 
+# The keys a search request without a ``retriever`` honours.
+_ENVELOPE_KEYS = {
+    "query", "aggs", "aggregations", "knn", "sort", "search_after", "from",
+    "size", "min_score", "rescore", "collapse", "_source", "script_fields",
+    "highlight", "runtime_mappings",
+}
+
+
 def es_request(
     df: DataFrame,
     request: dict,
@@ -3678,6 +3660,8 @@ def es_request(
     exactly like ``from_es_json`` + ``search``."""
     analyzers = bindings.get("analyzers")
     body = dict(request)
+    if "retriever" not in body:
+        check_keys(body, _ENVELOPE_KEYS, "envelope")
     rt = body.get("runtime_mappings")
     if rt is not None:
         # ES runtime fields (7.11+): schema-on-read columns DEFINED IN THE
@@ -3720,19 +3704,9 @@ def es_request(
                 f"'retriever' replaces {sorted(conflict)} (ES 8.14 "
                 "contract: compose inside the retriever tree)"
             )
-        # Whitelist, not blacklist: any OTHER envelope key the
-        # non-retriever path would honor (_source, post_filter,
-        # min_score, fields, explain, ...) must raise rather than be
-        # silently dropped — the retriever path returns the fixed
-        # (id, score[, n_legs]) shape and cannot reproduce them.
-        extra = set(body) - {"retriever", "size", "runtime_mappings"}
-        if extra:
-            raise ValueError(
-                f"unsupported envelope keys alongside 'retriever': "
-                f"{sorted(extra)} (this path emits the ranked "
-                "(id, score) relation only; result-shaping envelope "
-                "options belong on the non-retriever path)"
-            )
+        # the retriever path returns the fixed (id, score[, n_legs])
+        # shape, so result-shaping keys (_source, min_score, ...) raise
+        check_keys(body, {"retriever", "size", "runtime_mappings"}, "envelope")
         if tiebreak is None:
             raise ValueError(
                 "retriever requests need a tiebreak id column "
@@ -3762,10 +3736,7 @@ def es_request(
         # demonstrated approximate scale path (stored LSH/IVF/PQ
         # structures). `num_candidates` is accepted for request parity and
         # noted as satisfied trivially (exact evaluation considers all).
-        extra = set(knn) - {"field", "query_vector", "k", "num_candidates",
-                            "filter"}
-        if extra:
-            raise ValueError(f"unsupported knn keys: {sorted(extra)}")
+        check_keys(knn, _RETRIEVER_KEYS["knn"], "knn")
         if tree is not None or aggs is not None:
             raise ValueError(
                 "knn combines with neither 'query' nor 'aggs' here — "
@@ -3922,14 +3893,10 @@ def es_request(
             # query, combine the two scores, re-rank, then page. The
             # second pass runs on the WINDOW relation (window_size rows),
             # never the corpus — exactly ES's shard-top-window contract.
+            check_keys(rescore, {"window_size", "query"}, "rescore")
             rbody = rescore["query"]
-            extra = set(rescore) - {"window_size", "query"}
-            extra |= set(rbody) - {
-                "rescore_query", "query_weight", "rescore_query_weight",
-                "score_mode",
-            }
-            if extra:
-                raise ValueError(f"unsupported rescore keys: {sorted(extra)}")
+            check_keys(rbody, {"rescore_query", "query_weight",
+                               "rescore_query_weight", "score_mode"}, "rescore")
             window = int(rescore.get("window_size", 10))
             if window < frm + size:
                 raise ValueError(

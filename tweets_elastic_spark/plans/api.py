@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from tweets_elastic_spark.functions.analyzers import analyze
 from tweets_elastic_spark.plans.aggs import es_request
 from tweets_elastic_spark.plans.search import (
+    check_keys,
     from_es_json,
     search,
 )
@@ -239,6 +240,16 @@ def es_mget(
     ).orderBy("ord")
 
 
+# The keys each _rank_eval metric honours.
+_RANK_EVAL_KEYS = {
+    "precision": {"k", "relevant_rating_threshold"},
+    "recall": {"k", "relevant_rating_threshold"},
+    "mean_reciprocal_rank": {"k", "relevant_rating_threshold"},
+    "dcg": {"k", "normalize"},
+    "expected_reciprocal_rank": {"k", "maximum_relevance"},
+}
+
+
 def es_rank_eval(
     df: DataFrame,
     body: dict,
@@ -267,7 +278,7 @@ def es_rank_eval(
     * ``dcg``: Σ (2^rating − 1)/log2(rank+1) over rated hits in top-k;
       ``normalize: true`` divides by the ideal DCG from the judgment
       list (NDCG), 0.0 when no judged document has positive gain.
-    * ``expected_reciprocal_rank`` (r8): the cascade-model ERR —
+    * ``expected_reciprocal_rank``: the cascade-model ERR —
       Σ (1/r)·R_r·Π_{i<r}(1−R_i) with R = (2^rating−1)/2^max_relevance;
       unrated hits have R=0 (contribute nothing, survive the cascade),
       so only rated hits fold, in rank order, per request.
@@ -287,21 +298,12 @@ def es_rank_eval(
         raise ValueError("_rank_eval needs a non-empty 'requests' list")
     (mkind, mbody), = (body.get("metric") or {"precision": {}}).items()
     mbody = mbody or {}
-    known = {
-        "precision": {"k", "relevant_rating_threshold"},
-        "recall": {"k", "relevant_rating_threshold"},
-        "mean_reciprocal_rank": {"k", "relevant_rating_threshold"},
-        "dcg": {"k", "normalize"},
-        "expected_reciprocal_rank": {"k", "maximum_relevance"},
-    }
-    if mkind not in known:
+    if mkind not in _RANK_EVAL_KEYS:
         raise ValueError(
             f"unsupported rank_eval metric {mkind!r} "
-            f"(supported: {sorted(known)})"
+            f"(supported: {sorted(_RANK_EVAL_KEYS)})"
         )
-    extra = set(mbody) - known[mkind]
-    if extra:
-        raise ValueError(f"unsupported {mkind} parameters: {sorted(extra)}")
+    check_keys(mbody, _RANK_EVAL_KEYS[mkind], mkind)
     k = int(mbody.get("k", 10))
     threshold = int(mbody.get("relevant_rating_threshold", 1))
     spark = df.sparkSession

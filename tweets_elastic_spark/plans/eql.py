@@ -8,7 +8,7 @@ Supported subset
 ----------------
 * simple event queries: ``<category> where <condition>`` — a filtered scan
   ordered by (timestamp, tiebreaker), ES's EQL hit order.
-* sample queries (r12): ``sample [by <field>[, ...]]`` followed by >= 2
+* sample queries: ``sample [by <field>[, ...]]`` followed by >= 2
   ``[ <category> where <condition> ] [by <field>[, ...]]`` stages —
   UN-ordered per-key correlation (ES 8.6 ``sample``): one event per
   stage joined on the global ``by`` key and/or PER-STAGE keys (each
@@ -32,7 +32,7 @@ Supported subset
         ...
 
   Join keys are the global ``by`` fields and/or PER-STAGE ``by`` fields
-  (r11 — ES's cross-field sequence join: every stage must then carry
+  (ES's cross-field sequence join: every stage must then carry
   the same number of fields, whose values must agree across stages;
   keys compare as string renderings, NULL key values drop the stage
   match). A sequence with neither refuses loudly — keyless correlation
@@ -40,7 +40,7 @@ Supported subset
 
   ``<category>`` matches the event-category field (``any`` matches every
   event); conditions are boolean combinations — ``and`` / ``or`` /
-  ``not`` / parentheses at ES EQL precedence (r11) — of
+  ``not`` / parentheses at ES EQL precedence — of
   ``field OP literal`` comparisons (``== != > >= < <=``),
   ``field [not] in (lit, ...)`` membership tests, the literals
   ``true`` / ``false``, and the condition functions ``startsWith`` /
@@ -50,7 +50,7 @@ Supported subset
   variant where folding makes sense. NULL fields follow SQL
   three-valued logic (never match, including through ``not`` — the
   semantics the DuckDB oracles evaluate). Unknown functions and bad
-  arities refuse loudly. ``cidrMatch`` takes IPv4 and (r12) IPv6
+  arities refuse loudly. ``cidrMatch`` takes IPv4 and IPv6
   blocks — IPv6 compiles to group-wise 16-bit prefix compares over a
   pure-Catalyst '::'-expanding parse (malformed / dotted-quad-embedded
   / zoned addresses evaluate NULL and match nothing; an embedded-quad
@@ -100,7 +100,7 @@ __all__ = ["parse_eql", "eql_search"]
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_.]*$")
 _CMP_OPS = ("==", "!=", ">=", "<=", ">", "<")
 
-# supported EQL condition functions (r11), canonical lowercase. Boolean
+# supported EQL condition functions, canonical lowercase. Boolean
 # funcs stand alone in a condition; numeric funcs must be compared to a
 # literal (`length(f) > 5`). The `~` suffix selects ES's case-insensitive
 # variant for the string-comparing funcs; `~` on length/cidrMatch refuses
@@ -117,7 +117,7 @@ _OCTET_RE = r"(25[0-5]|2[0-4][0-9]|1?[0-9]?[0-9])"
 
 
 def _valid_cidr(lit: str) -> bool:
-    """IPv4 'a.b.c.d/N', or IPv6 hex-group form (r12). Dotted-quad
+    """IPv4 'a.b.c.d/N', or IPv6 hex-group form. Dotted-quad
     embedding inside IPv6 refuses (the group-wise compiler has no octet
     path), as do zone indexes; host bits are fine (ES zeroes them)."""
     if _CIDR_RE.match(lit):
@@ -161,7 +161,7 @@ def _validate_func(call, src: str) -> None:
             need(a[0] == "lit" and isinstance(a[1], str)
                  and _valid_cidr(a[1]),
                  "CIDR blocks must be IPv4 'a.b.c.d/N' or IPv6 "
-                 "'h:h::h/N' literals (r12: IPv6 compiles to group-wise "
+                 "'h:h::h/N' literals (IPv6 compiles to group-wise "
                  "16-bit prefix compares, no 128-bit ints needed; "
                  "dotted-quad-embedded IPv6 like '::ffff:1.2.3.4/N' "
                  "stays unsupported)")
@@ -208,7 +208,7 @@ class BoolLit:
 
 @dataclass
 class FuncCall:
-    """A supported EQL condition function (r11). ``name`` is the
+    """A supported EQL condition function. ``name`` is the
     canonical lowercase name without the ``~`` suffix; ``insensitive``
     records the suffix (ES EQL's case-insensitive variant, e.g.
     ``startsWith~``). ``args`` holds ``("field", name)`` /
@@ -231,9 +231,9 @@ class StageFilter:
     category: str  # "any" or a category literal
     # top-level AND-joined condition nodes (Comparison | InList | NotOp |
     # BoolOp | BoolLit); a flat conjunction of comparisons stays a plain
-    # [Comparison, ...] list, the pre-r11 shape
+    # [Comparison, ...] list
     conditions: list = field(default_factory=list)
-    # per-stage join-key fields (`[ stage ] by f1, f2` — r11): values
+    # per-stage join-key fields (`[ stage ] by f1, f2`): values
     # must be EQUAL across stages for events to correlate; None = the
     # stage relies on the sequence's global `by` alone
     by: list[str] | None = None
@@ -387,8 +387,7 @@ def _tokenize_condition(text: str) -> list[str]:
 
 
 class _CondParser:
-    """Recursive descent over the tokenized condition (r11 — closes the
-    r10 verdict's 'EQL disjunctions' gap). Grammar, loosest-binding
+    """Recursive descent over the tokenized condition. Grammar, loosest-binding
     first (ES EQL precedence: ``or`` < ``and`` < ``not`` < comparison)::
 
         expr     := and_expr ('or' and_expr)*
@@ -548,8 +547,8 @@ class _CondParser:
 def _parse_condition(text: str) -> list:
     """Parse a stage condition to its top-level AND-joined node list.
     ``true`` → ``[]`` (match-all); a flat conjunction of comparisons
-    stays ``[Comparison, ...]`` (the pre-r11 shape consumers and tests
-    rely on); ``or`` / ``not`` / parens / in-lists produce nested nodes."""
+    stays ``[Comparison, ...]`` (the shape consumers and tests rely
+    on); ``or`` / ``not`` / parens / in-lists produce nested nodes."""
     text = text.strip()
     if text == "true":
         return []
@@ -607,7 +606,7 @@ def parse_eql(query: str) -> EqlQuery:
     pipes = _parse_pipes(pipe_srcs)
     if re.match(r"^sample\b", main, flags=re.IGNORECASE) and \
             "[" in _quote_mask(main):
-        # EQL sample (r12): un-ordered per-key correlation — one event
+        # EQL sample: un-ordered per-key correlation — one event
         # per stage joined on the `by` key (global `sample by ...`
         # and/or per-stage `[stage] by field`, ES 8.6 grammar), NO
         # chronology, NO maxspan. `sample where ...` (an event category
@@ -653,7 +652,7 @@ def parse_eql(query: str) -> EqlQuery:
             if tok.group(3) is not None:
                 word = rest[tok.start(3):tok.end(3)]
                 if word.lower() == "by" and last_sf is not None:
-                    # per-stage join keys (r12): `[ stage ] by f1, f2`,
+                    # per-stage join keys: `[ stage ] by f1, f2`,
                     # same consumption loop as the sequence parser
                     fields: list[str] = []
                     more = True
@@ -804,7 +803,7 @@ def parse_eql(query: str) -> EqlQuery:
                 last_sf = None
                 continue
             if word.lower() == "by" and last_sf is not None:
-                # per-stage join keys: `[ stage ] by f1, f2` (r11)
+                # per-stage join keys: `[ stage ] by f1, f2`
                 fields: list[str] = []
                 more = True
                 while more:
@@ -901,11 +900,9 @@ def _wildcard_regex(pat: str) -> str:
     return "^" + "".join(out) + "$"
 
 
-# IPv4/IPv6 parsing shared with the ip_range/ip_prefix aggs (r12 —
-# moved to functions/ip.py when ip_prefix gained its is_ipv6 path; r14
-# moved the whole cidrMatch predicate (group-wise IPv6 prefix compare +
-# IPv4 range arithmetic) there as cidr_match, shared with ES|QL's
-# CIDR_MATCH)
+# The cidrMatch predicate (group-wise IPv6 prefix compare + IPv4 range
+# arithmetic) is functions/ip.py's cidr_match, shared with ES|QL's
+# CIDR_MATCH; the ip_range/ip_prefix aggs share its address parsing
 
 
 def _func_col(call: FuncCall) -> Column:
@@ -1060,7 +1057,7 @@ def eql_search(
         for kf in eq.by:
             ev = ev.filter(F.col(kf).isNotNull())
         if eq.stages[0].by is not None:
-            # per-stage join keys (r12): each stage keys on its OWN
+            # per-stage join keys: each stage keys on its OWN
             # field(s) and the values must agree. Same convention as
             # sequences: keys compare as STRING renderings
             # (array<string>, output column `skey`); NULL key values
@@ -1136,7 +1133,7 @@ def eql_search(
     gnames = [f"__k{i}" for i in range(len(eq.by))]
     stage_by = eq.stages[0].by is not None
     if stage_by:
-        # per-stage join keys (r11): each stage contributes its OWN
+        # per-stage join keys: each stage contributes its OWN
         # field(s), and their values must be EQUAL across stages. An
         # event's stage bits can imply different candidate key values,
         # so events fan out once per DISTINCT candidate key (≤ L copies,

@@ -47,7 +47,7 @@ token, the ES-SQL/EQL convention):
   ``MV_EXPAND col``; ``DISSECT col "%{a}<sep>%{b}..."
   [APPEND_SEPARATOR="s"]`` (literal separators; every key non-greedy
   except the last; non-matching rows yield NULL fields — ES
-  semantics; r15 modifiers: ``%{}``/``%{?skip}`` drop the capture,
+  semantics; modifiers: ``%{}``/``%{?skip}`` drop the capture,
   ``%{+key}`` appends in capture order joined by APPEND_SEPARATOR,
   ``%{key->}`` lets the following separator repeat — reference keys
   and /n order modifiers refuse loudly); ``GROK col
@@ -71,16 +71,16 @@ token, the ES-SQL/EQL convention):
   numeric 0/else; numeric-looking strings take the numeric rule —
   documented), TO_IP (validation gate: malformed -> NULL),
   SPLIT(col, delim),
-  COALESCE, STARTS_WITH, ENDS_WITH, DATE_TRUNC("unit", ts), and the
-  r14 widening: TRIM/LTRIM/RTRIM, REPLACE (regex), LEFT/RIGHT,
+  COALESCE, STARTS_WITH, ENDS_WITH, DATE_TRUNC("unit", ts),
+  TRIM/LTRIM/RTRIM, REPLACE (regex), LEFT/RIGHT,
   REVERSE, REPEAT, LOCATE (1-based, 0 absent), POW/SQRT/EXP/LOG
   ([base,] value)/LOG10/FLOOR/CEIL/SIGNUM, PI()/TAU()/E(),
   GREATEST/LEAST, CIDR_MATCH(ip, "block", ... — IPv4+IPv6, literal
   blocks folded at compile time, the predicate shared with EQL's
   cidrMatch), DATE_FORMAT("pattern", ts), DATE_EXTRACT("part", ts)
   (ChronoField-name core subset, BIGINT), DATE_DIFF("unit", a, b)
-  (whole units from a to b, truncated toward zero), and the r15
-  widening: SIN/COS/TAN/ASIN/ACOS/ATAN/ATAN2/SINH/COSH/TANH/CBRT/
+  (whole units from a to b, truncated toward zero),
+  SIN/COS/TAN/ASIN/ACOS/ATAN/ATAN2/SINH/COSH/TANH/CBRT/
   HYPOT/TO_DEGREES/TO_RADIANS (1:1 Catalyst builtins), MV_APPEND,
   DATE_PARSE("pattern", s) (try_to_timestamp — NULL on unparseable),
   TO_DATETIME (ISO strings or millis-since-epoch),
@@ -138,11 +138,11 @@ token, the ES-SQL/EQL convention):
   documented strictly-more-accurate divergence shared with the
   cardinality agg), SUM/AVG/MIN/MAX, MEDIAN and PERCENTILE(expr, p)
   (EXACT interpolated — ES|QL uses t-digest; same divergence class,
-  same as DuckDB quantile_cont so oracles compare exactly), and the
-  r15 widening: WEIGHTED_AVG(value, weight) (null value OR weight
+  same as DuckDB quantile_cont so oracles compare exactly),
+  WEIGHTED_AVG(value, weight) (null value OR weight
   drops the row), STD_DEV (population, the extended_stats basis),
   MEDIAN_ABSOLUTE_DEVIATION (EXACT — upstream t-digest; shared with
-  the aggs front-end's metric, r16),
+  the aggs front-end's metric),
   VALUES (all values as a multivalue — sorted ascending here;
   upstream leaves the order unspecified), TOP(field, limit, "ASC" |
   "DESC") (bounded multivalue).
@@ -152,13 +152,13 @@ token, the ES-SQL/EQL convention):
   override same-named incoming columns (the documented ES collision
   rule), multiple lookup matches multiply rows like SQL LEFT JOIN.
 
-* ``ENRICH <policy> [ON <col>] [WITH [new =] field, ...]`` (ES 8.x,
-  r15): sugar over the LOOKUP JOIN path. The ``enrich_policies``
+* ``ENRICH <policy> [ON <col>] [WITH [new =] field, ...]`` (ES 8.x):
+  sugar over the LOOKUP JOIN path. The ``enrich_policies``
   dict stands in for ES's policy store (policy → table +
   match_field + enrich_fields); compiles to the same broadcast LEFT
   join with the same collision rule.
 
-* ``FORK (branch1) (branch2) ...`` (ES 8.19 preview, r15): every
+* ``FORK (branch1) (branch2) ...`` (ES 8.19 preview): every
   branch receives the current stream and runs its own sub-pipe;
   results union by name (missing columns NULL) with the ``_fork``
   discriminator ("fork1".."forkN"). 2-8 branches (the ES cap).
@@ -223,6 +223,7 @@ from tweets_elastic_spark.plans.query_string import (
 from tweets_elastic_spark.plans.search import (
     Match,
     bm25_match,
+    check_keys,
     haversine_meters,
     query_nodes,
 )
@@ -666,7 +667,7 @@ class _ExprParser:
             # MV_SORT(col[, order]) — order is a LITERAL "ASC"/"DESC"
             # upstream; anything else (a typo like "DSC", a column) is
             # refused at compile time instead of silently sorting
-            # ascending (ADVICE r14)
+            # ascending
             self.expect_op("(")
             c = self.expr()
             desc = False
@@ -991,7 +992,7 @@ class _ExprParser:
             # (typeof is a compile-time constant Catalyst folds):
             # upstream yields NULL for a digit STRING that fails date
             # parsing — "1718" must not silently become 1970-01-01
-            # 00:00:01.718 (ADVICE r15).
+            # 00:00:01.718.
             need(1)
             t = F.call_function("typeof", a[0])
             is_numeric = t.isin(
@@ -1038,7 +1039,7 @@ class _ExprParser:
             for i in range(2, len(pairs), 2):
                 c = c.when(pairs[i].cast("boolean"), pairs[i + 1])
             return c.otherwise(default) if default is not None else c
-        # ---- r14 widening: direct JVM mappings ------------------------
+        # ---- direct JVM mappings ------------------------------------
         # string
         if fn == "TRIM":
             need(1)
@@ -1345,8 +1346,8 @@ class _ExprParser:
             # divergence class: upstream estimates, this engine is
             # exact). NULL elements are dropped before ranking — an
             # array containing NULLs must not return NULL for high
-            # percentiles just because array_sort places NULLs last
-            # (ADVICE r15). p outside [0, 100] -> NULL, empty/NULL
+            # percentiles just because array_sort places NULLs last.
+            # p outside [0, 100] -> NULL, empty/NULL
             # input -> NULL.
             need(2)
             nn = F.filter(a[0], lambda x: x.isNotNull())
@@ -1364,8 +1365,8 @@ class _ExprParser:
         if fn == "MV_SLICE":
             # MV_SLICE(col, start[, end]) — 0-based INCLUSIVE bounds,
             # and NEGATIVE bounds count from the end (-1 = last), the
-            # upstream ES|QL semantics (ADVICE r14: a negative literal
-            # previously fed F.slice a wrong window). An empty window
+            # upstream ES|QL semantics (a negative literal must not feed
+            # F.slice a wrong window). An empty window
             # (end < start after normalization, or fully out of range)
             # is NULL, the shared MV null contract.
             if len(a) == 2:
@@ -1549,7 +1550,7 @@ def _dissect_regex(pattern: str) -> tuple[str, list[tuple]]:
     %{key} refs; every key matches non-greedily except the last, which
     takes the rest — the delimiter-based extraction semantics.
 
-    Modifiers (the upstream dissect set, r15): ``%{}`` / ``%{?name}``
+    Modifiers (the upstream dissect set): ``%{}`` / ``%{?name}``
     skip the capture (no output column); ``%{+name}`` appends this
     capture to ``name`` (joined with the command's APPEND_SEPARATOR,
     default "", in capture order); ``%{name->}`` allows the following
@@ -1752,7 +1753,7 @@ def esql(
         )
 
     # ---- processing commands ---------------------------------------------
-    # CHANGE_POINT boundedness (r15, the r14 verdict's task 4): ES caps
+    # CHANGE_POINT boundedness: ES caps
     # the command's scan at 1000 values; this engine's in-row detector is
     # a single-partition window — the coordinator-side shape, safe ONLY
     # over a bounded series. Track whether any stage has bounded the
@@ -1780,12 +1781,7 @@ def _match_builder(df: DataFrame, analyzers, tokens_cols, bm25_stats_for):
     tokens_cols = tokens_cols or {}
 
     def make(field: str, text: str, opts: dict[str, str]):
-        bad = set(opts) - {"operator", "minimum_should_match"}
-        if bad:
-            raise ValueError(
-                f"ES SQL: unsupported MATCH options {sorted(bad)} "
-                "(operator / minimum_should_match)"
-            )
+        check_keys(opts, {"operator", "minimum_should_match"}, "MATCH")
         operator = opts.get("operator", "or")
         msm = int(opts.get("minimum_should_match", 0))
         node = bm25_match(
@@ -1980,7 +1976,7 @@ def _run_stages(
             # Runs over a BOUNDED post-aggregation series (ES caps the
             # scan at 1000 values), so the single-partition window is
             # the coordinator-side shape, not a scale risk — ENFORCED
-            # above (r15): an unbounded pipe (no prior STATS/LIMIT, not
+            # above: an unbounded pipe (no prior STATS/LIMIT, not
             # a ROW source) is refused at compile time.
             val = _parse_name(p)
             k, v = p.next()
@@ -2167,7 +2163,7 @@ def _run_stages(
             df = df.select(*cols)
         elif p.eat_kw("DROP"):
             # DROP col[, pre*...] — trailing-* wildcards expand like
-            # KEEP's (r15); a pattern matching nothing is the error,
+            # KEEP's; a pattern matching nothing is the error,
             # matching the unknown-column rule
             drops = []
             while True:

@@ -17,7 +17,7 @@ verbatim on DuckDB/Postgres, which is exactly how the oracle checks it):
   the string stays verbatim-oracle-able — results are BIGINT, DuckDB's
   width, alias required and usable in GROUP BY/HAVING/ORDER BY);
   aggregates MUST be aliased (engines disagree on default names).
-  String scalar functions (r11, same verbatim-portability contract):
+  String scalar functions (same verbatim-portability contract):
   ``LCASE/UCASE/TRIM/LENGTH`` (LENGTH → BIGINT),
   ``SUBSTRING(col, start, len)`` (1-based, both engines), and variadic
   ``CONCAT`` (NULL arguments count as ``''`` — ES's and DuckDB's
@@ -92,7 +92,7 @@ _DATE_FNS = {
     "HOUR": F.hour, "MINUTE": F.minute, "SECOND": F.second,
     "DAYOFWEEK": F.dayofweek, "DAYOFYEAR": F.dayofyear,
 }
-# ES SQL's string scalar functions (r11), chosen for ANSI/DuckDB name
+# ES SQL's string scalar functions, chosen for ANSI/DuckDB name
 # parity so queries stay verbatim-oracle-able: LCASE/UCASE are DuckDB
 # aliases of lower/upper; LENGTH is BIGINT there (the Spark side casts);
 # SUBSTRING is 1-based in both; CONCAT skips NULLs in DuckDB and ES SQL,
@@ -288,7 +288,7 @@ class _Parser:
             )
         return None
 
-    # ---- scalar expressions (r11) --------------------------------------
+    # ---- scalar expressions --------------------------------------------
     def scalar_expr(self) -> Column:
         """A scalar-function call — date parts, LCASE/UCASE/TRIM, LENGTH,
         SUBSTRING(col, start, len), CONCAT(a, b, ...) — with NESTED calls

@@ -586,7 +586,7 @@ class MatchPhrase(Query):
 
 @dataclass
 class Intervals(Query):
-    """ES ``intervals`` query (r8 — the general positional front-end the
+    """ES ``intervals`` query (the general positional front-end the
     sloppy-phrase machinery specializes): the field's analyzed token
     stream must contain an interval satisfying the rule tree.
 
@@ -599,15 +599,15 @@ class Intervals(Query):
       additionally requires the terms at strictly increasing positions in
       query order (Lucene's non-overlapping ordered-interval rule).
     * ``any_of``: OR over sub-rules.
-    * ``all_of`` (r8, documented subset): composition of CONTIGUOUS
+    * ``all_of`` (documented subset): composition of CONTIGUOUS
       children — each child a ``match`` that is a single term or
       carries ``max_gaps: 0`` (a phrase). One occurrence per child,
       non-overlapping, with the composed interval's gaps — span width
       minus the children's combined width, Lucene's ``gaps()`` —
       bounded by ``max_gaps``. ``ordered: true`` requires each child
-      strictly after the previous child's end; UNORDERED (r12, formerly
-      a loud refusal) is exact for <= 4 children by ORing the ordered
-      chain over every child permutation (ES's all_of intervals must
+      strictly after the previous child's end; UNORDERED is exact for
+      <= 4 children by ORing the ordered chain over every child
+      permutation (ES's all_of intervals must
       not overlap, so any valid assignment sorts into some
       permutation). This is the multi-phrase proximity query ("'vector
       merge' … then 'order', near"). Gappy (variable-width) children
@@ -658,14 +658,7 @@ class Intervals(Query):
                 raise ValueError(
                     f"intervals {kind} needs {{'{want}': ...}}"
                 )
-            extra = set(body) - {want, "analyzer"}
-            if extra:
-                raise ValueError(
-                    f"unsupported intervals {kind} options: "
-                    f"{sorted(extra)}"
-                    + (" (use_field is out of scope)"
-                       if "use_field" in extra else "")
-                )
+            check_keys(body, {want}, f"intervals {kind}")
             if not isinstance(body[want], str) or not body[want]:
                 raise ValueError(
                     f"intervals {kind}.{want} must be a non-empty string"
@@ -674,11 +667,8 @@ class Intervals(Query):
         if kind == "match":
             if not isinstance(body, dict) or "query" not in body:
                 raise ValueError("intervals match needs {'query': ...}")
-            extra = set(body) - {"query", "max_gaps", "ordered", "analyzer"}
-            if extra:
-                raise ValueError(
-                    f"unsupported intervals match options: {sorted(extra)}"
-                )
+            check_keys(body, {"query", "max_gaps", "ordered", "analyzer"},
+                       "intervals match")
             if int(body.get("max_gaps", -1)) < -1:
                 raise ValueError("intervals max_gaps must be >= -1")
         elif kind == "any_of":
@@ -691,11 +681,7 @@ class Intervals(Query):
             for sub in body["intervals"]:
                 cls._validate(sub)
         elif kind == "all_of":
-            extra = set(body) - {"intervals", "max_gaps", "ordered"}
-            if extra:
-                raise ValueError(
-                    f"unsupported all_of options: {sorted(extra)}"
-                )
+            check_keys(body, {"intervals", "max_gaps", "ordered"}, "intervals all_of")
             subs = body.get("intervals")
             if not isinstance(subs, list) or not subs:
                 raise ValueError(
@@ -1445,7 +1431,7 @@ class GeoDistance(Query):
 
 @dataclass
 class GeoBoundingBox(Query):
-    """ES ``geo_bounding_box`` query (r8): documents whose point lies
+    """ES ``geo_bounding_box`` query: documents whose point lies
     inside the [bottom, top] × [left, right] degree box. Same numeric
     degree-column-pair location convention as GeoDistance. A box whose
     ``left > right`` crosses the antimeridian and matches the WRAPPED
@@ -1480,7 +1466,7 @@ class GeoBoundingBox(Query):
 
 @dataclass
 class GeoPolygon(Query):
-    """ES ``geo_polygon`` query (late r8): documents whose point lies
+    """ES ``geo_polygon`` query: documents whose point lies
     inside the closed polygon given as a (lat, lon) vertex list. Same
     numeric degree-column-pair location convention as GeoDistance.
     Containment is the EVEN-ODD (ray casting) rule over planar degree
@@ -2334,6 +2320,72 @@ def _scalar_or_list(v) -> list:
     return v if isinstance(v, list) else [v]
 
 
+def check_keys(body: dict, accepted, surface: str) -> None:
+    """Refuse ``body`` if it carries a key outside ``accepted``, as ES
+    refuses an unknown request key with a parse error: a key the reader
+    does not honour would otherwise answer a different request."""
+    unknown = set(body) - set(accepted)
+    if unknown:
+        raise ValueError(f"unsupported {surface} keys: {sorted(unknown)}")
+
+
+# The keys each query clause honours, by kind; ``compile_node`` refuses
+# every other key and every other kind.
+_QUERY_KEYS = {
+    "function_score": {"query", "functions", "score_mode", "boost_mode"},
+    "bool": {"must", "filter", "should", "must_not", "minimum_should_match"},
+    "constant_score": {"filter", "boost"},
+    "dis_max": {"queries", "tie_breaker"},
+    "boosting": {"positive", "negative", "negative_boost"},
+    "script_score": {"query", "script"},
+    "script": {"script"},
+    "sparse_vector": {"field", "query_vector"},
+    "wrapper": {"query"},
+    "nested": {"path", "query"},
+    "multi_match": {"query", "fields", "type", "tie_breaker", "operator"},
+    "combined_fields": {"query", "fields", "operator", "minimum_should_match",
+                        "boost"},
+    "ids": {"values"},
+    "span_first": {"match", "end"},
+    "span_or": {"clauses"},
+    "span_near": {"clauses", "slop", "in_order"},
+    "span_multi": {"match"},
+    "span_not": {"include", "exclude", "pre", "post", "dist"},
+    "span_containing": {"big", "little"},
+    "span_within": {"big", "little"},
+    "pinned": {"ids", "organic"},
+    "distance_feature": {"field", "origin", "pivot", "boost"},
+    "rank_feature": {"field", "boost", "saturation", "log", "sigmoid"},
+    "geo_distance": {"distance", "field", "origin"},
+    "geo_polygon": {"field", "points"},
+    "geo_bounding_box": {"field", "top_left", "bottom_right"},
+    "geo_shape": {"field", "shape", "relation"},
+    "exists": {"field"},
+    "match_all": set(),
+    "match_none": set(),
+}
+# Field-keyed clauses, ``{kind: {field: spec}}``: the keys ``spec`` honours
+# when it is an object.
+_FIELD_QUERY_KEYS = {
+    "match": {"query", "operator", "minimum_should_match", "fuzziness"},
+    "match_phrase": {"query", "slop"},
+    "match_phrase_prefix": {"query"},
+    "match_bool_prefix": {"query", "operator"},
+    "intervals": set(Intervals._RULE_KINDS),
+    "term": {"value"},
+    # the terms lookup; ``routing`` picks the shard holding the document,
+    # and the one lookup frame holds every document
+    "terms": {"index", "id", "path", "routing"},
+    "terms_set": {"terms", "minimum_should_match", "minimum_should_match_field"},
+    "prefix": {"value"},
+    "wildcard": {"value"},
+    "regexp": {"value"},
+    "fuzzy": {"value", "fuzziness"},
+    "range": {"gt", "gte", "lt", "lte"},
+    "span_term": {"value"},
+}
+
+
 def from_es_json(
     dsl: dict,
     *,
@@ -2364,7 +2416,9 @@ def from_es_json(
     date-math strings convert before compiling), ``geo_distance``,
     ``geo_bounding_box`` (antimeridian-aware), and ``script_score``
     (Painless arithmetic subset).
-    Unknown clause types raise (never silently drop a predicate).
+    Unknown clause types raise (never silently drop a predicate), and
+    so does a key outside the clause's row of ``_QUERY_KEYS`` /
+    ``_FIELD_QUERY_KEYS`` (never silently drop an option).
 
     Mapping-driven resolution, as in ES:
 
@@ -2444,24 +2498,24 @@ def from_es_json(
                 f"expected a single-key query object, got: {node!r}"
             )
         (kind, body), = node.items()
-        if kind == "query":  # the artifact's wrapper shape, and the top level
-            return compile_node(body, scope)
+        if kind in _FIELD_QUERY_KEYS:
+            if not isinstance(body, dict) or len(body) != 1:
+                raise ValueError(f"{kind} expects {{field: ...}}, got {body!r}")
+            (field, spec), = body.items()
+            if isinstance(spec, dict):
+                check_keys(spec, _FIELD_QUERY_KEYS[kind], kind)
+        elif kind in _QUERY_KEYS:
+            check_keys(body, _QUERY_KEYS[kind], kind)
+        else:
+            raise ValueError(f"unsupported query clause: {kind!r}")
         if kind == "function_score":
-            extra = set(body) - {"query", "functions", "score_mode", "boost_mode"}
-            if extra:
-                raise ValueError(
-                    f"unsupported function_score keys: {extra}"
-                )
             functions = []
             for fspec in body.get("functions", []):
-                fkeys = set(fspec) - {"filter"}
-                if fkeys == {"field_value_factor"}:
+                fkinds = sorted(k for k in fspec if k != "filter")
+                if fkinds == ["field_value_factor"]:
                     fvf = fspec["field_value_factor"]
-                    bad = set(fvf) - {"field", "factor", "modifier", "missing"}
-                    if bad:
-                        raise ValueError(
-                            f"unsupported field_value_factor keys: {bad}"
-                        )
+                    check_keys(fvf, {"field", "factor", "modifier", "missing"},
+                               "field_value_factor")
                     if "filter" in fspec:
                         raise ValueError(
                             "field_value_factor with a filter is unsupported"
@@ -2472,23 +2526,20 @@ def from_es_json(
                         modifier=fvf.get("modifier", "none"),
                         missing=fvf.get("missing"),
                     ))
-                elif fkeys == {"weight"}:
+                elif fkinds == ["weight"]:
                     flt = fspec.get("filter")
                     functions.append(WeightFunction(
                         float(fspec["weight"]),
                         filter=None if flt is None else compile_node(flt, scope),
                     ))
-                elif fkeys and next(iter(fkeys)) in ("gauss", "exp", "linear") \
-                        and len(fkeys) == 1:
-                    (dkind,) = fkeys
+                elif fkinds in (["gauss"], ["exp"], ["linear"]):
+                    (dkind,) = fkinds
                     if "filter" in fspec:
                         raise ValueError(
                             f"{dkind} decay with a filter is unsupported"
                         )
                     (dfield, dbody), = fspec[dkind].items()
-                    bad = set(dbody) - {"origin", "scale", "offset", "decay"}
-                    if bad:
-                        raise ValueError(f"unsupported decay keys: {bad}")
+                    check_keys(dbody, {"origin", "scale", "offset", "decay"}, "decay")
                     functions.append(DecayFunction(
                         dkind, dfield,
                         origin=float(dbody["origin"]),
@@ -2498,7 +2549,7 @@ def from_es_json(
                     ))
                 else:
                     raise ValueError(
-                        f"unsupported scoring function: {sorted(fkeys)}"
+                        f"unsupported scoring function: {fkinds}"
                     )
             return FunctionScore(
                 compile_node(body["query"], scope),
@@ -2507,11 +2558,6 @@ def from_es_json(
                 boost_mode=body.get("boost_mode", "multiply"),
             )
         if kind == "bool":
-            extra = set(body) - {
-                "must", "filter", "should", "must_not", "minimum_should_match"
-            }
-            if extra:
-                raise ValueError(f"unsupported bool keys: {extra}")
             must = [compile_node(c, scope) for c in _scalar_or_list(body.get("must", []))]
             filt = [compile_node(c, scope) for c in _scalar_or_list(body.get("filter", []))]
             must_not = [
@@ -2520,10 +2566,8 @@ def from_es_json(
             should = []
             for c in _scalar_or_list(body.get("should", [])):
                 if isinstance(c, dict) and "weight" in c:
-                    inner = c.get("query")
-                    if inner is None or set(c) - {"query", "weight"}:
-                        raise ValueError(f"bad weighted should clause: {c!r}")
-                    should.append((compile_node(inner, scope), float(c["weight"])))
+                    check_keys(c, {"query", "weight"}, "weighted should clause")
+                    should.append((compile_node(c.get("query"), scope), float(c["weight"])))
                 else:
                     should.append((compile_node(c, scope), 1.0))
             msm = int(body.get("minimum_should_match", 0))
@@ -2534,41 +2578,27 @@ def from_es_json(
                 minimum_should_match=msm,
             )
         if kind == "constant_score":
-            extra = set(body) - {"filter", "boost"}
-            if extra:
-                raise ValueError(f"unsupported constant_score keys: {extra}")
             return ConstantScore(
                 compile_node(body["filter"], scope),
                 boost=float(body.get("boost", 1.0)),
             )
         if kind == "dis_max":
-            extra = set(body) - {"queries", "tie_breaker"}
-            if extra:
-                raise ValueError(f"unsupported dis_max keys: {extra}")
             return DisMax(
                 [compile_node(c, scope) for c in body["queries"]],
                 tie_breaker=float(body.get("tie_breaker", 0.0)),
             )
         if kind == "boosting":
-            extra = set(body) - {"positive", "negative", "negative_boost"}
-            if extra:
-                raise ValueError(f"unsupported boosting keys: {extra}")
             return Boosting(
                 compile_node(body["positive"], scope),
                 compile_node(body["negative"], scope),
                 negative_boost=float(body.get("negative_boost", 0.5)),
             )
         if kind == "script_score":
-            extra = set(body) - {"query", "script"}
-            if extra:
-                raise ValueError(f"unsupported script_score keys: {extra}")
             script = body["script"]
             src = script["source"] if isinstance(script, dict) else script
             params = None
             if isinstance(script, dict):
-                bad = set(script) - {"source", "params"}
-                if bad:
-                    raise ValueError(f"unsupported script keys: {bad}")
+                check_keys(script, {"source", "params"}, "script")
                 params = script.get("params")
                 if params is not None and not all(
                     isinstance(v, (int, float)) and not isinstance(v, bool)
@@ -2584,16 +2614,11 @@ def from_es_json(
         if kind == "script":
             # filter-context Painless predicate: {"script": {"script":
             # {"source": ..., "params": ...}}}
-            extra = set(body) - {"script", "boost"}
-            if extra:
-                raise ValueError(f"unsupported script query keys: {extra}")
             script = body["script"]
             src = script["source"] if isinstance(script, dict) else script
             params = None
             if isinstance(script, dict):
-                bad = set(script) - {"source", "params", "lang"}
-                if bad:
-                    raise ValueError(f"unsupported script keys: {bad}")
+                check_keys(script, {"source", "params", "lang"}, "script")
                 if script.get("lang", "painless") != "painless":
                     raise ValueError(
                         f"unsupported script lang: {script['lang']!r}"
@@ -2609,14 +2634,6 @@ def from_es_json(
                     )
             return ScriptQuery(src, params=params)
         if kind == "sparse_vector":
-            extra = set(body) - {"field", "query_vector"}
-            if extra:
-                raise ValueError(
-                    f"unsupported sparse_vector keys: {sorted(extra)}"
-                    + (" (inference_id needs a model runtime — pass the "
-                       "expanded query_vector directly)"
-                       if "inference_id" in extra else "")
-                )
             return SparseVectorQuery(body["field"], body["query_vector"])
         if kind == "wrapper":
             # {"wrapper": {"query": "<base64 of a JSON query>"}} — ES's
@@ -2625,42 +2642,19 @@ def from_es_json(
             import base64
             import json as _json
 
-            extra = set(body) - {"query"}
-            if extra:
-                raise ValueError(f"unsupported wrapper keys: {extra}")
             try:
                 inner = _json.loads(base64.b64decode(body["query"]))
             except Exception as e:
                 raise ValueError(f"wrapper query is not base64 JSON: {e}")
             return compile_node(inner, scope)
         if kind == "regexp":
-            (field, spec), = body.items()
-            if isinstance(spec, dict):
-                extra = set(spec) - {"value"}
-                if extra:
-                    raise ValueError(
-                        f"unsupported regexp options: {extra} (flags "
-                        "enabling Lucene optional operators are rejected "
-                        "by the node itself)"
-                    )
-                pattern = spec["value"]
-            else:
-                pattern = spec
+            pattern = spec["value"] if isinstance(spec, dict) else spec
             return auto_nest(field, lambda f: Regexp(f, pattern), scope)
         if kind == "nested":
-            extra = set(body) - {"path", "query"}
-            if extra:
-                raise ValueError(f"unsupported nested keys: {extra}")
             path = leaf_field(body["path"], scope)
             return Nested(path, compile_node(body["query"], body["path"]))
         if kind == "match":
-            (field, spec), = body.items()
             if isinstance(spec, dict):
-                extra = set(spec) - {
-                    "query", "operator", "minimum_should_match", "fuzziness"
-                }
-                if extra:
-                    raise ValueError(f"unsupported match options: {extra}")
                 text = spec["query"]
                 operator = spec.get("operator", "or")
                 msm = int(spec.get("minimum_should_match", 0))
@@ -2684,10 +2678,6 @@ def from_es_json(
                 scope,
             )
         if kind == "multi_match":
-            extra = set(body) - {"query", "fields", "type", "tie_breaker",
-                                 "operator"}
-            if extra:
-                raise ValueError(f"unsupported multi_match options: {extra}")
             if body.get("type") == "cross_fields":
                 # ES cross_fields blends per-field term statistics into a
                 # term-centric score; combined_fields is ES's own
@@ -2754,12 +2744,6 @@ def from_es_json(
             # length), so a provider is required — there is no
             # constant-score fallback that would preserve the query's
             # meaning, refuse instead.
-            extra = set(body) - {"query", "fields", "operator",
-                                 "minimum_should_match", "boost"}
-            if extra:
-                raise ValueError(
-                    f"unsupported combined_fields options: {sorted(extra)}"
-                )
             if bm25_stats_for is None:
                 raise ValueError(
                     "combined_fields needs a bm25_stats_for provider "
@@ -2800,11 +2784,7 @@ def from_es_json(
                 boost=float(body.get("boost", 1.0)),
             )
         if kind == "fuzzy":
-            (field, spec), = body.items()
             if isinstance(spec, dict):
-                extra = set(spec) - {"value", "fuzziness"}
-                if extra:
-                    raise ValueError(f"unsupported fuzzy options: {extra}")
                 value, fuzziness = spec["value"], spec.get("fuzziness", "AUTO")
             else:
                 value, fuzziness = spec, "AUTO"
@@ -2817,7 +2797,6 @@ def from_es_json(
                 raise ValueError(f"ids expects {{'values': [...]}}, got {body!r}")
             return Ids(values, id_field=id_field)
         if kind == "term":
-            (field, spec), = body.items()
             value = spec["value"] if isinstance(spec, dict) else spec
             if value is None:
                 # ES rejects a null term value; compiled, `field = NULL`
@@ -2825,7 +2804,7 @@ def from_es_json(
                 raise ValueError(f"term query on {field!r} has a null value")
             return auto_nest(field, lambda f: Term(f, value), scope)
         if kind == "terms":
-            (field, values), = body.items()
+            values = spec
             if isinstance(values, dict):
                 # ES terms LOOKUP: {"index", "id", "path"} — ES's
                 # coordinator GETs that one document and expands its
@@ -2833,11 +2812,6 @@ def from_es_json(
                 # index.max_terms_count = 65536); the compile-time fetch
                 # here is the same bounded 1-document read, through the
                 # lookup_indices binding.
-                extra = set(values) - {"index", "id", "path", "routing"}
-                if extra:
-                    raise ValueError(
-                        f"unsupported terms-lookup keys: {sorted(extra)}"
-                    )
                 if lookup_indices is None or values["index"] not in lookup_indices:
                     raise ValueError(
                         f"terms lookup needs lookup_indices[{values['index']!r}] "
@@ -2867,11 +2841,6 @@ def from_es_json(
                 raise ValueError(f"terms expects a list, got: {values!r}")
             return auto_nest(field, lambda f: Terms(f, values), scope)
         if kind == "terms_set":
-            (field, spec), = body.items()
-            extra = set(spec) - {"terms", "minimum_should_match",
-                                 "minimum_should_match_field"}
-            if extra:
-                raise ValueError(f"unsupported terms_set keys: {extra}")
             return auto_nest(field, lambda f: TermsSet(
                 f, spec["terms"],
                 minimum_should_match=spec.get("minimum_should_match"),
@@ -2879,23 +2848,13 @@ def from_es_json(
                     "minimum_should_match_field"),
             ), scope)
         if kind == "prefix":
-            (field, spec), = body.items()
             value = spec["value"] if isinstance(spec, dict) else spec
             return auto_nest(field, lambda f: Prefix(f, value), scope)
         if kind == "wildcard":
-            (field, spec), = body.items()
-            pattern = (
-                spec["value"] if isinstance(spec, dict) else spec
-            )
+            pattern = spec["value"] if isinstance(spec, dict) else spec
             return auto_nest(field, lambda f: Wildcard(f, pattern), scope)
         if kind == "match_phrase":
-            (field, spec), = body.items()
             if isinstance(spec, dict):
-                extra = set(spec) - {"query", "slop"}
-                if extra:
-                    raise ValueError(
-                        f"unsupported match_phrase options: {extra}"
-                    )
                 text = spec["query"]
                 slop = int(spec.get("slop", 0))
             else:
@@ -2966,7 +2925,7 @@ def from_es_json(
             # generalize these):
             #   span_term {f: v}            -> intervals f: match v
             #   span_multi {match: {prefix|wildcard: {f: v}}}
-            #       (r13, formerly a refusal) -> intervals f:
+            #       -> intervals f:
             #       prefix/wildcard — Lucene's multi-term-as-unit-span
             #       wrapper; both engines place one span per MATCHING
             #       TOKEN position, so the translation is exact.
@@ -3034,11 +2993,6 @@ def from_es_json(
                 (field,) = fields
                 rule = {"any_of": {"intervals": [r for _, r, _ in leaves]}}
             else:
-                extra = set(body) - {"clauses", "slop", "in_order"}
-                if extra:
-                    raise ValueError(
-                        f"unsupported span_near keys: {sorted(extra)}"
-                    )
                 leaves = [span_leaf(c) for c in body["clauses"]]
                 if not leaves:
                     raise ValueError("span_near needs clauses")
@@ -3069,19 +3023,13 @@ def from_es_json(
                     }}
             return compile_node({"intervals": {field: rule}}, scope)
         if kind == "span_not":
-            # Lucene span_not (r12, formerly a refusal): include spans
-            # that do not overlap any exclude span expanded by `pre`
+            # Lucene span_not: include spans that do not overlap any
+            # exclude span expanded by `pre`
             # positions before and `dist`/`post` after. Unit-width
             # include/exclude (span_term, or span_or of span_terms)
             # reduce overlap to one window test per include position —
             # scan-local HOFs on the analyzed token stream. Wider
             # spans route to intervals, same policy as span_first.
-            extra = set(body) - {"include", "exclude", "pre", "post",
-                                 "dist"}
-            if extra:
-                raise ValueError(
-                    f"unsupported span_not keys: {sorted(extra)}"
-                )
             if "dist" in body and ("pre" in body or "post" in body):
                 raise ValueError(
                     "span_not takes dist OR pre/post, not both (ES)"
@@ -3096,7 +3044,7 @@ def from_es_json(
             ) -> tuple[str, list, list]:
                 """-> (field, literal terms, pattern specs) where specs
                 are ("prefix", lowered) / ("wildcard", anchored regex) —
-                span_multi wrappers (r13) contribute unit-width PATTERN
+                span_multi wrappers contribute unit-width PATTERN
                 positions next to the literal term positions."""
                 (nk, nb), = node.items()
                 if nk == "span_term":
@@ -3166,22 +3114,15 @@ def from_es_json(
                 (exc_vals, exc_specs), pre, post,
             )
         if kind in ("span_containing", "span_within"):
-            # Lucene span_containing / span_within (r12, formerly
-            # refusals): containment between a BIG span (span_near of
-            # unit terms with slop/in_order — the engine's minimal
-            # greedy-chain span per anchor, the documented all_of
-            # semantics — or a single span_term) and a LITTLE unit span
+            # Lucene span_containing / span_within: containment between a
+            # BIG span (span_near of unit terms with slop/in_order — the
+            # engine's minimal greedy-chain span per anchor, the documented
+            # all_of semantics — or a single span_term) and a LITTLE unit span
             # (span_term / span_or). As document-level FILTER predicates
             # the two kinds coincide — "some big span contains some
             # little span" — they differ only in WHICH span is returned
             # for scoring/highlighting, out of scope for every
             # positional node here (documented).
-            extra = set(body) - {"big", "little"}
-            if extra:
-                raise ValueError(
-                    f"unsupported {kind} keys: {sorted(extra)}"
-                )
-
             def unit_list(node: dict, role: str) -> tuple[str, list]:
                 (nk, nb), = node.items()
                 if nk == "span_term":
@@ -3247,18 +3188,7 @@ def from_es_json(
                 sc_field, sc_analyzer, sc_tok, big_terms, lit_terms,
                 slop, kind,
             )
-        if kind == "field_masking_span":
-            raise ValueError(
-                "field_masking_span is not supported — it re-reads "
-                "positions from a sibling multi-field (text vs "
-                "text.stemmed), and this engine does not model "
-                "multi-field mappings whose token streams are "
-                "position-aligned; use the intervals query (match/"
-                "any_of/all_of/prefix/wildcard), the modern positional "
-                "surface ES itself recommends over spans"
-            )
         if kind == "intervals":
-            (field, rule), = body.items()
             analyzer = analyzers.get(field)
             if analyzer is None:
                 raise ValueError(
@@ -3269,19 +3199,13 @@ def from_es_json(
             return auto_nest(
                 field,
                 lambda f: Intervals(
-                    f, rule, analyzer=analyzer,
+                    f, spec, analyzer=analyzer,
                     tokens_col=tokens_cols.get(field),
                 ),
                 scope,
             )
         if kind in ("match_phrase_prefix", "match_bool_prefix"):
-            (field, spec), = body.items()
             if isinstance(spec, dict):
-                extra = set(spec) - ({"query", "operator"}
-                                     if kind == "match_bool_prefix"
-                                     else {"query"})
-                if extra:
-                    raise ValueError(f"unsupported {kind} options: {extra}")
                 text = spec["query"]
                 operator = spec.get("operator", "or")
             else:
@@ -3302,9 +3226,6 @@ def from_es_json(
                 tokens_col=tokens_cols.get(field), operator=operator,
             ), scope)
         if kind == "pinned":
-            extra = set(body) - {"ids", "organic"}
-            if extra:
-                raise ValueError(f"unsupported pinned keys: {sorted(extra)}")
             if "ids" not in body or "organic" not in body:
                 raise ValueError(
                     "pinned expects {'ids': [...], 'organic': {...}}"
@@ -3315,11 +3236,6 @@ def from_es_json(
                 id_field=id_field,
             )
         if kind == "distance_feature":
-            extra = set(body) - {"field", "origin", "pivot", "boost"}
-            if extra:
-                raise ValueError(
-                    f"unsupported distance_feature keys: {sorted(extra)}"
-                )
             origin, pivot = body["origin"], body["pivot"]
             if not isinstance(origin, (int, float)) or \
                     not isinstance(pivot, (int, float)):
@@ -3341,9 +3257,6 @@ def from_es_json(
                 )
             field = spec.pop("field")
             boost = float(spec.pop("boost", 1.0))
-            unknown = set(spec) - {"saturation", "log", "sigmoid"}
-            if unknown:
-                raise ValueError(f"unsupported rank_feature keys: {unknown}")
             if len(spec) > 1:
                 raise ValueError(
                     f"rank_feature takes at most one function, got "
@@ -3360,11 +3273,6 @@ def from_es_json(
                 exponent=float(fb.get("exponent", 1.0)),
             )
         if kind == "geo_distance":
-            extra = set(body) - {"distance", "field", "origin"}
-            if extra:
-                raise ValueError(
-                    f"unsupported geo_distance keys: {sorted(extra)}"
-                )
             fld, origin = body.get("field"), body.get("origin")
             if not (isinstance(fld, dict) and {"lat", "lon"} <= set(fld)):
                 raise ValueError(
@@ -3382,11 +3290,6 @@ def from_es_json(
                 distance_m=parse_distance_meters(body["distance"]),
             )
         if kind == "geo_polygon":
-            extra = set(body) - {"field", "points"}
-            if extra:
-                raise ValueError(
-                    f"unsupported geo_polygon keys: {sorted(extra)}"
-                )
             fld = body.get("field")
             if not (isinstance(fld, dict) and {"lat", "lon"} <= set(fld)):
                 raise ValueError(
@@ -3401,11 +3304,6 @@ def from_es_json(
             ]
             return GeoPolygon(fld["lat"], fld["lon"], pts)
         if kind == "geo_bounding_box":
-            extra = set(body) - {"field", "top_left", "bottom_right"}
-            if extra:
-                raise ValueError(
-                    f"unsupported geo_bounding_box keys: {sorted(extra)}"
-                )
             fld = body.get("field")
             if not (isinstance(fld, dict) and {"lat", "lon"} <= set(fld)):
                 raise ValueError(
@@ -3436,11 +3334,6 @@ def from_es_json(
             # bounding-box node (antimeridian wrap included), polygons to
             # the even-odd ray-casting node; indexed-shape references and
             # multi-ring polygons refuse loudly.
-            extra = set(body) - {"field", "shape", "relation"}
-            if extra:
-                raise ValueError(
-                    f"unsupported geo_shape keys: {sorted(extra)}"
-                )
             fld = body.get("field")
             if not (isinstance(fld, dict) and {"lat", "lon"} <= set(fld)):
                 raise ValueError(
@@ -3485,19 +3378,15 @@ def from_es_json(
                 return Bool(must_not=[inner])
             return inner
         if kind == "range":
-            (field, bounds), = body.items()
-            extra = set(bounds) - {"gt", "gte", "lt", "lte"}
-            if extra:
-                raise ValueError(f"unsupported range keys: {extra}")
-            return auto_nest(field, lambda f: Range(f, **bounds), scope)
+            return auto_nest(field, lambda f: Range(f, **spec), scope)
         if kind == "exists":
             return auto_nest(body["field"], Exists, scope)
         if kind == "match_all":
             return MatchAll()
-        if kind == "match_none":
-            return MatchNone()
-        raise ValueError(f"unsupported query clause: {kind!r}")
+        return MatchNone()
 
+    while isinstance(dsl, dict) and list(dsl) == ["query"]:  # the artifact's wrapper
+        dsl = dsl["query"]
     return compile_node(dsl, None)
 
 
@@ -3662,6 +3551,18 @@ def rrf_fuse(
     )
 
 
+# The keys each retriever kind honours. ``knn``'s ``num_candidates`` sizes
+# an approximate search, and the exact scan here considers every document.
+_RETRIEVER_KEYS = {
+    "standard": {"query", "filter"},
+    "knn": {"field", "query_vector", "k", "num_candidates", "filter"},
+    "text_similarity_reranker": {"retriever", "field", "inference_text",
+                                 "rank_window_size"},
+    "rrf": {"retrievers", "rank_window_size", "rank_constant", "filter"},
+    "linear": {"retrievers", "rank_window_size", "filter"},
+}
+
+
 def es_retriever(
     df: DataFrame,
     retriever: dict,
@@ -3693,8 +3594,8 @@ def es_retriever(
     Compound-level ``filter`` (ES 8.16) on rrf/linear pre-applies to
     the scan every child leg reads — ES's attach-to-each-child
     semantics, expressed once so Catalyst pushes it into the shared
-    scan. Every branch guards its key set: an option this engine does
-    not honor raises instead of silently changing the result.
+    scan. A key outside the kind's row of ``_RETRIEVER_KEYS`` raises
+    instead of silently changing the result.
 
     Every leg truncates BEFORE fusion (TakeOrderedAndProject), so the
     rank windows and fusion groupBys run on leg-sized relations — the
@@ -3712,6 +3613,16 @@ def es_retriever(
             f"a retriever is one {{kind: body}} object, got {retriever!r}"
         )
     (kind, body), = retriever.items()
+    if kind not in _RETRIEVER_KEYS:
+        raise ValueError(f"unsupported retriever kind {kind!r}")
+    check_keys(body, _RETRIEVER_KEYS[kind], f"{kind} retriever")
+
+    def filtered(scan: DataFrame) -> DataFrame:
+        """``scan`` under the node's optional ``filter``."""
+        if body.get("filter") is None:
+            return scan
+        pre = from_es_json({"query": body["filter"]}, **bindings)
+        return scan.filter(pre.predicate(scan.sparkSession))
 
     def ranked(out: DataFrame, window: int) -> DataFrame:
         # leg scores round to 6 dp BEFORE ranking (the registry-wide
@@ -3727,28 +3638,11 @@ def es_retriever(
         )
 
     if kind == "standard":
-        extra = set(body) - {"query", "filter"}
-        if extra:
-            raise ValueError(
-                f"unsupported standard retriever keys: {sorted(extra)}"
-            )
-        scan = df
-        if body.get("filter") is not None:
-            pre = from_es_json({"query": body["filter"]}, **bindings)
-            scan = scan.filter(pre.predicate(scan.sparkSession))
+        scan = filtered(df)
         tree = from_es_json({"query": body["query"]}, **bindings)
         return ranked(search(scan, tree, k=None), size)
     if kind == "knn":
-        extra = set(body) - {"field", "query_vector", "k",
-                             "num_candidates", "filter"}
-        if extra:
-            raise ValueError(
-                f"unsupported knn retriever keys: {sorted(extra)}"
-            )
-        scan = df
-        if body.get("filter") is not None:
-            pre = from_es_json({"query": body["filter"]}, **bindings)
-            scan = scan.filter(pre.predicate(scan.sparkSession))
+        scan = filtered(df)
         k = int(body.get("k", size))
         out = scan.select(
             F.col(id_col),
@@ -3770,13 +3664,6 @@ def es_retriever(
         # back onto the doc scan, the similarity is one scan-local HOF
         # expression, and the re-rank is a TakeOrdered over window-sized
         # rows — no new shuffle.
-        extra = set(body) - {"retriever", "field", "inference_text",
-                             "inference_id", "rank_window_size"}
-        if extra:
-            raise ValueError(
-                f"unsupported text_similarity_reranker keys: "
-                f"{sorted(extra)}"
-            )
         child, field = body.get("retriever"), body.get("field")
         qtext = body.get("inference_text")
         if child is None or field is None or qtext is None:
@@ -3799,25 +3686,13 @@ def es_retriever(
         )
         return ranked(rescored, size)
     if kind == "rrf":
-        # Same never-silently-ignore contract as the other branches: an
-        # unknown body key (a typo'd rank_window_size, an 8.16 option
-        # this engine lacks) must raise, not return differently-shaped
-        # results. ES 8.16's compound-level `filter` IS supported: it
-        # pre-applies to the scan every child leg reads — equivalent to
-        # ES attaching it as a pre-filter to each child.
-        extra = set(body) - {"retrievers", "rank_window_size",
-                             "rank_constant", "filter"}
-        if extra:
-            raise ValueError(
-                f"unsupported rrf retriever keys: {sorted(extra)}"
-            )
+        # ES 8.16's compound-level `filter` pre-applies to the scan every
+        # child leg reads — equivalent to ES attaching it as a pre-filter
+        # to each child.
         children = body.get("retrievers")
         if not (isinstance(children, list) and len(children) >= 2):
             raise ValueError("rrf retriever needs >= 2 child retrievers")
-        scan = df
-        if body.get("filter") is not None:
-            pre = from_es_json({"query": body["filter"]}, **bindings)
-            scan = scan.filter(pre.predicate(scan.sparkSession))
+        scan = filtered(df)
         window = int(body.get("rank_window_size", size))
         legs = [
             es_retriever(scan, c, id_col=id_col, size=window, **bindings)
@@ -3826,68 +3701,54 @@ def es_retriever(
         ]
         return rrf_fuse(legs, id_col=id_col, k=size,
                         rank_constant=int(body.get("rank_constant", 60)))
-    if kind == "linear":
-        extra = set(body) - {"retrievers", "rank_window_size", "filter"}
-        if extra:
+    # linear
+    children = body.get("retrievers")
+    if not (isinstance(children, list) and children):
+        raise ValueError("linear retriever needs child retrievers")
+    scan = filtered(df)
+    window = int(body.get("rank_window_size", size))
+    fused = None
+    for c in children:
+        if not isinstance(c, dict):
             raise ValueError(
-                f"unsupported linear retriever keys: {sorted(extra)}"
+                "each linear child is {'retriever': ..., 'weight', "
+                "'normalizer'}"
             )
-        children = body.get("retrievers")
-        if not (isinstance(children, list) and children):
-            raise ValueError("linear retriever needs child retrievers")
-        scan = df
-        if body.get("filter") is not None:
-            pre = from_es_json({"query": body["filter"]}, **bindings)
-            scan = scan.filter(pre.predicate(scan.sparkSession))
-        window = int(body.get("rank_window_size", size))
-        fused = None
-        for c in children:
-            if not isinstance(c, dict):
-                raise ValueError(
-                    "each linear child is {'retriever': ..., 'weight', "
-                    "'normalizer'}"
-                )
-            child_extra = set(c) - {"retriever", "weight", "normalizer"}
-            if child_extra:
-                raise ValueError(
-                    f"unsupported linear child keys: "
-                    f"{sorted(child_extra)}"
-                )
-            spec = c.get("retriever")
-            if spec is None:
-                raise ValueError(
-                    "each linear child is {'retriever': ..., 'weight', "
-                    "'normalizer'}"
-                )
-            weight = float(c.get("weight", 1.0))
-            norm = c.get("normalizer", "none")
-            if norm not in ("none", "minmax"):
-                raise ValueError(
-                    f"unsupported linear normalizer {norm!r} "
-                    "(none/minmax)"
-                )
-            leg = es_retriever(scan, spec, id_col=id_col, size=window,
-                               **bindings).select(id_col, "score")
-            if norm == "minmax":
-                # leg-sized relation: the min/max aggregate is a 1-row
-                # broadcast over at most rank_window_size rows
-                mm = leg.agg(F.min("score").alias("_lo"),
-                             F.max("score").alias("_hi"))
-                leg = leg.crossJoin(F.broadcast(mm)).select(
-                    id_col,
-                    F.when(F.col("_hi") == F.col("_lo"), F.lit(1.0))
-                    .otherwise((F.col("score") - F.col("_lo"))
-                               / (F.col("_hi") - F.col("_lo")))
-                    .alias("score"),
-                )
-            leg = leg.select(id_col,
-                             (F.col("score") * F.lit(weight)).alias("_c"))
-            fused = leg if fused is None else fused.unionByName(leg)
-        return (
-            fused.groupBy(id_col)
-            .agg(F.round(F.sum("_c"), 6).alias("score"),
-                 F.count(F.lit(1)).cast("int").alias("n_legs"))
-            .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            .limit(int(size))
-        )
-    raise ValueError(f"unsupported retriever kind {kind!r}")
+        check_keys(c, {"retriever", "weight", "normalizer"}, "linear child")
+        spec = c.get("retriever")
+        if spec is None:
+            raise ValueError(
+                "each linear child is {'retriever': ..., 'weight', "
+                "'normalizer'}"
+            )
+        weight = float(c.get("weight", 1.0))
+        norm = c.get("normalizer", "none")
+        if norm not in ("none", "minmax"):
+            raise ValueError(
+                f"unsupported linear normalizer {norm!r} "
+                "(none/minmax)"
+            )
+        leg = es_retriever(scan, spec, id_col=id_col, size=window,
+                           **bindings).select(id_col, "score")
+        if norm == "minmax":
+            # leg-sized relation: the min/max aggregate is a 1-row
+            # broadcast over at most rank_window_size rows
+            mm = leg.agg(F.min("score").alias("_lo"),
+                         F.max("score").alias("_hi"))
+            leg = leg.crossJoin(F.broadcast(mm)).select(
+                id_col,
+                F.when(F.col("_hi") == F.col("_lo"), F.lit(1.0))
+                .otherwise((F.col("score") - F.col("_lo"))
+                           / (F.col("_hi") - F.col("_lo")))
+                .alias("score"),
+            )
+        leg = leg.select(id_col,
+                         (F.col("score") * F.lit(weight)).alias("_c"))
+        fused = leg if fused is None else fused.unionByName(leg)
+    return (
+        fused.groupBy(id_col)
+        .agg(F.round(F.sum("_c"), 6).alias("score"),
+             F.count(F.lit(1)).cast("int").alias("n_legs"))
+        .orderBy(F.col("score").desc(), F.col(id_col).asc())
+        .limit(int(size))
+    )
