@@ -1794,7 +1794,8 @@ _SIBLING_KINDS = {
 
 
 # the key-expression keys each composite source kind honours, beside the
-# source's own order, missing_bucket and missing_order
+# keys every source has
+_COMPOSITE_SOURCE_OWN = {"order", "missing_bucket", "missing_order"}
 _COMPOSITE_SOURCE_KEYS = {
     "terms": {"field", "missing"},
     "histogram": {"field", "missing", "interval"},
@@ -1839,8 +1840,8 @@ def _composite_agg(df: DataFrame, body: dict, sub: dict) -> DataFrame:
         (skind, sbody), = sspec.items()
         if skind not in _COMPOSITE_SOURCE_KEYS:
             raise ValueError(f"unsupported composite source type: {skind!r}")
-        check_keys(sbody, _COMPOSITE_SOURCE_KEYS[skind]
-                   | {"order", "missing_bucket", "missing_order"}, f"composite {skind}")
+        check_keys(sbody, _COMPOSITE_SOURCE_KEYS[skind] | _COMPOSITE_SOURCE_OWN,
+                   f"composite {skind}")
         (_, desc, nulls_first), = _sort_keys(
             {sname: sbody.get("order", "asc")}, "composite order")
         morder = sbody.get("missing_order", "default")
@@ -1862,8 +1863,7 @@ def _composite_agg(df: DataFrame, body: dict, sub: dict) -> DataFrame:
         keys.append((hidden, desc, nulls_first))
         names.append(sname)
         exprs[hidden] = _bucket_key(skind, {
-            k: v for k, v in sbody.items()
-            if k not in ("order", "missing_bucket", "missing_order")})
+            k: v for k, v in sbody.items() if k not in _COMPOSITE_SOURCE_OWN})
     if any(next(iter(s)) in _BUCKET_KINDS for s in sub.values()):
         raise ValueError("composite sub-aggs must be metrics, not buckets")
     keyed = df.withColumns(exprs)
