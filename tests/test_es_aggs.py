@@ -46,6 +46,30 @@ def test_terms_size_truncates_by_count_then_key(spark, sales):
     assert got == ["us", "eu"]
 
 
+def test_terms_without_size_returns_the_top_10(spark):
+    """ES's default ``size`` is 10, top level and nested, and ``order``
+    picks which 10 survive."""
+    counts = {f"k{i:02d}": i % 4 + 1 for i in range(12)}
+    df = spark.createDataFrame(
+        [("g", k) for k, n in counts.items() for _ in range(n)], "g string, k string")
+    top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
+
+    def buckets(aggs, key="k"):
+        return sorted(((r[key], r["doc_count"]) for r in es_aggregate(df, aggs).collect()),
+                      key=lambda kv: (-kv[1], kv[0]))
+
+    assert buckets({"k": {"terms": {"field": "k"}}}) == top
+    assert buckets({"k": {"multi_terms": {
+        "terms": [{"field": "g"}, {"field": "k"}]}}}) == [(f"g|{k}", n) for k, n in top]
+    by_key = {r["k"] for r in es_aggregate(
+        df, {"k": {"terms": {"field": "k", "order": {"_key": "desc"}}}}).collect()}
+    assert by_key == set(sorted(counts)[2:])
+    nested = es_aggregate(df, {"g": {"terms": {"field": "g"},
+                                     "aggs": {"k": {"terms": {"field": "k"}}}}})
+    assert sorted(((r["k"], r["doc_count"]) for r in nested.collect()),
+                  key=lambda kv: (-kv[1], kv[0])) == top
+
+
 def test_nested_bucket_flattened_relation(spark, sales):
     rows = {
         (r["by_region"], r["by_product"]): (r["doc_count"], r["n_ids"])

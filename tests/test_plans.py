@@ -152,10 +152,13 @@ def test_es_aggs_single_aggregation_no_join(spark):
     """The compiled aggs request is hash aggregation over the filtered scan
     — no join. Exactly two key exchanges: (keys, user_id) then (keys), the
     canonical exact-distinct plan the cardinality metric requires; every
-    other metric partially aggregates map-side in the same pass."""
+    other metric partially aggregates map-side in the same pass. A third
+    exchange, on the day alone, keeps ES's default top 10 terms per day;
+    each partition limits its rows to 10 per day before it."""
     p = plan_of(spark, "es_aggs_date_histogram")
     assert "HashAggregate" in p and "Join" not in p
-    assert p.count("Exchange hashpartitioning") == 2
+    assert p.count("Exchange hashpartitioning") == 3
+    assert "WindowGroupLimit [by_day#" in p and "row_number(), 10, Partial" in p
     assert "partial_count(distinct" in p or "count(distinct" in p
 
 

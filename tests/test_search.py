@@ -550,6 +550,24 @@ def test_from_es_json_unhonoured_keys_raise():
             from_es_json({"query": {kind: body}})
 
 
+def test_nested_span_term_keys_raise():
+    """A span_term nested in another span query goes through the span_term
+    key table: each of these used to compile with the boost dropped."""
+    from tweets_elastic_spark.plans.search import from_es_json
+
+    boosted = {"span_term": {"t": {"value": "a", "boost": 2.0}}}
+    plain = {"span_term": {"t": "b"}}
+    for dsl in (
+        {"span_near": {"clauses": [boosted, plain], "slop": 0, "in_order": True}},
+        {"span_first": {"match": boosted, "end": 2}},
+        {"span_not": {"include": boosted, "exclude": plain}},
+        {"span_containing": {"big": plain, "little": boosted}},
+    ):
+        with pytest.raises(ValueError, match=r"unsupported span_term keys: \['boost'\]"):
+            from_es_json({"query": dsl}, analyzers={"t": "standard"},
+                         tokens_cols={"t": "t__standard"})
+
+
 def test_from_es_json_scalar_and_list_clauses_and_msm():
     from tweets_elastic_spark.plans.search import from_es_json
 

@@ -21,6 +21,8 @@ fail the hex-group validation → NULL, a documented refusal.
 
 from __future__ import annotations
 
+import ipaddress
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -58,7 +60,7 @@ def ipv6_groups(col: Column) -> Column:
         F.when(has_dc & ((nl + nr) <= 7), F.concat(left, mid, right))
         .when((F.size(parts) == 1) & (nl == 8), left)
     )
-    # validation (r12, rewritten from 8 per-group regexes to ~2 cheap
+    # validation (rewritten from 8 per-group regexes to ~2 cheap
     # whole-string checks after profiling): ONE char-class regex proves
     # every character is hex-or-colon (rejecting dotted-quad embeds,
     # zone indexes, garbage), then per-group 1..4-length checks prove
@@ -167,10 +169,8 @@ def cidr_match_v4_long(ip_long: Column, cidr: str) -> Column:
     multi-block matcher parse the address once and compare per block.
     The compile-time block literal is validated via ipaddress (octets
     0-255, bits 0-32) and raises loudly on malformed input — the
-    module's convention, previously only the v6 path's (ADVICE r14:
+    module's convention, previously only the v6 path's (without it
     '300.1.2.3/8' silently produced garbage range arithmetic)."""
-    import ipaddress
-
     try:
         net = ipaddress.ip_network(cidr, strict=False)
     except ValueError as exc:
@@ -184,8 +184,6 @@ def cidr_match_v4_long(ip_long: Column, cidr: str) -> Column:
 
 def cidr_match_v6_groups(groups: Column, cidr: str) -> Column:
     """v6 prefix compare against ALREADY-PARSED 16-bit groups."""
-    import ipaddress
-
     net = ipaddress.ip_network(cidr, strict=False)
     netaddr = int(net.network_address)
     pred = groups.isNotNull()

@@ -43,6 +43,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.jpeg import decode_jpeg, jpeg_dimensions
+from tweets_elastic_spark.functions.mp3 import mp3_metadata
+from tweets_elastic_spark.functions.mp4 import mp4_metadata, mp4_sample_ranges
+from tweets_elastic_spark.functions.png import (
+    PNG_SIGNATURE,
+    decode_png_auto,
+    png_dimensions,
+)
+from tweets_elastic_spark.operators.dedup import hamming_band_pairs
+
 DECODED_SCHEMA = (
     "asset_id long, modality string, n_bytes long, sha256 string, "
     "width int, height int"
@@ -129,19 +139,13 @@ def _decode_one(payload: bytes, modality: str, mime: str) -> tuple[int, int]:
         img = decode_ppm(payload)
         return img.shape[1], img.shape[0]
     if mime == MIME_JPEG:
-        from tweets_elastic_spark.functions.jpeg import jpeg_dimensions
-
         return jpeg_dimensions(payload)
     if mime == MIME_PNG:
-        from tweets_elastic_spark.functions.png import png_dimensions
-
         return png_dimensions(payload)
     if mime == MIME_WAV:
         rate, frames = decode_wav_meta(payload)
         return rate, frames
     if mime == MIME_MP4:
-        from tweets_elastic_spark.functions.mp4 import mp4_metadata
-
         md = mp4_metadata(bytes(payload))
         for t in md.tracks:
             if t.handler == "vide":
@@ -150,8 +154,6 @@ def _decode_one(payload: bytes, modality: str, mime: str) -> tuple[int, int]:
                          "by its real modality)")
     if mime == MIME_MP3:
         # (sample_rate, n_frames) — the same convention as WAV
-        from tweets_elastic_spark.functions.mp3 import mp3_metadata
-
         md = mp3_metadata(bytes(payload))
         return md.sample_rate, md.n_frames
     if mime == MIME_FAKE:
@@ -193,8 +195,6 @@ def sample_frames(assets: DataFrame, n_frames: int = 4) -> DataFrame:
     to evenly spaced raw byte offsets (the synthetic-fixture path)."""
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from tweets_elastic_spark.functions.mp4 import mp4_sample_ranges
-
         for pdf in batches:
             out = {"asset_id": [], "frame_idx": [], "byte_offset": [], "frame_sha": []}
 
@@ -263,12 +263,6 @@ def image_dhash(
     out_schema = "_id long, _sig long"
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from tweets_elastic_spark.functions.jpeg import decode_jpeg
-        from tweets_elastic_spark.functions.png import (
-            PNG_SIGNATURE,
-            decode_png_auto,
-        )
-
         for b in batches:
             ids, sigs = [], []
             for i, payload in zip(b[id_col], b[payload_col]):
@@ -303,8 +297,6 @@ def image_near_dups(
     Hamming banding the SimHash text dedup uses
     (operators/dedup.hamming_band_pairs) — sketches band-join on 16-bit
     chunks, exact Hamming verifies. Payload bytes never join anything."""
-    from tweets_elastic_spark.operators.dedup import hamming_band_pairs
-
     return hamming_band_pairs(
         image_dhash(assets, payload_col, id_col), max_distance=max_distance
     )

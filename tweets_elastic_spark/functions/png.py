@@ -9,12 +9,12 @@ recompute decoded pixels arithmetically with no quantization caveats.
 Scope:
 
 * **Decode**: 8-bit samples in every color type (greyscale 0, truecolor
-  2, palette 3, grey+alpha 4, RGBA 6), 16-bit samples (r11) in the
+  2, palette 3, grey+alpha 4, RGBA 6), 16-bit samples in the
   non-palette color types — reduced to their HIGH byte, libpng's
   classic strip-16 — sub-byte depths 1/2/4 for greyscale and palette,
   all five scanline filters (None/Sub/Up/Average/Paeth), Adam7
-  interlace at EVERY depth (sub-byte 1/2/4 since r12, 8- and 16-bit
-  since r11), chunk CRC verification. Output is always
+  interlace at EVERY depth (sub-byte 1/2/4, 8- and 16-bit), chunk CRC
+  verification. Output is always
   (H, W, 3) uint8 RGB — alpha channels are dropped (straight, not
   composited; documented divergence from viewers that blend against a
   background).
@@ -37,6 +37,7 @@ falls back to the pure decoder here) and pinned pixel-equal to
 
 from __future__ import annotations
 
+import io
 import struct
 import zlib
 
@@ -240,7 +241,7 @@ def decode_png(payload: bytes) -> np.ndarray:
     if interlace != 1:
         raise ValueError(f"unknown PNG interlace method {interlace}")
     # Adam7: seven independently-filtered sub-images, scattered back.
-    # Sub-byte passes (r12 — depths 1/2/4, spp==1 by spec: gray or
+    # Sub-byte passes (depths 1/2/4, spp==1 by spec: gray or
     # palette) pack each pass scanline to ceil(pw·depth/8) bytes and
     # filter on bytes with bpp=1, exactly like the non-interlaced
     # sub-byte path; 16-bit passes reduce like _decode_subimage
@@ -279,7 +280,7 @@ def _decode_subimage(
 ) -> np.ndarray:
     """Non-interlaced pixel data → (H, W, spp) uint8 sample values.
 
-    Depth 16 (r11): filtering operates on bytes with bpp = spp·2 per the
+    Depth 16: filtering operates on bytes with bpp = spp·2 per the
     spec; the reconstructed big-endian u16 samples reduce to their HIGH
     byte — libpng's classic strip-16, and bit-exact for values of the
     form v·257 (the 8→16 replication the encoder emits), so round trips
@@ -319,7 +320,6 @@ def decode_png_native(payload: bytes) -> np.ndarray:
             "decode_png_native needs Pillow (libpng); install it or use "
             "decode_png / decode_png_auto"
         )
-    import io
 
     img = _PIL_Image.open(io.BytesIO(payload))
     # drop alpha without compositing: slice RGBA/LA before convert so
@@ -355,7 +355,7 @@ def encode_png(
 
     ``filter_type`` 0..4 applies that scanline filter to EVERY row —
     compression-irrelevant here; it exists so tests drive each decoder
-    unfilter path through real encoded streams. ``depth=16`` (r11)
+    unfilter path through real encoded streams. ``depth=16``
     replicates each 8-bit sample to v·257 (the spec's 8→16 scaling, high
     byte == low byte == v) and filters the big-endian byte stream with
     bpp=6 — so decode's high-byte strip round-trips bit-exactly.

@@ -162,7 +162,7 @@ def _combined_quality(c: Column, combine) -> Column:
     each bound once (two _bind levels): one regexp split + one pass per
     feature per row, however many times the combiner references them. The
     unbound form costs ~6 tokenizations per row — measurably allocation-
-    bound on parallel scans (SCALING.md quality_score row, r7)."""
+    bound on parallel scans (SCALING.md quality_score row)."""
     def build(ts: Column) -> Column:
         f = _features_from(ts, c)
         feats = F.struct(
@@ -474,7 +474,7 @@ FINGERPRINT_ORACLE_EXPR = (
 
 
 # ---------------------------------------------------------------------------
-# Unicode script profile (r13): per-document counts of characters in the
+# Unicode script profile: per-document counts of characters in the
 # major writing systems + the dominant script — the multilingual-corpus
 # routing signal (CCNet/mC4 bucket pages by script BEFORE language ID:
 # lang-id models are per-script, and mixed-script pages are a spam

@@ -30,15 +30,21 @@ push down to the parquet reader) — no Python UDF in any query-time plan.
 
 from __future__ import annotations
 
+import hashlib
+import itertools
 import json
+import math
 import os
+import shutil
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from tweets_elastic_spark.functions.analyzers import materialize_tokens
+from tweets_elastic_spark.functions.analyzers import analyze_text, materialize_tokens
 from tweets_elastic_spark.functions.vectors import col_sql
+from tweets_elastic_spark.operators.lm import fit_bigram_lm
 from tweets_elastic_spark.operators.similarity import (
     ivf_cell_col,
     lsh_tables,
@@ -48,6 +54,7 @@ from tweets_elastic_spark.operators.similarity import (
     rh_signature_col,
     train_quantizer,
 )
+from tweets_elastic_spark.plans.search import Bm25Stats, Fuzzy, _like_escape
 from tweets_elastic_spark.sources.catalog import fan_out, load_table
 
 # Bump to invalidate previously-built fixture indexes on disk.
@@ -121,8 +128,6 @@ def build_index(
     segments without touching existing ones. Statistics are per-segment
     and aggregated at lookup, so an increment never recomputes or rewrites
     global stats."""
-    import shutil
-
     # A rebuild must not inherit stale increment segments from a previous
     # life of this directory (older format version, or a different corpus
     # that hashed here) — readers scan the whole parent dir.
@@ -175,8 +180,6 @@ def _write_doc_segment(
 
     No id-dedup shuffle: enrichment is a per-row projection over sources
     whose ids are already unique (the ETL sink enforced overwrite-by-id)."""
-    from pyspark.sql import Observation
-
     seg = f"segment={segment}"
     spec = spec or DOC_TOKEN_SPEC
     tok_cols = [f"{c}__{a}" for c, ans in spec.items() for a in ans]
@@ -239,8 +242,6 @@ def _write_emb_segment(
 ) -> int | None:
     """Write one EMBEDDING index segment: stored LSH signatures + IVF cell
     assignments + PQ codes against the fixed base-build structure."""
-    from pyspark.sql import Observation
-
     seg = f"segment={segment}"
     enriched = enrich_embeddings(fan_out(emb), centroids, pq_books=pq_books)
     obs = None
@@ -293,8 +294,6 @@ def index_increment(
 
     Returns documents indexed; 0 means the DOCUMENT stream is caught up
     (the embedding stream may still have advanced — check the store)."""
-    from pyspark.sql import Observation
-
     meta = read_index_meta(index_dir)
     centroids = np.asarray(meta["centroids"], dtype=np.float64)
     # PQ codebooks stay fixed from the base build, like the quantizer.
@@ -344,8 +343,6 @@ def index_dir_for(sf_dir: str, root: str | None = None) -> str:
     """Cache directory for a fixture's index: basename for readability
     plus an abspath hash so distinct roots with the same leaf name (two
     'sf0.01' dirs) can never share — and thrash-rebuild — one cache."""
-    import hashlib
-
     ap = os.path.abspath(sf_dir).rstrip("/")
     tag = hashlib.md5(ap.encode()).hexdigest()[:8]
     return os.path.join(root or DEFAULT_INDEX_ROOT, f"{os.path.basename(ap)}-{tag}")
@@ -383,8 +380,6 @@ def index_stats(spark: SparkSession, index_dir: str) -> dict:
     version. Counts come from parquet FOOTERS (metadata-only, no data
     scan); bytes from the file system. The operational read an operator
     runs before deciding to compact (compact_index_segments) or reindex."""
-    import pyarrow.parquet as pq
-
     meta = read_index_meta(index_dir)
     out: dict = {
         "version": meta.get("version"),
@@ -445,8 +440,6 @@ def bm25_stats_from_index(
     reflected immediately without rewriting anything. Tokens absent from
     the dictionary get df=0 (same as the aggregation path: nothing
     contains them)."""
-    from tweets_elastic_spark.plans.search import Bm25Stats
-
     terms_dir = f"token_stats__{tok_col}"
     rows = []
     if os.path.isdir(os.path.join(index_dir, terms_dir)):
@@ -502,8 +495,6 @@ def index_bm25_provider(spark: SparkSession, index_dir: str):
     current segment set, so a tree reusing the same match clause in
     scoring and filter context looks up once, and a lookup after an
     increment or a compaction sees the new statistics."""
-    from tweets_elastic_spark.functions.analyzers import analyze_text
-
     cache: dict[tuple, object] = {}
 
     def provider(columns, analyzer: str, text: str):
@@ -554,8 +545,6 @@ def fuzzy_expand(
     levenshtein. Returns the matching vocabulary terms (a handful), which
     the caller turns into a plain arrays_overlap — at 100 TB the per-row
     work is an exact token lookup, not an edit-distance loop."""
-    from tweets_elastic_spark.plans.search import Fuzzy
-
     d = Fuzzy("_", term, fuzziness=fuzziness).max_edits()
     if d == 0:
         return [term]
@@ -633,8 +622,6 @@ def suggest_completion(
     edit distance of the typed input, so 'spqr' still completes to
     'spark...'. Cost shape: vocabulary-bounded, never corpus-bounded.
     Returns (suggestion, weight), weight desc / suggestion asc."""
-    from tweets_elastic_spark.plans.search import _like_escape
-
     vocab = (
         read_stats(spark, index_dir, f"token_stats__{tok_col}")
         .groupBy("token")
@@ -704,12 +691,6 @@ def suggest_phrase(
     LM (which a production deployment trains once and persists).
 
     Returns (suggestion, score, n_edits), best first, deterministic."""
-    import itertools
-    import math
-
-    from tweets_elastic_spark.functions.analyzers import analyze_text
-    from tweets_elastic_spark.operators.lm import fit_bigram_lm
-
     tokens = analyze_text(spark, text, "standard")
     if len(tokens) < 2:
         raise ValueError(
@@ -804,8 +785,6 @@ def compact_index_segments(spark: SparkSession, index_dir: str) -> int:
     fresh WatermarkStore resumes from the right place.
 
     Returns the number of segments merged (1 = already compact, no-op)."""
-    import shutil
-
     marker_path = os.path.join(index_dir, "_COMPACTION_READY")
 
     def finish_swaps(tree_names: list[str], meta: dict) -> None:

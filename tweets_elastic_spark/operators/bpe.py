@@ -33,9 +33,13 @@ SURVEY §6's LLM-training-data north star.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens
 
 END = "</w>"
 
@@ -46,8 +50,6 @@ def word_freqs(
     """(word, freq) over the lowercase alnum pre-tokenization — the
     aggregated relation BPE trains on. One shuffle; map-side combine does
     the heavy lifting (output is vocabulary-sized, Zipf-bounded)."""
-    from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens
-
     toks = docs.select(
         F.explode(lower_alnum_tokens(F.col(text_col))).alias("word")
     )
@@ -156,8 +158,6 @@ def bpe_encode(
 
     @F.pandas_udf("array<string>")
     def _encode(texts: pd.Series) -> pd.Series:
-        import re
-
         memo: dict[str, list[str]] = {}
 
         def enc(text) -> list[str]:

@@ -23,12 +23,19 @@ into fixed token-budget training sequences.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens, pin_computed
 from tweets_elastic_spark.functions.hashing import hash60
+from tweets_elastic_spark.functions.robots import make_parse_udf, robots_allowed_col
 from tweets_elastic_spark.functions.textstats import token_count
-from tweets_elastic_spark.operators.dedup import _shingle_posting_list
+from tweets_elastic_spark.operators.dedup import (
+    _shingle_posting_list,
+    _tokens_projection,
+)
 
 # ---------------------------------------------------------------------------
 # Benchmark decontamination (the GPT-3-style n-gram overlap filter: a
@@ -361,13 +368,10 @@ def c4_line_filter(
         & ~F.col(text_col).contains("{")
     )
     if bad_words:
-        import re as _re
-
         pattern = (
-            r"(?i)\b(" + "|".join(_re.escape(w) for w in bad_words) + r")\b"
+            r"(?i)\b(" + "|".join(re.escape(w) for w in bad_words) + r")\b"
         )
         page_ok = page_ok & ~F.col(text_col).rlike(pattern)
-    from tweets_elastic_spark.functions.analyzers import pin_computed
 
     return (
         docs.filter(page_ok)
@@ -406,9 +410,6 @@ def dup_ngram_stats(
     contribute their whole text as one gram (word_shingles_from_tokens's
     short-doc contract), so every doc appears in the output.
     """
-    from tweets_elastic_spark.functions.hashing import hash60
-    from tweets_elastic_spark.operators.dedup import _shingle_posting_list
-
     # Postings key on the portable 60-bit gram hash and materialize once
     # (the jaccard_pairs treatment): a 13-gram is a ~90-char string,
     # so hashing shrinks both shuffles ~10×, and the df aggregation + the
@@ -471,8 +472,6 @@ def span_dedup(
     dup_ngram_stats, not the pair generators. The token projection
     materializes once (localCheckpoint), shared by window generation and
     rebuild."""
-    from tweets_elastic_spark.operators.dedup import _tokens_projection
-
     toks = _tokens_projection(corpus, text_col, id_col).localCheckpoint()
     n = F.size("_toks")
     win_structs = F.when(n >= k, F.transform(
@@ -492,8 +491,6 @@ def span_dedup(
     # projection TWICE (aggregation build + join probe side), and that
     # projection is the operator's CPU core (an md5 per token position);
     # the window form evaluates it once and drops the join outright
-    from pyspark.sql.window import Window
-
     w_h = Window.partitionBy("_h")
     dup_starts = (
         windows
@@ -565,7 +562,6 @@ def chunk_documents(
             f"need 0 <= overlap < max_tokens, got overlap={overlap}, "
             f"max_tokens={max_tokens}"
         )
-    from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens
 
     stride = max_tokens - overlap
     base = docs.select(
@@ -639,8 +635,6 @@ def url_quality_filter(
     Adds the parsed ``host`` column for downstream grouping/blocklist
     joins. Every rule is a scan-local expression — the gate rides the
     scan, no shuffle, the cheapest possible 100 TB pass."""
-    import re as _re
-
     u = F.col(url_col)
     p = url_parts(u)
     depth = F.size(F.filter(F.split(p["path"], "/"),
@@ -657,7 +651,7 @@ def url_quality_filter(
     )
     if blocked_fragments:
         pat = "(?i)(" + "|".join(
-            _re.escape(w) for w in blocked_fragments) + ")"
+            re.escape(w) for w in blocked_fragments) + ")"
         ok = ok & ~u.rlike(pat)
     return docs.filter(ok).withColumn("host", url_parts(u)["host"])
 
@@ -713,10 +707,6 @@ def robots_gate(
     is never shuffled. Hosts missing from ``robots`` (or with a NULL
     body) are allowed, per spec. Adds ``robots_allowed`` before
     filtering so callers can audit; returns allowed rows."""
-    from tweets_elastic_spark.functions.robots import (
-        make_parse_udf, robots_allowed_col,
-    )
-
     _parse = make_parse_udf(agent)
     rules = robots.select(
         F.col(host_col).alias("__rhost"),

@@ -26,12 +26,18 @@ fixed so reruns and oracle comparisons are stable.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from tweets_elastic_spark.functions.textstats import normalized_text, simple_tokens
+from tweets_elastic_spark.functions.hashing import hash60
+from tweets_elastic_spark.functions.textstats import (
+    fingerprint_md5,
+    normalized_text,
+    simple_tokens,
+)
 from tweets_elastic_spark.functions.vectors import col_sql, cosine, dot, norm
 from tweets_elastic_spark.operators.similarity import lsh_tables, rh_signature_col
 from tweets_elastic_spark.sources.catalog import fan_out
@@ -216,8 +222,6 @@ def dedup_near_best_survivors(
     keeper pick is one window rank over the cluster-membership relation
     (cluster-sized, never corpus-sized — only docs that appear in a pair
     enter the window). Untouched docs pass through."""
-    from pyspark.sql.window import Window
-
     comp = connected_components(pairs, id_a, id_b)
     members = comp.join(
         docs.select(F.col(id_col).alias("id"), F.col(quality_col)),
@@ -332,8 +336,6 @@ def jaccard_pairs(
     Cost: Σ_shingle df² instead of |docs|² — sub-quadratic on real corpora;
     cap pathological shingles with ``max_df`` at scale.
     """
-    from tweets_elastic_spark.functions.hashing import hash60
-
     # Postings carry the PORTABLE 60-bit hash of the shingle, not the
     # string: every downstream shuffle/group key is then 8 bytes
     # instead of a ~25-char phrase — measured 13.8 s → ~8 s at the sf1
@@ -418,7 +420,6 @@ def _hash_params(num: int, seed: int = 42) -> list[tuple[int, int]]:
 
 def _make_minhash_udf(num_hashes: int, seed: int):
     params = _hash_params(num_hashes, seed)
-    import numpy as np
 
     a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
     b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
@@ -554,8 +555,6 @@ def _simhash_from_hashes(hash_lists: "pd.Series") -> "pd.Series":
     only the 64-way bit-vote reduction runs here, fully vectorized in NumPy
     over the Arrow batch (a 64-term SQL aggregate per row was ~100× slower
     in whole-stage codegen — expression-tree blowup)."""
-    import numpy as np
-
     def reduce_one(hs):
         if hs is None or len(hs) == 0:
             return 0
@@ -800,8 +799,6 @@ def dedup_increment_exact(
     carry internal dups), then drop everything whose fingerprint the
     corpus already holds (left_anti on the slim fp store — one shuffle on
     the 128-bit key, the corpus data itself is never touched)."""
-    from tweets_elastic_spark.functions.textstats import fingerprint_md5
-
     # compute the fingerprint ONCE and reuse it for both steps (the
     # within-batch keeper selection and the corpus anti-join) — not
     # dedup_exact + a second fingerprint projection

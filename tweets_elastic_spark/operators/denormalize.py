@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.sources.catalog import load_table
+
 
 def group_children(
     child: DataFrame,
@@ -131,7 +133,7 @@ def build_tweet_documents(
 
     Shuffle shape: each requested child stream is grouped on its own and
     left-joined onto the spine (five small exchanges + five joins that
-    AQE co-partitions on conversation_id). An r16 experiment fused the
+    AQE co-partitions on conversation_id). An experiment fused the
     five groupings into ONE aggregation over a tagged union — fewer
     exchanges on paper, but measured 5× SLOWER end-to-end at sf0.1
     (4.6 s → 24.6 s): the union row carries every branch's struct slot,
@@ -322,8 +324,6 @@ def denormalize_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per order: item count, exact decimal revenue, and the sorted array of
     line numbers; orders with no lineitems keep n_items=0 and [].
     """
-    from tweets_elastic_spark.sources.catalog import load_table
-
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
 

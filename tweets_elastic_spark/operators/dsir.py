@@ -44,14 +44,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens
 from tweets_elastic_spark.functions.hashing import HASH60_BITS, hash60
 
 _TWO60 = float(1 << HASH60_BITS)
 
 
 def _tokens(text: Column) -> Column:
-    from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens
-
     return lower_alnum_tokens(text)
 
 

@@ -41,8 +41,8 @@ Scale design (100 TB corpus, thousands of stored queries):
   matches for must_not/range/exists shapes.
 
 Reference parity note: the reference workload (src/main.py) has no
-percolation — this is part of the beyond-reference ES surface (VERDICT r5
-"what a user of Elasticsearch runs"), with full SQL oracles like every
+percolation — this is part of the beyond-reference ES surface ("what a user
+of Elasticsearch runs"), with full SQL oracles like every
 other operator.
 """
 
@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tweets_elastic_spark.plans.search import Query
+from tweets_elastic_spark.plans.search import Query, from_es_json
 
 
 def percolate(
@@ -111,8 +111,6 @@ def percolate_from_json(
     """Percolate a dict of {query_id: ES-JSON query body} — the wire shape
     a percolator index stores. Each artifact compiles through the same
     ``from_es_json`` front-end as forward search."""
-    from tweets_elastic_spark.plans.search import from_es_json
-
     stored = [
         (qid, from_es_json(
             body, analyzers=analyzers, tokens_cols=tokens_cols,

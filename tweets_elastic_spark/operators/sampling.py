@@ -12,8 +12,10 @@ hex thresholds).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens
 
 _HEX_SPACE = 16 ** 8
 
@@ -94,8 +96,6 @@ def unimax_allocation(
     Returns (lang, n_tok, quota). Window functions over an L-row relation
     — the coordinator-side math, kept in-plan so the oracle can replay it.
     """
-    from pyspark.sql.window import Window
-
     if max_epochs <= 0 or budget <= 0:
         raise ValueError(
             f"budget and max_epochs must be > 0, got {budget}, {max_epochs}"
@@ -165,10 +165,6 @@ def unimax_sample(
     duplicated — the shards stage repeats by ``epochs`` at write time.
 
     Returns (id, lang, n_tok, epochs)."""
-    from pyspark.sql.window import Window
-
-    from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens
-
     toks = docs.select(
         F.col(id_col),
         F.col(lang_col),

@@ -25,12 +25,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens
 from tweets_elastic_spark.functions.hashing import hash60
 
 
 def _tokens(text: Column) -> Column:
-    from tweets_elastic_spark.functions.analyzers import lower_alnum_tokens
-
     return lower_alnum_tokens(text)
 
 

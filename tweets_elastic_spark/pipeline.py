@@ -36,11 +36,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark import schemas
 from tweets_elastic_spark.operators.denormalize import build_tweet_documents
+from tweets_elastic_spark.sinks import write_documents
 from tweets_elastic_spark.sources.incremental import WatermarkStore
 
 # children that only ever join to the page's own documents (safe to prune);
@@ -64,10 +65,6 @@ def load_tweet_tables(spark: SparkSession, src_dir: str) -> dict[str, DataFrame]
 def etl_full(spark: SparkSession, src_dir: str, sink_path: str) -> int:
     """One-shot ETL: scan → denormalize → id-keyed overwrite. Returns docs
     written (counted by observe() on the write job — no re-scan)."""
-    from pyspark.sql import Observation
-
-    from tweets_elastic_spark.sinks import write_documents
-
     obs = Observation()
     docs = build_tweet_documents(load_tweet_tables(spark, src_dir)).observe(
         obs, F.count(F.lit(1)).alias("n")

@@ -106,8 +106,14 @@ partial aggregation map-side), metrics are built-in JVM aggregates, and
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import ipaddress
+import math
+import re
+
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from tweets_elastic_spark.functions.analyzers import analyze
 from tweets_elastic_spark.functions.hashing import hash60
@@ -461,8 +467,6 @@ def _bucket_key(kind: str, body: dict) -> Column:
         # land in the last tile. The y formula is written with the exact
         # operation sequence the oracle mirrors (ln(tan+1/cos), literal
         # π), so tile-boundary floors agree bit-for-bit.
-        import math
-
         fld = body.get("field")
         if not (isinstance(fld, dict) and {"lat", "lon"} <= set(fld)):
             raise ValueError(
@@ -732,8 +736,6 @@ def _ip_range_v6_key(src: Column, ranges: list) -> Column:
     Malformed / IPv4 / zoned addresses parse to NULL → no bucket.
     Mixing IPv4 and IPv6 specs in one agg raises (ES splits these by
     field type)."""
-    import ipaddress
-
     bounds = []
     for r in ranges:
         try:
@@ -931,8 +933,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
             # result would depend on shard count. NULL doc values drop
             # out of the sum (ES throws on missing doc values; the
             # NULL contract here is the documented safer divergence).
-            import re as _re
-
             def _src(key: str) -> str:
                 v = body.get(key)
                 if isinstance(v, dict):
@@ -941,7 +941,7 @@ def _metric_cols(aggs: dict) -> list[Column]:
                     raise ValueError(f"scripted_metric needs {key}")
                 return v
 
-            mi = _re.fullmatch(
+            mi = re.fullmatch(
                 r"\s*state\.(\w+)\s*=\s*(\d+(?:\.\d+)?)\s*;?\s*",
                 _src("init_script"),
             )
@@ -957,9 +957,9 @@ def _metric_cols(aggs: dict) -> list[Column]:
                     "init_script PER SHARD, so a nonzero seed makes the "
                     "result shard-count-dependent"
                 )
-            mm = _re.fullmatch(
+            mm = re.fullmatch(
                 rf"\s*state\.{var}\s*\+=\s*(.+?)\s*;?\s*",
-                _src("map_script"), _re.DOTALL,
+                _src("map_script"), re.DOTALL,
             )
             if mm is None:
                 raise ValueError(
@@ -967,7 +967,7 @@ def _metric_cols(aggs: dict) -> list[Column]:
                     f"'state.{var} += <arithmetic>' (the supported "
                     "custom-sum shape)"
                 )
-            mc = _re.fullmatch(
+            mc = re.fullmatch(
                 rf"\s*return\s+state\.{var}\s*;?\s*",
                 _src("combine_script"),
             )
@@ -976,7 +976,7 @@ def _metric_cols(aggs: dict) -> list[Column]:
                     f"scripted_metric combine_script must be "
                     f"'return state.{var}'"
                 )
-            mr = _re.fullmatch(
+            mr = re.fullmatch(
                 r"\s*(?:double\s+)?(\w+)\s*=\s*0(?:\.0)?\s*;\s*"
                 r"for\s*\(\s*(\w+)\s+in\s+states\s*\)\s*"
                 r"\{\s*\1\s*\+=\s*\2\s*;?\s*\}\s*"
@@ -1350,8 +1350,6 @@ def _metric_cols(aggs: dict) -> list[Column]:
                 check_keys(sp, {"field", "filter"}, f"t_test.{l}")
                 c = F.col(sp["field"]).cast("double")
                 if "filter" in sp:
-                    from pyspark.sql import SparkSession
-
                     pred = from_es_json(sp["filter"]).predicate(
                         SparkSession.getActiveSession()
                     )
@@ -2001,8 +1999,6 @@ def _jlh_rank(
     ``doc_totals`` — a 1-row (_fg_total, _bg_total) relation counting
     DOCS — which broadcast-cross-joins here (coordinator-scale, like the
     window-sum it replaces)."""
-    from pyspark.sql.window import Window
-
     if doc_totals is not None:
         g = g.crossJoin(F.broadcast(doc_totals))
     else:
@@ -2213,8 +2209,6 @@ def _fill_empty_buckets(
     contract (bounds are clamped onto the bucket lattice)."""
     eb = body.get("extended_bounds") or {}
     if kind == "histogram":
-        import math
-
         width = float(body["interval"])
         bounds = out.agg(
             F.min(name).alias("_lo"), F.max(name).alias("_hi")
@@ -2287,8 +2281,6 @@ def _apply_pipeline_aggs(
     list; this is the same shape — the window runs on the post-aggregation
     bucket relation (histogram cardinality, not corpus cardinality), so the
     single-partition window is the semantics, not a scale bug."""
-    from pyspark.sql.window import Window
-
     ordered_kinds = ("cumulative_sum", "derivative", "moving_fn",
                      "serial_diff", "moving_percentiles")
     if any(next(iter(s)) in ordered_kinds for s in pipes.values()) \
@@ -2578,8 +2570,6 @@ def _top_hits(
     given sort — a window rank over the bucket key, the per-group-top-k
     plan (one exchange on the bucket key, no self-join). Returns one row
     per (bucket, hit) with the bucket key + ``_source`` columns."""
-    from pyspark.sql.window import Window
-
     size = int(body.get("size", 3))
     keys = _sort_keys(body.get("sort", []), "top_hits sort")
     if not keys:
@@ -2626,11 +2616,8 @@ def _attach_t_test_p(out: DataFrame, aggs_dsl: dict) -> DataFrame:
     ]
     if not names:
         return out
-    from pyspark.sql.functions import pandas_udf
 
     def _p_batch(t, df_):
-        import pandas as pd
-
         return pd.Series([
             None if tv is None or dv is None or pd.isna(tv) or pd.isna(dv)
             else student_t_two_sided_p(float(tv), float(dv))
@@ -2837,7 +2824,6 @@ def _es_aggregate_impl(
                         "change_point needs a histogram-family parent "
                         "(an ordered metric series)"
                     )
-                from pyspark.sql.window import Window
 
                 w_all = Window.orderBy(F.col(pname).asc())
                 w_cum = w_all.rowsBetween(
@@ -3077,8 +3063,6 @@ def _es_aggregate_impl(
         # window rank per diversity key (riding a single exchange on that
         # key) + TakeOrderedAndProject for the sample, then the ordinary
         # sub-agg machinery over sample-cardinality rows.
-        from pyspark.sql.window import Window
-
         sort_field = body.get("sort_field")
         if sort_field is None:
             raise ValueError(
@@ -3374,7 +3358,8 @@ def _es_aggregate_impl(
         return _top_hits(df, _bucket_key(kind, body), name, th_body)
 
     keys = [(_bucket_key(kind, body), name)]
-    size = body.get("size") if kind in ("terms", "multi_terms") else None
+    # ES's terms and multi_terms return the top 10 buckets by default
+    size = body.get("size", 10) if kind in ("terms", "multi_terms") else None
 
     # one optional nested bucket level
     nested_bucket = [
@@ -3551,14 +3536,12 @@ def _es_aggregate_impl(
             out = out.orderBy(
                 F.col("doc_count").desc(), F.col(name).asc()
             ).limit(int(size))
-    sub_size = (sub_body.get("size")
+    sub_size = (sub_body.get("size", 10)
                 if nested_bucket and sub_kind in ("terms", "multi_terms") else None)
     if sub_size is not None:
         # ES truncates a nested terms level PER PARENT bucket: top-size
         # leaves by doc_count desc / key asc. Runs after the parent
         # truncation, which ranks parents by their full doc_count.
-        from pyspark.sql.window import Window
-
         w_sub = Window.partitionBy(name).orderBy(
             F.col("doc_count").desc(), F.col(sub_name).asc()
         )
@@ -3587,7 +3570,6 @@ def _es_aggregate_impl(
                 "cumulative_cardinality needs a histogram-family parent "
                 f"bucket (deterministic key order), got {kind!r}"
             )
-        from pyspark.sql.window import Window
 
         w_cc = (
             Window.orderBy(F.col(name).asc())
@@ -3827,8 +3809,6 @@ def es_request(
             # group under the request sort, THEN rank globally — a window
             # rank over the collapse key (one exchange on that key), the
             # same per-group-top-1 plan top_hits uses, no self-join.
-            from pyspark.sql.window import Window
-
             cfield = collapse["field"]
             w = Window.partitionBy(cfield).orderBy(*_order_cols(keys))
             out = (
@@ -3975,8 +3955,6 @@ def es_request(
         # sentence boundaries; this fixed-window document-order variant
         # is the documented divergence, chosen because the exact same
         # arithmetic runs in SQL: string_split + list_zip + right/left).
-        import re as _re
-
         terms = match_terms_by_field(tree, df.sparkSession)
         pre = hl.get("pre_tags", ["<em>"])[0]
         post = hl.get("post_tags", ["</em>"])[0]
@@ -3987,7 +3965,7 @@ def es_request(
                     f"highlight field {field!r} has no analyzed query "
                     "terms to tag (only analyzed match clauses highlight)"
                 )
-            pattern = r"(?i)\b(" + "|".join(_re.escape(t) for t in toks) + r")\b"
+            pattern = r"(?i)\b(" + "|".join(re.escape(t) for t in toks) + r")\b"
             tagged = F.regexp_replace(F.col(field), pattern, f"{pre}$1{post}")
             nf = int((opts or {}).get("number_of_fragments", 0))
             if nf == 0:
@@ -3995,7 +3973,7 @@ def es_request(
                 continue
             fsize = int((opts or {}).get("fragment_size", 100))
             ctx = fsize // 3
-            parts = F.split(tagged, _re.escape(pre))
+            parts = F.split(tagged, re.escape(pre))
             n = F.greatest(
                 F.least(F.size(parts) - 1, F.lit(nf)), F.lit(0)
             )

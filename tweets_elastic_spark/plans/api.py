@@ -8,8 +8,9 @@ surface).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 from tweets_elastic_spark.functions.analyzers import analyze
 from tweets_elastic_spark.plans.aggs import es_request
@@ -101,8 +102,6 @@ def es_field_caps(df: DataFrame) -> DataFrame:
     rows = []
 
     def walk(prefix: str, dtype) -> None:
-        from pyspark.sql.types import ArrayType, StructType
-
         if isinstance(dtype, StructType):
             for f in dtype.fields:
                 walk(f"{prefix}.{f.name}" if prefix else f.name, f.dataType)
@@ -291,8 +290,6 @@ def es_rank_eval(
     (``request_id``, ``metric_score`` rounded at 6 dp) ordered by id;
     the overall ES ``metric_score`` is the caller's avg over the
     relation."""
-    from pyspark.sql.window import Window
-
     requests = body.get("requests")
     if not isinstance(requests, list) or not requests:
         raise ValueError("_rank_eval needs a non-empty 'requests' list")

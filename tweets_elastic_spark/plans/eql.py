@@ -86,10 +86,11 @@ scan ES's sequencer performs, minus the payloads.
 
 from __future__ import annotations
 
+import ipaddress
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.ip import cidr_match
@@ -124,7 +125,6 @@ def _valid_cidr(lit: str) -> bool:
         return True
     if ":" not in lit or "." in lit or "%" in lit or "/" not in lit:
         return False
-    import ipaddress
 
     try:
         net = ipaddress.ip_network(lit, strict=False)
@@ -1013,10 +1013,9 @@ def eql_search(
                 # TakeOrderedAndProject — the first N in EQL hit order
                 out = out.orderBy(timestamp_field, id_field).limit(pipe[1])
             elif pipe[0] == "tail":
-                from pyspark.sql import functions as _F
                 out = (
-                    out.orderBy(_F.col(timestamp_field).desc(),
-                                _F.col(id_field).desc())
+                    out.orderBy(F.col(timestamp_field).desc(),
+                                F.col(id_field).desc())
                     .limit(pipe[1])
                     .orderBy(timestamp_field, id_field)
                 )
@@ -1024,7 +1023,6 @@ def eql_search(
                 return out.agg(F.count(F.lit(1)).alias("count"))
             elif pipe[0] == "unique":
                 # EQL unique: the FIRST event per distinct value, hit order
-                from pyspark.sql.window import Window
                 w = Window.partitionBy(pipe[1]).orderBy(
                     F.col(timestamp_field).asc(), F.col(id_field).asc()
                 )
@@ -1331,7 +1329,6 @@ def eql_search(
                     f"EQL unique field {pipe[1]!r} is not a sequence "
                     f"output column (have: {out.columns})"
                 )
-            from pyspark.sql.window import Window
 
             w = Window.partitionBy(pipe[1]).orderBy(*asc)
             out = (

@@ -202,7 +202,7 @@ from __future__ import annotations
 import math as _math
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.hashing import hash60
@@ -1989,7 +1989,6 @@ def _run_stages(
                         f"ES|QL: CHANGE_POINT references unknown "
                         f"column {col!r}"
                     )
-            from pyspark.sql.window import Window
 
             w_all = Window.orderBy(F.col(key).asc())
             w_cum = w_all.rowsBetween(
@@ -2619,8 +2618,6 @@ def _inlinestats(df: DataFrame, p: _ExprParser) -> DataFrame:
 
     Same-named existing columns are overridden (the ES collision rule,
     shared with LOOKUP JOIN)."""
-    from pyspark.sql.window import Window
-
     items = _parse_agg_items(p)
     keys = []
     if p.eat_kw("BY"):

@@ -66,14 +66,16 @@ filters next to it.
 
 from __future__ import annotations
 
+import base64
 import dataclasses
 import itertools
+import json
 import math
 import re
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.analyzers import (
@@ -2386,6 +2388,59 @@ _FIELD_QUERY_KEYS = {
 }
 
 
+def _span_clauses(clauses: list, kinds: tuple, where: str,
+                  or_kinds: tuple | None = None) -> tuple[str, list]:
+    """The units of span clauses that must share one field (see
+    ``_span_units``)."""
+    read = [_span_units(c, kinds, where, or_kinds) for c in clauses]
+    fields = {f for f, _ in read}
+    if len(fields) != 1:
+        raise ValueError(
+            f"{where}: span clauses must share one field, got {sorted(fields)}"
+        )
+    return read[0][0], [u for _, units in read for u in units]
+
+
+def _span_units(node: dict, kinds: tuple, where: str,
+                or_kinds: tuple | None = None) -> tuple[str, list]:
+    """The one reader of the unit-width spans the span queries nest ->
+    (field, units): ``span_term`` gives ``("term", value)``, ``span_multi``
+    gives ``("prefix" | "wildcard", value)`` and ``span_or`` the units of
+    its clauses, read with ``or_kinds`` (default ``kinds``). ``kinds`` are
+    the span kinds the caller accepts at this position; every body goes
+    through its key table."""
+    (nk, nb), = node.items()
+    if nk not in kinds:
+        raise ValueError(
+            f"{where} must be {'/'.join(kinds)} here (got {nk!r}); "
+            "richer spans via intervals"
+        )
+    if nk == "span_term":
+        (f, v), = nb.items()
+        if isinstance(v, dict):
+            check_keys(v, _FIELD_QUERY_KEYS[nk], nk)
+            v = v["value"]
+        return f, [("term", str(v))]
+    check_keys(nb, _QUERY_KEYS[nk], nk)
+    if nk == "span_or":
+        return _span_clauses(nb["clauses"], or_kinds or kinds, where, or_kinds)
+    if "match" not in nb:
+        raise ValueError("span_multi takes {'match': <multi-term query>}")
+    (mk, mb), = nb["match"].items()
+    if mk not in ("prefix", "wildcard"):
+        raise ValueError(
+            f"span_multi supports prefix/wildcard inner queries here "
+            f"(got {mk!r}); fuzzy/regexp have no interval twin — use the "
+            "fuzzy/regexp document queries"
+        )
+    (f, v), = mb.items()
+    if isinstance(v, dict):
+        want = "prefix" if mk == "prefix" else "pattern"
+        check_keys(v, {"value", want}, f"span_multi {mk}")
+        v = v.get("value", v.get(want))
+    return f, [(mk, str(v))]
+
+
 def from_es_json(
     dsl: dict,
     *,
@@ -2639,11 +2694,8 @@ def from_es_json(
             # {"wrapper": {"query": "<base64 of a JSON query>"}} — ES's
             # escape hatch for embedding a query through systems that
             # mangle JSON; decodes and compiles like any inline clause
-            import base64
-            import json as _json
-
             try:
-                inner = _json.loads(base64.b64decode(body["query"]))
+                inner = json.loads(base64.b64decode(body["query"]))
             except Exception as e:
                 raise ValueError(f"wrapper query is not base64 JSON: {e}")
             return compile_node(inner, scope)
@@ -2887,27 +2939,8 @@ def from_es_json(
             inner = body.get("match")
             if not isinstance(inner, dict):
                 raise ValueError("span_first needs a 'match' span")
-            (ik, ib), = inner.items()
-
-            def term_of(node_body) -> tuple[str, str]:
-                (f, v), = node_body.items()
-                if isinstance(v, dict):
-                    v = v["value"]
-                return f, str(v)
-
-            if ik == "span_term":
-                leaves = [term_of(ib)]
-            elif ik == "span_or":
-                leaves = [term_of(c["span_term"]) for c in ib["clauses"]]
-            else:
-                raise ValueError(
-                    f"span_first match must be span_term/span_or here "
-                    f"(got {ik!r}); richer spans via intervals"
-                )
-            sf_fields = {f for f, _ in leaves}
-            if len(sf_fields) != 1:
-                raise ValueError("span_first terms must share one field")
-            (field,) = sf_fields
+            field, units = _span_units(inner, ("span_term", "span_or"),
+                                       "span_first match", ("span_term",))
             analyzer = analyzers.get(field)
             tok_col = tokens_cols.get(field)
             if analyzer is None or tok_col is None:
@@ -2917,7 +2950,7 @@ def from_es_json(
                     "analyzed token sequences)"
                 )
             return SpanFirst(field, analyzer, tok_col,
-                             [v for _, v in leaves], end_pos)
+                             [v for _, v in units], end_pos)
         if kind in ("span_term", "span_or", "span_near", "span_multi"):
             # Lucene span queries, translated onto the intervals
             # machinery (ES itself recommends intervals over spans —
@@ -2946,80 +2979,40 @@ def from_es_json(
             # (cross-field position alignment needs multi-field
             # mappings this engine does not model — intervals is the
             # supported surface).
-            def span_leaf(node: dict) -> tuple[str, dict, bool]:
-                """-> (field, interval child rule, is_plain_term)."""
-                (nk, nb), = node.items()
-                if nk == "span_term":
-                    (f, v), = nb.items()
-                    if isinstance(v, dict):
-                        v = v["value"]
-                    return f, {"match": {"query": str(v)}}, True
-                if nk == "span_multi":
-                    if set(nb) != {"match"}:
-                        raise ValueError(
-                            "span_multi takes exactly {'match': "
-                            "<multi-term query>}"
-                        )
-                    (mk, mb), = nb["match"].items()
-                    if mk not in ("prefix", "wildcard"):
-                        raise ValueError(
-                            f"span_multi supports prefix/wildcard inner "
-                            f"queries here (got {mk!r}); fuzzy/regexp "
-                            "have no interval twin — use the fuzzy/"
-                            "regexp document queries"
-                        )
-                    (f, v), = mb.items()
-                    if isinstance(v, dict):
-                        v = v.get("value", v.get(
-                            "prefix" if mk == "prefix" else "pattern"))
-                    want = "prefix" if mk == "prefix" else "pattern"
-                    return f, {mk: {want: str(v)}}, False
-                raise ValueError(
-                    f"span clauses must be span_term/span_multi here "
-                    f"(got {nk!r}); express richer compositions "
-                    "with the intervals query directly"
-                )
+            def rule_of(unit: tuple[str, str]) -> dict:
+                mk, v = unit
+                if mk == "term":
+                    return {"match": {"query": v}}
+                return {mk: {"prefix" if mk == "prefix" else "pattern": v}}
 
-            if kind in ("span_term", "span_multi"):
-                field, rule, _ = span_leaf({kind: body})
+            leaf_kinds = ("span_term", "span_multi")
+            if kind in leaf_kinds:
+                field, (unit,) = _span_units({kind: body}, (kind,), kind)
+                rule = rule_of(unit)
             elif kind == "span_or":
-                leaves = [span_leaf(c) for c in body["clauses"]]
-                fields = {f for f, _, _ in leaves}
-                if len(fields) != 1:
-                    raise ValueError(
-                        f"span_or clauses must share one field, got "
-                        f"{sorted(fields)}"
-                    )
-                (field,) = fields
-                rule = {"any_of": {"intervals": [r for _, r, _ in leaves]}}
+                field, units = _span_clauses(body["clauses"], leaf_kinds,
+                                             "span_or clause")
+                rule = {"any_of": {"intervals": [rule_of(u) for u in units]}}
             else:
-                leaves = [span_leaf(c) for c in body["clauses"]]
-                if not leaves:
+                if not body["clauses"]:
                     raise ValueError("span_near needs clauses")
-                fields = {f for f, _, _ in leaves}
-                if len(fields) != 1:
-                    raise ValueError(
-                        f"span_near clauses must share one field, got "
-                        f"{sorted(fields)}"
-                    )
-                (field,) = fields
+                field, units = _span_clauses(body["clauses"], leaf_kinds,
+                                             "span_near clause")
                 slop = int(body.get("slop", 0))
-                all_terms = all(t for _, _, t in leaves)
                 if body.get("in_order", False):
                     rule = {"all_of": {
                         "ordered": True, "max_gaps": slop,
-                        "intervals": [r for _, r, _ in leaves],
+                        "intervals": [rule_of(u) for u in units],
                     }}
-                elif all_terms:
+                elif all(mk == "term" for mk, _ in units):
                     rule = {"match": {
-                        "query": " ".join(r["match"]["query"]
-                                          for _, r, _ in leaves),
+                        "query": " ".join(v for _, v in units),
                         "max_gaps": slop, "ordered": False,
                     }}
                 else:
                     rule = {"all_of": {
                         "ordered": False, "max_gaps": slop,
-                        "intervals": [r for _, r, _ in leaves],
+                        "intervals": [rule_of(u) for u in units],
                     }}
             return compile_node({"intervals": {field: rule}}, scope)
         if kind == "span_not":
@@ -3039,63 +3032,29 @@ def from_es_json(
             if pre < 0 or post < 0:
                 raise ValueError("span_not pre/post/dist must be >= 0")
 
-            def unit_terms(
-                node: dict, role: str
-            ) -> tuple[str, list, list]:
+            def unit_terms(role: str) -> tuple[str, list, list]:
                 """-> (field, literal terms, pattern specs) where specs
                 are ("prefix", lowered) / ("wildcard", anchored regex) —
                 span_multi wrappers contribute unit-width PATTERN
                 positions next to the literal term positions."""
-                (nk, nb), = node.items()
-                if nk == "span_term":
-                    (f, v), = nb.items()
-                    return f, [str(v["value"] if isinstance(v, dict)
-                                   else v)], []
-                if nk == "span_multi":
-                    if set(nb) != {"match"}:
-                        raise ValueError(
-                            "span_multi takes exactly {'match': "
-                            "<multi-term query>}"
-                        )
-                    (mk, mb), = nb["match"].items()
-                    if mk not in ("prefix", "wildcard"):
-                        raise ValueError(
-                            f"span_multi supports prefix/wildcard "
-                            f"inner queries here (got {mk!r})"
-                        )
-                    (f, v), = mb.items()
-                    if isinstance(v, dict):
-                        v = v.get("value", v.get(
-                            "prefix" if mk == "prefix" else "pattern"))
-                    v = str(v).lower()
+                f, units = _span_units(
+                    body[role], ("span_term", "span_or", "span_multi"),
+                    f"span_not {role}")
+                specs = []
+                for mk, v in units:
+                    v = v.lower()
                     if mk == "prefix":
-                        return f, [], [("prefix", v)]
-                    rx = "".join(
-                        ".*" if ch == "*" else "." if ch == "?"
-                        else re.escape(ch) for ch in v
-                    )
-                    return f, [], [("wildcard", "^" + rx + "$")]
-                if nk == "span_or":
-                    triples = [unit_terms(c, role) for c in nb["clauses"]]
-                    fields_ = {f for f, _, _ in triples}
-                    if len(fields_) != 1:
-                        raise ValueError(
-                            f"span_not {role} clauses must share one "
-                            f"field, got {sorted(fields_)}"
+                        specs.append(("prefix", v))
+                    elif mk == "wildcard":
+                        rx = "".join(
+                            ".*" if ch == "*" else "." if ch == "?"
+                            else re.escape(ch) for ch in v
                         )
-                    return (triples[0][0],
-                            [v for _, vs, _ in triples for v in vs],
-                            [s for _, _, ss in triples for s in ss])
-                raise ValueError(
-                    f"span_not {role} must be span_term/span_or/"
-                    f"span_multi here (got {nk!r}); richer spans via "
-                    "intervals"
-                )
+                        specs.append(("wildcard", "^" + rx + "$"))
+                return f, [v for mk, v in units if mk == "term"], specs
 
-            inc_field, inc_vals, inc_specs = unit_terms(
-                body["include"], "include")
-            exc_field, exc_vals, exc_specs = unit_terms(
-                body["exclude"], "exclude")
+            inc_field, inc_vals, inc_specs = unit_terms("include")
+            exc_field, exc_vals, exc_specs = unit_terms("exclude")
             if inc_field != exc_field:
                 raise ValueError(
                     "span_not include/exclude must share one field "
@@ -3124,24 +3083,9 @@ def from_es_json(
             # for scoring/highlighting, out of scope for every
             # positional node here (documented).
             def unit_list(node: dict, role: str) -> tuple[str, list]:
-                (nk, nb), = node.items()
-                if nk == "span_term":
-                    (f, v), = nb.items()
-                    return f, [str(v["value"] if isinstance(v, dict)
-                                   else v)]
-                if nk == "span_or":
-                    pairs = [unit_list(c, role) for c in nb["clauses"]]
-                    fs = {f for f, _ in pairs}
-                    if len(fs) != 1:
-                        raise ValueError(
-                            f"{kind} {role} clauses must share one field"
-                        )
-                    return pairs[0][0], [v for _, vs in pairs for v in vs]
-                raise ValueError(
-                    f"{kind} {role} must be span_term/span_or"
-                    + ("/span_near" if role == "big" else "")
-                    + f" here (got {nk!r}); richer spans via intervals"
-                )
+                f, units = _span_units(node, ("span_term", "span_or"),
+                                       f"{kind} {role}")
+                return f, [v for _, v in units]
 
             (bk, bb), = body["big"].items()
             if bk == "span_near":
@@ -3525,8 +3469,6 @@ def rrf_fuse(
 
     Returns (id, score, n_legs) — fused score rounded at 6 dp, top-k by
     (score desc, id asc)."""
-    from pyspark.sql.window import Window
-
     if not legs:
         raise ValueError("rrf_fuse needs at least one leg")
     fused = None

@@ -8,16 +8,23 @@ external engine can reproduce them bit-for-bit).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions import pii as P
-from tweets_elastic_spark.functions.analyzers import pin_computed
 from tweets_elastic_spark.functions import textstats as T
+from tweets_elastic_spark.functions.analyzers import pin_computed
 from tweets_elastic_spark.functions.hashing import hash60_sql
+from tweets_elastic_spark.functions.html import html_main_text
 from tweets_elastic_spark.operators import curation as C
+from tweets_elastic_spark.operators.curation import robots_gate, url_parts
+from tweets_elastic_spark.operators.dsir import dsir_sample
+from tweets_elastic_spark.operators.sampling import unimax_sample
+from tweets_elastic_spark.operators.vectorize import hashed_tfidf_sparse
 from tweets_elastic_spark.registry import register
 from tweets_elastic_spark.sources.catalog import cluster_by, fan_out, load_table
+from tweets_elastic_spark.sources.warc import build_warc, warc_records
 
 # The fixture corpus has no separate eval set, so the benchmark is carved
 # deterministically: doc_id < 25 plays the benchmark, the rest the corpus.
@@ -518,8 +525,6 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bit-for-bit including the Gumbel keys.",
 )
 def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.dsir import dsir_sample
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     target = docs.filter((F.col("lang") == "en") & (F.col("source") == "src1"))
     out = dsir_sample(docs, target, k=100, n_buckets=512, seed=42,
@@ -688,8 +693,6 @@ def q_span_dedup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the bench scales.",
 )
 def q_unimax_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.sampling import unimax_sample
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return unimax_sample(docs, budget=40000.0, max_epochs=2.0)
 
@@ -765,8 +768,6 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "equivalence-pytest-pinned (test_vectorize.py).",
 )
 def q_tfidf_hashed_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.vectorize import hashed_tfidf_sparse
-
     docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
         F.col("doc_id") % 97 == 0
     )
@@ -810,7 +811,7 @@ def q_tfidf_hashed_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND NOT regexp_matches(text, '\\b(badword|verboten)\\b', 'i')
       AND len(k) >= 3
     """,
-    doc="C4-style heuristic cleaning (r10/r11, operators/curation.py "
+    doc="C4-style heuristic cleaning (operators/curation.py "
         "c4_line_filter — Raffel et al. 2020 §2.2): terminal-punctuation "
         "+ min-words + javascript line rules, lorem-ipsum / curly-brace "
         "/ bad-words / min-kept-lines page rules. Pages are planted "
@@ -880,7 +881,7 @@ _GQ = __import__(
       AND {_GQ['bullet_line_ratio']} <= 0.9
       AND {_GQ['ellipsis_line_ratio']} <= 0.3
     """,
-    doc="Gopher QUALITY rules (r10, Rae et al. 2021 A1.1 — the heuristic "
+    doc="Gopher QUALITY rules (Rae et al. 2021 A1.1 — the heuristic "
         "half pairing with gopher_repetition_filter): 50<=words<=100k, "
         "mean word length 3-10, symbol-to-word ratio (#/.../…) <= 0.1, "
         ">= 80% words with an alphabetic character, a stop-word "
@@ -900,7 +901,7 @@ def q_gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the tokenized projections to ONE evaluation site (guide §4.4):
     # unpinned, every gate predicate referencing a derived feature is
     # pushed below this projection AND below the fan_out exchange with
-    # its own inlined copy of the tokenize — the r16 plan audit counted
+    # its own inlined copy of the tokenize — a plan audit counted
     # 20 split(text) evaluations per row in a Filter running at the raw
     # scan's parallelism
     staged = docs.select(
@@ -989,7 +990,7 @@ def q_gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND NOT (host = 'spamhub.com' OR host LIKE '%.spamhub.com')
       AND NOT (host = 'tracker.net' OR host LIKE '%.tracker.net')
     """,
-    doc="URL-level page gating + domain blocklist (r12, "
+    doc="URL-level page gating + domain blocklist ("
         "operators/curation.py url_quality_filter + "
         "url_blocklist_filter — the FIRST filter real crawl pipelines "
         "apply, RefinedWeb §3.1/C4 style): scheme/IPv4-literal/port/"
@@ -1088,7 +1089,7 @@ def q_url_filter_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(octet_length(encode(k.body)) AS BIGINT) AS n_bytes
     FROM kept k JOIN surv s ON k.doc_id = s.doc_id
     """,
-    doc="The END-TO-END crawl-to-corpus pipeline (r12): WARC archives "
+    doc="The END-TO-END crawl-to-corpus pipeline: WARC archives "
         "-> record walk (sources/warc.py, both layouts) -> HTTP "
         "status/mime gate -> URL quality gate + domain-blocklist "
         "anti-join (operators/curation.py) -> byte-length gate -> "
@@ -1102,10 +1103,6 @@ def q_url_filter_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fingerprint groupBy for the dedup stage.",
 )
 def q_crawl_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from tweets_elastic_spark.sources.warc import build_warc, warc_records
-
     did = F.col("doc_id")
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
@@ -1174,8 +1171,6 @@ def q_crawl_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact-dup survivor pick as ONE window pass (min doc_id per text)
     # instead of groupBy + self-join on the long text key — halves the
     # text-keyed shuffles; same keeper semantics as dedup_exact.
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("text")
     return (
         clean.withColumn("__keep", F.min("doc_id").over(w))
@@ -1185,7 +1180,7 @@ def q_crawl_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HTML main-content extraction (r13): the boilerplate-removal stage between
+# HTML main-content extraction: the boilerplate-removal stage between
 # WARC ingestion and text curation. The fixture corpus is plain text, so the
 # row PLANTS a deterministic HTML page around each document (the
 # c4_line_filter precedent): chrome nav, link-dominated sidebar, short h1,
@@ -1277,8 +1272,6 @@ _HTML_POST = (
         "revision (module docstring).",
 )
 def q_html_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.html import html_main_text
-
     docs = fan_out(
         load_table(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull()
@@ -1418,7 +1411,7 @@ _HTML_KEEP_SQL = (
            CAST(length(k.main_text) AS BIGINT) AS main_chars
     FROM kept k JOIN surv s ON k.doc_id = s.doc_id
     """,
-    doc="crawl_corpus_pipeline extended one stage (r13): WARC archives "
+    doc="crawl_corpus_pipeline extended one stage: WARC archives "
         "-> record walk -> status/mime gate -> URL quality + blocklist "
         "gates -> HTML MAIN-CONTENT EXTRACTION (functions/html.py, the "
         "trafilatura slot: bodies are chrome-wrapped HTML pages, the "
@@ -1435,11 +1428,6 @@ _HTML_KEEP_SQL = (
         "differ only in chrome.",
 )
 def q_crawl_main_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from tweets_elastic_spark.functions.html import html_main_text
-    from tweets_elastic_spark.sources.warc import build_warc, warc_records
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     ).select(
@@ -1503,7 +1491,7 @@ def q_crawl_main_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §4.4): unpinned, the min-main-chars gate is pushed below the
     # projection with its own inlined copy of the whole block-split +
     # entity-cleanup chain and the projection carries one more copy per
-    # extracted field — the r16 plan audit counted 4 copies per record
+    # extracted field — a plan audit counted 4 copies per record
     ext = clean.select(
         "doc_id", "host", pin_computed(m).alias("_m"),
     ).select(
@@ -1512,7 +1500,6 @@ def q_crawl_main_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_m.n_blocks").alias("n_blocks"),
         F.col("_m.n_kept").alias("n_kept"),
     ).filter(F.length("main_text") >= 200)
-    from pyspark.sql.window import Window
 
     w = Window.partitionBy("main_text")
     return (
@@ -1526,7 +1513,7 @@ def q_crawl_main_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# robots.txt gate (r13). Planted per-host robots bodies: four host
+# robots.txt gate. Planted per-host robots bodies: four host
 # classes — prefix rules with a longer Allow carve-out, a wildcard Allow
 # beating a shorter Disallow, a $-anchored exact Disallow under a
 # specific-agent decoy group, and no robots at all. The engine parses
@@ -1536,7 +1523,7 @@ def q_crawl_main_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ROBOTS_BODIES = {
     0: "User-agent: *\nDisallow: /private/\nAllow: /private/public/",
-    # class 1 carries the r14 QUERY-COMPONENT rule: REP matching is
+    # class 1 carries the QUERY-COMPONENT rule: REP matching is
     # path+query, so '/*?session=' must deny '/q/a7?session=7' even
     # though the PATH alone never contains '?'
     1: ("User-agent: *\nDisallow: /p/\nAllow: /p/4*\n"
@@ -1576,7 +1563,7 @@ _ROBOTS_BODIES = {
     )
     ORDER BY doc_id
     """,
-    doc="RFC 9309 robots.txt gate at corpus scale (r13): per-host robots "
+    doc="RFC 9309 robots.txt gate at corpus scale: per-host robots "
         "bodies parse ONCE (Arrow-batched pandas UDF over the hosts-sized "
         "relation: group selection incl. a specific-agent decoy group, "
         "wildcard->regex compilation), compiled rule arrays broadcast-join "
@@ -1585,8 +1572,8 @@ _ROBOTS_BODIES = {
         "robots_gate). The planted classes exercise the Allow carve-out "
         "under a Disallow prefix, a wildcard Allow beating a shorter "
         "Disallow, the $ end anchor denying only the exact path, a "
-        "QUERY-component rule ('/*?session=' — REP matches path+query, "
-        "r14) and the no-robots default-allow. The oracle derives every "
+        "QUERY-component rule ('/*?session=' — REP matches path+query) "
+        "and the no-robots default-allow. The oracle derives every "
         "verdict "
         "independently from the planted rule semantics — the engine's "
         "parser/matcher is what is under test. Scale shape: the page "
@@ -1630,7 +1617,6 @@ def q_robots_gate_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
             body.alias("robots_txt"),
         )
     )
-    from tweets_elastic_spark.operators.curation import robots_gate, url_parts
 
     kept = robots_gate(pages, robots, url_col="url")
     p = url_parts(F.col("url"))

@@ -12,9 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions import textstats as T
+from tweets_elastic_spark.functions.hashing import HASH60_BITS, hash60, hash60_sql
+from tweets_elastic_spark.functions.textstats import fingerprint_md5
 from tweets_elastic_spark.functions.vectors import cosine, vec_sql
 from tweets_elastic_spark.operators import dedup as D
 from tweets_elastic_spark.operators import similarity as S
+from tweets_elastic_spark.operators.dedup import dedup_increment_exact
 from tweets_elastic_spark.registry import bench_variant, register
 from tweets_elastic_spark.sources.catalog import load_table
 
@@ -74,7 +78,7 @@ def q_dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the pair select; the clustering/survivor oracles extend it with a
 # recursive reachability CTE.
 def _j_ctes(src: str = "documents") -> str:
-    # postings key on hash60(shingle), mirroring the engine (r8): the
+    # postings key on hash60(shingle), mirroring the engine: the
     # Spark side shuffles 8-byte hashed keys instead of phrase strings,
     # and because both engines hash identically, even a collision (2⁻⁶⁰
     # per shingle pair) would merge the same postings on both sides.
@@ -198,7 +202,7 @@ def q_dedup_near_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @bench_variant(
     "minhash_lsh_near_dups",
-    doc="PRODUCTION fast path (bench-only since r13): the identical "
+    doc="PRODUCTION fast path (bench-only): the identical "
         "MinHash(64)+LSH(16 bands) algorithm as the full-oracle "
         "minhash_lsh_near_dups_portable entry, base hash swapped to "
         "xxhash64 (JVM codegen, ~3x md5 throughput) — which exists only "
@@ -213,7 +217,7 @@ def q_minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @bench_variant(
     "simhash_near_dups",
-    doc="PRODUCTION fast path (bench-only since r13; see "
+    doc="PRODUCTION fast path (bench-only; see "
         "minhash_lsh_near_dups): SimHash-64 Hamming<=3 banding on "
         "xxhash64; the full-oracle twin is simhash_near_dups_portable.",
 )
@@ -254,8 +258,6 @@ _TOK_SH_CTES = """toks AS (
 def _minhash_portable_oracle(
     num_hashes: int = 64, bands: int = 16, seed: int = 42, threshold: float = 0.4
 ) -> str:
-    from tweets_elastic_spark.functions.hashing import hash60_sql
-
     params = D._hash_params(num_hashes, seed)
     p = D._MERSENNE
     r = num_hashes // bands
@@ -315,8 +317,6 @@ def _minhash_portable_oracle(
         "production fast path; this twin is its engine-exact proof).",
 )
 def q_minhash_lsh_near_dups_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.hashing import hash60
-
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_candidates(docs, base_hash=hash60).filter(
         F.col("est_jaccard") >= 0.4
@@ -324,8 +324,6 @@ def q_minhash_lsh_near_dups_portable(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def _simhash_portable_oracle(max_distance: int = 3) -> str:
-    from tweets_elastic_spark.functions.hashing import HASH60_BITS, hash60_sql
-
     # bit j of the signature = sign of the multiset vote Σ ±1 over token
     # hashes; bits 60-63 are structurally 0 (60-bit hash), matching the
     # Spark UDF fed with hash60 values.
@@ -376,8 +374,6 @@ def _simhash_portable_oracle(max_distance: int = 3) -> str:
         "against DuckDB (the xxhash64 entry is the production fast path).",
 )
 def q_simhash_near_dups_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.hashing import hash60
-
     docs = load_table(spark, sf_dir, "documents")
     return D.simhash_near_pairs(docs, max_distance=3, base_hash=hash60)
 
@@ -498,7 +494,7 @@ def q_ann_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @bench_variant(
     "ann_ivf_topk",
-    doc="PRODUCTION k-means IVF top-k (bench-only since r13): the "
+    doc="PRODUCTION k-means IVF top-k (bench-only): the "
         "iterative quantizer training is not SQL-expressible, so the "
         "hard signal moved to ann_ivf_recall_profile (contract oracle "
         "over THIS exact plan); the portable seed-quantizer family "
@@ -517,7 +513,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS recall_floor_ok,
            TRUE AS rerank_exact_ok
     """,
-    doc="CONTRACT oracle for the k-means IVF family (r13, closing the "
+    doc="CONTRACT oracle for the k-means IVF family (closing the "
         "rows-only class the approx_distinct_profile way): the quantizer "
         "is iterative (not SQL-expressible), so the driver verifies the "
         "approximation CONTRACT instead of values — (1) the IVF top-10 "
@@ -944,8 +940,6 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _corpus_clean_oracle() -> str:
-    from tweets_elastic_spark.functions import textstats as T
-
     clean_ctes = f"""clean AS (
         SELECT doc_id, text FROM documents
         WHERE {T.lang_id_oracle_sql('text')} = 'en'
@@ -976,8 +970,6 @@ def _corpus_clean_oracle() -> str:
         "pushdown-friendly), the dedups are the only shuffles.",
 )
 def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions import textstats as T
-
     docs = load_table(spark, sf_dir, "documents")
     clean = (
         docs.filter(T.lang_id(F.col("text")) == "en")
@@ -1039,9 +1031,6 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_increment_survivors(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.functions.textstats import fingerprint_md5
-    from tweets_elastic_spark.operators.dedup import dedup_increment_exact
-
     docs = load_table(spark, sf_dir, "documents")
     copies = docs.filter(F.col("doc_id") % 3 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "lang", "text"
@@ -1073,7 +1062,7 @@ def q_dedup_increment_survivors(
     SELECT doc_id FROM documents
     WHERE doc_id NOT IN (SELECT doc_id FROM ranked WHERE rn > 1)
     """,
-    doc="Quality-aware near-dup keeper (r8 s4): per cluster keep the "
+    doc="Quality-aware near-dup keeper: per cluster keep the "
         "LONGEST member (n_chars, ties to min id) instead of the "
         "arbitrary min-id — the curation refinement real pipelines ship. "
         "Same connected components; the keeper pick is one window rank "
@@ -1105,7 +1094,7 @@ def q_dedup_near_best_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         vec_id ASC
     LIMIT 10
     """,
-    doc="Matryoshka-truncated retrieval (r8 s4): cosine top-k over the "
+    doc="Matryoshka-truncated retrieval: cosine top-k over the "
         "FIRST 16 dimensions only — the MRL cheap first stage (1/d of "
         "the dot-product work and bytes; cosine renormalizes the "
         "truncation implicitly). Same TakeOrderedAndProject scan shape "
@@ -1145,7 +1134,7 @@ def q_ann_cosine_topk_mrl(spark: SparkSession, sf_dir: str) -> DataFrame:
              s.vec_id ASC
     LIMIT 10
     """,
-    doc="The MRL retrieval funnel (r8 s4): a 16-dim truncated first "
+    doc="The MRL retrieval funnel: a 16-dim truncated first "
         "stage shortlists 4k candidates (TakeOrdered over 1/d-cost "
         "scores), then the FULL vectors rerank the shortlist to top-k — "
         "the two-stage shape every production vector store runs (same "

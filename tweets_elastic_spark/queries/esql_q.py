@@ -6,15 +6,18 @@ ES|QL itself does not run on DuckDB, the SEMANTICS do)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.analyzers import materialize_tokens
+from tweets_elastic_spark.plans.esql import esql
+from tweets_elastic_spark.plans.search import corpus_bm25_provider
+from tweets_elastic_spark.queries.search_q import _BM25_ORACLE
 from tweets_elastic_spark.registry import register
 from tweets_elastic_spark.sources.catalog import fan_out, load_table
 
 
 def _run(spark: SparkSession, sf_dir: str, query: str,
          table: str = "documents") -> DataFrame:
-    from tweets_elastic_spark.plans.esql import esql
-
     df = fan_out(load_table(spark, sf_dir, table))
     return esql(spark, query, {table: df})
 
@@ -31,7 +34,7 @@ def _run(spark: SparkSession, sf_dir: str, query: str,
     ORDER BY cnt DESC, source ASC
     LIMIT 5
     """,
-    doc="ES|QL (r13 — the 8.11+ piped language joins the DSL/EQL/ES-SQL "
+    doc="ES|QL (the 8.11+ piped language joins the DSL/EQL/ES-SQL "
         "front-ends): FROM | WHERE | STATS ... BY | SORT | LIMIT "
         "compiles to filter (rides the scan) + ONE partial/final hash "
         "aggregation + TakeOrderedAndProject — the translator emits "
@@ -149,7 +152,7 @@ def q_esql_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shares the BM25 oracle VERBATIM with search_bm25 / search_dsl_bm25 /
     # essql_match_query: FOUR front-ends (builder, JSON DSL, ES-SQL,
     # ES|QL), one scoring truth — any drift reddens exactly one row.
-    oracle=None,  # assigned below from search_q._BM25_ORACLE
+    oracle=_BM25_ORACLE,
     doc="ES|QL full-text (8.16 MATCH + METADATA _score): "
         "FROM documents METADATA _score | WHERE MATCH(text, ...) "
         "compiles the match through the SAME BM25Match node the other "
@@ -159,10 +162,6 @@ def q_esql_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "essql_match_query.",
 )
 def q_esql_match_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.analyzers import materialize_tokens
-    from tweets_elastic_spark.plans.esql import esql
-    from tweets_elastic_spark.plans.search import corpus_bm25_provider
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     docs = materialize_tokens(docs, {"text": ["custom_shingles"]})
     return esql(
@@ -217,7 +216,7 @@ def q_esql_match_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t
     ORDER BY day ASC
     """,
-    doc="ES|QL CHANGE_POINT (8.18, r14): daily event counts with a "
+    doc="ES|QL CHANGE_POINT (8.18): daily event counts with a "
         "PLANTED +500 step after 2024-01-15, the key-ordered CUSUM "
         "mean-shift detector marks the split row in-stream (cp_type = "
         "'step_change' at the peak-T row, cp_stat = the statistic, "
@@ -253,7 +252,7 @@ def q_esql_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY mon, hr
     ORDER BY mon ASC, hr ASC
     """,
-    doc="ES|QL CIDR_MATCH + date functions (r14): EVAL synthesizes a "
+    doc="ES|QL CIDR_MATCH + date functions: EVAL synthesizes a "
         "v4 address per event (10.<user_id%2>.0.<event_id%200>), "
         "CIDR_MATCH(ip, \"10.0.0.0/16\", \"192.168.0.0/24\") keeps the "
         "even-user half (compile-time-folded range compare on the "
@@ -295,7 +294,7 @@ def q_esql_cidr_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY lvl
     ORDER BY lvl ASC
     """,
-    doc="ES|QL GROK (r14 — the refusal closed): EVAL synthesizes a "
+    doc="ES|QL GROK: EVAL synthesizes a "
         "log line per document (doc=<id> lvl=<LEVEL> ip=<v4> took "
         "<n>ms), GROK re-extracts id/level/ip/latency through the "
         "pattern library (INT with :int cast, LOGLEVEL, IP) in ONE "
@@ -339,7 +338,7 @@ def q_esql_grok(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY lang
     ORDER BY lang ASC
     """,
-    doc="ES|QL INLINESTATS (8.16 preview, r14): per-group aggregates "
+    doc="ES|QL INLINESTATS (8.16 preview): per-group aggregates "
         "APPENDED to every row, then used as an ordinary column in a "
         "downstream WHERE — the above-their-language-average filter. "
         "BY form compiles to window aggregates over partitionBy(lang) "
@@ -372,7 +371,7 @@ def q_esql_inlinestats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cnt DESC, n_name ASC
     LIMIT 10
     """,
-    doc="ES|QL LOOKUP JOIN (ES 8.18's headline feature, r14): "
+    doc="ES|QL LOOKUP JOIN (ES 8.18's headline feature): "
         "FROM customer | RENAME .. | LOOKUP JOIN nation ON n_nationkey "
         "| STATS .. BY n_name — the lookup index compiles to a "
         "BROADCAST left join (lookup-mode indices are single-shard-small "
@@ -384,8 +383,6 @@ def q_esql_inlinestats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has a nation, so LEFT==INNER here).",
 )
 def q_esql_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.esql import esql
-
     cust = fan_out(load_table(spark, sf_dir, "customer"))
     nation = load_table(spark, sf_dir, "nation")
     return esql(spark, """
@@ -419,7 +416,7 @@ def q_esql_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY event_type ASC
     """,
     doc="ES|QL per-aggregate WHERE + the 8.13-8.16 aggregate widening "
-        "(r15): STATS n = COUNT(*), n_big = COUNT(*) WHERE value > 50, "
+        "STATS n = COUNT(*), n_big = COUNT(*) WHERE value > 50, "
         "wa = WEIGHTED_AVG(value, value) WHERE user_id % 2 == 0, "
         "sd = STD_DEV(value), top_uid = TOP(user_id, 3, DESC) BY "
         "event_type — every filtered aggregate compiles to a "
@@ -434,10 +431,6 @@ def q_esql_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conditional.",
 )
 def q_esql_stats_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from tweets_elastic_spark.plans.esql import esql
-
     events = fan_out(load_table(spark, sf_dir, "events"))
     out = esql(spark, """
         FROM events
@@ -471,7 +464,7 @@ def q_esql_stats_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY day ASC, vb ASC NULLS LAST
     """,
-    doc="ES|QL BUCKET (8.13 — the histogram grouping function, r15): "
+    doc="ES|QL BUCKET (8.13 — the histogram grouping function): "
         "STATS ... BY day = BUCKET(ts, 1 day), vb = BUCKET(value, "
         "25.0) — the time span truncates on the fixed-width epoch "
         "grid (floor(epoch/width)*width, tz-independent instants), "
@@ -515,7 +508,7 @@ def q_esql_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT * FROM b1 UNION ALL SELECT * FROM b2
     """,
-    doc="ES|QL FORK (8.19 preview, r15): the pipe splits into branches "
+    doc="ES|QL FORK (8.19 preview): the pipe splits into branches "
         "that each receive the CURRENT stream — here a top-20 detail "
         "page AND its per-type aggregate in one query — and union by "
         "name with the `_fork` discriminator ('fork1'/'fork2', branch "
@@ -554,7 +547,7 @@ def q_esql_fork(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cnt DESC, nation ASC
     LIMIT 10
     """,
-    doc="ES|QL ENRICH (r15 — the r14 verdict's task 5: 8.x users "
+    doc="ES|QL ENRICH (8.x users "
         "migrating ingest pipelines hit ENRICH constantly): "
         "FROM supplier | ENRICH nations ON s_nationkey WITH "
         "nation = n_name, region_key = n_regionkey | STATS ... — "
@@ -568,8 +561,6 @@ def q_esql_fork(spark: SparkSession, sf_dir: str) -> DataFrame:
         "plain join (every supplier has a nation, so LEFT==INNER).",
 )
 def q_esql_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.esql import esql
-
     supp = fan_out(load_table(spark, sf_dir, "supplier"))
     nation = load_table(spark, sf_dir, "nation")
     return esql(spark, """
@@ -609,8 +600,7 @@ _SAMPLE_THRESHOLD = int(_SAMPLE_P * (1 << 60))
     GROUP BY lang
     ORDER BY lang ASC
     """,
-    doc="ES|QL SAMPLE (8.19 tech preview, r16 — the verdict's "
-        "most-likely next user hit among the former refusals): "
+    doc="ES|QL SAMPLE (8.19 tech preview): "
         "FROM | WHERE | KEEP | SAMPLE 0.2 7 | STATS ... BY lang. "
         "Upstream samples non-reproducibly over internal doc ids; "
         "this engine samples DETERMINISTICALLY by portable hash "
@@ -649,7 +639,7 @@ def q_esql_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY lang, source
     ORDER BY lang ASC, source ASC
     """,
-    doc="ES|QL KQL (8.17 full-text, r16 widening): the Kibana "
+    doc="ES|QL KQL (8.17 full-text): the Kibana "
         "search-bar language inside WHERE — KQL(\"lang:(en or de) and "
         "not source:src9 and n_chars > 300 and source:src*\") — "
         "parsed by plans/query_string.parse_kql onto the same Query "
@@ -683,7 +673,7 @@ def q_esql_kql_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     ORDER BY event_type ASC
     """,
-    doc="ES|QL temporal-amount arithmetic (r16 widening — the "
+    doc="ES|QL temporal-amount arithmetic (the "
         "WHERE ts > <anchor> - 7 days idiom every dashboard query "
         "uses, usually spelled NOW() - 7 days; the anchor is a "
         "literal here so the row stays oracle-reproducible): span "
@@ -723,7 +713,7 @@ def q_esql_span_window(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND n_chars > 100
     ORDER BY doc_id ASC
     """,
-    doc="ES|QL QSTR (8.16 full-text, r16 widening): the Lucene "
+    doc="ES|QL QSTR (8.16 full-text): the Lucene "
         "query-string syntax inside an ES|QL WHERE — "
         "QSTR(\"spark AND merge\") — compiled through the SAME "
         "plans/query_string.py parser the DSL front-end uses, bare "
@@ -736,11 +726,6 @@ def q_esql_span_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "don't affect single-term containment).",
 )
 def q_esql_qstr_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.analyzers import (
-        materialize_tokens,
-    )
-    from tweets_elastic_spark.plans.esql import esql
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     docs = materialize_tokens(docs, {"text": ["standard"]})
     return esql(
@@ -772,7 +757,7 @@ def q_esql_qstr_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY event_type ASC, vb ASC
     """,
-    doc="ES|QL MEDIAN_ABSOLUTE_DEVIATION + ROUND_TO (r16 widening): "
+    doc="ES|QL MEDIAN_ABSOLUTE_DEVIATION + ROUND_TO: "
         "ROUND_TO(value, 0, 25, 50, 75) rounds DOWN to the largest "
         "fixed point <= value (scan-local array arithmetic over the "
         "literal points — the upstream 8.19 bucket-boundary contract, "
@@ -798,11 +783,3 @@ def q_esql_mad_round_to(spark: SparkSession, sf_dir: str) -> DataFrame:
                 BY event_type, vb
         | SORT event_type ASC, vb ASC
     """, table="events")
-
-
-# splice the shared BM25 oracle in (search_q owns it; importing the
-# module here is safe — it registers idempotently via the registry dict)
-from tweets_elastic_spark.queries.search_q import _BM25_ORACLE  # noqa: E402
-from tweets_elastic_spark.registry import _REGISTRY  # noqa: E402
-
-_REGISTRY["esql_match_score"].oracle = _BM25_ORACLE

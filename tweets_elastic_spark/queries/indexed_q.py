@@ -12,19 +12,33 @@ proves the stored columns faithfully round-trip the inline analysis.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.functions.analyzers import analyze_text
 from tweets_elastic_spark.indexing import (
     SIG_COLS,
     bm25_stats_from_index,
     ensure_index,
+    fuzzy_expand,
+    pq_books_from_seeds,
     read_index_meta,
     read_indexed_documents,
     read_indexed_embeddings,
+    suggest_completion,
+    suggest_phrase,
+    suggest_terms,
 )
 from tweets_elastic_spark.operators import similarity as S
-from tweets_elastic_spark.registry import bench_variant, register
+from tweets_elastic_spark.plans.search import (
+    BM25Match,
+    Bool,
+    FunctionScore,
+    Range,
+    Term,
+    search,
+)
 from tweets_elastic_spark.queries.dedup_q import _LSH_ORACLE, _PQ_ORACLE, _rh_sig_sql
 from tweets_elastic_spark.queries.search_q import (
     _BM25_DF_SQL,
@@ -32,6 +46,8 @@ from tweets_elastic_spark.queries.search_q import (
     _BM25_SCORE_SQL,
     _TOKENS_CTE,
 )
+from tweets_elastic_spark.registry import bench_variant, register
+from tweets_elastic_spark.sources.catalog import load_table
 
 
 def _query_vec(emb: DataFrame, vec_id: int = 0) -> list[float]:
@@ -50,15 +66,6 @@ def _query_vec(emb: DataFrame, vec_id: int = 0) -> list[float]:
         "also proves the stored columns round-trip the inline analysis.",
 )
 def q_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.analyzers import analyze_text
-    from tweets_elastic_spark.plans.search import (
-        BM25Match,
-        Bool,
-        FunctionScore,
-        Term,
-        search,
-    )
-
     idx = ensure_index(spark, sf_dir)
     docs = read_indexed_documents(spark, idx)
     qtokens = analyze_text(spark, "spark merge", "custom_shingles")
@@ -100,16 +107,6 @@ def q_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cutoff; ties break by doc_id.",
 )
 def q_search_bm25_function_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.analyzers import analyze_text
-    from tweets_elastic_spark.plans.search import (
-        BM25Match,
-        Bool,
-        FunctionScore,
-        Range,
-        Term,
-        search,
-    )
-
     idx = ensure_index(spark, sf_dir)
     docs = read_indexed_documents(spark, idx)
     qtokens = analyze_text(spark, "spark merge", "custom_shingles")
@@ -160,8 +157,6 @@ def q_ann_lsh_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "isin(ivf_cell) filter over the stored cell id + exact rerank.",
 )
 def q_ann_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     idx = ensure_index(spark, sf_dir)
     emb = read_indexed_embeddings(spark, idx)
     centroids = np.asarray(read_index_meta(idx)["centroids"], dtype=np.float64)
@@ -235,8 +230,6 @@ def q_ann_lsh_multi_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tests (same probes, same rerank).",
 )
 def q_ann_ivf_multi_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     idx = ensure_index(spark, sf_dir)
     emb = read_indexed_embeddings(spark, idx)
     centroids = np.asarray(read_index_meta(idx)["centroids"], dtype=np.float64)
@@ -256,10 +249,6 @@ def q_ann_ivf_multi_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "proves the stored codes faithfully round-trip the encoder.",
 )
 def q_ann_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    from tweets_elastic_spark.indexing import pq_books_from_seeds
-
     idx = ensure_index(spark, sf_dir)
     emb = read_indexed_embeddings(spark, idx)
     meta = read_index_meta(idx)
@@ -289,8 +278,6 @@ def q_ann_pq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "to the inline HOF form (search_match_fuzzy).",
 )
 def q_search_match_fuzzy_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.indexing import fuzzy_expand
-
     idx = ensure_index(spark, sf_dir)
     docs = read_indexed_documents(spark, idx)
     expanded = sorted(
@@ -331,8 +318,6 @@ def q_search_match_fuzzy_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "row also re-proves the stored per-segment df statistics.",
 )
 def q_es_suggest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.indexing import suggest_terms
-
     idx = ensure_index(spark, sf_dir)
     return suggest_terms(spark, idx, "text__custom_shingles", "sparc",
                          max_edits=2, size=5)
@@ -447,11 +432,8 @@ def q_es_suggest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score over counts rebuilt from the standard token stream.",
 )
 def q_es_suggest_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.indexing import suggest_phrase
-    from tweets_elastic_spark.sources.catalog import load_table as _lt
-
     idx = ensure_index(spark, sf_dir)
-    docs = _lt(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return suggest_phrase(
         spark, idx, "text__custom_shingles", "sparc mrege", docs,
         max_edits=2, per_term=3, size=5,
@@ -481,8 +463,6 @@ def q_es_suggest_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "term stats.",
 )
 def q_es_suggest_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.indexing import suggest_completion
-
     idx = ensure_index(spark, sf_dir)
     return suggest_completion(spark, idx, "text__custom_shingles", "sp",
                               size=5)

@@ -5,11 +5,31 @@ design, so the whole Arrow plumbing path gets a hard correctness gate)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import hashlib
 
-from tweets_elastic_spark.functions.multimodal import attach_payload, decode_assets, sample_frames
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from tweets_elastic_spark.functions.hashing import hash60_sql
+from tweets_elastic_spark.functions.jpeg import (
+    encode_jpeg,
+    encode_jpeg_lossless,
+    encode_jpeg_progressive,
+)
+from tweets_elastic_spark.functions.mp4 import build_fmp4, build_mp4
+from tweets_elastic_spark.functions.multimodal import (
+    attach_payload,
+    decode_assets,
+    encode_ppm,
+    image_near_dups,
+    sample_frames,
+)
+from tweets_elastic_spark.functions.png import encode_png
 from tweets_elastic_spark.registry import register
 from tweets_elastic_spark.sources.catalog import cluster_by, load_table
+from tweets_elastic_spark.sources.warc import build_warc, warc_records
 
 
 @register(
@@ -71,20 +91,11 @@ def _planted_grid_assets(docs: DataFrame, salt: str = "", codec: str = "ppm") ->
     near-identical variants per group, everything else deterministic.
     ``codec='ppm'`` emits P6 bytes; ``codec='png'`` emits real PNG bytes
     with the scanline filter cycled per image (doc_id % 5) and bit depth
-    16 on every 7th image (r11) so the oracle-gated row drives every
+    16 on every 7th image so the oracle-gated row drives every
     decoder unfilter path AND the 16-bit high-byte strip;
-    ``codec='jpegll'`` (r12) emits real SOF3 LOSSLESS JPEG bytes with
+    ``codec='jpegll'`` emits real SOF3 LOSSLESS JPEG bytes with
     the predictor cycled per image (doc_id % 7 + 1 — all seven Annex H
     predictors) — lossless, so the same arithmetic oracle holds."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from tweets_elastic_spark.functions.jpeg import encode_jpeg_lossless
-    from tweets_elastic_spark.functions.multimodal import encode_ppm
-    from tweets_elastic_spark.functions.png import encode_png
-
     rows_, cols_ = _IMG_ROWS, _IMG_COLS
     h, w = _IMG_H, _IMG_W
 
@@ -117,7 +128,7 @@ def _planted_grid_assets(docs: DataFrame, salt: str = "", codec: str = "ppm") ->
                         px, predictor=did % 7 + 1,
                     )))
                 elif codec == "png":
-                    # depth 16 on every 7th image (r11): the 8→16
+                    # depth 16 on every 7th image: the 8→16
                     # replication round-trips to identical pixels, so
                     # the arithmetic oracle covers the 16-bit decode
                     # path with zero formula changes
@@ -139,8 +150,6 @@ def _planted_ppm_assets(docs: DataFrame) -> DataFrame:
 
 
 def _image_dedup_oracle(salt: str = "") -> str:
-    from tweets_elastic_spark.functions.hashing import hash60_sql
-
     def px(y: int, x: int, c: int) -> str:
         feat = f"'{salt}' || gid::VARCHAR || ':{y}:{x}:{c}'"
         base = f"{hash60_sql(feat)} % 256"
@@ -189,8 +198,8 @@ def _image_dedup_oracle(salt: str = "") -> str:
 
 
 # ---------------------------------------------------------------------------
-# The JPEG twin (r8): payloads are REAL baseline-JFIF bytes (4:2:0,
-# quality=100) produced by the pure-stdlib encoder, decoded by the r8
+# The JPEG twin: payloads are REAL baseline-JFIF bytes (4:2:0,
+# quality=100) produced by the pure-stdlib encoder, decoded by the
 # decoder inside image_dhash. The fixture is 8×9 constant 8×8 gray blocks:
 # gray→YCbCr is exact, constant blocks are DC-only, and q=100 quant tables
 # are all ones — so decode(encode(img)) is BIT-EXACT and the oracle can
@@ -208,15 +217,6 @@ def _planted_jpeg_assets(docs: DataFrame) -> DataFrame:
     come from hash60('j:gid:r:c') % 200 + 20 with gid = doc_id//4, plus
     (doc_id % 4) noise on block (0,0) — four near-identical variants per
     group (the noised cell feeds exactly one dHash bit)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from tweets_elastic_spark.functions.jpeg import (
-        encode_jpeg, encode_jpeg_progressive,
-    )
-
     rows_, cols_ = _JPEG_BLOCK_ROWS, _JPEG_BLOCK_COLS
 
     def h60(s: str) -> int:
@@ -244,7 +244,7 @@ def _planted_jpeg_assets(docs: DataFrame) -> DataFrame:
                 px = np.repeat(np.repeat(blk, 8, 0), 8, 1)
                 img = np.stack([px, px, px], axis=2)
                 ids.append(did)
-                # every 3rd image ships PROGRESSIVE (SOF2, r11): same
+                # every 3rd image ships PROGRESSIVE (SOF2): same
                 # coefficients, multi-scan layout — the q=100 constant-
                 # block exactness holds identically, so the arithmetic
                 # oracle now gates the progressive decode paths too
@@ -261,8 +261,6 @@ def _planted_jpeg_assets(docs: DataFrame) -> DataFrame:
 
 
 def _image_jpeg_dedup_oracle() -> str:
-    from tweets_elastic_spark.functions.hashing import hash60_sql
-
     def g(r: int, c: int) -> str:
         feat = f"'j:' || gid::VARCHAR || ':{r}:{c}'"
         base = f"{hash60_sql(feat)} % 200 + 20"
@@ -310,7 +308,7 @@ def _image_jpeg_dedup_oracle() -> str:
 @register(
     "image_near_dups_jpeg",
     oracle=_image_jpeg_dedup_oracle(),
-    doc="Perceptual near-dup over REAL baseline-JFIF payloads (r8): the "
+    doc="Perceptual near-dup over REAL baseline-JFIF payloads: the "
         "pure-stdlib JPEG codec (SOF0, Huffman, 4:2:0) encodes constant "
         "8x8 gray blocks at quality=100 — a configuration the decoder "
         "reconstructs BIT-EXACTLY (DC-only blocks, unit quant step, exact "
@@ -320,10 +318,6 @@ def _image_jpeg_dedup_oracle() -> str:
         "Huffman -> dequant -> IDCT -> upsample -> hash pipeline.",
 )
 def q_image_near_dups_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from tweets_elastic_spark.functions.multimodal import image_near_dups
-
     docs = load_table(spark, sf_dir, "documents")
     assets = _planted_jpeg_assets(docs)
     out = image_near_dups(assets, max_distance=3)
@@ -345,12 +339,9 @@ def q_image_near_dups_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "resize -> hash byte pipeline end-to-end.",
 )
 def q_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.multimodal import image_near_dups
-
     docs = load_table(spark, sf_dir, "documents")
     assets = _planted_ppm_assets(docs)
     out = image_near_dups(assets, max_distance=3)
-    from pyspark.sql import functions as F
 
     return out.select(
         "id_a", "id_b", F.col("distance").cast("int").alias("distance")
@@ -360,7 +351,7 @@ def q_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "image_near_dups_png",
     oracle=_image_dedup_oracle(salt="n:"),
-    doc="Perceptual near-dup over REAL PNG payloads (r8): the pure-stdlib "
+    doc="Perceptual near-dup over REAL PNG payloads: the pure-stdlib "
         "zlib+unfilter PNG codec encodes the deterministic pixel grid with "
         "the scanline filter cycled per image (None/Sub/Up/Average/Paeth by "
         "doc_id % 5) — PNG is lossless, so decode(encode(px)) is exact for "
@@ -370,10 +361,6 @@ def q_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "grayscale -> 9x8 resample -> dHash -> banding end-to-end.",
 )
 def q_image_near_dups_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from tweets_elastic_spark.functions.multimodal import image_near_dups
-
     docs = load_table(spark, sf_dir, "documents")
     assets = _planted_grid_assets(docs, salt="n:", codec="png")
     out = image_near_dups(assets, max_distance=3)
@@ -385,7 +372,7 @@ def q_image_near_dups_png(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "image_near_dups_jpeg_lossless",
     oracle=_image_dedup_oracle(salt="l:"),
-    doc="Perceptual near-dup over REAL lossless-JPEG payloads (r12, "
+    doc="Perceptual near-dup over REAL lossless-JPEG payloads ("
         "SOF3 — T.81 Annex H predictive coding, formerly a loud "
         "refusal): the pure-stdlib encoder cycles all seven spec "
         "predictors per image (doc_id % 7 + 1), and lossless means "
@@ -399,10 +386,6 @@ def q_image_near_dups_png(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_image_near_dups_jpeg_lossless(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from tweets_elastic_spark.functions.multimodal import image_near_dups
-
     docs = load_table(spark, sf_dir, "documents")
     assets = _planted_grid_assets(docs, salt="l:", codec="jpegll")
     out = image_near_dups(assets, max_distance=3)
@@ -416,10 +399,6 @@ def _mp4_assets(docs: DataFrame) -> DataFrame:
     position-tagged token strings — built via functions/mp4.build_mp4 in
     mapInPandas (payloads never shuffle), so downstream frame operators
     exercise the REAL container parse."""
-    import pandas as pd
-
-    from tweets_elastic_spark.functions.mp4 import build_mp4
-
     def build(batches):
         for pdf in batches:
             ids, payloads = [], []
@@ -470,7 +449,7 @@ _FRAME_DUPS_ORACLE = """
     "video_frame_dups",
     oracle=_FRAME_DUPS_ORACLE,
     doc="Video frame-level dedup through the REAL MP4 container path "
-        "(r10, functions/mp4): per-doc MP4s are assembled from "
+        "(functions/mp4): per-doc MP4s are assembled from "
         "position-tagged token frames, sample_frames addresses each "
         "access unit via the stbl sample table (stsz/stsc/stco -> mdat "
         "byte ranges, no codec), and duplicate frames group on the "
@@ -482,8 +461,6 @@ _FRAME_DUPS_ORACLE = """
         "scan-local (mapInPandas), only (sha, count) aggregates shuffle.",
 )
 def q_video_frame_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     docs = load_table(spark, sf_dir, "documents")
     frames = sample_frames(_mp4_assets(docs), n_frames=4)
     return (
@@ -498,10 +475,6 @@ def _fmp4_assets(docs: DataFrame) -> DataFrame:
     position-tagged frames packed as fMP4 — two moof+mdat fragments per
     asset (first two frames, then the rest), default-base-is-moof, sizes
     in the trun entries."""
-    import pandas as pd
-
-    from tweets_elastic_spark.functions.mp4 import build_fmp4
-
     def build(batches):
         for pdf in batches:
             ids, payloads = [], []
@@ -530,7 +503,7 @@ def _fmp4_assets(docs: DataFrame) -> DataFrame:
 @register(
     "video_frame_dups_fmp4",
     oracle=_FRAME_DUPS_ORACLE,
-    doc="Frame-level dedup through the FRAGMENTED MP4 path (r11, "
+    doc="Frame-level dedup through the FRAGMENTED MP4 path ("
         "functions/mp4 moof/traf/trun walk): the same deterministic "
         "frames as video_frame_dups, packed as two-fragment fMP4 (the "
         "DASH/CMAF layout scraped streaming video uses) with "
@@ -542,8 +515,6 @@ def _fmp4_assets(docs: DataFrame) -> DataFrame:
         "scale shape: payloads scan-local, only (sha, count) shuffles.",
 )
 def q_video_frame_dups_fmp4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     docs = load_table(spark, sf_dir, "documents")
     frames = sample_frames(_fmp4_assets(docs), n_frames=4)
     return (
@@ -565,7 +536,7 @@ def q_video_frame_dups_fmp4(spark: SparkSession, sf_dir: str) -> DataFrame:
            text
     FROM documents WHERE text IS NOT NULL
     """,
-    doc="WARC ingestion (r12, sources/warc.py — the CommonCrawl first "
+    doc="WARC ingestion (sources/warc.py — the CommonCrawl first "
         "stage of an LLM training-data pipeline): documents pack into "
         "multi-record WARC archives in-plan (4 pages per archive, "
         "warcinfo + response records, HTTP framing; every OTHER archive "
@@ -582,11 +553,6 @@ def q_video_frame_dups_fmp4(spark: SparkSession, sf_dir: str) -> DataFrame:
         "operator.",
 )
 def q_warc_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from tweets_elastic_spark.sources.warc import build_warc, warc_records
-
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     ).select(

@@ -7,10 +7,11 @@ play the dim chain, part/supplier extra dims.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.operators.denormalize import denormalize_orders
+from tweets_elastic_spark.plans.essql import es_sql
 from tweets_elastic_spark.registry import register
 from tweets_elastic_spark.sources.catalog import load_table
 
@@ -277,8 +278,6 @@ def q_range_filter_conj(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per-group arrays.",
 )
 def q_latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -341,7 +340,7 @@ def q_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "approx_distinct_profile",
-    # r12 (verdict task): HLL sketch values are engine-specific, so the
+    # HLL sketch values are engine-specific, so the
     # hash-checkable contract is (exact counts, bounded-error booleans):
     # Spark computes BOTH the HLL++ estimate and the exact count and
     # emits whether the estimate landed within 5% relative error
@@ -360,7 +359,7 @@ def q_corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Approximate distinct counts (HyperLogLog++): distinct sources and "
         "distinct text fingerprints per language — the sketch path for "
         "cardinality profiling where exact countDistinct's shuffle is "
-        "unaffordable. Driver contract (r12): exact counts (cross-engine) "
+        "unaffordable. Driver contract: exact counts (cross-engine) "
         "plus within-5%%-relative-error booleans computed against the "
         "engine's own HLL estimate, so the sketch's error bound is "
         "hash-verified, not just pytest-pinned.",
@@ -458,7 +457,7 @@ LIMIT 100"""
 @register(
     "essql_group_query",
     oracle=_ESSQL_GROUP,
-    doc="ES SQL endpoint (r8 s4, plans/essql.py): the grouped shape — "
+    doc="ES SQL endpoint (plans/essql.py): the grouped shape — "
         "WHERE/GROUP BY/HAVING-on-alias/ORDER/LIMIT translated to "
         "DataFrame ops (filter rides the scan with pushed predicates, "
         "one partial/final hash aggregation, TakeOrderedAndProject). "
@@ -467,8 +466,6 @@ LIMIT 100"""
         "checked against a real SQL engine verbatim.",
 )
 def q_essql_group_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.essql import es_sql
-
     return es_sql(_ESSQL_GROUP,
                   {"orders": load_table(spark, sf_dir, "orders")})
 
@@ -486,15 +483,13 @@ LIMIT 50"""
 @register(
     "essql_date_parts",
     oracle=_ESSQL_DATE,
-    doc="ES SQL date-part scalar functions (r10): YEAR()/MONTH() in the "
+    doc="ES SQL date-part scalar functions: YEAR()/MONTH() in the "
         "select list and GROUP BY-by-alias — the endpoint's monthly-"
         "rollup idiom. Date parts compile to the matching Catalyst "
         "datetime expressions cast to BIGINT (DuckDB's width, so the "
         "SAME string is the oracle verbatim, like every essql row).",
 )
 def q_essql_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.essql import es_sql
-
     return es_sql(_ESSQL_DATE,
                   {"orders": load_table(spark, sf_dir, "orders")})
 
@@ -510,7 +505,7 @@ LIMIT 400"""
 @register(
     "essql_string_functions",
     oracle=_ESSQL_STR,
-    doc="ES SQL string scalar functions (r11): LCASE/UCASE/TRIM/LENGTH/"
+    doc="ES SQL string scalar functions: LCASE/UCASE/TRIM/LENGTH/"
         "SUBSTRING/CONCAT — nested (LENGTH(TRIM(text))), in WHERE "
         "(LENGTH gate + UCASE comparison, both riding the scan) and in "
         "the select list. CONCAT's NULL arguments count as '' (ES's and "
@@ -519,8 +514,6 @@ LIMIT 400"""
         "verbatim, like every essql row.",
 )
 def q_essql_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.essql import es_sql
-
     return es_sql(_ESSQL_STR,
                   {"documents": load_table(spark, sf_dir, "documents")})
 
@@ -536,7 +529,7 @@ def q_essql_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     ORDER BY vb ASC
     """,
-    doc="ES SQL HISTOGRAM(col, interval) (r16 — the endpoint's "
+    doc="ES SQL HISTOGRAM(col, interval) (the endpoint's "
         "grouping function, the SQL spelling of the histogram agg): "
         "SELECT HISTOGRAM(value, 25) AS vb ... GROUP BY vb compiles "
         "to the shared fixed-width floor grid (floor(v/w)*w, DOUBLE — "
@@ -549,8 +542,6 @@ def q_essql_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doubles order-free.",
 )
 def q_essql_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.essql import es_sql
-
     return es_sql(
         "SELECT HISTOGRAM(value, 25) AS vb, COUNT(*) AS n, "
         "MAX(value) AS mx "
@@ -568,7 +559,5 @@ def q_essql_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "verbatim-string oracle as essql_group_query.",
 )
 def q_essql_filter_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.essql import es_sql
-
     return es_sql(_ESSQL_FILTER,
                   {"lineitem": load_table(spark, sf_dir, "lineitem")})

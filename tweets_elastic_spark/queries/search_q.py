@@ -4,20 +4,65 @@ filter → score → top-k plan, with a full SQL oracle."""
 
 from __future__ import annotations
 
+import base64
+import datetime
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tweets_elastic_spark.functions.analyzers import materialize_tokens
+from tweets_elastic_spark.functions.analyzers import (
+    analyze,
+    analyze_text,
+    materialize_tokens,
+    pin_computed,
+)
+from tweets_elastic_spark.operators.percolate import percolate_from_json
+from tweets_elastic_spark.operators.similarity import cosine_topk
+from tweets_elastic_spark.plans.aggs import es_aggregate, es_request
+from tweets_elastic_spark.plans.api import (
+    es_mget,
+    es_msearch_template,
+    es_rank_eval,
+    es_terms_enum,
+    es_termvectors,
+)
+from tweets_elastic_spark.plans.essql import es_sql
+from tweets_elastic_spark.plans.ingest import apply_ingest_pipeline
+from tweets_elastic_spark.plans.joinfield import (
+    children_agg,
+    has_child,
+    has_parent,
+    parent_agg,
+)
+from tweets_elastic_spark.plans.query_string import (
+    parse_query_string,
+    parse_simple_query_string,
+)
 from tweets_elastic_spark.plans.search import (
+    BM25Match,
     Bool,
+    DistanceFeature,
+    Exists,
     FunctionScore,
     Match,
+    MatchBoolPrefix,
+    Pinned,
     Range,
     Term,
+    TermsSet,
+    bm25_stats,
+    corpus_bm25_provider,
+    es_retriever,
+    explain_score,
     from_es_json,
+    more_like_this,
+    rrf_fuse,
     search,
 )
+from tweets_elastic_spark.plans.templates import render_search_template
 from tweets_elastic_spark.registry import register
+from tweets_elastic_spark.sinks import delete_by_query, update_by_query
 from tweets_elastic_spark.sources.catalog import fan_out, load_table
 
 # DuckDB mirror of the custom_shingles analysis (words + glued bigrams; the
@@ -207,9 +252,6 @@ _BM25_ORACLE = _TOKENS_CTE + f""",
         "the oracle recomputes the identical formula in SQL.",
 )
 def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.analyzers import analyze_text
-    from tweets_elastic_spark.plans.search import BM25Match, bm25_stats
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     # the stats job and the scoring query each analyze once; no persist —
     # a cached DF leaked from a registered query can never be unpersisted
@@ -263,8 +305,6 @@ _BM25_DSL = {
         "(keyword match, constant weight — pytest-pinned).",
 )
 def q_search_dsl_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import corpus_bm25_provider
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     docs = materialize_tokens(docs, {"text": ["custom_shingles"]})
     query = from_es_json(
@@ -303,9 +343,6 @@ ORDER BY SCORE() DESC, doc_id ASC"""
         "row-for-row.",
 )
 def q_essql_match_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.essql import es_sql
-    from tweets_elastic_spark.plans.search import corpus_bm25_provider
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     docs = materialize_tokens(docs, {"text": ["custom_shingles"]})
     return es_sql(
@@ -327,8 +364,6 @@ def q_essql_match_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="exists + double-bounded range filters (Q6/Q7 composition).",
 )
 def q_search_exists_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import Exists
-
     docs = load_table(spark, sf_dir, "documents")
     query = Bool(filter=[Exists("text"), Range("n_chars", gte=100, lte=400)])
     return search(docs, query, k=None).select("doc_id", "source")
@@ -837,8 +872,6 @@ def q_search_span_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "accurate divergence from ES's HLL.",
 )
 def q_es_aggs_date_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events")
     request = {
         "query": {"range": {"value": {"gt": 1}}},
@@ -881,8 +914,6 @@ def q_es_aggs_date_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "plan shape every relevance query uses.",
 )
 def q_es_aggs_terms_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     request = {
         "query": {"range": {"n_chars": {"gt": 200}}},
@@ -914,8 +945,6 @@ def q_es_aggs_terms_top(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the scatter-gather-merge every ES sorted search executes).",
 )
 def q_es_request_sorted_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     request = {
         "query": {
@@ -951,8 +980,6 @@ def q_es_request_sorted_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         "The DSL twin of the relational keyset_page operator (S3/F1).",
 )
 def q_es_request_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     request = {
         "query": {"term": {"lang": "en"}},
@@ -983,8 +1010,6 @@ def q_es_request_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
         "top-k every search runs globally.",
 )
 def q_es_aggs_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     request = {
         "aggs": {
@@ -1025,8 +1050,6 @@ def q_es_aggs_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         "unpivot — no per-bucket pass, no join.",
 )
 def q_es_aggs_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events")
     request = {
         "aggs": {
@@ -1161,8 +1184,6 @@ def q_search_multi_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the surviving rows. Metric sub-aggs ride the single groupBy.",
 )
 def q_es_aggs_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     request = {
         "aggs": {
@@ -1213,8 +1234,6 @@ def q_es_aggs_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(nullif(event_type,'view')) — same shape as an unmapped field.",
 )
 def q_es_aggs_composite_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events").withColumn(
         "etype", F.nullif(F.col("event_type"), F.lit("view"))
     )
@@ -1263,8 +1282,6 @@ def q_es_aggs_composite_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "built-in JVM aggregate riding the same partial/final plan.",
 )
 def q_es_aggs_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     request = {
         "query": {"range": {"n_chars": {"gt": 100}}},
@@ -1327,8 +1344,6 @@ def q_es_aggs_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "this engine doesn't need: the groupBy sees global counts.",
 )
 def q_es_aggs_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     request = {
         "query": {"range": {"n_chars": {"gt": 400}}},
@@ -1387,8 +1402,6 @@ def q_es_aggs_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_moving_percentiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events")
     out = es_request(events, {"aggs": {"per_day": {
         "date_histogram": {"field": "ts", "calendar_interval": "day"},
@@ -1427,8 +1440,6 @@ def q_es_aggs_moving_percentiles(
         "order).",
 )
 def q_es_aggs_scripted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     li = load_table(spark, sf_dir, "lineitem")
     return es_aggregate(li, {"flag": {
         "terms": {"field": "l_returnflag", "size": 10},
@@ -1468,8 +1479,6 @@ def q_es_aggs_scripted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rescale. The oracle replays the identical hash threshold.",
 )
 def q_es_aggs_random_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     return es_aggregate(events, {"s": {
         "random_sampler": {"probability": 0.25, "seed": 7,
@@ -1519,8 +1528,6 @@ def q_es_aggs_random_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_variable_width_histogram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     return es_aggregate(events, {"vw": {
         "variable_width_histogram": {"field": "value", "buckets": 5},
@@ -1557,8 +1564,6 @@ def q_es_aggs_variable_width_histogram(
         "formula as SQL window functions.",
 )
 def q_es_aggs_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events")
     request = {
         "aggs": {
@@ -1620,8 +1625,6 @@ def q_es_aggs_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "accumulation order differs across partials).",
 )
 def q_es_aggs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events")
     request = {
         "aggs": {
@@ -1665,8 +1668,6 @@ def q_es_aggs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT DISTINCT ON.",
 )
 def q_es_request_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     request = {
         "query": {"range": {"n_chars": {"gt": 100}}},
@@ -1700,8 +1701,6 @@ def q_es_request_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
         "make the top-N cut depend on accumulation order).",
 )
 def q_es_aggs_terms_order_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     request = {
         "aggs": {
@@ -1778,8 +1777,6 @@ def q_search_match_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "byte-compared by the oracle.",
 )
 def q_es_request_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     request = {
         "query": {
@@ -1849,8 +1846,6 @@ def q_es_request_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_request_highlight_fragments(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     request = {
         "query": {
@@ -2137,8 +2132,6 @@ def q_search_script_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per-token counts and the weighted sum.",
 )
 def q_search_sparse_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.analyzers import analyze
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     toks = analyze(F.col("text"), "standard")
 
@@ -2188,9 +2181,6 @@ def q_search_sparse_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         "replays the analyzer match and the n_chars*f > t arithmetic.",
 )
 def q_search_wrapper_script(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import base64
-    import json
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     inner = {
         "bool": {
@@ -2273,8 +2263,6 @@ def _matrix_stats_oracle() -> str:
         "formula operator for operator.",
 )
 def q_es_aggs_matrix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     # deliberately NOT fanned out: measured at sf0.1, the extra
     # round-robin exchange of 600k rows costs more than the parallel
     # partial agg saves (the moment sums are light codegen'd work).
@@ -2328,8 +2316,6 @@ def q_es_aggs_matrix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "part (the t statistic) exactly.",
 )
 def q_es_aggs_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ug", F.col("user_id") % 3
     )
@@ -2376,8 +2362,6 @@ def q_es_aggs_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "accumulation order differs across partials).",
 )
 def q_es_aggs_extended_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events")
     request = {
         "aggs": {
@@ -2450,8 +2434,6 @@ def q_es_aggs_extended_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "relation, ES's own coordinator-side shape.",
 )
 def q_es_aggs_moving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events")
     request = {
         "aggs": {
@@ -2526,8 +2508,6 @@ def q_es_aggs_moving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ES's shard-top-window shape.",
 )
 def q_es_request_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     request = {
         "query": {
@@ -2600,8 +2580,6 @@ def q_es_request_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "token-cardinality relation, ES's own coordinator shape.",
 )
 def q_es_aggs_significant_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     request = {
         "query": {"term": {"lang": "zh"}},
@@ -2632,8 +2610,6 @@ def q_es_aggs_significant_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         "as codegen'd predicates.",
 )
 def q_es_aggs_date_range_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events")
     request = {
         "aggs": {
@@ -2715,8 +2691,6 @@ def q_es_aggs_date_range_weighted(spark: SparkSession, sf_dir: str) -> DataFrame
         "TakeOrderedAndProject, linear in posting count.",
 )
 def q_search_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import more_like_this
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return more_like_this(
         docs, 42, analyzer="standard", max_query_terms=12,
@@ -2777,12 +2751,6 @@ def q_search_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
         "relations — the coordinator-side shape.",
 )
 def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.analyzers import analyze_text
-    from tweets_elastic_spark.operators.similarity import cosine_topk
-    from tweets_elastic_spark.plans.search import (
-        BM25Match, bm25_stats, rrf_fuse,
-    )
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     docs = materialize_tokens(docs, {"text": ["custom_shingles"]})
     qtokens = analyze_text(spark, "spark merge", "custom_shingles")
@@ -2860,8 +2828,6 @@ _RETRIEVER_FRAME_CTE = """
         "es_retriever).",
 )
 def q_es_request_retriever_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import es_retriever
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     emb = load_table(spark, sf_dir, "embeddings")
     frame = docs.join(emb, docs.doc_id == emb.vec_id).select(
@@ -2927,8 +2893,6 @@ def q_es_request_retriever_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_request_retriever_rerank(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.search import es_retriever
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars", "text"
     )
@@ -2976,8 +2940,6 @@ def q_es_request_retriever_rerank(
 def q_es_request_retriever_linear(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.search import es_retriever
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     emb = load_table(spark, sf_dir, "embeddings")
     frame = docs.join(emb, docs.doc_id == emb.vec_id).select(
@@ -3024,8 +2986,6 @@ def q_es_request_retriever_linear(
         "TakeOrderedAndProject.",
 )
 def q_es_request_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter("vec_id = 3").head()["embedding"]]
     request = {
@@ -3070,8 +3030,6 @@ def q_es_request_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "work.",
 )
 def q_search_query_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.query_string import parse_query_string
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     query = parse_query_string(
         "text:(spark AND merge) OR source:src1 -lang:de",
@@ -3108,10 +3066,6 @@ def q_search_query_string(spark: SparkSession, sf_dir: str) -> DataFrame:
         "erroring, so the parser is safe on raw user text.",
 )
 def q_search_simple_query_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.query_string import (
-        parse_simple_query_string,
-    )
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     query = parse_simple_query_string(
         "spark + merge | streaming",
@@ -3148,8 +3102,6 @@ def q_search_simple_query_string(spark: SparkSession, sf_dir: str) -> DataFrame:
         "primitive: which saved searches does each new document satisfy.",
 )
 def q_percolate_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.percolate import percolate_from_json
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     artifacts = {
         "alert_spark": {"query": {"match": {"text": {"query": "spark"}}}},
@@ -3191,8 +3143,6 @@ def q_percolate_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         "expression-level array math, no second shuffle.",
 )
 def q_es_aggs_multi_terms_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     docs = load_table(spark, sf_dir, "documents")
     return es_aggregate(docs, {"by_ls": {
         "multi_terms": {
@@ -3246,8 +3196,6 @@ def q_es_aggs_multi_terms_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_multi_terms_mad_sketch(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     docs = load_table(spark, sf_dir, "documents")
     return es_aggregate(docs, {"by_ls": {
         "multi_terms": {
@@ -3297,8 +3245,6 @@ _GEO_CTE = """
         "oracle recomputes the identical formula.",
 )
 def q_search_geo_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import search
-
     events = load_table(spark, sf_dir, "events").withColumns({
         "lat": (F.col("value") % 140) - 70,
         "lon": (F.col("user_id") * 2.4) - 180,
@@ -3330,8 +3276,6 @@ def q_search_geo_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "units ('2000km') parse on both the query and agg surfaces.",
 )
 def q_es_aggs_geo_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events").withColumns({
         "lat": (F.col("value") % 140) - 70,
         "lon": (F.col("user_id") * 2.4) - 180,
@@ -3376,8 +3320,6 @@ def q_es_aggs_geo_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "from_es_json.",
 )
 def q_search_geo_bounding_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import search
-
     events = load_table(spark, sf_dir, "events").withColumns({
         "lat": (F.col("value") % 140) - 70,
         "lon": (F.col("user_id") * 2.4) - 180,
@@ -3426,8 +3368,6 @@ def q_search_geo_bounding_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         "agree bit-for-bit. One groupBy on the computed key.",
 )
 def q_es_aggs_geotile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events").withColumns({
         "lat": (F.col("value") % 140) - 70,
         "lon": (F.col("user_id") * 2.4) - 180,
@@ -3503,8 +3443,6 @@ def _geohash_oracle(p: int) -> str:
         "computed key.",
 )
 def q_es_aggs_geohash_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events").withColumns({
         "lat": (F.col("value") % 140) - 70,
         "lon": (F.col("user_id") * 2.4) - 180,
@@ -3615,8 +3553,6 @@ def q_search_geo_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         "array columns.",
 )
 def q_es_aggs_geo_line(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events").withColumns({
         "lat": (F.col("value") % 140) - 70,
         "lon": (F.col("user_id") * 2.4) - 180,
@@ -3673,8 +3609,6 @@ def q_es_aggs_geo_line(spark: SparkSession, sf_dir: str) -> DataFrame:
         "three plain aggregates riding the same partial/final plan.",
 )
 def q_es_aggs_geo_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events").withColumns({
         "lat": (F.col("value") % 140) - 70,
         "lon": (F.col("user_id") * 2.4) - 180,
@@ -3732,8 +3666,6 @@ def q_es_aggs_geo_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "replays the narrower-width selection arithmetically.",
 )
 def q_es_aggs_geo_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     wrap_lon = F.lit(170) + (F.col("value") % 20)
     events = load_table(spark, sf_dir, "events").withColumns({
         "lat": (F.col("value") % 140) - 70,
@@ -3779,8 +3711,6 @@ def q_es_aggs_geo_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "One scan; the only shuffle keys on the 3 bucket names.",
 )
 def q_es_aggs_filters_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     # decimal sum: order-free across engines (the es_aggs_parent lesson)
     events = events.withColumn(
@@ -3872,8 +3802,6 @@ def q_es_aggs_filters_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "included.",
 )
 def q_es_rank_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.api import es_rank_eval
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     body = {
         "requests": [
@@ -3956,8 +3884,6 @@ def q_es_rank_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "multiply sequence).",
 )
 def q_es_rank_eval_err(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.api import es_rank_eval
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     body = {
         "requests": [
@@ -3996,8 +3922,6 @@ def q_es_rank_eval_err(spark: SparkSession, sf_dir: str) -> DataFrame:
         "documented strictly-more-accurate divergence.",
 )
 def q_es_aggs_rare_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     orders = load_table(spark, sf_dir, "orders")
     out = es_aggregate(orders, {"by_cust": {
         "rare_terms": {"field": "o_custkey", "max_doc_count": 3},
@@ -4041,8 +3965,6 @@ def q_es_aggs_rare_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "relation, exactly like bucket_script.",
 )
 def q_es_aggs_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     out = es_aggregate(events, {"by_type": {
         "terms": {"field": "event_type", "size": 100},
@@ -4094,8 +4016,6 @@ def q_es_aggs_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
         "TakeOrderedAndProject for the cap, the terms shape.",
 )
 def q_es_aggs_time_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events").withColumn(
         "device", F.concat(F.lit("d"), (F.col("user_id") % 4).cast("string"))
     )
@@ -4135,8 +4055,6 @@ def q_es_aggs_time_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         "percentiles. One groupBy, built-in JVM aggregates.",
 )
 def q_es_aggs_boxplot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     docs = load_table(spark, sf_dir, "documents")
     out = es_aggregate(docs, {"by_lang": {
         "terms": {"field": "lang"},
@@ -4168,8 +4086,6 @@ def q_es_aggs_boxplot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "via arg_max/arg_min.",
 )
 def q_es_aggs_top_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     out = es_aggregate(events, {"by_type": {
         "terms": {"field": "event_type"},
@@ -4219,8 +4135,6 @@ def q_es_aggs_top_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stays exercised via the plan itself).",
 )
 def q_es_aggs_top_metrics_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     out = es_aggregate(events, {"by_type": {
         "terms": {"field": "event_type"},
@@ -4266,8 +4180,6 @@ def q_es_aggs_top_metrics_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "entropy against DuckDB's entropy() over exploded chars.",
 )
 def q_es_aggs_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     docs = load_table(spark, sf_dir, "documents")
     return es_aggregate(docs, {"by_lang": {
         "terms": {"field": "lang"},
@@ -4298,8 +4210,6 @@ def q_es_aggs_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "work.",
 )
 def q_es_aggs_rate_serial_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     return es_aggregate(events, {"daily": {
         "date_histogram": {"field": "ts", "calendar_interval": "day"},
@@ -4346,8 +4256,6 @@ def q_es_aggs_rate_serial_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_auto_date_histogram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     return es_aggregate(events, {"auto": {
         "auto_date_histogram": {"field": "ts", "buckets": 8},
@@ -4380,8 +4288,6 @@ def q_es_aggs_auto_date_histogram(
         "annotating every bucket row via the 1-row broadcast cross join.",
 )
 def q_es_aggs_sibling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     return es_aggregate(events, {
         "daily": {"date_histogram": {"field": "ts",
@@ -4429,8 +4335,6 @@ def q_es_aggs_sibling_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_extended_stats_bucket(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     return es_aggregate(events, {
         "daily": {"date_histogram": {"field": "ts",
@@ -4481,8 +4385,6 @@ def q_es_aggs_extended_stats_bucket(
         "IPv6 raises loudly.",
 )
 def q_es_aggs_ip_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     # fan_out: the fixture parquet is one row group = one input split, so
     # without it the octet arithmetic + bucket-key render runs partial-agg
     # on a single core (no-op on a many-split production scan).
@@ -4566,8 +4468,6 @@ for _n in range(2, 9):  # longest run wins: wrap ascending, outer = longer
         "separately against Python ipaddress in tests/test_es_aggs.py.",
 )
 def q_es_aggs_ip_prefix_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     uid = F.col("user_id")
     # fan_out: single-row-group fixture → one split; the '::'-expanding
     # parse + group-wise mask + RFC 5952 render is the most expression-
@@ -4617,9 +4517,6 @@ def q_es_aggs_ip_prefix_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bound, codegen'd arithmetic riding the scan.",
 )
 def q_search_terms_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.analyzers import analyze, pin_computed
-    from tweets_elastic_spark.plans.search import TermsSet
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     terms = ["spark", "merge", "stream", "data"]
     # pinned: the filter predicate and the n_matched projection both read
@@ -4667,8 +4564,6 @@ def q_search_terms_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_diversified_sampler(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     docs = load_table(spark, sf_dir, "documents")
     return es_aggregate(docs, {"sample": {
         "diversified_sampler": {
@@ -4752,8 +4647,6 @@ def q_search_rank_feature_prefix(
         "array_contains conjunction riding the scan.",
 )
 def q_search_match_bool_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import MatchBoolPrefix
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     q = MatchBoolPrefix("text", "spark mer", analyzer="standard",
                         operator="and")
@@ -4793,8 +4686,6 @@ def q_search_match_bool_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_percentiles_tdigest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     spec = {"field": "value", "percents": [50, 90, 99]}
     approx = es_aggregate(events, {"by_type": {
@@ -4849,8 +4740,6 @@ def q_es_aggs_percentiles_tdigest(
         "scan as search().",
 )
 def q_search_explain_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import Bool, explain_score
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     q = Bool(
         should=[
@@ -4912,8 +4801,6 @@ def q_search_explain_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "independently.",
 )
 def q_es_aggs_significant_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     return es_request(docs, {
         "query": {"range": {"n_chars": {"gt": 400}}},
@@ -4965,8 +4852,6 @@ def q_es_aggs_significant_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "arithmetic independently.",
 )
 def q_es_aggs_significant_gnd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     return es_request(docs, {
         "query": {"range": {"n_chars": {"gt": 400}}},
@@ -5013,8 +4898,6 @@ def q_es_aggs_significant_gnd(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_significant_script(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     docs = load_table(spark, sf_dir, "documents")
     return es_request(docs, {
         "query": {"range": {"n_chars": {"gt": 400}}},
@@ -5050,8 +4933,6 @@ def q_es_aggs_significant_script(
         "pipeline (vs ES's per-doc script evaluation).",
 )
 def q_es_request_runtime_field(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     events = load_table(spark, sf_dir, "events")
     out = es_request(events, {
         "runtime_mappings": {
@@ -5095,8 +4976,6 @@ def q_es_request_runtime_field(spark: SparkSession, sf_dir: str) -> DataFrame:
         "array<int> column.",
 )
 def q_es_termvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.api import es_termvectors
-
     docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
         F.col("doc_id") % 151 == 0
     )
@@ -5128,8 +5007,6 @@ def q_es_termvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "filtering selects lang/n_chars only.",
 )
 def q_es_mget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.api import es_mget
-
     docs = load_table(spark, sf_dir, "documents")
     return es_mget(
         docs, [3, 987654321, 7, 3, 42], source=["lang", "n_chars"]
@@ -5167,14 +5044,8 @@ def q_es_mget(spark: SparkSession, sf_dir: str) -> DataFrame:
         "TakeOrderedAndProject.",
 )
 def q_search_pinned_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import (
-        DistanceFeature,
-        Pinned,
-    )
-    import datetime as _dt
-
     events = load_table(spark, sf_dir, "events")
-    origin = _dt.datetime(2024, 1, 15, tzinfo=_dt.timezone.utc).timestamp()
+    origin = datetime.datetime(2024, 1, 15, tzinfo=datetime.timezone.utc).timestamp()
     q = Pinned(
         ids=[77, 3],
         organic=DistanceFeature(
@@ -5208,8 +5079,6 @@ def q_search_pinned_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "against the join-field doc values.",
 )
 def q_search_has_child(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.joinfield import has_child
-
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     return has_child(
@@ -5235,8 +5104,6 @@ def q_search_has_child(spark: SparkSession, sf_dir: str) -> DataFrame:
         "key). The child-side quantity filter rides the parquet scan.",
 )
 def q_search_has_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.joinfield import has_parent
-
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_quantity") >= 49
@@ -5281,8 +5148,6 @@ def q_search_has_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "strictly-more-accurate divergence, same as cardinality).",
 )
 def q_es_aggs_cumulative_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     return es_aggregate(events, {"by_day": {
         "date_histogram": {"field": "ts", "calendar_interval": "day"},
@@ -5358,8 +5223,6 @@ _CF_ORACLE = f"""
         "per-doc math is JVM expressions, stats one aggregation job.",
 )
 def q_search_combined_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import corpus_bm25_provider
-
     docs = fan_out(load_table(spark, sf_dir, "documents")).withColumn(
         "head", F.substring("text", 1, 80)
     )
@@ -5397,9 +5260,6 @@ def q_search_combined_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
         "work; the plan is identical to writing the JSON by hand).",
 )
 def q_search_template(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-    from tweets_elastic_spark.plans.templates import render_search_template
-
     source = """
     {
       "query": {"bool": {"filter": [
@@ -5456,8 +5316,6 @@ _MST_LIST_SRC = (
         "msearch envelope as one DataFrame.",
 )
 def q_msearch_template_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.api import es_msearch_template
-
     docs = load_table(spark, sf_dir, "documents")
     frames = es_msearch_template(docs, [
         (_MST_LIST_SRC, {"langs": ["en", "de"]}),
@@ -5508,8 +5366,6 @@ def q_msearch_template_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         "131072).",
 )
 def q_es_aggs_ip_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     # fan_out: same single-split fixture rationale as ip_prefix.
     events = fan_out(
         load_table(spark, sf_dir, "events").select("user_id", "value")
@@ -5583,8 +5439,6 @@ def q_es_aggs_ip_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mechanism, not a replay of the group arithmetic.",
 )
 def q_es_aggs_ip_range_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     uid = F.col("user_id")
     # fan_out: same single-split fixture rationale as ip_prefix_v6 —
     # the group-wise lexicographic range compare binds the parsed
@@ -5657,8 +5511,6 @@ def q_es_aggs_ip_range_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_es_aggs_adjacency_nested_terms(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     out = es_aggregate(events, {"by_adj": {
         "adjacency_matrix": {"filters": {
@@ -5708,8 +5560,6 @@ def q_es_aggs_adjacency_nested_terms(
         "groupBy on the pattern.",
 )
 def q_es_aggs_categorize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events").withColumn(
         "message",
         F.concat(
@@ -5764,8 +5614,6 @@ def q_es_aggs_categorize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         "broadcast back onto the buckets as cp_key/cp_stat.",
 )
 def q_es_aggs_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     events = load_table(spark, sf_dir, "events")
     out = es_aggregate(events, {
         "by_day": {"date_histogram": {"field": "ts",
@@ -5818,8 +5666,6 @@ def q_es_aggs_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
         "primitive-only (tests/test_plans.py guard).",
 )
 def q_es_aggs_frequent_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_aggregate
-
     baskets = (
         # deliberately NOT fanned out: measured at sf0.1 the extra
         # exchange loses to the light map-side collect_set partials.
@@ -5851,8 +5697,6 @@ def q_es_aggs_frequent_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "write_documents(mode=overwrite) / a transactional DELETE.",
 )
 def q_delete_by_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.sinks import delete_by_query
-
     docs = load_table(spark, sf_dir, "documents")
     return delete_by_query(docs, {"bool": {"should": [
         {"range": {"n_chars": {"lt": 100}}},
@@ -5875,8 +5719,6 @@ def q_delete_by_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ES's per-document interpreter + reindex.",
 )
 def q_update_by_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.sinks import update_by_query
-
     events = load_table(spark, sf_dir, "events")
     return update_by_query(
         events, {"term": {"event_type": "error"}},
@@ -5895,8 +5737,6 @@ def q_update_by_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "VERBATIM — the two front-ends must agree row-for-row.",
 )
 def q_search_cross_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.search import corpus_bm25_provider
-
     docs = fan_out(load_table(spark, sf_dir, "documents")).withColumn(
         "head", F.substring("text", 1, 80)
     )
@@ -6026,8 +5866,6 @@ def q_search_geo_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the generated regex verbatim.",
 )
 def q_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.ingest import apply_ingest_pipeline
-
     events = load_table(spark, sf_dir, "events").withColumn(
         "line",
         F.concat(
@@ -6077,8 +5915,6 @@ def q_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast back to double after the agg keeps the output schema.",
 )
 def q_es_aggs_children(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.joinfield import children_agg
-
     lineitem = load_table(spark, sf_dir, "lineitem").withColumn(
         "l_extendedprice", F.col("l_extendedprice").cast("decimal(18,2)")
     )
@@ -6123,8 +5959,6 @@ def q_es_aggs_children(spark: SparkSession, sf_dir: str) -> DataFrame:
         "then the parent join.",
 )
 def q_es_aggs_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.joinfield import parent_agg
-
     # Sum over DECIMAL(18,2) on both engines.
     # Bucket revenue reaches ~2.75e9 where double summation-order noise
     # (Spark 2754983250.180004 vs DuckDB ...18001) survives round(,6);
@@ -6171,8 +6005,6 @@ def q_es_aggs_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "one qualifying term, a near-empty verification.)",
 )
 def q_es_terms_enum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.api import es_terms_enum
-
     return es_terms_enum(
         load_table(spark, sf_dir, "part"), "p_brand",
         string="Brand#1", size=10,

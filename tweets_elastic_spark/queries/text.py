@@ -8,6 +8,14 @@ from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions import analyzers as A
 from tweets_elastic_spark.functions import textstats as T
+from tweets_elastic_spark.functions.analyzers import pin_computed
+from tweets_elastic_spark.functions.stemmer import porter_stem
+from tweets_elastic_spark.operators.bpe import END, bpe_encode, bpe_train
+from tweets_elastic_spark.operators.lm import bigram_ce_filter
+from tweets_elastic_spark.operators.sampling import (
+    deterministic_split,
+    split_thresholds,
+)
 from tweets_elastic_spark.registry import register
 from tweets_elastic_spark.sources.catalog import fan_out, load_table
 
@@ -68,8 +76,6 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docs below 0.5 are dropped.",
 )
 def q_model_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.functions.analyzers import pin_computed
-
     docs = load_table(spark, sf_dir, "documents")
     # pinned: the gate and the output column both read the classifier
     # score — unpinned, Catalyst evaluates the whole feature expression
@@ -226,7 +232,7 @@ _ENGLANDO_VOCAB = [
 
 
 def _englando_oracle_sql() -> str:
-    """Full DuckDB oracle for AN1 (was rows-only until r13): replay
+    """Full DuckDB oracle for AN1: replay
     tokenize → possessive → lowercase → stop in SQL, then map each token
     through a Porter-stem CASE built AT IMPORT from the vendored stemmer
     over the fixed corpus vocabulary. The driver row thereby verifies
@@ -237,8 +243,6 @@ def _englando_oracle_sql() -> str:
     replay of the UDF under test. A token OUTSIDE the fixture maps to
     token||'~MISSINGSTEM', which can only make the row FAIL — loud,
     never silently green."""
-    from tweets_elastic_spark.functions.stemmer import porter_stem
-
     whens = " ".join(
         f"WHEN '{w}' THEN '{porter_stem(w)}'" for w in _ENGLANDO_VOCAB
     )
@@ -265,7 +269,7 @@ def _englando_oracle_sql() -> str:
     oracle=_englando_oracle_sql(),
     doc="AN1 englando analyzer (settings.json:9-19) at corpus scale — "
         "html_strip → standard → possessive → lowercase → stop → Porter, "
-        "token order preserved through the join. FULL oracle since r13 "
+        "token order preserved through the join. FULL oracle "
         "(was rows-only 'Porter is not SQL-expressible'): the corpus "
         "vocabulary is a fixed 31-word set, so the stem step becomes an "
         "inline CASE fixture built from the vendored stemmer (itself "
@@ -288,8 +292,6 @@ _SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
 
 
 def _split_case_sql() -> str:
-    from tweets_elastic_spark.operators.sampling import split_thresholds
-
     h = "substr(md5(doc_id::VARCHAR || ':split'), 1, 8)"
     ths = split_thresholds(_SPLIT_FRACTIONS)
     whens = " ".join(
@@ -309,8 +311,6 @@ def _split_case_sql() -> str:
         "oracle.",
 )
 def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.sampling import deterministic_split
-
     docs = load_table(spark, sf_dir, "documents")
     return deterministic_split(docs, "doc_id", _SPLIT_FRACTIONS).select(
         "doc_id", "split"
@@ -362,15 +362,13 @@ def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "model artifact (operators/lm.py).",
 )
 def q_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.lm import bigram_ce_filter
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return bigram_ce_filter(docs, threshold=3.45)
 
 
 @register(
     "bpe_token_stats",
-    # CONTRACT ORACLE (r14 — the ann_ivf_recall_profile pattern, closing
+    # CONTRACT ORACLE (the ann_ivf_recall_profile pattern, closing
     # the rows-only class for good): the iterative merge recursion is
     # not SQL-expressible, so the row emits (a) per-lang doc/word counts
     # the oracle REPLAYS exactly (same pre-tokenization regex both
@@ -409,8 +407,6 @@ def q_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "compression bounds, full merge count).",
 )
 def q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.bpe import END, bpe_encode, bpe_train
-
     docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
         F.col("text").isNotNull()
     )
@@ -467,7 +463,7 @@ def q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                  x -> x <> ''))), ' ') AS fingerprint
     FROM documents
     """,
-    doc="ES's built-in fingerprint ANALYZER (r10, analyzers.py): "
+    doc="ES's built-in fingerprint ANALYZER (analyzers.py): "
         "standard tokenize -> lowercase -> asciifold -> sort + dedupe + "
         "space-join into one normal-form token (equal fingerprints = "
         "same word multiset, the classic clustering key). ASCII corpus "
@@ -485,7 +481,7 @@ def q_analyze_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Unicode script profile (r13). The fixture corpus is pure ASCII, so the
+# Unicode script profile. The fixture corpus is pure ASCII, so the
 # row PLANTS deterministic non-Latin suffixes (the c4_line_filter / html
 # wrap precedent): one script per residue class, a mixed-script page, and
 # a repeat-amplified Cyrillic page whose dominant script FLIPS away from
@@ -529,7 +525,7 @@ _SCRIPT_SUFFIXES = {
     FROM pages
     ORDER BY doc_id
     """,
-    doc="Unicode script profile (r13): per-document character counts for "
+    doc="Unicode script profile: per-document character counts for "
         "the eight major writing systems + the dominant script — the "
         "multilingual routing signal CCNet/mC4 apply BEFORE language ID "
         "(lang-id models are per-script; mixed-script pages are a spam "

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.operators.denormalize import build_tweet_documents
+from tweets_elastic_spark.plans.aggs import es_request
 from tweets_elastic_spark.registry import register
 from tweets_elastic_spark.sources.catalog import load_table
 
@@ -358,8 +359,6 @@ def q_tweet_documents_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate round-trip.",
 )
 def q_es_aggs_nested_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     tables = tweet_star_from_tpch(spark, sf_dir)
     # the request touches only context_annotations — skip the other four
     # child streams (their grouped left joins are not Catalyst-prunable)
@@ -397,7 +396,7 @@ def q_es_aggs_nested_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_count DESC, by_domain ASC
     LIMIT 5
     """,
-    doc="ES reverse_nested agg (r10): inside a nested terms agg, step "
+    doc="ES reverse_nested agg: inside a nested terms agg, step "
         "back to the ROOT document — per domain bucket, doc_count counts "
         "nested elements while `parents` counts DISTINCT parent tweets "
         "(ES's reverse_nested doc_count). Compiles to an exact "
@@ -407,8 +406,6 @@ def q_es_aggs_nested_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fanned-out lineitem rows, parents = distinct orderkeys.",
 )
 def q_es_aggs_reverse_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.aggs import es_request
-
     tables = tweet_star_from_tpch(spark, sf_dir)
     # only context_annotations is aggregated (reverse_nested needs just
     # the parent id, which the spine carries) — skip the other children

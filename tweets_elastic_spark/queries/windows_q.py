@@ -6,10 +6,14 @@ in batch mode for the oracle gate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tweets_elastic_spark.operators.asof import asof_join
+from tweets_elastic_spark.operators.rangejoin import interval_join
+from tweets_elastic_spark.plans.eql import eql_search
 from tweets_elastic_spark.registry import register
+from tweets_elastic_spark.rollup import rollup_job, rollup_search
 from tweets_elastic_spark.sources.catalog import load_table
 from tweets_elastic_spark.streaming.windows import (
     session_counts,
@@ -114,8 +118,6 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "collisions resolve to the max view_id on both sides.",
 )
 def q_events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.asof import asof_join
-
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
@@ -177,8 +179,6 @@ def q_corpus_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "order-independent.",
 )
 def q_user_rolling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -226,8 +226,6 @@ def q_user_rolling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         "actions at plan time.",
 )
 def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id")
     staged = (
@@ -292,8 +290,6 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "join at any scale (plan-pinned: no cartesian/nested-loop).",
 )
 def q_clicks_in_error_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.operators.rangejoin import interval_join
-
     ev = load_table(spark, sf_dir, "events")
     errs = ev.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("err_id"),
@@ -475,7 +471,7 @@ _EQL_FUNNEL_BODY = """
     oracle=_EQL_FUNNEL_BODY + """
     SELECT user_id, first_ts, last_ts, id1, id2, id3 FROM seqs
     """,
-    doc="EQL sequence correlation (r8 s4, plans/eql.py): `sequence by "
+    doc="EQL sequence correlation (plans/eql.py): `sequence by "
         "user_id with maxspan=2d [view][click][purchase]` through the "
         "deterministic single-slot automaton — one groupBy(user) shuffle "
         "moving only (ts, id, stage bits), the automaton a JVM aggregate "
@@ -485,8 +481,6 @@ _EQL_FUNNEL_BODY = """
         "corpus grows because keys scale, not per-key density).",
 )
 def q_eql_sequence_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events")
     return eql_search(events, """
         sequence by user_id with maxspan=2d
@@ -509,7 +503,7 @@ def q_eql_sequence_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY last_ts, id3
     LIMIT 25
     """,
-    doc="EQL pipes over sequence MATCHES (r10): `... | unique user_id | "
+    doc="EQL pipes over sequence MATCHES: `... | unique user_id | "
         "head 25` — matches ordered by their FINAL event (last_ts, then "
         "its id — ES's sequence hit order), first match per user, top "
         "25. unique compiles to one row_number window over the match "
@@ -518,8 +512,6 @@ def q_eql_sequence_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "as a window + ORDER/LIMIT over the same matches.",
 )
 def q_eql_sequence_pipes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events")
     return eql_search(events, """
         sequence by user_id with maxspan=2d
@@ -574,9 +566,9 @@ def q_eql_sequence_pipes(spark: SparkSession, sf_dir: str) -> DataFrame:
            m_id1 AS id1, m_id2 AS id2
     FROM run WHERE m_id2 IS NOT NULL
     """,
-    doc="EQL sequence with DISJUNCTIVE stage conditions (r11 — the r10 "
-        "verdict's top parser gap): both stages are `any where <boolean "
-        "expr>` exercising the full r11 condition grammar — `in` "
+    doc="EQL sequence with DISJUNCTIVE stage conditions: "
+        "both stages are `any where <boolean "
+        "expr>` exercising the full condition grammar — `in` "
         "membership, `not`, parenthesized `or` at ES precedence — "
         "compiled to pure Catalyst predicates evaluated before the "
         "single key shuffle. The oracle replays the 2-stage single-slot "
@@ -585,8 +577,6 @@ def q_eql_sequence_pipes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exactly like the engine ships stage bits through the shuffle).",
 )
 def q_eql_sequence_disjunction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events")
     return eql_search(events, """
         sequence by user_id with maxspan=1d
@@ -605,13 +595,11 @@ def q_eql_sequence_disjunction(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_type = 'error' AND value > 90
     ORDER BY 2, 1
     """,
-    doc="EQL simple event query (r8 s4): `error where value > 90` — the "
+    doc="EQL simple event query: `error where value > 90` — the "
         "parser's non-sequence path; predicate reaches the parquet scan, "
         "hits ordered by (timestamp, id) like ES's EQL response.",
 )
 def q_eql_event_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events")
     return (
         eql_search(events, "error where value > 90")
@@ -681,7 +669,7 @@ def q_eql_event_query(spark: SparkSession, sf_dir: str) -> DataFrame:
            m_id1 AS id1, m_id2 AS id2, m_id3 AS id3
     FROM run WHERE m_id3 IS NOT NULL
     """,
-    doc="EQL sequence with `until` (r8 s4): signup events terminate "
+    doc="EQL sequence with `until`: signup events terminate "
         "in-progress view->click->purchase funnels (ES's until contract; "
         "an event matching both until and a stage resolves to until — "
         "documented tie-break). Same single-slot automaton with one "
@@ -689,8 +677,6 @@ def q_eql_event_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oracle replays it exactly.",
 )
 def q_eql_sequence_until(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events")
     return eql_search(events, """
         sequence by user_id with maxspan=2d
@@ -714,14 +700,12 @@ def q_eql_sequence_until(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, tsd, user_id, value
     FROM uniq ORDER BY tsd, event_id LIMIT 20
     """,
-    doc="EQL pipes (r8 s4): `error where true | unique user_id | head 20` "
+    doc="EQL pipes: `error where true | unique user_id | head 20` "
         "— unique keeps each key's FIRST hit in EQL hit order (one window "
         "rank), head is TakeOrderedAndProject. Pipes compose left-to-"
         "right; sequences refuse pipes (one row per match already).",
 )
 def q_eql_event_pipes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events")
     return (
         eql_search(events, "error where true | unique user_id | head 20")
@@ -777,7 +761,7 @@ def q_eql_event_pipes(spark: SparkSession, sf_dir: str) -> DataFrame:
            m_id1 AS id1, m_id2 AS id2
     FROM run WHERE m_id2 IS NOT NULL
     """,
-    doc="EQL PER-STAGE join keys (r11, plans/eql.py): `sequence "
+    doc="EQL PER-STAGE join keys (plans/eql.py): `sequence "
         "[signup] by user_id [click] by uid2` — each stage keys on its "
         "OWN field (uid2 derived in-plan as floor(value %% 50)) and the "
         "values must agree, ES's cross-field sequence join. The engine "
@@ -791,8 +775,6 @@ def q_eql_event_pipes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "relation.",
 )
 def q_eql_sequence_by_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
     ).withColumn("uid2", F.floor(F.col("value") % 50).cast("long"))
@@ -828,7 +810,7 @@ def q_eql_sequence_by_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY tsd, event_id
     LIMIT 300
     """,
-    doc="EQL condition FUNCTIONS end-to-end (r11, plans/eql.py): `any "
+    doc="EQL condition FUNCTIONS end-to-end (plans/eql.py): `any "
         "where (cidrMatch(ip, '10.64.0.0/10') or startsWith~(event_type, "
         "'CL')) and length(event_type) >= 5 | head 300` over an in-plan "
         "derived IPv4 column. cidrMatch parses the CIDR at COMPILE time "
@@ -840,8 +822,6 @@ def q_eql_sequence_by_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "evaluated on the scan.",
 )
 def q_eql_event_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events").withColumn(
         "ip",
         F.concat_ws(
@@ -881,8 +861,8 @@ def q_eql_event_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
        AND min(CASE WHEN event_type = 'purchase' AND value < 50
                THEN event_id END) IS NOT NULL
     """,
-    doc="EQL `sample` query kind (r12 — the one EQL surface the r11 "
-        "verdict listed as absent; plans/eql.py): UN-ordered per-key "
+    doc="EQL `sample` query kind "
+        "(plans/eql.py): UN-ordered per-key "
         "correlation, one event per stage joined on `sample by user_id` "
         "with no chronology and no maxspan (ES 8.6 samples). "
         "Deterministic documented divergence: ES caps at `size` samples "
@@ -893,8 +873,6 @@ def q_eql_event_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shuffle. Oracle: the same conditional-min GROUP BY in SQL.",
 )
 def q_eql_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events")
     return eql_search(events, """
         sample by user_id
@@ -930,7 +908,7 @@ def q_eql_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
        AND min(CASE WHEN event_type = 'error'
                THEN event_id END) IS NOT NULL
     """,
-    doc="EQL sample with PER-STAGE join keys (r12, plans/eql.py): "
+    doc="EQL sample with PER-STAGE join keys (plans/eql.py): "
         "`sample [view where value > 100] by user_id [error where "
         "true] by uid2` — each stage keys on its OWN field (uid2 "
         "derived in-plan as floor(value %% 50)), values must agree, "
@@ -944,8 +922,6 @@ def q_eql_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "string here (arity 1; driver primitive-schema constraint).",
 )
 def q_eql_sample_by_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.plans.eql import eql_search
-
     events = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
     ).withColumn("uid2", F.floor(F.col("value") % 50).cast("long"))
@@ -974,7 +950,7 @@ def q_eql_sample_by_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE ts IS NOT NULL AND event_type IS NOT NULL
     GROUP BY 1, 2
     """,
-    doc="ES rollup (r8 s4, rollup.py): a day-grain rollup job stores "
+    doc="ES rollup (rollup.py): a day-grain rollup job stores "
         "algebraic partials (sum/count/min/max per metric), and "
         "rollup_search answers the MONTH grain from the rollup alone — "
         "coarser buckets are prefixes of the zero-padded day key "
@@ -984,8 +960,6 @@ def q_eql_sample_by_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rollup answer exact end-to-end.",
 )
 def q_rollup_search_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tweets_elastic_spark.rollup import rollup_job, rollup_search
-
     events = load_table(spark, sf_dir, "events")
     rolled = rollup_job(
         events, date_field="ts", interval="day",
@@ -1032,7 +1006,7 @@ def q_rollup_search_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dev d JOIN mads m USING (event_type, hod)
     WHERE abs(d.value - d.med) / (m.mad * 1.4826 + 1e-9) > 3.0
     """,
-    doc="ES anomaly-detection analogue (r8 s4): the deterministic core "
+    doc="ES anomaly-detection analogue: the deterministic core "
         "of a seasonal single-metric job — per (event_type, hour-of-day) "
         "bucket compute the median and the MAD, score each event as the "
         "robust z-score |x - med| / (1.4826*MAD + eps), flag > 3. ES's "

@@ -25,12 +25,14 @@ ES's overwrite-by-id would.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark.functions.vectors import col_sql, lit_sql
+from tweets_elastic_spark.plans.search import Query, compile_painless, from_es_json
 
 
 def write_documents(
@@ -106,8 +108,6 @@ def increment_counters(
     )
     # no forced broadcast: delta sets are usually small (AQE broadcasts
     # them on its own) but can be corpus-sized after a recount job
-    from pyspark.sql import Observation
-
     obs = Observation()
     updated = (
         docs.join(d, docs[id_col] == d["_upd_id"], "left")
@@ -205,8 +205,6 @@ def write_elasticsearch(
 
 
 def _compile_dsl(query, id_field: str = "doc_id"):
-    from tweets_elastic_spark.plans.search import Query, from_es_json
-
     if isinstance(query, Query):
         return query
     return from_es_json(query, id_field=id_field)
@@ -237,10 +235,6 @@ def update_by_query(df: DataFrame, query, script: str,
     codegen'd projection over the scan (non-matching documents pass
     through bit-unchanged) — vs ES's per-document script interpreter +
     reindex. Anything outside that shape raises loudly."""
-    import re
-
-    from tweets_elastic_spark.plans.search import compile_painless
-
     m = re.match(
         r"^\s*ctx\._source\.([A-Za-z_][A-Za-z0-9_]*)\s*=\s*(.+?)\s*;?\s*$",
         script, flags=re.DOTALL,

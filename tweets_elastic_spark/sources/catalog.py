@@ -15,9 +15,10 @@ from __future__ import annotations
 import os
 from functools import lru_cache as _lru_cache
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 from tweets_elastic_spark.schemas import TESTDATA_TABLES
 
@@ -68,8 +69,6 @@ def parquet_ts_is_nanos(path: str, col: str) -> bool:
 
 @_lru_cache(maxsize=None)
 def _file_ts_is_nanos(path: str, _ident: tuple[int, int], col: str) -> bool:
-    import pyarrow.parquet as pq
-
     meta = pq.ParquetFile(path).metadata.schema
     for i in range(len(meta)):
         c = meta.column(i)
@@ -82,8 +81,6 @@ def _file_ts_is_nanos(path: str, _ident: tuple[int, int], col: str) -> bool:
 
 
 def _declared_ts_cols(schema: StructType) -> list[str]:
-    from pyspark.sql.types import TimestampType
-
     return [f.name for f in schema.fields if isinstance(f.dataType, TimestampType)]
 
 

@@ -37,7 +37,10 @@ lines (obsolete RFC 822 folding) likewise.
 from __future__ import annotations
 
 import gzip
+import zlib
 from dataclasses import dataclass, field
+
+import pandas as pd
 
 __all__ = ["WarcRecord", "parse_warc", "build_warc", "warc_records"]
 
@@ -63,8 +66,6 @@ def _split_members(payload: bytes) -> list[bytes]:
     (zlib.decompressobj stops at each member's end and reports the
     unconsumed tail via ``unused_data``, giving exact member
     boundaries). Plain payloads pass through whole."""
-    import zlib
-
     if payload[:2] != b"\x1f\x8b":
         return [payload]
     out: list[bytes] = []
@@ -213,8 +214,6 @@ def warc_records(df, payload_col: str = "payload"):
     decode of response bodies; non-response records carry NULL text).
     Arrow-batched mapInPandas; downstream dedup/quality/lang-id gates
     compose on the result like any documents relation."""
-    import pandas as pd
-
     schema = ("asset_id long, rec_idx int, warc_type string, uri string, "
               "http_status int, mime string, n_bytes long, text string")
 
