@@ -85,3 +85,22 @@ def test_rank_eval_metric(df, kind):
         es_rank_eval(df, {"requests": [{"id": "q", "request": {
             "query": {"match_all": {}}}, "ratings": []}], "metric": {kind: BOGUS}},
             id_col="id")
+
+
+@pytest.mark.parametrize("kind", sorted(search._FIELD_QUERY_KEYS))
+def test_field_query_clause_empty_spec(kind):
+    """An empty object spec compiles or raises a ``ValueError`` naming the
+    clause and every key of its ``_FIELD_QUERY_REQUIRED`` row, never a bare
+    ``KeyError``; a ``span_term`` is also read nested in another span."""
+    nodes = [{kind: {"f": {}}}]
+    if kind == "span_term":
+        nodes.append({"span_first": {"match": nodes[0], "end": 1}})
+    for node in nodes:
+        try:
+            from_es_json({"query": node})
+            error = ""
+        except ValueError as e:
+            error = str(e)
+            assert kind in error
+        for key in search._FIELD_QUERY_REQUIRED.get(kind, ()):
+            assert repr(key) in error

@@ -124,6 +124,20 @@ def test_request_compile_py4j_budget(spark, docs_df, py4j_commands):
         k=10, tiebreak="id").select("id", "score")) < 60
 
 
+def test_tweet_documents_construction_py4j_budget(spark, py4j_commands):
+    """The tweet document is one SQL statement: building it sends a few
+    Py4J commands per table it reads, not a command per Column call (710
+    while it was assembled from Columns)."""
+    tables = make_tweets_tables(spark, n_conversations=100)
+    counts = []
+    for _ in range(3):
+        gc.collect()
+        with py4j_commands() as n:
+            build_tweet_documents(tables)
+        counts.append(n[0])
+    assert min(counts) <= 40
+
+
 def test_missing_field_error_names_field(spark, docs_df):
     """Sessions from ``get_spark`` turn PySpark's call-site capture off.
     An error still carries Spark's error class and names the field."""

@@ -8,11 +8,13 @@ NULL nested hashtags for a parent without hashtags (queries.sql:61-66).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from tweets_elastic_spark import schemas
-from tweets_elastic_spark.operators.denormalize import build_tweet_documents
+from tweets_elastic_spark.operators.denormalize import CHILD_ARRAYS, build_tweet_documents
 from tweets_elastic_spark.sources.fixtures import make_tweets_tables
 
 
@@ -129,6 +131,19 @@ def test_parent_with_hashtags_gets_sorted_list(docs):
                 assert tags == sorted(parent_tags[ref["id"]])
                 found = True
     assert found, "fixture should contain at least one parent with hashtags"
+
+
+@pytest.mark.parametrize("child", CHILD_ARRAYS)
+def test_children_subset_equals_full_build(spark, docs, child):
+    """``children=[c]`` builds the same documents, and the same array ``c``
+    for each, as the full build."""
+    df, rows = docs
+    sub = build_tweet_documents(make_tweets_tables(spark, n_conversations=100),
+                                children=[child])
+    assert sub.schema[child] == df.schema[child]
+    got = {r["id"]: r[child] for r in sub.select("id", child).collect()}
+    assert set(got) == set(rows)
+    assert got == {i: r[child] for i, r in rows.items()}
 
 
 def test_document_field_paths_match_reference_sample(spark, docs, reference_json):
@@ -298,3 +313,28 @@ def test_incremental_etl_replay_does_not_duplicate(spark, tmp_path):
     assert again == first
     ids = [i for i, _ in again]
     assert len(ids) == len(set(ids)) == 20
+
+
+def test_incremental_etl_caught_up_writes_nothing(spark, tmp_path, spark_jobs):
+    """Past the last conversation, a keyset page is one Spark job (the
+    probe that finds the page's last id and size): it returns 0, writes no
+    ``ingest_wm`` partition and leaves the watermark where it was."""
+    from tweets_elastic_spark.pipeline import etl_increment
+    from tweets_elastic_spark.sources.incremental import WatermarkStore
+
+    tables = make_tweets_tables(spark, n_conversations=30)
+    src = tmp_path / "src"
+    for name, df in tables.items():
+        df.write.parquet(str(src / f"{name}.parquet"))
+    sink = str(tmp_path / "inc")
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    store.set("conversations.id", 0)
+    assert etl_increment(spark, str(src), sink, store) == 30
+    partitions, wm = sorted(os.listdir(sink)), store.get("conversations.id")
+
+    with spark_jobs() as jobs:
+        n = etl_increment(spark, str(src), sink, store, page_limit=20)
+    assert n == 0
+    assert sorted(os.listdir(sink)) == partitions
+    assert store.get("conversations.id") == wm == 30
+    assert jobs[0] == 1

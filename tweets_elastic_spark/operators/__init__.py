@@ -1,13 +1,9 @@
 from tweets_elastic_spark.operators.denormalize import (
-    attach_children,
     build_tweet_documents,
     denormalize_orders,
-    group_children,
 )
 
 __all__ = [
-    "attach_children",
     "build_tweet_documents",
     "denormalize_orders",
-    "group_children",
 ]

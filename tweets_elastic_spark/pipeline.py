@@ -9,14 +9,13 @@ documents, advancing ``last_id`` } (src/main.py:106-162). Here:
   bulk batches).
 * ``etl_increment`` — the re-runnable form: document only conversations
   past the durable watermark (optionally capped by ``page_limit``, the
-  reference's LIMIT at src/main.py:100), but resolve every lookup —
-  parent tweets/authors (J6/J7) and parent hashtags (J8) — against the
-  FULL tables, the same semantics as the reference's page query whose
-  subqueries run over the whole database. Child tables that only feed the
-  PAGE's documents are semi-join-pruned to the page so an increment's
-  cost scales with the increment; ``conversation_hashtags`` is NOT pruned
-  because it also feeds the parent-hashtag lookup for parents outside the
-  page. Watermark stats ride the write job (observe()); each increment
+  reference's LIMIT at src/main.py:100). ``conversations.id`` is unique,
+  so a page is exactly the ids in ``(watermark, max page id]``: one action
+  finds that max and the page size, and the document query reads the
+  page as an id range, which parquet pushes into the scans. Every lookup —
+  parent tweets/authors (J6/J7) and parent hashtags (J8) — still resolves
+  against the FULL tables, the same semantics as the reference's page
+  query whose subqueries run over the whole database. Each increment
   lands in a deterministic ``ingest_wm=<wm>`` partition so crash replays
   overwrite instead of duplicating.
 
@@ -24,8 +23,10 @@ Both writers use the same ``ingest_wm=…`` partition layout (``-1`` for the
 one-shot build), so a sink stays readable with plain
 ``spark.read.parquet(sink)`` whichever mode produced it. Re-documenting a
 conversation across increments (watermark rewound for a backfill, or
-mixing modes) leaves both versions in different partitions; a reader
-that needs ES's overwrite-by-id keeps the latest ``ingest_wm`` per id.
+mixing modes) leaves both versions in different partitions. No reader in
+this package resolves that to ES's overwrite-by-id; and keeping the
+largest ``ingest_wm`` per id would not do it either, because a backfill
+writes under a smaller watermark than the version it replaces.
 
 Unioned increments are exactly ``etl_full``'s output as long as referenced
 parents exist in the source when their child's page is processed — for a
@@ -43,15 +44,6 @@ from tweets_elastic_spark import schemas
 from tweets_elastic_spark.operators.denormalize import build_tweet_documents
 from tweets_elastic_spark.sinks import write_documents
 from tweets_elastic_spark.sources.incremental import WatermarkStore
-
-# children that only ever join to the page's own documents (safe to prune);
-# conversation_hashtags is excluded — it also resolves J8 parent hashtags
-PAGE_LOCAL_CHILDREN = [
-    "context_annotations",
-    "annotations",
-    "links",
-    "conversation_references",
-]
 
 
 def load_tweet_tables(spark: SparkSession, src_dir: str) -> dict[str, DataFrame]:
@@ -90,40 +82,23 @@ def etl_increment(
     all-dropped middle page look like end-of-data to the caller's loop."""
     t = load_tweet_tables(spark, src_dir)
     wm = store.get("conversations.id")
-    spine = t["conversations"].filter(F.col("id") > F.lit(wm))
+    ids = t["conversations"].select("id").where(F.col("id") > F.lit(wm))
     if page_limit is not None:
         # the keyset page: ORDER BY id LIMIT n (src/main.py:98-100)
-        spine = spine.orderBy(F.col("id").asc()).limit(page_limit)
-
-    # The spine feeds the isEmpty probe, four semi-join prunes, and the
-    # document join — cache it so the sorted-limit page query runs once,
-    # and unpersist before returning (everything is materialized below).
-    spine = spine.persist()
-    try:
-        # caught up? cheap probe before launching the write job, so an
-        # idle polling loop doesn't litter empty ingest_wm partitions
-        if spine.isEmpty():
-            return 0
-
-        # Prune page-local children BEFORE their group-bys: the left-semi
-        # join keeps the per-increment work O(increment).
-        page_ids = spine.select(F.col("id").alias("conversation_id"))
-        pruned = dict(t)
-        for child in PAGE_LOCAL_CHILDREN:
-            pruned[child] = t[child].join(page_ids, "conversation_id", "left_semi")
-
-        docs = build_tweet_documents(pruned, spine=spine)
-
-        docs.write.mode("overwrite").parquet(
-            os.path.join(sink_path, f"ingest_wm={wm}")
-        )
-        # advance by the max SPINE id (cached → cheap agg), not the max
-        # document id: a page whose tail conversations drop at the author
-        # inner join (J1) is still fully processed — anchoring the
-        # watermark to emitted docs would re-process the dropped tail on
-        # every poll (and an all-dropped page would never advance at all)
-        mx, n_spine = spine.agg(F.max("id"), F.count(F.lit(1))).head()
-        store.set("conversations.id", int(mx))
-        return int(n_spine)
-    finally:
-        spine.unpersist()
+        ids = ids.orderBy("id").limit(page_limit)
+    # one action: the page's last id and its size. An empty page means
+    # caught up, and nothing is written, so an idle polling loop leaves no
+    # empty ingest_wm partitions.
+    mx, n = ids.agg(F.max("id"), F.count(F.lit(1))).head()
+    if n == 0:
+        return 0
+    build_tweet_documents(t, page=(wm, mx)).write.mode("overwrite").parquet(
+        os.path.join(sink_path, f"ingest_wm={wm}")
+    )
+    # advance by the max PAGE id, not the max document id: a page whose
+    # tail conversations drop at the author inner join (J1) is still fully
+    # processed — anchoring the watermark to emitted docs would re-process
+    # the dropped tail on every poll (and an all-dropped page would never
+    # advance at all)
+    store.set("conversations.id", int(mx))
+    return int(n)

@@ -2322,13 +2322,17 @@ def _scalar_or_list(v) -> list:
     return v if isinstance(v, list) else [v]
 
 
-def check_keys(body: dict, accepted, surface: str) -> None:
+def check_keys(body: dict, accepted, surface: str, required=()) -> None:
     """Refuse ``body`` if it carries a key outside ``accepted``, as ES
     refuses an unknown request key with a parse error: a key the reader
-    does not honour would otherwise answer a different request."""
+    does not honour would otherwise answer a different request. Refuse it
+    too if it lacks a key of ``required``."""
     unknown = set(body) - set(accepted)
     if unknown:
         raise ValueError(f"unsupported {surface} keys: {sorted(unknown)}")
+    missing = set(required) - set(body)
+    if missing:
+        raise ValueError(f"{surface} requires keys: {sorted(missing)}")
 
 
 # The keys each query clause honours, by kind; ``compile_node`` refuses
@@ -2386,6 +2390,15 @@ _FIELD_QUERY_KEYS = {
     "range": {"gt", "gte", "lt", "lte"},
     "span_term": {"value"},
 }
+# The keys of those that ``spec`` must carry when it is an object.
+_FIELD_QUERY_REQUIRED = {
+    **dict.fromkeys(("match", "match_phrase", "match_phrase_prefix",
+                     "match_bool_prefix"), {"query"}),
+    **dict.fromkeys(("term", "prefix", "wildcard", "regexp", "fuzzy",
+                     "span_term"), {"value"}),
+    "terms": {"index", "id", "path"},
+    "terms_set": {"terms"},
+}
 
 
 def _span_clauses(clauses: list, kinds: tuple, where: str,
@@ -2418,7 +2431,7 @@ def _span_units(node: dict, kinds: tuple, where: str,
     if nk == "span_term":
         (f, v), = nb.items()
         if isinstance(v, dict):
-            check_keys(v, _FIELD_QUERY_KEYS[nk], nk)
+            check_keys(v, _FIELD_QUERY_KEYS[nk], nk, _FIELD_QUERY_REQUIRED[nk])
             v = v["value"]
         return f, [("term", str(v))]
     check_keys(nb, _QUERY_KEYS[nk], nk)
@@ -2558,7 +2571,8 @@ def from_es_json(
                 raise ValueError(f"{kind} expects {{field: ...}}, got {body!r}")
             (field, spec), = body.items()
             if isinstance(spec, dict):
-                check_keys(spec, _FIELD_QUERY_KEYS[kind], kind)
+                check_keys(spec, _FIELD_QUERY_KEYS[kind], kind,
+                           _FIELD_QUERY_REQUIRED.get(kind, ()))
         elif kind in _QUERY_KEYS:
             check_keys(body, _QUERY_KEYS[kind], kind)
         else:
