@@ -3,8 +3,11 @@ splitting — the ship-stage training-data ops on top of pairwise dedup."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from tweets_elastic_spark.operators import dedup as D
 from tweets_elastic_spark.operators.sampling import (
@@ -34,12 +37,13 @@ def test_connected_components_rejects_max_iter_below_one(spark, max_iter):
         D.connected_components(_pairs(spark, [(1, 2)]), max_iter=max_iter)
 
 
-def test_connected_components_pointer_doubling_round_bound(spark):
-    # r17 pointer doubling: rounds are O(log d), not O(d). A 9-node path
-    # (diameter 8) must converge in <= 4 loop iterations INCLUDING the
-    # final no-change confirmation: labels go x-1 -> max(1, x-3) ->
-    # max(1, x-7) -> all-1 (changed) -> confirm. Plain one-hop
-    # propagation needs 5+ iterations on the same graph.
+def test_connected_components_pointer_doubling_round_bound(spark, monkeypatch):
+    # Spark path (bound 0): pointer doubling makes rounds O(log d), not
+    # O(d). A 9-node path (diameter 8) must converge in <= 4 loop
+    # iterations INCLUDING the final no-change confirmation: labels go
+    # x-1 -> max(1, x-3) -> max(1, x-7) -> all-1 (changed) -> confirm.
+    # Plain one-hop propagation needs 5+ iterations on the same graph.
+    monkeypatch.setattr(D, "_DRIVER_CC_MAX_EDGES", 0)
     path9 = [(i, i + 1) for i in range(1, 9)]
     comp = D.connected_components(_pairs(spark, path9))
     got = {r["id"]: r["cluster_id"] for r in comp.collect()}
@@ -52,6 +56,100 @@ def test_connected_components_min_label_any_orientation(spark):
     comp = D.connected_components(_pairs(spark, [(5, 2), (2, 9), (9, 7)]))
     got = {r["id"]: r["cluster_id"] for r in comp.collect()}
     assert got == {2: 2, 5: 2, 7: 2, 9: 2}
+
+
+def _cc_graphs():
+    rng = random.Random(15)
+    graphs = [
+        ("path_d64", [(i, i + 1) for i in range(1, 65)], LongType(), True),
+        ("isolated_pairs", [(2 * i, 2 * i + 1) for i in range(1, 8)],
+         LongType(), True),
+        ("self_loops", [(3, 3), (3, 4), (7, 7), (4, 3)], IntegerType(), True),
+        ("empty", [], LongType(), True),
+        ("non_nullable", [(1, 2), (2, 3), (5, 6)], LongType(), False),
+    ]
+    for g in range(6):
+        n = rng.randint(2, 40)
+        edges = [
+            (rng.randint(1, n), rng.randint(1, n))
+            for _ in range(rng.randint(1, 2 * n))
+        ]
+        id_type = IntegerType() if g % 2 else LongType()
+        graphs.append((f"random_{g}", edges + edges[:2], id_type, True))
+    return graphs
+
+
+_CC_GRAPHS = _cc_graphs()
+
+
+@pytest.mark.parametrize(
+    "edges,id_type,nullable",
+    [g[1:] for g in _CC_GRAPHS],
+    ids=[g[0] for g in _CC_GRAPHS],
+)
+def test_connected_components_driver_path_equals_spark_path(
+    spark, monkeypatch, edges, id_type, nullable
+):
+    # same rows, schema and nullability from driver union-find and from
+    # the Spark path (forced with a bound of 0); both columns are
+    # nullable whatever the pair columns are
+    pairs = spark.createDataFrame(edges, StructType([
+        StructField("id_a", id_type, nullable),
+        StructField("id_b", id_type, nullable),
+    ]))
+    driver = D.connected_components(pairs)
+    assert D.CC_LAST_ROUNDS == 0
+    with monkeypatch.context() as m:
+        m.setattr(D, "_DRIVER_CC_MAX_EDGES", 0)
+        via_spark = D.connected_components(pairs, max_iter=80)
+        assert via_spark.schema == driver.schema
+        assert sorted(via_spark.collect()) == sorted(driver.collect())
+    assert [(f.name, f.nullable) for f in driver.schema.fields] == [
+        ("id", True), ("cluster_id", True)
+    ]
+    assert driver.schema["id"].dataType == id_type
+
+
+@pytest.mark.parametrize("bound", [10, 1], ids=["driver", "spark"])
+def test_connected_components_refuses_null_id(spark, monkeypatch, bound):
+    # one partition, null pair last: with a bound of 1 the probe reads the
+    # two clean pairs, takes the Spark path, and the raise comes from the
+    # edge localCheckpoint; with a bound of 10 it comes from the collect
+    monkeypatch.setattr(D, "_DRIVER_CC_MAX_EDGES", bound)
+    pairs = spark.range(1, 4, numPartitions=1).select(
+        F.when(F.col("id") < 3, F.col("id")).alias("id_a"),
+        (F.col("id") + 1).alias("id_b"),
+    )
+    checkpoints = []
+    local_checkpoint = type(pairs).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        checkpoints.append(df)
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", spy)
+    with pytest.raises(Exception, match="null id"):
+        D.connected_components(pairs).collect()
+    assert len(checkpoints) == (bound == 1)
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(1, 5)], "doc_id long, text string"
+    )
+    with pytest.raises(Exception, match="null id"):
+        D.dedup_near_survivors(docs, pairs).collect()
+
+
+def test_connected_components_small_graph_job_budget(spark, spark_jobs):
+    # the driver path: one collect of the edges, then the caller's jobs
+    pairs = _pairs(spark, [(i, i + 1) for i in range(1, 6)])
+    with spark_jobs() as n:
+        D.connected_components(pairs).collect()
+    assert n[0] <= 3, n[0]
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(1, 20)], "doc_id long, text string"
+    )
+    with spark_jobs() as n:
+        D.dedup_near_survivors(docs, pairs).count()
+    assert n[0] <= 6, n[0]
 
 
 def test_dedup_near_survivors_transitive_drop(spark):

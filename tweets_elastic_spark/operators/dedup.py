@@ -30,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from tweets_elastic_spark.functions.hashing import hash60
 from tweets_elastic_spark.functions.textstats import (
@@ -75,10 +75,45 @@ def dedup_exact(
 # an intermediate; dedup drops all-but-one per transitive duplicate group)
 # ---------------------------------------------------------------------------
 
-# Iteration count of the most recent connected_components call (test hook
-# for the pointer-doubling O(log d) round bound; includes the final
-# no-change confirmation round).
+# Iteration count of the most recent connected_components call: the
+# Spark path's loop rounds (including the final no-change confirmation
+# round), 0 when the driver path labelled the graph. perfbench reads it.
 CC_LAST_ROUNDS: int = 0
+
+# Most edges the driver path labels; a larger graph takes the Spark path.
+# Driver memory: the probe holds 16 B per edge as two Arrow-backed int64
+# columns; the Python heap (tracemalloc) peaks at ~330 B per edge when
+# every edge brings two new nodes (10**6 isolated pairs: 313 MB) and at
+# ~110 B on dup groups (10**6 edges of 8-node cliques: 107 MB).
+# Measured on a 4-core box, 2g driver, cliques of 8 built by a shuffle
+# join, label + count, driver vs Spark path (one round): 10**4 edges
+# 0.29 vs 0.98 s, 10**5 0.54 vs 1.42 s, 3*10**5 0.91 vs 1.64 s, 10**6
+# 2.42 vs 2.73 s. Above the bound the probe costs the Spark path 0.84 s
+# at 2*10**6 edges (0.29 s for the 1-row probe a bound of 0 still pays).
+_DRIVER_CC_MAX_EDGES = 1_000_000
+
+
+def _union_find_labels(edges) -> dict:
+    """Min-id label of every node in ``edges`` (an iterable of id pairs):
+    union-find with path halving, the smaller root winning every union,
+    so each root is the minimum of its set."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {x: find(x) for x in parent}
+
 
 def connected_components(
     pairs: DataFrame,
@@ -87,53 +122,77 @@ def connected_components(
     max_iter: int = 25,
 ) -> DataFrame:
     """(id, cluster_id) for every id in ``pairs``; cluster_id = the MIN id
-    reachable through the pair graph (deterministic canonical label).
+    reachable through the pair graph (deterministic canonical label). Both
+    columns have the type of the pair columns and are nullable. A null
+    ``id_a`` or ``id_b`` raises when the edges are read.
 
-    Min-label propagation as pure DataFrame ops: each round joins current
-    labels across edges and keeps the elementwise min — one shuffle per
-    round, converging in O(component diameter) rounds. Near-dup clusters
-    are dense and tiny (dup groups, not social graphs), so the diameter is
-    small and the driver-side loop runs a handful of rounds; every round
-    ``localCheckpoint``s to truncate the growing lineage (the classic
-    iterative-algorithm failure mode on Spark). The fixpoint check rides
-    the propagation join — no extra pass.
+    Two paths, with the same labels by construction:
 
-    Three round-cost controls (guide §2.4/§5):
+    * **Driver path**, when the graph has at most ``_DRIVER_CC_MAX_EDGES``
+      edges: one action reads up to bound + 1 edges into pandas through
+      Arrow, union-find labels them in the driver, and the labels come
+      back as one ``createDataFrame`` from pandas. Near-dup graphs are
+      dup groups, not social graphs: a batch's graph is tens of pairs,
+      where the Spark path's cost is its jobs, not its rows. An empty
+      graph always takes this path, even with a bound of 0. At the bound
+      the driver peaks near 0.3 GB of Python heap in the worst case; the
+      memory and timing figures are beside ``_DRIVER_CC_MAX_EDGES``.
+    * **Spark path**, for a larger graph: min-label propagation as
+      DataFrame ops. The edges are ``localCheckpoint``ed, so Catalyst does
+      not re-analyze the pair generator's lineage inside every round.
+      The first labels fuse the identity labelling with the first hop
+      (label₀ = min(id, min neighbor id)), one aggregation. Each round
+      then hops labels across the edges and rebinds them through the
+      round's INPUT labels by **pointer doubling**: l(x) ← min(l'(x),
+      l(l'(x))), one join of the hopped labels against the checkpointed
+      previous labels (chasing through the hopped relation itself would
+      compute the hop subtree twice per round, since join outputs are not
+      Exchange nodes that ReuseExchange could share). Every label is
+      itself a node id, so the lookup always hits; labels only decrease,
+      so least() keeps monotonicity. A label's distance to its component
+      min roughly doubles per round, so rounds are O(log d) in the
+      component diameter d, and each round costs one checkpoint and one
+      convergence count. The fixpoint: the component min m has l(m) = m
+      always, and every other label descends to it.
 
-    * ``edges`` is ``localCheckpoint``ed, not persisted: the pair
-      generator's lineage (tokenize → shingle → posting join) would
-      otherwise be re-ANALYZED by Catalyst inside every round's plan —
-      measured as driver-side construction time that dominated the
-      dedup_near_* queries.
-    * The identity labelling + first propagation round fuse into ONE
-      aggregation (label₀ = min(id, min neighbor id)): the old
-      ``distinct()`` init paid the same shuffle to produce labels the
-      first round immediately rewrote. Saves a full round (3 shuffles +
-      2 driver actions) on every component of diameter d ≥ 1.
-    * **Pointer doubling**: after each hop, labels are rebound
-      through the round's INPUT label relation — l(x) ← min(l'(x),
-      l(l'(x))), one extra join of the hopped labels against the
-      already-checkpointed previous labels (chasing through the hopped
-      relation itself would compound slightly faster but computes the
-      whole hop subtree twice per round — join outputs are not Exchange
-      nodes, so ReuseExchange cannot dedupe them). Every label value is
-      itself a node id (labels are mins over node ids), so the lookup
-      always hits; labels only decrease, so least() keeps monotonicity.
-      The label's distance-to-component-min now roughly doubles per
-      round instead of shrinking by a constant: rounds drop from
-      O(component diameter) to O(log d) — at 100 TB a long-chain
-      component no longer costs one edge-relation shuffle per hop, and
-      each saved round also saves the per-round driver action (the
-      convergence count). Fixpoint unchanged: the component min m has
-      l(m) = m always, every other label descends to it.
+    On the Spark path the probe action stops at bound + 1 rows, but the
+    shuffle stages under an uncached pair lineage run in full, and the
+    edge ``localCheckpoint`` then computes that lineage a second time. No
+    caller in the package checkpoints its pairs, so a graph above the
+    bound pays its candidate generation twice; a caller with such a graph
+    can checkpoint the pairs first.
 
-    ``CC_LAST_ROUNDS`` (module global) records the iteration count of the
-    most recent call — a test hook for the O(log d) round bound; it plays
-    no part in the result."""
+    ``CC_LAST_ROUNDS`` (module global) records the Spark path's round
+    count of the most recent call, 0 for the driver path; it plays no part
+    in the result."""
     global CC_LAST_ROUNDS
     if max_iter < 1:
         raise ValueError(f"connected_components needs max_iter >= 1, got {max_iter}")
-    edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    null_id = F.col(id_a).isNull() | F.col(id_b).isNull()
+    edges = pairs.select(
+        F.when(
+            null_id,
+            F.raise_error(F.lit(f"connected_components: null id in {id_a}/{id_b}")),
+        ).otherwise(F.col(id_a)).alias("a"),
+        F.col(id_b).alias("b"),
+    )
+    id_type = edges.schema["a"].dataType
+    head = edges.limit(_DRIVER_CC_MAX_EDGES + 1).toPandas()
+    if len(head) <= _DRIVER_CC_MAX_EDGES:
+        CC_LAST_ROUNDS = 0
+        labels = _union_find_labels(zip(head["a"].tolist(), head["b"].tolist()))
+        schema = StructType([
+            StructField("id", id_type, True),
+            StructField("cluster_id", id_type, True),
+        ])
+        return pairs.sparkSession.createDataFrame(
+            pd.DataFrame({
+                "id": list(labels.keys()),
+                "cluster_id": list(labels.values()),
+            }),
+            schema,
+        )
+    del head  # the probe rows would stay pinned through every round
     edges = edges.unionAll(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()

@@ -61,8 +61,10 @@ def etl_full(spark: SparkSession, src_dir: str, sink_path: str) -> int:
     docs = build_tweet_documents(load_tweet_tables(spark, src_dir)).observe(
         obs, F.count(F.lit(1)).alias("n")
     )
+    # conversations.id is unique, so the build yields one document per id
     write_documents(
-        docs, os.path.join(sink_path, "ingest_wm=-1"), id_col="id", mode="overwrite"
+        docs, os.path.join(sink_path, "ingest_wm=-1"), id_col="id", mode="overwrite",
+        dedup_ids=False,
     )
     return int(obs.get["n"])
 

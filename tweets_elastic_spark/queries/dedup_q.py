@@ -141,7 +141,7 @@ def q_jaccard_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Transitive reachability over the pair graph, recursively in SQL — the
-# oracle twin of connected_components' min-label propagation.
+# oracle twin of connected_components' min-id labels.
 def _j_reach(src: str = "documents") -> str:
     return (
         _j_ctes(src) + ",\n"
@@ -168,8 +168,8 @@ _J_REACH_CTES = "WITH RECURSIVE " + _j_reach()
     SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a
     """,
     doc="Near-dup pairs promoted to CLUSTERS: connected components over the "
-        "jaccard>=0.5 pair graph via min-label propagation (one shuffle per "
-        "round, O(cluster diameter) rounds, lineage-checkpointed) — "
+        "jaccard>=0.5 pair graph (driver union-find when the graph fits, "
+        "else min-label propagation in O(log diameter) checkpointed rounds) — "
         "cluster_id is the min reachable doc_id; the oracle recomputes the "
         "same components with a recursive reachability CTE.",
 )
